@@ -2,14 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc per-query timing harness: `runMain graft.Audit q58_fuzzy_match ...`
-  * runs each named query min-of-3 at SPARK_GRAFT_SF_DIR — the local feedback
-  * loop for plan work without a full Bench pass. Session sizing reads the
-  * SAME env vars as [[Bench]] (SPARK_GRAFT_CPUS, default 32 to match the
-  * driver's bench invocation) so Audit numbers diagnose Bench numbers —
-  * a different core/shuffle-partition count would change the plans. */
+/** Ad-hoc per-query probe: `runMain graft.Audit <mode> <name>...` runs every
+  * registry query whose name contains one of the given substrings at
+  * SPARK_GRAFT_SF_DIR — the local feedback loop for plan work without a full
+  * Bench pass. Session sizing reads the SAME env vars as [[Bench]]
+  * (SPARK_GRAFT_CPUS, default 32 as in the sf0.1 bench runs) so Audit
+  * numbers diagnose Bench numbers. Modes:
+  *  - `time`: build, then `count()`; min of 3 runs.
+  *  - `forced`: build, then `queryExecution.toRdd.count()`; min of 3 runs. A
+  *    plain count lets the optimizer rewrite the plan under a count
+  *    aggregate (distinct-key propagation can eliminate a left-joined
+  *    aggregate entirely), so "score joined back to the full table" shapes
+  *    need every output column materialized to time the operator itself.
+  *  - `explain`: the formatted physical plan (the PLANS.md audits).
+  * Build is timed apart from the action: iterative queries (CC, pagerank,
+  * sketch pipelines) run embedded actions while building the frame. */
 object Audit {
   def main(args: Array[String]): Unit = {
+    val modes = Set("time", "forced", "explain")
+    require(args.length > 1 && modes(args(0)),
+      s"usage: graft.Audit ${modes.mkString("|")} <name-substring>...")
+    val (mode, names) = (args(0), args.drop(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.GraftSession.tune(
@@ -17,18 +30,28 @@ object Audit {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
-    args.foreach { name =>
-      var best = Double.MaxValue
-      for (_ <- 0 until 3) {
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        best = math.min(best, dt)
-        println(f"[audit] $name rows=$n t=$dt%.3f")
-        spark.catalog.clearCache()
+    def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => names.exists(n.contains) }
+      .foreach { case (name, fn) =>
+        if (mode == "explain") {
+          println(s"===== $name =====")
+          fn(spark, sfDir).explain("formatted")
+        } else {
+          val best = (0 until 3).map { _ =>
+            val tB = System.nanoTime()
+            val df = fn(spark, sfDir)
+            val build = secs(tB)
+            val t0 = System.nanoTime()
+            val n = if (mode == "forced") df.queryExecution.toRdd.count() else df.count()
+            val run = secs(t0)
+            println(f"[audit] $name rows=$n build=$build%.3f $mode=$run%.3f")
+            spark.catalog.clearCache() // same per-query hygiene as Bench/Verify
+            build + run
+          }.min
+          println(f"[audit] $name MIN=$best%.3f")
+        }
       }
-      println(f"[audit] $name MIN=$best%.3f")
-    }
     spark.stop()
   }
 }

@@ -13,10 +13,11 @@ import graft.relational.{ChangeCapture, Relational}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Each entry binds one engine transform (graft.marts / graft.analysis /
-  * graft.relational) to the driver's synthetic tables (TESTDATA.md) with a
-  * DuckDB-equivalent oracle in [[oracleSql]]. All queries order their output
-  * by a unique key so the parquet dump is deterministic.
+  * Each [[Gated]] record binds one engine transform (graft.marts /
+  * graft.analysis / graft.relational) to the synthetic test tables
+  * (TESTDATA.md) together with its DuckDB-equivalent oracle; [[queries]]
+  * and [[oracleSql]] are views of the one registry. All queries order their
+  * output by a unique key so the parquet dump is deterministic.
   */
 object SparkEntry {
 
@@ -24,15 +25,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ColdMarts.dailyTraffic(TestData.clicks(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    martQueries ++ relationalQueries ++ analysisQueries
+  /** One gate query: the engine transform bound to the test tables and its
+    * DuckDB-equivalent oracle over the same parquet tables. A query
+    * cannot be declared without its oracle. */
+  final case class Gated(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracleSql: String)
 
-  private def analysisQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One record per implemented operator from SURVEY.md §2. Building it
+    * runs no Spark action: `build` is only invoked by the callers. */
+  lazy val registry: Seq[Gated] = martQueries ++ relationalQueries ++ analysisQueries
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(g => g.name -> g.build).toMap
+
+  /** DuckDB oracle for each query key, against the same parquet tables. */
+  def oracleSql: Map[String, String] =
+    registry.map(g => g.name -> g.oracleSql).toMap
+
+  private def analysisQueries: Seq[Gated] = Seq(
     // THE LAW for the CDC chunk artifact: per-hash (sum n, min l) merge
     // of stored oldest-90% + fresh batch counts must reproduce q228's
     // whole-corpus report (the oracle IS it) - the backup-dedup property
-    "q230_cdc_dedup_increment" -> { (s, d) =>
+    Gated("q230_cdc_dedup_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val stored = Dedup.cdcChunkCounts(docs.filter(col("doc_id") <= cut))
@@ -44,18 +60,24 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_docs"))
       Dedup.cdcReportFromCounts(merged, nDocs)
     },
+      // THE LAW: the merged chunk artifact reports identically - this
+      // oracle IS q228's whole-corpus rebuild
+      cdcOracle(window = 16, maskBits = 5)),
     // content-defined chunking dedup: boundaries where the mod-prime
     // Horner hash of the trailing 16-char window is 0 mod 32
     // (shift-robust, the backup-dedup argument; md5 is chunk IDENTITY
     // only), chunks content-hashed and deduped corpus-wide; only
     // 60-bit hashes + lengths ever shuffle - all-BIGINT ppm gate
-    "q228_cdc_chunk_dedup" -> { (s, d) =>
+    Gated("q228_cdc_chunk_dedup", { (s, d) =>
       Dedup.cdcChunkDedup(TestData.documents(s, d))
     },
+      // same normalization, Horner boundary rule (mod-prime window hash
+      // % 32 = 0, doc end excluded then appended), chunk hashing, ppm divs
+      cdcOracle(window = 16, maskBits = 5)),
     // THE LAW for the vocab artifact: per-(source, token) counts merge by
     // addition (stored oldest-90% + fresh batch) and the merged budget
     // curve must equal q225's whole-corpus rebuild (the oracle IS it)
-    "q229_vocab_coverage_increment" -> { (s, d) =>
+    Gated("q229_vocab_coverage_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val merged = TextAnalysis.vocabCounts(docs.filter(col("doc_id") <= cut))
@@ -63,21 +85,26 @@ object SparkEntry {
         .groupBy("source", "tok").agg(sum("n").as("n"))
       TextAnalysis.vocabCoverageFromCounts(merged, budgets = Seq(4, 8, 16, 32))
     },
+      // THE LAW: the merged incremental vocab artifact must produce the
+      // identical budget curve — this oracle IS the whole-corpus rebuild
+      vocabCoverageOracle),
     // pass@k (the Codex sampling-eval estimator) over per-user attempt
     // sets (purchase = correct): unbiased 1 - C(n-c,k)/C(n,k) as one
     // left-assoc IEEE factor chain, micro-quantized - all-BIGINT gate
-    "q227_pass_at_k" -> { (s, d) =>
+    Gated("q227_pass_at_k", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       graft.analysis.Features.passAtK(
         ev.select(col("user_id"), (col("event_type") === "purchase").as("ok")),
         "user_id", "ok", ks = Seq(1, 5, 10))
     },
+      // same spelled-out left-assoc factor products per k
+      passAtKOracle(Seq(1, 5, 10))),
     // Bradley-Terry preference ratings (arena/RLHF aggregation): one game
     // per session - the last-clicked distinct doc beats the first-clicked -
     // items capped to the 20 most-played, 5 MM iterations entirely in
     // BIGINT micro-units (integer-input IEEE ops only, so the unrolled
     // oracle CTEs land on identical bits on any engine build)
-    "q224_bradley_terry" -> { (s, d) =>
+    Gated("q224_bradley_terry", { (s, d) =>
       val c = TestData.clicks(s, d)
         .filter(col("event_type") === "click" && col("document_id").isNotNull)
       val g = c.groupBy("session_id").agg(
@@ -87,18 +114,22 @@ object SparkEntry {
         .filter(col("winner") =!= col("loser"))
       graft.analysis.Stats.bradleyTerry(g, "winner", "loser", iters = 5, topK = 20)
     },
+      // the MM loop unrolled; identical integer-IEEE floor chains per round
+      btOracle(iters = 5, topK = 20)),
     // tokenizer vocab-budget curve: top-V types by corpus frequency (rank
     // via the q95 distributed recipe, never a single-task window), per-
     // source OOV rate at each budget; all gate columns BIGINT (ppm)
-    "q225_vocab_coverage" -> { (s, d) =>
+    Gated("q225_vocab_coverage", { (s, d) =>
       TextAnalysis.vocabCoverage(TestData.documents(s, d),
         budgets = Seq(4, 8, 16, 32))
     },
+      // same tokenization, rank (count desc, tok), budgets grid, ppm div
+      vocabCoverageOracle),
     // rank-biased overlap between the two q128 rankings (clicks-ranked vs
     // session-reach-ranked top-10): geometric weights are driver literals,
     // per-depth terms BIGINT-quantized by one fixed IEEE chain, running
     // RBO an exact integer prefix sum - no engine float on the gate
-    "q226_rank_biased_overlap" -> { (s, d) =>
+    Gated("q226_rank_biased_overlap", { (s, d) =>
       val clicks = TestData.clicks(s, d).filter(col("document_id").isNotNull)
       graft.analysis.SearchRank.rankBiasedOverlap(
         clicks.groupBy(col("document_id").as("doc")).agg(count(lit(1)).as("n_clicks")),
@@ -107,16 +138,45 @@ object SparkEntry {
         depth = 10, p = 0.9,
         orderA = Seq(desc("n_clicks")), orderB = Seq(desc("n_sessions")))
     },
+      // literal weights, one fixed IEEE chain per depth, integer prefix sum
+      rboOracle(depth = 10, p = 0.9)),
     // exact sequential CUSUM (Page) via the cumsum - running-min closed
     // form over the dense hourly spine; q66's level-shift windows are the
     // approximation, this is the statistic itself
-    "q223_cusum" -> { (s, d) =>
+    Gated("q223_cusum", { (s, d) =>
       TimeSeries.cusum(TestData.clicks(s, d)).orderBy("h")
     },
+      // same dense spine, same DECIMAL term cumsum and running min, same
+      // k=0.5/h=4 defaults
+      """WITH hh AS (
+        |  SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600 AS h,
+        |    count(*) AS x
+        |  FROM events GROUP BY 1),
+        |b AS (SELECT min(h) AS h0, max(h) AS h1 FROM hh),
+        |sp AS (SELECT unnest(range(h0, h1 + 1)) AS h FROM b),
+        |se AS (SELECT sp.h, COALESCE(hh.x, 0) AS x FROM sp LEFT JOIN hh USING (h)),
+        |st AS (SELECT count(*) AS n,
+        |         CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS s1,
+        |         CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS s2 FROM se),
+        |ms AS (SELECT s1 / n::DOUBLE AS m,
+        |         sqrt(s2 / n::DOUBLE - (s1 / n::DOUBLE) * (s1 / n::DOUBLE)) AS sd FROM st),
+        |rr AS (
+        |  SELECT h, x, sd,
+        |    sum(CAST(x::DOUBLE - m - 0.5::DOUBLE * sd AS DECIMAL(28,12)))
+        |      OVER (ORDER BY h ROWS UNBOUNDED PRECEDING) AS r
+        |  FROM se CROSS JOIN ms),
+        |cc AS (
+        |  SELECT h, x, sd,
+        |    CAST(r - least(CAST(0.0 AS DECIMAL(28,12)),
+        |      min(r) OVER (ORDER BY h ROWS UNBOUNDED PRECEDING)) AS DOUBLE) AS cus_raw
+        |  FROM rr)
+        |SELECT h, x, round(cus_raw, 6) AS cusum,
+        |  cus_raw > 4.0::DOUBLE * sd AS alarm
+        |FROM cc ORDER BY h""".stripMargin),
     // THE LAW for the power-sum artifact: per-group n/Σx..Σx⁴ merge by
     // addition (stored oldest-90% + fresh batch) and the merged shape
     // profile must equal q218's whole-corpus rebuild (the oracle IS it)
-    "q222_moments_increment" -> { (s, d) =>
+    Gated("q222_moments_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val stored = graft.analysis.Profiling.momentSums(
@@ -128,19 +188,81 @@ object SparkEntry {
           sum("s3d").as("s3d"), sum("s4d").as("s4d"))
       graft.analysis.Profiling.momentsFromSums(merged).orderBy("group")
     },
+      // law gate: the merged power-sum artifact must reproduce the
+      // whole-corpus shape profile, so its oracle IS q218's rebuild
+      momentsProfileSql),
     // the per-source release datasheet: volume + mean quality + exact-dup
     // rate + majority language, three report-sized aggregates joined on
     // source; every number independently gated elsewhere (q20, q216)
-    "q220_dataset_card" -> { (s, d) =>
+    Gated("q220_dataset_card", { (s, d) =>
       graft.analysis.CorpusPrep.datasetCard(TestData.documents(s, d))
         .orderBy("source")
     },
+      // q20's quality CTEs (4dp stopword ratio included) + q216's dup
+      // groups + (count desc, lang desc) majority-language tie-break
+      s"""WITH $docTextTokensCte,
+        |s AS (
+        |  SELECT doc_id, len(toks) AS n_tokens,
+        |    len(list_distinct(toks)) AS n_unique_tokens,
+        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
+        |  FROM t),
+        |sc AS (
+        |  SELECT doc_id, n_tokens,
+        |    round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
+        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
+        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
+        |  FROM s),
+        |vol AS (
+        |  SELECT d.source, count(*) AS n_docs,
+        |    CAST(sum(sc.n_tokens) AS BIGINT) AS n_tokens,
+        |    round(CAST(sum(CAST(sc.n_tokens AS DECIMAL(28,8))) AS DOUBLE) / count(*), 6) AS mean_tokens,
+        |    round(CAST(sum(CAST(sc.quality_score AS DECIMAL(28,8))) AS DOUBLE) / count(*), 6) AS mean_quality
+        |  FROM documents d JOIN sc USING (doc_id) GROUP BY 1),
+        |fp AS (
+        |  SELECT source,
+        |    row_number() OVER (
+        |      PARTITION BY md5($normText)
+        |      ORDER BY doc_id) AS rn
+        |  FROM documents),
+        |dup AS (
+        |  SELECT source,
+        |    CASE WHEN count(*) > 0
+        |      THEN round(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6)
+        |      ELSE 0.0::DOUBLE END AS dup_rate
+        |  FROM fp GROUP BY 1),
+        |lc AS (SELECT source, lang, count(*) AS c FROM documents GROUP BY 1, 2),
+        |tl AS (
+        |  SELECT source, lang AS top_lang, c,
+        |    CAST(sum(c) OVER (PARTITION BY source) AS BIGINT) AS tot,
+        |    row_number() OVER (PARTITION BY source ORDER BY c DESC, lang DESC) AS rn2
+        |  FROM lc)
+        |SELECT v.source, v.n_docs, v.n_tokens, v.mean_tokens, v.mean_quality,
+        |  dup.dup_rate, tl.top_lang,
+        |  round(tl.c::DOUBLE / tl.tot::DOUBLE, 6) AS top_lang_share
+        |FROM vol v
+        |JOIN dup USING (source)
+        |JOIN tl ON tl.source = v.source AND tl.rn2 = 1
+        |ORDER BY v.source""".stripMargin),
     // key-skew advisor for the salted-join dial: rows-per-key max vs
     // p50/p99 over the count frame + the salt factor that levels the
     // hottest key to a p99 share
-    "q221_skew_report" -> { (s, d) =>
+    Gated("q221_skew_report", { (s, d) =>
       graft.relational.SkewJoin.skewReport(TestData.clicks(s, d), "document_id")
     },
+      // same count frame, quantile_cont parity, same clamp arithmetic
+      """WITH c AS (
+        |  SELECT CAST(props->>'$.k' AS INTEGER) AS k, count(*) AS c
+        |  FROM events GROUP BY 1),
+        |a AS (
+        |  SELECT CAST(sum(c) AS BIGINT) AS n_rows, count(*) AS n_keys,
+        |    max(c) AS max_per_key,
+        |    round(quantile_cont(c, 0.5), 6) AS p50,
+        |    round(quantile_cont(c, 0.99), 6) AS p99
+        |  FROM c)
+        |SELECT n_rows, n_keys, max_per_key, p50, p99,
+        |  CASE WHEN p50 > 0 THEN round(max_per_key::DOUBLE / p50, 6) END AS skew_ratio,
+        |  least(32, greatest(1, CAST(ceil(max_per_key::DOUBLE / greatest(p99, 1.0::DOUBLE)) AS INT))) AS suggested_salt
+        |FROM a""".stripMargin),
     // Benford first-digit monitor over positive event values: libm-free
     // digit extraction (string head of the integer part, sub-1 values
     // scaled by one exact 1e18 multiply); domain is v ∈ [1e-18, 9e18) —
@@ -148,23 +270,53 @@ object SparkEntry {
     // mis-binned) and their count is emitted as n_excluded on every row,
     // so the domain narrowing is visible in the output itself;
     // expected = Scala-computed constants shared verbatim with the oracle
-    "q217_benford" -> { (s, d) =>
+    Gated("q217_benford", { (s, d) =>
       graft.analysis.Profiling.benfordDigits(TestData.clicks(s, d), "value")
         .orderBy("digit")
     },
+      // identical digit extraction; expected values are THE SAME doubles
+      // (Double.toString round-trips exactly through DuckDB's parser)
+      {
+        val cases = (1 to 9)
+          .map(d => s"WHEN digit = $d THEN ${graft.analysis.Profiling.benfordExpected(d)}::DOUBLE")
+          .mkString(" ")
+        // excluded positives ride a NULL-digit group into the n_excluded
+        // window sum, then drop before the observed-ratio window (same
+        // single-scan shape as the Scala)
+        s"""WITH v AS (SELECT value AS v FROM events),
+          |d AS (SELECT CASE WHEN v >= 1e-18::DOUBLE AND v < 9.0e18::DOUBLE
+          |        THEN CAST(substr(CAST(CAST(floor(
+          |          CASE WHEN v >= 1 THEN v ELSE v * 1e18::DOUBLE END) AS BIGINT)
+          |          AS VARCHAR), 1, 1) AS INT) END AS digit,
+          |      CASE WHEN v > 0 AND NOT (v >= 1e-18::DOUBLE AND v < 9.0e18::DOUBLE)
+          |        THEN 1 ELSE 0 END AS excl FROM v),
+          |g AS (SELECT digit, count(*) AS n, sum(excl) AS excl FROM d GROUP BY 1),
+          |x AS (SELECT digit, n, CAST(sum(excl) OVER () AS BIGINT) AS n_excluded
+          |      FROM g),
+          |f AS (SELECT * FROM x WHERE digit IS NOT NULL),
+          |t AS (SELECT digit, n, n_excluded, CAST(sum(n) OVER () AS BIGINT) AS tot,
+          |        CASE $cases END AS e FROM f)
+          |SELECT digit, n, n_excluded,
+          |  round(n::DOUBLE / tot::DOUBLE, 6) AS observed,
+          |  round(e, 6) AS expected,
+          |  round(abs(n::DOUBLE / tot::DOUBLE - e), 6) AS abs_dev
+          |FROM t ORDER BY digit""".stripMargin
+      }),
     // distribution-shape profile per source: mean/std/skewness/kurtosis
     // from four DECIMAL-exact power sums, sqrt-only closed forms
-    "q218_moments_profile" -> { (s, d) =>
+    Gated("q218_moments_profile", { (s, d) =>
       graft.analysis.Profiling.momentsProfile(
           TestData.documents(s, d), "source", "n_chars")
         .orderBy("group")
     },
+      // same power sums, same expansion order for the central moments
+      momentsProfileSql),
     // pairwise Pearson over per-doc length/token/vocabulary measures:
     // DECIMAL-exact sums + cross-products, closed form, sqrt only. The
     // repartition is the materialization BARRIER under the aggregate —
     // without it CollapseProject inlines the tokenizer into every one of
     // the 18 aggregate update expressions (measured 4.7 s vs 0.4 s)
-    "q219_correlation" -> { (s, d) =>
+    Gated("q219_correlation", { (s, d) =>
       val t = array_remove(TextAnalysis.tokens(col("text")), "")
       val df = TestData.documents(s, d).select(
           col("n_chars"),
@@ -175,9 +327,48 @@ object SparkEntry {
           df, Seq("n_chars", "n_tokens", "n_types"))
         .orderBy("col_a", "col_b")
     },
+      // same DECIMAL sums and closed form per pair; three UNION ALL blocks
+      s"""WITH t AS (
+        |  SELECT n_chars,
+        |    list_filter(string_split($normText, ' '), x -> x <> '') AS toks
+        |  FROM documents),
+        |f AS (
+        |  SELECT n_chars, CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_types
+        |  FROM t),
+        |p AS (
+        |  SELECT 'n_chars' AS col_a, 'n_tokens' AS col_b, count(*) AS n,
+        |    CAST(sum(CAST(n_chars AS DECIMAL(38,0))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(n_tokens AS DECIMAL(38,0))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_tokens) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_tokens) AS DOUBLE) AS syy
+        |  FROM f
+        |  UNION ALL
+        |  SELECT 'n_chars', 'n_types', count(*),
+        |    CAST(sum(CAST(n_chars AS DECIMAL(38,0))) AS DOUBLE),
+        |    CAST(sum(CAST(n_types AS DECIMAL(38,0))) AS DOUBLE),
+        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_types) AS DOUBLE),
+        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE),
+        |    CAST(sum(CAST(n_types AS HUGEINT) * n_types) AS DOUBLE)
+        |  FROM f
+        |  UNION ALL
+        |  SELECT 'n_tokens', 'n_types', count(*),
+        |    CAST(sum(CAST(n_tokens AS DECIMAL(38,0))) AS DOUBLE),
+        |    CAST(sum(CAST(n_types AS DECIMAL(38,0))) AS DOUBLE),
+        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_types) AS DOUBLE),
+        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_tokens) AS DOUBLE),
+        |    CAST(sum(CAST(n_types AS HUGEINT) * n_types) AS DOUBLE)
+        |  FROM f)
+        |SELECT col_a, col_b, n,
+        |  CASE WHEN (n::DOUBLE * sxx - sx * sx) > 0 AND (n::DOUBLE * syy - sy * sy) > 0
+        |    THEN round((n::DOUBLE * sxy - sx * sy)
+        |           / (sqrt(n::DOUBLE * sxx - sx * sx) * sqrt(n::DOUBLE * syy - sy * sy)), 6)
+        |  END AS corr
+        |FROM p ORDER BY col_a, col_b""".stripMargin),
     // funnel conversion latency: view->purchase completion share + exact
     // p50/p90 of the strictly-after latency (quantile_cont parity)
-    "q215_funnel_latency" -> { (s, d) =>
+    Gated("q215_funnel_latency", { (s, d) =>
       val st = graft.analysis.Funnel.stepTimes(TestData.clicks(s, d),
         Seq("view", "purchase"), "session_id", "event_type", "event_ts")
       st.select(col("t1"), col("t2"),
@@ -192,25 +383,100 @@ object SparkEntry {
           round(element_at(percentile(col("lat"), array(lit(0.5), lit(0.9))), 2), 6)
             .as("p90_sec"))
     },
+      // 2-step stepTimes shape: min view, then min strictly-later purchase;
+      // floor(epoch) parity for the latency, quantile_cont for percentiles
+      """WITH v AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS sid, min(CAST(ts AS TIMESTAMP)) AS t1
+        |  FROM events WHERE event_type = 'view' GROUP BY 1),
+        |p AS (
+        |  SELECT v.sid, v.t1, min(CAST(e.ts AS TIMESTAMP)) AS t2
+        |  FROM v LEFT JOIN events e
+        |    ON CAST(e.user_id AS VARCHAR) = v.sid AND e.event_type = 'purchase'
+        |       AND CAST(e.ts AS TIMESTAMP) > v.t1
+        |  GROUP BY 1, 2),
+        |l AS (
+        |  SELECT t2,
+        |    CASE WHEN t2 IS NOT NULL
+        |      THEN CAST(floor(epoch(t2)) AS BIGINT) - CAST(floor(epoch(t1)) AS BIGINT)
+        |    END AS lat
+        |  FROM p)
+        |SELECT count(*) AS n_started, count(t2) AS n_converted,
+        |  round(count(t2)::DOUBLE / count(*)::DOUBLE, 6) AS conversion,
+        |  round(quantile_cont(lat, 0.5), 6) AS p50_sec,
+        |  round(quantile_cont(lat, 0.9), 6) AS p90_sec
+        |FROM l""".stripMargin),
     // what exact dedup reclaims per source: same fingerprint window as
     // q30, report-sized aggregate, dup bytes charged to the copy's source
-    "q216_dedup_savings" -> { (s, d) =>
+    Gated("q216_dedup_savings", { (s, d) =>
       Dedup.dedupSavings(TestData.documents(s, d)).orderBy("source")
     },
+      // q22's md5(normalized) fingerprint, q30's min-id survivor rule
+      s"""WITH f AS (
+        |  SELECT doc_id, source, length(text) AS nc,
+        |    md5($normText) AS fp
+        |  FROM documents),
+        |r AS (
+        |  SELECT source, nc,
+        |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+        |  FROM f)
+        |SELECT source, count(*) AS n_docs,
+        |  CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
+        |  CAST(sum(nc) AS BIGINT) AS n_chars,
+        |  CAST(sum(CASE WHEN rn > 1 THEN nc ELSE 0 END) AS BIGINT) AS dup_chars,
+        |  CASE WHEN sum(nc) > 0
+        |    THEN round(sum(CASE WHEN rn > 1 THEN nc ELSE 0 END)::DOUBLE / sum(nc)::DOUBLE, 6)
+        |    ELSE 0.0::DOUBLE END AS savings
+        |FROM r GROUP BY source ORDER BY source""".stripMargin),
     // Mann-Whitney U with midrank ties over the md5-armed event values:
     // the magnitude test beside q96's proportion z; one grid aggregate,
     // exact half-integer rank sums, sqrt is the only irrational step
-    "q214_mann_whitney" -> { (s, d) =>
+    Gated("q214_mann_whitney", { (s, d) =>
       val c = TestData.clicks(s, d)
       graft.analysis.Stats.mannWhitneyU(
         c.withColumn("arm", graft.analysis.Stats.armOf(col("session_id"))),
         "value", "arm")
     },
+      // same md5-parity arms (q96's convention), same midrank grid, same
+      // operation order through u/sigma2/z
+      """WITH vals AS (
+        |  SELECT CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 1))::BIGINT % 2 = 0
+        |              THEN 'A' ELSE 'B' END AS arm,
+        |    value AS v
+        |  FROM events WHERE value IS NOT NULL),
+        |grid AS (
+        |  SELECT v,
+        |    CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+        |    CAST(sum(CASE WHEN arm <> 'A' THEN 1 ELSE 0 END) AS BIGINT) AS cb
+        |  FROM vals GROUP BY 1),
+        |rk AS (
+        |  SELECT ca, cb, t,
+        |    (cum - t)::DOUBLE + (t + 1)::DOUBLE / 2.0::DOUBLE AS avg_rank
+        |  FROM (
+        |    SELECT ca, cb, ca + cb AS t,
+        |      CAST(sum(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        |    FROM grid)),
+        |ag AS (
+        |  SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b,
+        |    CAST(sum(CAST(avg_rank * ca::DOUBLE AS DECIMAL(28,6))) AS DOUBLE) AS ra,
+        |    CAST(sum(t * t * t - t) AS BIGINT) AS ties
+        |  FROM rk),
+        |fin AS (
+        |  SELECT n_a, n_b,
+        |    ra - n_a::DOUBLE * (n_a::DOUBLE + 1.0::DOUBLE) / 2.0::DOUBLE AS u_a,
+        |    (n_a::DOUBLE * n_b::DOUBLE / 12.0::DOUBLE) *
+        |      (((n_a::DOUBLE + n_b::DOUBLE) + 1.0::DOUBLE)
+        |        - ties::DOUBLE / ((n_a::DOUBLE + n_b::DOUBLE) * ((n_a::DOUBLE + n_b::DOUBLE) - 1.0::DOUBLE))) AS sigma2,
+        |    n_a::DOUBLE * n_b::DOUBLE / 2.0::DOUBLE AS mu
+        |  FROM ag)
+        |SELECT n_a, n_b, round(u_a, 6) AS u_a,
+        |  CASE WHEN sigma2 > 0 THEN round((u_a - mu) / sqrt(sigma2), 6) END AS z,
+        |  CASE WHEN sigma2 > 0 THEN abs(round((u_a - mu) / sqrt(sigma2), 6)) > 1.96 END AS significant
+        |FROM fin""".stripMargin),
     // THE LAW for the term-frequency artifact: per-fingerprint counts
     // merge by addition (stored oldest-90% + fresh batch), and the merged
     // spectrum must equal q200's whole-corpus rebuild (the oracle IS the
     // rebuild) — a daily ingest tokenizes only its own batch
-    "q213_count_of_counts_increment" -> { (s, d) =>
+    Gated("q213_count_of_counts_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val stored = TextAnalysis.ngramCounts(
@@ -221,134 +487,438 @@ object SparkEntry {
         .groupBy("tok").agg(sum("k").as("k"))
       TextAnalysis.countOfCountsFromCounts(merged).orderBy("k")
     },
+      // law gate: the incremental merge must reproduce the whole-corpus
+      // spectrum, so its oracle IS q200's rebuild
+      countOfCountsSql),
     // top-20 contiguous event-type trigram patterns: same one-sort window
     // as q199 (two leads ride it), |types|^3-bounded count, TakeOrdered
-    "q209_sequence_patterns" -> { (s, d) =>
+    Gated("q209_sequence_patterns", { (s, d) =>
       graft.analysis.Funnel.sequencePatterns(TestData.clicks(s, d))
     },
+      // same window, leads instead of a self-join; '>' separator pinned
+      """WITH s AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS k, event_type AS t1,
+        |    lead(event_type, 1) OVER w AS t2,
+        |    lead(event_type, 2) OVER w AS t3
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR)
+        |               ORDER BY CAST(ts AS TIMESTAMP), event_id))
+        |SELECT t1 || '>' || t2 || '>' || t3 AS pattern,
+        |  count(*) AS n_occurrences, count(DISTINCT k) AS n_sessions
+        |FROM s WHERE t2 IS NOT NULL AND t3 IS NOT NULL
+        |GROUP BY 1 ORDER BY n_occurrences DESC, pattern LIMIT 20""".stripMargin),
     // Hill tail-index of the session-activity distribution: TakeOrdered
     // k+1 is the only data-sized step, DECIMAL-summed log terms on k rows
-    "q210_hill_tail_index" -> { (s, d) =>
+    Gated("q210_hill_tail_index", { (s, d) =>
       graft.analysis.Stats.hillTailIndex(
         TestData.clicks(s, d).groupBy("session_id")
           .agg(count(lit(1)).as("n_clicks")),
         "n_clicks", k = 100)
     },
+      // ties at the threshold share a value, so the selected multiset is
+      // deterministic; alpha derives from the ROUNDED gamma on both sides
+      """WITH c AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS sid, count(*)::DOUBLE AS x
+        |  FROM events GROUP BY 1),
+        |r AS (SELECT x, row_number() OVER (ORDER BY x DESC) AS rn FROM c WHERE x > 0),
+        |thr AS (SELECT x AS x_thr FROM r WHERE rn = 101),
+        |g AS (
+        |  SELECT count(*) AS k, max(x_thr) AS x_threshold,
+        |    round(CAST(sum(CAST(ln(x / x_thr) AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS gamma_hat
+        |  FROM r CROSS JOIN thr WHERE rn <= 100)
+        |SELECT k, x_threshold, gamma_hat,
+        |  CASE WHEN gamma_hat > 0 THEN round(1.0::DOUBLE / gamma_hat, 6) END AS alpha_hat
+        |FROM g""".stripMargin),
     // autocorrelation of hourly traffic at lags 1 and 24 over a DENSE
     // hour spine (missing hours are zeros); r(24) is the diurnal-rhythm
     // certificate
-    "q211_autocorrelation" -> { (s, d) =>
+    Gated("q211_autocorrelation", { (s, d) =>
       TimeSeries.autocorrelation(TestData.clicks(s, d)).orderBy("lag")
     },
+      // integer-div hour buckets (floor(epoch) // 3600 — the q102 parity
+      // rule), dense spine via range, DECIMAL product terms
+      """WITH hh AS (
+        |  SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600 AS h,
+        |    count(*) AS x
+        |  FROM events GROUP BY 1),
+        |b AS (SELECT min(h) AS h0, max(h) AS h1 FROM hh),
+        |sp AS (SELECT unnest(range(h0, h1 + 1)) AS h FROM b),
+        |se AS (SELECT sp.h, COALESCE(hh.x, 0) AS x FROM sp LEFT JOIN hh USING (h)),
+        |mm AS (SELECT CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m,
+        |         count(*) AS n_hours FROM se),
+        |ld AS (
+        |  SELECT se.h, se.x, m, n_hours,
+        |    lead(x, 1) OVER (ORDER BY h) AS x_1,
+        |    lead(x, 24) OVER (ORDER BY h) AS x_24
+        |  FROM se CROSS JOIN mm),
+        |ag AS (
+        |  SELECT max(n_hours) AS n_hours,
+        |    CAST(sum(CAST((x::DOUBLE - m) * (x::DOUBLE - m) AS DECIMAL(28,12))) AS DOUBLE) AS den,
+        |    CAST(sum(CASE WHEN x_1 IS NOT NULL THEN CAST((x::DOUBLE - m) * (x_1::DOUBLE - m) AS DECIMAL(28,12)) END) AS DOUBLE) AS num_1,
+        |    CAST(sum(CASE WHEN x_24 IS NOT NULL THEN CAST((x::DOUBLE - m) * (x_24::DOUBLE - m) AS DECIMAL(28,12)) END) AS DOUBLE) AS num_24
+        |  FROM ld)
+        |SELECT * FROM (
+        |  SELECT 1 AS lag, n_hours, CASE WHEN den > 0 THEN round(num_1 / den, 6) END AS r FROM ag
+        |  UNION ALL
+        |  SELECT 24 AS lag, n_hours, CASE WHEN den > 0 THEN round(num_24 / den, 6) END AS r FROM ag)
+        |ORDER BY lag""".stripMargin),
     // entropy rate of the q199 chain: visit-share-weighted conditional
     // entropies, DECIMAL-cast terms over the |types+2|^2 frame
-    "q212_markov_entropy" -> { (s, d) =>
+    Gated("q212_markov_entropy", { (s, d) =>
       graft.analysis.Funnel.markovEntropyRate(TestData.clicks(s, d))
     },
+      // q199's chain CTEs + the entropy tail: unrounded p from exact counts
+      s"""WITH $transitionCtes,
+        |e AS (
+        |  SELECT from_state, n,
+        |    CAST(sum(n) OVER (PARTITION BY from_state) AS BIGINT) AS n_from,
+        |    CAST(sum(n) OVER () AS BIGINT) AS n_total
+        |  FROM c),
+        |t AS (
+        |  SELECT from_state, n,
+        |    CAST((n_from::DOUBLE / n_total::DOUBLE) * (n::DOUBLE / n_from::DOUBLE)
+        |      * ln(n::DOUBLE / n_from::DOUBLE) AS DECIMAL(28,12)) AS term
+        |  FROM e)
+        |SELECT count(DISTINCT from_state) AS n_states,
+        |  CAST(sum(n) AS BIGINT) AS n_transitions,
+        |  round(-CAST(sum(term) AS DOUBLE), 6) AS entropy_rate
+        |FROM t""".stripMargin),
     // replayable Laplace release: per-(type, day) counts + inverse-CDF
     // Laplace noise at scale 1/eps from the portable md5 uniform, clamped
     // post-processing — the DP release MECHANISM with reproducible draws
     // (real DP swaps in secret randomness; see the scaladoc honesty note)
-    "q206_dp_noisy_counts" -> { (s, d) =>
+    Gated("q206_dp_noisy_counts", { (s, d) =>
       graft.analysis.Profiling.dpNoisyCounts(
           TestData.clicks(s, d), Seq("event_type", "event_date"))
         .orderBy("event_type", "event_date")
     },
+      // same md5 uniform (h+0.5)/2^60, same Laplace inverse CDF, same clamp
+      """WITH c AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS event_date, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |u AS (
+        |  SELECT event_type, event_date, n,
+        |    ((('0x' || substr(md5(event_type || '|' || event_date::VARCHAR || '|' || 'dp'), 1, 15))::BIGINT::DOUBLE + 0.5::DOUBLE) / 1152921504606846976.0::DOUBLE) AS uu
+        |  FROM c),
+        |nz AS (
+        |  SELECT event_type, event_date, n,
+        |    round(-(1.0::DOUBLE / 1.0::DOUBLE) * sign(uu - 0.5::DOUBLE) * ln(1.0::DOUBLE - 2.0::DOUBLE * abs(uu - 0.5::DOUBLE)), 6) AS noise
+        |  FROM u)
+        |SELECT event_type, event_date, n, noise,
+        |  greatest(0, CAST(round(n + noise, 0) AS BIGINT)) AS noisy_n
+        |FROM nz ORDER BY event_type, event_date""".stripMargin),
     // Cohen's kappa of the q21 stopword-marker classifier against the lang
     // labels: chance-corrected agreement from one grid aggregate, integer
     // margins, the only float is the final ratio
-    "q207_cohens_kappa" -> { (s, d) =>
+    Gated("q207_cohens_kappa", { (s, d) =>
       graft.analysis.Stats.cohensKappa(
         TextAnalysis.langId(TestData.documents(s, d)),
         "lang_label", "guessed_lang")
     },
+      // q21's langid CTEs + the kappa tail: integer margins, inner join on
+      // the class label for the chance term
+      s"""WITH $langGuessCtes,
+        |grid AS (SELECT lang_label AS a, guessed_lang AS b, count(*) AS c FROM g GROUP BY 1, 2),
+        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ra FROM grid GROUP BY 1),
+        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM grid GROUP BY 1),
+        |pe AS (SELECT COALESCE(CAST(sum(ra * cb) AS BIGINT), 0) AS pe_num
+        |       FROM ma JOIN mb ON ma.a = mb.b),
+        |tt AS (SELECT CAST(sum(c) AS BIGINT) AS n,
+        |         CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT) AS diag
+        |       FROM grid)
+        |SELECT n,
+        |  round(diag::DOUBLE / n::DOUBLE, 6) AS po,
+        |  round(pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE), 6) AS pe,
+        |  CASE WHEN 1.0::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE) > 0
+        |    THEN round((diag::DOUBLE / n::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE))
+        |           / (1.0::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE)), 6) END AS kappa
+        |FROM tt CROSS JOIN pe""".stripMargin),
     // dictionary tagging: broadcast-literal lexicon, filter BEFORE explode
     // so only hits shuffle; per-doc term occurrence counts
-    "q208_dictionary_tags" -> { (s, d) =>
+    Gated("q208_dictionary_tags", { (s, d) =>
       TextAnalysis.dictionaryTags(TestData.documents(s, d),
           dict = Seq("join", "hash", "scan", "merge", "sort"))
         .orderBy("doc_id", "term")
     },
+      // same lexicon, same filter-then-unnest order
+      s"""SELECT doc_id, term, count(*) AS n_occ FROM (
+        |  SELECT doc_id,
+        |    unnest(list_filter(list_filter(string_split($normText, ' '), x -> x <> ''), x -> x IN ('join','hash','scan','merge','sort'))) AS term
+        |  FROM documents)
+        |GROUP BY 1, 2 ORDER BY doc_id, term""".stripMargin),
     // simplified (centroid-based) silhouette over q108's deterministic
     // Lloyd cells: per point the two smallest centroid distances from one
     // codegen'd projection, s=(b-a)/max(a,b), per-cluster DECIMAL mean —
     // the unsupervised quality dial next to q143's labeled metrics
-    "q204_silhouette" -> { (s, d) =>
+    Gated("q204_silhouette", { (s, d) =>
       graft.analysis.Clustering.silhouette(
           TestData.embeddings(s, d), k = 4, iterations = 2)
         .orderBy("cluster")
     },
+      // the shared Lloyd CTEs + rank-2 distances: rn=1 is a2, rn=2 is b2
+      s"""WITH $kmeansAsgCtes,
+        |rk AS (
+        |  SELECT vec_id, cluster, d2,
+        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+        |  FROM ddf),
+        |ab AS (
+        |  SELECT a.vec_id, a.cluster, sqrt(a.d2) AS a, sqrt(b.d2) AS b
+        |  FROM rk a JOIN rk b ON a.vec_id = b.vec_id AND a.rn = 1 AND b.rn = 2),
+        |sil AS (
+        |  SELECT cluster,
+        |    CASE WHEN greatest(a, b) > 0 THEN (b - a) / greatest(a, b)
+        |         ELSE 0.0::DOUBLE END AS s
+        |  FROM ab)
+        |SELECT cluster, count(*) AS n,
+        |  round(CAST(sum(CAST(s AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_silhouette
+        |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin),
     // embedding centroid drift per label slice vs the global centroid:
     // dim-wise DECIMAL means, cosine + L2 shift over the dim-sized joined
     // frame — the embedding-space drift monitor beside q112/q174
-    "q205_centroid_drift" -> { (s, d) =>
+    Gated("q205_centroid_drift", { (s, d) =>
       graft.analysis.Profiling.centroidDrift(TestData.embeddings(s, d))
         .orderBy("label")
     },
+      // dim-wise DECIMAL(38,12) means, DECIMAL(38,18) product terms
+      """WITH e AS (
+        |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+        |ld AS (
+        |  SELECT label, i AS dim,
+        |    CAST(sum(CAST(v[i+1] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m,
+        |    count(*) AS n
+        |  FROM e CROSS JOIN range(64) t(i) GROUP BY 1, 2),
+        |gd AS (
+        |  SELECT i AS dim,
+        |    CAST(sum(CAST(v[i+1] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS g
+        |  FROM e CROSS JOIN range(64) t(i) GROUP BY 1),
+        |j AS (SELECT ld.label, ld.n, ld.m, gd.g FROM ld JOIN gd USING (dim)),
+        |s AS (
+        |  SELECT label, max(n) AS n_vecs,
+        |    CAST(sum(CAST(m * g AS DECIMAL(38,18))) AS DOUBLE) AS mg,
+        |    CAST(sum(CAST(m * m AS DECIMAL(38,18))) AS DOUBLE) AS mm,
+        |    CAST(sum(CAST(g * g AS DECIMAL(38,18))) AS DOUBLE) AS gg,
+        |    CAST(sum(CAST((m - g) * (m - g) AS DECIMAL(38,18))) AS DOUBLE) AS d2
+        |  FROM j GROUP BY 1)
+        |SELECT label, n_vecs,
+        |  round(mg / (sqrt(mm) * sqrt(gg)), 6) AS cos_to_global,
+        |  round(sqrt(d2), 6) AS l2_shift
+        |FROM s ORDER BY label""".stripMargin),
     // Kaplan-Meier survival over session dwell times with end-of-log
     // right-censoring (last hour may still be live): at-risk counts from
     // one cumulative window over the distinct-duration frame, survival =
     // exp of DECIMAL-summed ln factors (integer-ratio inputs)
-    "q202_km_survival" -> { (s, d) =>
+    Gated("q202_km_survival", { (s, d) =>
       TimeSeries.kmSurvival(TestData.clicks(s, d)).orderBy("t_sec")
     },
+      // floor(epoch()) parity (the q102 rule) for both the duration and the
+      // censor flag; same DECIMAL ln-factor cumsum, exp at the end
+      """WITH pk AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS sid,
+        |    CAST(floor(epoch(max(CAST(ts AS TIMESTAMP)))) AS BIGINT)
+        |      - CAST(floor(epoch(min(CAST(ts AS TIMESTAMP)))) AS BIGINT) AS t_sec,
+        |    CAST(floor(epoch(max(CAST(ts AS TIMESTAMP)))) AS BIGINT) AS last_s
+        |  FROM events GROUP BY 1),
+        |le AS (SELECT max(last_s) AS log_end FROM pk),
+        |fl AS (
+        |  SELECT t_sec,
+        |    CASE WHEN last_s > log_end - 3600 THEN 1 ELSE 0 END AS c,
+        |    CASE WHEN last_s > log_end - 3600 THEN 0 ELSE 1 END AS d
+        |  FROM pk CROSS JOIN le),
+        |bt AS (SELECT t_sec, CAST(sum(d) AS BIGINT) AS d_events,
+        |         CAST(sum(c) AS BIGINT) AS c_censored FROM fl GROUP BY 1),
+        |cm AS (
+        |  SELECT t_sec, d_events, c_censored,
+        |    CAST(sum(d_events + c_censored) OVER () AS BIGINT) AS n_total,
+        |    CAST(sum(d_events + c_censored)
+        |      OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        |  FROM bt),
+        |lf AS (
+        |  SELECT t_sec, d_events, c_censored,
+        |    n_total - cum + d_events + c_censored AS n_at_risk,
+        |    CASE WHEN d_events > 0
+        |           AND d_events < n_total - cum + d_events + c_censored
+        |      THEN ln((n_total - cum + c_censored)::DOUBLE
+        |             / (n_total - cum + d_events + c_censored)::DOUBLE)
+        |      ELSE 0.0::DOUBLE END AS ln_f,
+        |    CASE WHEN d_events > 0
+        |           AND d_events = n_total - cum + d_events + c_censored
+        |      THEN 1 ELSE 0 END AS zf
+        |  FROM cm)
+        |SELECT t_sec, n_at_risk, d_events, c_censored,
+        |  CASE WHEN max(zf) OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) = 1
+        |    THEN 0.0::DOUBLE
+        |    ELSE round(exp(CAST(sum(CAST(ln_f AS DECIMAL(28,12)))
+        |      OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) AS DOUBLE)), 6) END AS survival
+        |FROM lf ORDER BY t_sec""".stripMargin),
     // stupid backoff (Brants et al.): held-out docs (doc_id%10=0, q50's
     // convention) scored under the 90% training slice's counts — seen
     // bigram c12/c1, else 0.4*c(w2)/N, else the 0.4^2/N unknown floor;
     // pure integer-ratio arithmetic, no libm
-    "q203_stupid_backoff" -> { (s, d) =>
+    Gated("q203_stupid_backoff", { (s, d) =>
       val docs = TestData.documents(s, d)
       TextAnalysis.stupidBackoff(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0))
         .orderBy("doc_id")
     },
+      // same splits, same three-way CASE; DECIMAL-summed scores
+      s"""WITH tr AS (
+        |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS t
+        |  FROM documents WHERE doc_id % 10 <> 0),
+        |ev AS (
+        |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS t
+        |  FROM documents WHERE doc_id % 10 = 0),
+        |trb AS (
+        |  SELECT b.w1 AS w1, b.w2 AS w2 FROM (
+        |    SELECT unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
+        |    FROM tr WHERE len(t) >= 2)),
+        |evb AS (
+        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
+        |    SELECT doc_id, unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
+        |    FROM ev WHERE len(t) >= 2)),
+        |uni AS (SELECT tok AS w, count(*) AS cu FROM (SELECT unnest(t) AS tok FROM tr) GROUP BY 1),
+        |tot AS (SELECT CAST(sum(cu) AS BIGINT) AS n_total FROM uni),
+        |cb AS (SELECT w1, w2, count(*) AS c12 FROM trb GROUP BY 1, 2),
+        |sc AS (
+        |  SELECT e.doc_id, count(*) AS n_bigrams,
+        |    CAST(sum(CASE WHEN cb.c12 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+        |    sum(CAST(
+        |      CASE WHEN cb.c12 IS NOT NULL THEN cb.c12::DOUBLE / u1.cu::DOUBLE
+        |           WHEN u2.cu IS NOT NULL THEN 0.4::DOUBLE * u2.cu::DOUBLE / t.n_total::DOUBLE
+        |           ELSE 0.4::DOUBLE * 0.4::DOUBLE / t.n_total::DOUBLE END
+        |      AS DECIMAL(28,12))) AS s
+        |  FROM evb e
+        |  LEFT JOIN cb ON cb.w1 = e.w1 AND cb.w2 = e.w2
+        |  LEFT JOIN uni u1 ON u1.w = e.w1
+        |  LEFT JOIN uni u2 ON u2.w = e.w2
+        |  CROSS JOIN tot t
+        |  GROUP BY 1)
+        |SELECT d.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
+        |  CASE WHEN sc.n_bigrams > 0
+        |    THEN round(sc.n_hits::DOUBLE / sc.n_bigrams::DOUBLE, 6) END AS hit_rate,
+        |  CASE WHEN sc.n_bigrams > 0
+        |    THEN round(sc.s::DOUBLE / sc.n_bigrams::DOUBLE, 6) END AS mean_score
+        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
+        |LEFT JOIN sc USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
     // frequency-of-frequencies + simple Good-Turing re-estimates over
     // TRIGRAMS (the estimator's classic n-gram application; this corpus's
     // unigram vocab is dense, trigram counts have the real low-k tail):
     // f_k, per-class corpus mass (k=1's mass IS the unseen-probability
     // p0), c* = (k+1)f_{k+1}/f_k — all integer-ratio arithmetic, no libm
-    "q200_count_of_counts" -> { (s, d) =>
+    Gated("q200_count_of_counts", { (s, d) =>
       TextAnalysis.countOfCounts(TestData.documents(s, d), ngramN = 3)
         .orderBy("k")
     },
+      // count-of-counts + Good-Turing over non-distinct trigrams: gaps in
+      // the k table leave c* null
+      countOfCountsSql),
     // Zipf-law slope per source: OLS of ln(freq) on ln(rank) over the
     // top-200 types; rank window over the vocabulary aggregate, DECIMAL
     // OLS sums, closed form in the double domain (the q103 recipe)
-    "q201_zipf_slope" -> { (s, d) =>
+    Gated("q201_zipf_slope", { (s, d) =>
       TextAnalysis.zipfSlopes(TestData.documents(s, d)).orderBy("source")
     },
+      // same rank tie-break (cnt desc, token asc), same DECIMAL(28,12) OLS
+      // sums, same double-domain closed form
+      s"""WITH tk AS (
+        |  SELECT source, unnest(list_filter(string_split($normText, ' '), x -> x <> '')) AS token
+        |  FROM documents),
+        |cnt AS (SELECT source, token, count(*) AS cnt FROM tk GROUP BY 1, 2),
+        |r AS (
+        |  SELECT source, cnt,
+        |    row_number() OVER (PARTITION BY source ORDER BY cnt DESC, token) AS r
+        |  FROM cnt),
+        |xy AS (SELECT source, ln(r::DOUBLE) AS x, ln(cnt::DOUBLE) AS y FROM r WHERE r <= 200),
+        |s AS (
+        |  SELECT source, count(*) AS n_types,
+        |    CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
+        |  FROM xy GROUP BY 1)
+        |SELECT source, n_types,
+        |  round((n_types::DOUBLE * sxy - sx * sy) / (n_types::DOUBLE * sxx - sx * sx), 6) AS slope,
+        |  round((sy - ((n_types::DOUBLE * sxy - sx * sy) / (n_types::DOUBLE * sxx - sx * sx)) * sx) / n_types::DOUBLE, 6) AS intercept
+        |FROM s ORDER BY source""".stripMargin),
     // first-order Markov chain over each session's event-type sequence with
     // explicit <START>/<END> states: one partition-by-key window, then a
     // map-side-combinable count whose result is |types+2|^2 rows; p is an
     // integer-count ratio (no libm)
-    "q199_markov_transitions" -> { (s, d) =>
+    Gated("q199_markov_transitions", { (s, d) =>
       graft.analysis.Funnel.markovTransitions(TestData.clicks(s, d))
         .orderBy("from_state", "to_state")
     },
+      // same window (tie-break on event_id), same <START>/<END> convention
+      s"""WITH $transitionCtes
+        |SELECT from_state, to_state, n,
+        |  round(n::DOUBLE / sum(n) OVER (PARTITION BY from_state), 6) AS p
+        |FROM c ORDER BY from_state, to_state""".stripMargin),
     // q188's island machinery pointed at the benchmark: token intervals
     // colliding with ANY eval span (doc_id%10=0 stands in for the
     // held-out set, q50's convention) — the removal form of the
     // contamination score
-    "q198_decontam_masks" -> { (s, d) =>
+    Gated("q198_decontam_masks", { (s, d) =>
       val docs = TestData.documents(s, d)
       Dedup.contaminationMasks(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0))
         .orderBy("doc_id")
     },
+      // q188's gaps-and-islands over eval-colliding spans only
+      s"""WITH $spanFpCtes,
+        |ev AS (SELECT DISTINCT span_fp FROM f WHERE doc_id % 10 = 0),
+        |o AS (
+        |  SELECT f.doc_id, f.start FROM f JOIN ev USING (span_fp)
+        |  WHERE f.doc_id % 10 <> 0),
+        |$spanIslandCtes,
+        |pd AS (
+        |  SELECT doc_id, CAST(sum(n_spans) AS BIGINT) AS n_hits,
+        |    count(*) AS n_islands, CAST(sum(island_tokens) AS BIGINT) AS n_masked_tokens
+        |  FROM gi GROUP BY 1),
+        |nt AS (
+        |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t
+        |  WHERE doc_id % 10 <> 0)
+        |SELECT nt.doc_id, nt.n_tokens,
+        |  COALESCE(n_hits, 0) AS n_hits,
+        |  COALESCE(n_islands, 0) AS n_islands,
+        |  COALESCE(n_masked_tokens, 0) AS n_masked_tokens,
+        |  CASE WHEN nt.n_tokens > 0
+        |       THEN round(COALESCE(n_masked_tokens, 0)::DOUBLE / nt.n_tokens::DOUBLE, 6)
+        |       ELSE 0.0 END AS masked_ratio
+        |FROM nt LEFT JOIN pd USING (doc_id)
+        |ORDER BY nt.doc_id""".stripMargin),
     // the minJaccard dial as a measured curve: per threshold, surviving
     // verified pairs + affected docs (max partner score), both from one
     // pass over q32's exact scored pairs
-    "q196_dedup_threshold_sweep" -> { (s, d) =>
+    Gated("q196_dedup_threshold_sweep", { (s, d) =>
       Dedup.thresholdSweep(
           Dedup.ngramJaccardPairs(TestData.documents(s, d), minJaccard = 0.1))
         .orderBy("threshold")
     },
+      // the minJaccard operating-point curve over q32's exact scored pairs
+      s"""WITH $shingleSetsCtes,
+        |$shingleOverlapCtes,
+        |sc AS (
+        |  SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS j
+        |  FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.1),
+        |pb AS (
+        |  SELECT CAST(least(floor(j * 10), 9) AS INT) AS d, count(*) AS np
+        |  FROM sc GROUP BY 1),
+        |dm AS (
+        |  SELECT id, CAST(least(floor(max(j) * 10), 9) AS INT) AS d FROM (
+        |    SELECT doc_a AS id, j FROM sc UNION ALL SELECT doc_b AS id, j FROM sc)
+        |  GROUP BY id),
+        |nd AS (SELECT d, count(*) AS ndocs FROM dm GROUP BY 1),
+        |sp AS (SELECT CAST(unnest(range(1, 10)) AS INT) AS d)
+        |SELECT sp.d::DOUBLE / 10 AS threshold,
+        |  CAST(COALESCE((SELECT sum(np) FROM pb WHERE pb.d >= sp.d), 0) AS BIGINT) AS n_pairs,
+        |  CAST(COALESCE((SELECT sum(ndocs) FROM nd WHERE nd.d >= sp.d), 0) AS BIGINT) AS n_docs_affected
+        |FROM sp ORDER BY threshold""".stripMargin),
     // THE LAW: hdr histograms merge by addition — stored counts (oldest
     // 90%) summed with the fresh batch's must quantile identically to the
     // whole-corpus rebuild (q192's oracle recomputes the rebuild)
-    "q197_hdr_increment" -> { (s, d) =>
+    Gated("q197_hdr_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val stored = graft.analysis.Sketches.hdrHistogram(
@@ -360,60 +930,155 @@ object SparkEntry {
       graft.analysis.Sketches.hdrQuantilesFromHistogram(merged, "source")
         .orderBy("source", "quantile")
     },
+      // THE LAW: the merged incremental artifact must quantile identically
+      // to the whole-corpus rebuild — this oracle IS the rebuild, verbatim
+      hdrQuantilesOracle),
     // Johnson–Lindenstrauss projection 64→16 dims with a deterministic
     // ±1 md5-parity matrix — no weight artifact, any engine regenerates
     // the identical projection; one codegen'd pass, no shuffle
-    "q195_random_projection" -> { (s, d) =>
+    Gated("q195_random_projection", { (s, d) =>
       Similarity.randomProjection(TestData.embeddings(s, d))
         .orderBy("vec_id", "p")
     },
+      // the ±1 matrix regenerated from md5('rp|p|j') parity; 1/sqrt(16)
+      // is exact, so the only float work is the fused sum itself
+      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
+        |ps AS (SELECT CAST(unnest(range(16)) AS INT) AS p),
+        |pr AS (
+        |  SELECT vec_id, p,
+        |    list_sum(list_transform(range(64), j ->
+        |      CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE) *
+        |      (CASE WHEN ('0x' || substr(md5('rp|' || p::VARCHAR || '|' || j::VARCHAR), 1, 15))::BIGINT % 2 = 0
+        |            THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END)))
+        |      * (1.0::DOUBLE / sqrt(16.0::DOUBLE)) AS value
+        |  FROM e CROSS JOIN ps)
+        |SELECT vec_id, p, round(value, 6) AS value
+        |FROM pr ORDER BY vec_id, p""".stripMargin),
     // Heaps-law vocabulary growth over deterministic hash-decile prefixes:
     // types vs corpus size — the corpus-composition trend monitor (bends
     // up = templated inflow; flattens hard = heavy duplication)
-    "q194_vocab_growth" -> { (s, d) =>
+    Gated("q194_vocab_growth", { (s, d) =>
       TextAnalysis.vocabGrowth(TestData.documents(s, d)).orderBy("decile")
     },
+      // md5-decile assignment, token-first-decile for new types, cumulative
+      // sums over the 10-row spine
+      s"""WITH d AS (
+        |  SELECT doc_id, text,
+        |    CAST(('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10 + 1 AS INT) AS decile
+        |  FROM documents),
+        |tok AS (
+        |  SELECT decile,
+        |    unnest(list_filter(string_split($normText, ' '), x -> x <> '')) AS tok
+        |  FROM d),
+        |pd AS (SELECT decile, count(*) AS nt FROM tok GROUP BY 1),
+        |ft AS (SELECT tok, min(decile) AS decile FROM tok GROUP BY 1),
+        |nv AS (SELECT decile, count(*) AS n_new_types FROM ft GROUP BY 1),
+        |dc AS (SELECT decile, count(*) AS nd FROM d GROUP BY 1),
+        |sp AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS decile),
+        |j AS (
+        |  SELECT sp.decile, COALESCE(nd, 0) AS nd, COALESCE(nt, 0) AS nt,
+        |    COALESCE(n_new_types, 0) AS n_new_types
+        |  FROM sp LEFT JOIN dc USING (decile) LEFT JOIN pd USING (decile)
+        |  LEFT JOIN nv USING (decile))
+        |SELECT decile,
+        |  CAST(sum(nd) OVER w AS BIGINT) AS n_docs_cum,
+        |  CAST(sum(nt) OVER w AS BIGINT) AS n_tokens_cum,
+        |  CAST(n_new_types AS BIGINT) AS n_new_types,
+        |  CAST(sum(n_new_types) OVER w AS BIGINT) AS vocab_cum
+        |FROM j WINDOW w AS (ORDER BY decile ROWS UNBOUNDED PRECEDING)
+        |ORDER BY decile""".stripMargin),
     // mergeable HDR quantile sketch: log-bucketed counts (octave via
     // length(bin(v)) — INTEGER arithmetic, no libm log), quantile = lower
     // bound of the first bucket reaching ceil(q·n); state O(64·s)/group,
     // merges by addition
-    "q192_hdr_quantiles" -> { (s, d) =>
+    Gated("q192_hdr_quantiles", { (s, d) =>
       graft.analysis.Sketches.hdrQuantiles(
           TestData.documents(s, d), "source", "n_chars")
         .orderBy("source", "quantile")
     },
+      // integer log-bucketing (length(bin) octave, // sub-bucket), cumulative
+      // window over the aggregated histogram, first bucket ≥ ceil(q·n)
+      hdrQuantilesOracle),
     // exactly-k-per-group deterministic sample: k smallest md5 hashes per
     // source, hot-group-safe via the per-group hash-cutoff prefilter with
     // exact fallback
-    "q193_group_sample" -> { (s, d) =>
+    Gated("q193_group_sample", { (s, d) =>
       graft.analysis.Sampling.samplePerGroup(TestData.documents(s, d),
           groupCol = "source", keyCol = "doc_id", k = 10)
         .select("doc_id", "source", "sample_rank")
         .orderBy("source", "sample_rank")
     },
+      // the k smallest md5(doc_id) hashes per source — the oracle ranks
+      // directly; the Spark side proves the cutoff prefilter is exact
+      """WITH h AS (
+        |  SELECT doc_id, source,
+        |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT AS hh
+        |  FROM documents),
+        |r AS (
+        |  SELECT doc_id, source,
+        |    row_number() OVER (PARTITION BY source ORDER BY hh, doc_id) AS sample_rank
+        |  FROM h)
+        |SELECT doc_id, source, sample_rank FROM r WHERE sample_rank <= 10
+        |ORDER BY source, sample_rank""".stripMargin),
     // IVF operating-point curve: recall@10 + candidate volume at nProbe ∈
     // {1,2,4,8} vs the exact top-10 — the probe-budget dial measured,
     // completing the tuning-curve family (q180 bands, q161 bit rate)
-    "q191_ivf_nprobe_curve" -> { (s, d) =>
+    Gated("q191_ivf_nprobe_curve", { (s, d) =>
       Similarity.ivfNprobeCurve(TestData.embeddings(s, d))
         .orderBy("n_probe")
-    },
+    }, ivfNprobeCurveOracle),
     // the removal side of q136: per-doc duplicated-token masks — spans in
     // ≥2 docs merged into maximal islands (fixed span length ⇒ islands
     // split exactly where start-lag(start) > L), dup-token budget per doc
-    "q188_span_masks" -> { (s, d) =>
+    Gated("q188_span_masks", { (s, d) =>
       Dedup.spanMasks(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // q136's span-fp CTEs + gaps-and-islands merge (break where the gap
+      // between consecutive dup-span starts exceeds the span length)
+      s"""WITH $spanFpCtes,
+        |d AS (SELECT span_fp FROM f GROUP BY span_fp HAVING count(DISTINCT doc_id) >= 2),
+        |o AS (SELECT f.doc_id, f.start FROM f JOIN d USING (span_fp)),
+        |$spanIslandCtes,
+        |pd AS (
+        |  SELECT doc_id, CAST(sum(n_spans) AS BIGINT) AS n_dup_spans,
+        |    count(*) AS n_islands, CAST(sum(island_tokens) AS BIGINT) AS n_dup_tokens
+        |  FROM gi GROUP BY 1),
+        |nt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t)
+        |SELECT nt.doc_id, nt.n_tokens,
+        |  COALESCE(n_dup_spans, 0) AS n_dup_spans,
+        |  COALESCE(n_islands, 0) AS n_islands,
+        |  COALESCE(n_dup_tokens, 0) AS n_dup_tokens,
+        |  CASE WHEN nt.n_tokens > 0
+        |       THEN round(COALESCE(n_dup_tokens, 0)::DOUBLE / nt.n_tokens::DOUBLE, 6)
+        |       ELSE 0.0 END AS dup_ratio
+        |FROM nt LEFT JOIN pd USING (doc_id)
+        |ORDER BY nt.doc_id""".stripMargin),
     // tokenizer fertility per source: subwords-per-word from the BPE-ish
     // segmentation — the tokenizer-fit metric mixture tuning consumes
-    "q189_token_fertility" -> { (s, d) =>
+    Gated("q189_token_fertility", { (s, d) =>
       TextAnalysis.tokenFertility(TestData.documents(s, d)).orderBy("source")
     },
+      // whitespace words (empty-filtered) vs BPE-ish subword segmentation,
+      // summed per source before the ratio
+      s"""WITH t AS (
+        |  SELECT source, text,
+        |    list_filter(string_split($normText, ' '), x -> x <> '') AS toks
+        |  FROM documents),
+        |p AS (
+        |  SELECT source, CAST(len(toks) AS BIGINT) AS w,
+        |    CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS BIGINT) AS b,
+        |    CAST(length(array_to_string(toks, '')) AS BIGINT) AS c
+        |  FROM t)
+        |SELECT source, count(*) AS n_docs,
+        |  CAST(sum(w) AS BIGINT) AS n_words, CAST(sum(b) AS BIGINT) AS n_subwords,
+        |  CASE WHEN sum(w) > 0 THEN round(sum(b)::DOUBLE / sum(w)::DOUBLE, 6) ELSE 0.0 END AS fertility,
+        |  CASE WHEN sum(w) > 0 THEN round(sum(c)::DOUBLE / sum(w)::DOUBLE, 6) ELSE 0.0 END AS chars_per_word
+        |FROM p GROUP BY source ORDER BY source""".stripMargin),
     // bloom OR-mergeability as a LAW gate: stored bits (oldest 90%) ∪
     // fresh batch bits ≡ the whole-corpus rebuild (the oracle); probed
     // over real fingerprints plus synthetic non-member keys so true
     // negatives and false positives stay visible in the gate
-    "q190_bloom_increment" -> { (s, d) =>
+    Gated("q190_bloom_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val keys = docs.select(
         TextAnalysis.fingerprint(col("text")).as("key"), col("doc_id"))
@@ -427,29 +1092,105 @@ object SparkEntry {
         docs.select(concat(lit("probe|"), col("doc_id")).as("key")))
       graft.analysis.Sketches.bloomProbe(merged, probes).orderBy("key")
     },
+      // THE LAW: the incremental artifact must probe identically to the
+      // whole-corpus rebuild — this oracle IS the rebuild
+      s"""WITH fps AS (
+        |  SELECT doc_id,
+        |    md5($normText) AS key
+        |  FROM documents),
+        |corpus AS (SELECT DISTINCT key FROM fps),
+        |cpos AS (
+        |  SELECT DISTINCT ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
+        |  FROM corpus CROSS JOIN range(3) r(i)),
+        |probe AS (
+        |  SELECT DISTINCT key FROM (
+        |    SELECT key FROM fps
+        |    UNION ALL
+        |    SELECT 'probe|' || doc_id::VARCHAR FROM documents)),
+        |ppos AS (
+        |  SELECT key, ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
+        |  FROM probe CROSS JOIN range(3) r(i))
+        |SELECT ppos.key,
+        |  CAST(sum(CASE WHEN cpos.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = 3 AS might_contain
+        |FROM ppos LEFT JOIN cpos ON ppos.p = cpos.p
+        |GROUP BY ppos.key ORDER BY ppos.key""".stripMargin),
     // leakage-safe train/val/test split: assignment at exact-dup-CLUSTER
     // granularity (md5 bucket gate on the min-id representative), so a doc
     // and its duplicates can never straddle train and eval
-    "q183_leakage_safe_split" -> { (s, d) =>
+    Gated("q183_leakage_safe_split", { (s, d) =>
       graft.analysis.CorpusPrep.leakageSafeSplit(TestData.documents(s, d))
         .orderBy("doc_id")
     },
+      // exact-dup clusters by normalized-text md5, min-id rep, q44's md5
+      // bucket gate on the rep — split inherited cluster-wide
+      s"""WITH fp AS (
+        |  SELECT doc_id,
+        |    md5($normText) AS fp
+        |  FROM documents),
+        |reps AS (SELECT fp, min(doc_id) AS cluster_rep FROM fp GROUP BY fp),
+        |b AS (
+        |  SELECT f.doc_id, r.cluster_rep,
+        |    ('0x' || substr(md5('split|v1|' || r.cluster_rep::VARCHAR), 1, 15))::BIGINT % 10000 AS bucket
+        |  FROM fp f JOIN reps r USING (fp))
+        |SELECT doc_id, cluster_rep,
+        |  CASE WHEN bucket < 8000 THEN 'train'
+        |       WHEN bucket < 9000 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM b ORDER BY doc_id""".stripMargin),
     // n-gram novelty: fraction of each doc's distinct 3-gram shingles
     // whose corpus-wide first occurrence (min doc id) is this doc — the
     // crawl-collapse early warning between exact and near-dup removal
-    "q184_ngram_novelty" -> { (s, d) =>
+    Gated("q184_ngram_novelty", { (s, d) =>
       TextAnalysis.ngramNovelty(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // q180's shingle CTEs corpus-wide; first occurrence = min doc id per
+      // shingle; short docs surface with zero shingles
+      s"""WITH $shingleSetsCtes,
+        |inv AS (SELECT id, unnest(sh) AS g FROM sets),
+        |fo AS (SELECT g, min(id) AS first_doc FROM inv GROUP BY g),
+        |pd AS (
+        |  SELECT inv.id, count(*) AS n_shingles,
+        |    CAST(sum(CASE WHEN fo.first_doc = inv.id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
+        |  FROM inv JOIN fo USING (g) GROUP BY inv.id)
+        |SELECT d.doc_id, COALESCE(n_shingles, 0) AS n_shingles,
+        |  COALESCE(n_novel, 0) AS n_novel,
+        |  CASE WHEN COALESCE(n_shingles, 0) > 0
+        |       THEN round(n_novel::DOUBLE / n_shingles::DOUBLE, 6)
+        |       ELSE 0.0 END AS novelty
+        |FROM documents d LEFT JOIN pd ON pd.id = d.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
     // Gopher-style quality rule bundle: per-rule boolean flags + keep
     // conjunction — the auditable form of q20's scalar score
-    "q185_gopher_rules" -> { (s, d) =>
+    Gated("q185_gopher_rules", { (s, d) =>
       TextAnalysis.gopherRules(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // q20's stats CTEs + the rule flags; all thresholds on already-rounded
+      // integer-derived values, so the booleans are engine-stable
+      s"""WITH $docTextTokensCte,
+        |s AS (
+        |  SELECT doc_id,
+        |    len(toks) AS n_tokens,
+        |    len(list_distinct(toks)) AS n_unique_tokens,
+        |    round(CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks), 4) AS avg_token_len,
+        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
+        |  FROM t),
+        |r AS (
+        |  SELECT doc_id, n_tokens, avg_token_len, stopword_ratio,
+        |    round(CAST(n_unique_tokens AS DOUBLE) / n_tokens, 4) AS uniq_ratio
+        |  FROM s)
+        |SELECT doc_id, n_tokens, avg_token_len, stopword_ratio, uniq_ratio,
+        |  n_tokens BETWEEN 50 AND 100000 AS r_word_count,
+        |  avg_token_len BETWEEN 3.0 AND 10.0 AS r_mean_word_len,
+        |  stopword_ratio >= 0.01 AS r_stopword,
+        |  uniq_ratio >= 0.2 AS r_diversity,
+        |  (n_tokens BETWEEN 50 AND 100000) AND (avg_token_len BETWEEN 3.0 AND 10.0)
+        |    AND stopword_ratio >= 0.01 AND uniq_ratio >= 0.2 AS keep
+        |FROM r ORDER BY doc_id""".stripMargin),
     // portable Bloom filter as its set-of-set-bits frame: historical keys
     // (oldest 90% of doc ids) inserted, every distinct fingerprint probed;
     // no false negatives by construction, false positives surfaced next to
     // exact membership
-    "q186_bloom_membership" -> { (s, d) =>
+    Gated("q186_bloom_membership", { (s, d) =>
       val docs = TestData.documents(s, d)
       val keys = docs.select(
         TextAnalysis.fingerprint(col("text")).as("key"), col("doc_id"))
@@ -459,53 +1200,161 @@ object SparkEntry {
           keys.select("key"))
         .orderBy("key")
     },
+      // bloom bitmap rebuilt as its distinct set-bit positions (3 md5 hash
+      // families mod 4096); probe = all 3 positions present
+      s"""WITH fps AS (
+        |  SELECT doc_id,
+        |    md5($normText) AS key
+        |  FROM documents),
+        |cut AS (SELECT max(doc_id) * 9 // 10 AS c FROM documents),
+        |corpus AS (SELECT DISTINCT key FROM fps, cut WHERE doc_id <= c),
+        |cpos AS (
+        |  SELECT DISTINCT ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
+        |  FROM corpus CROSS JOIN range(3) r(i)),
+        |probe AS (SELECT DISTINCT key FROM fps),
+        |ppos AS (
+        |  SELECT key, ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
+        |  FROM probe CROSS JOIN range(3) r(i)),
+        |hit AS (
+        |  SELECT ppos.key,
+        |    CAST(sum(CASE WHEN cpos.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = 3 AS might_contain
+        |  FROM ppos LEFT JOIN cpos ON ppos.p = cpos.p
+        |  GROUP BY ppos.key)
+        |SELECT h.key, h.might_contain, c.key IS NOT NULL AS actually_in
+        |FROM hit h LEFT JOIN corpus c ON h.key = c.key
+        |ORDER BY h.key""".stripMargin),
     // cross-source quality calibration: percent_rank of the quality score
     // within source (and globally), computed as a window over the tiny
     // (source, 2dp-score) aggregate, not over raw rows
-    "q187_quality_by_source" -> { (s, d) =>
+    Gated("q187_quality_by_source", { (s, d) =>
       graft.analysis.CorpusPrep.qualityBySource(TestData.documents(s, d))
         .orderBy("doc_id")
     },
+      // q20's quality score + native percent_rank windows — the oracle form
+      // of the window-over-the-aggregate plan
+      s"""WITH $docTextTokensCte,
+        |s AS (
+        |  SELECT doc_id,
+        |    len(toks) AS n_tokens,
+        |    len(list_distinct(toks)) AS n_unique_tokens,
+        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
+        |  FROM t),
+        |sc AS (
+        |  SELECT doc_id, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
+        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
+        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
+        |  FROM s),
+        |j AS (
+        |  SELECT sc.doc_id, d.source, sc.quality_score
+        |  FROM sc JOIN documents d USING (doc_id))
+        |SELECT doc_id, source, quality_score,
+        |  round(percent_rank() OVER (PARTITION BY source ORDER BY quality_score), 6) AS pct_in_source,
+        |  round(percent_rank() OVER (ORDER BY quality_score), 6) AS pct_global
+        |FROM j ORDER BY doc_id""".stripMargin),
     // text quality scoring (token stats, stopword ratio, quality bands)
-    "q20_text_stats" -> { (s, d) =>
+    Gated("q20_text_stats", { (s, d) =>
       TextAnalysis.textStats(TestData.documents(s, d)).orderBy("doc_id")
-    },
+    }, s"""WITH $docTextTokensCte,
+        |s AS (
+        |  SELECT doc_id,
+        |    len(toks) AS n_tokens,
+        |    len(list_distinct(toks)) AS n_unique_tokens,
+        |    len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS n_bpe_tokens,
+        |    round(CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks), 4) AS avg_token_len,
+        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
+        |  FROM t),
+        |sc AS (
+        |  SELECT *, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
+        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
+        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
+        |  FROM s)
+        |SELECT doc_id, n_tokens, n_unique_tokens, n_bpe_tokens, avg_token_len, stopword_ratio, quality_score,
+        |  CASE WHEN quality_score >= 60 THEN 'high' WHEN quality_score >= 35 THEN 'medium' ELSE 'low' END AS quality_band
+        |FROM sc ORDER BY doc_id""".stripMargin),
     // weighted deterministic sampling: inclusion probability proportional
     // to token count, same md5 gate, mean weight folded as a literal
-    "q64_weighted_sample" -> { (s, d) =>
+    Gated("q64_weighted_sample", { (s, d) =>
       val docs = TestData.documents(s, d)
         .withColumn("n_tokens", size(TextAnalysis.tokens(col("text"))))
       graft.analysis.Sampling.weightedHashSample(docs,
           keyCol = "doc_id", weightCol = "n_tokens", fraction = 0.3)
         .select("doc_id", "n_tokens").orderBy("doc_id")
     },
+      // md5 hash-gate sampling: bucket = first 8 md5 hex chars as int % 10000,
+      // thresholds 5000/2500/1000 = round(fraction * buckets)
+      s"""WITH d AS (
+        |  SELECT doc_id,
+        |    len(string_split($normText, ' ')) AS n_tokens
+        |  FROM documents),
+        |m AS (SELECT avg(n_tokens) AS mw FROM d)
+        |SELECT doc_id, n_tokens FROM d
+        |WHERE (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000)
+        |  < CAST(0.3 AS DOUBLE) * CAST(10000 AS DOUBLE) * n_tokens / (SELECT mw FROM m)
+        |ORDER BY doc_id""".stripMargin),
     // deterministic stratified sampling: md5-bucket gate per language
     // stratum — reproducible in any engine, no shuffle, retry-stable
-    "q44_stratified_sample" -> { (s, d) =>
+    Gated("q44_stratified_sample", { (s, d) =>
       graft.analysis.Sampling.stratifiedHashSample(
           TestData.documents(s, d), strataCol = "lang", keyCol = "doc_id",
           fractions = Map("en" -> 0.5, "de" -> 0.25), default = 0.1)
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
-    },
+    }, """SELECT doc_id, lang, source FROM documents
+        |WHERE (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000) <
+        |  CASE WHEN lang = 'en' THEN 5000 WHEN lang = 'de' THEN 2500 ELSE 1000 END
+        |ORDER BY doc_id""".stripMargin),
     // corpus-wide top-k n-grams by document frequency (boilerplate detector)
-    "q45_top_ngrams" -> { (s, d) =>
+    Gated("q45_top_ngrams", { (s, d) =>
       TextAnalysis.topNgrams(TestData.documents(s, d), n = 3, k = 20)
     },
+      // same tokenization/shingling as q32; counts keep repeats (total_count)
+      // while doc_freq is per-document distinct
+      s"""WITH toks AS (
+        |  SELECT doc_id AS id,
+        |    string_split($normText, ' ') AS t
+        |  FROM documents),
+        |sh AS (
+        |  SELECT id, unnest(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS ngram
+        |  FROM toks WHERE len(t) >= 3)
+        |SELECT ngram, count(DISTINCT id) AS doc_freq, count(*) AS total_count
+        |FROM sh GROUP BY 1
+        |ORDER BY doc_freq DESC, total_count DESC, ngram
+        |LIMIT 20""".stripMargin),
     // benchmark decontamination: fraction of each corpus doc's distinct
     // 3-grams appearing in the eval split (doc_id % 10 = 0 stands in for a
     // held-out benchmark); eval n-gram set broadcasts, corpus never shuffles
-    "q50_contamination" -> { (s, d) =>
+    Gated("q50_contamination", { (s, d) =>
       val docs = TestData.documents(s, d)
       TextAnalysis.ngramContamination(
           docs.filter(col("doc_id") % 10 =!= 0),
           docs.filter(col("doc_id") % 10 === 0), n = 3, minRatio = 0.2)
         .orderBy("doc_id")
-    },
+    }, s"""WITH $docTokensCte,
+        |sh AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(t) >= 3
+        |      THEN list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
+        |      ELSE [] END AS grams
+        |  FROM toks),
+        |ev AS (SELECT DISTINCT unnest(grams) AS ngram FROM sh WHERE doc_id % 10 = 0),
+        |corpus AS (SELECT doc_id, grams FROM sh WHERE doc_id % 10 <> 0),
+        |dn AS (SELECT doc_id, unnest(grams) AS ngram FROM corpus),
+        |hits AS (SELECT dn.doc_id, count(*) AS n_contaminated
+        |         FROM dn JOIN ev USING (ngram) GROUP BY 1)
+        |SELECT c.doc_id, len(c.grams) AS n_ngrams,
+        |  COALESCE(h.n_contaminated, 0) AS n_contaminated,
+        |  round(CASE WHEN len(c.grams) > 0
+        |    THEN CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / len(c.grams)
+        |    ELSE 0.0 END, 4) AS contamination_ratio,
+        |  round(CASE WHEN len(c.grams) > 0
+        |    THEN CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / len(c.grams)
+        |    ELSE 0.0 END, 4) >= 0.2 AS is_contaminated
+        |FROM corpus c LEFT JOIN hits h ON c.doc_id = h.doc_id
+        |ORDER BY c.doc_id""".stripMargin),
     // PII scrub: detect + redact emails/phones/IPs. The synthetic documents
     // carry no PII, so deterministic PII is injected per doc_id residue
     // class (identically in the oracle) to make the counts non-trivial.
-    "q51_pii_scrub" -> { (s, d) =>
+    Gated("q51_pii_scrub", { (s, d) =>
       val docs = TestData.documents(s, d).select(col("doc_id"),
         concat(
           col("text"),
@@ -517,16 +1366,54 @@ object SparkEntry {
             concat(lit(" from host 10.0.0."), col("doc_id") % 256)).otherwise(lit("")))
           .as("text"))
       TextAnalysis.piiStats(docs).orderBy("doc_id")
-    },
+    }, """WITH d AS (
+        |  SELECT doc_id, text
+        |    || CASE WHEN doc_id % 3 = 0 THEN ' reach me at user' || doc_id || '@example.com' ELSE '' END
+        |    || CASE WHEN doc_id % 5 = 0 THEN ' call 010-1234-5678' ELSE '' END
+        |    || CASE WHEN doc_id % 7 = 0 THEN ' from host 10.0.0.' || (doc_id % 256) ELSE '' END AS text
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id,
+        |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
+        |    len(regexp_extract_all(text, '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b')) AS n_phones,
+        |    len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
+        |    regexp_replace(regexp_replace(regexp_replace(text,
+        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |        '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g'),
+        |        '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS scrubbed_text
+        |  FROM d)
+        |SELECT doc_id, n_emails, n_phones, n_ips, scrubbed_text,
+        |  (n_emails + n_phones + n_ips) > 0 AS has_pii
+        |FROM c ORDER BY doc_id""".stripMargin),
     // C4-style corpus-wide sentence dedup: global first occurrence wins,
     // documents reassemble from survivors in original order
-    "q52_sentence_dedup" -> { (s, d) =>
+    Gated("q52_sentence_dedup", { (s, d) =>
       Dedup.sentenceDedup(TestData.documents(s, d)).orderBy("doc_id")
-    },
+    }, """WITH d AS (SELECT doc_id, string_split(text, '. ') AS l FROM documents),
+        |e AS (SELECT doc_id, l, unnest(range(len(l))) AS pos FROM d),
+        |s AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, l[CAST(pos + 1 AS INT)] AS sentence FROM e),
+        |s2 AS (
+        |  SELECT doc_id, pos, sentence,
+        |    trim(regexp_replace(regexp_replace(lower(sentence), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS k
+        |  FROM s),
+        |s3 AS (SELECT * FROM s2 WHERE k <> ''),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY k ORDER BY doc_id, pos) AS rn FROM s3),
+        |kept AS (SELECT doc_id, pos, sentence FROM r WHERE rn = 1),
+        |agg AS (
+        |  SELECT doc_id, count(*) AS n_kept,
+        |    string_agg(sentence, '. ' ORDER BY pos) AS deduped_text
+        |  FROM kept GROUP BY doc_id),
+        |tot AS (SELECT doc_id, count(*) AS n_sentences FROM s3 GROUP BY doc_id)
+        |SELECT d.doc_id, COALESCE(t.n_sentences, 0) AS n_sentences,
+        |  COALESCE(a.n_kept, 0) AS n_kept, COALESCE(a.deduped_text, '') AS deduped_text
+        |FROM d
+        |LEFT JOIN tot t ON d.doc_id = t.doc_id
+        |LEFT JOIN agg a ON d.doc_id = a.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
     // co-click graph PageRank: documents co-clicked in a session form an
     // undirected graph (hub sessions dropped pre-join); 5 power iterations,
     // ranks scaled to mean 1. Oracle unrolls the same 5 iterations in SQL.
-    "q56_doc_pagerank" -> { (s, d) =>
+    Gated("q56_doc_pagerank", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.pageRank(edges, damping = 0.85, iterations = 5)
@@ -539,12 +1426,17 @@ object SparkEntry {
           floor(col("pagerank") * lit(1e6) + lit(0.5)).cast("long")
             .as("pagerank_micro"))
         .orderBy("document_id")
-    },
+    }, s"""WITH $sessionClicksCtes,
+        |$coClickSymCtes,
+        |${pageRankIterCtes(5, weighted = false)}
+        |SELECT id AS document_id,
+        |  CAST(floor(r * (SELECT n FROM nn) * 1000000 + 0.5) AS BIGINT) AS pagerank_micro
+        |FROM p5 ORDER BY document_id""".stripMargin),
     // point-in-time SCD2 lookup - the feature-store "no leakage" join:
     // each purchase sees the dimension version valid AT its timestamp
     // (q55's intervals tile the timeline, so the as-of on valid_from IS
     // interval membership); composes two gated operators
-    "q135_pit_lookup" -> { (s, d) =>
+    Gated("q135_pit_lookup", { (s, d) =>
       val clicks = TestData.clicks(s, d)
       val dim = graft.relational.ChangeCapture.scd2Intervals(
         clicks.filter(col("event_type") === "click"),
@@ -557,19 +1449,43 @@ object SparkEntry {
           rightPayload = Seq("document_id"), rightPrefix = "dim_")
         .orderBy("event_id")
     },
+      // q55's change-point SQL restricted to clicks + DuckDB's native ASOF
+      // LEFT JOIN picking the version valid at each purchase
+      """WITH c AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS session_id,
+        |         CAST(props->>'$.k' AS INTEGER) AS document_id,
+        |         CAST(ts AS TIMESTAMP) AS event_ts
+        |  FROM events WHERE event_type = 'click'),
+        |m AS (
+        |  SELECT session_id, document_id, event_ts,
+        |    lag(document_id) OVER (PARTITION BY session_id ORDER BY event_ts) AS prev_doc,
+        |    row_number() OVER (PARTITION BY session_id ORDER BY event_ts) AS rn
+        |  FROM c),
+        |dim AS (
+        |  SELECT session_id, document_id, event_ts AS valid_from FROM m
+        |  WHERE rn = 1 OR prev_doc IS DISTINCT FROM document_id),
+        |f AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS session_id, event_id,
+        |         CAST(ts AS TIMESTAMP) AS event_ts
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT f.session_id, f.event_id, f.event_ts,
+        |  d.document_id AS dim_document_id, d.valid_from AS dim_valid_from
+        |FROM f ASOF LEFT JOIN dim d
+        |  ON f.session_id = d.session_id AND f.event_ts >= d.valid_from
+        |ORDER BY f.event_id""".stripMargin),
     // FastText-style quality-filter training: full-batch logistic GD over
     // cheap text features (bias, capped length, stopword ratio, token
     // width) vs the binary quality band; driver-held weights, one
     // aggregate per epoch, double-rounded sigmoid for engine parity
-    "q151_logreg" -> { (s, d) =>
+    Gated("q151_logreg", { (s, d) =>
       graft.analysis.Features.logisticRegressionGD(
           logregData(s, d), logregFeats, "y", iterations = 3, lr = 5.0)
         .orderBy("dim")
-    },
+    }, logregOracle(3)),
     // reliability diagram of the trained scorer: decile bins of the
     // rounded sigmoid, DECIMAL-mean score vs observed positive rate — the
     // calibration check a filtering threshold depends on
-    "q152_calibration" -> { (s, d) =>
+    Gated("q152_calibration", { (s, d) =>
       val data = logregData(s, d)
       val w = graft.analysis.Features.logisticWeights(data, logregFeats, "y", 3, 5.0)
       data
@@ -584,47 +1500,142 @@ object SparkEntry {
           round(col("ssum") / col("n"), 6).as("avg_score"),
           round(col("pos").cast("double") / col("n"), 6).as("pos_rate"))
         .orderBy("bin")
-    },
+    }, calibrationOracle(3)),
     // compliance takedown end-to-end: copy documents into a source-
     // partitioned layer, delete an md5-gated ~5% of doc_ids through the
     // partition-pruned dynamic-overwrite rewrite, and return the survivors
     // READ BACK FROM THE LAYER plus the audit count — the oracle is the
     // anti-join over the original parquet, so green proves the destructive
     // rewrite dropped exactly the keyed rows and nothing else
-    "q160_takedown" -> { (s, d) =>
+    Gated("q160_takedown", { (s, d) =>
       graft.sinks.Takedown.takedownGate(s, TestData.documents(s, d))
     },
+      // the anti-join law: survivors on disk == original MINUS the keyed
+      // rows; the deleted count rides along as a scalar subquery
+      """SELECT d.doc_id, d.lang, d.source, d.n_chars,
+        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
+        |   WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 19 = 0) AS rows_deleted
+        |FROM documents d
+        |WHERE ('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT % 19 <> 0
+        |ORDER BY d.doc_id""".stripMargin),
     // the final training manifest: epoch copies expanded to rows, each at
     // a deterministic md5(id|copy|seed) shuffle position — reproducible
     // global order with no RNG state; distributed rank via the q95 recipe
-    "q182_training_order" -> { (s, d) =>
+    Gated("q182_training_order", { (s, d) =>
       graft.analysis.CorpusPrep.trainingOrder(TestData.documents(s, d),
           maxEpochsBp = 10500, seed = "ep1")
         .orderBy("global_rank")
     },
+      // q173's chain + copy expansion + md5-keyed global order
+      s"""WITH $mixtureLevelCtes,
+        |$mixtureEpochCtes,
+        |mf AS (
+        |  SELECT doc.doc_id, doc.source,
+        |    full_copies + CASE WHEN ('0x' || substr(md5(doc.doc_id::VARCHAR || '|epoch'), 1, 8))::BIGINT % 10000 < frac_bp
+        |      THEN 1 ELSE 0 END AS n_copies
+        |  FROM documents doc JOIN g USING (source)),
+        |ex AS (
+        |  SELECT doc_id, source, CAST(unnest(range(1, n_copies + 1)) AS INT) AS copy
+        |  FROM mf WHERE n_copies > 0),
+        |kk AS (
+        |  SELECT doc_id, source, copy,
+        |    md5(doc_id::VARCHAR || '|' || copy::VARCHAR || '|ep1') AS skey
+        |  FROM ex)
+        |SELECT row_number() OVER (ORDER BY skey, doc_id, copy) AS global_rank,
+        |  doc_id, source, copy
+        |FROM kk ORDER BY global_rank""".stripMargin),
     // LSH S-curve validation on a ~33% doc sample (doc_id % 3 = 0):
     // empirical candidate rate per jaccard decile next to the theoretical
     // 1-(1-j^4)^4 — the b/r recall-cost dial as a measured operating
     // point. Gate columns are integer ppm (BIGINT division + driver-
     // computed literals): no engine-evaluated float math anywhere, so the
     // hash is invariant across DuckDB BUILDS (the r6/r7 driver-hash fix)
-    "q180_lsh_tuning" -> { (s, d) =>
+    Gated("q180_lsh_tuning", { (s, d) =>
       Dedup.lshTuningCurve(
           TestData.documents(s, d).filter(col("doc_id") % 3 === 0))
         .orderBy("decile")
     },
+      // q31's sig/band CTEs on the sample + inverted-index exact jaccard;
+      // zero-overlap mass lands in decile 0 arithmetically. Round 12: the
+      // whole CTE chain is the SHARED [[lshChainCtes]] constant (q231's
+      // canary chain is the same constant — zero textual drift possible),
+      // the FULL OUTER JOIN USING is gone (LEFT JOIN + NOT EXISTS), and
+      // every tail integer is BIGINT-cast at the HUGEINT widening points —
+      // the root cause of six rounds of hash misses (int64 vs float64 after
+      // DuckDB sum() widened n_pairs/emp_rate_ppm to int128).
+      (lshChainCtes +
+      """
+        |SELECT decile, n_pairs, n_candidates,
+        |  CAST((n_candidates * 2000000 + n_pairs) // (2 * n_pairs) AS BIGINT) AS emp_rate_ppm,
+        |""".stripMargin +
+      // theoretical S-curve as driver-computed BIGINT literals (the same
+      // lshTheoPpm values the plan embeds): no engine evaluates pow/round
+      Dedup.lshTheoPpm(4, 4).zipWithIndex
+        .map { case (p, d) => s"WHEN $d THEN ${p}::BIGINT" }
+        .mkString("  CASE decile ", " ", " END AS theo_rate_ppm\n") +
+      """FROM adj WHERE n_pairs > 0 ORDER BY decile""")),
     // q180's stage-checksum canary: per-stage (row count, 60-bit md5 XOR)
     // over the same sample and derivation — if any engine build ever
     // diverges from this plan, the first differing stage row localizes
     // WHERE (shingles / signatures / bands / candidates / jaccard)
-    "q231_lsh_canary" -> { (s, d) =>
+    Gated("q231_lsh_canary", { (s, d) =>
       Dedup.lshStageChecksums(
         TestData.documents(s, d).filter(col("doc_id") % 3 === 0))
     },
+      // q180's stage checksums: the SAME CTE chain — literally the shared
+      // [[lshChainCtes]] constant q180's gate is built from (round-12
+      // single-sourcing) — reduced per stage to (count, bit_xor of 60-bit
+      // md5), all string/integer derived. The sig join is written as
+      // explicit elements (no list slice, no array_to_string) to stay
+      // dialect-drift-proof. h_po hashes every post-join (a, b, decile, c)
+      // row and h_adj the final pre-projection (decile, n_pairs,
+      // n_candidates) frame, so any future q180 miss is localized to a
+      // named stage, not "somewhere after scored".
+      (lshChainCtes +
+      """,
+        |h_sets AS (
+        |  SELECT 'sets' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || sz::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM sz),
+        |h_shingles AS (
+        |  SELECT 'shingles' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || g), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM inv),
+        |h_sigs AS (
+        |  SELECT 'sigs' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || """.stripMargin +
+      (1 to 16).map(i => s"sig[$i]").mkString(" || ',' || ") +
+      """), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM sigs),
+        |h_bands AS (
+        |  SELECT 'bands' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || band_id::VARCHAR || '|' || band_hash), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM bands),
+        |h_cand AS (
+        |  SELECT 'cand' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM cand),
+        |h_scored AS (
+        |  SELECT 'scored' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR || '|' || common::VARCHAR || '|' || sdec::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM sc),
+        |h_po AS (
+        |  SELECT 'tail_po' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR || '|' || decile::VARCHAR || '|' || c::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM po),
+        |h_adj AS (
+        |  SELECT 'tail_zadj' AS stage, count(*) AS n_rows,
+        |    COALESCE(bit_xor(('0x' || substr(md5(decile::VARCHAR || '|' || n_pairs::VARCHAR || '|' || n_candidates::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
+        |  FROM adj WHERE n_pairs > 0)
+        |SELECT * FROM h_sets UNION ALL SELECT * FROM h_shingles
+        |UNION ALL SELECT * FROM h_sigs UNION ALL SELECT * FROM h_bands
+        |UNION ALL SELECT * FROM h_cand UNION ALL SELECT * FROM h_scored
+        |UNION ALL SELECT * FROM h_po UNION ALL SELECT * FROM h_adj
+        |ORDER BY stage""".stripMargin)),
     // incremental source-overlap (q118's top-decile split): the batch
     // tokenizes only itself, artifacts merge by distinct-union, and the
     // LAW gate is q168's whole-corpus SQL verbatim — increment ≡ rebuild
-    "q179_source_overlap_increment" -> { (s, d) =>
+    Gated("q179_source_overlap_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val stored = Dedup.sourceOverlapArtifact(docs.filter(col("doc_id") <= cut))
@@ -632,10 +1643,13 @@ object SparkEntry {
       Dedup.sourceOverlapFromArtifact(stored.unionByName(fresh).distinct())
         .orderBy("source_a", "source_b")
     },
+      // THE LAW: the increment must equal the whole-corpus rebuild — q168's
+      // SQL verbatim
+      sourceOverlapSql),
     // soft dedup: every member of an ensemble dup cluster keeps weight
     // 1/|cluster| — one document's worth of gradient per cluster without
     // deleting anything; composes q178's closure with one grouped count
-    "q181_dedup_weights" -> { (s, d) =>
+    Gated("q181_dedup_weights", { (s, d) =>
       val docs = TestData.documents(s, d)
       val tp = Dedup.minhashNearDupPairs(docs).select("doc_a", "doc_b")
       val ep = Similarity.embeddingNearDupPairsExact(
@@ -646,11 +1660,33 @@ object SparkEntry {
             docs.select(col("doc_id"))))
         .orderBy("doc_id")
     },
+      // q178's recursive closure + the 1/|cluster| weight tail
+      s"""WITH RECURSIVE $shingleSetsCtes,
+        |$minhashCandCtes,
+        |$minhashVerifiedCte,
+        |ep AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |pairs AS (SELECT doc_a, doc_b FROM tp UNION SELECT doc_a, doc_b FROM ep),
+        |sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+        |        UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
+        |reach(id, r) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r),
+        |cl AS (
+        |  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
+        |sz AS (SELECT cluster_id, count(*) AS n_members FROM cl GROUP BY 1)
+        |SELECT doc_id, cluster_id, n_members,
+        |  round(1.0::DOUBLE / n_members::DOUBLE, 6) AS weight
+        |FROM cl JOIN sz USING (cluster_id) ORDER BY doc_id""".stripMargin),
     // ensemble dedup clusters: connected components over the UNION of the
     // text (MinHash) and embedding (cosine) pair feeds — the transitive
     // closure of q172's agreement matrix; one dup group per real entity
     // even when the two signals each see only part of the chain
-    "q178_ensemble_clusters" -> { (s, d) =>
+    Gated("q178_ensemble_clusters", { (s, d) =>
       val docs = TestData.documents(s, d)
       val tp = Dedup.minhashNearDupPairs(docs).select("doc_a", "doc_b")
       val ep = Similarity.embeddingNearDupPairsExact(
@@ -659,6 +1695,17 @@ object SparkEntry {
       Dedup.dedupClusters(tp.unionByName(ep).distinct(), docs.select(col("doc_id")))
         .orderBy("doc_id")
     },
+      // q31's minhash pairs UNION q38's cosine pairs -> q49's recursive
+      // transitive closure over document ids
+      s"""WITH RECURSIVE $shingleSetsCtes,
+        |$minhashCandCtes,
+        |$minhashVerifiedCte,
+        |ep AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |$ensembleClosureTail""".stripMargin),
     // q178's ensemble with the PRODUCTION embedding feed: the cosine pairs
     // come through LSH sign-buckets (q39's sub-quadratic generator) instead
     // of the exact all-pairs baseline — this is the composition a 100 TB
@@ -668,7 +1715,7 @@ object SparkEntry {
     // is the OCCUPANCY-CONSTANT axisSignBitsFor(n) — BENCHSCALE8 measured
     // the fixed 6-bit feed kneeing quadratic at 100× (332 s); the adaptive
     // width is the same fix q243 proved sub-linear for the clusters gate
-    "q232_ensemble_clusters_lsh" -> { (s, d) =>
+    Gated("q232_ensemble_clusters_lsh", { (s, d) =>
       val docs = TestData.documents(s, d)
       val emb = TestData.embeddings(s, d)
       val tp = Dedup.minhashNearDupPairs(docs).select("doc_a", "doc_b")
@@ -679,6 +1726,31 @@ object SparkEntry {
       Dedup.dedupClusters(tp.unionByName(ep).distinct(), docs.select(col("doc_id")))
         .orderBy("doc_id")
     },
+      // q178's closure with ep routed through the ADAPTIVE-width sign
+      // buckets (q243's occupancy-constant formula, same integer bit-length
+      // derivation) — the production (sub-quadratic) ensemble at any scale,
+      // bucket restriction and width formula both replicated in SQL
+      s"""WITH RECURSIVE $shingleSetsCtes,
+        |sigs AS (
+        |  SELECT id, sh,
+        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
+        |  FROM sets),
+        |bands AS (
+        |  SELECT id, b AS band_id,
+        |    md5(sig[b*4+1] || ',' || sig[b*4+2] || ',' || sig[b*4+3] || ',' || sig[b*4+4]) AS band_hash
+        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
+        |cand AS (
+        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
+        |  FROM bands x JOIN bands y
+        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
+        |$minhashVerifiedCte,
+        |$signBucketCtes,
+        |ep AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |$ensembleClosureTail""".stripMargin),
     // HITS hubs & authorities (Kleinberg) on the DIRECTED session→document
     // click bipartite graph — q56's mutually-recursive complement: hub =
     // "session clicks documents that matter", authority = "document is
@@ -687,7 +1759,7 @@ object SparkEntry {
     // is one broadcast scalar), scores mean-1-scaled per side, gate in
     // BIGINT micro-units (PagerankMarginSpec pins gate-corpus boundary
     // margins); oracle unrolls the 10 half-steps as MATERIALIZED CTEs
-    "q233_hits" -> { (s, d) =>
+    Gated("q233_hits", { (s, d) =>
       val clicks = TestData.clicks(s, d).filter(col("document_id").isNotNull)
       Graphs.hits(
           clicks.select(col("session_id").as("src"), col("document_id").as("dst")),
@@ -696,89 +1768,266 @@ object SparkEntry {
           floor(col("score") * lit(1e6) + lit(0.5)).cast("long").as("score_micro"))
         .orderBy("side", "id")
     },
+      // the 10 half-steps unrolled; every CTE MATERIALIZED (each normalizer
+      // references its raw CTE twice — default inlining would re-expand the
+      // whole iteration tree ~2^k-fold, the q224 lesson); same L1
+      // normalization and mean-1 scaling, micro-quantized
+      {
+        val steps = (1 to 5).map { k =>
+          s"""a${k}r AS MATERIALIZED (
+             |  SELECT au.id, COALESCE(sum(h${k - 1}.s), CAST(0 AS DOUBLE)) AS r
+             |  FROM auths au LEFT JOIN e ON e.v = au.id
+             |  LEFT JOIN h${k - 1} ON e.u = h${k - 1}.id
+             |  GROUP BY au.id),
+             |a$k AS MATERIALIZED (
+             |  SELECT id, r / (SELECT sum(r) FROM a${k}r) AS s FROM a${k}r),
+             |h${k}r AS MATERIALIZED (
+             |  SELECT hu.id, COALESCE(sum(a$k.s), CAST(0 AS DOUBLE)) AS r
+             |  FROM hubs hu LEFT JOIN e ON e.u = hu.id
+             |  LEFT JOIN a$k ON e.v = a$k.id
+             |  GROUP BY hu.id),
+             |h$k AS MATERIALIZED (
+             |  SELECT id, r / (SELECT sum(r) FROM h${k}r) AS s FROM h${k}r)""".stripMargin
+        }.mkString(",\n")
+        s"""WITH e AS MATERIALIZED (
+          |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS u,
+          |    CAST(CAST(props->>'$$.k' AS INTEGER) AS VARCHAR) AS v
+          |  FROM events WHERE CAST(props->>'$$.k' AS INTEGER) IS NOT NULL),
+          |hubs AS MATERIALIZED (SELECT DISTINCT u AS id FROM e),
+          |auths AS MATERIALIZED (SELECT DISTINCT v AS id FROM e),
+          |h0 AS MATERIALIZED (
+          |  SELECT id, CAST(1 AS DOUBLE) / (SELECT count(*) FROM hubs) AS s
+          |  FROM hubs),
+          |$steps
+          |SELECT side, id, score_micro FROM (
+          |  SELECT 'hub' AS side, id,
+          |    CAST(floor(s * (SELECT count(*) FROM hubs) * 1000000 + 0.5) AS BIGINT)
+          |      AS score_micro
+          |  FROM h5
+          |  UNION ALL
+          |  SELECT 'authority' AS side, id,
+          |    CAST(floor(s * (SELECT count(*) FROM auths) * 1000000 + 0.5) AS BIGINT)
+          |      AS score_micro
+          |  FROM a5)
+          |ORDER BY side, id""".stripMargin
+      }),
     // CUPED variance-reduced A/B (Deng et al. 2013): per-user value sums
     // pre/post a mid-month cutoff, θ = pooled cov/var, adjusted arm means
     // + the achieved ρ² reduction — q96's sensitivity upgrade. Every event
     // value quantizes to BIGINT micros FIRST, moments are DECIMAL-exact,
     // the rest is deterministic IEEE on exact sums (q218's recipe: no
     // margin spec needed)
-    "q234_cuped" -> { (s, d) =>
+    Gated("q234_cuped", { (s, d) =>
       graft.analysis.Stats.cuped(TestData.eventsRaw(s, d),
         "user_id", "value", "ts", lit("2024-01-16 00:00:00").cast("timestamp"))
     },
+      // same micro-quantized values, HUGEINT moments (the q218 mirror),
+      // identical IEEE expression shapes on the exact sums
+      cupedOracle),
     // Flesch reading ease per document: words from the canonical
     // normalizer, sentences = [.!?]+ runs on the RAW text, syllables =
     // vowel-group runs per word floored at 1 (dictionary-free heuristic);
     // all-integer inputs, deterministic IEEE score, micro-quantized
-    "q235_readability" -> { (s, d) =>
+    Gated("q235_readability", { (s, d) =>
       TextAnalysis.readability(TestData.documents(s, d)).orderBy("doc_id")
-    },
+    }, s"""WITH toks AS (
+        |  SELECT doc_id, text,
+        |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id,
+        |    len(t) AS n_words,
+        |    greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS n_sents,
+        |    CAST(list_sum(list_transform(t, w ->
+        |      greatest(1, len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT)
+        |      AS n_syllables
+        |  FROM toks)
+        |SELECT doc_id, n_words, CAST(n_sents AS BIGINT) AS n_sents, n_syllables,
+        |  CAST(floor((206.835::DOUBLE
+        |      - 1.015::DOUBLE * (CAST(n_words AS DOUBLE) / n_sents)
+        |      - 84.6::DOUBLE * (CAST(n_syllables AS DOUBLE) / n_words))
+        |    * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS flesch_micro
+        |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin),
     // Matryoshka truncation-recall curve: top-10 by cosine over the first
     // {8,16,32} dims vs the full 64-dim ranking, 20 query vectors; overlap
     // counts + ppm recall via integer division — the all-integer gate over
     // the q33 cosine fold both engines already agree on
-    "q236_matryoshka_recall" -> { (s, d) =>
+    Gated("q236_matryoshka_recall", { (s, d) =>
       Similarity.matryoshkaRecall(TestData.embeddings(s, d),
         col("vec_id") < 20, dims = Seq(8, 16, 32), k = 10)
     },
+      // per-d knn replicated with the q33 cosine fold, the d-prefix expressed
+      // as a bounded element range (NOT a list slice — the q180 lesson);
+      // integer overlap counts, ppm via // integer division
+      {
+        def knn(tag: String, d: Int) =
+          s"""p$tag AS (
+             |  SELECT query_id, neighbor_id,
+             |    list_sum(list_transform(range(1, ${d + 1}), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
+             |      / (sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
+             |         * sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
+             |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
+             |r$tag AS MATERIALIZED (
+             |  SELECT query_id, neighbor_id FROM (
+             |    SELECT query_id, neighbor_id,
+             |      row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
+             |    FROM p$tag) WHERE rk <= 10)""".stripMargin
+        val dims = Seq(8, 16, 32)
+        val arms = dims.map { d =>
+          s"""SELECT $d AS dim, 10 AS k,
+             |  (SELECT count(*) FROM q) AS n_queries,
+             |  (SELECT count(*) FROM rd$d JOIN rf USING (query_id, neighbor_id))
+             |    AS n_common""".stripMargin
+        }.mkString("\n  UNION ALL\n")
+        s"""WITH q AS MATERIALIZED (
+           |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 20),
+           |c AS MATERIALIZED (
+           |  SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
+           |${knn("f", 64)},
+           |${dims.map(d => knn(s"d$d", d)).mkString(",\n")}
+           |SELECT dim, k, n_queries, n_common,
+           |  n_common * 1000000 // (k * n_queries) AS recall_ppm
+           |FROM ($arms)
+           |ORDER BY dim""".stripMargin
+      }),
     // CLIP-score multimodal alignment filter (LAION-style): md5-stub
     // image/caption embeddings (content bytes vs first-64-char caption),
     // one left-assoc IEEE cosine chain, BIGINT ppm + integer threshold —
     // the per-item keep/drop decision is what's gated; a real model slots
     // in via q67's batched-inference plumbing without touching the filter
-    "q237_clip_filter" -> { (s, d) =>
+    Gated("q237_clip_filter", { (s, d) =>
       Multimodal.clipScoreFilter(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // the md5-stub embeddings re-derived from the same hex pairs; cosine
+      // spelled as the identical left-assoc chain, integer threshold compare
+      {
+        def hexd(src: String, j: Int) =
+          s"CAST(('0x' || substr(md5($src), ${2 * j + 1}, 2))::BIGINT AS DOUBLE) / 256.0::DOUBLE"
+        val img = (0 until 8).map(j => s"${hexd("text", j)} AS i$j").mkString(",\n    ")
+        val cap = (0 until 8).map(j => s"${hexd("substr(text, 1, 64)", j)} AS c$j")
+          .mkString(",\n    ")
+        val dot = (0 until 8).map(j => s"i$j * c$j").mkString(" + ")
+        val na = (0 until 8).map(j => s"i$j * i$j").mkString(" + ")
+        val nb = (0 until 8).map(j => s"c$j * c$j").mkString(" + ")
+        s"""WITH e AS (
+           |  SELECT doc_id, source,
+           |    $img,
+           |    $cap
+           |  FROM documents),
+           |s AS (
+           |  SELECT doc_id, source,
+           |    CAST(floor(($dot) / (sqrt($na) * sqrt($nb)) * 1000000.0::DOUBLE
+           |      + 0.5::DOUBLE) AS BIGINT) AS clip_ppm
+           |  FROM e)
+           |SELECT doc_id, source, clip_ppm, clip_ppm >= 750000 AS kept
+           |FROM s ORDER BY doc_id""".stripMargin
+      }),
     // Local Outlier Factor (Breunig et al.) over embeddings — density-
     // contrast junk pruning. FIXED-POINT lattice: distances quantize to
     // micro BIGINTs once, then kNN ranks, reach-dists, lrd and LOF are all
     // integer arithmetic (div) — no float ever aggregates, no margin spec.
     // The all-pairs arm is the quarantined diagnostic (q38's argument);
     // q247 gates the adaptive-LSH production feed into the same lattice
-    "q238_lof_outliers" -> { (s, d) =>
+    Gated("q238_lof_outliers", { (s, d) =>
       Similarity.lofOutliers(TestData.embeddings(s, d), k = 5)
     },
+      // the same fixed-point LOF lattice: one sqrt+quantize, then pure
+      // integer ranks/max/sums/divisions — HUGEINT sums cast back to BIGINT
+      s"""WITH ef AS MATERIALIZED (
+        |  SELECT vec_id, embedding AS u,
+        |    list_sum(list_transform(range(1, len(embedding) + 1),
+        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
+        |      AS n2
+        |  FROM embeddings),
+        |d AS (
+        |  SELECT a.vec_id AS p, b.vec_id AS o,
+        |    $microDm
+        |  FROM ef a JOIN ef b ON a.vec_id <> b.vec_id),
+        |${lofTailSql(5)}""".stripMargin),
     // q238's IVF-cell twin: the identical LOF lattice over cell-bounded
     // candidate pairs (deterministic Lloyd quantizer, 8 cells, 2 rounds —
     // q117's oracle-replayable recipe); SimilaritySpec pins the nCells=1
     // law. BENCHSCALE10 measured FIXED cells quadratic (slope 2.4 at
     // 10→30x) — kept as the quantizer-replay diagnostic; q247 is the
     // production path
-    "q244_lof_outliers_ivf" -> { (s, d) =>
+    Gated("q244_lof_outliers_ivf", { (s, d) =>
       Similarity.lofOutliersIvf(TestData.embeddings(s, d),
         k = 5, nCells = 8, quantizerIters = 2)
     },
+      // q117's deterministic-Lloyd quantizer (2 unrolled rounds on normalized
+      // vectors, 8 cells) assigns each point its one nearest cell; the q238
+      // lattice then runs with the pair join RESTRICTED to same-cell pairs
+      s"""WITH $lloydCellRankCtes,
+        |cells AS MATERIALIZED (SELECT vec_id, cluster AS cell FROM cellr WHERE rn = 1),
+        |ef AS MATERIALIZED (
+        |  SELECT em.vec_id, em.embedding AS u,
+        |    list_sum(list_transform(range(1, len(em.embedding) + 1),
+        |      i -> CAST(em.embedding[i] AS DOUBLE) * CAST(em.embedding[i] AS DOUBLE)))
+        |      AS n2,
+        |    cells.cell
+        |  FROM embeddings em JOIN cells ON em.vec_id = cells.vec_id),
+        |d AS (
+        |  SELECT a.vec_id AS p, b.vec_id AS o,
+        |    $microDm
+        |  FROM ef a JOIN ef b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
+        |${lofTailSql(5)}""".stripMargin),
     // the 100-TB LOF: the same lattice over ADAPTIVE-WIDTH axis-sign
     // buckets (axisSignBitsFor keeps occupancy ~32 at any corpus size, the
     // q243 recipe) — q244's fixed cell count measured quadratic at 30x
     // (BENCHSCALE10 slope 2.4); bucket count growing with n is what a flat
     // quantizer cannot do, and sign buckets assign in one projection
-    "q247_lof_outliers_lsh" -> { (s, d) =>
+    Gated("q247_lof_outliers_lsh", { (s, d) =>
       Similarity.lofOutliersLsh(TestData.embeddings(s, d), k = 5)
     },
+      // q39's adaptive-width bucket SQL + q238's lattice, pair join
+      // restricted to same-bucket pairs
+      s"""WITH bits AS (
+        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
+        |  FROM embeddings),
+        |ef AS MATERIALIZED (
+        |  SELECT vec_id, embedding AS u,
+        |    list_sum(list_transform(range(1, len(embedding) + 1),
+        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
+        |      AS n2,
+        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
+        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
+        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
+        |  FROM embeddings),
+        |d AS (
+        |  SELECT a.vec_id AS p, b.vec_id AS o,
+        |    $microDm
+        |  FROM ef a JOIN ef b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+        |${lofTailSql(5)}""".stripMargin),
     // winnowing near-dup screen (Schleimer et al., the MOSS fingerprinter):
     // every pair sharing a ≥ k+w−1 token run is GUARANTEED a shared
     // fingerprint (coverage-exact, unlike banded MinHash) at ~2/(w+1)
     // fingerprint density; md5 60-bit gram hashes + an ANSI ROWS-frame
     // window min keep every stage engine-replicable, gate all-BIGINT
-    "q245_winnowing_neardups" -> { (s, d) =>
+    Gated("q245_winnowing_neardups", { (s, d) =>
       Dedup.winnowingNearDupPairs(TestData.documents(s, d))
         .orderBy("doc_a", "doc_b")
     },
+      // positional 5-gram md5 hashes, ANSI ROWS-frame window min over full
+      // 4-windows only, distinct fingerprints, df-bounded pair join — the
+      // winnowing chain replayed stage-for-stage
+      winnowingPairsSql),
     // reliability diagram + ECE for the stopword-ratio English-confidence
     // heuristic against the lang label — the calibration certificate any
     // score needs before its confidences gate corpus decisions; integer
     // ppm end-to-end (born-integer ratio score, integer bins, round-half-
     // up accuracies, exact BIGINT weighted gap)
-    "q246_calibration_ece" -> { (s, d) =>
+    Gated("q246_calibration_ece", { (s, d) =>
       graft.analysis.Stats.calibrationReport(
         langConfidenceScored(TestData.documents(s, d)), "score_ppm", "y")
     },
+      // q239's integer token counts feed a born-integer ppm confidence; bins,
+      // accuracies and the weighted ECE gap are pure BIGINT arithmetic
+      calibrationEceSql),
     // LAW gate: per-bin calibration artifacts from two disjoint doc_id
     // slices merge by per-bin ADDITION of the exact integer sums and must
     // reproduce q246's whole-corpus readout (oracle IS q246's SQL) — daily
     // eval batches never rescan history
-    "q248_calibration_increment" -> { (s, d) =>
+    Gated("q248_calibration_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val stored = graft.analysis.Stats.calibrationBins(
         langConfidenceScored(docs.filter(col("doc_id") % 2 === 0)),
@@ -789,29 +2038,60 @@ object SparkEntry {
       graft.analysis.Stats.calibrationFromBins(
         graft.analysis.Stats.calibrationMergeBins(stored, fresh))
     },
+      // LAW gates: the per-bin / per-doc artifacts from disjoint slices,
+      // merged, must reproduce the whole-corpus rebuild — the oracles ARE
+      // q246's and q245's SQL verbatim
+      calibrationEceSql),
     // LAW gate: winnowing fingerprints are per-document independent, so a
     // new batch fingerprints only itself and artifacts merge by plain
     // union; the merged pairs report must equal q245's whole-corpus
     // rebuild (oracle IS q245's SQL)
-    "q249_winnowing_increment" -> { (s, d) =>
+    Gated("q249_winnowing_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val stored = Dedup.winnowingFingerprints(docs.filter(col("doc_id") % 2 === 0))
       val fresh = Dedup.winnowingFingerprints(docs.filter(col("doc_id") % 2 =!= 0))
       Dedup.winnowingPairsFromFingerprints(stored.unionByName(fresh))
         .orderBy("doc_a", "doc_b")
-    },
+    }, winnowingPairsSql),
     // GUARANTEED-detection decontamination: winnowing fingerprints shared
     // between the corpus and the eval slice (doc_id % 17 = 0, q158's
     // split) — the winnowing theorem certifies that any ≥ k+w−1 token
     // overlap is flagged, upgrading q158's probabilistic MinHash screen
     // to a no-leakage certificate; eval artifact broadcasts
-    "q250_winnowing_decontam" -> { (s, d) =>
+    Gated("q250_winnowing_decontam", { (s, d) =>
       val docs = TestData.documents(s, d)
       Dedup.winnowingDecontam(
           docs.filter(col("doc_id") % 17 =!= 0),
           docs.filter(col("doc_id") % 17 === 0))
         .orderBy("doc_id")
     },
+      // q245's fingerprint CTEs split on the q158 eval slice; per-pair
+      // shared counts, then the per-corpus-doc rollup with the (shared
+      // desc, eid asc) argmax as a row_number — all integer
+      s"""WITH toks AS (
+        |  SELECT doc_id AS id,
+        |    string_split($normText, ' ') AS t
+        |  FROM documents),
+        |${winnowFpCtes("toks", "fps")},
+        |cf AS MATERIALIZED (SELECT id AS cid, fp FROM fps WHERE id % 17 <> 0),
+        |ef AS MATERIALIZED (SELECT id AS eid, fp FROM fps WHERE id % 17 = 0),
+        |bounded AS (SELECT fp FROM cf GROUP BY fp HAVING count(*) <= 1000),
+        |pp AS MATERIALIZED (
+        |  SELECT cid, eid, count(*) AS shared
+        |  FROM cf JOIN bounded USING (fp) JOIN ef USING (fp)
+        |  GROUP BY 1, 2),
+        |r AS (
+        |  SELECT cid, eid, shared,
+        |    row_number() OVER (PARTITION BY cid ORDER BY shared DESC, eid) AS rk
+        |  FROM pp),
+        |ag AS (
+        |  SELECT cid, count(*) AS n_eval_matches,
+        |    CAST(sum(shared) AS BIGINT) AS n_shared_fps
+        |  FROM pp GROUP BY 1)
+        |SELECT ag.cid AS doc_id, n_eval_matches, n_shared_fps,
+        |  r.eid AS matched_eval_doc, r.shared AS best_shared
+        |FROM ag JOIN r ON ag.cid = r.cid AND r.rk = 1
+        |ORDER BY doc_id""".stripMargin),
     // the LOF truncation QUALITY curve (q191's nProbe recipe applied to
     // outlier verdicts): top-K outlier-verdict overlap between the exact
     // all-pairs LOF (q238's diagnostic arm) and the production
@@ -819,9 +2099,13 @@ object SparkEntry {
     // {32, 128, 512} × K ∈ {10, 50} — what bucket truncation costs in
     // verdicts, as a measured monotone ppm curve instead of the
     // density-contrast claim; all integer (ranks, counts, div)
-    "q251_lof_quality" -> { (s, d) =>
+    Gated("q251_lof_quality", { (s, d) =>
       Similarity.lofTruncationAgreement(TestData.embeddings(s, d), k = 5)
     },
+      // the LOF truncation quality curve: the armed lattice + per-
+      // (occupancy, K) top-K intersections, built by lofQualitySql so the
+      // grids live in one place (occupancy sweep = the q191 nProbe recipe)
+      lofQualitySql(k = 5, topKs = Seq(10, 50), occupancies = Seq(32, 128, 512))),
     // the ITERATED Sennrich BPE trainer (q124 is one round of it): 3
     // unrolled merge rounds — count pairs over the freq-weighted vocab,
     // adopt the (count desc, pair asc) argmax, re-segment the VOCABULARY
@@ -830,47 +2114,63 @@ object SparkEntry {
     // verbatim in the oracle. Completes the tokenizer family (q124
     // candidates, q189 fertility, q225 OOV budget) into a trainer whose
     // output IS the merge table a BPE tokenizer ships
-    "q252_bpe_train" -> { (s, d) =>
+    Gated("q252_bpe_train", { (s, d) =>
       TextAnalysis.bpeTrain(TestData.documents(s, d), merges = 3)
     },
+      // the Sennrich trainer unrolled (3 merge rounds): per round the pair
+      // count, the MATERIALIZED argmax, and the list-expression greedy
+      // re-segmentation — structurally identical to the Spark side
+      bpeTrainSql(merges = 3)),
     // the multi-table repair measured against the q251 gap: top-K
     // verdict overlap vs exact LOF as the TABLE COUNT sweeps {1, 2, 4}
     // at the default occupancy — does L buy back the truncated verdicts
     // (recall rises geometrically in L, pair volume only linearly)
-    "q253_lof_multi_quality" -> { (s, d) =>
+    Gated("q253_lof_multi_quality", { (s, d) =>
       Similarity.lofMultiTableAgreement(TestData.embeddings(s, d), k = 5)
     },
+      // exact arm + one arm per table count; per-(n_tables, K) top-K
+      // intersections
+      lofMultiQualitySql(k = 5, topKs = Seq(10, 50),
+        tableCounts = Seq(1, 2, 4), occupancy = 32, dim = 64)),
     // the multi-table production artifact at full per-point grain:
     // q247's lattice over the DISTINCT union of 4 rotated-window
     // adaptive-width bucket joins (offsets 0/16/32/48)
-    "q254_lof_outliers_lsh_multi" -> { (s, d) =>
+    Gated("q254_lof_outliers_lsh_multi", { (s, d) =>
       Similarity.lofOutliersLshMulti(TestData.embeddings(s, d), k = 5, nTables = 4)
     },
+      // q247's lattice over the 4-table distinct-union pair feed
+      lofMultiSql(k = 5, occupancy = 32, nTables = 4, dim = 64)),
     // train → ENCODE: apply q252's learned merge table back to the corpus
     // (driver-held merges, the plan-literal pattern) — per-doc trained
     // fertility, the q189-heuristic upgrade; encoding-by-merge-list ≡
     // the trained vocab's own segmentation for in-vocab words (ascending-
     // rank sequential merges are exact), which is what the oracle reads
-    "q255_bpe_encode" -> { (s, d) =>
+    Gated("q255_bpe_encode", { (s, d) =>
       val docs = TestData.documents(s, d)
       val merges = TextAnalysis.bpeTrain(docs, merges = 3)
         .collect().map(_.getString(1)).toSeq
       TextAnalysis.bpeEncode(docs, merges).orderBy("doc_id")
     },
+      // q252's training chain + the per-doc encode readout off the final
+      // vocab state (in-vocab encode ≡ trained segmentation)
+      bpeEncodeSql(merges = 3)),
     // GPT-style concat-and-chunk SEQUENCE PACKING: global token offsets
     // via the distributed cumsum (never a single-partition window), each
     // doc's context-window span exploded (factor 1 + crossings), the
     // window-occupancy histogram as the fragmentation artifact — the
     // no-padding complement of q95's padded batching
-    "q256_sequence_pack" -> { (s, d) =>
+    Gated("q256_sequence_pack", { (s, d) =>
       CorpusPrep.sequencePack(TestData.documents(s, d), ctxTokens = 256)
     },
+      // concat-and-chunk packing: doc-order token prefix sums, window spans
+      // by integer division, the occupancy histogram
+      sequencePackSql(ctx = 256)),
     // LAW gate: pack the first doc-id half at offset 0, the second half
     // at the first's total token offset, merge the per-window slot
     // artifacts by addition (the seam window is counted by both sides,
     // each for its own docs) — must equal q256's whole-corpus rebuild
     // (oracle IS q256's SQL)
-    "q257_sequence_pack_increment" -> { (s, d) =>
+    Gated("q257_sequence_pack_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
       val old = docs.filter(col("doc_id") <= half)
@@ -883,24 +2183,30 @@ object SparkEntry {
         CorpusPrep.packSlots(old, ctxTokens = 256),
         CorpusPrep.packSlots(fresh, ctxTokens = 256, tokenOffset = Some(off))))
     },
+      // LAW gate: the split + per-window-addition merge must reproduce the
+      // whole-corpus rebuild — the oracle IS q256's SQL
+      sequencePackSql(ctx = 256)),
     // interpolated KNESER-NEY bigram scoring (D = 3/4) on the q158 eval
     // slice under train-slice counts: every probability is a ratio of
     // exact integer counts (continuation counts model context diversity),
     // ppb-quantized per bigram in DECIMAL(38,0) — the production LM
     // smoothing (KenLM/CCNet) joining q166 add-alpha, q203 stupid
     // backoff, q200 Good-Turing
-    "q258_kneser_ney" -> { (s, d) =>
+    Gated("q258_kneser_ney", { (s, d) =>
       val docs = TestData.documents(s, d)
       TextAnalysis.kneserNeyBigram(
           docs.filter(col("doc_id") % 17 =!= 0),
           docs.filter(col("doc_id") % 17 === 0))
         .orderBy("doc_id")
     },
+      // interpolated KN with D = 3/4: continuation counts off the train
+      // slice, the exact-rational score ppb-quantized in HUGEINT
+      kneserNeySql),
     // ROUGE-2 over candidate/reference pairs (even doc vs its odd
     // successor — the deterministic pairing): clipped bigram-multiset
     // overlap, P/R/F1 as exact integer ratios ppm-quantized — the
     // summarization/distillation eval at corpus scale
-    "q259_rouge2" -> { (s, d) =>
+    Gated("q259_rouge2", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cand = docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("pair_id"), col("text").as("cand"))
@@ -909,19 +2215,29 @@ object SparkEntry {
       TextAnalysis.rougeN(cand.join(ref, "pair_id"), n = 2)
         .orderBy("pair_id")
     },
+      // per-pair clipped bigram counts: side totals + inner-join overlap,
+      // everything anchored on the pair spine (no FULL OUTER — the q180
+      // lesson)
+      s"""WITH $rouge2ChainCtes
+         |SELECT pair_id, n_cand_grams, n_ref_grams, n_overlap,
+         |  p_ppm, r_ppm, f1_ppm
+         |FROM rg2
+         |ORDER BY pair_id""".stripMargin),
     // TOKENIZER COMPRESSION CURVE: corpus fertility vs merge-table size
     // m = 0..3 — each point one vocabulary-sized aggregate off the q252
     // trainer's checkpointed state s_m (corpus touched once); m = 0 is
     // the character baseline
-    "q260_bpe_compression" -> { (s, d) =>
+    Gated("q260_bpe_compression", { (s, d) =>
       TextAnalysis.bpeCompressionCurve(TestData.documents(s, d), merges = 3)
     },
+      // q252's training chain, one fertility readout per vocab state s_m
+      bpeCompressionSql(merges = 3)),
     // LAW gate: the KN bigram-count model is the ONLY state the scorer
     // needs, and it merges across doc-id-split train shards by per-bigram
     // addition — the merged model's readout must equal q258's
     // whole-corpus rebuild (oracle IS q258's SQL); the Brants/KenLM
     // sharded-counting shape
-    "q261_kn_model_increment" -> { (s, d) =>
+    Gated("q261_kn_model_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val train = docs.filter(col("doc_id") % 17 =!= 0)
       TextAnalysis.kneserNeyFromModel(
@@ -931,11 +2247,16 @@ object SparkEntry {
           docs.filter(col("doc_id") % 17 === 0))
         .orderBy("doc_id")
     },
+      // LAW gates: the KN bigram-count model from doc-id-split train shards
+      // merged by addition, and the BM25 corpus-stats row from the same
+      // split merged columnwise, must reproduce the whole-corpus readouts —
+      // the oracles ARE q258's and q177's SQL verbatim
+      kneserNeySql),
     // LAW gate: BM25's corpus stats 〈n, Σdl, per-term df〉 are one exact
     // integer row per shard, merged columnwise by addition — the merged
     // artifact's scoring must equal q177's whole-corpus rebuild (oracle
     // IS q177's SQL); how a sharded search index refreshes its globals
-    "q262_bm25_increment" -> { (s, d) =>
+    Gated("q262_bm25_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val terms = Seq("spark", "query", "hash")
       graft.analysis.SearchRank.bm25FromStats(docs,
@@ -945,44 +2266,108 @@ object SparkEntry {
           graft.analysis.SearchRank.bm25StatsArtifact(
             docs.filter(col("doc_id") % 2 =!= 0), terms)),
         terms, k = 20)
-    },
+    }, bm25Sql),
     // per-source concat-and-chunk packing: q256's chain with the prefix
     // sum PARTITIONED by source (domain shards never share a window — the
     // multi-domain pretraining layout); hash-sharded window, no
     // single-partition risk
-    "q263_sequence_pack_by_source" -> { (s, d) =>
+    Gated("q263_sequence_pack_by_source", { (s, d) =>
       CorpusPrep.sequencePackByGroup(TestData.documents(s, d), ctxTokens = 256)
     },
+      // per-source concat-and-chunk packing: the q256 chain with the prefix
+      // sum partitioned by source (domain shards never share a window)
+      s"""WITH toks AS (
+        |  SELECT source, doc_id,
+        |    CAST(len(list_filter(string_split($normText, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+        |  FROM documents),
+        |cum AS (
+        |  SELECT source, n_tok,
+        |    CAST(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c
+        |  FROM toks WHERE n_tok > 0),
+        |spans AS (
+        |  SELECT source, (c - n_tok) // 256 AS fw, (c - 1) // 256 AS lw FROM cum),
+        |slots AS (
+        |  SELECT source, unnest(range(fw, lw + 1)) AS window_id, fw, lw > fw AS sp
+        |  FROM spans),
+        |win AS (
+        |  SELECT source, window_id, count(*) AS n_docs,
+        |    CAST(sum(CASE WHEN window_id = fw THEN 1 ELSE 0 END) AS BIGINT) AS n_starts,
+        |    CAST(sum(CASE WHEN sp THEN 1 ELSE 0 END) AS BIGINT) AS n_split
+        |  FROM slots GROUP BY 1, 2)
+        |SELECT source, n_docs AS docs_in_window, count(*) AS n_windows,
+        |  CAST(sum(n_starts) AS BIGINT) AS n_starts,
+        |  CAST(sum(n_split) AS BIGINT) AS n_split_slots
+        |FROM win GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // SELF-BLEU-2 diversity monitor (Zhu et al. 2018): clipped bigram
     // precision of each doc against the REST of the corpus, the clip
     // derived from the per-gram top-2 (count, doc) so no doc-pair work
     // ever happens — the mode-collapse gauge for synthetic corpora; all
     // exact integers, ppm round-half-up
-    "q264_self_bleu" -> { (s, d) =>
+    Gated("q264_self_bleu", { (s, d) =>
       TextAnalysis.selfBleu(TestData.documents(s, d), n = 2).orderBy("doc_id")
     },
+      // per-gram top-2 (count, doc) via a rank-1 window + runner-up max;
+      // argmax doc clips at the runner-up, everyone else at the max
+      s"""WITH $docTokensCte,
+        |gd AS MATERIALIZED (
+        |  SELECT doc_id, g, count(*) AS c FROM (
+        |    SELECT doc_id, t[CAST(i + 1 AS INT)] || ' ' || t[CAST(i + 2 AS INT)] AS g
+        |    FROM (SELECT doc_id, t, unnest(range(len(t) - 1)) AS i
+        |          FROM toks WHERE len(t) >= 2))
+        |  GROUP BY 1, 2),
+        |m1 AS MATERIALIZED (
+        |  SELECT g, c AS c1, doc_id AS d1 FROM (
+        |    SELECT g, c, doc_id,
+        |      row_number() OVER (PARTITION BY g ORDER BY c DESC, doc_id DESC) AS rn
+        |    FROM gd) WHERE rn = 1),
+        |m2 AS (
+        |  SELECT gd.g, max(gd.c) AS c2
+        |  FROM gd JOIN m1 USING (g)
+        |  WHERE NOT (gd.c = m1.c1 AND gd.doc_id = m1.d1)
+        |  GROUP BY 1),
+        |cl AS (
+        |  SELECT gd.doc_id, CAST(sum(gd.c) AS BIGINT) AS ng,
+        |    CAST(sum(least(gd.c,
+        |      CASE WHEN gd.doc_id = m1.d1 THEN COALESCE(m2.c2, 0)
+        |           ELSE m1.c1 END)) AS BIGINT) AS no
+        |  FROM gd JOIN m1 USING (g) LEFT JOIN m2 USING (g)
+        |  GROUP BY 1)
+        |SELECT d.doc_id,
+        |  COALESCE(cl.ng, 0) AS n_grams,
+        |  COALESCE(cl.no, 0) AS n_clipped,
+        |  CASE WHEN COALESCE(cl.ng, 0) > 0
+        |    THEN (cl.no * 2000000 + cl.ng) // (2 * cl.ng) END AS self_bleu_ppm
+        |FROM documents d LEFT JOIN cl USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
     // the packing fragmentation-vs-context curve: ONE prefix sum, each
     // candidate ctx in {64, 256, 1024} re-buckets the same spans by
     // integer division — what raising the context window costs in
     // cross-doc attention (occupancy) and buys in fewer splits
-    "q265_sequence_pack_curve" -> { (s, d) =>
+    Gated("q265_sequence_pack_curve", { (s, d) =>
       CorpusPrep.sequencePackCurve(TestData.documents(s, d),
         ctxs = Seq(64, 256, 1024))
     },
+      // one MATERIALIZED prefix-sum chain, each ctx re-buckets the same
+      // spans
+      packCurveSql(Seq(64, 256, 1024))),
     // POISSON BOOTSTRAP CI (Chamandy et al.): per-row Poisson(1)
     // multiplicities from the md5 hash60 of (event_id, resample) — the
     // map-reduce bootstrap, deterministic so the interval is oracle-exact;
     // b = 0 is the identity resample carrying the point estimate; 20
     // resamples, 2nd-smallest/2nd-largest band
-    "q266_poisson_bootstrap" -> { (s, d) =>
+    Gated("q266_poisson_bootstrap", { (s, d) =>
       graft.analysis.Stats.poissonBootstrapCi(TestData.eventsRaw(s, d))
     },
+      // deterministic Poisson(1) multiplicities off the md5 hash60 of
+      // (event_id, b); b = 0 identity; rank-2 / rank-(cnt-1) band
+      poissonBootstrapSql),
     // LAW gate: bootstrap weights depend only on (row id, resample), so
     // per-(group, b) sum artifacts from disjoint event slices merge by
     // addition and the merged readout equals q266's rebuild (oracle IS
     // q266's SQL) — a sharded eval fleet bootstraps without co-locating
     // rows
-    "q267_bootstrap_increment" -> { (s, d) =>
+    Gated("q267_bootstrap_increment", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       graft.analysis.Stats.bootstrapCiFromSums(
         graft.analysis.Stats.bootstrapMergeSums("event_type",
@@ -990,27 +2375,60 @@ object SparkEntry {
           graft.analysis.Stats.bootstrapSums(ev.filter(col("event_id") % 2 =!= 0))),
         "event_type")
     },
+      // LAW gate: the per-(group, b) sums merge by addition — oracle IS
+      // q266's SQL
+      poissonBootstrapSql),
     // 10%-each-side TRIMMED mean by exact rank (deterministic (value, id)
     // tie-break), reported next to the plain mean so the gap IS the
     // outlier-mass signal — the robust-eval location estimate; integer
     // micros end-to-end, distributed-rank recipe (no per-group window)
-    "q268_trimmed_mean" -> { (s, d) =>
+    Gated("q268_trimmed_mean", { (s, d) =>
       graft.analysis.Stats.trimmedMean(TestData.eventsRaw(s, d))
     },
+      // exact-rank trim: the same (vm, event_id) window rank both engines,
+      // k = (n * trim_ppm) // 1e6 dropped from each side
+      """WITH base AS (
+        |  SELECT event_type, event_id,
+        |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm
+        |  FROM events),
+        |rk AS (
+        |  SELECT event_type, vm,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY vm, event_id) AS rn,
+        |    count(*) OVER (PARTITION BY event_type) AS n
+        |  FROM base),
+        |g AS (
+        |  SELECT event_type, CAST(max(n) AS BIGINT) AS n,
+        |    CAST(sum(CASE WHEN rn > (n * 100000) // 1000000
+        |                   AND rn <= n - (n * 100000) // 1000000
+        |             THEN 1 ELSE 0 END) AS BIGINT) AS n_trimmed,
+        |    CAST(sum(vm) AS HUGEINT) AS sv,
+        |    CAST(sum(CASE WHEN rn > (n * 100000) // 1000000
+        |                   AND rn <= n - (n * 100000) // 1000000
+        |             THEN vm ELSE 0 END) AS HUGEINT) AS st
+        |  FROM rk GROUP BY 1)
+        |SELECT event_type, n, n_trimmed,
+        |  CAST((2 * sv + n) // (2 * n) AS BIGINT) AS mean_micro,
+        |  CASE WHEN n_trimmed > 0
+        |    THEN CAST((2 * st + n_trimmed) // (2 * n_trimmed) AS BIGINT)
+        |  END AS trimmed_mean_micro
+        |FROM g ORDER BY event_type""".stripMargin),
     // the COMPOSED pretraining data job: q41's prepare (quality filter →
     // exact dedup → MinHash+LSH near-dup removal) feeding q256's packing
     // — survivors concatenate into context windows; each stage shrinks
     // what the next one pays for, and the gate pins the whole composition
     // in one statement
-    "q269_prep_pack" -> { (s, d) =>
+    Gated("q269_prep_pack", { (s, d) =>
       CorpusPrep.sequencePack(
         CorpusPrep.prepareCorpus(TestData.documents(s, d)), ctxTokens = 256)
     },
+      // q41's chain re-terminated at survivor token counts + q256's packing
+      // readout — the composed prepare→pack pipeline in one statement
+      corpusPrepPackSql(ctx = 256)),
     // metric WITH uncertainty — the report shape eval pipelines actually
     // ship: q259's per-pair ROUGE-2 F1 fed through q266's deterministic
     // Poisson bootstrap (pair_id seeds the weights), corpus mean + a
     // 2nd/19th-resample band in one gated statement
-    "q270_rouge_bootstrap" -> { (s, d) =>
+    Gated("q270_rouge_bootstrap", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cand = docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("pair_id"), col("text").as("cand"))
@@ -1023,6 +2441,8 @@ object SparkEntry {
       graft.analysis.Stats.poissonBootstrapCi(f1, groupCol = "metric",
         valCol = "value", idCol = "pair_id")
     },
+      // q259's chain feeding q266's bootstrap chain — metric + uncertainty
+      rougeBootstrapSql),
     // UNIGRAM-LM (SentencePiece-style) tokenizer trainer — the Kudo 2018
     // shape next to q252's BPE: substring seed vocab, 2 hard-EM rounds
     // (Viterbi E-step over the DISTINCT-word table with a driver-held
@@ -1030,40 +2450,58 @@ object SparkEntry {
     // budget, final E-step. Integer-only output schema; the DP doubles
     // are exact ppb·1e-9 products in a fixed op order, mirrored verbatim
     // in the unrolled oracle
-    "q271_unigram_train" -> { (s, d) =>
+    Gated("q271_unigram_train", { (s, d) =>
       UnigramLM.unigramTrain(TestData.documents(s, d))
     },
+      // the unigram trainer unrolled: seed substring counts, 2 Viterbi-EM
+      // rounds (M chained DP CTEs + M walk CTEs per round, the exact op
+      // order of UnigramLM.viterbiPieces), count prune, final E-step
+      unigramTrainSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24)),
     // train → ENCODE under the final probabilities (what a SentencePiece
     // encoder ships with): per-distinct-word Viterbi piece counts joined
     // back to per-doc word counts; over-length words char-fallback —
     // q255's readout shape for the unigram family
-    "q272_unigram_encode" -> { (s, d) =>
+    Gated("q272_unigram_encode", { (s, d) =>
       UnigramLM.unigramEncode(TestData.documents(s, d))
     },
+      // a 4th Viterbi pass under the final probabilities, per-word piece
+      // counts joined to per-doc word counts; over-length char-fallback
+      unigramEncodeSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24)),
     // q251's occupancy sweep re-gated on a PLANTED-STRUCTURE fixture
     // (verdict round-11 #3): the raw md5 embeddings are the sign-bucket
     // worst case, so the 12-34% overlap measured there conflates fixture
     // and method — this derives clusterable vectors deterministically
     // from the SAME table (+8.0 block per vec_id%8 cluster, 0.125x noise)
     // and reports the same curve side by side
-    "q273_lof_quality_planted" -> { (s, d) =>
+    Gated("q273_lof_quality_planted", { (s, d) =>
       Similarity.lofTruncationAgreement(
         Similarity.plantedClusters(TestData.embeddings(s, d)), k = 5)
     },
+      // the q251 sweep on the planted-cluster fixture: same chain, the ef
+      // source swapped to the pe transform CTE (exact float parity — x0.125
+      // exponent shift, one IEEE add, correctly-rounded FLOAT narrowing)
+      lofQualitySql(k = 5, topKs = Seq(10, 50), occupancies = Seq(32, 128, 512),
+        src = "pe", pre = plantedEmbeddingsCte(blockDims = 8))),
     // q253's table-count sweep on the same planted fixture
-    "q274_lof_multi_quality_planted" -> { (s, d) =>
+    Gated("q274_lof_multi_quality_planted", { (s, d) =>
       Similarity.lofMultiTableAgreement(
         Similarity.plantedClusters(TestData.embeddings(s, d)), k = 5)
     },
+      // the q253 sweep on the same planted fixture
+      lofMultiQualitySql(k = 5, topKs = Seq(10, 50),
+        tableCounts = Seq(1, 2, 4), occupancy = 32, dim = 64,
+        src = "pe", pre = plantedEmbeddingsCte(blockDims = 8))),
     // CROSS-DOC MAXIMAL SHARED RUNS (Lee et al. generalized past the
     // fixed-length grain): per dup pair, consecutive matching fingerprint
     // positions collapse along diagonals (the q87 gaps-and-islands trick
     // over (pair, diag) groups) into maximal verbatim runs; the
     // longest-run readout is what substring-dedup rollouts actually cut
     // on — q188 masks within a doc, this reports ACROSS the pair
-    "q275_shared_runs" -> { (s, d) =>
+    Gated("q275_shared_runs", { (s, d) =>
       Dedup.sharedRuns(TestData.documents(s, d), spanTokens = 8)
     },
+      // per dup pair: gaps-and-islands run collapse along (pair, diagonal)
+      sharedRunsSql(spanTokens = 8)),
     // q275's PRODUCTION arm: the per-fingerprint self-join df-bounded at
     // maxDocsPerSpan (boilerplate spans in more docs than the cap are
     // excluded — without it the join squares on template-heavy corpora,
@@ -1071,85 +2509,108 @@ object SparkEntry {
     // LOW by construction (a dropped span only removes run evidence,
     // never fabricates it — the q32→q71 df-cutoff argument), and the
     // oracle replicates exactly that: same chain, same HAVING bound
-    "q284_shared_runs_bounded" -> { (s, d) =>
+    Gated("q284_shared_runs_bounded", { (s, d) =>
       Dedup.sharedRuns(TestData.documents(s, d), spanTokens = 8,
         maxDocsPerSpan = 2)
     },
+      // the same chain with the df bound ACTIVE (HAVING distinct-doc count
+      // <= cap before pairing) — biased-low semantics replicated verbatim
+      sharedRunsSql(spanTokens = 8, maxDocsPerSpan = 2)),
     // LAW gate: the freq-weighted distinct-word table is the unigram
     // trainer's COMPLETE sufficient statistic, additive across doc-id
     // shards — training from the merged shard artifacts must equal q271's
     // whole-corpus rebuild bit-for-bit (oracle IS q271's SQL); the
     // q257/q261/q262 sharded-counting shape for the tokenizer family
-    "q276_unigram_model_increment" -> { (s, d) =>
+    Gated("q276_unigram_model_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       UnigramLM.unigramTrainFromWords(UnigramLM.mergeWordTables(
         UnigramLM.wordTableArtifact(docs.filter(col("doc_id") % 2 === 0)),
         UnigramLM.wordTableArtifact(docs.filter(col("doc_id") % 2 =!= 0))))
     },
+      // the increment must equal the whole-corpus rebuild — q271's SQL
+      unigramTrainSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24)),
     // HARD-NEGATIVE MINING — contrastive-training data prep: per anchor,
     // the k nearest DIFFERENT-label vectors (close in embedding space,
     // wrong by label). Exact all-pairs arm = the verdict source of truth,
     // quarantined quadratic diagnostic like q238; q278 is the production
     // feed
-    "q277_hard_negatives" -> { (s, d) =>
+    Gated("q277_hard_negatives", { (s, d) =>
       Similarity.hardNegatives(TestData.embeddings(s, d), k = 3)
     },
+      // exact all-pairs hard negatives: micro-distance + (dm, id) rank
+      hardNegativesSql(k = 3)),
     // the production twin: candidates from 4 rotated-window adaptive
     // sign-bucket tables (q254's machinery) + the label filter — anchors
     // whose buckets hold no cross-label vector drop (the measured recall
     // trade), per-anchor cost bounded by tables x occupancy
-    "q278_hard_negatives_lsh" -> { (s, d) =>
+    Gated("q278_hard_negatives_lsh", { (s, d) =>
       Similarity.hardNegativesLsh(TestData.embeddings(s, d), k = 3)
     },
+      // multi-table sign-bucket candidates + label filter, same tail
+      hardNegativesLshSql(k = 3, occupancy = 32, nTables = 4, dim = 64)),
     // ITERATED WORDPIECE trainer (the BERT-tokenizer recipe): q252's
     // Sennrich loop with the likelihood-ratio argmax — adopt the pair
     // maximizing count(ab)/(count(a) x count(b)), the merge that most
     // raises a unigram LM's corpus likelihood; one double ratio on exact
     // integers decides, integers alone are emitted. Completes the
     // trainer trio: BPE (q252), unigram-LM (q271), WordPiece
-    "q279_wordpiece_train" -> { (s, d) =>
+    Gated("q279_wordpiece_train", { (s, d) =>
       TextAnalysis.wordpieceTrain(TestData.documents(s, d), merges = 3)
     },
+      // the BPE chain with the WordPiece likelihood-ratio argmax
+      wordpieceTrainSql(merges = 3)),
     // QUALITY curve for the hard-negative production feed: per table
     // count, recall of q278's (anchor, negative) picks against q277's
     // exact arm — what bucket truncation costs in actually-mined pairs
     // and what each added table buys back. Contains the exact arm:
     // quarantined diagnostic beside q251/q253/q273/q274
-    "q280_hard_negative_recall" -> { (s, d) =>
+    Gated("q280_hard_negative_recall", { (s, d) =>
       Similarity.hardNegativeRecall(TestData.embeddings(s, d), k = 3)
     },
+      // exact arm 0 + per-table arms, (anchor, negative) pair recall
+      hardNegRecallSql(k = 3, occupancy = 32, tableCounts = Seq(1, 2, 4), dim = 64)),
     // the unigram trainer's budget dial as a fertility curve (q260's
     // tokens-per-word-vs-vocab plot for the unigram family): seed + EM
     // run once, each budget point prunes the same round-2 counts and
     // re-segments the word table — corpus touched once
-    "q281_unigram_budget_curve" -> { (s, d) =>
+    Gated("q281_unigram_budget_curve", { (s, d) =>
       UnigramLM.unigramBudgetCurve(TestData.documents(s, d))
     },
+      // shared core to c2, per-budget prune + one more unrolled DP round
+      unigramBudgetCurveSql(m = 10, k = 4, seedMulti = 48, budgets = Seq(4, 12, 24))),
     // TOKENIZER-FAMILY comparison capstone: the trio (BPE q252, WordPiece
     // q279, unigram q271) trained on the SAME train slice at the SAME
     // budget (3 multi-char units), evaluated on the SAME holdout —
     // freq-weighted fertility + whole-word rate per family, the report
     // tokenizer evaluations actually ship. Holdout word set identical
     // across families (the unigram-alphabet eligibility contract)
-    "q286_tokenizer_families" -> { (s, d) =>
+    Gated("q286_tokenizer_families", { (s, d) =>
       TextAnalysis.tokenizerFamilyComparison(TestData.documents(s, d))
     },
+      // three scoped family arms sharing the stage-gate trainer chains
+      // (train-slice filtered) + holdout encodes off the shared constants
+      tokenizerFamiliesSql(budget = 3, evalMod = 17, m = 10, k = 4, seedMulti = 48)),
     // q286 on the UNRESTRICTED holdout — the production form: no word is
     // excluded; OOV characters answer as UTF-8 byte pieces (SentencePiece
     // byte_fallback), so fertility and whole-word rate are defined for
     // EVERY holdout word. Merge families need no special case (a learned
     // pair can never contain an untrained char); the unigram arm
     // byte-falls-back words its DP cannot segment
-    "q289_tokenizer_families_fallback" -> { (s, d) =>
+    Gated("q289_tokenizer_families_fallback", { (s, d) =>
       TextAnalysis.tokenizerFamilyComparisonFallback(TestData.documents(s, d))
     },
+      // the same three arms on the UNRESTRICTED holdout: hw = hw0, merge
+      // arms unchanged past that, unigram DP-eligibility excludes hwbad
+      // words which byte-fallback through COALESCE(length)
+      tokenizerFamiliesSql(budget = 3, evalMod = 17, m = 10, k = 4, seedMulti = 48,
+        byteFallback = true)),
     // QUALITY-KEEPER dedup policy (the FineWeb survivor rule): q31's
     // verified near-dup pairs clustered by connected components, keeper =
     // argmax (quality centi-units, then min id) per cluster — the policy
     // real rollouts ship instead of q49/q72's min-id; quality is the q20
     // score quantized to exact integer centi-units so the argmax is
     // engine-invariant
-    "q282_dedup_keep_best" -> { (s, d) =>
+    Gated("q282_dedup_keep_best", { (s, d) =>
       val docs = TestData.documents(s, d)
       val scored = TextAnalysis.textStats(docs)
         .select(col("doc_id"),
@@ -1158,6 +2619,9 @@ object SparkEntry {
       Dedup.dedupClustersKeepBest(
         Dedup.minhashNearDupPairs(docs), scored, pairsWithinScored = true)
     },
+      // q31's pair chain + q20's quality (centi-quantized) + q72's
+      // recursive components, keeper by (quality desc, id asc)
+      dedupKeepBestSql),
     // THE CAPSTONE — the full pretraining data job in ONE gated
     // statement: quality gate → exact dedup → near-dup clusters with the
     // q282 QUALITY-KEEPER policy → q250 winnowing decontamination against
@@ -1165,16 +2629,23 @@ object SparkEntry {
     // mixture → q256 sequence packing. The oracle is built from the SAME
     // named CTE constants as the stage gates; PipelineSpec pins
     // composition ≡ stage-by-stage dataflow
-    "q283_pretrain_pipeline" -> { (s, d) =>
+    Gated("q283_pretrain_pipeline", { (s, d) =>
       CorpusPrep.pretrainPipeline(TestData.documents(s, d))
     },
+      // the full pipeline: prep chain + keeper components + winnowing
+      // decontam + temperature mixture + packing tail, every stage a
+      // shared named constant
+      pretrainPipelineSql(ctx = 256)),
     // the capstone's FUNNEL report: docs + whitespace tokens surviving
     // each stage boundary (ingest → quality → exact → keeper → holdout →
     // decontam → mixture) — the run report a data team reads after every
     // ingest; the mixture row's n_tokens IS the packed stream's length
-    "q288_pretrain_funnel" -> { (s, d) =>
+    Gated("q288_pretrain_funnel", { (s, d) =>
       CorpusPrep.pretrainFunnel(TestData.documents(s, d))
     },
+      // the capstone chain terminated at the per-stage funnel instead of
+      // the packing tail — same shared WITH-prefix constant
+      pretrainFunnelSql),
     // LAW gate: the INCREMENTAL capstone — the daily-ingest form of q283
     // from stored artifacts (exact corpus + fingerprints + sketch + pairs
     // + quality scores + per-doc winnowing fps), only the batch touched
@@ -1183,20 +2654,23 @@ object SparkEntry {
     // a stored keeper, rates move with every ingest, concat order is
     // global). Must equal q283's whole-corpus rebuild under monotonic
     // ingest ids (oracle IS q283's SQL)
-    "q287_pretrain_pipeline_increment" -> { (s, d) =>
+    Gated("q287_pretrain_pipeline_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
       CorpusPrep.pretrainPipelineIncrement(
         CorpusPrep.pretrainArtifacts(docs.filter(col("doc_id") <= half)),
         docs.filter(col("doc_id") > half))
     },
+      // LAW gate: the artifact-fed increment must reproduce the whole-
+      // corpus capstone rebuild — the oracle IS q283's SQL
+      pretrainPipelineSql(ctx = 256)),
     // LAW gate: q287 with the artifact set ROUND-TRIPPED THROUGH PARQUET
     // (the daily job's real shape — yesterday's run wrote the layer,
     // today's ingest reads it back). Schema/dtype drift through the
     // parquet boundary (sketch array columns, fingerprint strings,
     // centi-quantized quality longs) is exactly the failure class the
     // in-session q287 gate cannot see; oracle IS q283's SQL
-    "q290_pretrain_artifact_roundtrip" -> { (s, d) =>
+    Gated("q290_pretrain_artifact_roundtrip", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
       val root = sys.props("java.io.tmpdir") + "/graft_q290_layer"
@@ -1207,6 +2681,9 @@ object SparkEntry {
         CorpusPrep.readArtifacts(s, root, maxVersionExclusive = 1L),
         docs.filter(col("doc_id") > half))
     },
+      // the artifact set round-trips the parquet layer; increment from the
+      // read-back state must STILL equal the whole rebuild — q283's SQL
+      pretrainPipelineSql(ctx = 256)),
     // LAW gate: q290 with the layer COMPACTED between write and read —
     // two ingest versions (v=0 bootstrap on the first third, v=1 delta on
     // the second) fold into ONE base at v=1 (DeltaLayerCompactor's
@@ -1215,7 +2692,7 @@ object SparkEntry {
     // fold + promote + read-union on the real artifact schemas (array
     // sketches, long fingerprints, centi-quantized quality) — the
     // retention job every versioned delta layer eventually needs
-    "q292_pretrain_layer_compaction" -> { (s, d) =>
+    Gated("q292_pretrain_layer_compaction", { (s, d) =>
       val docs = TestData.documents(s, d)
       val maxId = docs.agg(max("doc_id")).head.getLong(0)
       val (aCut, bCut) = (maxId / 3, 2 * maxId / 3)
@@ -1235,18 +2712,25 @@ object SparkEntry {
         CorpusPrep.readArtifacts(s, root, maxVersionExclusive = 2L),
         docs.filter(col("doc_id") > bCut))
     },
+      // LAW gate: the layer COMPACTED (versions 0-1 folded into one base)
+      // must serve the same increment — q283's SQL again; the Spark side
+      // proves fold + promote + read-union change nothing in retention
+      pretrainPipelineSql(ctx = 256)),
     // the funnel-over-ingests TIME SERIES (q288 per ingest, one union):
     // per batch id, the funnel of the corpus AS OF that ingest — stage
     // deltas between consecutive ids isolate what each ingest added and
     // what each stage took from it (the "did decontamination cost spike
     // this week" readout)
-    "q291_pretrain_funnel_series" -> { (s, d) =>
+    Gated("q291_pretrain_funnel_series", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
       CorpusPrep.pretrainFunnelSeries(Seq(
         0L -> docs.filter(col("doc_id") <= half),
         1L -> docs.filter(col("doc_id") > half)))
     },
+      // one scoped chain+funnel arm per ingest over the as-of corpus,
+      // keyed by batch_id — the shared constants, twice
+      pretrainFunnelSeriesSql),
     // LAW gate: the q282 keeper policy on a daily-ingest split — pairs
     // from stored artifacts (old-batch pairs ∪ new-batch pairs ∪ the
     // cross band join against the stored sketch, the q78/q118 machinery)
@@ -1256,7 +2740,7 @@ object SparkEntry {
     // keeper can flip ONLY when the batch introduces a strictly-higher-
     // quality member — recomputing the cluster argmax from the merged
     // artifacts reproduces exactly that flip
-    "q285_keep_best_increment" -> { (s, d) =>
+    Gated("q285_keep_best_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
       val old = docs.filter(col("doc_id") <= half)
@@ -1273,12 +2757,16 @@ object SparkEntry {
           .unionByName(cross),
         scored, pairsWithinScored = true)
     },
+      // LAW gate: keeper verdicts over corpus ∪ batch from STORED pair
+      // artifacts (old pairs + batch pairs + the cross band join) must
+      // equal q282's whole-corpus rebuild — the oracle IS q282's SQL
+      dedupKeepBestSql),
     // Fleiss' kappa over a 3-heuristic annotation panel (length band,
     // lexical-diversity band, stopword band — each a pure INTEGER
     // cross-multiplied comparison, so no rater decision can flip across
     // builds): the certification number for heuristic label panels before
     // their votes become training signal; q207's multi-rater sibling
-    "q239_fleiss_kappa" -> { (s, d) =>
+    Gated("q239_fleiss_kappa", { (s, d) =>
       val raw = TextAnalysis.tokens(col("text"))
       val toks = filter(raw, t => length(t) > 0)
       val rated = TestData.documents(s, d)
@@ -1298,11 +2786,56 @@ object SparkEntry {
       graft.analysis.Stats.fleissKappa(rated, "doc_id",
         Seq("r_len", "r_div", "r_stop"))
     },
+      // the same three integer raters and integer-sum kappa; ratios are the
+      // only float steps (cohensKappa exactness argument)
+      s"""WITH toks AS (
+        |  SELECT doc_id,
+        |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id, len(t) AS nt, len(list_distinct(t)) AS nu,
+        |    len(list_filter(t, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS ns
+        |  FROM toks WHERE len(t) > 0),
+        |rated AS (
+        |  SELECT doc_id,
+        |    CASE WHEN nt < 50 THEN 'low' WHEN nt <= 200 THEN 'medium'
+        |         ELSE 'high' END AS r_len,
+        |    CASE WHEN nu * 10 >= nt * 7 THEN 'high'
+        |         WHEN nu * 10 >= nt * 4 THEN 'medium' ELSE 'low' END AS r_div,
+        |    CASE WHEN ns * 4 >= nt THEN 'high'
+        |         WHEN ns * 20 >= nt THEN 'medium' ELSE 'low' END AS r_stop
+        |  FROM f),
+        |lng AS (
+        |  SELECT doc_id AS u, r_len AS lab FROM rated
+        |  UNION ALL SELECT doc_id, r_div FROM rated
+        |  UNION ALL SELECT doc_id, r_stop FROM rated),
+        |cells AS (SELECT u, lab, count(*) AS nuc FROM lng GROUP BY 1, 2),
+        |s2 AS (
+        |  SELECT CAST(sum(CAST(nuc AS HUGEINT) * CAST(nuc AS HUGEINT)) AS BIGINT) AS s2,
+        |    count(DISTINCT u) AS n_units
+        |  FROM cells),
+        |marg AS (
+        |  SELECT CAST(sum(CAST(tc AS HUGEINT) * CAST(tc AS HUGEINT)) AS BIGINT) AS te2
+        |  FROM (SELECT lab, sum(nuc) AS tc FROM cells GROUP BY lab)),
+        |raw AS (
+        |  SELECT n_units, 3 AS n_raters,
+        |    (CAST(s2 AS DOUBLE) - n_units * 3.0::DOUBLE)
+        |      / (CAST(n_units AS DOUBLE) * 6.0::DOUBLE) AS p_bar_raw,
+        |    CAST(te2 AS DOUBLE)
+        |      / (CAST(n_units AS DOUBLE) * 3.0::DOUBLE
+        |         * (CAST(n_units AS DOUBLE) * 3.0::DOUBLE)) AS p_e_raw
+        |  FROM s2 CROSS JOIN marg)
+        |SELECT n_units, n_raters, round(p_bar_raw, 6) AS p_bar,
+        |  round(p_e_raw, 6) AS p_e,
+        |  CASE WHEN 1.0::DOUBLE - p_e_raw > 0
+        |    THEN round((p_bar_raw - p_e_raw) / (1.0::DOUBLE - p_e_raw), 6)
+        |  END AS fleiss_kappa
+        |FROM raw""".stripMargin),
     // LAW gate: per-unit CUPED artifacts from two half-month event slices,
     // merged by per-unit ADDITION of the exact integer sums, must
     // reproduce q234's whole-corpus readout — a daily experiment ingest
     // scans only its batch (q222/q229/q230's increment-law pattern)
-    "q241_cuped_increment" -> { (s, d) =>
+    Gated("q241_cuped_increment", { (s, d) =>
       val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
       val ev = TestData.eventsRaw(s, d)
       // slice by an md5 gate (NOT by the cutoff — each slice must carry
@@ -1315,46 +2848,154 @@ object SparkEntry {
       graft.analysis.Stats.cupedFromUnits(
         graft.analysis.Stats.cupedMergeUnits(s1, s2))
     },
+      // LAW gate: the merged per-unit artifact must reproduce the
+      // whole-corpus readout, so its oracle IS q234's rebuild
+      cupedOracle),
     // CCNet-shaped per-language tertile bucketing (head/middle/tail over
     // an LM rarity score, keep head+middle): the score is the add-one
     // unigram model's mean INVERSE probability in fixed point — integer
     // end-to-end, so no score, rank, or tertile boundary can flip across
     // builds; within-language ranks ride the distributed-rank recipe
-    "q242_ccnet_buckets" -> { (s, d) =>
+    Gated("q242_ccnet_buckets", { (s, d) =>
       TextAnalysis.rarityBuckets(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // same integer rarity score and tertile arithmetic; the per-language
+      // rank is a plain window here (gate-sized), the Spark side uses the
+      // distributed-rank recipe and both land on the same integer ranks
+      s"""WITH tok AS (
+        |  SELECT doc_id,
+        |    unnest(list_filter(string_split($normText, ' '), x -> x <> '')) AS tok
+        |  FROM documents),
+        |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
+        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n, count(*) AS v FROM freq),
+        |perdoc AS (
+        |  SELECT doc_id, count(*) AS n_tokens,
+        |    CAST(sum((SELECT n + v FROM tot) // (c + 1)) AS BIGINT) AS sr
+        |  FROM tok JOIN freq USING (tok) GROUP BY doc_id),
+        |scored AS (
+        |  SELECT d.doc_id, d.lang,
+        |    CAST(sr * 1000000 // n_tokens AS BIGINT) AS rarity_micro
+        |  FROM documents d JOIN perdoc USING (doc_id)),
+        |ranked AS (
+        |  SELECT doc_id, lang, rarity_micro,
+        |    row_number() OVER (PARTITION BY lang ORDER BY rarity_micro, doc_id)
+        |      AS lang_rank,
+        |    count(*) OVER (PARTITION BY lang) AS n_lang
+        |  FROM scored)
+        |SELECT doc_id, lang, rarity_micro,
+        |  CAST(lang_rank AS BIGINT) AS lang_rank,
+        |  CAST(n_lang AS BIGINT) AS n_lang,
+        |  CASE WHEN lang_rank * 3 <= n_lang THEN 'head'
+        |       WHEN lang_rank * 3 <= n_lang * 2 THEN 'middle'
+        |       ELSE 'tail' END AS bucket,
+        |  lang_rank * 3 <= n_lang * 2 AS kept
+        |FROM ranked ORDER BY doc_id""".stripMargin),
     // theta-sketch intersection: |clickers ∩ purchasers| and Jaccard from
     // two k=64 bottom-k sketches via the union threshold (count common
     // hashes below T, scale by HashSpace/T); exact_intersection rides
     // along as the honesty column — q84/q85's set-OPERATION completion
-    "q240_kmv_intersection" -> { (s, d) =>
+    Gated("q240_kmv_intersection", { (s, d) =>
       graft.analysis.Sketches.intersectionEstimate(
         Tables.events(s, d), groupCol = "event_type", valueCol = "user_id",
         groupA = "click", groupB = "purchase", k = 64)
     },
+      // same bottom-64 rebuild as q84, union threshold = 64th smallest of
+      // the merged sample; both estimator branches mirrored
+      """WITH h AS (
+        |  SELECT DISTINCT event_type AS g,
+        |    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
+        |  FROM events WHERE event_type IN ('click', 'purchase')),
+        |r AS (
+        |  SELECT g, hv, row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
+        |  FROM h),
+        |sk AS (SELECT g, hv FROM r WHERE rn <= 64),
+        |u AS (SELECT DISTINCT hv FROM sk),
+        |un AS (SELECT count(*) AS nu FROM u),
+        |t AS (
+        |  SELECT hv AS kth FROM (
+        |    SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM u)
+        |  WHERE rn = 64),
+        |com AS (
+        |  SELECT a.hv FROM (SELECT hv FROM sk WHERE g = 'click') a
+        |  JOIN (SELECT hv FROM sk WHERE g = 'purchase') b USING (hv)),
+        |calc AS (
+        |  SELECT (SELECT nu FROM un) AS nu,
+        |    CASE WHEN (SELECT nu FROM un) < 64
+        |      THEN (SELECT count(*) FROM com)
+        |      ELSE (SELECT count(*) FROM com WHERE hv < (SELECT kth FROM t))
+        |    END AS n_common),
+        |ex AS (
+        |  SELECT count(*) AS exact_intersection FROM
+        |    (SELECT DISTINCT user_id FROM events WHERE event_type = 'click') x
+        |    JOIN (SELECT DISTINCT user_id FROM events
+        |          WHERE event_type = 'purchase') y USING (user_id))
+        |SELECT 'click' AS group_a, 'purchase' AS group_b,
+        |  CAST(n_common AS BIGINT) AS n_common_sample,
+        |  CASE WHEN nu < 64 THEN round(n_common::DOUBLE, 4)
+        |    ELSE round(n_common * 1152921504606846976.0 / (SELECT kth FROM t), 4)
+        |  END AS est_intersection,
+        |  CASE WHEN nu < 64 THEN
+        |      round(CASE WHEN nu = 0 THEN 0.0::DOUBLE
+        |            ELSE n_common::DOUBLE / nu END, 4)
+        |    ELSE round(n_common::DOUBLE / 63.0::DOUBLE, 4)
+        |  END AS est_jaccard,
+        |  (SELECT exact_intersection FROM ex) AS exact_intersection
+        |FROM calc""".stripMargin),
     // Okapi BM25: saturated TF + doc-length normalization over the q27
     // query — corpus stats (N, df, avgdl) ride as plan literals, scoring
     // is one codegen'd projection, TakeOrdered(k)
-    "q177_bm25" -> { (s, d) =>
+    Gated("q177_bm25", { (s, d) =>
       graft.analysis.SearchRank.bm25(TestData.documents(s, d),
         terms = Seq("spark", "query", "hash"), k = 20)
     },
+      // q27's stats subqueries + avgdl; per-term Lucene-idf BM25 terms
+      // summed in fixed order
+      bm25Sql),
     // Wald SPRT: sequential purchase-rate test H0 p=.10 vs H1 p=.15 over
     // the ts-ordered stream — LLR is a pure function of integer prefix
     // counts, decision at the first boundary crossing (q96's sequential
     // sibling: WHEN did the evidence first suffice)
-    "q176_sprt" -> { (s, d) =>
+    Gated("q176_sprt", { (s, d) =>
       graft.analysis.Stats.sprtBernoulli(
         TestData.eventsRaw(s, d),
         success = col("event_type") === "purchase",
         tsCol = "ts", tieCol = "event_id",
         p0Bp = 1000, p1Bp = 1500)
     },
+      // integer prefix counts -> two constant log increments; min-struct
+      // first crossing, end-of-data fallback
+      """WITH ev AS (
+        |  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x,
+        |    CAST(ts AS TIMESTAMP) AS ts, event_id
+        |  FROM events),
+        |c AS (
+        |  SELECT row_number() OVER (ORDER BY ts, event_id) AS t,
+        |    sum(x) OVER (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS k
+        |  FROM ev),
+        |l AS (
+        |  SELECT t, CAST(k AS BIGINT) AS k,
+        |    k * ln(1500.0::DOUBLE / 1000.0::DOUBLE)
+        |      + (t - k) * ln(8500.0::DOUBLE / 9000.0::DOUBLE) AS llr
+        |  FROM c),
+        |cr AS (
+        |  SELECT t, k, llr FROM l
+        |  WHERE llr >= ln(9500.0::DOUBLE / 500.0::DOUBLE)
+        |     OR llr <= ln(500.0::DOUBLE / 9500.0::DOUBLE)
+        |  ORDER BY t LIMIT 1),
+        |e AS (SELECT t, k, llr FROM l ORDER BY t DESC LIMIT 1)
+        |SELECT COALESCE(cr.t, e.t) AS n_obs, COALESCE(cr.k, e.k) AS n_success,
+        |  round(COALESCE(cr.llr, e.llr), 6) AS llr,
+        |  CASE WHEN cr.t IS NULL THEN 'continue'
+        |       WHEN cr.llr >= ln(9500.0::DOUBLE / 500.0::DOUBLE) THEN 'accept_h1'
+        |       ELSE 'accept_h0' END AS decision,
+        |  round(ln(9500.0::DOUBLE / 500.0::DOUBLE), 6) AS upper,
+        |  round(ln(500.0::DOUBLE / 9500.0::DOUBLE), 6) AS lower
+        |FROM e LEFT JOIN cr ON TRUE""".stripMargin),
     // split-conformal over the trained scorer: train on md5 buckets <8000,
     // q-hat = exact order statistic of |y-score| on the calib slice
     // [8000,9000), coverage audited on the disjoint test slice - the
     // distribution-free uncertainty tail of the q151-q155 model loop
-    "q175_conformal" -> { (s, d) =>
+    Gated("q175_conformal", { (s, d) =>
       val data = logregData(s, d).withColumn("bucket",
         graft.analysis.Sampling.hashBucket(
           concat(col("doc_id").cast("string"), lit("|conf"))))
@@ -1367,31 +3008,82 @@ object SparkEntry {
         scored.filter(col("bucket") >= 9000),
         alphaBp = 1000)
     },
+      // the q151 chain trained on md5 buckets <8000 (trainWhere), scored
+      // over everyone; q-hat by integer-rank order statistic, coverage on
+      // the disjoint test slice
+      conformalOracle(3)),
     // two-sample KS drift: exact ECDF max-gap over the distinct-value
     // spine + alpha=.05 rejection — the unbinned complement of q112's PSI,
     // localizing WHERE the distributions diverge (at_value)
-    "q174_ks_drift" -> { (s, d) =>
+    Gated("q174_ks_drift", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       graft.analysis.Profiling.ksDrift(
         ev.filter(to_date(col("ts")) <= lit("2024-01-15")),
         ev.filter(to_date(col("ts")) > lit("2024-01-15")),
         valCol = "value")
     },
+      // distinct-value spine, cumulative counts, one double division per row
+      """WITH ev AS (
+        |  SELECT CAST(ts AS TIMESTAMP) AS ts, value FROM events WHERE value IS NOT NULL),
+        |per AS (
+        |  SELECT value AS v,
+        |    sum(CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15' THEN 1 ELSE 0 END) AS na,
+        |    sum(CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END) AS nb
+        |  FROM ev GROUP BY 1),
+        |t AS (SELECT CAST(sum(na) AS BIGINT) AS n_ref, CAST(sum(nb) AS BIGINT) AS n_cur FROM per),
+        |c AS (
+        |  SELECT v,
+        |    abs(sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE / n_ref::DOUBLE
+        |      - sum(nb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE / n_cur::DOUBLE) AS d,
+        |    n_ref, n_cur
+        |  FROM per CROSS JOIN t)
+        |SELECT n_ref, n_cur, round(d, 6) AS ks_stat, v AS at_value,
+        |  round(1.358::DOUBLE * sqrt((n_ref + n_cur)::DOUBLE / (n_ref * n_cur)::DOUBLE), 6) AS crit_05,
+        |  d > 1.358::DOUBLE * sqrt((n_ref + n_cur)::DOUBLE / (n_ref * n_cur)::DOUBLE) AS reject
+        |FROM c ORDER BY d DESC, v LIMIT 1""".stripMargin),
     // ensemble dedup: MinHash text pairs full-outer embedding cosine pairs
     // — surface and semantic detectors fail differently, so the agreement/
     // disagreement matrix is the deliverable ('both' = high-precision drop)
-    "q172_ensemble_dedup" -> { (s, d) =>
+    Gated("q172_ensemble_dedup", { (s, d) =>
       Dedup.ensembleSignals(
           Dedup.minhashNearDupPairs(TestData.documents(s, d)),
           Similarity.embeddingNearDupPairsExact(TestData.embeddings(s, d),
             minCosine = 0.4))
         .orderBy("doc_a", "doc_b")
     },
+      // q31's minhash chain ⋈ q38's cosine chain, full outer on the pair key
+      s"""WITH $shingleSetsCtes,
+        |$minhashCandCtes,
+        |verified AS (
+        |  SELECT doc_a, doc_b,
+        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
+        |  FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id),
+        |tp AS (SELECT doc_a, doc_b, round(j, 4) AS jaccard FROM verified WHERE j >= 0.8),
+        |ev AS (SELECT vec_id, embedding FROM embeddings),
+        |ep AS (
+        |  SELECT doc_a, doc_b, round(cosine, 4) AS cosine FROM (
+        |    SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
+        |      list_sum(list_transform(range(1, len(x.embedding) + 1),
+        |          i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
+        |        / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
+        |              i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
+        |           * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
+        |              i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))) AS cosine
+        |    FROM ev x JOIN ev y ON x.vec_id < y.vec_id)
+        |  WHERE cosine >= 0.4)
+        |SELECT COALESCE(tp.doc_a, ep.doc_a) AS doc_a,
+        |  COALESCE(tp.doc_b, ep.doc_b) AS doc_b, tp.jaccard, ep.cosine,
+        |  CASE WHEN tp.doc_a IS NOT NULL AND ep.doc_a IS NOT NULL THEN 'both'
+        |       WHEN tp.doc_a IS NOT NULL THEN 'text_only'
+        |       ELSE 'embedding_only' END AS signal
+        |FROM tp FULL OUTER JOIN ep
+        |  ON tp.doc_a = ep.doc_a AND tp.doc_b = ep.doc_b
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // incremental SemDeDup under a FROZEN quantizer (q118's top-decile
     // split): cells fit on the corpus only, batch assigns without a refit,
     // corpus verdicts provably stable; oracle = whole-union rebuild under
     // the same frozen centroids in one statement
-    "q171_semdedup_increment" -> { (s, d) =>
+    Gated("q171_semdedup_increment", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val cut = emb.agg(max("vec_id")).collect().head.getLong(0) * 9 / 10
       Similarity.semDedupIncrement(
@@ -1399,53 +3091,128 @@ object SparkEntry {
           k = 4, iterations = 2, minCosine = 0.4)
         .orderBy("vec_id")
     },
+      // the q164 pair/survivor tail over the FROZEN cells — the law gate:
+      // the increment must equal this whole-union rebuild
+      s"""WITH $kmeansFrozenAsgCtes,
+        |$clusterCosineDupTail""".stripMargin),
     // the UniMax manifest: floor(e) full copies per doc + a replayable
     // md5 basis-point gate for the fractional epoch — the step that turns
     // an allocation into actual training copy counts
-    "q173_epoch_manifest" -> { (s, d) =>
+    Gated("q173_epoch_manifest", { (s, d) =>
       graft.analysis.CorpusPrep.epochMaterialize(TestData.documents(s, d),
           maxEpochsBp = 10500)
         .orderBy("doc_id")
     },
+      // q170's water-fill chain + the '|epoch' md5 basis-point gate
+      s"""WITH $mixtureLevelCtes,
+        |$mixtureEpochCtes
+        |SELECT doc.doc_id, doc.source,
+        |  full_copies + CASE WHEN ('0x' || substr(md5(doc.doc_id::VARCHAR || '|epoch'), 1, 8))::BIGINT % 10000 < frac_bp
+        |    THEN 1 ELSE 0 END AS n_copies
+        |FROM documents doc JOIN g USING (source)
+        |ORDER BY doc.doc_id""".stripMargin),
     // UniMax: capped water-filling of the token budget across sources —
     // small sources saturate a 1.05-epoch cap, the freed budget
     // redistributes; closed-form level over the cap-ascending order
-    "q170_unimax_budget" -> { (s, d) =>
+    Gated("q170_unimax_budget", { (s, d) =>
       graft.analysis.CorpusPrep.unimaxAllocation(TestData.documents(s, d),
           maxEpochsBp = 10500)
         .orderBy("source")
     },
+      // integer caps via //, exact-integer level division, scalar-subquery
+      // water level; q121's token counting
+      s"""WITH $mixtureLevelCtes,
+        |al AS (
+        |  SELECT source, n_tokens, cap,
+        |    CASE WHEN (SELECT istar FROM sel) IS NULL
+        |           OR rn < (SELECT istar FROM sel) THEN cap::DOUBLE
+        |         ELSE (SELECT lvl FROM lv WHERE rn = (SELECT istar FROM sel)) END AS alloc_raw
+        |  FROM lv)
+        |SELECT source, n_tokens, cap, round(alloc_raw, 4) AS alloc,
+        |  CASE WHEN n_tokens > 0 THEN round(alloc_raw / n_tokens::DOUBLE, 6) END AS epochs
+        |FROM al ORDER BY source""".stripMargin),
     // prototypicality pruning: within each k-means cell keep the FAR 70%
     // (hard examples) — data-rich-regime pruning per Sorscher et al.; the
     // integer-exact (r-1)*100 < c*pct cut avoids decimal-vs-IEEE ceil drift
-    "q169_prototype_prune" -> { (s, d) =>
+    Gated("q169_prototype_prune", { (s, d) =>
       graft.analysis.Clustering.prototypePrune(TestData.embeddings(s, d),
           k = 4, iterations = 2, keepPct = 70)
         .orderBy("vec_id")
     },
+      // q108's cells; rank on the ROUNDED dist2 (what both engines emit),
+      // integer keep rule
+      s"""WITH $kmeansAsgCtes,
+        |rk AS (
+        |  SELECT vec_id, cluster, round(d2, 6) AS dist2,
+        |    row_number() OVER (PARTITION BY cluster ORDER BY round(d2, 6) DESC, vec_id) AS rn,
+        |    count(*) OVER (PARTITION BY cluster) AS c
+        |  FROM asg)
+        |SELECT vec_id, cluster, dist2, (rn - 1) * 100 < c * 70 AS keep
+        |FROM rk ORDER BY vec_id""".stripMargin),
     // cross-source shingle-overlap matrix: how much of each source already
     // lives inside the others — the governance input to mixture weighting
     // (q121/q140/q145); Szymkiewicz-Simpson overlap per source pair
-    "q168_source_overlap" -> { (s, d) =>
+    Gated("q168_source_overlap", { (s, d) =>
       graft.analysis.Dedup.sourceOverlap(TestData.documents(s, d), n = 5)
         .orderBy("source_a", "source_b")
     },
+      // distinct (shingle-md5, source) tuples -> pair join on the hash ->
+      // overlap coefficient vs the smaller side
+      sourceOverlapSql),
     // hard-negative mining: per anchor, the top-3 most-similar DIFFERENT-
     // label vectors — the confusable end of the negative spectrum (q120 is
     // the uniform end); brute-force scorer, IVF shortlist at scale
-    "q167_hard_negatives" -> { (s, d) =>
+    Gated("q167_hard_negatives", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       graft.analysis.Sampling.hardNegatives(emb,
           emb.filter(col("vec_id") % 50 === 0), k = 3)
         .orderBy("anchor_id", "rank")
     },
+      // q38's cosine over cross-label pairs, per-anchor top-3 window
+      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
+        |p AS (
+        |  SELECT a.vec_id AS anchor_id, c.vec_id AS neg_id, c.label AS neg_label,
+        |    list_sum(list_transform(range(64), i -> a.v[i+1] * c.v[i+1]))
+        |      / (sqrt(list_sum(list_transform(range(64), i -> a.v[i+1] * a.v[i+1])))
+        |       * sqrt(list_sum(list_transform(range(64), i -> c.v[i+1] * c.v[i+1])))) AS cosine
+        |  FROM e a JOIN e c ON a.label <> c.label
+        |  WHERE a.vec_id % 50 = 0),
+        |r AS (
+        |  SELECT anchor_id, neg_id, neg_label, cosine,
+        |    row_number() OVER (PARTITION BY anchor_id ORDER BY cosine DESC, neg_id) AS "rank"
+        |  FROM p)
+        |SELECT anchor_id, neg_id, neg_label, "rank", round(cosine, 4) AS cosine
+        |FROM r WHERE "rank" <= 3 ORDER BY anchor_id, "rank"""".stripMargin),
     // bigram-LM cross-entropy: the context-aware upgrade of q119's unigram
     // score — add-0.5 smoothed p(w2|w1) fit on the corpus itself, per-doc
     // mean NLL with DECIMAL-summed log terms (CCNet/KenLM filter shape)
-    "q166_bigram_lm" -> { (s, d) =>
+    Gated("q166_bigram_lm", { (s, d) =>
       graft.analysis.TextAnalysis.bigramLogProb(TestData.documents(s, d))
         .orderBy("doc_id")
     },
+      // the bigram twin of q119: pair/history counts from the same token
+      // stream, add-0.5 conditional smoothing over the unigram vocab
+      s"""WITH ta AS (
+        |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS t
+        |  FROM documents),
+        |bgf AS (
+        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
+        |    SELECT doc_id,
+        |      unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
+        |    FROM ta WHERE len(t) >= 2)),
+        |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bgf GROUP BY 1, 2),
+        |c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
+        |vv AS (SELECT count(DISTINCT tok) AS v FROM (SELECT unnest(t) AS tok FROM ta)),
+        |sc AS (
+        |  SELECT doc_id, count(*) AS n_bigrams,
+        |    sum(CAST(ln((c12 + 0.5::DOUBLE) / (c1 + 0.5::DOUBLE * v)) AS DECIMAL(28,12))) AS s
+        |  FROM bgf JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv
+        |  GROUP BY 1)
+        |SELECT d.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
+        |  CASE WHEN sc.n_bigrams > 0
+        |    THEN round(-(sc.s::DOUBLE) / sc.n_bigrams::DOUBLE, 6) END AS avg_nll
+        |FROM documents d LEFT JOIN sc USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
     // DSIR: importance-resampled data selection — smoothed hashed-unigram
     // distributions for target (lang=en) vs raw, per-doc Long-summed
     // MICRO-quantized log ratio, Gumbel-top-k on integer keys from the
@@ -1454,43 +3221,99 @@ object SparkEntry {
     // ⌊x·10⁶+0.5⌋ quantization happens once per scalar on both engines,
     // and DsirMarginSpec pins every value off its floor boundary, so a
     // cross-BUILD libm ulp cannot flip any output bit (the r6/r7 fix)
-    "q165_dsir_select" -> { (s, d) =>
+    Gated("q165_dsir_select", { (s, d) =>
       graft.analysis.CorpusPrep.dsirSelect(TestData.documents(s, d),
           isTarget = col("lang") === "en", nSelect = 100)
         .orderBy("doc_id")
     },
+      // DSIR: q106's token/bucket recipe, add-0.5 smoothed bucket
+      // distributions, DECIMAL-summed per-doc log ratios, q163's md5
+      // uniform driving the Gumbel keys
+      s"""WITH toks AS (
+        |  SELECT doc_id, lang = 'en' AS is_target,
+        |    unnest(string_split($normText, ' ')) AS tok
+        |  FROM documents),
+        |tb AS (
+        |  SELECT doc_id, is_target,
+        |    ('0x' || substr(md5('i|' || tok), 1, 15))::BIGINT % 256 AS bucket,
+        |    count(*) AS n_b
+        |  FROM toks WHERE tok <> '' GROUP BY 1, 2, 3),
+        |tot AS (SELECT sum(CASE WHEN is_target THEN n_b ELSE 0 END) AS nt, sum(n_b) AS nr FROM tb),
+        |tc AS (SELECT bucket, sum(n_b) AS ct FROM tb WHERE is_target GROUP BY 1),
+        |rc AS (SELECT bucket, sum(n_b) AS cr FROM tb GROUP BY 1),
+        |ratio AS (
+        |  SELECT r.i AS bucket,
+        |    CAST(floor((ln((COALESCE(ct, 0) + 0.5::DOUBLE) / (nt + 128.0::DOUBLE))
+        |      - ln((COALESCE(cr, 0) + 0.5::DOUBLE) / (nr + 128.0::DOUBLE)))
+        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS lr_micro
+        |  FROM range(256) r(i)
+        |  LEFT JOIN tc ON tc.bucket = r.i
+        |  LEFT JOIN rc ON rc.bucket = r.i
+        |  CROSS JOIN tot),
+        |w AS (
+        |  SELECT tb.doc_id, CAST(sum(tb.n_b) AS BIGINT) AS n_tokens,
+        |    CAST(sum(tb.n_b * ratio.lr_micro) AS BIGINT) AS log_w_micro
+        |  FROM tb JOIN ratio USING (bucket) GROUP BY 1),
+        |k AS (
+        |  SELECT d.doc_id, COALESCE(n_tokens, 0) AS n_tokens,
+        |    COALESCE(log_w_micro, 0) AS log_w_micro,
+        |    COALESCE(log_w_micro, 0)
+        |      + CAST(floor(-ln(-ln((('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT::DOUBLE + 1.0::DOUBLE) / 1152921504606846976.0::DOUBLE)) * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS gumbel_key_micro
+        |  FROM documents d LEFT JOIN w USING (doc_id)),
+        |sel AS (SELECT doc_id FROM k ORDER BY gumbel_key_micro DESC, doc_id LIMIT 100)
+        |SELECT k.doc_id, k.n_tokens, k.log_w_micro, k.gumbel_key_micro,
+        |  sel.doc_id IS NOT NULL AS selected
+        |FROM k LEFT JOIN sel USING (doc_id)
+        |ORDER BY k.doc_id""".stripMargin),
     // SemDeDup: semantic dedup with the O(n^2) cosine search bounded by
     // k-means cells — pairs score only within a cell (data-adaptive
     // buckets, vs q39's data-oblivious LSH), min-id survivor per pair;
     // the oracle rebuilds the deterministic-Lloyd cells (q108's CTEs) and
     // the in-cell cosine join in one statement
-    "q164_semdedup" -> { (s, d) =>
+    Gated("q164_semdedup", { (s, d) =>
       Similarity.semDedup(TestData.embeddings(s, d),
           k = 4, iterations = 2, minCosine = 0.4)
         .orderBy("vec_id")
     },
+      // SemDeDup: q108's deterministic-Lloyd cells + the q38 cosine formula
+      // restricted to in-cell pairs + the min-id survivor rule
+      s"""WITH $kmeansAsgCtes,
+        |$clusterCosineDupTail""".stripMargin),
     // exact-k weighted sampling without replacement (Efraimidis-Spirakis
     // reservoir keys from the portable md5 hash): the fixed-size sibling
     // of q64's Bernoulli weighted gate — "exactly k docs, length-weighted"
     // with no RNG state, one TakeOrdered pass
-    "q163_weighted_reservoir" -> { (s, d) =>
+    Gated("q163_weighted_reservoir", { (s, d) =>
       graft.analysis.Sampling.weightedReservoir(
           TestData.documents(s, d), k = 100, idCol = "doc_id",
           weight = col("n_chars"))
         .orderBy("sample_rank")
     },
+      // the ES key ln(u)/w with u from the shared 60-bit hash; ordering on
+      // the raw double, display rounded at 9
+      """WITH s AS (
+        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
+        |    ln((('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT::DOUBLE + 1.0::DOUBLE) / 1152921504606846976.0::DOUBLE)
+        |      / CAST(n_chars AS DOUBLE) AS es_key
+        |  FROM documents WHERE CAST(n_chars AS DOUBLE) > 0),
+        |r AS (
+        |  SELECT row_number() OVER (ORDER BY es_key DESC, doc_id) AS sample_rank,
+        |    doc_id, w, es_key
+        |  FROM s)
+        |SELECT sample_rank, doc_id, w, round(es_key, 9) AS es_key
+        |FROM r WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin),
     // the full production ANN stack, composed from three gated stages:
     // IVF coarse routing (q117) -> compressed-domain ADC scoring (q142)
     // -> exact re-rank of a constant shortlist (q161); the oracle rebuilds
     // the whole composition — quantizer, cell choice, codes, ADC order,
     // re-rank — in one statement
-    "q162_ivfadc" -> { (s, d) =>
+    Gated("q162_ivfadc", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.knnIvfAdc(emb, emb.filter(col("vec_id") === 0),
           nCells = 8, nProbe = 2, quantizerIters = 2,
           m = 8, codes = 16, pqIterations = 2, shortlist = 50, topK = 10)
         .orderBy("rank")
-    },
+    }, ivfAdcOracle),
     // PQ recall curve: the SAME quantize/encode/ADC machinery at two
     // operating points — q148's 12-bit pure-ADC floor next to the
     // production configuration (32-bit codes, ADC shortlist of 100, exact
@@ -1498,7 +3321,7 @@ object SparkEntry {
     // quantization noise vs this corpus's near-uniform distance spectrum
     // (measured: recall@10 plateaus ≤0.6 even at 80-bit codes); the
     // re-rank knob decouples recall from bit rate and hits 1.0 here
-    "q161_pq_recall_curve" -> { (s, d) =>
+    Gated("q161_pq_recall_curve", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0)
       val ex = Similarity.knnExactL2(emb, q, topK = 10)
@@ -1516,12 +3339,12 @@ object SparkEntry {
           Similarity.knnPqAdcRerank(emb, q, m = 8, codes = 16,
             iterations = 2, shortlist = 100, topK = 10)))
         .orderBy("config")
-    },
+    }, pqRecallCurveOracle),
     // hybrid-retrieval capstone: RRF-fuse popularity and recency rankings
     // (q128's combiner), then score the fused list with MRR/NDCG@10
     // against purchase relevance (q150's evaluator) — the end-to-end
     // "did the hybrid help" loop a search team runs per change
-    "q159_hybrid_eval" -> { (s, d) =>
+    Gated("q159_hybrid_eval", { (s, d) =>
       val clicks = TestData.clicks(s, d).filter(col("document_id").isNotNull)
       val fused = graft.analysis.SearchRank.reciprocalRankFusion(
         clicks.filter(col("event_type") === "click")
@@ -1544,11 +3367,43 @@ object SparkEntry {
         .select("doc")
       graft.analysis.SearchRank.rankingMetrics(ranking, relevant, k = 10)
     },
+      // q128's fusion SQL (popularity x recency lists) -> fused rank -> the
+      // q150 metric tail
+      s"""WITH c AS (
+        |  SELECT CAST(props->>'$$.k' AS INTEGER) AS doc, CAST(ts AS TIMESTAMP) AS ts, event_type
+        |  FROM events WHERE CAST(props->>'$$.k' AS INTEGER) IS NOT NULL),
+        |a AS (
+        |  SELECT doc, rank_a FROM (
+        |    SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank_a
+        |    FROM c WHERE event_type = 'click' GROUP BY doc)
+        |  WHERE rank_a <= 100),
+        |b AS (
+        |  SELECT doc, rank_b FROM (
+        |    SELECT doc, row_number() OVER (ORDER BY max(ts) DESC, doc) AS rank_b
+        |    FROM c GROUP BY doc)
+        |  WHERE rank_b <= 100),
+        |f AS (
+        |  SELECT COALESCE(a.doc, b.doc) AS doc,
+        |    round(COALESCE(1.0::DOUBLE / (60 + rank_a), 0) + COALESCE(1.0::DOUBLE / (60 + rank_b), 0), 6) AS rrf
+        |  FROM a FULL OUTER JOIN b ON a.doc = b.doc),
+        |rk AS (SELECT doc, row_number() OVER (ORDER BY rrf DESC, doc) AS rank FROM f),
+        |pc AS (SELECT doc, CAST(count(*) AS BIGINT) AS np FROM c WHERE event_type = 'purchase' GROUP BY 1),
+        |av AS (SELECT CAST(sum(np) AS DOUBLE) / count(*) AS avg_np FROM pc),
+        |rel AS (SELECT doc FROM pc CROSS JOIN av WHERE np::DOUBLE >= 1.2::DOUBLE * avg_np),
+        |$rankGainCtes,
+        |ff AS (
+        |  SELECT n_relevant,
+        |    CAST(sum(CAST(ln(2.0::DOUBLE) / ln((i + 1)::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS idcg
+        |  FROM ideal GROUP BY 1)
+        |SELECT ff.n_relevant, s2.first_rank,
+        |  round(CASE WHEN s2.first_rank IS NULL THEN 0.0::DOUBLE ELSE 1.0::DOUBLE / s2.first_rank END, 6) AS mrr,
+        |  round(s2.dcg / ff.idcg, 6) AS ndcg
+        |FROM ff CROSS JOIN s2""".stripMargin),
     // fuzzy decontamination: MinHash near-dup screen of the corpus AGAINST
     // the eval set (q50's exact n-gram check misses paraphrased leakage;
     // this is the fuzzy sibling big pretraining runs pair with it) — the
     // eval side is the sketched artifact, the corpus only bands+probes
-    "q158_fuzzy_decontam" -> { (s, d) =>
+    Gated("q158_fuzzy_decontam", { (s, d) =>
       val docs = TestData.documents(s, d)
       val pairs = Dedup.incrementalNearDupPairs(
         docs.filter(col("doc_id") % 17 =!= 0), // corpus probes...
@@ -1563,10 +3418,33 @@ object SparkEntry {
           (-col("best.nid")).as("matched_eval_doc"))
         .orderBy("doc_id")
     },
+      // q78's band/verify SQL with corpus-vs-eval roles and a per-corpus-doc
+      // argmax report (max jaccard, ties to the lower eval id)
+      s"""WITH $shingleSetsCtes,
+        |$minhashBandCtes,
+        |cand AS (
+        |  SELECT DISTINCT x.id AS new_id, y.id AS existing_id
+        |  FROM bands x JOIN bands y
+        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash
+        |  WHERE x.id % 17 <> 0 AND y.id % 17 = 0),
+        |verified AS (
+        |  SELECT new_id, existing_id,
+        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
+        |  FROM cand JOIN sets sa ON new_id = sa.id JOIN sets sb ON existing_id = sb.id),
+        |flagged AS (
+        |  SELECT new_id, existing_id, round(j, 4) AS jaccard FROM verified WHERE j >= 0.5),
+        |best AS (
+        |  SELECT new_id AS doc_id, jaccard, existing_id,
+        |    row_number() OVER (PARTITION BY new_id ORDER BY jaccard DESC, existing_id) AS rn,
+        |    count(*) OVER (PARTITION BY new_id) AS n_eval_matches
+        |  FROM flagged)
+        |SELECT doc_id, CAST(n_eval_matches AS BIGINT) AS n_eval_matches,
+        |  jaccard AS best_jaccard, existing_id AS matched_eval_doc
+        |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin),
     // weighted shortest paths (bounded Bellman-Ford) over the co-click
     // graph from its lowest-id document: edge length 1/weight, 4
     // relaxation rounds — the "how close, not how many hops" centrality
-    "q157_weighted_paths" -> { (s, d) =>
+    Gated("q157_weighted_paths", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
           TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
         .withColumn("dist", lit(1.0) / col("weight").cast("double"))
@@ -1575,10 +3453,33 @@ object SparkEntry {
         .withColumnRenamed("id", "document_id")
         .orderBy("document_id")
     },
+      // q73's edge CTE with dist = 1/weight, then 4 unrolled relaxations
+      // (each: carry UNION relax, min per node) from the lowest node id
+      s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst, 1.0::DOUBLE / count(*) AS dd
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
+        |  GROUP BY 1, 2),
+        |sym AS (SELECT src AS u, dst AS v, dd FROM ce UNION ALL SELECT dst, src, dd FROM ce),
+        |lm AS (SELECT min(u) AS id FROM sym),
+        |d0 AS (SELECT id, 0.0::DOUBLE AS d FROM lm),
+        |d1 AS (SELECT id, min(d) AS d FROM (
+        |  SELECT id, d FROM d0 UNION ALL
+        |  SELECT s.v AS id, d0.d + s.dd AS d FROM d0 JOIN sym s ON s.u = d0.id) GROUP BY id),
+        |d2 AS (SELECT id, min(d) AS d FROM (
+        |  SELECT id, d FROM d1 UNION ALL
+        |  SELECT s.v AS id, d1.d + s.dd AS d FROM d1 JOIN sym s ON s.u = d1.id) GROUP BY id),
+        |d3 AS (SELECT id, min(d) AS d FROM (
+        |  SELECT id, d FROM d2 UNION ALL
+        |  SELECT s.v AS id, d2.d + s.dd AS d FROM d2 JOIN sym s ON s.u = d2.id) GROUP BY id),
+        |d4 AS (SELECT id, min(d) AS d FROM (
+        |  SELECT id, d FROM d3 UNION ALL
+        |  SELECT s.v AS id, d3.d + s.dd AS d FROM d3 JOIN sym s ON s.u = d3.id) GROUP BY id)
+        |SELECT id AS document_id, round(d, 6) AS dist FROM d4 ORDER BY document_id""".stripMargin),
     // rolling trailing-7d distinct users per day via register-wise-max HLL
     // merges (the mergeable-sketch payoff: 64 ints per day + a max window
     // replaces per-window raw rescans), exact column alongside for honesty
-    "q156_rolling_distinct" -> { (s, d) =>
+    Gated("q156_rolling_distinct", { (s, d) =>
       val clicks = TestData.clicks(s, d)
       val est = graft.analysis.Sketches.rollingHllDistinct(
         clicks, dayCol = "event_date", valueCol = "session_id", windowDays = 7)
@@ -1591,19 +3492,75 @@ object SparkEntry {
         .agg(countDistinct("session_id").as("exact_distinct"))
       est.join(exact, "event_date").orderBy("event_date")
     },
+      // q130's register build at (day, bucket) grain, dense day x 64 spine,
+      // RANGE window rolling max on epoch-day, the shared estimator tail,
+      // and the exact trailing-7d distinct beside it
+      """WITH ev AS (
+        |  SELECT CAST(ts AS DATE) AS event_date, CAST(user_id AS VARCHAR) AS sid FROM events),
+        |h AS (SELECT event_date, md5(sid) AS hex FROM ev),
+        |t AS (
+        |  SELECT event_date,
+        |    CAST(('0x' || substring(hex, 1, 2))::BIGINT % 64 AS INT) AS bucket,
+        |    substring(hex, 3, 13) AS tail,
+        |    length(regexp_extract(substring(hex, 3, 13), '^(0*)', 1)) AS z
+        |  FROM h),
+        |rr AS (
+        |  SELECT event_date, bucket,
+        |    CASE WHEN z = 13 THEN 53
+        |         ELSE 4 * z + CASE WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 8 THEN 1
+        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 4 THEN 2
+        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 2 THEN 3
+        |                           ELSE 4 END
+        |    END AS rho
+        |  FROM t),
+        |daily AS (SELECT event_date, bucket, max(rho) AS reg FROM rr GROUP BY 1, 2),
+        |spine AS (
+        |  SELECT d.event_date, CAST(unnest(range(64)) AS INT) AS bucket
+        |  FROM (SELECT DISTINCT event_date FROM ev) d),
+        |dense AS (
+        |  SELECT s.event_date, s.bucket, daily.reg,
+        |    (s.event_date - DATE '1970-01-01') AS di
+        |  FROM spine s LEFT JOIN daily ON s.event_date = daily.event_date AND s.bucket = daily.bucket),
+        |rolled AS (
+        |  SELECT event_date, bucket,
+        |    max(reg) OVER (PARTITION BY bucket ORDER BY di RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS reg
+        |  FROM dense),
+        |regs AS (SELECT event_date, bucket, reg FROM rolled WHERE reg IS NOT NULL),
+        |agg AS (
+        |  SELECT event_date, count(*) AS used,
+        |    sum(CAST(pow(2.0, -reg) AS DECIMAL(38,30))) AS s_present
+        |  FROM regs GROUP BY 1),
+        |fin AS (
+        |  SELECT event_date,
+        |    CAST(s_present AS DOUBLE) + (64 - used) AS s,
+        |    64 - used AS v
+        |  FROM agg),
+        |est AS (
+        |  SELECT event_date,
+        |    round(CASE WHEN (0.709::DOUBLE * 64 * 64) / s <= 160 AND v > 0
+        |               THEN 64.0::DOUBLE * ln(64.0::DOUBLE / v)
+        |               ELSE (0.709::DOUBLE * 64 * 64) / s END, 4) AS est_distinct
+        |  FROM fin),
+        |exact AS (
+        |  SELECT d.event_date, count(DISTINCT e.sid) AS exact_distinct
+        |  FROM (SELECT DISTINCT event_date FROM ev) d
+        |  JOIN ev e ON e.event_date BETWEEN d.event_date - 6 AND d.event_date
+        |  GROUP BY 1)
+        |SELECT est.event_date, est.est_distinct, exact.exact_distinct
+        |FROM est JOIN exact USING (event_date) ORDER BY est.event_date""".stripMargin),
     // operating-point selection: F1-argmax threshold sweep over the
     // trained scorer's distinct scores — integer confusion counts, one
     // cumulative window, TakeOrdered(1)
-    "q154_f1_threshold" -> { (s, d) =>
+    Gated("q154_f1_threshold", { (s, d) =>
       val data = logregData(s, d)
       val w = graft.analysis.Features.logisticWeights(data, logregFeats, "y", 3, 5.0)
       graft.analysis.Features.f1ThresholdSweep(
         data.select(graft.analysis.Features.sigmoidScore(logregFeats, w).as("score"),
           col("y")))
-    },
+    }, f1ThresholdOracle(3)),
     // replayable train/val/test split report: md5-bucket 80/10/10 with
     // per-split label balance — the leakage-free split a training run pins
-    "q155_split_report" -> { (s, d) =>
+    Gated("q155_split_report", { (s, d) =>
       TextAnalysis.textStats(TestData.documents(s, d))
         .select(col("doc_id"),
           when(col("quality_score") >= 60, 1L).otherwise(0L).as("y"))
@@ -1615,10 +3572,29 @@ object SparkEntry {
         .select(col("split"), col("n"), col("n_pos"),
           round(col("n_pos").cast("double") / col("n"), 6).as("pos_rate"))
         .orderBy("split")
-    },
+    }, s"""WITH $docTextTokensCte,
+        |s AS (
+        |  SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_unique,
+        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
+        |  FROM t),
+        |sq AS (
+        |  SELECT doc_id, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
+        |      + (CAST(n_unique AS DOUBLE) / n_tokens) * 40.0
+        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
+        |  FROM s),
+        |lab AS (
+        |  SELECT doc_id, CASE WHEN quality_score >= 60 THEN 1 ELSE 0 END AS y,
+        |    ('0x' || substr(md5(doc_id::VARCHAR || '|split'), 1, 8))::BIGINT % 10 AS b
+        |  FROM sq),
+        |sp AS (
+        |  SELECT CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split, y
+        |  FROM lab)
+        |SELECT split, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
+        |  round(sum(y)::DOUBLE / count(*), 6) AS pos_rate
+        |FROM sp GROUP BY 1 ORDER BY 1""".stripMargin),
     // tie-aware ROC-AUC of the trained scorer via rank statistics: 2U
     // stays INTEGER (2*cumN + nN per score group), one floating ratio
-    "q153_auc" -> { (s, d) =>
+    Gated("q153_auc", { (s, d) =>
       val data = logregData(s, d)
       val w = graft.analysis.Features.logisticWeights(data, logregFeats, "y", 3, 5.0)
       val g = data
@@ -1637,11 +3613,11 @@ object SparkEntry {
           round(col("u2").cast("double") /
             (lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double")),
             6).as("auc"))
-    },
+    }, aucOracle(3)),
     // offline retrieval eval: MRR + NDCG@10 of the click-popularity
     // ranking against purchase relevance — binary gains, DECIMAL-cast log
     // terms, full-relevance-set IDCG
-    "q150_ranking_metrics" -> { (s, d) =>
+    Gated("q150_ranking_metrics", { (s, d) =>
       val clicks = TestData.clicks(s, d)
       val ranking = clicks.filter(col("event_type") === "click")
         .groupBy(col("document_id").as("doc")).agg(count(lit(1)).as("n"))
@@ -1652,22 +3628,41 @@ object SparkEntry {
       val relevant = clicks.filter(col("event_type") === "purchase")
         .select(col("document_id").as("doc"))
       graft.analysis.SearchRank.rankingMetrics(ranking, relevant, k = 10)
-    },
+    }, s"""WITH clicks AS (
+        |  SELECT CAST(props->>'$$.k' AS INTEGER) AS doc FROM events WHERE event_type = 'click'),
+        |rk AS (
+        |  SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank
+        |  FROM clicks GROUP BY doc),
+        |rel AS (
+        |  SELECT DISTINCT CAST(props->>'$$.k' AS INTEGER) AS doc
+        |  FROM events WHERE event_type = 'purchase'),
+        |$rankGainCtes,
+        |f AS (
+        |  SELECT n_relevant,
+        |    CAST(sum(CAST(ln(2.0::DOUBLE) / ln((i + 1)::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS idcg
+        |  FROM ideal GROUP BY 1)
+        |SELECT f.n_relevant, s2.first_rank,
+        |  round(CASE WHEN s2.first_rank IS NULL THEN 0.0::DOUBLE ELSE 1.0::DOUBLE / s2.first_rank END, 6) AS mrr,
+        |  round(s2.dcg / f.idcg, 6) AS ndcg
+        |FROM f CROSS JOIN s2""".stripMargin),
     // incremental span dedup, law-gated: per-(span, doc) index rows merge
     // disjointly across ingests, so corpus-index UNION batch-index reports
     // identically to the batch rebuild — the oracle IS q136's whole-corpus
     // SQL while Spark computes via the merged artifacts
-    "q149_span_dedup_increment" -> { (s, d) =>
+    Gated("q149_span_dedup_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val corpusIdx = Dedup.spanIndex(docs.filter(col("doc_id") % 10 < 8))
       val batchIdx = Dedup.spanIndex(docs.filter(col("doc_id") % 10 >= 8))
       Dedup.duplicatedSpansFromIndex(corpusIdx.unionByName(batchIdx), minDocs = 2)
         .orderBy("span_fp")
     },
+      // the law gate: the oracle is the WHOLE-CORPUS rebuild verbatim; only
+      // the Spark side goes through the merged incremental index
+      spanDedupOracle),
     // ANN quality capstone: recall@10 of the PQ/ADC path against exact
     // squared-L2 ground truth — the honesty metric every approximate
     // index ships with; both sides fully oracle-expressed
-    "q148_ann_recall" -> { (s, d) =>
+    Gated("q148_ann_recall", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0)
       val pq = Similarity.knnPqAdc(emb, q, m = 4, codes = 8, iterations = 2, topK = 10)
@@ -1677,29 +3672,80 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_common"))
         .select(lit(10).as("k"), col("n_common"),
           round(col("n_common").cast("double") / 10, 4).as("recall"))
-    },
+    }, annRecallOracle),
     // Gini coefficient of click concentration over documents: rank-formula
     // with an all-INTEGER numerator; the one-number skew report that says
     // whether salting/skew-join machinery is warranted
-    "q146_gini" -> { (s, d) =>
+    Gated("q146_gini", { (s, d) =>
       graft.analysis.Stats.giniConcentration(TestData.clicks(s, d), "document_id")
-    },
+    }, """WITH c AS (
+        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc FROM events
+        |  WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
+        |x AS (SELECT doc, count(*) AS x FROM c GROUP BY 1),
+        |r AS (SELECT doc, x, row_number() OVER (ORDER BY x, doc) AS i FROM x),
+        |a AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS n_keys, CAST(sum(x) AS BIGINT) AS total,
+        |    CAST(sum(i * x) AS BIGINT) AS sixi
+        |  FROM r)
+        |SELECT n_keys, total,
+        |  round((2 * sixi - (n_keys + 1) * total)::DOUBLE / (n_keys::DOUBLE * total::DOUBLE), 6) AS gini
+        |FROM a""".stripMargin),
     // burstiness (Fano factor) of hourly load per event type: VMR over
     // observed (date, hour) buckets, integer sums until the final ratios
-    "q147_burstiness" -> { (s, d) =>
+    Gated("q147_burstiness", { (s, d) =>
       TimeSeries.burstiness(TestData.clicks(s, d),
         keyCol = "event_type", tsCol = "event_ts", dateCol = "event_date")
-    },
+    }, """WITH hourly AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS d, hour(CAST(ts AS TIMESTAMP)) AS h, count(*) AS x
+        |  FROM events GROUP BY 1, 2, 3),
+        |a AS (
+        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_buckets,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(x * x) AS BIGINT) AS sxx
+        |  FROM hourly GROUP BY 1)
+        |SELECT event_type, n_buckets,
+        |  round(sx::DOUBLE / n_buckets, 6) AS mean,
+        |  round((sxx::DOUBLE / n_buckets - (sx::DOUBLE / n_buckets) * (sx::DOUBLE / n_buckets))
+        |        / (sx::DOUBLE / n_buckets), 6) AS vmr
+        |FROM a ORDER BY event_type""".stripMargin),
     // pairwise Jensen-Shannon divergence between per-source unigram
     // distributions over the top-500 vocab: the source-redundancy report
     // behind data-mixing decisions; DECIMAL-cast terms, report-sized output
-    "q145_source_divergence" -> { (s, d) =>
+    Gated("q145_source_divergence", { (s, d) =>
       TextAnalysis.sourceDivergence(TestData.documents(s, d), topV = 500)
     },
+      // dense source x top-500-vocab grid, JSD terms guarded per side and
+      // DECIMAL-cast before the sum (q134 recipe)
+      s"""WITH tk AS (
+        |  SELECT source, unnest(list_filter(string_split($normText, ' '), x -> x <> '')) AS token
+        |  FROM documents),
+        |cnt AS (SELECT source, token, count(*) AS c FROM tk GROUP BY 1, 2),
+        |voc AS (
+        |  SELECT token FROM (
+        |    SELECT token, row_number() OVER (ORDER BY sum(c) DESC, token) AS rk
+        |    FROM cnt GROUP BY token) WHERE rk <= 500),
+        |src AS (SELECT DISTINCT source FROM documents),
+        |dense AS (
+        |  SELECT s.source, v.token, COALESCE(c.c, 0) AS c
+        |  FROM src s CROSS JOIN voc v
+        |  LEFT JOIN cnt c ON c.source = s.source AND c.token = v.token),
+        |tot AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM dense GROUP BY 1),
+        |p AS (
+        |  SELECT d.source, d.token, d.c::DOUBLE / t.tot AS p
+        |  FROM dense d JOIN tot t USING (source) WHERE t.tot > 0),
+        |pair AS (
+        |  SELECT x.source AS source_a, y.source AS source_b, x.p AS p, y.p AS q
+        |  FROM p x JOIN p y ON x.token = y.token AND x.source < y.source),
+        |terms AS (
+        |  SELECT source_a, source_b,
+        |    CAST(0.5::DOUBLE * (CASE WHEN p > 0 THEN p * ln(2.0::DOUBLE * p / (p + q)) ELSE 0.0::DOUBLE END)
+        |       + 0.5::DOUBLE * (CASE WHEN q > 0 THEN q * ln(2.0::DOUBLE * q / (p + q)) ELSE 0.0::DOUBLE END) AS DECIMAL(28,12)) AS term
+        |  FROM pair)
+        |SELECT source_a, source_b, round(CAST(sum(term) AS DOUBLE), 6) AS jsd
+        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // TextRank keyword extraction (Mihalcea-Tarau): weighted PageRank over
     // the adjacent-token graph (len>=4 tokens, undirected least/greatest
     // pairs), 5 power iterations, top-20 — q56/q81's engine on a text graph
-    "q144_textrank" -> { (s, d) =>
+    Gated("q144_textrank", { (s, d) =>
       val t = filter(array_remove(TextAnalysis.tokens(col("text")), ""),
         x => length(x) >= 4)
       val pairs = TestData.documents(s, d)
@@ -1719,28 +3765,76 @@ object SparkEntry {
         .limit(20)
         .select(col("id").as("token"), round(col("pagerank"), 6).as("textrank"))
     },
+      // q131's tokenization + len>=4 filter, adjacency bigrams via index
+      // ranges, least/greatest undirected pairs, then the generated q81
+      // iteration tail; top-20 by (rank desc, token)
+      s"""WITH toks AS (
+        |  SELECT list_filter(string_split($normText, ' '), x -> x <> '') AS t0
+        |  FROM documents),
+        |seq AS (SELECT list_filter(t0, x -> len(x) >= 4) AS t FROM toks),
+        |bg0 AS (
+        |  SELECT t, CAST(unnest(range(0, len(t) - 1)) AS INT) AS i
+        |  FROM seq WHERE len(t) >= 2),
+        |bgp AS (SELECT t[i+1] AS a, t[i+2] AS b FROM bg0),
+        |ce AS (
+        |  SELECT least(a, b) AS src, greatest(a, b) AS dst, CAST(count(*) AS DOUBLE) AS w
+        |  FROM bgp WHERE a <> b GROUP BY 1, 2),
+        |sym AS (SELECT src AS u, dst AS v, w FROM ce UNION ALL SELECT dst AS u, src AS v, w FROM ce),
+        |${pageRankIterCtes(5)},
+        |sel AS (SELECT id AS token, r * (SELECT n FROM nn) AS pr FROM p5),
+        |top AS (SELECT token, pr, row_number() OVER (ORDER BY pr DESC, token) AS rk FROM sel)
+        |SELECT token, round(pr, 6) AS textrank FROM top WHERE rk <= 20
+        |ORDER BY pr DESC, token""".stripMargin),
     // cluster-quality metrics (purity / ARI / NMI) of q108's deterministic
     // k-means against the embeddings' reference label column: one grid
     // aggregate, integer pair-count sums, DECIMAL-cast entropy terms
-    "q143_cluster_quality" -> { (s, d) =>
+    Gated("q143_cluster_quality", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       graft.analysis.Clustering.clusterQuality(
         graft.analysis.Clustering.lloydKMeans(emb, k = 4, iterations = 2),
         emb)
     },
+      // q108's assignment chain + grid metrics: integer C(n,2) sums via >>1,
+      // the q134 DECIMAL MI recipe, entropy terms DECIMAL-cast the same way
+      s"""WITH $kmeansAsgCtes,
+        |lab AS (SELECT vec_id, label FROM embeddings),
+        |g AS (
+        |  SELECT a.cluster AS cl, l.label AS lb, count(*) AS c
+        |  FROM asg a JOIN lab l USING (vec_id) GROUP BY 1, 2),
+        |ma AS (SELECT cl, CAST(sum(c) AS BIGINT) AS a FROM g GROUP BY 1),
+        |mb AS (SELECT lb, CAST(sum(c) AS BIGINT) AS b FROM g GROUP BY 1),
+        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM g),
+        |sidx AS (SELECT CAST(sum((c * (c - 1)) >> 1) AS BIGINT) AS sidx FROM g),
+        |saa AS (SELECT CAST(sum((a * (a - 1)) >> 1) AS BIGINT) AS sa FROM ma),
+        |sbb AS (SELECT CAST(sum((b * (b - 1)) >> 1) AS BIGINT) AS sb FROM mb),
+        |pur AS (SELECT CAST(sum(mx) AS BIGINT) AS pmax FROM (SELECT cl, max(c) AS mx FROM g GROUP BY 1)),
+        |mi AS (
+        |  SELECT CAST(sum(CAST((g.c::DOUBLE / n) * ln(n::DOUBLE * g.c::DOUBLE / (a::DOUBLE * b::DOUBLE)) AS DECIMAL(28,12))) AS DOUBLE) AS mi
+        |  FROM g JOIN ma USING (cl) JOIN mb USING (lb) CROSS JOIN t),
+        |hcc AS (SELECT -CAST(sum(CAST((a::DOUBLE / n) * ln(a::DOUBLE / n) AS DECIMAL(28,12))) AS DOUBLE) AS hc FROM ma CROSS JOIN t),
+        |hll AS (SELECT -CAST(sum(CAST((b::DOUBLE / n) * ln(b::DOUBLE / n) AS DECIMAL(28,12))) AS DOUBLE) AS hl FROM mb CROSS JOIN t),
+        |cn AS (SELECT ((n * (n - 1)) >> 1)::DOUBLE AS cn FROM t)
+        |SELECT n,
+        |  round(pmax::DOUBLE / n, 6) AS purity,
+        |  round(CASE WHEN (sa + sb)::DOUBLE / 2.0::DOUBLE = sa::DOUBLE * sb::DOUBLE / cn THEN 1.0::DOUBLE
+        |    ELSE (sidx::DOUBLE - sa::DOUBLE * sb::DOUBLE / cn)
+        |         / ((sa + sb)::DOUBLE / 2.0::DOUBLE - sa::DOUBLE * sb::DOUBLE / cn) END, 6) AS ari,
+        |  round(CASE WHEN hc * hl > 0 THEN mi / sqrt(hc * hl) ELSE 0.0::DOUBLE END, 6) AS nmi
+        |FROM t CROSS JOIN sidx CROSS JOIN saa CROSS JOIN sbb CROSS JOIN pur
+        |CROSS JOIN mi CROSS JOIN hcc CROSS JOIN hll CROSS JOIN cn""".stripMargin),
     // product quantization + ADC (Jegou et al.): per-subspace deterministic
     // Lloyd codebooks (4x16 dims, 8 codes), codegen'd argmin encode, query
     // scored via m table lookups — the memory-bound ANN regime
-    "q142_pq_adc" -> { (s, d) =>
+    Gated("q142_pq_adc", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.knnPqAdc(emb, emb.filter(col("vec_id") === 0),
           m = 4, codes = 8, iterations = 2, topK = 10)
         .orderBy("rank")
-    },
+    }, pqAdcOracle),
     // k-anonymity + l-diversity release audit: equivalence classes over
     // (event_type, value band), user_id as the sensitive attribute; one
     // hash aggregate, class-count-sized output
-    "q141_k_anonymity" -> { (s, d) =>
+    Gated("q141_k_anonymity", { (s, d) =>
       graft.analysis.Profiling.kAnonymityAudit(
           TestData.eventsRaw(s, d),
           quasiIds = Seq(
@@ -1748,89 +3842,269 @@ object SparkEntry {
             ("value_band", floor(col("value") / 100).cast("int"))),
           sensitive = col("user_id"), k = 5, l = 3)
         .orderBy("event_type", "value_band")
-    },
+    }, """SELECT event_type, CAST(floor(value / 100) AS INT) AS value_band,
+        |  CAST(count(*) AS BIGINT) AS class_size,
+        |  count(DISTINCT user_id) AS n_sensitive_distinct,
+        |  count(*) < 5 AS k_risky,
+        |  count(DISTINCT user_id) < 3 AS l_risky
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // temperature-based source resampling (XLM/mT5 alpha-smoothing):
     // target mixture q_s ~ n_s^0.5, per-source keep rate min(1, q_s*N/n_s)
     // quantized to basis points, kept set via the replayable md5 gate
-    "q140_temperature_resample" -> { (s, d) =>
+    Gated("q140_temperature_resample", { (s, d) =>
       CorpusPrep.temperatureResample(TestData.documents(s, d), alpha = 0.5)
         .orderBy("source")
     },
+      // DECIMAL-cast pow terms before the normalizer sum; rate arithmetic
+      // all ::DOUBLE; the q44 md5-bucket gate with a '|tsamp' salt
+      """WITH per AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
+        |tot AS (
+        |  SELECT CAST(sum(n_docs) AS BIGINT) AS n_total,
+        |    CAST(sum(CAST(pow(n_docs, 0.5::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS wsum
+        |  FROM per),
+        |r AS (
+        |  SELECT source, n_docs,
+        |    pow(n_docs, 0.5::DOUBLE) / wsum AS share,
+        |    least(1.0::DOUBLE, pow(n_docs, 0.5::DOUBLE) / wsum * n_total / n_docs) AS rate
+        |  FROM per CROSS JOIN tot),
+        |rb AS (SELECT source, n_docs, share, CAST(floor(rate * 10000) AS INT) AS rate_bp FROM r),
+        |k AS (
+        |  SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept
+        |  FROM documents d JOIN rb ON d.source IS NOT DISTINCT FROM rb.source
+        |  WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || '|tsamp'), 1, 8))::BIGINT % 10000 < rate_bp
+        |  GROUP BY 1)
+        |SELECT rb.source, rb.n_docs, round(rb.share, 6) AS share, rb.rate_bp,
+        |  COALESCE(k.n_kept, 0) AS n_kept
+        |FROM rb LEFT JOIN k ON rb.source IS NOT DISTINCT FROM k.source
+        |ORDER BY rb.source""".stripMargin),
     // asymmetric containment (Broder's other resemblance measure):
     // near-SUBSET pairs symmetric jaccard misses — template/quote/
     // boilerplate fragments inside much larger docs; both directions
     // emitted from one unordered pair aggregate
-    "q139_containment" -> { (s, d) =>
+    Gated("q139_containment", { (s, d) =>
       Dedup.containmentPairs(TestData.documents(s, d),
           shingleN = 3, minContainment = 0.7)
         .orderBy("doc_src", "doc_dst")
     },
+      // q32's inverted-index CTEs; both directions projected from the one
+      // unordered pair aggregate, containment = c / n_src
+      s"""WITH $shingleSetsCtes,
+        |$shingleOverlapCtes,
+        |directed AS (
+        |  SELECT doc_a AS doc_src, doc_b AS doc_dst, na AS n_src, c FROM common
+        |  UNION ALL
+        |  SELECT doc_b AS doc_src, doc_a AS doc_dst, nb AS n_src, c FROM common)
+        |SELECT doc_src, doc_dst, round(CAST(c AS DOUBLE) / CAST(n_src AS DOUBLE), 4) AS containment
+        |FROM directed WHERE CAST(c AS DOUBLE) / CAST(n_src AS DOUBLE) >= 0.7
+        |ORDER BY doc_src, doc_dst""".stripMargin),
     // MMR diversity re-rank (Carbonell-Goldstein): greedy head re-rank of
     // the ANN top-20, score = 0.7*rel - 0.3*max-sim-to-selected; rel/sim
     // 4dp-rounded pre-greedy so the sequential step is engine-portable
-    "q138_mmr_rerank" -> { (s, d) =>
+    Gated("q138_mmr_rerank", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.mmrRerank(emb, emb.filter(col("vec_id") === 0),
           window = 20, take = 5, lambda = 0.7)
         .orderBy("mmr_rank")
     },
+      // q33's cosine + 4dp rounding, then the greedy unrolled as five
+      // LIMIT-1 steps; (1 - 0.7::DOUBLE) keeps the penalty coefficient the
+      // same IEEE double Scala's (1 - lambda) produces
+      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+        |c AS (SELECT vec_id AS id, embedding AS ce FROM embeddings WHERE vec_id <> 0),
+        |rel0 AS (
+        |  SELECT id,
+        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
+        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
+        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
+        |  FROM c CROSS JOIN q),
+        |cand AS (
+        |  SELECT id, round(cos, 4) AS rel
+        |  FROM (SELECT id, cos, row_number() OVER (ORDER BY cos DESC, id) AS rk FROM rel0)
+        |  WHERE rk <= 20),
+        |v AS (SELECT c.id, c.ce FROM c JOIN cand USING (id)),
+        |sp AS (
+        |  SELECT a.id AS ia, b.id AS ib,
+        |    round(list_sum(list_transform(range(1, len(a.ce) + 1), i -> CAST(a.ce[i] AS DOUBLE) * CAST(b.ce[i] AS DOUBLE)))
+        |      / (sqrt(list_sum(list_transform(range(1, len(a.ce) + 1), i -> CAST(a.ce[i] AS DOUBLE) * CAST(a.ce[i] AS DOUBLE))))
+        |         * sqrt(list_sum(list_transform(range(1, len(b.ce) + 1), i -> CAST(b.ce[i] AS DOUBLE) * CAST(b.ce[i] AS DOUBLE))))), 4) AS sim
+        |  FROM v a JOIN v b ON a.id < b.id),
+        |ss AS (SELECT ia, ib, sim FROM sp UNION ALL SELECT ib AS ia, ia AS ib, sim FROM sp),
+        |s1 AS (SELECT id, rel, 0.7::DOUBLE * rel AS score FROM cand ORDER BY score DESC, id LIMIT 1),
+        |r2 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM s1)),
+        |p2 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r2 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM s1) GROUP BY 1, 2),
+        |s2 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p2 ORDER BY score DESC, id LIMIT 1),
+        |sel2 AS (SELECT id FROM s1 UNION ALL SELECT id FROM s2),
+        |r3 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel2)),
+        |p3 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r3 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel2) GROUP BY 1, 2),
+        |s3 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p3 ORDER BY score DESC, id LIMIT 1),
+        |sel3 AS (SELECT id FROM sel2 UNION ALL SELECT id FROM s3),
+        |r4 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel3)),
+        |p4 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r4 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel3) GROUP BY 1, 2),
+        |s4 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p4 ORDER BY score DESC, id LIMIT 1),
+        |sel4 AS (SELECT id FROM sel3 UNION ALL SELECT id FROM s4),
+        |r5 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel4)),
+        |p5 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r5 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel4) GROUP BY 1, 2),
+        |s5 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p5 ORDER BY score DESC, id LIMIT 1),
+        |fin AS (
+        |  SELECT 1 AS mmr_rank, id, rel, score FROM s1
+        |  UNION ALL SELECT 2, id, rel, score FROM s2
+        |  UNION ALL SELECT 3, id, rel, score FROM s3
+        |  UNION ALL SELECT 4, id, rel, score FROM s4
+        |  UNION ALL SELECT 5, id, rel, score FROM s5)
+        |SELECT mmr_rank, id AS vec_id, rel AS relevance, round(score, 6) AS mmr_score
+        |FROM fin ORDER BY mmr_rank""".stripMargin),
     // k-core decomposition: simultaneous peel of degree<k nodes over the
     // co-click graph, bounded rounds (fixpoint-stable, SQL-unrollable);
     // the dense-subgraph filter run before community/centrality passes
-    "q137_kcore" -> { (s, d) =>
+    Gated("q137_kcore", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.kCore(edges, k = 3, rounds = 4)
         .withColumnRenamed("id", "document_id")
         .orderBy("document_id")
     },
+      // q73's co-click edge CTE + four unrolled simultaneous peels (each
+      // round: degree >= 3 survivors, edges kept iff both endpoints live)
+      s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
+        |  GROUP BY 1, 2),
+        |l0 AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst, src FROM ce),
+        |k1 AS (SELECT u FROM l0 GROUP BY u HAVING count(*) >= 3),
+        |l1 AS (SELECT l.u, l.v FROM l0 l JOIN k1 a ON l.u = a.u JOIN k1 b ON l.v = b.u),
+        |k2 AS (SELECT u FROM l1 GROUP BY u HAVING count(*) >= 3),
+        |l2 AS (SELECT l.u, l.v FROM l1 l JOIN k2 a ON l.u = a.u JOIN k2 b ON l.v = b.u),
+        |k3 AS (SELECT u FROM l2 GROUP BY u HAVING count(*) >= 3),
+        |l3 AS (SELECT l.u, l.v FROM l2 l JOIN k3 a ON l.u = a.u JOIN k3 b ON l.v = b.u),
+        |k4 AS (SELECT u FROM l3 GROUP BY u HAVING count(*) >= 3),
+        |l4 AS (SELECT l.u, l.v FROM l3 l JOIN k4 a ON l.u = a.u JOIN k4 b ON l.v = b.u)
+        |SELECT u AS document_id, CAST(count(*) AS BIGINT) AS core_degree
+        |FROM l4 GROUP BY 1 ORDER BY 1""".stripMargin),
     // substring-level dedup (Lee et al. 2022 shape): 8-token sliding
     // windows fingerprinted BEFORE the shuffle (span text never moves);
     // spans in >= 2 distinct docs reported with df, occurrence count, and
     // deterministic struct-min first location
-    "q136_span_dedup" -> { (s, d) =>
+    Gated("q136_span_dedup", { (s, d) =>
       Dedup.duplicatedSpans(TestData.documents(s, d), spanTokens = 8, minDocs = 2)
         .orderBy("span_fp")
     },
+      // q131's tokenization, stride-1 windows, the portable 60-bit md5
+      // fingerprint, and the struct-min first location as a two-level group
+      spanDedupOracle),
     // seasonal-naive anomaly detection: each (day, hour) load vs the
     // MEDIAN load of that hour across days (robust baseline, no model fit)
-    "q133_seasonal_anomalies" -> { (s, d) =>
+    Gated("q133_seasonal_anomalies", { (s, d) =>
       TimeSeries.seasonalAnomalies(TestData.clicks(s, d), tsCol = "event_ts")
         .orderBy("event_date", "hour")
-    },
+    }, """WITH hourly AS (
+        |  SELECT CAST(ts AS DATE) AS event_date, hour(CAST(ts AS TIMESTAMP)) AS "hour", count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |base AS (SELECT "hour", quantile_cont(n, 0.5) AS baseline_median FROM hourly GROUP BY 1)
+        |SELECT event_date, hourly."hour" AS "hour", n, baseline_median,
+        |  round(n / baseline_median, 4) AS ratio,
+        |  n > 2.0::DOUBLE * baseline_median AS anomalous
+        |FROM hourly JOIN base ON hourly."hour" = base."hour"
+        |ORDER BY event_date, hourly."hour"""".stripMargin),
     // mutual information between event type and hour-of-day: chi-square's
     // "how strong" companion, DECIMAL-summed over the observed grid
-    "q134_mutual_information" -> { (s, d) =>
+    Gated("q134_mutual_information", { (s, d) =>
       graft.analysis.Stats.mutualInformation(
         TestData.clicks(s, d).withColumn("hour", hour(col("event_ts"))),
         aCol = "event_type", bCol = "hour")
-    },
+    }, """WITH c AS (
+        |  SELECT event_type AS a, hour(CAST(ts AS TIMESTAMP)) AS b FROM events),
+        |g AS (SELECT a, b, count(*) AS c FROM c GROUP BY 1, 2),
+        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ca FROM g GROUP BY 1),
+        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM g GROUP BY 1),
+        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM g)
+        |SELECT n,
+        |  round(CAST(sum(CAST((g.c::DOUBLE / n) * ln(n::DOUBLE * g.c::DOUBLE / (ca::DOUBLE * cb::DOUBLE)) AS DECIMAL(28,12))) AS DOUBLE), 6) AS mi
+        |FROM g JOIN ma USING (a) JOIN mb USING (b) CROSS JOIN t
+        |GROUP BY n""".stripMargin),
     // RAG/pretraining passage chunking: overlapping fixed-token windows,
     // one generator per doc, codegen'd slices, no shuffle
-    "q131_passage_chunks" -> { (s, d) =>
+    Gated("q131_passage_chunks", { (s, d) =>
       CorpusPrep.chunkPassages(TestData.documents(s, d),
           windowTokens = 64, strideTokens = 48)
         .orderBy("doc_id", "passage_idx")
-    },
+    }, s"""WITH t AS (
+        |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS toks
+        |  FROM documents),
+        |s AS (
+        |  SELECT doc_id, toks, CAST(unnest(range(0, len(toks), 48)) AS INT) AS start
+        |  FROM t WHERE len(toks) > 0)
+        |SELECT doc_id, CAST(start / 48 AS INT) AS passage_idx,
+        |  len(toks[start+1:start+64]) AS n_tokens,
+        |  array_to_string(toks[start+1:start+64], ' ') AS passage
+        |FROM s ORDER BY doc_id, passage_idx""".stripMargin),
     // hash-based m-out-of-n bootstrap: replayable replicate membership,
     // DECIMAL-exact replicate means, quantile-band CI
-    "q132_subsample_ci" -> { (s, d) =>
+    Gated("q132_subsample_ci", { (s, d) =>
       graft.analysis.Stats.subsampleCI(Tables.orders(s, d),
         idCol = "o_orderkey", valCol = "o_totalprice")
-    },
+    }, """WITH v AS (
+        |  SELECT o_orderkey AS id, o_totalprice::DOUBLE AS v FROM orders
+        |  WHERE o_totalprice IS NOT NULL),
+        |r AS (SELECT id, v, unnest(range(20)) AS rep FROM v),
+        |sel AS (
+        |  SELECT rep, v FROM r
+        |  WHERE ('0x' || substring(md5(rep::VARCHAR || '|' || id::VARCHAR), 1, 8))::BIGINT % 10000 < 5000),
+        |m AS (SELECT rep, CAST(sum(CAST(v AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS m FROM sel GROUP BY rep),
+        |band AS (SELECT quantile_cont(m, [0.025, 0.975]) AS q FROM m),
+        |tot AS (
+        |  SELECT count(*) AS n,
+        |    CAST(sum(CAST(v AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS mean_raw
+        |  FROM v)
+        |SELECT n, round(mean_raw, 6) AS mean, round(q[1], 6) AS ci_lo, round(q[2], 6) AS ci_hi
+        |FROM tot CROSS JOIN band""".stripMargin),
     // DBSCAN-shape density clustering: core/border/noise roles over the
     // LSH-bucketed cosine pair graph, CC on the core subgraph only; the
     // bucket width is the occupancy-constant axisSignBitsFor(n)
-    "q129_density_clusters" -> { (s, d) =>
+    Gated("q129_density_clusters", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val bits = Similarity.axisSignBitsFor(emb.count())
       Similarity.densityClusters(emb,
           Similarity.axisSignSignature(_, bits), minCosine = 0.2, minPts = 2)
         .orderBy("vec_id")
     },
+      // q39's bucketed pair SQL at 0.2 + degree roles + recursive closure
+      // over the core-core subgraph + min-cluster border attachment
+      s"""WITH RECURSIVE $signBucketCtes,
+        |p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.2),
+        |sym AS (SELECT doc_a AS id, doc_b AS nb FROM p UNION ALL SELECT doc_b, doc_a FROM p),
+        |core AS (SELECT id FROM sym GROUP BY id HAVING count(*) >= 2),
+        |csym AS (
+        |  SELECT doc_a AS a, doc_b AS b FROM p
+        |  WHERE doc_a IN (SELECT id FROM core) AND doc_b IN (SELECT id FROM core)
+        |  UNION
+        |  SELECT doc_b AS a, doc_a AS b FROM p
+        |  WHERE doc_a IN (SELECT id FROM core) AND doc_b IN (SELECT id FROM core)),
+        |reach(id, r) AS (
+        |  SELECT id, id FROM core
+        |  UNION
+        |  SELECT reach.id, csym.b FROM reach JOIN csym ON csym.a = reach.r),
+        |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+        |border AS (
+        |  SELECT s.id, min(cl.cluster_id) AS cluster_id
+        |  FROM sym s JOIN cl ON s.nb = cl.id
+        |  WHERE s.id NOT IN (SELECT id FROM core)
+        |  GROUP BY s.id)
+        |SELECT v.vec_id,
+        |  CASE WHEN cl.id IS NOT NULL THEN 'core'
+        |       WHEN border.id IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
+        |  COALESCE(cl.cluster_id, border.cluster_id) AS cluster_id
+        |FROM embeddings v
+        |LEFT JOIN cl ON v.vec_id = cl.id
+        |LEFT JOIN border ON v.vec_id = border.id
+        |ORDER BY vec_id""".stripMargin),
     // hybrid-search rank fusion: RRF of the by-clicks and by-sessions
     // top-100 lists - rank-based, so incomparable scores need no calibration
-    "q128_rrf_fusion" -> { (s, d) =>
+    Gated("q128_rrf_fusion", { (s, d) =>
       val clicks = TestData.clicks(s, d).filter(col("document_id").isNotNull)
       graft.analysis.SearchRank.reciprocalRankFusion(
         clicks.groupBy("document_id").agg(count(lit(1)).as("n_clicks")),
@@ -1838,78 +4112,222 @@ object SparkEntry {
         idCol = "document_id",
         orderA = Seq(desc("n_clicks")), orderB = Seq(desc("n_sessions")))
         .select("document_id", "rank_a", "rank_b", "rrf")
-    },
+    }, """WITH c AS (
+        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc, CAST(user_id AS VARCHAR) AS sid
+        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
+        |a AS (
+        |  SELECT doc, rank_a FROM (
+        |    SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank_a
+        |    FROM c GROUP BY doc)
+        |  WHERE rank_a <= 100),
+        |b AS (
+        |  SELECT doc, rank_b FROM (
+        |    SELECT doc, row_number() OVER (ORDER BY count(DISTINCT sid) DESC, doc) AS rank_b
+        |    FROM c GROUP BY doc)
+        |  WHERE rank_b <= 100)
+        |SELECT COALESCE(a.doc, b.doc) AS document_id, rank_a, rank_b,
+        |  round(COALESCE(1.0::DOUBLE / (60 + rank_a), 0) + COALESCE(1.0::DOUBLE / (60 + rank_b), 0), 6) AS rrf
+        |FROM a FULL OUTER JOIN b ON a.doc = b.doc
+        |ORDER BY rrf DESC, document_id""".stripMargin),
     // community detection over the co-click graph: synchronous LPA, 3
     // unrolled rounds, (count desc, label asc) tie-break - the whole loop
     // is gated, like q56/q108
-    "q127_label_propagation" -> { (s, d) =>
+    Gated("q127_label_propagation", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.labelPropagation(edges, rounds = 3)
         .withColumnRenamed("id", "document_id")
         .orderBy("document_id")
     },
+      // q56's graph CTEs + 3 unrolled LPA sweeps; the row_number tie-break
+      // (count desc, label asc) mirrors the engine's struct-min argmax
+      s"""WITH $sessionClicksCtes,
+        |$coClickSymCtes,
+        |l0 AS (SELECT DISTINCT u AS id, u AS label FROM sym),
+        |r1 AS (
+        |  SELECT id, label FROM (
+        |    SELECT s.u AS id, l.label, count(*) AS c,
+        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
+        |    FROM sym s JOIN l0 l ON s.v = l.id GROUP BY s.u, l.label)
+        |  WHERE rn = 1),
+        |r2 AS (
+        |  SELECT id, label FROM (
+        |    SELECT s.u AS id, l.label, count(*) AS c,
+        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
+        |    FROM sym s JOIN r1 l ON s.v = l.id GROUP BY s.u, l.label)
+        |  WHERE rn = 1),
+        |r3 AS (
+        |  SELECT id, label FROM (
+        |    SELECT s.u AS id, l.label, count(*) AS c,
+        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
+        |    FROM sym s JOIN r2 l ON s.v = l.id GROUP BY s.u, l.label)
+        |  WHERE rn = 1)
+        |SELECT id AS document_id, label AS community FROM r3
+        |ORDER BY document_id""".stripMargin),
     // per-node triangle counts over the co-click graph: degree-ordered
     // orientation (compact-forward) bounds wedge fan-out at O(√m) per node
     // — hub-proof where a naive neighbor-pair join is quadratic in degree
-    "q73_triangle_count" -> { (s, d) =>
+    Gated("q73_triangle_count", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.triangleCounts(edges)
         .withColumnRenamed("id", "document_id")
         .orderBy("document_id")
     },
+      // same co-click edge CTE as q56; triangles via the same degree-ordered
+      // orientation the Spark side uses (each triangle closes once at its
+      // smallest (deg, id) corner)
+      s"""WITH $sessionClicksCtes,
+        |$coClickSymCtes,
+        |deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
+        |o AS (
+        |  SELECT s.u, s.v
+        |  FROM sym s JOIN deg da ON s.u = da.u JOIN deg db ON s.v = db.u
+        |  WHERE da.d < db.d OR (da.d = db.d AND s.u < s.v)),
+        |tri AS (
+        |  SELECT x.u AS a, x.v AS b, y.v AS c
+        |  FROM o x JOIN o y ON x.u = y.u AND x.v <> y.v
+        |  JOIN o z ON z.u = x.v AND z.v = y.v),
+        |pern AS (
+        |  SELECT id, count(*) AS n_triangles FROM (
+        |    SELECT a AS id FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
+        |  GROUP BY 1),
+        |nodes AS (SELECT DISTINCT u AS id FROM sym)
+        |SELECT nodes.id AS document_id, COALESCE(n_triangles, 0) AS n_triangles
+        |FROM nodes LEFT JOIN pern USING (id) ORDER BY document_id""".stripMargin),
     // item-item co-visitation recommendations: top-k co-clicked neighbors
     // per document, one degree-bounded window over the hub-guarded edges
-    "q79_covisit_recs" -> { (s, d) =>
+    Gated("q79_covisit_recs", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.covisitationRecs(edges, k = 3)
         .withColumnRenamed("item", "document_id")
         .orderBy("document_id", "rank")
-    },
+    }, s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst, count(*) AS weight
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
+        |  GROUP BY 1, 2),
+        |sym AS (
+        |  SELECT src AS document_id, dst AS rec, weight FROM ce
+        |  UNION ALL SELECT dst AS document_id, src AS rec, weight FROM ce),
+        |r AS (
+        |  SELECT document_id, rec, weight,
+        |    row_number() OVER (PARTITION BY document_id ORDER BY weight DESC, rec) AS "rank"
+        |  FROM sym)
+        |SELECT document_id, rec, weight, CAST("rank" AS INT) AS "rank"
+        |FROM r WHERE "rank" <= 3 ORDER BY document_id, "rank"""".stripMargin),
     // cohort retention triangle: keys cohorted by first active day, exact
     // distinct actives per (cohort, offset) cell
-    "q74_retention" -> { (s, d) =>
+    Gated("q74_retention", { (s, d) =>
       Relational.retentionMatrix(TestData.clicks(s, d))
         .orderBy("cohort_day", "day_offset")
-    },
+    }, """WITH active AS (
+        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS k, CAST(ts AS DATE) AS day FROM events),
+        |cohort AS (SELECT k, min(day) AS cohort_day FROM active GROUP BY 1)
+        |SELECT cohort_day, CAST(date_diff('day', cohort_day, day) AS INT) AS day_offset,
+        |  count(DISTINCT k) AS n_active
+        |FROM active JOIN cohort USING (k)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // first-touch attribution: one window pass credits each purchase to the
     // session's earliest view — never a conversions⋈touches self-join
-    "q75_attribution" -> { (s, d) =>
+    Gated("q75_attribution", { (s, d) =>
       graft.analysis.Funnel.firstTouchAttribution(
           TestData.clicks(s, d), touchType = "view", conversionType = "purchase")
         .orderBy("document_id")
-    },
+    }, """WITH c AS (
+        |  SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
+        |    CAST(props->>'$.k' AS INTEGER) AS document_id,
+        |    CAST(ts AS TIMESTAMP) AS ts, event_type, value
+        |  FROM events),
+        |f AS (
+        |  SELECT *,
+        |    first_value(CASE WHEN event_type = 'view' THEN document_id END IGNORE NULLS)
+        |      OVER (PARTITION BY session_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS first_touch
+        |  FROM c)
+        |SELECT first_touch AS document_id, count(*) AS n_conversions,
+        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS attributed_value
+        |FROM f WHERE event_type = 'purchase' AND first_touch IS NOT NULL
+        |GROUP BY 1 ORDER BY document_id""".stripMargin),
     // last-touch sibling: same window, most recent view gets the credit
-    "q82_attribution_last" -> { (s, d) =>
+    Gated("q82_attribution_last", { (s, d) =>
       graft.analysis.Funnel.lastTouchAttribution(
           TestData.clicks(s, d), touchType = "view", conversionType = "purchase")
         .orderBy("document_id")
-    },
+    }, """WITH c AS (
+        |  SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
+        |    CAST(props->>'$.k' AS INTEGER) AS document_id,
+        |    CAST(ts AS TIMESTAMP) AS ts, event_type, value
+        |  FROM events),
+        |f AS (
+        |  SELECT *,
+        |    last_value(CASE WHEN event_type = 'view' THEN document_id END IGNORE NULLS)
+        |      OVER (PARTITION BY session_id ORDER BY ts, event_id
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_touch
+        |  FROM c)
+        |SELECT last_touch AS document_id, count(*) AS n_conversions,
+        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS attributed_value
+        |FROM f WHERE event_type = 'purchase' AND last_touch IS NOT NULL
+        |GROUP BY 1 ORDER BY document_id""".stripMargin),
     // video-shaped frame sampling over the binary media column: fixed-size
     // chunks, every stride-th kept; gated on frame digests so the oracle
     // never compares raw binary
-    "q76_frame_sample" -> { (s, d) =>
+    Gated("q76_frame_sample", { (s, d) =>
       val media = Multimodal.attachBinary(TestData.documents(s, d))
       Multimodal.sampleFrames(media, chunkBytes = 64, stride = 4)
         .select(col("doc_id"), col("frame_idx"),
           length(col("frame")).as("frame_bytes"), md5(col("frame")).as("frame_md5"))
         .orderBy("doc_id", "frame_idx")
     },
+      // DuckDB cannot substring a BLOB, so the oracle slices the VARCHAR text
+      // instead — byte-identical to the engine's binary slicing because the
+      // corpus is pure ASCII (verified: 0 docs where octet_length <> length);
+      // md5 of the substring hashes the same UTF-8 bytes either way
+      """WITH c AS (SELECT doc_id, text,
+        |  CAST(ceil(octet_length(encode(text)) / 64.0) AS INT) AS n_chunks FROM documents),
+        |f AS (
+        |  SELECT doc_id, CAST(unnest(list_filter(range(0, n_chunks), i -> i % 4 = 0)) AS INT) AS frame_idx, text
+        |  FROM c WHERE n_chunks > 0)
+        |SELECT doc_id, frame_idx,
+        |  length(substring(text, frame_idx * 64 + 1, 64)) AS frame_bytes,
+        |  md5(substring(text, frame_idx * 64 + 1, 64)) AS frame_md5
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin),
     // first-order Markov transition counts between event types per session
-    "q77_transition_matrix" -> { (s, d) =>
+    Gated("q77_transition_matrix", { (s, d) =>
       Relational.transitionMatrix(TestData.clicks(s, d))
         .orderBy("prev_type", "event_type")
-    },
+    }, """WITH c AS (
+        |  SELECT event_id, CAST(user_id AS VARCHAR) AS sid, event_type,
+        |    CAST(ts AS TIMESTAMP) AS ts
+        |  FROM events),
+        |l AS (
+        |  SELECT sid, event_type,
+        |    lag(event_type) OVER (PARTITION BY sid ORDER BY ts, event_id) AS prev_type
+        |  FROM c)
+        |SELECT prev_type, event_type, count(*) AS n
+        |FROM l WHERE prev_type IS NOT NULL
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // top session paths: first-5-event type sequences counted corpus-wide
-    "q80_top_paths" -> { (s, d) =>
+    Gated("q80_top_paths", { (s, d) =>
       Relational.topSessionPaths(TestData.clicks(s, d), maxSteps = 5, k = 20)
-    },
+    }, """WITH c AS (
+        |  SELECT event_id, CAST(user_id AS VARCHAR) AS sid, event_type,
+        |    CAST(ts AS TIMESTAMP) AS ts
+        |  FROM events),
+        |r AS (
+        |  SELECT sid, event_type,
+        |    row_number() OVER (PARTITION BY sid ORDER BY ts, event_id) AS rn
+        |  FROM c),
+        |p AS (
+        |  SELECT sid, string_agg(event_type, '>' ORDER BY rn) AS path
+        |  FROM r WHERE rn <= 5 GROUP BY sid)
+        |SELECT path, count(*) AS n_sessions
+        |FROM p GROUP BY path
+        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
     // weighted PageRank: rank mass flows proportional to co-click counts —
     // a pair co-clicked in 50 sessions pulls 50x a one-off; same lazy
     // 5-round chain as q56, strength replaces degree
-    "q81_pagerank_weighted" -> { (s, d) =>
+    Gated("q81_pagerank_weighted", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.pageRank(edges, damping = 0.85, iterations = 5, weightCol = Some("weight"))
@@ -1920,83 +4338,194 @@ object SparkEntry {
             .as("pagerank_micro"))
         .orderBy("document_id")
     },
+      // q56's unrolled power iteration with edge weights: deg becomes the
+      // weight-strength sum and each hop carries r*w/strength
+      s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst, CAST(count(*) AS DOUBLE) AS w
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
+        |  GROUP BY 1, 2),
+        |sym AS (SELECT src AS u, dst AS v, w FROM ce UNION ALL SELECT dst AS u, src AS v, w FROM ce),
+        |${pageRankIterCtes(5)}
+        |SELECT id AS document_id,
+        |  CAST(floor(r * (SELECT n FROM nn) * 1000000 + 0.5) AS BIGINT) AS pagerank_micro
+        |FROM p5 ORDER BY document_id""".stripMargin),
     // language-ID confusion matrix (stopword-marker heuristic vs labels)
-    "q21_lang_id" -> { (s, d) =>
+    Gated("q21_lang_id", { (s, d) =>
       TextAnalysis.langIdConfusion(TestData.documents(s, d))
-    },
+    }, s"""WITH $langGuessCtes
+        |SELECT lang_label, guessed_lang, count(*) AS n_docs
+        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // batched inference boundary: fixed-size batches inside each partition
     // (the GPU-feeding shape); the deterministic md5 stub model makes the
     // batching plumbing itself oracle-checkable
-    "q67_batched_embed" -> { (s, d) =>
+    Gated("q67_batched_embed", { (s, d) =>
       Multimodal.batchedEmbed(TestData.documents(s, d), batchSize = 32)
         .select(col("doc_id"), posexplode(col("embedding")).as(Seq("dim", "value")))
         .withColumn("value", round(col("value"), 6))
         .orderBy("doc_id", "dim")
-    },
+    }, """WITH e AS (SELECT doc_id, text, unnest(range(8)) AS j FROM documents)
+        |SELECT doc_id, CAST(j AS INT) AS dim,
+        |  round(CAST(('0x' || substring(md5(COALESCE(text, '')), CAST(2 * j + 1 AS INT), 2))::BIGINT AS DOUBLE) / 256.0, 6) AS value
+        |FROM e ORDER BY doc_id, dim""".stripMargin),
     // sparse TF-IDF cosine pairs via inverted term index (df-cutoff guards
     // the quadratic; decimal-summed dots for shuffle-order independence)
-    "q57_tfidf_pairs" -> { (s, d) =>
+    Gated("q57_tfidf_pairs", { (s, d) =>
       graft.analysis.SearchRank.tfidfPairs(TestData.documents(s, d), minCosine = 0.3)
         .orderBy("doc_a", "doc_b")
-    },
+    }, s"""WITH $docTokensCte,
+        |sh AS (
+        |  SELECT doc_id AS id, unnest(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS term
+        |  FROM toks WHERE len(t) >= 3),
+        |tf AS (SELECT id, term, count(*) AS tf FROM sh WHERE term <> '' GROUP BY 1, 2),
+        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+        |dfs AS (
+        |  SELECT term, count(*) AS df FROM tf GROUP BY 1
+        |  HAVING count(*) <= greatest(2, (SELECT n FROM nn) // 50)),
+        |w AS (
+        |  SELECT tf.id, tf.term,
+        |    CAST(tf.tf AS DOUBLE) *
+        |      ((CAST((SELECT n FROM nn) AS DOUBLE) - CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+        |        / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))) AS w
+        |  FROM tf JOIN dfs USING (term)),
+        |norms AS (SELECT id, sum(CAST(w * w AS DECIMAL(28,12))) AS norm2 FROM w GROUP BY id),
+        |pairs AS (
+        |  SELECT a.id AS doc_a, b.id AS doc_b, sum(CAST(a.w * b.w AS DECIMAL(28,12))) AS dot
+        |  FROM w a JOIN w b ON a.term = b.term AND a.id < b.id
+        |  GROUP BY 1, 2),
+        |sc AS (
+        |  SELECT doc_a, doc_b,
+        |    round(CAST(p.dot AS DOUBLE) /
+        |      (sqrt(CAST(na.norm2 AS DOUBLE)) * sqrt(CAST(nb.norm2 AS DOUBLE))), 4) AS cosine
+        |  FROM pairs p JOIN norms na ON p.doc_a = na.id JOIN norms nb ON p.doc_b = nb.id)
+        |SELECT doc_a, doc_b, cosine FROM sc WHERE cosine >= 0.3
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // content fingerprints (md5-normalized + winnowing-style robust)
-    "q22_fingerprints" -> { (s, d) =>
+    Gated("q22_fingerprints", { (s, d) =>
       val docs = TestData.documents(s, d)
       docs.select(col("doc_id"),
           TextAnalysis.fingerprint(col("text")).as("fingerprint"),
           TextAnalysis.robustFingerprint(col("text")).as("robust_fingerprint"))
         .orderBy("doc_id")
-    },
+    }, s"""WITH t AS (
+        |  SELECT doc_id,
+        |    $normText AS norm
+        |  FROM documents),
+        |sh AS (
+        |  SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t)
+        |SELECT doc_id, md5(norm) AS fingerprint,
+        |  md5(array_to_string(list_sort(list_transform(
+        |        CASE WHEN len(toks) >= 3
+        |             THEN list_transform(range(len(toks) - 2), i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
+        |             ELSE [] END,
+        |        s -> md5(s)))[1:8], ',')) AS robust_fingerprint
+        |FROM sh ORDER BY doc_id""".stripMargin),
     // search scoring: TF x smoothed-IDF ranking (the domain's query side)
-    "q27_search_rank" -> { (s, d) =>
+    Gated("q27_search_rank", { (s, d) =>
       graft.analysis.SearchRank.search(TestData.documents(s, d),
         terms = Seq("spark", "query", "hash"), k = 20)
-    },
+    }, s"""WITH $docTokensCte,
+        |stats AS (SELECT
+        |  (SELECT count(*) FROM documents) AS n,
+        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'spark')) AS df_spark,
+        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'query')) AS df_query,
+        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'hash')) AS df_hash),
+        |scored AS (
+        |  SELECT doc_id,
+        |    round(
+        |      CAST(len(list_filter(t, x -> x = 'spark')) AS DOUBLE) * ((n - df_spark + 0.5) / (df_spark + 0.5))
+        |      + CAST(len(list_filter(t, x -> x = 'query')) AS DOUBLE) * ((n - df_query + 0.5) / (df_query + 0.5))
+        |      + CAST(len(list_filter(t, x -> x = 'hash')) AS DOUBLE) * ((n - df_hash + 0.5) / (df_hash + 0.5)), 4) AS score
+        |  FROM toks CROSS JOIN stats)
+        |SELECT doc_id, score FROM scored WHERE score > 0
+        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
     // exact dedup groups by fingerprint (hash groupBy)
-    "q30_exact_dedup" -> { (s, d) =>
+    Gated("q30_exact_dedup", { (s, d) =>
       Dedup.exactDupGroups(TestData.documents(s, d))
         .select("fingerprint", "keeper", "n_dupes")
         .orderBy("keeper")
-    },
+    }, s"""SELECT md5($normText) AS fingerprint,
+        | min(doc_id) AS keeper, count(*) AS n_dupes
+        |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin),
     // MinHash+LSH near-dup candidates, exact-Jaccard verified
-    "q31_minhash_neardups" -> { (s, d) =>
+    Gated("q31_minhash_neardups", { (s, d) =>
       Dedup.minhashNearDupPairs(TestData.documents(s, d)).orderBy("doc_a", "doc_b")
-    },
+    }, s"""WITH $shingleSetsCtes,
+        |$minhashCandCtes,
+        |verified AS (
+        |  SELECT doc_a, doc_b,
+        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
+        |  FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
+        |SELECT doc_a, doc_b, round(j, 4) AS jaccard
+        |FROM verified WHERE j >= 0.8 ORDER BY doc_a, doc_b""".stripMargin),
     // incremental near-dup: the daily-ingest shape — new docs (doc_id%10=0)
     // sketched and band-joined against the existing corpus's materialized
     // signatures; candidates cross the boundary only, cost scales with the
     // batch, never the corpus
-    "q78_incremental_neardups" -> { (s, d) =>
+    Gated("q78_incremental_neardups", { (s, d) =>
       val docs = TestData.documents(s, d)
       Dedup.incrementalNearDupPairs(
           docs.filter(col("doc_id") % 10 === 0),
           docs.filter(col("doc_id") % 10 =!= 0))
         .orderBy("new_id", "existing_id")
     },
+      // q31's md5 minhash/band pipeline with the candidate join restricted to
+      // the new/existing boundary (x new, y existing, no ordering constraint)
+      s"""WITH $shingleSetsCtes,
+        |$minhashBandCtes,
+        |cand AS (
+        |  SELECT DISTINCT x.id AS new_id, y.id AS existing_id
+        |  FROM bands x JOIN bands y
+        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash
+        |  WHERE x.id % 10 = 0 AND y.id % 10 <> 0),
+        |verified AS (
+        |  SELECT new_id, existing_id,
+        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
+        |  FROM cand JOIN sets sa ON new_id = sa.id JOIN sets sb ON existing_id = sb.id)
+        |SELECT new_id, existing_id, round(j, 4) AS jaccard
+        |FROM verified WHERE j >= 0.8 ORDER BY new_id, existing_id""".stripMargin),
     // exact n-gram Jaccard pairs via inverted-index join
-    "q32_ngram_jaccard" -> { (s, d) =>
+    Gated("q32_ngram_jaccard", { (s, d) =>
       Dedup.ngramJaccardPairs(TestData.documents(s, d)).orderBy("doc_a", "doc_b")
-    },
+    }, s"""WITH $shingleSetsCtes,
+        |$shingleOverlapCtes
+        |SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS jaccard
+        |FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.8
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // the df-cutoff path of the same operator — the web-scale guard that
     // bounds per-shingle join fan-out at maxShingleDf²/2. Semantics are
     // biased LOW (dropped high-df shingles vanish from the common count but
     // not the denominator — pairs can only be missed, never fabricated);
     // the oracle replicates exactly that bias
-    "q71_ngram_jaccard_cutoff" -> { (s, d) =>
+    Gated("q71_ngram_jaccard_cutoff", { (s, d) =>
       Dedup.ngramJaccardPairs(TestData.documents(s, d), maxShingleDf = 4)
         .orderBy("doc_a", "doc_b")
     },
+      // identical to q32 except high-df shingles are dropped from the inverted
+      // index BEFORE the pair join (df <= 4) while n_sh keeps the full set
+      // size — the biased-low cutoff semantics, replicated bit-for-bit
+      s"""WITH $shingleSetsCtes,
+        |inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
+        |df AS (SELECT shingle, count(*) AS df FROM inv GROUP BY 1),
+        |inv2 AS (SELECT inv.id, inv.n_sh, inv.shingle FROM inv JOIN df USING (shingle) WHERE df <= 4),
+        |common AS (
+        |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
+        |  FROM inv2 x JOIN inv2 y ON x.shingle = y.shingle AND x.id < y.id
+        |  GROUP BY 1, 2, 3, 4)
+        |SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS jaccard
+        |FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.8
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // brute-force cosine top-k (exact ANN baseline)
-    "q33_knn_bruteforce" -> { (s, d) =>
+    Gated("q33_knn_bruteforce", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.knnBruteForce(emb, emb.filter(col("vec_id") < 8), k = 5)
         .orderBy("query_id", "rank")
-    },
+    }, annExactTop5Sql),
     // SimHash near-dup buckets via custom Catalyst expression. Gated with the
     // PORTABLE md5 token hash so the DuckDB oracle can rebuild the identical
     // 64-bit signature (bit votes, band keys, hamming — all replicated in
     // SQL); the FNV-1a fast path stays spec-verified (OpsSpec).
-    "q34_simhash_buckets" -> { (s, d) =>
+    Gated("q34_simhash_buckets", { (s, d) =>
       val docs = TestData.documents(s, d)
       val sigs = docs.select(col("doc_id"),
         SimHash.simhash64Md5(TextAnalysis.tokens(col("text"))).as("simhash"))
@@ -2014,73 +4543,129 @@ object SparkEntry {
         .filter(col("hamming") <= 6)
         .orderBy("doc_a", "doc_b")
     },
+      // rebuilds the md5-portable SimHash bit-for-bit: per-token 64-bit hash =
+      // first 8 md5 bytes (big-endian; bit b lives in hex digit 16 - b//4 at
+      // nibble bit b%4), per-bit ±1 vote across tokens, sign → signature bit;
+      // band keys and hamming are recomputed from the same bit vector
+      s"""WITH $docTokensCte,
+        |$simhashPairsTail""".stripMargin),
     // LSH-bucketed ANN (scale path). Gated with the axis-sign signature —
     // the same bucketed physical shape as the random-plane variant (which
     // stays spec-verified), but engine-portable, so the oracle reproduces
     // buckets, candidates, and ranks exactly. Width is the occupancy-
     // constant axisSignBitsFor(n) (round 10: no gated production path left
     // on a fixed-width signature — the q72-vs-q243 knee lesson)
-    "q35_knn_lsh" -> { (s, d) =>
+    Gated("q35_knn_lsh", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val bits = Similarity.axisSignBitsFor(emb.count())
       Similarity.knnLshWith(emb, emb.filter(col("vec_id") < 64),
           Similarity.axisSignSignature(_, bits), k = 5)
         .orderBy("query_id", "rank")
     },
+      // axis-sign LSH buckets (bit j = sign of component j) — engine-portable,
+      // so buckets, candidates, and per-query ranks replicate exactly
+      s"""WITH $signBucketCtes,
+        |q AS (SELECT vec_id AS query_id, embedding AS qe, bucket FROM e WHERE vec_id < 64),
+        |c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM e),
+        |p AS (
+        |  SELECT query_id, neighbor_id,
+        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
+        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
+        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
+        |  FROM c JOIN q USING (bucket) WHERE query_id <> neighbor_id),
+        |$annRankTail""".stripMargin),
     // embedding-cosine near-dup pairs, exact baseline (oracle-checked);
     // the LSH-bucketed variant is the 100TB path (spec-verified)
-    "q38_embedding_neardups" -> { (s, d) =>
+    Gated("q38_embedding_neardups", { (s, d) =>
       Similarity.embeddingNearDupPairsExact(TestData.embeddings(s, d), minCosine = 0.4)
         .orderBy("doc_a", "doc_b")
-    },
+    }, s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+        |p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
+        |    $embeddingCosineXY AS cosine
+        |  FROM e x JOIN e y ON x.vec_id < y.vec_id)
+        |SELECT doc_a, doc_b, round(cosine, 4) AS cosine
+        |FROM p WHERE cosine >= 0.4 ORDER BY doc_a, doc_b""".stripMargin),
     // IVF-ANN: k-means coarse quantizer + probe join. Gated at nProbe=nCells
     // (exhaustive probing ≡ brute force, so the q33 brute-force SQL is a full
     // oracle for the whole IVF plumbing — cells, probe join, ranking);
     // sub-linear probing (nProbe < nCells) is SimilaritySpec-verified.
-    "q37_knn_ivf" -> { (s, d) =>
+    Gated("q37_knn_ivf", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.knnIvf(emb, emb.filter(col("vec_id") < 8), k = 5, nCells = 8, nProbe = 8)
         .orderBy("query_id", "rank")
     },
+      // nProbe = nCells ⇒ every query probes every cell ⇒ IVF ≡ brute force,
+      // so the q33 brute-force SQL gates the full IVF plumbing
+      annExactTop5Sql),
     // IVF with the deterministic Lloyd quantizer, gated at nProbe < nCells:
     // the oracle rebuilds the quantizer (2 unrolled rounds on normalized
     // vectors), replicates each query's 2-of-8 cell CHOICE, and hash-matches
     // the probed ranking - the sub-linear path itself, not its exhaustive
     // degeneration (which is all q37 proves)
-    "q117_knn_ivf_probed" -> { (s, d) =>
+    Gated("q117_knn_ivf_probed", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       Similarity.knnIvfDeterministic(emb, emb.filter(col("vec_id") < 8),
           k = 5, nCells = 8, nProbe = 2, quantizerIters = 2)
         .orderBy("query_id", "rank")
     },
+      // the deterministic-Lloyd quantizer unrolled on NORMALIZED vectors
+      // (q108's machinery), then each query's top-2 cells by (d2, cell),
+      // the probe join, and the exact cosine ranking within the candidates
+      s"""WITH $lloydCellRankCtes,
+        |corpus AS (SELECT vec_id AS neighbor_id, cluster AS cell FROM cellr WHERE rn = 1),
+        |probes AS (SELECT vec_id AS query_id, cluster AS cell FROM cellr WHERE rn <= 2 AND vec_id < 8),
+        |cand AS (
+        |  SELECT query_id, neighbor_id FROM probes JOIN corpus USING (cell)
+        |  WHERE query_id <> neighbor_id),
+        |p AS (
+        |  SELECT cand.query_id, cand.neighbor_id,
+        |    list_sum(list_transform(range(1, len(cq.embedding) + 1), i -> CAST(cn.embedding[i] AS DOUBLE) * CAST(cq.embedding[i] AS DOUBLE)))
+        |      / (sqrt(list_sum(list_transform(range(1, len(cn.embedding) + 1), i -> CAST(cn.embedding[i] AS DOUBLE) * CAST(cn.embedding[i] AS DOUBLE))))
+        |         * sqrt(list_sum(list_transform(range(1, len(cq.embedding) + 1), i -> CAST(cq.embedding[i] AS DOUBLE) * CAST(cq.embedding[i] AS DOUBLE))))) AS cosine
+        |  FROM cand
+        |  JOIN e cq ON cand.query_id = cq.vec_id
+        |  JOIN e cn ON cand.neighbor_id = cn.vec_id),
+        |$annRankTail""".stripMargin),
     // embedding near-dup pairs through LSH buckets — the 100 TB path of q38
     // (both sides shuffle on the bucket key, never all-pairs), gated with the
     // portable axis-sign signature so the oracle rebuilds the same buckets;
     // width is axisSignBitsFor(n) so bucket occupancy stays ~32 at any scale
-    "q39_embedding_neardups_lsh" -> { (s, d) =>
+    Gated("q39_embedding_neardups_lsh", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val bits = Similarity.axisSignBitsFor(emb.count())
       Similarity.embeddingNearDupPairsWith(emb,
           Similarity.axisSignSignature(_, bits), minCosine = 0.4)
         .orderBy("doc_a", "doc_b")
-    },
+    }, s"""WITH $signBucketCtes,
+        |p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
+        |    $embeddingCosineXY AS cosine
+        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
+        |SELECT doc_a, doc_b, round(cosine, 4) AS cosine
+        |FROM p WHERE cosine >= 0.4 ORDER BY doc_a, doc_b""".stripMargin),
     // pairs → dedup decisions: near-dup pairs are not transitive, so the
     // unit of deletion is the connected component, not the pair. Iterative
     // min-label propagation over the q38 pair graph; keeper = min doc id per
     // component. Oracle: DuckDB recursive-CTE transitive closure.
-    "q49_dedup_clusters" -> { (s, d) =>
+    Gated("q49_dedup_clusters", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val pairs = Similarity.embeddingNearDupPairsExact(emb, minCosine = 0.4)
       Dedup.dedupClusters(pairs, emb.select(col("vec_id").as("doc_id")),
           pairsWithinDocs = true)
         .orderBy("doc_id")
-    },
+    }, s"""WITH RECURSIVE p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |$cosineClosureTail""".stripMargin),
     // the composition a 100 TB dedup actually runs: connected components
     // over the LSH-BUCKETED pair generator (q39's sub-quadratic path)
     // instead of q49's O(n²) exact feed — pair recall is bounded by the
     // bucket agreement, and the recursive-CTE oracle closes over exactly
     // that pair set
-    "q72_dedup_clusters_lsh" -> { (s, d) =>
+    Gated("q72_dedup_clusters_lsh", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val pairs = Similarity.embeddingNearDupPairsWith(emb,
         Similarity.axisSignSignature(_, 6), minCosine = 0.4)
@@ -2088,6 +4673,19 @@ object SparkEntry {
           pairsWithinDocs = true)
         .orderBy("doc_id")
     },
+      // q49's transitive closure, but over the LSH-bucketed pair set (q39's
+      // generator): candidates exist only where the 6-axis sign buckets agree
+      s"""WITH RECURSIVE e AS (
+        |  SELECT vec_id, embedding,
+        |    CAST(list_sum(list_transform(range(6), j ->
+        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0 THEN (1 << j) ELSE 0 END)) AS BIGINT) AS bucket
+        |  FROM embeddings),
+        |p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |$cosineClosureTail""".stripMargin),
     // q72's OCCUPANCY-CONSTANT production variant: signature width grows
     // with corpus size (axisSignBitsFor: ceil(log2(n/32)) bits), so
     // per-bucket fan-out stays ~32 at ANY scale — the knee BENCHSCALE8
@@ -2095,7 +4693,7 @@ object SparkEntry {
     // width, and BENCHSCALE9 shows this variant staying near-linear. The
     // oracle derives the same width with integer bit-length arithmetic
     // (len(bin(ceil(n/32)-1))); SimilaritySpec pins formula agreement
-    "q243_dedup_clusters_lsh_adaptive" -> { (s, d) =>
+    Gated("q243_dedup_clusters_lsh_adaptive", { (s, d) =>
       val emb = TestData.embeddings(s, d)
       val bits = Similarity.axisSignBitsFor(emb.count())
       val pairs = Similarity.embeddingNearDupPairsWith(emb,
@@ -2104,83 +4702,227 @@ object SparkEntry {
           pairsWithinDocs = true)
         .orderBy("doc_id")
     },
+      // q72's closure with the signature width derived from the corpus size
+      // by integer bit-length arithmetic (no log anywhere): b =
+      // min(len(bin(ceil(n/32)-1)), 62), ≡ ceil(log2(n/32)) clamped
+      s"""WITH RECURSIVE $signBucketCtes,
+        |p AS (
+        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
+        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
+        |  WHERE $embeddingCosineXY
+        |        >= 0.4),
+        |$cosineClosureTail""".stripMargin),
     // gap-based sessionization (window-function batch variant; the
     // streaming flatMapGroupsWithState twin is spec-verified)
-    "q36_sessionize" -> { (s, d) =>
+    Gated("q36_sessionize", { (s, d) =>
       graft.streaming.Sessionize.sessionizeBatch(
           TestData.clicks(s, d), gapSeconds = 1800, userCol = "session_id")
         .orderBy("session_id", "session_idx")
-    },
+    }, """WITH c AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |f AS (
+        |  SELECT session_id, ts,
+        |    CASE WHEN date_diff('second', lag(ts) OVER w, ts) > 1800 THEN 1 ELSE 0 END AS flag
+        |  FROM c WINDOW w AS (PARTITION BY session_id ORDER BY ts)),
+        |s AS (
+        |  SELECT session_id, ts,
+        |    CAST(sum(flag) OVER (PARTITION BY session_id ORDER BY ts ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_idx
+        |  FROM f)
+        |SELECT session_id, session_idx, min(ts) AS session_start, max(ts) AS session_end,
+        |  count(*) AS n_events
+        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // Spark's NATIVE session_window operator (vs q36's window-function
     // formulation): strict-gap merge semantics, window.end = last + gap
-    "q47_session_window" -> { (s, d) =>
+    Gated("q47_session_window", { (s, d) =>
       graft.streaming.Sessionize.sessionWindowAgg(
           TestData.eventsRaw(s, d), gap = "30 minutes", tsCol = "ts")
         .orderBy("user_id", "session_start")
     },
+      // native session_window semantics: a gap of exactly 30 min still MERGES
+      // (inclusive boundary, verified in StreamJoinSpec); session_end = last
+      // event + gap
+      """WITH c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |f AS (
+        |  SELECT user_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS flag
+        |  FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |s AS (
+        |  SELECT user_id, ts,
+        |    sum(flag) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM f)
+        |SELECT user_id, min(ts) AS session_start,
+        |  max(ts) + INTERVAL 30 MINUTE AS session_end, count(*) AS n_events
+        |FROM s GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""".stripMargin),
     // Gopher-family repetition quality signals (dup token/2-gram/3-gram
     // fractions) — single projection pass, no shuffle
-    "q48_repetition_stats" -> { (s, d) =>
+    Gated("q48_repetition_stats", { (s, d) =>
       TextAnalysis.repetitionStats(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // dup fraction = 1 - distinct/total per granularity; same tokenization
+      // as q20/q32
+      s"""WITH $docTokensCte,
+        |g AS (
+        |  SELECT doc_id, t,
+        |    CASE WHEN len(t) >= 2 THEN list_transform(range(len(t) - 1), i -> t[i+1] || ' ' || t[i+2]) ELSE [] END AS b,
+        |    CASE WHEN len(t) >= 3 THEN list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]) ELSE [] END AS tri
+        |  FROM toks)
+        |SELECT doc_id, len(t) AS n_tokens,
+        |  CASE WHEN len(t) > 0 THEN round(1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 4) ELSE 0.0 END AS dup_token_frac,
+        |  CASE WHEN len(b) > 0 THEN round(1.0 - CAST(len(list_distinct(b)) AS DOUBLE) / len(b), 4) ELSE 0.0 END AS dup_bigram_frac,
+        |  CASE WHEN len(tri) > 0 THEN round(1.0 - CAST(len(list_distinct(tri)) AS DOUBLE) / len(tri), 4) ELSE 0.0 END AS dup_trigram_frac
+        |FROM g ORDER BY doc_id""".stripMargin),
     // multimodal: binary media column → per-partition stub decode → metadata
-    "q40_media_metadata" -> { (s, d) =>
+    Gated("q40_media_metadata", { (s, d) =>
       Multimodal.mediaMetadata(s, TestData.documents(s, d)).orderBy("doc_id")
-    },
+    }, """SELECT doc_id,
+        | octet_length(encode(text)) AS n_bytes,
+        | 64 + (octet_length(encode(text)) % 448) AS width,
+        | 64 + ((ascii(text) * 7) % 448) AS height,
+        | CASE octet_length(encode(text)) % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // capstone: full corpus-prep pipeline (quality → exact dedup → near-dup
     // removal), surviving documents
-    "q41_corpus_prep" -> { (s, d) =>
+    Gated("q41_corpus_prep", { (s, d) =>
       CorpusPrep.prepareCorpus(TestData.documents(s, d))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
-    },
+    }, corpusPrepBatchSql),
     // winsorized min-max scaling: percentile-clipped robust normalizer,
     // cutpoints broadcast, scaling a pure projection
-    "q126_winsorized_scale" -> { (s, d) =>
+    Gated("q126_winsorized_scale", { (s, d) =>
       graft.analysis.Features.winsorizedScale(Tables.orders(s, d),
           idCol = "o_orderkey", valCol = "o_totalprice")
         .orderBy("o_orderkey")
     },
+      // percentile(array) == quantile_cont(list) parity (q68/q112 recipe)
+      """WITH cuts AS (
+        |  SELECT quantile_cont(o_totalprice::DOUBLE, [0.05, 0.95]) AS c FROM orders),
+        |d AS (
+        |  SELECT o_orderkey, o_totalprice::DOUBLE AS value, c[1] AS lo, c[2] AS hi
+        |  FROM orders CROSS JOIN cuts WHERE o_totalprice IS NOT NULL)
+        |SELECT o_orderkey, value,
+        |  round(least(greatest(value, lo), hi), 6) AS clipped,
+        |  CASE WHEN hi = lo THEN 0.5::DOUBLE
+        |       ELSE round((least(greatest(value, lo), hi) - lo) / (hi - lo), 6) END AS scaled
+        |FROM d ORDER BY o_orderkey""".stripMargin),
     // content-defined-chunk media dedup: frame-hash set jaccard via an
     // inverted-index join - the re-encode/concat catcher beside q98's phash
-    "q125_chunk_overlap" -> { (s, d) =>
+    Gated("q125_chunk_overlap", { (s, d) =>
       Multimodal.chunkOverlapPairs(TestData.documents(s, d), minJaccard = 0.5)
         .orderBy("doc_a", "doc_b")
     },
+      // q76's frame sampling + md5 chunk hashes -> distinct-set jaccard
+      """WITH c AS (SELECT doc_id, text,
+        |  CAST(ceil(octet_length(encode(text)) / 64.0) AS INT) AS n_chunks FROM documents),
+        |f AS (
+        |  SELECT DISTINCT doc_id, md5(substring(text, frame_idx * 64 + 1, 64)) AS h
+        |  FROM (SELECT doc_id, CAST(unnest(list_filter(range(0, n_chunks), i -> i % 4 = 0)) AS INT) AS frame_idx, text
+        |        FROM c WHERE n_chunks > 0)),
+        |sz AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
+        |common AS (
+        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS c
+        |  FROM f x JOIN f y ON x.h = y.h AND x.doc_id < y.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT doc_a, doc_b, c AS n_shared,
+        |  round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard
+        |FROM common JOIN sz sa ON doc_a = sa.doc_id JOIN sz sb ON doc_b = sb.doc_id
+        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // first BPE merge step: adjacent char-pair counts over the frequency-
     // weighted vocabulary (pair counting never touches the corpus again)
-    "q124_bpe_merge_pairs" -> { (s, d) =>
+    Gated("q124_bpe_merge_pairs", { (s, d) =>
       TextAnalysis.bpeMergeCandidates(TestData.documents(s, d), k = 20)
-    },
+    }, s"""WITH toks AS (
+        |  SELECT unnest(string_split($normText, ' ')) AS w
+        |  FROM documents),
+        |words AS (SELECT w, count(*) AS freq FROM toks WHERE w <> '' GROUP BY 1),
+        |pairs AS (
+        |  SELECT substring(w, CAST(pi + 1 AS INT), 2) AS pair, freq
+        |  FROM (SELECT w, freq, unnest(range(length(w) - 1)) AS pi
+        |        FROM words WHERE length(w) >= 2))
+        |SELECT pair, count(*) AS n_words, CAST(sum(freq) AS BIGINT) AS total_count
+        |FROM pairs GROUP BY 1
+        |ORDER BY total_count DESC, pair LIMIT 20""".stripMargin),
     // corpus-LM quality proxy: mean unigram log-prob under the corpus's own
     // add-one-smoothed model (the CCNet/KenLM filter shape); DECIMAL-summed
-    "q119_unigram_logprob" -> { (s, d) =>
+    Gated("q119_unigram_logprob", { (s, d) =>
       TextAnalysis.unigramLogProb(TestData.documents(s, d)).orderBy("doc_id")
-    },
+    }, s"""WITH toks AS (
+        |  SELECT doc_id, unnest(string_split($normText, ' ')) AS tok
+        |  FROM documents),
+        |tk AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
+        |freq AS (SELECT tok, count(*) AS c FROM tk GROUP BY 1),
+        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tk),
+        |sc AS (
+        |  SELECT doc_id, count(*) AS n_tokens,
+        |    sum(CAST(ln(CAST(c + 1 AS DOUBLE) / CAST(n + v AS DOUBLE)) AS DECIMAL(28,12))) AS s
+        |  FROM tk CROSS JOIN t JOIN freq USING (tok)
+        |  GROUP BY 1)
+        |SELECT d.doc_id, COALESCE(sc.n_tokens, 0) AS n_tokens,
+        |  CASE WHEN sc.n_tokens > 0 THEN round(sc.s::DOUBLE / sc.n_tokens::DOUBLE, 6) END AS avg_logprob
+        |FROM documents d LEFT JOIN sc USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
     // contrastive-training negatives: per-anchor top-k by md5(anchor|cand) -
     // replayable across engines/retries, no RNG state
-    "q120_negative_sample" -> { (s, d) =>
+    Gated("q120_negative_sample", { (s, d) =>
       val docs = TestData.documents(s, d)
       graft.analysis.Sampling.negativeSample(
           docs, docs.filter(col("doc_id") % 50 === 0), k = 5)
         .orderBy("anchor_id", "rank")
-    },
+    }, """WITH a AS (SELECT doc_id AS anchor_id FROM documents WHERE doc_id % 50 = 0),
+        |c AS (SELECT doc_id AS neg_id FROM documents),
+        |r AS (
+        |  SELECT anchor_id, neg_id,
+        |    row_number() OVER (PARTITION BY anchor_id
+        |      ORDER BY md5(anchor_id::VARCHAR || '|' || neg_id::VARCHAR), neg_id) AS "rank"
+        |  FROM a CROSS JOIN c WHERE anchor_id <> neg_id)
+        |SELECT anchor_id, neg_id, "rank" FROM r WHERE "rank" <= 5
+        |ORDER BY anchor_id, "rank"""".stripMargin),
     // data-mixing weights: per-source token mass vs uniform target; the
     // multiplier that rebalances a multi-source training mixture
-    "q121_mixture_weights" -> { (s, d) =>
+    Gated("q121_mixture_weights", { (s, d) =>
       CorpusPrep.sourceMixtureWeights(TestData.documents(s, d)).orderBy("source")
-    },
+    }, s"""WITH d AS (
+        |  SELECT source,
+        |    COALESCE(len(list_filter(string_split($normText, ' '), x -> x <> '')), 0) AS n_tok
+        |  FROM documents),
+        |ps AS (SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
+        |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total, count(*) AS n_sources FROM ps)
+        |SELECT source, n_docs, n_tokens,
+        |  round(n_tokens::DOUBLE / total::DOUBLE, 6) AS share,
+        |  CASE WHEN n_tokens > 0
+        |    THEN round(total::DOUBLE / (n_sources::DOUBLE * n_tokens::DOUBLE), 6) END AS weight
+        |FROM ps CROSS JOIN t ORDER BY source""".stripMargin),
     // b-bit minhash: 2-bit signature components (128x smaller sketches);
     // the corrected collision estimate gated NEXT TO the exact jaccard
-    "q122_bbit_minhash" -> { (s, d) =>
+    Gated("q122_bbit_minhash", { (s, d) =>
       Dedup.bbitMinhashPairs(TestData.documents(s, d), minJaccard = 0.8)
         .orderBy("doc_a", "doc_b")
     },
+      // q31's md5 minhash pipeline + the b-bit collision estimate: low 2 bits
+      // of each component = last hex char mod 4; est = (f - 1/4)/(1 - 1/4)
+      s"""WITH $shingleSetsCtes,
+        |$minhashCandCtes,
+        |verified AS (
+        |  SELECT doc_a, doc_b,
+        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j,
+        |    CAST(list_sum(list_transform(range(16), i ->
+        |      CASE WHEN ('0x' || substring(ga.sig[i+1], 32, 1))::BIGINT % 4
+        |             = ('0x' || substring(gb.sig[i+1], 32, 1))::BIGINT % 4
+        |           THEN 1 ELSE 0 END)) AS DOUBLE) / 16 AS f
+        |  FROM cand
+        |  JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id
+        |  JOIN sigs ga ON doc_a = ga.id JOIN sigs gb ON doc_b = gb.id)
+        |SELECT doc_a, doc_b, round(j, 4) AS jaccard,
+        |  round((f - 0.25::DOUBLE) / 0.75::DOUBLE, 4) AS jaccard_bbit
+        |FROM verified WHERE j >= 0.8 ORDER BY doc_a, doc_b""".stripMargin),
     // incremental capstone: the top decile of doc ids arrives as "today's
     // batch" against yesterday's corpus + sketch + fingerprint artifacts;
     // the oracle is the BATCH pipeline over the union (q41's SQL verbatim) —
     // the law a daily ingest must satisfy
-    "q118_corpus_prep_increment" -> { (s, d) =>
+    Gated("q118_corpus_prep_increment", { (s, d) =>
       val docs = TestData.documents(s, d)
       val cut = docs.agg(max("doc_id")).collect().head.getLong(0) * 9 / 10
       val old = docs.filter(col("doc_id") <= cut)
@@ -2189,18 +4931,33 @@ object SparkEntry {
       CorpusPrep.prepareCorpusIncrement(corpus, sketch, fps, fresh)
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
-    }
+    },
+      // SAME SQL as q41: the incremental path must reproduce the batch
+      // rebuild over the union exactly (monotonic-id law)
+      corpusPrepBatchSql)
   )
 
-  private def relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private def relationalQueries: Seq[Gated] = Seq(
     // A1-A3, P6: single-pass grouped aggregate (TPC-H Q1 shape)
-    "q10_pricing_summary" -> { (s, d) =>
+    Gated("q10_pricing_summary", { (s, d) =>
       Relational.pricingSummary(Tables.lineitem(s, d))
     },
+      // Money sums run in DECIMAL on both sides (exact, order-independent) and
+      // surface as DOUBLE — see Relational.moneySum.
+      """SELECT l_returnflag, l_linestatus,
+        | sum(l_quantity) AS sum_qty,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_base_price,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_disc_price,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_charge,
+        | round(avg(l_quantity), 4) AS avg_qty,
+        | round(avg(l_discount), 4) AS avg_disc,
+        | count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-31 00:00:00'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // as-of join (union+window, one shuffle): each purchase matched to the
     // user's most recent strictly-earlier click; DuckDB's native ASOF JOIN
     // is the oracle
-    "q42_asof_join" -> { (s, d) =>
+    Gated("q42_asof_join", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       graft.relational.TemporalJoin.asofJoin(
           left = ev.filter(col("event_type") === "purchase")
@@ -2216,9 +4973,21 @@ object SparkEntry {
             .as("gap_sec"))
         .orderBy("event_id")
     },
+      // DuckDB's native ASOF JOIN is the independent oracle for the engine's
+      // union+window as-of join (no ties exist on (user_id, ts), so ASOF's
+      // free tie choice and the engine's explicit tie-break coincide)
+      """WITH e AS (
+        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+        |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
+        |c AS (SELECT event_id AS last_click_id, user_id, ts FROM e WHERE event_type = 'click')
+        |SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
+        |  c.last_click_id, c.ts AS last_click_ts,
+        |  date_diff('second', c.ts, p.ts) AS gap_sec
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts > c.ts
+        |ORDER BY p.event_id""".stripMargin),
     // banded range join (interval → band explosion, equi-join on band):
     // views in the hour after each error by the same user
-    "q43_range_join" -> { (s, d) =>
+    Gated("q43_range_join", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       val errors = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("error_id"), col("user_id"),
@@ -2234,50 +5003,122 @@ object SparkEntry {
             .as("gap_sec"))
         .orderBy("error_id", "view_id")
     },
+      // plain BETWEEN join as the oracle for the banded range join
+      """WITH e AS (
+        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+        |err AS (SELECT event_id AS error_id, user_id, ts AS win_start,
+        |          ts + INTERVAL 1 HOUR AS win_end
+        |        FROM e WHERE event_type = 'error'),
+        |v AS (SELECT event_id AS view_id, user_id, ts FROM e WHERE event_type = 'view')
+        |SELECT error_id, view_id, date_diff('second', win_start, v.ts) AS gap_sec
+        |FROM v JOIN err ON v.user_id = err.user_id
+        |  AND v.ts > win_start AND v.ts <= win_end
+        |ORDER BY error_id, view_id""".stripMargin),
     // CUBE: all 2² grouping combinations of (priority, status) in one pass
-    "q46_order_cube" -> { (s, d) =>
+    Gated("q46_order_cube", { (s, d) =>
       Relational.orderCube(Tables.orders(s, d))
-    },
+    }, """SELECT o_orderpriority AS priority, o_orderstatus AS status,
+        | count(*) AS order_count,
+        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS total_value
+        |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
+        |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin),
     // J1 generalized: broadcast dim-chain join (TPC-H Q5 shape)
-    "q11_revenue_by_nation" -> { (s, d) =>
+    Gated("q11_revenue_by_nation", { (s, d) =>
       Relational.revenueByNation(Tables.lineitem(s, d), Tables.supplier(s, d),
         Tables.nation(s, d), Tables.region(s, d))
-    },
+    }, """SELECT r_name AS region_name, n_name AS nation_name,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
+        | count(*) AS line_count
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // fact-fact shuffle join + broadcast + top-K (TPC-H Q10 shape)
-    "q12_top_customers" -> { (s, d) =>
+    Gated("q12_top_customers", { (s, d) =>
       Relational.topCustomers(Tables.lineitem(s, d), Tables.orders(s, d),
         Tables.customer(s, d))
-    },
+    }, """WITH pc AS (
+        |  SELECT o_custkey,
+        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
+        |         count(*) AS line_count
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1)
+        |SELECT c_custkey, c_name, c_mktsegment, revenue, line_count
+        |FROM pc JOIN customer ON o_custkey = c_custkey
+        |ORDER BY revenue DESC, c_custkey LIMIT 10""".stripMargin),
     // left_semi existence join (TPC-H Q4 shape)
-    "q13_order_priority" -> { (s, d) =>
+    Gated("q13_order_priority", { (s, d) =>
       Relational.orderPriorityWithBigLines(Tables.orders(s, d), Tables.lineitem(s, d))
-    },
+    }, """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // left outer join + double aggregation (TPC-H Q13 shape)
-    "q14_customer_distribution" -> { (s, d) =>
+    Gated("q14_customer_distribution", { (s, d) =>
       Relational.customerOrderDistribution(Tables.customer(s, d), Tables.orders(s, d))
-    },
+    }, """WITH pc AS (
+        |  SELECT c_custkey, count(o_orderkey) AS order_count
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey GROUP BY 1)
+        |SELECT order_count, count(*) AS custdist
+        |FROM pc GROUP BY 1 ORDER BY custdist DESC, order_count DESC""".stripMargin),
     // share-of-total window over aggregate (TPC-H Q14 shape)
-    "q15_revenue_share_by_type" -> { (s, d) =>
+    Gated("q15_revenue_share_by_type", { (s, d) =>
       Relational.revenueShareByType(Tables.lineitem(s, d), Tables.part(s, d))
-    },
+    }, """WITH bt AS (
+        |  SELECT p_type,
+        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1)
+        |SELECT p_type, revenue,
+        |  round(revenue * 100.0 / sum(revenue) OVER (), 2) AS revenue_pct
+        |FROM bt ORDER BY p_type""".stripMargin),
     // running-total window per partition
-    "q16_running_monthly_revenue" -> { (s, d) =>
+    Gated("q16_running_monthly_revenue", { (s, d) =>
       Relational.runningMonthlyRevenue(Tables.lineitem(s, d), Tables.supplier(s, d),
         Tables.nation(s, d))
     },
+      // cumulative sum runs over UNROUNDED decimal month totals (exact), both
+      // columns rounded to cents only at the edge — mirrors runningMonthlyRevenue
+      """WITH m AS (
+        |  SELECT n_name AS nation_name, date_trunc('month', l_shipdate) AS ship_month,
+        |         sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS monthly_dec
+        |  FROM lineitem
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  GROUP BY 1, 2)
+        |SELECT nation_name, ship_month,
+        |  CAST(round(monthly_dec, 2) AS DOUBLE) AS monthly_revenue,
+        |  CAST(round(sum(monthly_dec) OVER (PARTITION BY nation_name ORDER BY ship_month
+        |        ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS cumulative_revenue
+        |FROM m ORDER BY 1, 2""".stripMargin),
     // calendar RANGE frame: 7-day rolling revenue per nation on epoch-day
     // (ROWS frames widen silently across missing days; RANGE doesn't)
-    "q53_rolling_revenue" -> { (s, d) =>
+    Gated("q53_rolling_revenue", { (s, d) =>
       Relational.rollingRevenue(Tables.lineitem(s, d), Tables.orders(s, d),
         Tables.customer(s, d), Tables.nation(s, d))
-    },
+    }, """WITH daily AS (
+        |  SELECT n_name AS nation_name, CAST(o_orderdate AS DATE) AS order_day,
+        |    sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS daily_dec
+        |  FROM lineitem
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  GROUP BY 1, 2)
+        |SELECT nation_name, order_day,
+        |  CAST(round(daily_dec, 2) AS DOUBLE) AS daily_revenue,
+        |  CAST(round(sum(daily_dec) OVER (PARTITION BY nation_name
+        |      ORDER BY date_diff('day', DATE '1970-01-01', order_day)
+        |      RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS rolling_revenue
+        |FROM daily ORDER BY 1, 2""".stripMargin),
     // CDC snapshot diff: added/deleted/changed via one full outer join on
     // the key, content compared by md5 digest. Snapshots are carved from
     // orders by deterministic residue classes (identically in the oracle):
     // old drops %13 keys, new drops %17 keys and edits priority on %5.
     // o_orderdate is hashed as its DATE — timestamp-to-string rendering is
     // engine-specific, date rendering is ISO everywhere.
-    "q54_snapshot_diff" -> { (s, d) =>
+    Gated("q54_snapshot_diff", { (s, d) =>
       val orders = Tables.orders(s, d).withColumn("order_day", to_date(col("o_orderdate")))
       val oldSnap = orders.filter(col("o_orderkey") % 13 =!= 0)
       val newSnap = orders.filter(col("o_orderkey") % 17 =!= 0)
@@ -2287,192 +5128,509 @@ object SparkEntry {
       ChangeCapture.snapshotDiff(oldSnap, newSnap, Seq("o_orderkey"),
           Seq("o_orderstatus", "o_orderpriority", "order_day"))
         .orderBy("o_orderkey")
-    },
+    }, """WITH os AS (
+        |  SELECT o_orderkey, md5(concat_ws('|',
+        |      COALESCE(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
+        |      COALESCE(replace(replace(o_orderpriority, '\', '\\'), '|', '\|'), '\N'),
+        |      COALESCE(replace(replace(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\', '\\'), '|', '\|'), '\N'))) AS old_hash
+        |  FROM orders WHERE o_orderkey % 13 <> 0),
+        |ns AS (
+        |  SELECT o_orderkey, md5(concat_ws('|',
+        |      COALESCE(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
+        |      COALESCE(replace(replace(CASE WHEN o_orderkey % 5 = 0 THEN o_orderpriority || '*' ELSE o_orderpriority END, '\', '\\'), '|', '\|'), '\N'),
+        |      COALESCE(replace(replace(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\', '\\'), '|', '\|'), '\N'))) AS new_hash
+        |  FROM orders WHERE o_orderkey % 17 <> 0)
+        |SELECT o_orderkey, old_hash, new_hash, change_type FROM (
+        |  SELECT COALESCE(os.o_orderkey, ns.o_orderkey) AS o_orderkey,
+        |    os.old_hash, ns.new_hash,
+        |    CASE WHEN os.old_hash IS NULL THEN 'added'
+        |         WHEN ns.new_hash IS NULL THEN 'deleted'
+        |         WHEN os.old_hash <> ns.new_hash THEN 'changed' END AS change_type
+        |  FROM os FULL OUTER JOIN ns ON os.o_orderkey = ns.o_orderkey)
+        |WHERE change_type IS NOT NULL ORDER BY o_orderkey""".stripMargin),
     // SCD2 interval build: per-session document-view history collapsed to
     // one row per run of equal values, validity window via lag+lead
-    "q55_scd2_intervals" -> { (s, d) =>
+    Gated("q55_scd2_intervals", { (s, d) =>
       graft.relational.ChangeCapture.scd2Intervals(
           TestData.clicks(s, d), keyCol = "session_id",
           attrCol = "document_id", tsCol = "event_ts")
         .orderBy("session_id", "valid_from")
-    },
+    }, """WITH c AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS session_id,
+        |         CAST(props->>'$.k' AS INTEGER) AS document_id,
+        |         CAST(ts AS TIMESTAMP) AS event_ts
+        |  FROM events),
+        |m AS (
+        |  SELECT session_id, document_id, event_ts,
+        |    lag(document_id) OVER (PARTITION BY session_id ORDER BY event_ts) AS prev_doc,
+        |    row_number() OVER (PARTITION BY session_id ORDER BY event_ts) AS rn
+        |  FROM c),
+        |cp AS (
+        |  SELECT session_id, document_id, event_ts FROM m
+        |  WHERE rn = 1 OR prev_doc IS DISTINCT FROM document_id)
+        |SELECT session_id, document_id, event_ts AS valid_from,
+        |  lead(event_ts) OVER (PARTITION BY session_id ORDER BY event_ts) AS valid_to,
+        |  lead(event_ts) OVER (PARTITION BY session_id ORDER BY event_ts) IS NULL AS is_current
+        |FROM cp ORDER BY session_id, valid_from""".stripMargin),
     // partitioned top-K window (argmax per key at scale)
-    "q17_top_parts_per_brand" -> { (s, d) =>
+    Gated("q17_top_parts_per_brand", { (s, d) =>
       Relational.topPartsPerBrand(Tables.part(s, d))
-    },
+    }, """SELECT p_brand, p_partkey, p_name, p_retailprice, price_rank FROM (
+        | SELECT p_brand, p_partkey, p_name, p_retailprice,
+        |        row_number() OVER (PARTITION BY p_brand
+        |                           ORDER BY p_retailprice DESC, p_partkey) AS price_rank
+        | FROM part) WHERE price_rank <= 3 ORDER BY p_brand, price_rank""".stripMargin),
     // CASE-ladder histogram
-    "q18_order_value_buckets" -> { (s, d) =>
+    Gated("q18_order_value_buckets", { (s, d) =>
       Relational.orderValueBuckets(Tables.orders(s, d))
-    },
+    }, """SELECT CASE WHEN o_totalprice < 1000 THEN '0_under_1k'
+        |            WHEN o_totalprice < 10000 THEN '1_1k_to_10k'
+        |            WHEN o_totalprice < 100000 THEN '2_10k_to_100k'
+        |            ELSE '3_over_100k' END AS bucket,
+        | count(*) AS order_count,
+        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS total_value
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
     // left_anti NOT EXISTS
-    "q19_orders_without_lines" -> { (s, d) =>
+    Gated("q19_orders_without_lines", { (s, d) =>
       Relational.ordersWithoutLines(Tables.orders(s, d), Tables.lineitem(s, d))
-    },
+    }, """SELECT o_orderkey, o_orderstatus, o_totalprice
+        |FROM orders
+        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+        |ORDER BY o_orderkey""".stripMargin),
     // analytic windows: lead / first_value / gaps / ntile in one frame
-    "q28_user_event_analytics" -> { (s, d) =>
+    Gated("q28_user_event_analytics", { (s, d) =>
       Relational.userEventAnalytics(TestData.clicks(s, d))
-    },
+    }, """SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
+        | CAST(ts AS TIMESTAMP) AS event_ts, event_type,
+        | lead(event_type) OVER w AS next_event_type,
+        | first_value(event_type) OVER w AS first_event_type,
+        | date_diff('second', CAST(ts AS TIMESTAMP), lead(CAST(ts AS TIMESTAMP)) OVER w) AS gap_to_next_sec,
+        | ntile(4) OVER w AS session_quartile
+        |FROM events
+        |WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR) ORDER BY CAST(ts AS TIMESTAMP), event_id)
+        |ORDER BY event_id""".stripMargin),
     // set operations: UNION-distinct cohort
-    "q29_converting_user_days" -> { (s, d) =>
+    Gated("q29_converting_user_days", { (s, d) =>
       Relational.convertingUserDays(TestData.clicks(s, d))
-    },
+    }, """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date
+        |FROM events WHERE event_type = 'purchase'
+        |UNION
+        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'signup'
+        |ORDER BY session_id, event_date""".stripMargin),
     // set operations: INTERSECT / EXCEPT cohort algebra
-    "q26_cohort_set_ops" -> { (s, d) =>
+    Gated("q26_cohort_set_ops", { (s, d) =>
       Relational.cohortIntersectExcept(TestData.clicks(s, d),
         inBoth = ("purchase", "click"), butNot = "error")
-    },
+    }, """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date
+        |FROM events WHERE event_type = 'purchase'
+        |INTERSECT
+        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'click'
+        |EXCEPT
+        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'error'
+        |ORDER BY session_id, event_date""".stripMargin),
     // exact percentile aggregate (approx_percentile is the 100TB switch)
-    "q23_value_percentiles" -> { (s, d) =>
+    Gated("q23_value_percentiles", { (s, d) =>
       Relational.valuePercentiles(TestData.clicks(s, d))
-    },
+    }, """SELECT event_type,
+        | round(quantile_cont(value, 0.25), 6) AS p25,
+        | round(quantile_cont(value, 0.50), 6) AS p50,
+        | round(quantile_cont(value, 0.95), 6) AS p95,
+        | count(*) AS n
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
     // ROLLUP multi-granularity totals
-    "q24_revenue_rollup" -> { (s, d) =>
+    Gated("q24_revenue_rollup", { (s, d) =>
       Relational.revenueRollup(Tables.lineitem(s, d), Tables.supplier(s, d),
         Tables.nation(s, d), Tables.region(s, d))
-    },
+    }, """SELECT r_name AS region_name, n_name AS nation_name,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
+        | count(*) AS line_count
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP (r_name, n_name)
+        |ORDER BY region_name ASC NULLS FIRST, nation_name ASC NULLS FIRST""".stripMargin),
     // pivot with explicit keys
-    "q25_daily_type_pivot" -> { (s, d) =>
+    Gated("q25_daily_type_pivot", { (s, d) =>
       Relational.dailyTypePivot(TestData.clicks(s, d),
         Seq("click", "error", "purchase", "signup", "view"))
-    },
+    }, """SELECT CAST(ts AS DATE) AS event_date,
+        | count(*) FILTER (WHERE event_type = 'click') AS click,
+        | count(*) FILTER (WHERE event_type = 'error') AS error,
+        | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+        | count(*) FILTER (WHERE event_type = 'signup') AS signup,
+        | count(*) FILTER (WHERE event_type = 'view') AS view
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
     // fuzzy entity matching: levenshtein pairs within a brand block —
     // blocking bounds the quadratic; distance is exact edit distance
-    "q58_fuzzy_match" -> { (s, d) =>
+    Gated("q58_fuzzy_match", { (s, d) =>
       Dedup.fuzzyMatchPairs(Tables.part(s, d),
           blockCol = "p_brand", idCol = "p_partkey", strCol = "p_name", maxDistance = 2)
         .orderBy("id_a", "id_b")
-    },
+    }, """SELECT a.p_brand, a.p_partkey AS id_a, b.p_partkey AS id_b,
+        |  a.p_name AS str_a, b.p_name AS str_b,
+        |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS distance
+        |FROM part a JOIN part b
+        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2
+        |ORDER BY id_a, id_b""".stripMargin),
     // fuzzy matching with a COMPOSITE blocking key (brand, first token):
     // the 100 TB path — p_brand cardinality is constant in corpus size, so
     // brand-only blocks grow quadratically with data; a string-derived
     // second feature multiplies block count with the data. Semantics are
     // deliberately narrower (pairs must share the first token exactly) and
     // the oracle replicates that bound
-    "q70_fuzzy_match_blocked" -> { (s, d) =>
+    Gated("q70_fuzzy_match_blocked", { (s, d) =>
       Dedup.fuzzyMatchPairs(Tables.part(s, d),
           blockCol = "p_brand", idCol = "p_partkey", strCol = "p_name", maxDistance = 2,
           secondaryBlock = Some(substring_index(_, " ", 1)))
         .orderBy("id_a", "id_b")
-    },
+    }, """SELECT a.p_brand, a.p_partkey AS id_a, b.p_partkey AS id_b,
+        |  a.p_name AS str_a, b.p_name AS str_b,
+        |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS distance
+        |FROM part a JOIN part b
+        |  ON a.p_brand = b.p_brand
+        | AND split_part(a.p_name, ' ', 1) = split_part(b.p_name, ' ', 1)
+        | AND a.p_partkey < b.p_partkey
+        |WHERE levenshtein(a.p_name, b.p_name) <= 2
+        |ORDER BY id_a, id_b""".stripMargin),
     // equi-depth histogram: percentile cutpoints + projection binning —
     // never a global ntile sort
-    "q68_equidepth_histogram" -> { (s, d) =>
+    Gated("q68_equidepth_histogram", { (s, d) =>
       Relational.equiDepthHistogram(TestData.clicks(s, d), valCol = "value", bins = 10)
-    },
+    }, """WITH cuts AS (
+        |  SELECT quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
+        |  FROM events),
+        |b AS (
+        |  SELECT value,
+        |    1 + (CASE WHEN value > c[1] THEN 1 ELSE 0 END) + (CASE WHEN value > c[2] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN value > c[3] THEN 1 ELSE 0 END) + (CASE WHEN value > c[4] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN value > c[5] THEN 1 ELSE 0 END) + (CASE WHEN value > c[6] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN value > c[7] THEN 1 ELSE 0 END) + (CASE WHEN value > c[8] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN value > c[9] THEN 1 ELSE 0 END) AS bin
+        |  FROM events, cuts)
+        |SELECT bin, count(*) AS n, min(value) AS lo, max(value) AS hi
+        |FROM b GROUP BY bin ORDER BY bin""".stripMargin),
     // equi-width sibling of q68: fixed bucket width, empty bins surfaced
-    "q83_equiwidth_histogram" -> { (s, d) =>
+    Gated("q83_equiwidth_histogram", { (s, d) =>
       Relational.equiWidthHistogram(TestData.clicks(s, d), valCol = "value", bins = 10)
     },
+      // mirrors the operator's null exclusion and its w==0 degenerate branch
+      // (all-equal values -> everything in bin 1, no division by zero)
+      """WITH v AS (SELECT value FROM events WHERE value IS NOT NULL),
+        |s AS (SELECT CAST(min(value) AS DOUBLE) AS mn, CAST(max(value) AS DOUBLE) AS mx FROM v),
+        |b AS (
+        |  SELECT CASE WHEN mx = mn THEN 1
+        |    ELSE LEAST(10, CAST(floor((value - mn) / ((mx - mn) / 10)) AS INT) + 1) END AS bin
+        |  FROM v CROSS JOIN s),
+        |c AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
+        |spine AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS bin)
+        |SELECT spine.bin,
+        |  round(mn + (spine.bin - 1) * ((mx - mn) / 10), 6) AS lo,
+        |  round(mn + spine.bin * ((mx - mn) / 10), 6) AS hi,
+        |  COALESCE(n, 0) AS n
+        |FROM spine CROSS JOIN s LEFT JOIN c USING (bin) ORDER BY spine.bin""".stripMargin),
     // sliding (hopping) windows: each event lands in width/slide windows
-    "q69_sliding_traffic" -> { (s, d) =>
+    Gated("q69_sliding_traffic", { (s, d) =>
       Relational.slidingTraffic(TestData.clicks(s, d)).orderBy("window_start")
-    },
+    }, """WITH e AS (
+        |  SELECT CAST(ts AS TIMESTAMP) AS ts, CAST(user_id AS VARCHAR) AS session_id FROM events),
+        |x AS (SELECT ts, session_id, unnest(range(2)) AS k FROM e),
+        |w AS (
+        |  SELECT time_bucket(INTERVAL 5 minutes, ts) - k * INTERVAL 5 minutes AS window_start,
+        |    session_id
+        |  FROM x)
+        |SELECT window_start, window_start + INTERVAL 10 minutes AS window_end,
+        |  count(*) AS total_clicks, count(DISTINCT session_id) AS unique_sessions
+        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin),
     // rendezvous (HRW) sharding: argmax of per-shard hashes as a pure
     // projection; minimal-disruption property pinned in RendezvousSpec
-    "q111_rendezvous_shards" -> { (s, d) =>
+    Gated("q111_rendezvous_shards", { (s, d) =>
       graft.relational.Rendezvous.assignments(
           Tables.customer(s, d), keyCol = "c_custkey",
           shards = Seq("shard-a", "shard-b", "shard-c", "shard-d", "shard-e"))
         .orderBy("c_custkey")
-    },
+    }, """WITH scored AS (
+        |  SELECT c_custkey, s.shard,
+        |    ('0x' || substr(md5(s.shard || '|' || c_custkey::VARCHAR), 1, 15))::BIGINT AS score
+        |  FROM customer CROSS JOIN (VALUES ('shard-a'), ('shard-b'), ('shard-c'),
+        |    ('shard-d'), ('shard-e')) AS s(shard)),
+        |ranked AS (
+        |  SELECT c_custkey, shard,
+        |    row_number() OVER (PARTITION BY c_custkey ORDER BY score DESC, shard DESC) AS rn
+        |  FROM scored)
+        |SELECT c_custkey, shard FROM ranked WHERE rn = 1 ORDER BY c_custkey""".stripMargin),
     // PSI drift monitor: reference-anchored equi-depth bins, smoothed
     // proportions, exact decimal term sum - the ML-ops drift gate
-    "q112_psi_drift" -> { (s, d) =>
+    Gated("q112_psi_drift", { (s, d) =>
       val ev = TestData.eventsRaw(s, d)
       graft.analysis.Profiling.psiDrift(
         ev.filter(to_date(col("ts")) <= lit("2024-01-15")),
         ev.filter(to_date(col("ts")) > lit("2024-01-15")),
         valCol = "value", bins = 10)
     },
+      // same reference-anchored deciles (quantile_cont = Spark percentile),
+      // same +0.5 smoothing, DECIMAL term sum
+      """WITH ref AS (
+        |  SELECT value AS v FROM events
+        |  WHERE CAST(ts AS DATE) <= DATE '2024-01-15' AND value IS NOT NULL),
+        |cur AS (
+        |  SELECT value AS v FROM events
+        |  WHERE CAST(ts AS DATE) > DATE '2024-01-15' AND value IS NOT NULL),
+        |cuts AS (
+        |  SELECT quantile_cont(v, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
+        |  FROM ref),
+        |rb AS (SELECT 1 + (CASE WHEN v > c[1] THEN 1 ELSE 0 END) + (CASE WHEN v > c[2] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[3] THEN 1 ELSE 0 END) + (CASE WHEN v > c[4] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[5] THEN 1 ELSE 0 END) + (CASE WHEN v > c[6] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[7] THEN 1 ELSE 0 END) + (CASE WHEN v > c[8] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[9] THEN 1 ELSE 0 END) AS bin FROM ref CROSS JOIN cuts),
+        |cb AS (SELECT 1 + (CASE WHEN v > c[1] THEN 1 ELSE 0 END) + (CASE WHEN v > c[2] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[3] THEN 1 ELSE 0 END) + (CASE WHEN v > c[4] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[5] THEN 1 ELSE 0 END) + (CASE WHEN v > c[6] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[7] THEN 1 ELSE 0 END) + (CASE WHEN v > c[8] THEN 1 ELSE 0 END)
+        |      + (CASE WHEN v > c[9] THEN 1 ELSE 0 END) AS bin FROM cur CROSS JOIN cuts),
+        |rc AS (SELECT bin, count(*) AS c FROM rb GROUP BY bin),
+        |cc AS (SELECT bin, count(*) AS c FROM cb GROUP BY bin),
+        |nn AS (SELECT (SELECT count(*) FROM ref)::DOUBLE AS nref,
+        |              (SELECT count(*) FROM cur)::DOUBLE AS ncur),
+        |spine AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS bin),
+        |terms AS (
+        |  SELECT CAST(((coalesce(rc.c, 0) + 0.5::DOUBLE) / (nref + 5.0::DOUBLE)
+        |         - (coalesce(cc.c, 0) + 0.5::DOUBLE) / (ncur + 5.0::DOUBLE))
+        |      * ln(((coalesce(rc.c, 0) + 0.5::DOUBLE) / (nref + 5.0::DOUBLE))
+        |         / ((coalesce(cc.c, 0) + 0.5::DOUBLE) / (ncur + 5.0::DOUBLE)))
+        |      AS DECIMAL(28,12)) AS t
+        |  FROM spine LEFT JOIN rc USING (bin) LEFT JOIN cc USING (bin) CROSS JOIN nn)
+        |SELECT round(CAST(sum(t) AS DOUBLE), 6) AS psi,
+        |  CAST((SELECT count(*) FROM ref) AS BIGINT) AS n_ref,
+        |  CAST((SELECT count(*) FROM cur) AS BIGINT) AS n_cur,
+        |  CAST(sum(t) AS DOUBLE) > 0.2 AS drifted
+        |FROM terms""".stripMargin),
     // Neyman allocation: budget split prop. to N_h*S_h with DECIMAL-exact
     // variance; the sample SET itself replays (md5 rank selection)
-    "q110_neyman_sample" -> { (s, d) =>
+    Gated("q110_neyman_sample", { (s, d) =>
       graft.analysis.Sampling.neymanSample(Tables.orders(s, d),
           strataCol = "o_orderpriority", idCol = "o_orderkey",
           valCol = "o_totalprice", totalBudget = 300)
         .orderBy("o_orderkey")
     },
+      // list_sum over stratum-ordered masses mirrors the engine's ordered
+      // driver-side sum; floor allocations capped at stratum size
+      """WITH stats AS (
+        |  SELECT o_orderpriority AS s, count(*) AS n,
+        |    sum(CAST(o_totalprice AS DECIMAL(38,8))) AS sx,
+        |    sum(CAST(CAST(o_totalprice AS DECIMAL(38,8))
+        |      * CAST(o_totalprice AS DECIMAL(38,8)) AS DECIMAL(38,8))) AS sxx
+        |  FROM orders GROUP BY 1),
+        |mass AS (
+        |  SELECT s, n,
+        |    n::DOUBLE * sqrt(greatest(0.0::DOUBLE,
+        |      (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+        |        / (n::DOUBLE * n::DOUBLE))) AS m
+        |  FROM stats),
+        |tot AS (SELECT list_sum(list(m ORDER BY s)) AS tm FROM mass),
+        |alloc AS (
+        |  SELECT s, least(n, CAST(floor(300 * m / tm) AS BIGINT)) AS nh
+        |  FROM mass CROSS JOIN tot),
+        |sel AS (
+        |  SELECT o_orderkey, o_orderpriority,
+        |    row_number() OVER (PARTITION BY o_orderpriority
+        |      ORDER BY ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 8))::BIGINT % 1000000000,
+        |        o_orderkey) AS rank_in_stratum
+        |  FROM orders)
+        |SELECT o_orderkey, o_orderpriority, CAST(rank_in_stratum AS INT) AS rank_in_stratum
+        |FROM sel JOIN alloc ON sel.o_orderpriority = alloc.s
+        |WHERE rank_in_stratum <= nh ORDER BY o_orderkey""".stripMargin),
     // cardinality-capped rollup: top-10 documents by clicks, tail folded
     // into one OTHER row - bounded report over an unbounded domain
-    "q114_topk_else_other" -> { (s, d) =>
+    Gated("q114_topk_else_other", { (s, d) =>
       Relational.topKElseOther(
           TestData.clicks(s, d).filter(col("document_id").isNotNull),
           groupCol = "document_id", measure = count(lit(1)), k = 10)
         .orderBy("document_id")
-    },
+    }, """WITH g AS (
+        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc, count(*) AS m
+        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL
+        |  GROUP BY 1),
+        |top AS (SELECT doc FROM g ORDER BY m DESC, doc LIMIT 10)
+        |SELECT CASE WHEN doc IN (SELECT doc FROM top) THEN doc::VARCHAR
+        |            ELSE 'OTHER' END AS document_id,
+        |  CAST(sum(m) AS BIGINT) AS measure, count(*) AS n_groups
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
     // salted skew join: the salt must be invisible - oracle is the PLAIN
     // join, so the green row proves salt-and-replicate loses/dups nothing
-    "q115_salted_join" -> { (s, d) =>
+    Gated("q115_salted_join", { (s, d) =>
       graft.relational.SkewJoin.saltedSupplierRevenue(
         Tables.lineitem(s, d), Tables.supplier(s, d), saltFactor = 8)
     },
+      // the plain (unsalted) join: the salt must not change the result
+      """SELECT s_nationkey,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
+        | count(*) AS line_count
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // bucketed co-located join: write-time hash layout + Exchange-free SMJ;
     // oracle is the plain join (plan shape stays asserted in BucketingSpec)
-    "q116_bucketed_join" -> { (s, d) =>
+    Gated("q116_bucketed_join", { (s, d) =>
       graft.relational.Bucketing.bucketedOrderVolume(
         s, Tables.lineitem(s, d), Tables.orders(s, d))
     },
+      // the plain (unbucketed) join: the bucket layout must not change it
+      """SELECT o_orderpriority, sum(l_quantity) AS sum_qty,
+        | count(*) AS line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // per-group exact quantile, fully distributed: located bucket via a
     // cumulative window over histogram rows, no driver-side bin state
-    "q123_grouped_quantile" -> { (s, d) =>
+    Gated("q123_grouped_quantile", { (s, d) =>
       Relational.groupedExactQuantile(Tables.lineitem(s, d),
           groupCol = "l_returnflag", valCol = "l_extendedprice", q = 0.5)
         .orderBy("l_returnflag")
     },
+      // the per-group rank definition the distributed locator must reproduce
+      """WITH v AS (
+        |  SELECT l_returnflag AS g, l_extendedprice::DOUBLE AS v FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL),
+        |n AS (SELECT g, count(*) AS n FROM v GROUP BY 1),
+        |r AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn FROM v)
+        |SELECT r.g AS l_returnflag, 0.5::DOUBLE AS q, n.n AS n, r.v AS value
+        |FROM r JOIN n USING (g)
+        |WHERE rn = CAST(ceil(0.5 * n.n) AS BIGINT)
+        |ORDER BY l_returnflag""".stripMargin),
     // exact quantile in two passes (histogram -> single-bucket sort):
     // no global sort, no approx - the answer must equal the rank formula
-    "q109_exact_quantile" -> { (s, d) =>
+    Gated("q109_exact_quantile", { (s, d) =>
       Relational.exactQuantileTwoPass(
         Tables.lineitem(s, d), valCol = "l_extendedprice", q = 0.5)
     },
+      // the brute-force rank definition the two-pass trick must reproduce
+      """WITH v AS (
+        |  SELECT l_extendedprice::DOUBLE AS v FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL),
+        |n AS (SELECT count(*) AS n FROM v),
+        |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
+        |SELECT 0.5::DOUBLE AS q, n.n AS n, r.v AS value
+        |FROM r CROSS JOIN n
+        |WHERE rn = CAST(ceil(0.5 * n.n) AS BIGINT)""".stripMargin),
     // deterministic Lloyd k-means: the WHOLE clustering loop is oracle-
     // gated (first-k init, fixed-order distance sums, DECIMAL centroid
     // means) - not just a projection of it
-    "q108_kmeans" -> { (s, d) =>
+    Gated("q108_kmeans", { (s, d) =>
       graft.analysis.Clustering.lloydKMeans(
           TestData.embeddings(s, d), k = 4, iterations = 2)
         .orderBy("vec_id")
     },
+      // two Lloyd rounds unrolled: assign (rn over (d2, cluster)) -> DECIMAL
+      // centroid means -> assign -> means -> final assignment; empty clusters
+      // fall back to their previous centroid via the UNION ALL
+      s"""WITH $kmeansAsgCtes
+        |SELECT vec_id, cluster, round(d2, 6) AS dist2 FROM asg
+        |ORDER BY vec_id""".stripMargin),
     // hashing-trick vectorizer: unbounded vocab -> fixed dim, signed hash
     // cancels collisions in expectation; no vocabulary table, no fit
-    "q106_hashed_features" -> { (s, d) =>
+    Gated("q106_hashed_features", { (s, d) =>
       graft.analysis.Features.hashedFeatures(TestData.documents(s, d), dim = 256)
         .orderBy("doc_id", "feature_idx")
-    },
+    }, s"""WITH toks AS (
+        |  SELECT doc_id, unnest(string_split($normText, ' ')) AS tok
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id,
+        |    ('0x' || substr(md5('i|' || tok), 1, 15))::BIGINT % 256 AS feature_idx,
+        |    CASE WHEN ('0x' || substr(md5('s|' || tok), 1, 15))::BIGINT % 2 = 0
+        |         THEN 1 ELSE -1 END AS sign
+        |  FROM toks WHERE tok <> '')
+        |SELECT doc_id, feature_idx, CAST(sum(sign) AS BIGINT) AS weight
+        |FROM f GROUP BY 1, 2 HAVING sum(sign) <> 0
+        |ORDER BY doc_id, feature_idx""".stripMargin),
     // leave-one-out target encoding: (sum_y - y_i)/(n-1) per category,
     // DECIMAL-accumulated, singletons null - no label leakage
-    "q107_loo_target_encode" -> { (s, d) =>
+    Gated("q107_loo_target_encode", { (s, d) =>
       graft.analysis.Features.looTargetEncode(Tables.orders(s, d),
           idCol = "o_orderkey", categoryCol = "o_orderpriority",
           targetCol = "o_totalprice")
         .orderBy("o_orderkey")
-    },
+    }, """WITH stats AS (
+        |  SELECT o_orderpriority,
+        |    sum(CAST(o_totalprice AS DECIMAL(28,8))) AS sy, count(*) AS n
+        |  FROM orders GROUP BY 1)
+        |SELECT o_orderkey, o_orderpriority, o_totalprice,
+        |  CASE WHEN n > 1 THEN
+        |    round((sy::DOUBLE - o_totalprice::DOUBLE) / (n - 1)::DOUBLE, 6) END AS loo_mean
+        |FROM orders JOIN stats USING (o_orderpriority)
+        |ORDER BY o_orderkey""".stripMargin),
     // Adamic-Adar link prediction over the co-click graph: wedge join on
     // the center node, hub-guarded upstream, DECIMAL-summed 1/ln(deg)
-    "q104_adamic_adar" -> { (s, d) =>
+    Gated("q104_adamic_adar", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.adamicAdar(edges).orderBy("u", "v")
-    },
+    }, s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
+        |  WHERE a.doc < b.doc GROUP BY 1, 2),
+        |sym AS (
+        |  SELECT src AS w, dst AS n FROM ce
+        |  UNION SELECT dst AS w, src AS n FROM ce),
+        |deg AS (SELECT w, count(*) AS deg FROM sym GROUP BY w),
+        |weighted AS (
+        |  SELECT sym.w, sym.n,
+        |    CASE WHEN deg >= 2 THEN CAST(1.0::DOUBLE / ln(deg::DOUBLE) AS DECIMAL(28,12)) END AS contrib
+        |  FROM sym JOIN deg USING (w))
+        |SELECT a.n AS u, b.n AS v, count(*) AS common_neighbors,
+        |  round(CAST(sum(a.contrib) AS DOUBLE), 6) AS aa_score
+        |FROM weighted a JOIN weighted b ON a.w = b.w AND a.n < b.n
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // PMI collocations: above-chance co-click association, counts reused
     // from the edge aggregate + per-item key counts
-    "q105_pmi_pairs" -> { (s, d) =>
+    Gated("q105_pmi_pairs", { (s, d) =>
       Graphs.pmiPairs(TestData.clicks(s, d), "session_id", "document_id",
           maxPerKey = 100, minPairCount = 2)
         .orderBy("u", "v")
     },
+      // item counts come from ALL sessions, edge counts from hub-filtered
+      // ones — mirroring the engine's exact frame lineage
+      s"""WITH $sessionClicksCtes,
+        |ce AS (
+        |  SELECT a.doc AS src, b.doc AS dst, count(*) AS weight
+        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
+        |  WHERE a.doc < b.doc GROUP BY 1, 2
+        |  HAVING count(*) >= 2),
+        |nk AS (SELECT count(DISTINCT sid)::DOUBLE AS n FROM clicks),
+        |ci AS (SELECT doc, count(*) AS c FROM clicks GROUP BY doc)
+        |SELECT src AS u, dst AS v, weight AS c_uv,
+        |  round(ln(n * weight::DOUBLE / (cu.c::DOUBLE * cv.c::DOUBLE)), 6) AS pmi
+        |FROM ce JOIN ci cu ON ce.src = cu.doc JOIN ci cv ON ce.dst = cv.doc
+        |CROSS JOIN nk ORDER BY 1, 2""".stripMargin),
     // recency-weighted ranking: one projection + grouped DECIMAL sum, no
     // windows; incrementally maintainable (scores x decay + new events)
-    "q102_decayed_popularity" -> { (s, d) =>
+    Gated("q102_decayed_popularity", { (s, d) =>
       TimeSeries.decayedPopularity(
           TestData.clicks(s, d).filter(col("document_id").isNotNull),
           itemCol = "document_id", tsCol = "event_ts",
           asOf = to_timestamp(lit("2024-02-01 00:00:00")), halfLifeDays = 7.0)
         .orderBy("document_id")
     },
+      // floor(epoch) on both sides: Spark's unix_timestamp truncates seconds,
+      // DuckDB's epoch() keeps fractions
+      """WITH c AS (
+        |  SELECT CAST(props->>'$.k' AS INTEGER) AS document_id, CAST(ts AS TIMESTAMP) AS ts
+        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
+        |w AS (
+        |  SELECT document_id,
+        |    CAST(pow(0.5::DOUBLE,
+        |      ((epoch(TIMESTAMP '2024-02-01 00:00:00')::BIGINT
+        |        - floor(epoch(ts))::BIGINT)::DOUBLE / 86400.0) / 7.0::DOUBLE)
+        |      AS DECIMAL(28,12)) AS wt
+        |  FROM c)
+        |SELECT document_id, round(CAST(sum(wt) AS DOUBLE), 4) AS score,
+        |  count(*) AS n_events
+        |FROM w GROUP BY document_id ORDER BY document_id""".stripMargin),
     // per-type daily-traffic OLS trend: closed-form slope/intercept with
     // every accumulator in DECIMAL (bit-stable, unlike regr_slope doubles)
-    "q103_trend_slopes" -> { (s, d) =>
+    Gated("q103_trend_slopes", { (s, d) =>
       val daily = TestData.eventsRaw(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -2480,25 +5638,72 @@ object SparkEntry {
       TimeSeries.trendSlopes(daily, groupCol = "event_type", xCol = "x", yCol = "n")
         .orderBy("event_type")
     },
+      // x and y are integral, so the DECIMAL(28,6) products are exact - no
+      // rounding ambiguity between engines in the accumulators
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |xy AS (
+        |  SELECT event_type,
+        |    CAST(date_diff('day', DATE '2024-01-01', day) AS DECIMAL(28,6)) AS x,
+        |    CAST(n AS DECIMAL(28,6)) AS y
+        |  FROM daily),
+        |agg AS (
+        |  SELECT event_type, count(*) AS n,
+        |    sum(x) AS sx, sum(y) AS sy,
+        |    sum(CAST(x * y AS DECIMAL(28,6))) AS sxy,
+        |    sum(CAST(x * x AS DECIMAL(28,6))) AS sxx
+        |  FROM xy GROUP BY event_type)
+        |SELECT event_type, n,
+        |  CASE WHEN n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE <> 0.0 THEN
+        |    round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+        |      / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE), 6) END AS slope,
+        |  CASE WHEN n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE <> 0.0 THEN
+        |    round((sy::DOUBLE - ((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+        |      / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)) * sx::DOUBLE)
+        |      / n::DOUBLE, 6) END AS intercept
+        |FROM agg ORDER BY event_type""".stripMargin),
     // prefix-filtered set-similarity join (AllPairs/PPJoin): LOSSLESS
     // candidate pruning - the oracle is exact all-pairs jaccard, so a green
     // row PROVES the prefix filter misses nothing
-    "q101_prefix_jaccard" -> { (s, d) =>
+    Gated("q101_prefix_jaccard", { (s, d) =>
       Dedup.prefixJaccardPairs(TestData.documents(s, d), minJaccard = 0.6)
         .orderBy("doc_a", "doc_b")
     },
+      // exact all-pairs jaccard — deliberately NO prefix filter here: the
+      // engine's pruned join must reproduce the unpruned truth bit-for-bit
+      s"""WITH $shingleSetsCtes,
+        |pairs AS (
+        |  SELECT a.id AS doc_a, b.id AS doc_b,
+        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+        |      / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
+        |  FROM sets a JOIN sets b ON a.id < b.id)
+        |SELECT doc_a, doc_b, jaccard FROM pairs
+        |WHERE jaccard >= 0.6 ORDER BY doc_a, doc_b""".stripMargin),
     // sweep-line peak concurrency: intervals -> +1/-1 events -> running sum
     // per day; half-open semantics via (ts, delta) ordering
-    "q100_peak_concurrency" -> { (s, d) =>
+    Gated("q100_peak_concurrency", { (s, d) =>
       val iv = TestData.eventsRaw(s, d)
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
         .agg(min(col("ts")).as("s"), max(col("ts")).as("e"))
       Relational.peakConcurrency(iv, groupCol = "day", startCol = "s", endCol = "e")
         .orderBy("day")
-    },
+    }, """WITH iv AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS day,
+        |    min(CAST(ts AS TIMESTAMP)) AS s, max(CAST(ts AS TIMESTAMP)) AS e
+        |  FROM events GROUP BY 1, 2),
+        |ev AS (
+        |  SELECT day, s AS ts, 1 AS delta FROM iv
+        |  UNION ALL SELECT day, e AS ts, -1 AS delta FROM iv),
+        |run AS (
+        |  SELECT day, sum(delta) OVER (PARTITION BY day ORDER BY ts, delta
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS live
+        |  FROM ev)
+        |SELECT day, CAST(max(live) AS BIGINT) AS max_concurrent
+        |FROM run GROUP BY day ORDER BY day""".stripMargin),
     // count-min frequency sketch: depth x width grid of longs regardless of
     // key cardinality; estimates are upper bounds, grid is oracle-exact
-    "q99_countmin" -> { (s, d) =>
+    Gated("q99_countmin", { (s, d) =>
       val events = Tables.events(s, d)
       val sketch = graft.analysis.CountMin.build(events, "user_id", depth = 4, width = 256)
       val probes = events.filter(col("user_id") % 10 === 0)
@@ -2506,39 +5711,142 @@ object SparkEntry {
       graft.analysis.CountMin.estimate(sketch, probes, "user_id", depth = 4, width = 256)
         .orderBy("key")
     },
+      // rebuilds the identical depth×width grid (same salted md5 hash) and
+      // takes the same min-of-cells estimate
+      """WITH grid AS (
+        |  SELECT r AS row,
+        |    ('0x' || substr(md5(r::VARCHAR || '|' || user_id::VARCHAR), 1, 15))::BIGINT % 256 AS bucket
+        |  FROM events CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(r)),
+        |sketch AS (SELECT row, bucket, count(*) AS c FROM grid GROUP BY 1, 2),
+        |probes AS (SELECT DISTINCT user_id AS key FROM events WHERE user_id % 10 = 0),
+        |cells AS (
+        |  SELECT key, r AS row,
+        |    ('0x' || substr(md5(r::VARCHAR || '|' || key::VARCHAR), 1, 15))::BIGINT % 256 AS bucket
+        |  FROM probes CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(r))
+        |SELECT key, CAST(min(coalesce(c, 0)) AS BIGINT) AS est_count
+        |FROM cells LEFT JOIN sketch USING (row, bucket)
+        |GROUP BY key ORDER BY key""".stripMargin),
     // multimodal near-dup: binary media -> mapPartitions decode/feature
     // stub -> native simhash pHash -> banded hamming join (image dedup shape)
-    "q98_phash_neardups" -> { (s, d) =>
+    Gated("q98_phash_neardups", { (s, d) =>
       graft.analysis.Multimodal.perceptualNearDupPairs(
           TestData.documents(s, d), maxHamming = 6)
         .orderBy("doc_a", "doc_b")
     },
+      // q34's bit-exact simhash rebuild over the decoded fake media (decode ∘
+      // encode = identity, so the pHash equals the text simhash); null media
+      // rows drop, matching the engine's flatMap
+      s"""WITH toks AS (
+        |  SELECT doc_id,
+        |    string_split($normText, ' ') AS t
+        |  FROM documents WHERE text IS NOT NULL),
+        |$simhashPairsTail""".stripMargin),
     // A/B test: deterministic md5-parity arm split over users, pooled
     // two-proportion z on purchase conversion; math runs on a 2-row frame
-    "q96_ab_test" -> { (s, d) =>
+    Gated("q96_ab_test", { (s, d) =>
       graft.analysis.Stats.twoProportionZ(
         Tables.events(s, d), unitCol = "user_id",
         outcomeCol = col("event_type") === "purchase" && col("value") > 180)
-    },
+    }, """WITH per_unit AS (
+        |  SELECT user_id,
+        |    max(CASE WHEN event_type = 'purchase' AND value > 180 THEN 1 ELSE 0 END) AS converted
+        |  FROM events GROUP BY user_id),
+        |armed AS (
+        |  SELECT converted,
+        |    CASE WHEN ('0x' || substr(md5(user_id::VARCHAR), 1, 1))::BIGINT % 2 = 0
+        |         THEN 'A' ELSE 'B' END AS arm
+        |  FROM per_unit),
+        |arms AS (SELECT arm, count(*) AS n, sum(converted) AS conv
+        |         FROM armed GROUP BY arm),
+        |wide AS (SELECT
+        |  CAST(max(CASE WHEN arm = 'A' THEN n END) AS BIGINT) AS n_a,
+        |  CAST(max(CASE WHEN arm = 'A' THEN conv END) AS BIGINT) AS conv_a,
+        |  CAST(max(CASE WHEN arm = 'B' THEN n END) AS BIGINT) AS n_b,
+        |  CAST(max(CASE WHEN arm = 'B' THEN conv END) AS BIGINT) AS conv_b
+        |  FROM arms)
+        |SELECT n_a, conv_a, n_b, conv_b,
+        |  round(conv_a::DOUBLE / n_a::DOUBLE, 4) AS rate_a,
+        |  round(conv_b::DOUBLE / n_b::DOUBLE, 4) AS rate_b,
+        |  round((conv_a::DOUBLE / n_a::DOUBLE - conv_b::DOUBLE / n_b::DOUBLE)
+        |    / sqrt(((conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+        |      * (1.0::DOUBLE - (conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+        |      * (1.0::DOUBLE / n_a::DOUBLE + 1.0::DOUBLE / n_b::DOUBLE)), 4) AS z_score,
+        |  abs((conv_a::DOUBLE / n_a::DOUBLE - conv_b::DOUBLE / n_b::DOUBLE)
+        |    / sqrt(((conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+        |      * (1.0::DOUBLE - (conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
+        |      * (1.0::DOUBLE / n_a::DOUBLE + 1.0::DOUBLE / n_b::DOUBLE))) > 1.96
+        |    AS significant
+        |FROM wide""".stripMargin),
     // chi-square independence of (lang, source): marginals broadcast back
     // onto the contingency cells, DECIMAL-summed (O-E)^2/E
-    "q97_chi_square" -> { (s, d) =>
+    Gated("q97_chi_square", { (s, d) =>
       graft.analysis.Stats.chiSquare(TestData.documents(s, d), "lang", "source")
-    },
+    }, """WITH obs AS (
+        |  SELECT lang AS a, source AS b, count(*) AS o
+        |  FROM documents GROUP BY 1, 2),
+        |ra AS (SELECT a, sum(o) AS ra FROM obs GROUP BY a),
+        |cb AS (SELECT b, sum(o) AS cb FROM obs GROUP BY b),
+        |nn AS (SELECT sum(o)::DOUBLE AS n FROM obs),
+        |cells AS (
+        |  SELECT coalesce(o, 0) AS o, ra::DOUBLE * cb::DOUBLE / n AS e
+        |  FROM ra CROSS JOIN cb LEFT JOIN obs USING (a, b) CROSS JOIN nn),
+        |terms AS (
+        |  SELECT CAST((o::DOUBLE - e) * (o::DOUBLE - e) / e AS DECIMAL(28,12)) AS t
+        |  FROM cells)
+        |SELECT round(CAST(sum(t) AS DOUBLE), 4) AS chi2,
+        |  CAST(((SELECT count(*) FROM ra) - 1) * ((SELECT count(*) FROM cb) - 1) AS INT) AS dof,
+        |  count(*) AS n_cells
+        |FROM terms""".stripMargin),
     // per-doc token Shannon entropy (perplexity stand-in): two map-side
     // combinable aggregates, DECIMAL-summed c*log2(c) terms
-    "q94_token_entropy" -> { (s, d) =>
+    Gated("q94_token_entropy", { (s, d) =>
       TextAnalysis.tokenEntropy(TestData.documents(s, d)).orderBy("doc_id")
     },
+      // H = log2(n) − (Σ c·log2 c)/n with the sum in DECIMAL(28,12) exactly
+      // like the engine; n_tokens cast to BIGINT (DuckDB sum() is HUGEINT)
+      s"""WITH toks AS (
+        |  SELECT doc_id, unnest(string_split($normText, ' ')) AS tok
+        |  FROM documents),
+        |counts AS (
+        |  SELECT doc_id, tok, count(*) AS c FROM toks WHERE tok <> ''
+        |  GROUP BY doc_id, tok),
+        |agg AS (
+        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
+        |    count(*) AS n_distinct,
+        |    sum(CAST(c::DOUBLE * log2(c::DOUBLE) AS DECIMAL(28,12))) AS clogc
+        |  FROM counts GROUP BY doc_id)
+        |SELECT doc_id, n_tokens, n_distinct,
+        |  round(log2(n_tokens::DOUBLE) - clogc::DOUBLE / n_tokens::DOUBLE, 4)
+        |    AS token_entropy
+        |FROM agg ORDER BY doc_id""".stripMargin),
     // sorted batch packing: distributed global rank (range partition +
     // per-partition offsets, never a one-task window), per-batch padding
-    "q95_batch_packing" -> { (s, d) =>
+    Gated("q95_batch_packing", { (s, d) =>
       CorpusPrep.lengthBucketedBatches(TestData.documents(s, d), batchSize = 16)
         .orderBy("batch_id")
     },
+      // rank by (n_tok desc, doc_id) = the engine's distributed order; the
+      // oracle can afford the single-node window the engine avoids
+      s"""WITH sized AS (
+        |  SELECT doc_id,
+        |    coalesce(len(list_filter(string_split($normText, ' '), x -> x <> '')), 0) AS n_tok
+        |  FROM documents),
+        |ranked AS (
+        |  SELECT n_tok,
+        |    row_number() OVER (ORDER BY n_tok DESC, doc_id) AS rnk
+        |  FROM sized),
+        |batches AS (
+        |  SELECT CAST(floor((rnk - 1) / 16.0) AS INT) AS batch_id, n_tok FROM ranked)
+        |SELECT batch_id, count(*) AS n_docs, max(n_tok) AS max_tokens,
+        |  CAST(sum(n_tok) AS BIGINT) AS total_tokens,
+        |  CASE WHEN max(n_tok) > 0
+        |    THEN round(1.0::DOUBLE - CAST(sum(n_tok) AS DOUBLE) /
+        |      (count(*) * max(n_tok))::DOUBLE, 4)
+        |    ELSE 0.0::DOUBLE END AS padding_frac
+        |FROM batches GROUP BY batch_id ORDER BY batch_id""".stripMargin),
     // Morton (Z-order) clustering key: pure shift/mask interleave of two
     // bounded dimensions - the layout key behind 2-D zone-map skipping
-    "q93_zorder_key" -> { (s, d) =>
+    Gated("q93_zorder_key", { (s, d) =>
       val o = Tables.orders(s, d).select(
         col("o_orderkey"),
         col("o_custkey").bitwiseAND(lit(1023)).as("x"),
@@ -2547,9 +5855,19 @@ object SparkEntry {
           graft.functions.ZOrder.zValue(col("x"), col("y"), bits = 10).as("zkey"))
         .orderBy("o_orderkey")
     },
+      // same interleave spelled out in SQL bit arithmetic (10 bits per axis)
+      {
+        val terms = (0 until 10).map(i =>
+          s"((((x >> $i) & 1) << ${2 * i}) | (((y >> $i) & 1) << ${2 * i + 1}))")
+          .mkString(" | ")
+        s"""SELECT o_orderkey, CAST($terms AS BIGINT) AS zkey
+           |FROM (SELECT o_orderkey, o_custkey & 1023 AS x, o_orderkey & 1023 AS y
+           |      FROM orders)
+           |ORDER BY o_orderkey""".stripMargin
+      }),
     // Fellegi-Sunter record linkage: every blocked pair scored (agreement
     // AND disagreement weights), links at score >= 5; DP once per pair
-    "q92_record_linkage" -> { (s, d) =>
+    Gated("q92_record_linkage", { (s, d) =>
       Dedup.linkageScores(Tables.part(s, d),
           idCol = "p_partkey",
           blocks = Seq(
@@ -2559,10 +5877,31 @@ object SparkEntry {
           fuzzyField = "p_name", fuzzyMaxDist = 3,
           fuzzyWeights = (4.0, -2.0), threshold = 5.0)
         .orderBy("id_a", "id_b")
-    },
+    }, """WITH side AS (
+        |  SELECT p_partkey, p_name, p_size, p_type, p_brand,
+        |    string_split(p_name, ' ')[1] AS tok1
+        |  FROM part),
+        |pairs AS (
+        |  SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
+        |    (a.p_size = b.p_size)::INT AS agree_p_size,
+        |    (a.p_type = b.p_type)::INT AS agree_p_type,
+        |    levenshtein(a.p_name, b.p_name) AS lev
+        |  FROM side a JOIN side b
+        |    ON a.p_brand = b.p_brand AND a.tok1 = b.tok1
+        |   AND a.p_partkey < b.p_partkey),
+        |sc AS (
+        |  SELECT id_a, id_b, agree_p_size, agree_p_type,
+        |    CASE WHEN lev <= 3 THEN lev END AS name_distance,
+        |    round((CASE WHEN agree_p_size = 1 THEN 2.0 ELSE -1.0 END
+        |        + CASE WHEN agree_p_type = 1 THEN 3.0 ELSE -1.0 END
+        |        + CASE WHEN lev <= 3 THEN 4.0 ELSE -2.0 END)::DOUBLE, 4) AS score
+        |  FROM pairs)
+        |SELECT id_a, id_b, agree_p_size, agree_p_type,
+        |  CAST(name_distance AS INT) AS name_distance, score
+        |FROM sc WHERE score >= 5.0 ORDER BY id_a, id_b""".stripMargin),
     // bloom-prefiltered semi-join: probe side pruned at the scan before the
     // shuffle; exact semi-join after the filter restores exactness
-    "q90_bloom_semijoin" -> { (s, d) =>
+    Gated("q90_bloom_semijoin", { (s, d) =>
       val bigOrders = Tables.orders(s, d).filter(col("o_totalprice") > 400000)
         .select("o_orderkey")
       graft.relational.BloomJoin.semiJoin(
@@ -2571,26 +5910,46 @@ object SparkEntry {
           expectedItems = 50000)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         .orderBy("l_orderkey", "l_linenumber")
-    },
+    }, """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |FROM lineitem l
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_orderkey = l.l_orderkey AND o.o_totalprice > 400000)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
     // 2-D Pareto frontier: distinct-axis aggregate + cumulative-min sweep
     // instead of the O(n²) NOT EXISTS dominance join
-    "q91_pareto_frontier" -> { (s, d) =>
+    Gated("q91_pareto_frontier", { (s, d) =>
       Relational.paretoFrontier(Tables.part(s, d),
           idCol = "p_partkey", maxCol = "p_size", minCol = "p_retailprice")
         .orderBy("p_partkey")
     },
+      // dominance semantics spelled out: >= / <= both axes, strict on one;
+      // the engine's sweep formulation must agree with this definition exactly
+      """SELECT p_partkey, p_size, p_retailprice
+        |FROM part p
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM part q
+        |  WHERE q.p_size >= p.p_size AND q.p_retailprice <= p.p_retailprice
+        |    AND (q.p_size > p.p_size OR q.p_retailprice < p.p_retailprice))
+        |ORDER BY p_partkey""".stripMargin),
     // gaps-and-islands: maximal consecutive-active-day streaks per user via
     // the day − row_number constant-group trick — one window pass, no joins
-    "q87_activity_streaks" -> { (s, d) =>
+    Gated("q87_activity_streaks", { (s, d) =>
       TimeSeries.activityStreaks(
           TestData.eventsRaw(s, d).withColumn("day", to_date(col("ts"))),
           keyCol = "user_id", dayCol = "day")
         .withColumnRenamed("key", "user_id")
         .orderBy("user_id", "streak_start")
-    },
+    }, """WITH active AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
+        |x AS (SELECT user_id, day,
+        |        row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
+        |      FROM active)
+        |SELECT user_id, min(day) AS streak_start, max(day) AS streak_end,
+        |  count(*) AS len_days
+        |FROM (SELECT user_id, day, day - rn::INTEGER AS grp FROM x)
+        |GROUP BY user_id, grp ORDER BY user_id, streak_start""".stripMargin),
     // windowed EWMA smoothing of per-type daily traffic: two running sums
     // (value and weight, both pre-scaled by (1-α)^-rn) — codegen'd, no arrays
-    "q88_ewma_traffic" -> { (s, d) =>
+    Gated("q88_ewma_traffic", { (s, d) =>
       val daily = TestData.eventsRaw(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
@@ -2598,28 +5957,72 @@ object SparkEntry {
           valCol = "n", alpha = 0.3, lookback = 14)
         .orderBy("event_type", "day")
     },
+      // ::DOUBLE casts force IEEE arithmetic (DuckDB decimal literals would
+      // otherwise compute 1-0.3 exactly and diverge from the engine's doubles)
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |x AS (SELECT event_type, day, n,
+        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
+        |      FROM daily)
+        |SELECT event_type, day, n,
+        |  round(sum(n * pow(1.0::DOUBLE / (1.0::DOUBLE - 0.3::DOUBLE), rn)) OVER w
+        |        / sum(pow(1.0::DOUBLE / (1.0::DOUBLE - 0.3::DOUBLE), rn)) OVER w, 4) AS ewma
+        |FROM x
+        |WINDOW w AS (PARTITION BY event_type ORDER BY day
+        |             ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_type, day""".stripMargin),
     // level-shift changepoints: trailing vs preceding 7-day mean jump > 5
     // events/day — CUSUM recast as two window frames so it distributes
-    "q89_level_shifts" -> { (s, d) =>
+    Gated("q89_level_shifts", { (s, d) =>
       val daily = TestData.eventsRaw(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n"))
       TimeSeries.levelShifts(daily, keyCol = "event_type", orderCol = "day",
           valCol = "n", width = 7, threshold = 5.0)
         .orderBy("event_type", "day")
-    },
+    }, """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |x AS (SELECT event_type, day, n,
+        |  count(*) OVER a AS na, count(*) OVER b AS nb,
+        |  round(avg(n) OVER b, 4) AS before_mean, round(avg(n) OVER a, 4) AS after_mean
+        |  FROM daily
+        |  WINDOW a AS (PARTITION BY event_type ORDER BY day
+        |               ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING),
+        |         b AS (PARTITION BY event_type ORDER BY day
+        |               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
+        |SELECT event_type, day, n, before_mean, after_mean,
+        |  round(after_mean - before_mean, 4) AS shift
+        |FROM x
+        |WHERE na = 7 AND nb = 7 AND abs(round(after_mean - before_mean, 4)) > 5
+        |ORDER BY event_type, day""".stripMargin),
     // landmark harmonic centrality: sum of 1/d over the BFS distances -
     // the sampling approximation of the all-pairs definition
-    "q113_harmonic_centrality" -> { (s, d) =>
+    Gated("q113_harmonic_centrality", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.harmonicCentrality(edges, landmarks = Seq(1, 2, 3, 4, 5), maxHops = 4)
         .withColumnRenamed("id", "document_id")
         .orderBy("document_id")
     },
+      // q86's recursive BFS, then sum 1/d per node in DECIMAL
+      s"""WITH RECURSIVE $sessionClicksCtes,
+        |$coClickWalkCtes,
+        |walk(id, landmark, d) AS (
+        |  SELECT DISTINCT u, u, 0 FROM sym WHERE u IN (1, 2, 3, 4, 5)
+        |  UNION
+        |  SELECT e.v, w.landmark, w.d + 1
+        |  FROM walk w JOIN sym e ON e.u = w.id WHERE w.d < 4),
+        |dist AS (SELECT id, landmark, min(d) AS d FROM walk GROUP BY 1, 2)
+        |SELECT id AS document_id, count(*) AS n_landmarks_reached,
+        |  round(CAST(sum(CAST(1.0::DOUBLE / d::DOUBLE AS DECIMAL(28,12))) AS DOUBLE), 6)
+        |    AS harmonic
+        |FROM dist WHERE d > 0
+        |GROUP BY id ORDER BY id""".stripMargin),
     // bounded-hop multi-source BFS over the co-click graph: distance to 3
     // landmark docs; per-hop join + min-agg, state = nodes × landmarks
-    "q86_shortest_paths" -> { (s, d) =>
+    Gated("q86_shortest_paths", { (s, d) =>
       val edges = Graphs.cooccurrenceEdges(
         TestData.clicks(s, d), "session_id", "document_id", maxPerKey = 100)
       Graphs.shortestPaths(edges, landmarks = Seq(1, 2, 3), maxHops = 4)
@@ -2628,34 +6031,112 @@ object SparkEntry {
           col("dist").cast("bigint").as("dist"))
         .orderBy("document_id", "landmark")
     },
+      // BFS as a bounded recursive CTE: distinct-union recursion terminates at
+      // the hop bound, min(d) collapses multiple paths exactly like the
+      // engine's per-round min-aggregate
+      s"""WITH RECURSIVE $sessionClicksCtes,
+        |$coClickWalkCtes,
+        |walk(id, landmark, d) AS (
+        |  SELECT DISTINCT u, u, 0 FROM sym WHERE u IN (1, 2, 3)
+        |  UNION
+        |  SELECT e.v, w.landmark, w.d + 1
+        |  FROM walk w JOIN sym e ON e.u = w.id WHERE w.d < 4)
+        |SELECT id AS document_id, landmark, CAST(min(d) AS BIGINT) AS dist
+        |FROM walk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // KMV bottom-k distinct sketch: O(k) state per group vs count(distinct)'s
     // unbounded shuffle; md5-parity hashing makes the estimate oracle-exact
-    "q84_kmv_distinct" -> { (s, d) =>
+    Gated("q84_kmv_distinct", { (s, d) =>
       graft.analysis.Sketches.distinctEstimate(
         Tables.events(s, d), groupCol = "event_type", valueCol = "user_id", k = 64)
-    },
+    }, """WITH h AS (
+        |  SELECT DISTINCT event_type,
+        |    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
+        |  FROM events),
+        |r AS (
+        |  SELECT event_type, hv,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
+        |  FROM h),
+        |s AS (
+        |  SELECT event_type, count(*) AS n, max(hv) AS kth
+        |  FROM r WHERE rn <= 64 GROUP BY event_type)
+        |SELECT event_type,
+        |  CASE WHEN n < 64 THEN round(n::DOUBLE, 4)
+        |       ELSE round(63 * 1152921504606846976.0 / kth, 4) END AS est_distinct
+        |FROM s ORDER BY event_type""".stripMargin),
     // HLL registers beside q84's KMV on the same question: 64 registers,
     // rho from hex leading-zeros (no log2-of-double), small-range corrected
-    "q130_hll_distinct" -> { (s, d) =>
+    Gated("q130_hll_distinct", { (s, d) =>
       graft.analysis.Sketches.hllEstimate(
         Tables.events(s, d), groupCol = "event_type", valueCol = "user_id")
     },
+      // replicates the bottom-64 KMV sketch bit-for-bit: same 60-bit md5 hash,
+      // same (k-1)/U(k) estimator, exact below k distinct values
+      // HLL registers rebuilt from the same md5 hex: bucket = first 2 chars
+      // mod 64, rho = leading-zero chars + nibble CASE (never log2-of-double)
+      """WITH h AS (
+        |  SELECT event_type, md5(user_id::VARCHAR) AS hex FROM events),
+        |t AS (
+        |  SELECT event_type,
+        |    CAST(('0x' || substring(hex, 1, 2))::BIGINT % 64 AS INT) AS bucket,
+        |    substring(hex, 3, 13) AS tail,
+        |    length(regexp_extract(substring(hex, 3, 13), '^(0*)', 1)) AS z
+        |  FROM h),
+        |rr AS (
+        |  SELECT event_type, bucket,
+        |    CASE WHEN z = 13 THEN 53
+        |         ELSE 4 * z + CASE WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 8 THEN 1
+        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 4 THEN 2
+        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 2 THEN 3
+        |                           ELSE 4 END
+        |    END AS rho
+        |  FROM t),
+        |regs AS (SELECT event_type, bucket, max(rho) AS reg FROM rr GROUP BY 1, 2),
+        |agg AS (
+        |  SELECT event_type, count(*) AS used,
+        |    sum(CAST(pow(2.0, -reg) AS DECIMAL(38,30))) AS s_present
+        |  FROM regs GROUP BY 1),
+        |fin AS (
+        |  SELECT event_type,
+        |    CAST(s_present AS DOUBLE) + (64 - used) AS s,
+        |    64 - used AS v
+        |  FROM agg)
+        |SELECT event_type,
+        |  round(CASE WHEN (0.709::DOUBLE * 64 * 64) / s <= 160 AND v > 0
+        |             THEN 64.0::DOUBLE * ln(64.0::DOUBLE / v)
+        |             ELSE (0.709::DOUBLE * 64 * 64) / s END, 4) AS est_distinct
+        |FROM fin ORDER BY event_type""".stripMargin),
     // sketch mergeability: per-day sketches merged into one union estimate —
     // the property exact distinct counts lack (no rescan of history)
-    "q85_kmv_union" -> { (s, d) =>
+    Gated("q85_kmv_union", { (s, d) =>
       graft.analysis.Sketches.unionEstimate(
         TestData.eventsRaw(s, d).withColumn("day", to_date(col("ts"))),
         valueCol = "user_id", k = 64, partitionCol = Some("day"))
     },
+      // union-of-days sketch == sketch of the union, so the oracle can skip
+      // the per-day stage and take bottom-64 over all distinct user hashes
+      """WITH h AS (
+        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
+        |  FROM events),
+        |r AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM h),
+        |s AS (SELECT count(*) AS n, max(hv) AS kth FROM r WHERE rn <= 64)
+        |SELECT CASE WHEN n < 64 THEN round(n::DOUBLE, 4)
+        |            ELSE round(63 * 1152921504606846976.0 / kth, 4) END AS est_distinct
+        |FROM s""".stripMargin),
     // rank-function breadth: dense_rank / percent_rank / cume_dist in one
     // window pass per priority class
-    "q65_rank_analytics" -> { (s, d) =>
+    Gated("q65_rank_analytics", { (s, d) =>
       Relational.priceRankAnalytics(Tables.orders(s, d)).orderBy("o_orderkey")
-    },
+    }, """SELECT o_orderpriority, o_orderkey, o_totalprice,
+        |  CAST(dense_rank() OVER w AS INT) AS price_dense_rank,
+        |  round(percent_rank() OVER w, 6) AS price_percent_rank,
+        |  round(cume_dist() OVER w, 6) AS price_cume_dist
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)
+        |ORDER BY o_orderkey""".stripMargin),
     // one-pass data-quality profile of orders (nulls / cardinality / range
     // per column); doubles pre-cast to DECIMAL so min/max strings render
     // identically across engines
-    "q63_profile" -> { (s, d) =>
+    Gated("q63_profile", { (s, d) =>
       val orders = Tables.orders(s, d).select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice").cast("decimal(12,2)").as("o_totalprice"),
@@ -2664,16 +6145,51 @@ object SparkEntry {
           Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate", "o_orderpriority"))
         .orderBy("column_name")
-    },
+    }, """WITH o AS (
+        |  SELECT o_orderkey, o_custkey, o_orderstatus,
+        |    CAST(o_totalprice AS DECIMAL(12,2)) AS o_totalprice,
+        |    CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
+        |  FROM orders)
+        |SELECT * FROM (
+        |  SELECT 'o_orderkey' AS column_name, count(*) - count(o_orderkey) AS n_nulls,
+        |    count(DISTINCT o_orderkey) AS n_distinct,
+        |    CAST(min(o_orderkey) AS VARCHAR) AS min_value, CAST(max(o_orderkey) AS VARCHAR) AS max_value FROM o
+        |  UNION ALL
+        |  SELECT 'o_custkey', count(*) - count(o_custkey), count(DISTINCT o_custkey),
+        |    CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderstatus', count(*) - count(o_orderstatus), count(DISTINCT o_orderstatus),
+        |    CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_totalprice', count(*) - count(o_totalprice), count(DISTINCT o_totalprice),
+        |    CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderdate', count(*) - count(o_orderdate), count(DISTINCT o_orderdate),
+        |    CAST(min(o_orderdate) AS VARCHAR), CAST(max(o_orderdate) AS VARCHAR) FROM o
+        |  UNION ALL
+        |  SELECT 'o_orderpriority', count(*) - count(o_orderpriority), count(DISTINCT o_orderpriority),
+        |    CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM o)
+        |ORDER BY column_name""".stripMargin),
     // robust outliers: median + MAD per event type, k=6 robust z-score
-    "q62_mad_outliers" -> { (s, d) =>
+    Gated("q62_mad_outliers", { (s, d) =>
       Relational.madOutliers(TestData.clicks(s, d),
           groupCol = "event_type", idCol = "event_id", valCol = "value", k = 6.0)
         .orderBy("event_id")
-    },
+    }, """WITH e AS (SELECT event_id, event_type, value FROM events),
+        |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med FROM e GROUP BY 1),
+        |d AS (
+        |  SELECT e.event_type, e.event_id, e.value, m.med, abs(e.value - m.med) AS absdev
+        |  FROM e JOIN m ON e.event_type = m.event_type),
+        |md AS (SELECT event_type, quantile_cont(absdev, 0.5) AS mad FROM d GROUP BY 1)
+        |SELECT d.event_type, d.event_id, d.value,
+        |  round(d.med, 6) AS median, round(md.mad, 6) AS mad,
+        |  round(d.absdev / md.mad, 4) AS robust_z
+        |FROM d JOIN md ON d.event_type = md.event_type
+        |WHERE d.absdev > 6 * md.mad
+        |ORDER BY d.event_id""".stripMargin),
     // calendar gap fill + forward fill: dense date spine per nation over
     // sparse high-value order days, last observation carried forward
-    "q60_gap_fill" -> { (s, d) =>
+    Gated("q60_gap_fill", { (s, d) =>
       val daily = Tables.orders(s, d)
         .filter(col("o_totalprice") > 450000)
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
@@ -2682,54 +6198,124 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_orders"))
       Relational.gapFillDaily(daily, "nation_name", "day", "n_orders")
         .orderBy("nation_name", "day")
-    },
+    }, """WITH daily AS (
+        |  SELECT n_name AS nation_name, CAST(o_orderdate AS DATE) AS day, count(*) AS n_orders
+        |  FROM orders JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  WHERE o_totalprice > 450000 GROUP BY 1, 2),
+        |b AS (SELECT nation_name, min(day) AS mn, max(day) AS mx FROM daily GROUP BY 1),
+        |spine AS (
+        |  SELECT nation_name,
+        |    CAST(unnest(generate_series(CAST(mn AS TIMESTAMP), CAST(mx AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day
+        |  FROM b),
+        |j AS (
+        |  SELECT s.nation_name, s.day, d.n_orders
+        |  FROM spine s LEFT JOIN daily d ON s.nation_name = d.nation_name AND s.day = d.day)
+        |SELECT nation_name, day, n_orders,
+        |  last_value(n_orders IGNORE NULLS) OVER (PARTITION BY nation_name ORDER BY day
+        |    ROWS UNBOUNDED PRECEDING) AS filled,
+        |  n_orders IS NULL AS is_filled
+        |FROM j ORDER BY nation_name, day""".stripMargin),
     // ordered funnel: per-session earliest step times, each step strictly
     // after the previous (view → click → purchase)
-    "q61_funnel" -> { (s, d) =>
+    Gated("q61_funnel", { (s, d) =>
       graft.analysis.Funnel.stepTimes(TestData.clicks(s, d),
           Seq("view", "click", "purchase"), keyCol = "session_id",
           typeCol = "event_type", tsCol = "event_ts")
         .orderBy("session_id")
-    },
+    }, """WITH e AS (
+        |  SELECT CAST(user_id AS VARCHAR) AS sid, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |s1 AS (SELECT sid, min(ts) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
+        |s2 AS (
+        |  SELECT e.sid, min(ts) AS t2 FROM e JOIN s1 ON e.sid = s1.sid
+        |  WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
+        |s3 AS (
+        |  SELECT e.sid, min(ts) AS t3 FROM e JOIN s2 ON e.sid = s2.sid
+        |  WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1)
+        |SELECT s1.sid AS session_id, t1, t2, t3
+        |FROM s1 LEFT JOIN s2 ON s1.sid = s2.sid LEFT JOIN s3 ON s1.sid = s3.sid
+        |ORDER BY session_id""".stripMargin),
     // unpivot (melt): the pivot round-trip back to long form — Expand
     // projection, zero shuffle beyond the pivot it inverts
-    "q59_melt_pivot" -> { (s, d) =>
+    Gated("q59_melt_pivot", { (s, d) =>
       val types = Seq("click", "error", "purchase", "signup", "view")
       Relational.melt(
           Relational.dailyTypePivot(TestData.clicks(s, d), types),
           ids = Seq("event_date"), values = types, varName = "event_type", valName = "cnt")
         .orderBy("event_date", "event_type")
-    }
+    }, """WITH c AS (
+        |  SELECT CAST(ts AS DATE) AS event_date, event_type, count(*) AS cnt
+        |  FROM events GROUP BY 1, 2),
+        |d AS (SELECT DISTINCT CAST(ts AS DATE) AS event_date FROM events),
+        |t AS (SELECT unnest(['click', 'error', 'purchase', 'signup', 'view']) AS event_type)
+        |SELECT d.event_date, t.event_type, COALESCE(c.cnt, 0) AS cnt
+        |FROM d CROSS JOIN t
+        |LEFT JOIN c ON c.event_date = d.event_date AND c.event_type = t.event_type
+        |ORDER BY d.event_date, t.event_type""".stripMargin)
   )
 
-  private def martQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private def martQueries: Seq[Gated] = Seq(
     // #1 mart_session_analysis (SURVEY §2.6.1: A1,A2,A3,P9)
-    "q01_session_analysis" -> { (s, d) =>
+    Gated("q01_session_analysis", { (s, d) =>
       ColdMarts.sessionAnalysis(TestData.clicks(s, d))
         .orderBy("session_id", "event_date")
-    },
+    }, """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date,
+        | count(*) AS click_count,
+        | count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs,
+        | min(CAST(ts AS TIMESTAMP)) AS first_click_ts,
+        | max(CAST(ts AS TIMESTAMP)) AS last_click_ts,
+        | date_diff('second', min(CAST(ts AS TIMESTAMP)), max(CAST(ts AS TIMESTAMP))) AS session_duration_sec
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // #2 mart_daily_traffic (SURVEY §2.6.2: A1,A2,A4,W1,J1,P10)
-    "q02_daily_traffic" -> { (s, d) =>
+    Gated("q02_daily_traffic", { (s, d) =>
       ColdMarts.dailyTraffic(TestData.clicks(s, d)).orderBy("event_date")
-    },
+    }, """WITH c AS (
+        |  SELECT CAST(ts AS DATE) AS event_date, hour(CAST(ts AS TIMESTAMP)) AS h,
+        |         CAST(user_id AS VARCHAR) AS session_id,
+        |         CAST(props->>'$.k' AS INTEGER) AS document_id
+        |  FROM events),
+        |hourly AS (SELECT event_date, h, count(*) AS hc FROM c GROUP BY 1, 2),
+        |peak AS (
+        |  SELECT event_date, h AS peak_hour FROM (
+        |    SELECT event_date, h, row_number() OVER (PARTITION BY event_date ORDER BY hc DESC, h) AS rn
+        |    FROM hourly) WHERE rn = 1),
+        |daily AS (
+        |  SELECT event_date, count(*) AS total_events,
+        |         count(DISTINCT session_id) AS unique_sessions,
+        |         count(DISTINCT document_id) AS unique_documents
+        |  FROM c GROUP BY 1)
+        |SELECT d.event_date, d.total_events, d.unique_sessions, d.unique_documents, p.peak_hour
+        |FROM daily d LEFT JOIN peak p USING (event_date) ORDER BY d.event_date""".stripMargin),
     // #3 mart_clinical_areas analog (SURVEY §2.6.3: G1,P12,P13,P5,A1,A2)
-    "q03_top_terms" -> { (s, d) =>
+    Gated("q03_top_terms", { (s, d) =>
       ColdMarts.multiValueCounts(TestData.documents(s, d),
           multiCol = "text", sep = " ", sessionCol = "doc_id", valueName = "term")
         .orderBy(desc("search_count"), col("term")).limit(100)
-    },
+    }, """SELECT term, count(*) AS search_count, count(DISTINCT doc_id) AS unique_sessions
+        |FROM (SELECT doc_id, trim(unnest(string_split(text, ' '))) AS term
+        |      FROM documents WHERE text IS NOT NULL AND text <> '')
+        |WHERE term <> ''
+        |GROUP BY term ORDER BY search_count DESC, term LIMIT 100""".stripMargin),
     // #4 mart_popular_documents (SURVEY §2.6.4: A1,A2,O1)
-    "q04_popular_documents" -> { (s, d) =>
+    Gated("q04_popular_documents", { (s, d) =>
       ColdMarts.popularDocuments(TestData.clicks(s, d))
-    },
+    }, """SELECT CAST(ts AS DATE) AS event_date,
+        | CAST(props->>'$.k' AS INTEGER) AS document_id,
+        | count(*) AS view_count,
+        | count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 3 DESC, 2""".stripMargin),
     // #5 mart_realtime_traffic_minute (SURVEY §2.6.5: P11,A1,A2)
-    "q05_traffic_minute" -> { (s, d) =>
+    Gated("q05_traffic_minute", { (s, d) =>
       HotMarts.trafficPerMinute(TestData.clicks(s, d)).orderBy("event_minute")
-    },
+    }, """SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
+        | count(*) AS total_clicks,
+        | count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
+        | count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
     // hot/cold reconciliation: the hot minute mart computed on events seen
     // before a mid-minute cutoff vs the cold full recompute — late minutes
     // read cold_only, the straddled minute reads drift
-    "q66_hot_cold_reconcile" -> { (s, d) =>
+    Gated("q66_hot_cold_reconcile", { (s, d) =>
       val clicks = TestData.clicks(s, d)
       val cutoff = lit("2024-01-20 09:25:30").cast("timestamp")
       graft.pipeline.Reconcile.diff(
@@ -2737,38 +6323,562 @@ object SparkEntry {
           HotMarts.trafficPerMinute(clicks),
           Seq("event_minute"), Seq("total_clicks", "unique_sessions", "unique_docs"))
         .orderBy("event_minute")
-    },
+    }, """WITH cold AS (
+        |  SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
+        |    count(*) AS total_clicks,
+        |    count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
+        |    count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
+        |  FROM events GROUP BY 1),
+        |hot AS (
+        |  SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
+        |    count(*) AS total_clicks,
+        |    count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
+        |    count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
+        |  FROM events WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20 09:25:30'
+        |  GROUP BY 1),
+        |hh AS (
+        |  SELECT event_minute, md5(concat_ws('|', CAST(total_clicks AS VARCHAR),
+        |    CAST(unique_sessions AS VARCHAR), CAST(unique_docs AS VARCHAR))) AS old_hash
+        |  FROM hot),
+        |ch AS (
+        |  SELECT event_minute, md5(concat_ws('|', CAST(total_clicks AS VARCHAR),
+        |    CAST(unique_sessions AS VARCHAR), CAST(unique_docs AS VARCHAR))) AS new_hash
+        |  FROM cold)
+        |SELECT event_minute, old_hash, new_hash,
+        |  CASE WHEN old_hash IS NULL THEN 'cold_only'
+        |       WHEN new_hash IS NULL THEN 'hot_only'
+        |       ELSE 'drift' END AS status
+        |FROM hh FULL OUTER JOIN ch USING (event_minute)
+        |WHERE old_hash IS NULL OR new_hash IS NULL OR old_hash <> new_hash
+        |ORDER BY event_minute""".stripMargin),
     // #6 mart_realtime_top_docs (SURVEY §2.6.6: W2,O2)
-    "q06_top_docs" -> { (s, d) =>
+    Gated("q06_top_docs", { (s, d) =>
       HotMarts.topDocs(TestData.clicks(s, d), k = 20).orderBy("rank")
-    },
+    }, """SELECT document_id, click_count, unique_sessions, "rank" FROM (
+        | SELECT CAST(props->>'$.k' AS INTEGER) AS document_id,
+        |        count(*) AS click_count,
+        |        count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
+        |        row_number() OVER (ORDER BY count(*) DESC, CAST(props->>'$.k' AS INTEGER)) AS "rank"
+        | FROM events GROUP BY 1)
+        |WHERE "rank" <= 20 ORDER BY "rank"""".stripMargin),
     // #7 mart_realtime_clinical_trend, trend_pct implemented (SURVEY §2.6.7)
-    "q07_category_trend" -> { (s, d) =>
+    Gated("q07_category_trend", { (s, d) =>
       val counts = TestData.clicks(s, d)
         .groupBy("event_date", "event_type")
         .agg(count(lit(1)).as("clicks"),
              countDistinct(col("session_id")).as("unique_sessions"))
       HotMarts.categoryTrend(counts, "event_type", "event_date", "clicks")
         .orderBy("event_type", "event_date")
-    },
+    }, """WITH counts AS (
+        |  SELECT CAST(ts AS DATE) AS event_date, event_type,
+        |         count(*) AS clicks,
+        |         count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions
+        |  FROM events GROUP BY 1, 2)
+        |SELECT event_date, event_type, clicks, unique_sessions,
+        |  round((clicks - lag(clicks) OVER w) * 100.0 / lag(clicks) OVER w, 2) AS trend_pct
+        |FROM counts WINDOW w AS (PARTITION BY event_type ORDER BY event_date)
+        |ORDER BY event_type, event_date""".stripMargin),
     // #8 mart_realtime_anomaly_sessions (SURVEY §2.6.8: A5,P14,P15)
     //    thresholds scaled to the synthetic table's traffic density
-    "q08_anomaly_sessions" -> { (s, d) =>
+    Gated("q08_anomaly_sessions", { (s, d) =>
       HotMarts.anomalySessions(TestData.clicks(s, d),
           windowDuration = "5 minutes", warnAt = 2, criticalAt = 3)
         .orderBy("window_start", "session_id")
-    },
+    }, """SELECT time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) AS window_start,
+        | time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) + INTERVAL '5 minutes' AS window_end,
+        | CAST(user_id AS VARCHAR) AS session_id,
+        | count(*) AS event_count,
+        | CASE WHEN count(*) >= 3 THEN 'CRITICAL' ELSE 'WARNING' END AS severity
+        |FROM events GROUP BY 1, 2, 3 HAVING count(*) >= 2
+        |ORDER BY 1, 3""".stripMargin),
     // D1 analog, replay-deterministic batch dedup (SURVEY §2.4 D1)
-    "q09_dedup_first_click" -> { (s, d) =>
+    Gated("q09_dedup_first_click", { (s, d) =>
       Normalizer.dedupFirst(TestData.clicks(s, d),
           keys = Seq("session_id", "event_type", "event_date"),
           orderCols = Seq(col("event_ts"), col("event_id")))
         .select("event_id", "session_id", "event_type", "event_date", "event_ts")
         .orderBy("event_id")
-    }
+    }, """SELECT event_id, session_id, event_type, event_date, event_ts FROM (
+        | SELECT event_id, CAST(user_id AS VARCHAR) AS session_id, event_type,
+        |        CAST(ts AS DATE) AS event_date, CAST(ts AS TIMESTAMP) AS event_ts,
+        |        row_number() OVER (PARTITION BY CAST(user_id AS VARCHAR), event_type, CAST(ts AS DATE)
+        |                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
+        | FROM events) WHERE rn = 1 ORDER BY event_id""".stripMargin)
   )
 
-  /** DuckDB oracle for each query key, against the same parquet tables. */
+  /** `text` as the engine normalizes it (TextAnalysis.normalized): lower
+    * case, non-alphanumerics to spaces, whitespace runs collapsed, trimmed.
+    * Every text oracle tokenizes with `string_split($normText, ' ')`. */
+  private val normText: String =
+    """trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))"""
+
+  /** Normalized tokens (`toks`) and distinct word 3-shingle sets (`sets`)
+    * per document — the shared head of the MinHash/Jaccard oracles. */
+  private val shingleSetsCtes: String =
+    s"""toks AS (
+      |  SELECT doc_id AS id,
+      |    string_split($normText, ' ') AS t
+      |  FROM documents),
+      |sets AS (
+      |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
+      |  FROM toks WHERE len(t) >= 3)""".stripMargin
+
+  /** 16 md5 MinHash values per shingle set (`sigs`) and 4 bands of 4
+    * (`bands`) — Dedup.minhashNearDupPairs' signature and banding. */
+  private val minhashBandCtes: String =
+    """sigs AS (
+      |  SELECT id, sh,
+      |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
+      |  FROM sets),
+      |bands AS (
+      |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
+      |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b))""".stripMargin
+
+  /** [[minhashBandCtes]] and the banded candidate pairs (`cand`). */
+  private val minhashCandCtes: String =
+    s"""$minhashBandCtes,
+      |cand AS (
+      |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
+      |  FROM bands x JOIN bands y
+      |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id)""".stripMargin
+
+  /** Candidate pairs verified at exact shingle Jaccard >= 0.8 (`tp`). */
+  private val minhashVerifiedCte: String =
+    """tp AS (
+      |  SELECT doc_a, doc_b FROM (
+      |    SELECT doc_a, doc_b,
+      |      CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
+      |    FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
+      |  WHERE j >= 0.8)""".stripMargin
+
+  /** Cosine of `x.embedding` and `y.embedding` as DOUBLE sums, in the
+    * Scala fold's order. */
+  private val embeddingCosineXY: String =
+    """list_sum(list_transform(range(1, len(x.embedding) + 1),
+      |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
+      |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
+      |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))""".stripMargin
+
+  /** Distinct (session, doc) clicks from `events` (`clicks`) and the
+    * sessions with at most 100 of them (`ok`). */
+  private val sessionClicksCtes: String =
+    """clicks AS (
+      |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
+      |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
+      |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100)""".stripMargin
+
+  /** Sign-bit LSH buckets: bucket width `b` from the row count (`bits`),
+    * one bucket id per embedding from its first `b` signs (`e`). */
+  private val signBucketCtes: String =
+    """bits AS (
+      |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
+      |  FROM embeddings),
+      |e AS (
+      |  SELECT vec_id, embedding,
+      |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
+      |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
+      |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
+      |  FROM embeddings)""".stripMargin
+
+  /** q117's deterministic Lloyd quantizer: normalized vectors (`e`), the
+    * first 8 as seeds, 2 unrolled rounds, and each point's cells ranked
+    * by distance to the final centroids (`cellr`). */
+  private val lloydCellRankCtes: String =
+    """e AS (
+      |  SELECT vec_id, embedding,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
+      |      sqrt(list_sum(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS u
+      |  FROM embeddings),
+      |c0 AS (
+      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, u AS c
+      |  FROM e ORDER BY vec_id LIMIT 8),
+      |dd1 AS (
+      |  SELECT e.vec_id, c0.cluster,
+      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c0.c[i+1]) * (e.u[i+1] - c0.c[i+1]))) AS d2
+      |  FROM e CROSS JOIN c0),
+      |aa1 AS (
+      |  SELECT vec_id, cluster FROM (
+      |    SELECT vec_id, cluster,
+      |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+      |    FROM dd1) WHERE rn = 1),
+      |u1 AS (
+      |  SELECT aa1.cluster, i AS dim,
+      |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
+      |  FROM aa1 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
+      |  GROUP BY 1, 2),
+      |c1 AS (
+      |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u1 GROUP BY cluster
+      |  UNION ALL
+      |  SELECT cluster, c FROM c0 WHERE cluster NOT IN (SELECT cluster FROM u1)),
+      |dd2 AS (
+      |  SELECT e.vec_id, c1.cluster,
+      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c1.c[i+1]) * (e.u[i+1] - c1.c[i+1]))) AS d2
+      |  FROM e CROSS JOIN c1),
+      |aa2 AS (
+      |  SELECT vec_id, cluster FROM (
+      |    SELECT vec_id, cluster,
+      |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+      |    FROM dd2) WHERE rn = 1),
+      |u2 AS (
+      |  SELECT aa2.cluster, i AS dim,
+      |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
+      |  FROM aa2 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
+      |  GROUP BY 1, 2),
+      |c2 AS (
+      |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u2 GROUP BY cluster
+      |  UNION ALL
+      |  SELECT cluster, c FROM c1 WHERE cluster NOT IN (SELECT cluster FROM u2)),
+      |ddf AS (
+      |  SELECT e.vec_id, c2.cluster,
+      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c2.c[i+1]) * (e.u[i+1] - c2.c[i+1]))) AS d2
+      |  FROM e CROSS JOIN c2),
+      |cellr AS (
+      |  SELECT vec_id, cluster,
+      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
+      |  FROM ddf)""".stripMargin
+
+  /** 64-bit SimHash over md5 token hashes of `toks(doc_id, t)`, 4 bands of
+    * 16 bits, and the candidate pairs within Hamming distance 6. */
+  private val simhashPairsTail: String =
+    """hs AS (SELECT doc_id, list_transform(t, s -> substring(md5(s), 1, 16)) AS h FROM toks),
+      |bits AS (
+      |  SELECT doc_id,
+      |    list_transform(range(64), b ->
+      |      CASE WHEN list_sum(list_transform(h, x ->
+      |        CASE WHEN (((instr('0123456789abcdef', substring(x, CAST(16 - b // 4 AS INT), 1)) - 1) >> (b % 4)) & 1) = 1
+      |             THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) AS bv
+      |  FROM hs),
+      |bands AS (
+      |  SELECT doc_id, bb AS band_id,
+      |    CAST(list_sum(list_transform(range(16), j -> bv[CAST(bb*16 + j + 1 AS INT)] << j)) AS BIGINT) AS band_key
+      |  FROM bits CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(bb)),
+      |cand AS (
+      |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+      |  FROM bands x JOIN bands y
+      |    ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
+      |ham AS (
+      |  SELECT doc_a, doc_b,
+      |    CAST(list_sum(list_transform(range(64), i ->
+      |      CASE WHEN xa.bv[CAST(i + 1 AS INT)] <> yb.bv[CAST(i + 1 AS INT)] THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
+      |  FROM cand JOIN bits xa ON doc_a = xa.doc_id JOIN bits yb ON doc_b = yb.doc_id)
+      |SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= 6
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Single-arm LOF over a `d(p, o, dm)` distance CTE: k-NN by (dm, o),
+    * k-distance, integer local reachability density and the LOF ratio in
+    * ppm per point. */
+  private def lofTailSql(k: Int): String =
+    s"""knn AS MATERIALIZED (
+      |  SELECT p, o, dm FROM (
+      |    SELECT p, o, dm,
+      |      row_number() OVER (PARTITION BY p ORDER BY dm, o) AS rk
+      |    FROM d)
+      |  WHERE rk <= $k),
+      |kd AS MATERIALIZED (SELECT p, max(dm) AS kdist FROM knn GROUP BY p),
+      |lrd AS MATERIALIZED (
+      |  SELECT p, CASE WHEN sp = 0 THEN NULL
+      |    ELSE CAST(${k.toLong * 1000000000000L} // sp AS BIGINT) END AS l
+      |  FROM (
+      |    SELECT knn.p AS p,
+      |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
+      |    FROM knn JOIN kd ON knn.o = kd.p GROUP BY knn.p)),
+      |lofn AS (
+      |  SELECT knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
+      |  FROM knn JOIN lrd lo ON knn.o = lo.p GROUP BY knn.p)
+      |SELECT lofn.p AS vec_id,
+      |  CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
+      |    ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // ($k * lp.l) AS BIGINT) END AS lof_ppm
+      |FROM lofn JOIN lrd lp ON lofn.p = lp.p ORDER BY vec_id""".stripMargin
+
+  /** Per-arm LOF over a `d(arm, p, o, dm)` distance CTE, as [[lofTailSql]],
+    * and each arm's points ranked by LOF (`rr`). */
+  private def lofArmTailCtes(k: Int): String =
+    s"""knn AS MATERIALIZED (
+      |  SELECT arm, p, o, dm FROM (
+      |    SELECT arm, p, o, dm,
+      |      row_number() OVER (PARTITION BY arm, p ORDER BY dm, o) AS rk
+      |    FROM d)
+      |  WHERE rk <= $k),
+      |kd AS MATERIALIZED (
+      |  SELECT arm, p, max(dm) AS kdist FROM knn GROUP BY arm, p),
+      |lrd AS MATERIALIZED (
+      |  SELECT arm, p, CASE WHEN sp = 0 THEN NULL
+      |    ELSE CAST(${k.toLong * 1000000000000L} // sp AS BIGINT) END AS l
+      |  FROM (
+      |    SELECT knn.arm AS arm, knn.p AS p,
+      |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
+      |    FROM knn JOIN kd ON knn.arm = kd.arm AND knn.o = kd.p
+      |    GROUP BY 1, 2)),
+      |lofn AS (
+      |  SELECT knn.arm AS arm, knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
+      |  FROM knn JOIN lrd lo ON knn.arm = lo.arm AND knn.o = lo.p
+      |  GROUP BY 1, 2),
+      |lof AS (
+      |  SELECT lofn.arm AS arm, lofn.p AS vec_id,
+      |    CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
+      |      ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // ($k * lp.l) AS BIGINT) END AS lof_ppm
+      |  FROM lofn JOIN lrd lp ON lofn.arm = lp.arm AND lofn.p = lp.p),
+      |rr AS MATERIALIZED (
+      |  SELECT arm, vec_id,
+      |    row_number() OVER (PARTITION BY arm ORDER BY lof_ppm DESC, vec_id) AS rk
+      |  FROM lof WHERE lof_ppm IS NOT NULL)""".stripMargin
+
+  /** Per-source token counts (`d`, `ps`), their 1.05x caps ranked by
+    * (cap, source) (`rk`) and the water level the token budget fills to
+    * (`lv`, `sel`). */
+  private val mixtureLevelCtes: String =
+    s"""d AS (
+      |  SELECT source,
+      |    COALESCE(len(list_filter(string_split($normText, ' '), x -> x <> '')), 0) AS n_tok
+      |  FROM documents),
+      |ps AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
+      |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS b, count(*) AS s FROM ps),
+      |rk AS (
+      |  SELECT source, n_tokens, (n_tokens * 10500) // 10000 AS cap,
+      |    row_number() OVER (ORDER BY (n_tokens * 10500) // 10000, source) AS rn,
+      |    COALESCE(sum((n_tokens * 10500) // 10000) OVER (
+      |      ORDER BY (n_tokens * 10500) // 10000, source
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
+      |  FROM ps),
+      |lv AS (
+      |  SELECT rk.*, (b - prefix)::DOUBLE / (s - rn + 1)::DOUBLE AS lvl
+      |  FROM rk CROSS JOIN t),
+      |sel AS (SELECT min(rn) AS istar FROM lv WHERE lvl <= cap::DOUBLE)""".stripMargin
+
+  /** Each source's allocation under the water level (`al`) as whole
+    * epochs plus a basis-point fraction (`g`). */
+  private val mixtureEpochCtes: String =
+    """al AS (
+      |  SELECT source, n_tokens,
+      |    CASE WHEN (SELECT istar FROM sel) IS NULL
+      |           OR rn < (SELECT istar FROM sel) THEN cap::DOUBLE
+      |         ELSE (SELECT lvl FROM lv WHERE rn = (SELECT istar FROM sel)) END AS alloc_raw
+      |  FROM lv),
+      |g AS (
+      |  SELECT source,
+      |    CAST(floor(epochs) AS INT) AS full_copies,
+      |    CAST(floor(epochs * 10000) - floor(epochs) * 10000 AS INT) AS frac_bp
+      |  FROM (SELECT source,
+      |          CASE WHEN n_tokens > 0
+      |            THEN round(alloc_raw / n_tokens::DOUBLE, 6) END AS epochs
+      |        FROM al))""".stripMargin
+
+  /** Non-empty normalized tokens (`t`) and the 60-bit md5 fingerprint of
+    * every 8-token span (`w`, `f`). */
+  private val spanFpCtes: String =
+    s"""t AS (
+      |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS toks
+      |  FROM documents),
+      |w AS (
+      |  SELECT doc_id, CAST(unnest(range(0, len(toks) - 8 + 1)) AS INT) AS start, toks
+      |  FROM t WHERE len(toks) >= 8),
+      |f AS (
+      |  SELECT doc_id, start,
+      |    ('0x' || substr(md5(array_to_string(toks[start+1:start+8], ' ')), 1, 15))::BIGINT AS span_fp
+      |  FROM w)""".stripMargin
+
+  /** Hit spans `o(doc_id, start)` merged into islands of overlapping
+    * spans (`br`, `isl`) with their span and token counts (`gi`). */
+  private val spanIslandCtes: String =
+    """br AS (
+      |  SELECT doc_id, start,
+      |    CASE WHEN lag(start) OVER w2 IS NULL
+      |           OR start - lag(start) OVER w2 > 8 THEN 1 ELSE 0 END AS brk
+      |  FROM o WINDOW w2 AS (PARTITION BY doc_id ORDER BY start)),
+      |isl AS (
+      |  SELECT doc_id, start,
+      |    sum(brk) OVER (PARTITION BY doc_id ORDER BY start ROWS UNBOUNDED PRECEDING) AS island
+      |  FROM br),
+      |gi AS (
+      |  SELECT doc_id, island, count(*) AS n_spans,
+      |    max(start) + 8 - min(start) AS island_tokens
+      |  FROM isl GROUP BY 1, 2)""".stripMargin
+
+  /** Shared 5-gram fingerprints between each pair of sources, over the
+    * smaller source's fingerprint count. */
+  private val sourceOverlapSql: String =
+    s"""WITH t AS (
+      |  SELECT source, string_split($normText, ' ') AS tk
+      |  FROM documents),
+      |f AS (
+      |  SELECT DISTINCT source AS src, md5(g) AS fp FROM (
+      |    SELECT source, unnest(list_transform(range(len(tk) - 4),
+      |      i -> tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4]||' '||tk[i+5])) AS g
+      |    FROM t WHERE len(tk) >= 5)),
+      |per AS (SELECT src, count(*) AS n FROM f GROUP BY 1),
+      |sh AS (
+      |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
+      |  FROM f a JOIN f b ON a.fp = b.fp AND a.src < b.src
+      |  GROUP BY 1, 2)
+      |SELECT source_a, source_b, n_shared, pa.n AS n_a, pb.n AS n_b,
+      |  round(n_shared::DOUBLE / least(pa.n, pb.n)::DOUBLE, 6) AS overlap
+      |FROM sh JOIN per pa ON pa.src = source_a JOIN per pb ON pb.src = source_b
+      |ORDER BY source_a, source_b""".stripMargin
+
+  /** Top-5 neighbours per query from `p(query_id, neighbor_id, cosine)`. */
+  private val annRankTail: String =
+    """r AS (
+      |  SELECT query_id, neighbor_id, cosine,
+      |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS "rank"
+      |  FROM p)
+      |SELECT query_id, neighbor_id, "rank", round(cosine, 4) AS cosine
+      |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
+
+  /** q21's stopword language guess per document (`t`, `s`, `g`). */
+  private val langGuessCtes: String =
+    s"""t AS (
+      |  SELECT lang AS lang_label,
+      |    string_split($normText, ' ') AS toks
+      |  FROM documents),
+      |s AS (
+      |  SELECT lang_label,
+      |    len(list_filter(toks, x -> x IN ('the','a','of','and','to','is'))) AS s_en,
+      |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
+      |    len(list_filter(toks, x -> x IN ('el','la','de','y','es','que'))) AS s_es,
+      |    len(list_filter(toks, x -> x IN ('le','les','et','est','une','pas'))) AS s_fr
+      |  FROM t),
+      |g AS (
+      |  SELECT lang_label,
+      |    CASE WHEN s_en = 0 AND s_de = 0 AND s_es = 0 AND s_fr = 0 THEN 'unknown'
+      |         WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
+      |         WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
+      |         WHEN s_es >= s_fr THEN 'es'
+      |         ELSE 'fr' END AS guessed_lang
+      |  FROM s)""".stripMargin
+
+  /** Connected components over the text (`tp`) and embedding (`ep`) pair
+    * feeds by recursive reachability over `documents`, with each
+    * component's minimum id as keeper. */
+  private val ensembleClosureTail: String =
+    """pairs AS (SELECT doc_a, doc_b FROM tp UNION SELECT doc_a, doc_b FROM ep),
+      |sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+      |        UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
+      |reach(id, r) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
+      |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
+      |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
+
+  /** Connected components over cosine pairs `p(doc_a, doc_b)` by recursive
+    * reachability over `embeddings`, with each component's minimum id as
+    * keeper. */
+  private val cosineClosureTail: String =
+    """sym AS (SELECT doc_a AS a, doc_b AS b FROM p
+      |        UNION SELECT doc_b AS a, doc_a AS b FROM p),
+      |reach(id, r) AS (
+      |  SELECT vec_id, vec_id FROM embeddings
+      |  UNION
+      |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
+      |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
+      |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
+
+  /** Co-click edges between docs sharing a kept session (`ce`) and both
+    * directions of each (`sym`) over [[sessionClicksCtes]]. */
+  private val coClickSymCtes: String =
+    """ce AS (
+      |  SELECT a.doc AS src, b.doc AS dst
+      |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
+      |  GROUP BY 1, 2),
+      |sym AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst AS u, src AS v FROM ce)""".stripMargin
+
+  /** Co-click edges (`ce`) and their distinct symmetric closure (`sym`)
+    * for the recursive landmark walks. */
+  private val coClickWalkCtes: String =
+    """ce AS (
+      |  SELECT a.doc AS src, b.doc AS dst
+      |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
+      |  WHERE a.doc < b.doc
+      |  GROUP BY 1, 2),
+      |sym AS (
+      |  SELECT src AS u, dst AS v FROM ce
+      |  UNION SELECT dst AS u, src AS v FROM ce)""".stripMargin
+
+  /** Each document's normalized tokens `toks(doc_id, t)`. */
+  private val docTokensCte: String =
+    s"""toks AS (
+      |  SELECT doc_id,
+      |    string_split($normText, ' ') AS t
+      |  FROM documents)""".stripMargin
+
+  /** Each document with its text and normalized tokens
+    * `t(doc_id, text, toks)`. */
+  private val docTextTokensCte: String =
+    s"""t AS (
+      |  SELECT doc_id, text,
+      |    string_split($normText, ' ') AS toks
+      |  FROM documents)""".stripMargin
+
+  /** Per-user event-type transitions in (ts, event_id) order, with
+    * `<START>`/`<END>` states (`s`, `p`), counted per pair (`c`). */
+  private val transitionCtes: String =
+    """s AS (
+      |  SELECT event_type AS cur,
+      |    lead(event_type) OVER w AS nxt,
+      |    row_number() OVER w AS rn
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR)
+      |               ORDER BY CAST(ts AS TIMESTAMP), event_id)),
+      |p AS (
+      |  SELECT cur AS from_state, COALESCE(nxt, '<END>') AS to_state FROM s
+      |  UNION ALL
+      |  SELECT '<START>', cur FROM s WHERE rn = 1),
+      |c AS (SELECT from_state, to_state, count(*) AS n FROM p GROUP BY 1, 2)""".stripMargin
+
+  /** Ranks of the relevant docs (`j`), their count (`s1`), the first
+    * relevant rank and DCG@10 (`s2`), and the ideal ranks (`ideal`) over
+    * caller-supplied `rk(doc, rank)` and `rel(doc)`. */
+  private val rankGainCtes: String =
+    """j AS (SELECT rk.rank FROM rk JOIN rel USING (doc)),
+      |s1 AS (SELECT CAST(count(*) AS BIGINT) AS n_relevant FROM rel),
+      |s2 AS (
+      |  SELECT min(rank) AS first_rank,
+      |    CAST(COALESCE(sum(CASE WHEN rank <= 10
+      |      THEN CAST(ln(2.0::DOUBLE) / ln((rank + 1)::DOUBLE) AS DECIMAL(28,12)) END), 0) AS DOUBLE) AS dcg
+      |  FROM j),
+      |ideal AS (
+      |  SELECT n_relevant, CAST(unnest(range(1, least(10, n_relevant) + 1)) AS INT) AS i FROM s1)""".stripMargin
+
+  /** Shared-shingle counts per document pair (`inv`, `common`) over
+    * [[shingleSetsCtes]]. */
+  private val shingleOverlapCtes: String =
+    """inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
+      |common AS (
+      |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
+      |  FROM inv x JOIN inv y ON x.shingle = y.shingle AND x.id < y.id
+      |  GROUP BY 1, 2, 3, 4)""".stripMargin
+
+  /** Same-cluster pairs at cosine >= 0.4 over `asg(vec_id, cluster)` and
+    * `e(vec_id, v)`; the lower id of each pair keeps the document. */
+  private val clusterCosineDupTail: String =
+    """pr AS (
+      |  SELECT x.vec_id AS a, y.vec_id AS b
+      |  FROM (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) x
+      |  JOIN (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) y
+      |    ON x.cluster = y.cluster AND x.vec_id < y.vec_id
+      |  WHERE list_sum(list_transform(range(64), i -> x.v[i+1] * y.v[i+1]))
+      |      / (sqrt(list_sum(list_transform(range(64), i -> x.v[i+1] * x.v[i+1])))
+      |       * sqrt(list_sum(list_transform(range(64), i -> y.v[i+1] * y.v[i+1])))) >= 0.4),
+      |dup AS (SELECT b AS vec_id, min(a) AS dup_of FROM pr GROUP BY b)
+      |SELECT asg.vec_id, asg.cluster, dup.dup_of, dup.dup_of IS NULL AS keep
+      |FROM asg LEFT JOIN dup USING (vec_id)
+      |ORDER BY vec_id""".stripMargin
+
+  /** Exact top-5 cosine neighbours of the first 8 embeddings over all
+    * others — the ANN recall baseline. */
+  private val annExactTop5Sql: String =
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
+      |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
+      |p AS (
+      |  SELECT query_id, neighbor_id,
+      |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
+      |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
+      |$annRankTail""".stripMargin
+
   /** The batch corpus-prep pipeline in SQL — the oracle for BOTH q41 (batch
     * over all documents) and q118 (incremental over a split of the same
     * documents): the incremental path's whole contract is reproducing this
@@ -2786,7 +6896,7 @@ object SparkEntry {
   private def corpusPrepCtesBodyFrom(src: String): String =
     s"""t AS (
       |  SELECT doc_id, text,
-      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm
+      |    $normText AS norm
       |  FROM $src),
       |tt AS (SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t),
       |s AS (
@@ -2885,24 +6995,8 @@ object SparkEntry {
     * + q20's quality (centi-quantized) + q72's recursive components,
     * keeper by (quality desc, id asc). */
   private val dedupKeepBestSql: String =
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
+      s"""WITH RECURSIVE $shingleSetsCtes,
+        |$minhashCandCtes,
         |verified AS (
         |  SELECT doc_a, doc_b
         |  FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id
@@ -2919,7 +7013,7 @@ object SparkEntry {
         |  SELECT doc_id,
         |    len(tk) AS n_tokens, len(list_distinct(tk)) AS n_unique_tokens,
         |    round(CAST(len(list_filter(tk, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(tk), 4) AS stopword_ratio
-        |  FROM (SELECT doc_id, string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS tk
+        |  FROM (SELECT doc_id, string_split($normText, ' ') AS tk
         |        FROM documents)),
         |qc AS (
         |  SELECT doc_id,
@@ -3122,7 +7216,7 @@ object SparkEntry {
     }.mkString(",\n")
     s"""t AS (
        |  SELECT doc_id, text,
-       |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' ') AS toks
+       |    string_split($normText, ' ') AS toks
        |  FROM documents),
        |s AS (
        |  SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_unique,
@@ -3226,7 +7320,7 @@ object SparkEntry {
       s"(($acc * 257 + cs[i - ${window - 1 - j}]) % 1000000007)"
     }
     s"""WITH d AS (
-       |  SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')) AS t
+       |  SELECT doc_id, $normText AS t
        |  FROM documents),
        |b AS (
        |  SELECT doc_id, t, length(t) AS len,
@@ -3288,9 +7382,9 @@ object SparkEntry {
   /** q225 AND q229 (the vocab-artifact law gate — the incremental merge
     * must reproduce this whole-corpus rebuild verbatim). */
   private val vocabCoverageOracle: String =
-    """WITH tok AS (
+    s"""WITH tok AS (
       |  SELECT source,
-      |    unnest(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS tok
+      |    unnest(list_filter(string_split($normText, ' '), x -> x <> '')) AS tok
       |  FROM documents),
       |st AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1, 2),
       |tc AS (SELECT tok, CAST(sum(n) AS BIGINT) AS c FROM st GROUP BY 1),
@@ -3460,7 +7554,7 @@ object SparkEntry {
            |    HAVING count(DISTINCT doc_id) <= $maxDocsPerSpan) d USING (span_fp))""".stripMargin
       }
     s"""WITH t AS (
-       |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
+       |  SELECT doc_id, list_filter(string_split($normText, ' '), x -> x <> '') AS toks
        |  FROM documents),
        |w AS (
        |  SELECT doc_id, CAST(unnest(range(0, len(toks) - $spanTokens + 1)) AS BIGINT) AS start, toks
@@ -3493,16 +7587,7 @@ object SparkEntry {
   }
 
   private val spanDedupOracle: String =
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-      |  FROM documents),
-      |w AS (
-      |  SELECT doc_id, CAST(unnest(range(0, len(toks) - 8 + 1)) AS INT) AS start, toks
-      |  FROM t WHERE len(toks) >= 8),
-      |f AS (
-      |  SELECT doc_id, start,
-      |    ('0x' || substr(md5(array_to_string(toks[start+1:start+8], ' ')), 1, 15))::BIGINT AS span_fp
-      |  FROM w),
+    s"""WITH $spanFpCtes,
       |a AS (
       |  SELECT span_fp, count(DISTINCT doc_id) AS n_docs,
       |         CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS first_doc
@@ -3549,8 +7634,8 @@ object SparkEntry {
         |FROM c ORDER BY grp""".stripMargin
 
   private val countOfCountsSql: String =
-    """WITH toks AS (
-      |  SELECT list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+    s"""WITH toks AS (
+      |  SELECT list_filter(string_split($normText, ' '), x -> x <> '') AS t
       |  FROM documents),
       |tk AS (
       |  SELECT unnest(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS token
@@ -3682,21 +7767,21 @@ object SparkEntry {
       |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
       |    FROM ddf) WHERE rn = 1)"""
 
-  /** Weighted-PageRank oracle midsection (q81's p0…p5 shape, generated):
+  /** PageRank oracle midsection (q81's p0…p5 shape, generated):
     * deg/nodes/nn/p0 + `rounds` unrolled power iterations over a
-    * caller-supplied `sym(u, v, w)` CTE. q144 composes it over the
-    * token-adjacency graph; q81 keeps its original hand-written text
-    * (byte-identical shape) since its gate predates this builder. */
-  private def pageRankIterCtes(rounds: Int): String = {
+    * caller-supplied `sym(u, v, w)` CTE, or `sym(u, v)` with unit weights
+    * when `weighted` is false. */
+  private def pageRankIterCtes(rounds: Int, weighted: Boolean = true): String = {
+    val (deg, mass) = if (weighted) ("sum(w)", "p.r * s.w / dg.d") else ("count(*)", "p.r / dg.d")
     val iters = (1 to rounds).map { r =>
       s"""p$r AS (
          |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-         |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
+         |    + CAST(0.85 AS DOUBLE) * COALESCE(sum($mass), 0) AS r
          |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
          |  LEFT JOIN p${r - 1} p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
          |  GROUP BY nd.id)"""
     }.mkString(",\n")
-    s"""deg AS (SELECT u, sum(w) AS d FROM sym GROUP BY u),
+    s"""deg AS (SELECT u, $deg AS d FROM sym GROUP BY u),
        |nodes AS (SELECT DISTINCT u AS id FROM sym),
        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
        |p0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS r FROM nodes),
@@ -3850,58 +7935,7 @@ object SparkEntry {
     * `corpus(neighbor_id, cell)` + `probes(cell)` — the 2-of-8 cell choice
     * for query vec_id = 0. */
   private lazy val ivfCellCtes: String =
-    """e AS (
-      |  SELECT vec_id, embedding,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-      |      sqrt(list_sum(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS u
-      |  FROM embeddings),
-      |c0 AS (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, u AS c
-      |  FROM e ORDER BY vec_id LIMIT 8),
-      |dd1 AS (
-      |  SELECT e.vec_id, c0.cluster,
-      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c0.c[i+1]) * (e.u[i+1] - c0.c[i+1]))) AS d2
-      |  FROM e CROSS JOIN c0),
-      |aa1 AS (
-      |  SELECT vec_id, cluster FROM (
-      |    SELECT vec_id, cluster,
-      |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-      |    FROM dd1) WHERE rn = 1),
-      |u1 AS (
-      |  SELECT aa1.cluster, i AS dim,
-      |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-      |  FROM aa1 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-      |  GROUP BY 1, 2),
-      |c1 AS (
-      |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u1 GROUP BY cluster
-      |  UNION ALL
-      |  SELECT cluster, c FROM c0 WHERE cluster NOT IN (SELECT cluster FROM u1)),
-      |dd2 AS (
-      |  SELECT e.vec_id, c1.cluster,
-      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c1.c[i+1]) * (e.u[i+1] - c1.c[i+1]))) AS d2
-      |  FROM e CROSS JOIN c1),
-      |aa2 AS (
-      |  SELECT vec_id, cluster FROM (
-      |    SELECT vec_id, cluster,
-      |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-      |    FROM dd2) WHERE rn = 1),
-      |u2 AS (
-      |  SELECT aa2.cluster, i AS dim,
-      |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-      |  FROM aa2 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-      |  GROUP BY 1, 2),
-      |c2 AS (
-      |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u2 GROUP BY cluster
-      |  UNION ALL
-      |  SELECT cluster, c FROM c1 WHERE cluster NOT IN (SELECT cluster FROM u2)),
-      |ddf AS (
-      |  SELECT e.vec_id, c2.cluster,
-      |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c2.c[i+1]) * (e.u[i+1] - c2.c[i+1]))) AS d2
-      |  FROM e CROSS JOIN c2),
-      |cellr AS (
-      |  SELECT vec_id, cluster,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-      |  FROM ddf),
+    s"""$lloydCellRankCtes,
       |corpus AS (SELECT vec_id AS neighbor_id, cluster AS cell FROM cellr WHERE rn = 1),
       |probes AS (SELECT cluster AS cell FROM cellr WHERE rn <= 2 AND vec_id = 0)""".stripMargin
 
@@ -4053,7 +8087,7 @@ object SparkEntry {
   private val winnowingPairsSql: String =
     s"""WITH toks AS (
       |  SELECT doc_id AS id,
-      |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' ') AS t
+      |    string_split($normText, ' ') AS t
       |  FROM documents),
       |${winnowFpCtes("toks", "fps")},
       |per AS MATERIALIZED (SELECT id, count(*) AS n FROM fps GROUP BY 1),
@@ -4070,9 +8104,9 @@ object SparkEntry {
       |ORDER BY doc_a, doc_b""".stripMargin
 
   private val calibrationEceSql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, lang,
-      |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+      |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
       |  FROM documents),
       |f AS (
       |  SELECT doc_id, len(t) AS nt,
@@ -4232,7 +8266,7 @@ object SparkEntry {
   private def bpeChainSql(rounds: String, where: String = ""): String =
     s"""toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+       |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
        |  FROM documents$where),
        |s0 AS MATERIALIZED (
        |  SELECT w, count(*) AS freq,
@@ -4277,7 +8311,7 @@ object SparkEntry {
   private def sequencePackSql(ctx: Int): String =
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '')) AS BIGINT) AS n_tok
+       |    CAST(len(list_filter(string_split($normText, ' '), x -> x <> '')) AS BIGINT) AS n_tok
        |  FROM documents),
        |${packTailCtes(ctx, "toks")}""".stripMargin
 
@@ -4287,9 +8321,9 @@ object SparkEntry {
     * counts, ppb-quantized in HUGEINT; unseen history backs off to the
     * continuation distribution. */
   private def kneserNeySql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+      |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
       |  FROM documents),
       |tb AS (
       |  SELECT doc_id, t[CAST(i + 1 AS INT)] AS w1, t[CAST(i + 2 AS INT)] AS w2
@@ -4335,10 +8369,7 @@ object SparkEntry {
     * LAW gate: shard-counted 〈n, Σdl, df〉 merged by addition ≡ rebuild):
     * Okapi BM25 with the Lucene +1 idf, k1 = 1.2, b = 0.75. */
   private def bm25Sql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-      |  FROM documents),
+    s"""WITH $docTokensCte,
       |stats AS (SELECT
       |  (SELECT count(*) FROM documents) AS n,
       |  (SELECT sum(CAST(len(list_filter(t, x -> x <> '')) AS DOUBLE)) FROM toks)
@@ -4386,7 +8417,7 @@ object SparkEntry {
     }.mkString("\nUNION ALL ")
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '')) AS BIGINT) AS n_tok
+       |    CAST(len(list_filter(string_split($normText, ' '), x -> x <> '')) AS BIGINT) AS n_tok
        |  FROM documents),
        |cum AS MATERIALIZED (
        |  SELECT doc_id, n_tok,
@@ -4402,10 +8433,7 @@ object SparkEntry {
     * pair: counts + P/R/F1 ppm) — shared by q259's readout and q270's
     * bootstrap composition. */
   private def rouge2ChainCtes: String =
-    """toks AS (
-      |  SELECT doc_id,
-      |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-      |  FROM documents),
+    s"""$docTokensCte,
       |pr AS MATERIALIZED (
       |  SELECT c.doc_id AS pair_id, c.t AS ct, r.t AS rt
       |  FROM toks c JOIN toks r ON r.doc_id = c.doc_id + 1
@@ -4663,7 +8691,7 @@ object SparkEntry {
     val ls = (1 to k).map(l => s"($l)").mkString(", ")
     s"""WITH toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+       |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
        |  FROM documents$where),
        |wt AS MATERIALIZED (
        |  SELECT w, CAST(count(*) AS BIGINT) AS freq, CAST(length(w) AS INT) AS len
@@ -4795,7 +8823,7 @@ object SparkEntry {
         else "SELECT w, freq FROM hw0 WHERE w NOT IN (SELECT w FROM hwbad)"
       s"""toksh AS (
          |  SELECT doc_id,
-         |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '') AS t
+         |    list_filter(string_split($normText, ' '), x -> x <> '') AS t
          |  FROM documents WHERE doc_id % $evalMod = 0),
          |hw0 AS (
          |  SELECT w, CAST(count(*) AS BIGINT) AS freq
@@ -4916,20 +8944,13 @@ object SparkEntry {
       (0 until t).map(_ * stride)
     }
     val allOffsets = counts.flatMap(offsetsOf).distinct.sorted
-    val dm =
-      """CAST(floor(sqrt(greatest(
-        |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-        |          range(1, len(a.u) + 1),
-        |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-        |        0.0::DOUBLE))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm""".stripMargin
     val arms = counts.map { t =>
       s"""u$t AS (
          |  SELECT DISTINCT p, o FROM (
          |${lofMultiPairUnion(offsetsOf(t))})),
          |d$t AS (
          |  SELECT $t AS arm, u.p, u.o,
-         |    $dm
+         |    $microDm
          |  FROM u$t u JOIN ef a ON a.vec_id = u.p JOIN ef b ON b.vec_id = u.o)""".stripMargin
     }.mkString(",\n")
     val dUnion = counts.map(t => s"SELECT * FROM d$t").mkString("\n  UNION ALL ")
@@ -4950,38 +8971,10 @@ object SparkEntry {
        |$arms,
        |d AS (
        |  SELECT 0 AS arm, a.vec_id AS p, b.vec_id AS o,
-       |    $dm
+       |    $microDm
        |  FROM ef a JOIN ef b ON a.vec_id <> b.vec_id
        |  UNION ALL $dUnion),
-       |knn AS MATERIALIZED (
-       |  SELECT arm, p, o, dm FROM (
-       |    SELECT arm, p, o, dm,
-       |      row_number() OVER (PARTITION BY arm, p ORDER BY dm, o) AS rk
-       |    FROM d)
-       |  WHERE rk <= $k),
-       |kd AS MATERIALIZED (
-       |  SELECT arm, p, max(dm) AS kdist FROM knn GROUP BY arm, p),
-       |lrd AS MATERIALIZED (
-       |  SELECT arm, p, CASE WHEN sp = 0 THEN NULL
-       |    ELSE CAST(${k.toLong * 1000000000000L} // sp AS BIGINT) END AS l
-       |  FROM (
-       |    SELECT knn.arm AS arm, knn.p AS p,
-       |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-       |    FROM knn JOIN kd ON knn.arm = kd.arm AND knn.o = kd.p
-       |    GROUP BY 1, 2)),
-       |lofn AS (
-       |  SELECT knn.arm AS arm, knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-       |  FROM knn JOIN lrd lo ON knn.arm = lo.arm AND knn.o = lo.p
-       |  GROUP BY 1, 2),
-       |lof AS (
-       |  SELECT lofn.arm AS arm, lofn.p AS vec_id,
-       |    CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-       |      ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // ($k * lp.l) AS BIGINT) END AS lof_ppm
-       |  FROM lofn JOIN lrd lp ON lofn.arm = lp.arm AND lofn.p = lp.p),
-       |rr AS MATERIALIZED (
-       |  SELECT arm, vec_id,
-       |    row_number() OVER (PARTITION BY arm ORDER BY lof_ppm DESC, vec_id) AS rk
-       |  FROM lof WHERE lof_ppm IS NOT NULL),
+       |${lofArmTailCtes(k)},
        |arms(arm, n_tables) AS (VALUES $armMap),
        |ks AS ($ksRows),
        |ov AS (
@@ -5002,10 +8995,10 @@ object SparkEntry {
   /** q254's oracle: q247's lattice verbatim with the pair feed replaced by
     * the T-table distinct union (the production multi-table artifact at
     * full per-point grain). */
-  /** The hard-negative miners' shared integer micro-distance + rank
-    * readout. q277 feeds it all different-label pairs; q278 the
-    * multi-table sign-bucket candidates. */
-  private val hardNegDm: String =
+  /** Integer micro-distance `dm` between `a` and `b` rows of an
+    * `ef(vec_id, u, n2)` CTE: the LOF lattices' and the hard-negative
+    * miners' shared distance. */
+  private val microDm: String =
     """CAST(floor(sqrt(greatest(
       |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
       |          range(1, len(a.u) + 1),
@@ -5031,7 +9024,7 @@ object SparkEntry {
        |  FROM embeddings),
        |d AS (
        |  SELECT a.vec_id AS p, b.vec_id AS o,
-       |    $hardNegDm
+       |    $microDm
        |  FROM ef a JOIN ef b
        |    ON a.vec_id <> b.vec_id AND a.label <> b.label),
        |${hardNegTailSql(k)}""".stripMargin
@@ -5066,7 +9059,7 @@ object SparkEntry {
        |$union)),
        |d AS (
        |  SELECT u.p, u.o,
-       |    $hardNegDm
+       |    $microDm
        |  FROM up u JOIN ef a ON a.vec_id = u.p JOIN ef b ON b.vec_id = u.o),
        |${hardNegTailSql(k)}""".stripMargin
   }
@@ -5085,7 +9078,7 @@ object SparkEntry {
     val allOffsets = counts.flatMap(offsetsOf).distinct.sorted
     val arms = counts.map { t =>
       s"""  SELECT $t AS arm, u.p, u.o,
-         |    $hardNegDm
+         |    $microDm
          |  FROM (SELECT DISTINCT p, o FROM (
          |${hardNegPairUnion(offsetsOf(t))})) u
          |  JOIN ef a ON a.vec_id = u.p JOIN ef b ON b.vec_id = u.o""".stripMargin
@@ -5103,7 +9096,7 @@ object SparkEntry {
        |  FROM embeddings),
        |d AS (
        |  SELECT 0 AS arm, a.vec_id AS p, b.vec_id AS o,
-       |    $hardNegDm
+       |    $microDm
        |  FROM ef a JOIN ef b
        |    ON a.vec_id <> b.vec_id AND a.label <> b.label
        |  UNION ALL
@@ -5148,34 +9141,9 @@ object SparkEntry {
        |${lofMultiPairUnion(offsets)})),
        |d AS (
        |  SELECT u.p, u.o,
-       |    CAST(floor(sqrt(greatest(
-       |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-       |          range(1, len(a.u) + 1),
-       |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-       |        0.0::DOUBLE))
-       |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm
+       |    $microDm
        |  FROM up u JOIN ef a ON a.vec_id = u.p JOIN ef b ON b.vec_id = u.o),
-       |knn AS MATERIALIZED (
-       |  SELECT p, o, dm FROM (
-       |    SELECT p, o, dm,
-       |      row_number() OVER (PARTITION BY p ORDER BY dm, o) AS rk
-       |    FROM d)
-       |  WHERE rk <= $k),
-       |kd AS MATERIALIZED (SELECT p, max(dm) AS kdist FROM knn GROUP BY p),
-       |lrd AS MATERIALIZED (
-       |  SELECT p, CASE WHEN sp = 0 THEN NULL
-       |    ELSE CAST(${k.toLong * 1000000000000L} // sp AS BIGINT) END AS l
-       |  FROM (
-       |    SELECT knn.p AS p,
-       |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-       |    FROM knn JOIN kd ON knn.o = kd.p GROUP BY knn.p)),
-       |lofn AS (
-       |  SELECT knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-       |  FROM knn JOIN lrd lo ON knn.o = lo.p GROUP BY knn.p)
-       |SELECT lofn.p AS vec_id,
-       |  CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-       |    ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // ($k * lp.l) AS BIGINT) END AS lof_ppm
-       |FROM lofn JOIN lrd lp ON lofn.p = lp.p ORDER BY vec_id""".stripMargin
+       |${lofTailSql(k)}""".stripMargin
   }
 
   /** q251's oracle: q238's and q247's lattices as ONE armed chain — arm 0
@@ -5188,13 +9156,6 @@ object SparkEntry {
       k: Int, topKs: Seq[Int], occupancies: Seq[Int],
       src: String = "embeddings", pre: String = ""): String = {
     val occs = occupancies.sorted
-    val dm =
-      """CAST(floor(sqrt(greatest(
-        |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-        |          range(1, len(a.u) + 1),
-        |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-        |        0.0::DOUBLE))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm""".stripMargin
     val bucketCols = occs.zipWithIndex.map { case (occ, i) =>
       s"""    CAST(list_sum(list_transform(range((SELECT b${i + 1} FROM bits)), j ->
          |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
@@ -5205,7 +9166,7 @@ object SparkEntry {
     }.mkString(",\n")
     val arms = occs.indices.map { i =>
       s"""  SELECT ${i + 1} AS arm, a.vec_id AS p, b.vec_id AS o,
-         |    $dm
+         |    $microDm
          |  FROM ef a JOIN ef b ON a.bk${i + 1} = b.bk${i + 1} AND a.vec_id <> b.vec_id""".stripMargin
     }.mkString("\n  UNION ALL\n")
     val armOcc = occs.zipWithIndex
@@ -5226,39 +9187,11 @@ object SparkEntry {
        |  FROM $src),
        |d AS (
        |  SELECT 0 AS arm, a.vec_id AS p, b.vec_id AS o,
-       |    $dm
+       |    $microDm
        |  FROM ef a JOIN ef b ON a.vec_id <> b.vec_id
        |  UNION ALL
        |$arms),
-       |knn AS MATERIALIZED (
-       |  SELECT arm, p, o, dm FROM (
-       |    SELECT arm, p, o, dm,
-       |      row_number() OVER (PARTITION BY arm, p ORDER BY dm, o) AS rk
-       |    FROM d)
-       |  WHERE rk <= $k),
-       |kd AS MATERIALIZED (
-       |  SELECT arm, p, max(dm) AS kdist FROM knn GROUP BY arm, p),
-       |lrd AS MATERIALIZED (
-       |  SELECT arm, p, CASE WHEN sp = 0 THEN NULL
-       |    ELSE CAST(${k.toLong * 1000000000000L} // sp AS BIGINT) END AS l
-       |  FROM (
-       |    SELECT knn.arm AS arm, knn.p AS p,
-       |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-       |    FROM knn JOIN kd ON knn.arm = kd.arm AND knn.o = kd.p
-       |    GROUP BY 1, 2)),
-       |lofn AS (
-       |  SELECT knn.arm AS arm, knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-       |  FROM knn JOIN lrd lo ON knn.arm = lo.arm AND knn.o = lo.p
-       |  GROUP BY 1, 2),
-       |lof AS (
-       |  SELECT lofn.arm AS arm, lofn.p AS vec_id,
-       |    CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-       |      ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // ($k * lp.l) AS BIGINT) END AS lof_ppm
-       |  FROM lofn JOIN lrd lp ON lofn.arm = lp.arm AND lofn.p = lp.p),
-       |rr AS MATERIALIZED (
-       |  SELECT arm, vec_id,
-       |    row_number() OVER (PARTITION BY arm ORDER BY lof_ppm DESC, vec_id) AS rk
-       |  FROM lof WHERE lof_ppm IS NOT NULL),
+       |${lofArmTailCtes(k)},
        |arms(arm, occupancy) AS (VALUES $armOcc),
        |ks AS ($ksRows),
        |ov AS (
@@ -5294,9 +9227,9 @@ object SparkEntry {
     *    selfcheck (`check_dtype=False`). Verified: with these casts the
     *    DuckDB result frame is all-BIGINT. */
   private val lshChainCtes: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id AS id,
-      |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
+      |    string_split($normText, ' ') AS t
       |  FROM documents WHERE doc_id % 3 = 0),
       |sets AS MATERIALIZED (
       |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
@@ -5346,4912 +9279,4 @@ object SparkEntry {
       |    CAST(COALESCE(gg.n_candidates, 0) AS BIGINT) AS n_candidates
       |  FROM spine LEFT JOIN gg ON spine.decile = gg.decile CROSS JOIN tots)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    // same spelled-out left-assoc factor products per k
-    "q227_pass_at_k" -> passAtKOracle(Seq(1, 5, 10)),
-    // the MM loop unrolled; identical integer-IEEE floor chains per round
-    "q224_bradley_terry" -> btOracle(iters = 5, topK = 20),
-    // same tokenization, rank (count desc, tok), budgets grid, ppm div
-    "q225_vocab_coverage" -> vocabCoverageOracle,
-    // THE LAW: the merged incremental vocab artifact must produce the
-    // identical budget curve — this oracle IS the whole-corpus rebuild
-    "q229_vocab_coverage_increment" -> vocabCoverageOracle,
-    // same normalization, Horner boundary rule (mod-prime window hash
-    // % 32 = 0, doc end excluded then appended), chunk hashing, ppm divs
-    "q228_cdc_chunk_dedup" -> cdcOracle(window = 16, maskBits = 5),
-    // THE LAW: the merged chunk artifact reports identically - this
-    // oracle IS q228's whole-corpus rebuild
-    "q230_cdc_dedup_increment" -> cdcOracle(window = 16, maskBits = 5),
-    // literal weights, one fixed IEEE chain per depth, integer prefix sum
-    "q226_rank_biased_overlap" -> rboOracle(depth = 10, p = 0.9),
-    // same dense spine, same DECIMAL term cumsum and running min, same
-    // k=0.5/h=4 defaults
-    "q223_cusum" ->
-      """WITH hh AS (
-        |  SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600 AS h,
-        |    count(*) AS x
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT min(h) AS h0, max(h) AS h1 FROM hh),
-        |sp AS (SELECT unnest(range(h0, h1 + 1)) AS h FROM b),
-        |se AS (SELECT sp.h, COALESCE(hh.x, 0) AS x FROM sp LEFT JOIN hh USING (h)),
-        |st AS (SELECT count(*) AS n,
-        |         CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS s1,
-        |         CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS s2 FROM se),
-        |ms AS (SELECT s1 / n::DOUBLE AS m,
-        |         sqrt(s2 / n::DOUBLE - (s1 / n::DOUBLE) * (s1 / n::DOUBLE)) AS sd FROM st),
-        |rr AS (
-        |  SELECT h, x, sd,
-        |    sum(CAST(x::DOUBLE - m - 0.5::DOUBLE * sd AS DECIMAL(28,12)))
-        |      OVER (ORDER BY h ROWS UNBOUNDED PRECEDING) AS r
-        |  FROM se CROSS JOIN ms),
-        |cc AS (
-        |  SELECT h, x, sd,
-        |    CAST(r - least(CAST(0.0 AS DECIMAL(28,12)),
-        |      min(r) OVER (ORDER BY h ROWS UNBOUNDED PRECEDING)) AS DOUBLE) AS cus_raw
-        |  FROM rr)
-        |SELECT h, x, round(cus_raw, 6) AS cusum,
-        |  cus_raw > 4.0::DOUBLE * sd AS alarm
-        |FROM cc ORDER BY h""".stripMargin,
-    // q20's quality CTEs (4dp stopword ratio included) + q216's dup
-    // groups + (count desc, lang desc) majority-language tie-break
-    "q220_dataset_card" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, len(toks) AS n_tokens,
-        |    len(list_distinct(toks)) AS n_unique_tokens,
-        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
-        |  FROM t),
-        |sc AS (
-        |  SELECT doc_id, n_tokens,
-        |    round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
-        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
-        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
-        |  FROM s),
-        |vol AS (
-        |  SELECT d.source, count(*) AS n_docs,
-        |    CAST(sum(sc.n_tokens) AS BIGINT) AS n_tokens,
-        |    round(CAST(sum(CAST(sc.n_tokens AS DECIMAL(28,8))) AS DOUBLE) / count(*), 6) AS mean_tokens,
-        |    round(CAST(sum(CAST(sc.quality_score AS DECIMAL(28,8))) AS DOUBLE) / count(*), 6) AS mean_quality
-        |  FROM documents d JOIN sc USING (doc_id) GROUP BY 1),
-        |fp AS (
-        |  SELECT source,
-        |    row_number() OVER (
-        |      PARTITION BY md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')))
-        |      ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |dup AS (
-        |  SELECT source,
-        |    CASE WHEN count(*) > 0
-        |      THEN round(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6)
-        |      ELSE 0.0::DOUBLE END AS dup_rate
-        |  FROM fp GROUP BY 1),
-        |lc AS (SELECT source, lang, count(*) AS c FROM documents GROUP BY 1, 2),
-        |tl AS (
-        |  SELECT source, lang AS top_lang, c,
-        |    CAST(sum(c) OVER (PARTITION BY source) AS BIGINT) AS tot,
-        |    row_number() OVER (PARTITION BY source ORDER BY c DESC, lang DESC) AS rn2
-        |  FROM lc)
-        |SELECT v.source, v.n_docs, v.n_tokens, v.mean_tokens, v.mean_quality,
-        |  dup.dup_rate, tl.top_lang,
-        |  round(tl.c::DOUBLE / tl.tot::DOUBLE, 6) AS top_lang_share
-        |FROM vol v
-        |JOIN dup USING (source)
-        |JOIN tl ON tl.source = v.source AND tl.rn2 = 1
-        |ORDER BY v.source""".stripMargin,
-    // same count frame, quantile_cont parity, same clamp arithmetic
-    "q221_skew_report" ->
-      """WITH c AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS k, count(*) AS c
-        |  FROM events GROUP BY 1),
-        |a AS (
-        |  SELECT CAST(sum(c) AS BIGINT) AS n_rows, count(*) AS n_keys,
-        |    max(c) AS max_per_key,
-        |    round(quantile_cont(c, 0.5), 6) AS p50,
-        |    round(quantile_cont(c, 0.99), 6) AS p99
-        |  FROM c)
-        |SELECT n_rows, n_keys, max_per_key, p50, p99,
-        |  CASE WHEN p50 > 0 THEN round(max_per_key::DOUBLE / p50, 6) END AS skew_ratio,
-        |  least(32, greatest(1, CAST(ceil(max_per_key::DOUBLE / greatest(p99, 1.0::DOUBLE)) AS INT))) AS suggested_salt
-        |FROM a""".stripMargin,
-    // identical digit extraction; expected values are THE SAME doubles
-    // (Double.toString round-trips exactly through DuckDB's parser)
-    "q217_benford" -> {
-      val cases = (1 to 9)
-        .map(d => s"WHEN digit = $d THEN ${graft.analysis.Profiling.benfordExpected(d)}::DOUBLE")
-        .mkString(" ")
-      // excluded positives ride a NULL-digit group into the n_excluded
-      // window sum, then drop before the observed-ratio window (same
-      // single-scan shape as the Scala)
-      s"""WITH v AS (SELECT value AS v FROM events),
-        |d AS (SELECT CASE WHEN v >= 1e-18::DOUBLE AND v < 9.0e18::DOUBLE
-        |        THEN CAST(substr(CAST(CAST(floor(
-        |          CASE WHEN v >= 1 THEN v ELSE v * 1e18::DOUBLE END) AS BIGINT)
-        |          AS VARCHAR), 1, 1) AS INT) END AS digit,
-        |      CASE WHEN v > 0 AND NOT (v >= 1e-18::DOUBLE AND v < 9.0e18::DOUBLE)
-        |        THEN 1 ELSE 0 END AS excl FROM v),
-        |g AS (SELECT digit, count(*) AS n, sum(excl) AS excl FROM d GROUP BY 1),
-        |x AS (SELECT digit, n, CAST(sum(excl) OVER () AS BIGINT) AS n_excluded
-        |      FROM g),
-        |f AS (SELECT * FROM x WHERE digit IS NOT NULL),
-        |t AS (SELECT digit, n, n_excluded, CAST(sum(n) OVER () AS BIGINT) AS tot,
-        |        CASE $cases END AS e FROM f)
-        |SELECT digit, n, n_excluded,
-        |  round(n::DOUBLE / tot::DOUBLE, 6) AS observed,
-        |  round(e, 6) AS expected,
-        |  round(abs(n::DOUBLE / tot::DOUBLE - e), 6) AS abs_dev
-        |FROM t ORDER BY digit""".stripMargin
-    },
-    // same power sums, same expansion order for the central moments
-    "q218_moments_profile" -> momentsProfileSql,
-    // law gate: the merged power-sum artifact must reproduce the
-    // whole-corpus shape profile, so its oracle IS q218's rebuild
-    "q222_moments_increment" -> momentsProfileSql,
-    // same DECIMAL sums and closed form per pair; three UNION ALL blocks
-    "q219_correlation" ->
-      """WITH t AS (
-        |  SELECT n_chars,
-        |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |f AS (
-        |  SELECT n_chars, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_types
-        |  FROM t),
-        |p AS (
-        |  SELECT 'n_chars' AS col_a, 'n_tokens' AS col_b, count(*) AS n,
-        |    CAST(sum(CAST(n_chars AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(n_tokens AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_tokens) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_tokens) AS DOUBLE) AS syy
-        |  FROM f
-        |  UNION ALL
-        |  SELECT 'n_chars', 'n_types', count(*),
-        |    CAST(sum(CAST(n_chars AS DECIMAL(38,0))) AS DOUBLE),
-        |    CAST(sum(CAST(n_types AS DECIMAL(38,0))) AS DOUBLE),
-        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_types) AS DOUBLE),
-        |    CAST(sum(CAST(n_chars AS HUGEINT) * n_chars) AS DOUBLE),
-        |    CAST(sum(CAST(n_types AS HUGEINT) * n_types) AS DOUBLE)
-        |  FROM f
-        |  UNION ALL
-        |  SELECT 'n_tokens', 'n_types', count(*),
-        |    CAST(sum(CAST(n_tokens AS DECIMAL(38,0))) AS DOUBLE),
-        |    CAST(sum(CAST(n_types AS DECIMAL(38,0))) AS DOUBLE),
-        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_types) AS DOUBLE),
-        |    CAST(sum(CAST(n_tokens AS HUGEINT) * n_tokens) AS DOUBLE),
-        |    CAST(sum(CAST(n_types AS HUGEINT) * n_types) AS DOUBLE)
-        |  FROM f)
-        |SELECT col_a, col_b, n,
-        |  CASE WHEN (n::DOUBLE * sxx - sx * sx) > 0 AND (n::DOUBLE * syy - sy * sy) > 0
-        |    THEN round((n::DOUBLE * sxy - sx * sy)
-        |           / (sqrt(n::DOUBLE * sxx - sx * sx) * sqrt(n::DOUBLE * syy - sy * sy)), 6)
-        |  END AS corr
-        |FROM p ORDER BY col_a, col_b""".stripMargin,
-    // 2-step stepTimes shape: min view, then min strictly-later purchase;
-    // floor(epoch) parity for the latency, quantile_cont for percentiles
-    "q215_funnel_latency" ->
-      """WITH v AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS sid, min(CAST(ts AS TIMESTAMP)) AS t1
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |p AS (
-        |  SELECT v.sid, v.t1, min(CAST(e.ts AS TIMESTAMP)) AS t2
-        |  FROM v LEFT JOIN events e
-        |    ON CAST(e.user_id AS VARCHAR) = v.sid AND e.event_type = 'purchase'
-        |       AND CAST(e.ts AS TIMESTAMP) > v.t1
-        |  GROUP BY 1, 2),
-        |l AS (
-        |  SELECT t2,
-        |    CASE WHEN t2 IS NOT NULL
-        |      THEN CAST(floor(epoch(t2)) AS BIGINT) - CAST(floor(epoch(t1)) AS BIGINT)
-        |    END AS lat
-        |  FROM p)
-        |SELECT count(*) AS n_started, count(t2) AS n_converted,
-        |  round(count(t2)::DOUBLE / count(*)::DOUBLE, 6) AS conversion,
-        |  round(quantile_cont(lat, 0.5), 6) AS p50_sec,
-        |  round(quantile_cont(lat, 0.9), 6) AS p90_sec
-        |FROM l""".stripMargin,
-    // q22's md5(normalized) fingerprint, q30's min-id survivor rule
-    "q216_dedup_savings" ->
-      """WITH f AS (
-        |  SELECT doc_id, source, length(text) AS nc,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |r AS (
-        |  SELECT source, nc,
-        |    row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        |  FROM f)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-        |  CAST(sum(nc) AS BIGINT) AS n_chars,
-        |  CAST(sum(CASE WHEN rn > 1 THEN nc ELSE 0 END) AS BIGINT) AS dup_chars,
-        |  CASE WHEN sum(nc) > 0
-        |    THEN round(sum(CASE WHEN rn > 1 THEN nc ELSE 0 END)::DOUBLE / sum(nc)::DOUBLE, 6)
-        |    ELSE 0.0::DOUBLE END AS savings
-        |FROM r GROUP BY source ORDER BY source""".stripMargin,
-    // same md5-parity arms (q96's convention), same midrank grid, same
-    // operation order through u/sigma2/z
-    "q214_mann_whitney" ->
-      """WITH vals AS (
-        |  SELECT CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 1))::BIGINT % 2 = 0
-        |              THEN 'A' ELSE 'B' END AS arm,
-        |    value AS v
-        |  FROM events WHERE value IS NOT NULL),
-        |grid AS (
-        |  SELECT v,
-        |    CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(sum(CASE WHEN arm <> 'A' THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM vals GROUP BY 1),
-        |rk AS (
-        |  SELECT ca, cb, t,
-        |    (cum - t)::DOUBLE + (t + 1)::DOUBLE / 2.0::DOUBLE AS avg_rank
-        |  FROM (
-        |    SELECT ca, cb, ca + cb AS t,
-        |      CAST(sum(ca + cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |    FROM grid)),
-        |ag AS (
-        |  SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b,
-        |    CAST(sum(CAST(avg_rank * ca::DOUBLE AS DECIMAL(28,6))) AS DOUBLE) AS ra,
-        |    CAST(sum(t * t * t - t) AS BIGINT) AS ties
-        |  FROM rk),
-        |fin AS (
-        |  SELECT n_a, n_b,
-        |    ra - n_a::DOUBLE * (n_a::DOUBLE + 1.0::DOUBLE) / 2.0::DOUBLE AS u_a,
-        |    (n_a::DOUBLE * n_b::DOUBLE / 12.0::DOUBLE) *
-        |      (((n_a::DOUBLE + n_b::DOUBLE) + 1.0::DOUBLE)
-        |        - ties::DOUBLE / ((n_a::DOUBLE + n_b::DOUBLE) * ((n_a::DOUBLE + n_b::DOUBLE) - 1.0::DOUBLE))) AS sigma2,
-        |    n_a::DOUBLE * n_b::DOUBLE / 2.0::DOUBLE AS mu
-        |  FROM ag)
-        |SELECT n_a, n_b, round(u_a, 6) AS u_a,
-        |  CASE WHEN sigma2 > 0 THEN round((u_a - mu) / sqrt(sigma2), 6) END AS z,
-        |  CASE WHEN sigma2 > 0 THEN abs(round((u_a - mu) / sqrt(sigma2), 6)) > 1.96 END AS significant
-        |FROM fin""".stripMargin,
-    // same window, leads instead of a self-join; '>' separator pinned
-    "q209_sequence_patterns" ->
-      """WITH s AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS k, event_type AS t1,
-        |    lead(event_type, 1) OVER w AS t2,
-        |    lead(event_type, 2) OVER w AS t3
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR)
-        |               ORDER BY CAST(ts AS TIMESTAMP), event_id))
-        |SELECT t1 || '>' || t2 || '>' || t3 AS pattern,
-        |  count(*) AS n_occurrences, count(DISTINCT k) AS n_sessions
-        |FROM s WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-        |GROUP BY 1 ORDER BY n_occurrences DESC, pattern LIMIT 20""".stripMargin,
-    // ties at the threshold share a value, so the selected multiset is
-    // deterministic; alpha derives from the ROUNDED gamma on both sides
-    "q210_hill_tail_index" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS sid, count(*)::DOUBLE AS x
-        |  FROM events GROUP BY 1),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x DESC) AS rn FROM c WHERE x > 0),
-        |thr AS (SELECT x AS x_thr FROM r WHERE rn = 101),
-        |g AS (
-        |  SELECT count(*) AS k, max(x_thr) AS x_threshold,
-        |    round(CAST(sum(CAST(ln(x / x_thr) AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS gamma_hat
-        |  FROM r CROSS JOIN thr WHERE rn <= 100)
-        |SELECT k, x_threshold, gamma_hat,
-        |  CASE WHEN gamma_hat > 0 THEN round(1.0::DOUBLE / gamma_hat, 6) END AS alpha_hat
-        |FROM g""".stripMargin,
-    // integer-div hour buckets (floor(epoch) // 3600 — the q102 parity
-    // rule), dense spine via range, DECIMAL product terms
-    "q211_autocorrelation" ->
-      """WITH hh AS (
-        |  SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) // 3600 AS h,
-        |    count(*) AS x
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT min(h) AS h0, max(h) AS h1 FROM hh),
-        |sp AS (SELECT unnest(range(h0, h1 + 1)) AS h FROM b),
-        |se AS (SELECT sp.h, COALESCE(hh.x, 0) AS x FROM sp LEFT JOIN hh USING (h)),
-        |mm AS (SELECT CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m,
-        |         count(*) AS n_hours FROM se),
-        |ld AS (
-        |  SELECT se.h, se.x, m, n_hours,
-        |    lead(x, 1) OVER (ORDER BY h) AS x_1,
-        |    lead(x, 24) OVER (ORDER BY h) AS x_24
-        |  FROM se CROSS JOIN mm),
-        |ag AS (
-        |  SELECT max(n_hours) AS n_hours,
-        |    CAST(sum(CAST((x::DOUBLE - m) * (x::DOUBLE - m) AS DECIMAL(28,12))) AS DOUBLE) AS den,
-        |    CAST(sum(CASE WHEN x_1 IS NOT NULL THEN CAST((x::DOUBLE - m) * (x_1::DOUBLE - m) AS DECIMAL(28,12)) END) AS DOUBLE) AS num_1,
-        |    CAST(sum(CASE WHEN x_24 IS NOT NULL THEN CAST((x::DOUBLE - m) * (x_24::DOUBLE - m) AS DECIMAL(28,12)) END) AS DOUBLE) AS num_24
-        |  FROM ld)
-        |SELECT * FROM (
-        |  SELECT 1 AS lag, n_hours, CASE WHEN den > 0 THEN round(num_1 / den, 6) END AS r FROM ag
-        |  UNION ALL
-        |  SELECT 24 AS lag, n_hours, CASE WHEN den > 0 THEN round(num_24 / den, 6) END AS r FROM ag)
-        |ORDER BY lag""".stripMargin,
-    // q199's chain CTEs + the entropy tail: unrounded p from exact counts
-    "q212_markov_entropy" ->
-      """WITH s AS (
-        |  SELECT event_type AS cur,
-        |    lead(event_type) OVER w AS nxt,
-        |    row_number() OVER w AS rn
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR)
-        |               ORDER BY CAST(ts AS TIMESTAMP), event_id)),
-        |p AS (
-        |  SELECT cur AS from_state, COALESCE(nxt, '<END>') AS to_state FROM s
-        |  UNION ALL
-        |  SELECT '<START>', cur FROM s WHERE rn = 1),
-        |c AS (SELECT from_state, to_state, count(*) AS n FROM p GROUP BY 1, 2),
-        |e AS (
-        |  SELECT from_state, n,
-        |    CAST(sum(n) OVER (PARTITION BY from_state) AS BIGINT) AS n_from,
-        |    CAST(sum(n) OVER () AS BIGINT) AS n_total
-        |  FROM c),
-        |t AS (
-        |  SELECT from_state, n,
-        |    CAST((n_from::DOUBLE / n_total::DOUBLE) * (n::DOUBLE / n_from::DOUBLE)
-        |      * ln(n::DOUBLE / n_from::DOUBLE) AS DECIMAL(28,12)) AS term
-        |  FROM e)
-        |SELECT count(DISTINCT from_state) AS n_states,
-        |  CAST(sum(n) AS BIGINT) AS n_transitions,
-        |  round(-CAST(sum(term) AS DOUBLE), 6) AS entropy_rate
-        |FROM t""".stripMargin,
-    // same md5 uniform (h+0.5)/2^60, same Laplace inverse CDF, same clamp
-    "q206_dp_noisy_counts" ->
-      """WITH c AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS event_date, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |u AS (
-        |  SELECT event_type, event_date, n,
-        |    ((('0x' || substr(md5(event_type || '|' || event_date::VARCHAR || '|' || 'dp'), 1, 15))::BIGINT::DOUBLE + 0.5::DOUBLE) / 1152921504606846976.0::DOUBLE) AS uu
-        |  FROM c),
-        |nz AS (
-        |  SELECT event_type, event_date, n,
-        |    round(-(1.0::DOUBLE / 1.0::DOUBLE) * sign(uu - 0.5::DOUBLE) * ln(1.0::DOUBLE - 2.0::DOUBLE * abs(uu - 0.5::DOUBLE)), 6) AS noise
-        |  FROM u)
-        |SELECT event_type, event_date, n, noise,
-        |  greatest(0, CAST(round(n + noise, 0) AS BIGINT)) AS noisy_n
-        |FROM nz ORDER BY event_type, event_date""".stripMargin,
-    // q21's langid CTEs + the kappa tail: integer margins, inner join on
-    // the class label for the chance term
-    "q207_cohens_kappa" ->
-      """WITH t AS (
-        |  SELECT lang AS lang_label,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT lang_label,
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to','is'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','y','es','que'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','et','est','une','pas'))) AS s_fr
-        |  FROM t),
-        |g AS (
-        |  SELECT lang_label,
-        |    CASE WHEN s_en = 0 AND s_de = 0 AND s_es = 0 AND s_fr = 0 THEN 'unknown'
-        |         WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-        |         WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |         WHEN s_es >= s_fr THEN 'es'
-        |         ELSE 'fr' END AS guessed_lang
-        |  FROM s),
-        |grid AS (SELECT lang_label AS a, guessed_lang AS b, count(*) AS c FROM g GROUP BY 1, 2),
-        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ra FROM grid GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM grid GROUP BY 1),
-        |pe AS (SELECT COALESCE(CAST(sum(ra * cb) AS BIGINT), 0) AS pe_num
-        |       FROM ma JOIN mb ON ma.a = mb.b),
-        |tt AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN a = b THEN c ELSE 0 END) AS BIGINT) AS diag
-        |       FROM grid)
-        |SELECT n,
-        |  round(diag::DOUBLE / n::DOUBLE, 6) AS po,
-        |  round(pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE), 6) AS pe,
-        |  CASE WHEN 1.0::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE) > 0
-        |    THEN round((diag::DOUBLE / n::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE))
-        |           / (1.0::DOUBLE - pe_num::DOUBLE / (n::DOUBLE * n::DOUBLE)), 6) END AS kappa
-        |FROM tt CROSS JOIN pe""".stripMargin,
-    // same lexicon, same filter-then-unnest order
-    "q208_dictionary_tags" ->
-      """SELECT doc_id, term, count(*) AS n_occ FROM (
-        |  SELECT doc_id,
-        |    unnest(list_filter(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> ''), x -> x IN ('join','hash','scan','merge','sort'))) AS term
-        |  FROM documents)
-        |GROUP BY 1, 2 ORDER BY doc_id, term""".stripMargin,
-    // the shared Lloyd CTEs + rank-2 distances: rn=1 is a2, rn=2 is b2
-    "q204_silhouette" ->
-      s"""WITH $kmeansAsgCtes,
-        |rk AS (
-        |  SELECT vec_id, cluster, d2,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |  FROM ddf),
-        |ab AS (
-        |  SELECT a.vec_id, a.cluster, sqrt(a.d2) AS a, sqrt(b.d2) AS b
-        |  FROM rk a JOIN rk b ON a.vec_id = b.vec_id AND a.rn = 1 AND b.rn = 2),
-        |sil AS (
-        |  SELECT cluster,
-        |    CASE WHEN greatest(a, b) > 0 THEN (b - a) / greatest(a, b)
-        |         ELSE 0.0::DOUBLE END AS s
-        |  FROM ab)
-        |SELECT cluster, count(*) AS n,
-        |  round(CAST(sum(CAST(s AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_silhouette
-        |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin,
-    // dim-wise DECIMAL(38,12) means, DECIMAL(38,18) product terms
-    "q205_centroid_drift" ->
-      """WITH e AS (
-        |  SELECT label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |ld AS (
-        |  SELECT label, i AS dim,
-        |    CAST(sum(CAST(v[i+1] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS m,
-        |    count(*) AS n
-        |  FROM e CROSS JOIN range(64) t(i) GROUP BY 1, 2),
-        |gd AS (
-        |  SELECT i AS dim,
-        |    CAST(sum(CAST(v[i+1] AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS g
-        |  FROM e CROSS JOIN range(64) t(i) GROUP BY 1),
-        |j AS (SELECT ld.label, ld.n, ld.m, gd.g FROM ld JOIN gd USING (dim)),
-        |s AS (
-        |  SELECT label, max(n) AS n_vecs,
-        |    CAST(sum(CAST(m * g AS DECIMAL(38,18))) AS DOUBLE) AS mg,
-        |    CAST(sum(CAST(m * m AS DECIMAL(38,18))) AS DOUBLE) AS mm,
-        |    CAST(sum(CAST(g * g AS DECIMAL(38,18))) AS DOUBLE) AS gg,
-        |    CAST(sum(CAST((m - g) * (m - g) AS DECIMAL(38,18))) AS DOUBLE) AS d2
-        |  FROM j GROUP BY 1)
-        |SELECT label, n_vecs,
-        |  round(mg / (sqrt(mm) * sqrt(gg)), 6) AS cos_to_global,
-        |  round(sqrt(d2), 6) AS l2_shift
-        |FROM s ORDER BY label""".stripMargin,
-    // floor(epoch()) parity (the q102 rule) for both the duration and the
-    // censor flag; same DECIMAL ln-factor cumsum, exp at the end
-    "q202_km_survival" ->
-      """WITH pk AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS sid,
-        |    CAST(floor(epoch(max(CAST(ts AS TIMESTAMP)))) AS BIGINT)
-        |      - CAST(floor(epoch(min(CAST(ts AS TIMESTAMP)))) AS BIGINT) AS t_sec,
-        |    CAST(floor(epoch(max(CAST(ts AS TIMESTAMP)))) AS BIGINT) AS last_s
-        |  FROM events GROUP BY 1),
-        |le AS (SELECT max(last_s) AS log_end FROM pk),
-        |fl AS (
-        |  SELECT t_sec,
-        |    CASE WHEN last_s > log_end - 3600 THEN 1 ELSE 0 END AS c,
-        |    CASE WHEN last_s > log_end - 3600 THEN 0 ELSE 1 END AS d
-        |  FROM pk CROSS JOIN le),
-        |bt AS (SELECT t_sec, CAST(sum(d) AS BIGINT) AS d_events,
-        |         CAST(sum(c) AS BIGINT) AS c_censored FROM fl GROUP BY 1),
-        |cm AS (
-        |  SELECT t_sec, d_events, c_censored,
-        |    CAST(sum(d_events + c_censored) OVER () AS BIGINT) AS n_total,
-        |    CAST(sum(d_events + c_censored)
-        |      OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        |  FROM bt),
-        |lf AS (
-        |  SELECT t_sec, d_events, c_censored,
-        |    n_total - cum + d_events + c_censored AS n_at_risk,
-        |    CASE WHEN d_events > 0
-        |           AND d_events < n_total - cum + d_events + c_censored
-        |      THEN ln((n_total - cum + c_censored)::DOUBLE
-        |             / (n_total - cum + d_events + c_censored)::DOUBLE)
-        |      ELSE 0.0::DOUBLE END AS ln_f,
-        |    CASE WHEN d_events > 0
-        |           AND d_events = n_total - cum + d_events + c_censored
-        |      THEN 1 ELSE 0 END AS zf
-        |  FROM cm)
-        |SELECT t_sec, n_at_risk, d_events, c_censored,
-        |  CASE WHEN max(zf) OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) = 1
-        |    THEN 0.0::DOUBLE
-        |    ELSE round(exp(CAST(sum(CAST(ln_f AS DECIMAL(28,12)))
-        |      OVER (ORDER BY t_sec ROWS UNBOUNDED PRECEDING) AS DOUBLE)), 6) END AS survival
-        |FROM lf ORDER BY t_sec""".stripMargin,
-    // same splits, same three-way CASE; DECIMAL-summed scores
-    "q203_stupid_backoff" ->
-      """WITH tr AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |ev AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |trb AS (
-        |  SELECT b.w1 AS w1, b.w2 AS w2 FROM (
-        |    SELECT unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
-        |    FROM tr WHERE len(t) >= 2)),
-        |evb AS (
-        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
-        |    SELECT doc_id, unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
-        |    FROM ev WHERE len(t) >= 2)),
-        |uni AS (SELECT tok AS w, count(*) AS cu FROM (SELECT unnest(t) AS tok FROM tr) GROUP BY 1),
-        |tot AS (SELECT CAST(sum(cu) AS BIGINT) AS n_total FROM uni),
-        |cb AS (SELECT w1, w2, count(*) AS c12 FROM trb GROUP BY 1, 2),
-        |sc AS (
-        |  SELECT e.doc_id, count(*) AS n_bigrams,
-        |    CAST(sum(CASE WHEN cb.c12 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |    sum(CAST(
-        |      CASE WHEN cb.c12 IS NOT NULL THEN cb.c12::DOUBLE / u1.cu::DOUBLE
-        |           WHEN u2.cu IS NOT NULL THEN 0.4::DOUBLE * u2.cu::DOUBLE / t.n_total::DOUBLE
-        |           ELSE 0.4::DOUBLE * 0.4::DOUBLE / t.n_total::DOUBLE END
-        |      AS DECIMAL(28,12))) AS s
-        |  FROM evb e
-        |  LEFT JOIN cb ON cb.w1 = e.w1 AND cb.w2 = e.w2
-        |  LEFT JOIN uni u1 ON u1.w = e.w1
-        |  LEFT JOIN uni u2 ON u2.w = e.w2
-        |  CROSS JOIN tot t
-        |  GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
-        |  CASE WHEN sc.n_bigrams > 0
-        |    THEN round(sc.n_hits::DOUBLE / sc.n_bigrams::DOUBLE, 6) END AS hit_rate,
-        |  CASE WHEN sc.n_bigrams > 0
-        |    THEN round(sc.s::DOUBLE / sc.n_bigrams::DOUBLE, 6) END AS mean_score
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d
-        |LEFT JOIN sc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // count-of-counts + Good-Turing over non-distinct trigrams: gaps in
-    // the k table leave c* null
-    "q200_count_of_counts" -> countOfCountsSql,
-    // law gate: the incremental merge must reproduce the whole-corpus
-    // spectrum, so its oracle IS q200's rebuild
-    "q213_count_of_counts_increment" -> countOfCountsSql,
-    // same rank tie-break (cnt desc, token asc), same DECIMAL(28,12) OLS
-    // sums, same double-domain closed form
-    "q201_zipf_slope" ->
-      """WITH tk AS (
-        |  SELECT source, unnest(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS token
-        |  FROM documents),
-        |cnt AS (SELECT source, token, count(*) AS cnt FROM tk GROUP BY 1, 2),
-        |r AS (
-        |  SELECT source, cnt,
-        |    row_number() OVER (PARTITION BY source ORDER BY cnt DESC, token) AS r
-        |  FROM cnt),
-        |xy AS (SELECT source, ln(r::DOUBLE) AS x, ln(cnt::DOUBLE) AS y FROM r WHERE r <= 200),
-        |s AS (
-        |  SELECT source, count(*) AS n_types,
-        |    CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(28,12))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x * y AS DECIMAL(28,12))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(28,12))) AS DOUBLE) AS sxx
-        |  FROM xy GROUP BY 1)
-        |SELECT source, n_types,
-        |  round((n_types::DOUBLE * sxy - sx * sy) / (n_types::DOUBLE * sxx - sx * sx), 6) AS slope,
-        |  round((sy - ((n_types::DOUBLE * sxy - sx * sy) / (n_types::DOUBLE * sxx - sx * sx)) * sx) / n_types::DOUBLE, 6) AS intercept
-        |FROM s ORDER BY source""".stripMargin,
-    // same window (tie-break on event_id), same <START>/<END> convention
-    "q199_markov_transitions" ->
-      """WITH s AS (
-        |  SELECT event_type AS cur,
-        |    lead(event_type) OVER w AS nxt,
-        |    row_number() OVER w AS rn
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR)
-        |               ORDER BY CAST(ts AS TIMESTAMP), event_id)),
-        |p AS (
-        |  SELECT cur AS from_state, COALESCE(nxt, '<END>') AS to_state FROM s
-        |  UNION ALL
-        |  SELECT '<START>', cur FROM s WHERE rn = 1),
-        |c AS (SELECT from_state, to_state, count(*) AS n FROM p GROUP BY 1, 2)
-        |SELECT from_state, to_state, n,
-        |  round(n::DOUBLE / sum(n) OVER (PARTITION BY from_state), 6) AS p
-        |FROM c ORDER BY from_state, to_state""".stripMargin,
-    // the ±1 matrix regenerated from md5('rp|p|j') parity; 1/sqrt(16)
-    // is exact, so the only float work is the fused sum itself
-    "q195_random_projection" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |ps AS (SELECT CAST(unnest(range(16)) AS INT) AS p),
-        |pr AS (
-        |  SELECT vec_id, p,
-        |    list_sum(list_transform(range(64), j ->
-        |      CAST(embedding[CAST(j + 1 AS INT)] AS DOUBLE) *
-        |      (CASE WHEN ('0x' || substr(md5('rp|' || p::VARCHAR || '|' || j::VARCHAR), 1, 15))::BIGINT % 2 = 0
-        |            THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END)))
-        |      * (1.0::DOUBLE / sqrt(16.0::DOUBLE)) AS value
-        |  FROM e CROSS JOIN ps)
-        |SELECT vec_id, p, round(value, 6) AS value
-        |FROM pr ORDER BY vec_id, p""".stripMargin,
-    // md5-decile assignment, token-first-decile for new types, cumulative
-    // sums over the 10-row spine
-    "q194_vocab_growth" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |    CAST(('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10 + 1 AS INT) AS decile
-        |  FROM documents),
-        |tok AS (
-        |  SELECT decile,
-        |    unnest(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS tok
-        |  FROM d),
-        |pd AS (SELECT decile, count(*) AS nt FROM tok GROUP BY 1),
-        |ft AS (SELECT tok, min(decile) AS decile FROM tok GROUP BY 1),
-        |nv AS (SELECT decile, count(*) AS n_new_types FROM ft GROUP BY 1),
-        |dc AS (SELECT decile, count(*) AS nd FROM d GROUP BY 1),
-        |sp AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS decile),
-        |j AS (
-        |  SELECT sp.decile, COALESCE(nd, 0) AS nd, COALESCE(nt, 0) AS nt,
-        |    COALESCE(n_new_types, 0) AS n_new_types
-        |  FROM sp LEFT JOIN dc USING (decile) LEFT JOIN pd USING (decile)
-        |  LEFT JOIN nv USING (decile))
-        |SELECT decile,
-        |  CAST(sum(nd) OVER w AS BIGINT) AS n_docs_cum,
-        |  CAST(sum(nt) OVER w AS BIGINT) AS n_tokens_cum,
-        |  CAST(n_new_types AS BIGINT) AS n_new_types,
-        |  CAST(sum(n_new_types) OVER w AS BIGINT) AS vocab_cum
-        |FROM j WINDOW w AS (ORDER BY decile ROWS UNBOUNDED PRECEDING)
-        |ORDER BY decile""".stripMargin,
-    // integer log-bucketing (length(bin) octave, // sub-bucket), cumulative
-    // window over the aggregated histogram, first bucket ≥ ceil(q·n)
-    "q192_hdr_quantiles" -> hdrQuantilesOracle,
-    // THE LAW: the merged incremental artifact must quantile identically
-    // to the whole-corpus rebuild — this oracle IS the rebuild, verbatim
-    "q197_hdr_increment" -> hdrQuantilesOracle,
-    // q188's gaps-and-islands over eval-colliding spans only
-    "q198_decontam_masks" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, CAST(unnest(range(0, len(toks) - 8 + 1)) AS INT) AS start, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |f AS (
-        |  SELECT doc_id, start,
-        |    ('0x' || substr(md5(array_to_string(toks[start+1:start+8], ' ')), 1, 15))::BIGINT AS span_fp
-        |  FROM w),
-        |ev AS (SELECT DISTINCT span_fp FROM f WHERE doc_id % 10 = 0),
-        |o AS (
-        |  SELECT f.doc_id, f.start FROM f JOIN ev USING (span_fp)
-        |  WHERE f.doc_id % 10 <> 0),
-        |br AS (
-        |  SELECT doc_id, start,
-        |    CASE WHEN lag(start) OVER w2 IS NULL
-        |           OR start - lag(start) OVER w2 > 8 THEN 1 ELSE 0 END AS brk
-        |  FROM o WINDOW w2 AS (PARTITION BY doc_id ORDER BY start)),
-        |isl AS (
-        |  SELECT doc_id, start,
-        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY start ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM br),
-        |gi AS (
-        |  SELECT doc_id, island, count(*) AS n_spans,
-        |    max(start) + 8 - min(start) AS island_tokens
-        |  FROM isl GROUP BY 1, 2),
-        |pd AS (
-        |  SELECT doc_id, CAST(sum(n_spans) AS BIGINT) AS n_hits,
-        |    count(*) AS n_islands, CAST(sum(island_tokens) AS BIGINT) AS n_masked_tokens
-        |  FROM gi GROUP BY 1),
-        |nt AS (
-        |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t
-        |  WHERE doc_id % 10 <> 0)
-        |SELECT nt.doc_id, nt.n_tokens,
-        |  COALESCE(n_hits, 0) AS n_hits,
-        |  COALESCE(n_islands, 0) AS n_islands,
-        |  COALESCE(n_masked_tokens, 0) AS n_masked_tokens,
-        |  CASE WHEN nt.n_tokens > 0
-        |       THEN round(COALESCE(n_masked_tokens, 0)::DOUBLE / nt.n_tokens::DOUBLE, 6)
-        |       ELSE 0.0 END AS masked_ratio
-        |FROM nt LEFT JOIN pd USING (doc_id)
-        |ORDER BY nt.doc_id""".stripMargin,
-    // the minJaccard operating-point curve over q32's exact scored pairs
-    "q196_dedup_threshold_sweep" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
-        |common AS (
-        |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
-        |  FROM inv x JOIN inv y ON x.shingle = y.shingle AND x.id < y.id
-        |  GROUP BY 1, 2, 3, 4),
-        |sc AS (
-        |  SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS j
-        |  FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.1),
-        |pb AS (
-        |  SELECT CAST(least(floor(j * 10), 9) AS INT) AS d, count(*) AS np
-        |  FROM sc GROUP BY 1),
-        |dm AS (
-        |  SELECT id, CAST(least(floor(max(j) * 10), 9) AS INT) AS d FROM (
-        |    SELECT doc_a AS id, j FROM sc UNION ALL SELECT doc_b AS id, j FROM sc)
-        |  GROUP BY id),
-        |nd AS (SELECT d, count(*) AS ndocs FROM dm GROUP BY 1),
-        |sp AS (SELECT CAST(unnest(range(1, 10)) AS INT) AS d)
-        |SELECT sp.d::DOUBLE / 10 AS threshold,
-        |  CAST(COALESCE((SELECT sum(np) FROM pb WHERE pb.d >= sp.d), 0) AS BIGINT) AS n_pairs,
-        |  CAST(COALESCE((SELECT sum(ndocs) FROM nd WHERE nd.d >= sp.d), 0) AS BIGINT) AS n_docs_affected
-        |FROM sp ORDER BY threshold""".stripMargin,
-    // the k smallest md5(doc_id) hashes per source — the oracle ranks
-    // directly; the Spark side proves the cutoff prefilter is exact
-    "q193_group_sample" ->
-      """WITH h AS (
-        |  SELECT doc_id, source,
-        |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT AS hh
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY hh, doc_id) AS sample_rank
-        |  FROM h)
-        |SELECT doc_id, source, sample_rank FROM r WHERE sample_rank <= 10
-        |ORDER BY source, sample_rank""".stripMargin,
-    // q136's span-fp CTEs + gaps-and-islands merge (break where the gap
-    // between consecutive dup-span starts exceeds the span length)
-    "q188_span_masks" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |w AS (
-        |  SELECT doc_id, CAST(unnest(range(0, len(toks) - 8 + 1)) AS INT) AS start, toks
-        |  FROM t WHERE len(toks) >= 8),
-        |f AS (
-        |  SELECT doc_id, start,
-        |    ('0x' || substr(md5(array_to_string(toks[start+1:start+8], ' ')), 1, 15))::BIGINT AS span_fp
-        |  FROM w),
-        |d AS (SELECT span_fp FROM f GROUP BY span_fp HAVING count(DISTINCT doc_id) >= 2),
-        |o AS (SELECT f.doc_id, f.start FROM f JOIN d USING (span_fp)),
-        |br AS (
-        |  SELECT doc_id, start,
-        |    CASE WHEN lag(start) OVER w2 IS NULL
-        |           OR start - lag(start) OVER w2 > 8 THEN 1 ELSE 0 END AS brk
-        |  FROM o WINDOW w2 AS (PARTITION BY doc_id ORDER BY start)),
-        |isl AS (
-        |  SELECT doc_id, start,
-        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY start ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM br),
-        |gi AS (
-        |  SELECT doc_id, island, count(*) AS n_spans,
-        |    max(start) + 8 - min(start) AS island_tokens
-        |  FROM isl GROUP BY 1, 2),
-        |pd AS (
-        |  SELECT doc_id, CAST(sum(n_spans) AS BIGINT) AS n_dup_spans,
-        |    count(*) AS n_islands, CAST(sum(island_tokens) AS BIGINT) AS n_dup_tokens
-        |  FROM gi GROUP BY 1),
-        |nt AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t)
-        |SELECT nt.doc_id, nt.n_tokens,
-        |  COALESCE(n_dup_spans, 0) AS n_dup_spans,
-        |  COALESCE(n_islands, 0) AS n_islands,
-        |  COALESCE(n_dup_tokens, 0) AS n_dup_tokens,
-        |  CASE WHEN nt.n_tokens > 0
-        |       THEN round(COALESCE(n_dup_tokens, 0)::DOUBLE / nt.n_tokens::DOUBLE, 6)
-        |       ELSE 0.0 END AS dup_ratio
-        |FROM nt LEFT JOIN pd USING (doc_id)
-        |ORDER BY nt.doc_id""".stripMargin,
-    // whitespace words (empty-filtered) vs BPE-ish subword segmentation,
-    // summed per source before the ratio
-    "q189_token_fertility" ->
-      """WITH t AS (
-        |  SELECT source, text,
-        |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |p AS (
-        |  SELECT source, CAST(len(toks) AS BIGINT) AS w,
-        |    CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS BIGINT) AS b,
-        |    CAST(length(array_to_string(toks, '')) AS BIGINT) AS c
-        |  FROM t)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(w) AS BIGINT) AS n_words, CAST(sum(b) AS BIGINT) AS n_subwords,
-        |  CASE WHEN sum(w) > 0 THEN round(sum(b)::DOUBLE / sum(w)::DOUBLE, 6) ELSE 0.0 END AS fertility,
-        |  CASE WHEN sum(w) > 0 THEN round(sum(c)::DOUBLE / sum(w)::DOUBLE, 6) ELSE 0.0 END AS chars_per_word
-        |FROM p GROUP BY source ORDER BY source""".stripMargin,
-    // THE LAW: the incremental artifact must probe identically to the
-    // whole-corpus rebuild — this oracle IS the rebuild
-    "q190_bloom_increment" ->
-      """WITH fps AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS key
-        |  FROM documents),
-        |corpus AS (SELECT DISTINCT key FROM fps),
-        |cpos AS (
-        |  SELECT DISTINCT ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
-        |  FROM corpus CROSS JOIN range(3) r(i)),
-        |probe AS (
-        |  SELECT DISTINCT key FROM (
-        |    SELECT key FROM fps
-        |    UNION ALL
-        |    SELECT 'probe|' || doc_id::VARCHAR FROM documents)),
-        |ppos AS (
-        |  SELECT key, ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
-        |  FROM probe CROSS JOIN range(3) r(i))
-        |SELECT ppos.key,
-        |  CAST(sum(CASE WHEN cpos.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = 3 AS might_contain
-        |FROM ppos LEFT JOIN cpos ON ppos.p = cpos.p
-        |GROUP BY ppos.key ORDER BY ppos.key""".stripMargin,
-    // exact-dup clusters by normalized-text md5, min-id rep, q44's md5
-    // bucket gate on the rep — split inherited cluster-wide
-    "q183_leakage_safe_split" ->
-      """WITH fp AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS fp
-        |  FROM documents),
-        |reps AS (SELECT fp, min(doc_id) AS cluster_rep FROM fp GROUP BY fp),
-        |b AS (
-        |  SELECT f.doc_id, r.cluster_rep,
-        |    ('0x' || substr(md5('split|v1|' || r.cluster_rep::VARCHAR), 1, 15))::BIGINT % 10000 AS bucket
-        |  FROM fp f JOIN reps r USING (fp))
-        |SELECT doc_id, cluster_rep,
-        |  CASE WHEN bucket < 8000 THEN 'train'
-        |       WHEN bucket < 9000 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-    // q180's shingle CTEs corpus-wide; first occurrence = min doc id per
-    // shingle; short docs surface with zero shingles
-    "q184_ngram_novelty" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |inv AS (SELECT id, unnest(sh) AS g FROM sets),
-        |fo AS (SELECT g, min(id) AS first_doc FROM inv GROUP BY g),
-        |pd AS (
-        |  SELECT inv.id, count(*) AS n_shingles,
-        |    CAST(sum(CASE WHEN fo.first_doc = inv.id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        |  FROM inv JOIN fo USING (g) GROUP BY inv.id)
-        |SELECT d.doc_id, COALESCE(n_shingles, 0) AS n_shingles,
-        |  COALESCE(n_novel, 0) AS n_novel,
-        |  CASE WHEN COALESCE(n_shingles, 0) > 0
-        |       THEN round(n_novel::DOUBLE / n_shingles::DOUBLE, 6)
-        |       ELSE 0.0 END AS novelty
-        |FROM documents d LEFT JOIN pd ON pd.id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    // q20's stats CTEs + the rule flags; all thresholds on already-rounded
-    // integer-derived values, so the booleans are engine-stable
-    "q185_gopher_rules" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_tokens,
-        |    len(list_distinct(toks)) AS n_unique_tokens,
-        |    round(CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks), 4) AS avg_token_len,
-        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
-        |  FROM t),
-        |r AS (
-        |  SELECT doc_id, n_tokens, avg_token_len, stopword_ratio,
-        |    round(CAST(n_unique_tokens AS DOUBLE) / n_tokens, 4) AS uniq_ratio
-        |  FROM s)
-        |SELECT doc_id, n_tokens, avg_token_len, stopword_ratio, uniq_ratio,
-        |  n_tokens BETWEEN 50 AND 100000 AS r_word_count,
-        |  avg_token_len BETWEEN 3.0 AND 10.0 AS r_mean_word_len,
-        |  stopword_ratio >= 0.01 AS r_stopword,
-        |  uniq_ratio >= 0.2 AS r_diversity,
-        |  (n_tokens BETWEEN 50 AND 100000) AND (avg_token_len BETWEEN 3.0 AND 10.0)
-        |    AND stopword_ratio >= 0.01 AND uniq_ratio >= 0.2 AS keep
-        |FROM r ORDER BY doc_id""".stripMargin,
-    // bloom bitmap rebuilt as its distinct set-bit positions (3 md5 hash
-    // families mod 4096); probe = all 3 positions present
-    "q186_bloom_membership" ->
-      """WITH fps AS (
-        |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS key
-        |  FROM documents),
-        |cut AS (SELECT max(doc_id) * 9 // 10 AS c FROM documents),
-        |corpus AS (SELECT DISTINCT key FROM fps, cut WHERE doc_id <= c),
-        |cpos AS (
-        |  SELECT DISTINCT ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
-        |  FROM corpus CROSS JOIN range(3) r(i)),
-        |probe AS (SELECT DISTINCT key FROM fps),
-        |ppos AS (
-        |  SELECT key, ('0x' || substr(md5('bf' || r.i::VARCHAR || '|' || key), 1, 15))::BIGINT % 4096 AS p
-        |  FROM probe CROSS JOIN range(3) r(i)),
-        |hit AS (
-        |  SELECT ppos.key,
-        |    CAST(sum(CASE WHEN cpos.p IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = 3 AS might_contain
-        |  FROM ppos LEFT JOIN cpos ON ppos.p = cpos.p
-        |  GROUP BY ppos.key)
-        |SELECT h.key, h.might_contain, c.key IS NOT NULL AS actually_in
-        |FROM hit h LEFT JOIN corpus c ON h.key = c.key
-        |ORDER BY h.key""".stripMargin,
-    // q20's quality score + native percent_rank windows — the oracle form
-    // of the window-over-the-aggregate plan
-    "q187_quality_by_source" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_tokens,
-        |    len(list_distinct(toks)) AS n_unique_tokens,
-        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
-        |  FROM t),
-        |sc AS (
-        |  SELECT doc_id, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
-        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
-        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
-        |  FROM s),
-        |j AS (
-        |  SELECT sc.doc_id, d.source, sc.quality_score
-        |  FROM sc JOIN documents d USING (doc_id))
-        |SELECT doc_id, source, quality_score,
-        |  round(percent_rank() OVER (PARTITION BY source ORDER BY quality_score), 6) AS pct_in_source,
-        |  round(percent_rank() OVER (ORDER BY quality_score), 6) AS pct_global
-        |FROM j ORDER BY doc_id""".stripMargin,
-    "q01_session_analysis" ->
-      """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date,
-        | count(*) AS click_count,
-        | count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs,
-        | min(CAST(ts AS TIMESTAMP)) AS first_click_ts,
-        | max(CAST(ts AS TIMESTAMP)) AS last_click_ts,
-        | date_diff('second', min(CAST(ts AS TIMESTAMP)), max(CAST(ts AS TIMESTAMP))) AS session_duration_sec
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q02_daily_traffic" ->
-      """WITH c AS (
-        |  SELECT CAST(ts AS DATE) AS event_date, hour(CAST(ts AS TIMESTAMP)) AS h,
-        |         CAST(user_id AS VARCHAR) AS session_id,
-        |         CAST(props->>'$.k' AS INTEGER) AS document_id
-        |  FROM events),
-        |hourly AS (SELECT event_date, h, count(*) AS hc FROM c GROUP BY 1, 2),
-        |peak AS (
-        |  SELECT event_date, h AS peak_hour FROM (
-        |    SELECT event_date, h, row_number() OVER (PARTITION BY event_date ORDER BY hc DESC, h) AS rn
-        |    FROM hourly) WHERE rn = 1),
-        |daily AS (
-        |  SELECT event_date, count(*) AS total_events,
-        |         count(DISTINCT session_id) AS unique_sessions,
-        |         count(DISTINCT document_id) AS unique_documents
-        |  FROM c GROUP BY 1)
-        |SELECT d.event_date, d.total_events, d.unique_sessions, d.unique_documents, p.peak_hour
-        |FROM daily d LEFT JOIN peak p USING (event_date) ORDER BY d.event_date""".stripMargin,
-    "q03_top_terms" ->
-      """SELECT term, count(*) AS search_count, count(DISTINCT doc_id) AS unique_sessions
-        |FROM (SELECT doc_id, trim(unnest(string_split(text, ' '))) AS term
-        |      FROM documents WHERE text IS NOT NULL AND text <> '')
-        |WHERE term <> ''
-        |GROUP BY term ORDER BY search_count DESC, term LIMIT 100""".stripMargin,
-    "q04_popular_documents" ->
-      """SELECT CAST(ts AS DATE) AS event_date,
-        | CAST(props->>'$.k' AS INTEGER) AS document_id,
-        | count(*) AS view_count,
-        | count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 3 DESC, 2""".stripMargin,
-    "q05_traffic_minute" ->
-      """SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
-        | count(*) AS total_clicks,
-        | count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
-        | count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q66_hot_cold_reconcile" ->
-      """WITH cold AS (
-        |  SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
-        |    count(*) AS total_clicks,
-        |    count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
-        |    count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
-        |  FROM events GROUP BY 1),
-        |hot AS (
-        |  SELECT date_trunc('minute', CAST(ts AS TIMESTAMP)) AS event_minute,
-        |    count(*) AS total_clicks,
-        |    count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
-        |    count(DISTINCT CAST(props->>'$.k' AS INTEGER)) AS unique_docs
-        |  FROM events WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '2024-01-20 09:25:30'
-        |  GROUP BY 1),
-        |hh AS (
-        |  SELECT event_minute, md5(concat_ws('|', CAST(total_clicks AS VARCHAR),
-        |    CAST(unique_sessions AS VARCHAR), CAST(unique_docs AS VARCHAR))) AS old_hash
-        |  FROM hot),
-        |ch AS (
-        |  SELECT event_minute, md5(concat_ws('|', CAST(total_clicks AS VARCHAR),
-        |    CAST(unique_sessions AS VARCHAR), CAST(unique_docs AS VARCHAR))) AS new_hash
-        |  FROM cold)
-        |SELECT event_minute, old_hash, new_hash,
-        |  CASE WHEN old_hash IS NULL THEN 'cold_only'
-        |       WHEN new_hash IS NULL THEN 'hot_only'
-        |       ELSE 'drift' END AS status
-        |FROM hh FULL OUTER JOIN ch USING (event_minute)
-        |WHERE old_hash IS NULL OR new_hash IS NULL OR old_hash <> new_hash
-        |ORDER BY event_minute""".stripMargin,
-    "q06_top_docs" ->
-      """SELECT document_id, click_count, unique_sessions, "rank" FROM (
-        | SELECT CAST(props->>'$.k' AS INTEGER) AS document_id,
-        |        count(*) AS click_count,
-        |        count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions,
-        |        row_number() OVER (ORDER BY count(*) DESC, CAST(props->>'$.k' AS INTEGER)) AS "rank"
-        | FROM events GROUP BY 1)
-        |WHERE "rank" <= 20 ORDER BY "rank"""".stripMargin,
-    "q07_category_trend" ->
-      """WITH counts AS (
-        |  SELECT CAST(ts AS DATE) AS event_date, event_type,
-        |         count(*) AS clicks,
-        |         count(DISTINCT CAST(user_id AS VARCHAR)) AS unique_sessions
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_date, event_type, clicks, unique_sessions,
-        |  round((clicks - lag(clicks) OVER w) * 100.0 / lag(clicks) OVER w, 2) AS trend_pct
-        |FROM counts WINDOW w AS (PARTITION BY event_type ORDER BY event_date)
-        |ORDER BY event_type, event_date""".stripMargin,
-    "q08_anomaly_sessions" ->
-      """SELECT time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) AS window_start,
-        | time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) + INTERVAL '5 minutes' AS window_end,
-        | CAST(user_id AS VARCHAR) AS session_id,
-        | count(*) AS event_count,
-        | CASE WHEN count(*) >= 3 THEN 'CRITICAL' ELSE 'WARNING' END AS severity
-        |FROM events GROUP BY 1, 2, 3 HAVING count(*) >= 2
-        |ORDER BY 1, 3""".stripMargin,
-    "q09_dedup_first_click" ->
-      """SELECT event_id, session_id, event_type, event_date, event_ts FROM (
-        | SELECT event_id, CAST(user_id AS VARCHAR) AS session_id, event_type,
-        |        CAST(ts AS DATE) AS event_date, CAST(ts AS TIMESTAMP) AS event_ts,
-        |        row_number() OVER (PARTITION BY CAST(user_id AS VARCHAR), event_type, CAST(ts AS DATE)
-        |                           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY event_id""".stripMargin,
-    // DuckDB's native ASOF JOIN is the independent oracle for the engine's
-    // union+window as-of join (no ties exist on (user_id, ts), so ASOF's
-    // free tie choice and the engine's explicit tie-break coincide)
-    "q42_asof_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
-        |c AS (SELECT event_id AS last_click_id, user_id, ts FROM e WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
-        |  c.last_click_id, c.ts AS last_click_ts,
-        |  date_diff('second', c.ts, p.ts) AS gap_sec
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts > c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    // plain BETWEEN join as the oracle for the banded range join
-    "q43_range_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |err AS (SELECT event_id AS error_id, user_id, ts AS win_start,
-        |          ts + INTERVAL 1 HOUR AS win_end
-        |        FROM e WHERE event_type = 'error'),
-        |v AS (SELECT event_id AS view_id, user_id, ts FROM e WHERE event_type = 'view')
-        |SELECT error_id, view_id, date_diff('second', win_start, v.ts) AS gap_sec
-        |FROM v JOIN err ON v.user_id = err.user_id
-        |  AND v.ts > win_start AND v.ts <= win_end
-        |ORDER BY error_id, view_id""".stripMargin,
-    "q46_order_cube" ->
-      """SELECT o_orderpriority AS priority, o_orderstatus AS status,
-        | count(*) AS order_count,
-        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS total_value
-        |FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-        |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin,
-    // Money sums run in DECIMAL on both sides (exact, order-independent) and
-    // surface as DOUBLE — see Relational.moneySum.
-    "q10_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | sum(l_quantity) AS sum_qty,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_base_price,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_disc_price,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2))) * (CAST(1 AS DECIMAL(3,2)) + CAST(l_tax AS DECIMAL(4,2)))), 2) AS DOUBLE) AS sum_charge,
-        | round(avg(l_quantity), 4) AS avg_qty,
-        | round(avg(l_discount), 4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-12-31 00:00:00'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q11_revenue_by_nation" ->
-      """SELECT r_name AS region_name, n_name AS nation_name,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
-        | count(*) AS line_count
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q12_top_customers" ->
-      """WITH pc AS (
-        |  SELECT o_custkey,
-        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
-        |         count(*) AS line_count
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1)
-        |SELECT c_custkey, c_name, c_mktsegment, revenue, line_count
-        |FROM pc JOIN customer ON o_custkey = c_custkey
-        |ORDER BY revenue DESC, c_custkey LIMIT 10""".stripMargin,
-    "q13_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_customer_distribution" ->
-      """WITH pc AS (
-        |  SELECT c_custkey, count(o_orderkey) AS order_count
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey GROUP BY 1)
-        |SELECT order_count, count(*) AS custdist
-        |FROM pc GROUP BY 1 ORDER BY custdist DESC, order_count DESC""".stripMargin,
-    "q15_revenue_share_by_type" ->
-      """WITH bt AS (
-        |  SELECT p_type,
-        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1)
-        |SELECT p_type, revenue,
-        |  round(revenue * 100.0 / sum(revenue) OVER (), 2) AS revenue_pct
-        |FROM bt ORDER BY p_type""".stripMargin,
-    // cumulative sum runs over UNROUNDED decimal month totals (exact), both
-    // columns rounded to cents only at the edge — mirrors runningMonthlyRevenue
-    "q16_running_monthly_revenue" ->
-      """WITH m AS (
-        |  SELECT n_name AS nation_name, date_trunc('month', l_shipdate) AS ship_month,
-        |         sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS monthly_dec
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  GROUP BY 1, 2)
-        |SELECT nation_name, ship_month,
-        |  CAST(round(monthly_dec, 2) AS DOUBLE) AS monthly_revenue,
-        |  CAST(round(sum(monthly_dec) OVER (PARTITION BY nation_name ORDER BY ship_month
-        |        ROWS UNBOUNDED PRECEDING), 2) AS DOUBLE) AS cumulative_revenue
-        |FROM m ORDER BY 1, 2""".stripMargin,
-    "q53_rolling_revenue" ->
-      """WITH daily AS (
-        |  SELECT n_name AS nation_name, CAST(o_orderdate AS DATE) AS order_day,
-        |    sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS daily_dec
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1, 2)
-        |SELECT nation_name, order_day,
-        |  CAST(round(daily_dec, 2) AS DOUBLE) AS daily_revenue,
-        |  CAST(round(sum(daily_dec) OVER (PARTITION BY nation_name
-        |      ORDER BY date_diff('day', DATE '1970-01-01', order_day)
-        |      RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS DOUBLE) AS rolling_revenue
-        |FROM daily ORDER BY 1, 2""".stripMargin,
-    "q54_snapshot_diff" ->
-      """WITH os AS (
-        |  SELECT o_orderkey, md5(concat_ws('|',
-        |      COALESCE(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
-        |      COALESCE(replace(replace(o_orderpriority, '\', '\\'), '|', '\|'), '\N'),
-        |      COALESCE(replace(replace(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\', '\\'), '|', '\|'), '\N'))) AS old_hash
-        |  FROM orders WHERE o_orderkey % 13 <> 0),
-        |ns AS (
-        |  SELECT o_orderkey, md5(concat_ws('|',
-        |      COALESCE(replace(replace(o_orderstatus, '\', '\\'), '|', '\|'), '\N'),
-        |      COALESCE(replace(replace(CASE WHEN o_orderkey % 5 = 0 THEN o_orderpriority || '*' ELSE o_orderpriority END, '\', '\\'), '|', '\|'), '\N'),
-        |      COALESCE(replace(replace(CAST(CAST(o_orderdate AS DATE) AS VARCHAR), '\', '\\'), '|', '\|'), '\N'))) AS new_hash
-        |  FROM orders WHERE o_orderkey % 17 <> 0)
-        |SELECT o_orderkey, old_hash, new_hash, change_type FROM (
-        |  SELECT COALESCE(os.o_orderkey, ns.o_orderkey) AS o_orderkey,
-        |    os.old_hash, ns.new_hash,
-        |    CASE WHEN os.old_hash IS NULL THEN 'added'
-        |         WHEN ns.new_hash IS NULL THEN 'deleted'
-        |         WHEN os.old_hash <> ns.new_hash THEN 'changed' END AS change_type
-        |  FROM os FULL OUTER JOIN ns ON os.o_orderkey = ns.o_orderkey)
-        |WHERE change_type IS NOT NULL ORDER BY o_orderkey""".stripMargin,
-    "q55_scd2_intervals" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS session_id,
-        |         CAST(props->>'$.k' AS INTEGER) AS document_id,
-        |         CAST(ts AS TIMESTAMP) AS event_ts
-        |  FROM events),
-        |m AS (
-        |  SELECT session_id, document_id, event_ts,
-        |    lag(document_id) OVER (PARTITION BY session_id ORDER BY event_ts) AS prev_doc,
-        |    row_number() OVER (PARTITION BY session_id ORDER BY event_ts) AS rn
-        |  FROM c),
-        |cp AS (
-        |  SELECT session_id, document_id, event_ts FROM m
-        |  WHERE rn = 1 OR prev_doc IS DISTINCT FROM document_id)
-        |SELECT session_id, document_id, event_ts AS valid_from,
-        |  lead(event_ts) OVER (PARTITION BY session_id ORDER BY event_ts) AS valid_to,
-        |  lead(event_ts) OVER (PARTITION BY session_id ORDER BY event_ts) IS NULL AS is_current
-        |FROM cp ORDER BY session_id, valid_from""".stripMargin,
-    "q17_top_parts_per_brand" ->
-      """SELECT p_brand, p_partkey, p_name, p_retailprice, price_rank FROM (
-        | SELECT p_brand, p_partkey, p_name, p_retailprice,
-        |        row_number() OVER (PARTITION BY p_brand
-        |                           ORDER BY p_retailprice DESC, p_partkey) AS price_rank
-        | FROM part) WHERE price_rank <= 3 ORDER BY p_brand, price_rank""".stripMargin,
-    "q18_order_value_buckets" ->
-      """SELECT CASE WHEN o_totalprice < 1000 THEN '0_under_1k'
-        |            WHEN o_totalprice < 10000 THEN '1_1k_to_10k'
-        |            WHEN o_totalprice < 100000 THEN '2_10k_to_100k'
-        |            ELSE '3_over_100k' END AS bucket,
-        | count(*) AS order_count,
-        | CAST(round(sum(CAST(o_totalprice AS DECIMAL(12,2))), 2) AS DOUBLE) AS total_value
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_orders_without_lines" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice
-        |FROM orders
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q20_text_stats" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_tokens,
-        |    len(list_distinct(toks)) AS n_unique_tokens,
-        |    len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS n_bpe_tokens,
-        |    round(CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks), 4) AS avg_token_len,
-        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
-        |  FROM t),
-        |sc AS (
-        |  SELECT *, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
-        |      + (CAST(n_unique_tokens AS DOUBLE) / n_tokens) * 40.0
-        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
-        |  FROM s)
-        |SELECT doc_id, n_tokens, n_unique_tokens, n_bpe_tokens, avg_token_len, stopword_ratio, quality_score,
-        |  CASE WHEN quality_score >= 60 THEN 'high' WHEN quality_score >= 35 THEN 'medium' ELSE 'low' END AS quality_band
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    // native session_window semantics: a gap of exactly 30 min still MERGES
-    // (inclusive boundary, verified in StreamJoinSpec); session_end = last
-    // event + gap
-    "q47_session_window" ->
-      """WITH c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |f AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS flag
-        |  FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |    sum(flag) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM f)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end, count(*) AS n_events
-        |FROM s GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    // dup fraction = 1 - distinct/total per granularity; same tokenization
-    // as q20/q32
-    "q48_repetition_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, t,
-        |    CASE WHEN len(t) >= 2 THEN list_transform(range(len(t) - 1), i -> t[i+1] || ' ' || t[i+2]) ELSE [] END AS b,
-        |    CASE WHEN len(t) >= 3 THEN list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]) ELSE [] END AS tri
-        |  FROM toks)
-        |SELECT doc_id, len(t) AS n_tokens,
-        |  CASE WHEN len(t) > 0 THEN round(1.0 - CAST(len(list_distinct(t)) AS DOUBLE) / len(t), 4) ELSE 0.0 END AS dup_token_frac,
-        |  CASE WHEN len(b) > 0 THEN round(1.0 - CAST(len(list_distinct(b)) AS DOUBLE) / len(b), 4) ELSE 0.0 END AS dup_bigram_frac,
-        |  CASE WHEN len(tri) > 0 THEN round(1.0 - CAST(len(list_distinct(tri)) AS DOUBLE) / len(tri), 4) ELSE 0.0 END AS dup_trigram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // md5 hash-gate sampling: bucket = first 8 md5 hex chars as int % 10000,
-    // thresholds 5000/2500/1000 = round(fraction * buckets)
-    "q64_weighted_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    len(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS n_tokens
-        |  FROM documents),
-        |m AS (SELECT avg(n_tokens) AS mw FROM d)
-        |SELECT doc_id, n_tokens FROM d
-        |WHERE (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000)
-        |  < CAST(0.3 AS DOUBLE) * CAST(10000 AS DOUBLE) * n_tokens / (SELECT mw FROM m)
-        |ORDER BY doc_id""".stripMargin,
-    "q68_equidepth_histogram" ->
-      """WITH cuts AS (
-        |  SELECT quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
-        |  FROM events),
-        |b AS (
-        |  SELECT value,
-        |    1 + (CASE WHEN value > c[1] THEN 1 ELSE 0 END) + (CASE WHEN value > c[2] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN value > c[3] THEN 1 ELSE 0 END) + (CASE WHEN value > c[4] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN value > c[5] THEN 1 ELSE 0 END) + (CASE WHEN value > c[6] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN value > c[7] THEN 1 ELSE 0 END) + (CASE WHEN value > c[8] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN value > c[9] THEN 1 ELSE 0 END) AS bin
-        |  FROM events, cuts)
-        |SELECT bin, count(*) AS n, min(value) AS lo, max(value) AS hi
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-    // mirrors the operator's null exclusion and its w==0 degenerate branch
-    // (all-equal values -> everything in bin 1, no division by zero)
-    "q83_equiwidth_histogram" ->
-      """WITH v AS (SELECT value FROM events WHERE value IS NOT NULL),
-        |s AS (SELECT CAST(min(value) AS DOUBLE) AS mn, CAST(max(value) AS DOUBLE) AS mx FROM v),
-        |b AS (
-        |  SELECT CASE WHEN mx = mn THEN 1
-        |    ELSE LEAST(10, CAST(floor((value - mn) / ((mx - mn) / 10)) AS INT) + 1) END AS bin
-        |  FROM v CROSS JOIN s),
-        |c AS (SELECT bin, count(*) AS n FROM b GROUP BY 1),
-        |spine AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS bin)
-        |SELECT spine.bin,
-        |  round(mn + (spine.bin - 1) * ((mx - mn) / 10), 6) AS lo,
-        |  round(mn + spine.bin * ((mx - mn) / 10), 6) AS hi,
-        |  COALESCE(n, 0) AS n
-        |FROM spine CROSS JOIN s LEFT JOIN c USING (bin) ORDER BY spine.bin""".stripMargin,
-    "q111_rendezvous_shards" ->
-      """WITH scored AS (
-        |  SELECT c_custkey, s.shard,
-        |    ('0x' || substr(md5(s.shard || '|' || c_custkey::VARCHAR), 1, 15))::BIGINT AS score
-        |  FROM customer CROSS JOIN (VALUES ('shard-a'), ('shard-b'), ('shard-c'),
-        |    ('shard-d'), ('shard-e')) AS s(shard)),
-        |ranked AS (
-        |  SELECT c_custkey, shard,
-        |    row_number() OVER (PARTITION BY c_custkey ORDER BY score DESC, shard DESC) AS rn
-        |  FROM scored)
-        |SELECT c_custkey, shard FROM ranked WHERE rn = 1 ORDER BY c_custkey""".stripMargin,
-    // same reference-anchored deciles (quantile_cont = Spark percentile),
-    // same +0.5 smoothing, DECIMAL term sum
-    "q112_psi_drift" ->
-      """WITH ref AS (
-        |  SELECT value AS v FROM events
-        |  WHERE CAST(ts AS DATE) <= DATE '2024-01-15' AND value IS NOT NULL),
-        |cur AS (
-        |  SELECT value AS v FROM events
-        |  WHERE CAST(ts AS DATE) > DATE '2024-01-15' AND value IS NOT NULL),
-        |cuts AS (
-        |  SELECT quantile_cont(v, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
-        |  FROM ref),
-        |rb AS (SELECT 1 + (CASE WHEN v > c[1] THEN 1 ELSE 0 END) + (CASE WHEN v > c[2] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[3] THEN 1 ELSE 0 END) + (CASE WHEN v > c[4] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[5] THEN 1 ELSE 0 END) + (CASE WHEN v > c[6] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[7] THEN 1 ELSE 0 END) + (CASE WHEN v > c[8] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[9] THEN 1 ELSE 0 END) AS bin FROM ref CROSS JOIN cuts),
-        |cb AS (SELECT 1 + (CASE WHEN v > c[1] THEN 1 ELSE 0 END) + (CASE WHEN v > c[2] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[3] THEN 1 ELSE 0 END) + (CASE WHEN v > c[4] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[5] THEN 1 ELSE 0 END) + (CASE WHEN v > c[6] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[7] THEN 1 ELSE 0 END) + (CASE WHEN v > c[8] THEN 1 ELSE 0 END)
-        |      + (CASE WHEN v > c[9] THEN 1 ELSE 0 END) AS bin FROM cur CROSS JOIN cuts),
-        |rc AS (SELECT bin, count(*) AS c FROM rb GROUP BY bin),
-        |cc AS (SELECT bin, count(*) AS c FROM cb GROUP BY bin),
-        |nn AS (SELECT (SELECT count(*) FROM ref)::DOUBLE AS nref,
-        |              (SELECT count(*) FROM cur)::DOUBLE AS ncur),
-        |spine AS (SELECT CAST(unnest(range(1, 11)) AS INT) AS bin),
-        |terms AS (
-        |  SELECT CAST(((coalesce(rc.c, 0) + 0.5::DOUBLE) / (nref + 5.0::DOUBLE)
-        |         - (coalesce(cc.c, 0) + 0.5::DOUBLE) / (ncur + 5.0::DOUBLE))
-        |      * ln(((coalesce(rc.c, 0) + 0.5::DOUBLE) / (nref + 5.0::DOUBLE))
-        |         / ((coalesce(cc.c, 0) + 0.5::DOUBLE) / (ncur + 5.0::DOUBLE)))
-        |      AS DECIMAL(28,12)) AS t
-        |  FROM spine LEFT JOIN rc USING (bin) LEFT JOIN cc USING (bin) CROSS JOIN nn)
-        |SELECT round(CAST(sum(t) AS DOUBLE), 6) AS psi,
-        |  CAST((SELECT count(*) FROM ref) AS BIGINT) AS n_ref,
-        |  CAST((SELECT count(*) FROM cur) AS BIGINT) AS n_cur,
-        |  CAST(sum(t) AS DOUBLE) > 0.2 AS drifted
-        |FROM terms""".stripMargin,
-    // list_sum over stratum-ordered masses mirrors the engine's ordered
-    // driver-side sum; floor allocations capped at stratum size
-    "q110_neyman_sample" ->
-      """WITH stats AS (
-        |  SELECT o_orderpriority AS s, count(*) AS n,
-        |    sum(CAST(o_totalprice AS DECIMAL(38,8))) AS sx,
-        |    sum(CAST(CAST(o_totalprice AS DECIMAL(38,8))
-        |      * CAST(o_totalprice AS DECIMAL(38,8)) AS DECIMAL(38,8))) AS sxx
-        |  FROM orders GROUP BY 1),
-        |mass AS (
-        |  SELECT s, n,
-        |    n::DOUBLE * sqrt(greatest(0.0::DOUBLE,
-        |      (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-        |        / (n::DOUBLE * n::DOUBLE))) AS m
-        |  FROM stats),
-        |tot AS (SELECT list_sum(list(m ORDER BY s)) AS tm FROM mass),
-        |alloc AS (
-        |  SELECT s, least(n, CAST(floor(300 * m / tm) AS BIGINT)) AS nh
-        |  FROM mass CROSS JOIN tot),
-        |sel AS (
-        |  SELECT o_orderkey, o_orderpriority,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY ('0x' || substr(md5(o_orderkey::VARCHAR), 1, 8))::BIGINT % 1000000000,
-        |        o_orderkey) AS rank_in_stratum
-        |  FROM orders)
-        |SELECT o_orderkey, o_orderpriority, CAST(rank_in_stratum AS INT) AS rank_in_stratum
-        |FROM sel JOIN alloc ON sel.o_orderpriority = alloc.s
-        |WHERE rank_in_stratum <= nh ORDER BY o_orderkey""".stripMargin,
-    "q114_topk_else_other" ->
-      """WITH g AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc, count(*) AS m
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL
-        |  GROUP BY 1),
-        |top AS (SELECT doc FROM g ORDER BY m DESC, doc LIMIT 10)
-        |SELECT CASE WHEN doc IN (SELECT doc FROM top) THEN doc::VARCHAR
-        |            ELSE 'OTHER' END AS document_id,
-        |  CAST(sum(m) AS BIGINT) AS measure, count(*) AS n_groups
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the plain (unsalted) join: the salt must not change the result
-    "q115_salted_join" ->
-      """SELECT s_nationkey,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
-        | count(*) AS line_count
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the plain (unbucketed) join: the bucket layout must not change it
-    "q116_bucketed_join" ->
-      """SELECT o_orderpriority, sum(l_quantity) AS sum_qty,
-        | count(*) AS line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the per-group rank definition the distributed locator must reproduce
-    "q123_grouped_quantile" ->
-      """WITH v AS (
-        |  SELECT l_returnflag AS g, l_extendedprice::DOUBLE AS v FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL),
-        |n AS (SELECT g, count(*) AS n FROM v GROUP BY 1),
-        |r AS (SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn FROM v)
-        |SELECT r.g AS l_returnflag, 0.5::DOUBLE AS q, n.n AS n, r.v AS value
-        |FROM r JOIN n USING (g)
-        |WHERE rn = CAST(ceil(0.5 * n.n) AS BIGINT)
-        |ORDER BY l_returnflag""".stripMargin,
-    // percentile(array) == quantile_cont(list) parity (q68/q112 recipe)
-    "q126_winsorized_scale" ->
-      """WITH cuts AS (
-        |  SELECT quantile_cont(o_totalprice::DOUBLE, [0.05, 0.95]) AS c FROM orders),
-        |d AS (
-        |  SELECT o_orderkey, o_totalprice::DOUBLE AS value, c[1] AS lo, c[2] AS hi
-        |  FROM orders CROSS JOIN cuts WHERE o_totalprice IS NOT NULL)
-        |SELECT o_orderkey, value,
-        |  round(least(greatest(value, lo), hi), 6) AS clipped,
-        |  CASE WHEN hi = lo THEN 0.5::DOUBLE
-        |       ELSE round((least(greatest(value, lo), hi) - lo) / (hi - lo), 6) END AS scaled
-        |FROM d ORDER BY o_orderkey""".stripMargin,
-    // q76's frame sampling + md5 chunk hashes -> distinct-set jaccard
-    "q125_chunk_overlap" ->
-      """WITH c AS (SELECT doc_id, text,
-        |  CAST(ceil(octet_length(encode(text)) / 64.0) AS INT) AS n_chunks FROM documents),
-        |f AS (
-        |  SELECT DISTINCT doc_id, md5(substring(text, frame_idx * 64 + 1, 64)) AS h
-        |  FROM (SELECT doc_id, CAST(unnest(list_filter(range(0, n_chunks), i -> i % 4 = 0)) AS INT) AS frame_idx, text
-        |        FROM c WHERE n_chunks > 0)),
-        |sz AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
-        |common AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS c
-        |  FROM f x JOIN f y ON x.h = y.h AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, c AS n_shared,
-        |  round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard
-        |FROM common JOIN sz sa ON doc_a = sa.doc_id JOIN sz sb ON doc_b = sb.doc_id
-        |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q124_bpe_merge_pairs" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS w
-        |  FROM documents),
-        |words AS (SELECT w, count(*) AS freq FROM toks WHERE w <> '' GROUP BY 1),
-        |pairs AS (
-        |  SELECT substring(w, CAST(pi + 1 AS INT), 2) AS pair, freq
-        |  FROM (SELECT w, freq, unnest(range(length(w) - 1)) AS pi
-        |        FROM words WHERE length(w) >= 2))
-        |SELECT pair, count(*) AS n_words, CAST(sum(freq) AS BIGINT) AS total_count
-        |FROM pairs GROUP BY 1
-        |ORDER BY total_count DESC, pair LIMIT 20""".stripMargin,
-    // the brute-force rank definition the two-pass trick must reproduce
-    "q109_exact_quantile" ->
-      """WITH v AS (
-        |  SELECT l_extendedprice::DOUBLE AS v FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL),
-        |n AS (SELECT count(*) AS n FROM v),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
-        |SELECT 0.5::DOUBLE AS q, n.n AS n, r.v AS value
-        |FROM r CROSS JOIN n
-        |WHERE rn = CAST(ceil(0.5 * n.n) AS BIGINT)""".stripMargin,
-    // two Lloyd rounds unrolled: assign (rn over (d2, cluster)) -> DECIMAL
-    // centroid means -> assign -> means -> final assignment; empty clusters
-    // fall back to their previous centroid via the UNION ALL
-    "q108_kmeans" ->
-      s"""WITH $kmeansAsgCtes
-        |SELECT vec_id, cluster, round(d2, 6) AS dist2 FROM asg
-        |ORDER BY vec_id""".stripMargin,
-    "q106_hashed_features" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS tok
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id,
-        |    ('0x' || substr(md5('i|' || tok), 1, 15))::BIGINT % 256 AS feature_idx,
-        |    CASE WHEN ('0x' || substr(md5('s|' || tok), 1, 15))::BIGINT % 2 = 0
-        |         THEN 1 ELSE -1 END AS sign
-        |  FROM toks WHERE tok <> '')
-        |SELECT doc_id, feature_idx, CAST(sum(sign) AS BIGINT) AS weight
-        |FROM f GROUP BY 1, 2 HAVING sum(sign) <> 0
-        |ORDER BY doc_id, feature_idx""".stripMargin,
-    "q107_loo_target_encode" ->
-      """WITH stats AS (
-        |  SELECT o_orderpriority,
-        |    sum(CAST(o_totalprice AS DECIMAL(28,8))) AS sy, count(*) AS n
-        |  FROM orders GROUP BY 1)
-        |SELECT o_orderkey, o_orderpriority, o_totalprice,
-        |  CASE WHEN n > 1 THEN
-        |    round((sy::DOUBLE - o_totalprice::DOUBLE) / (n - 1)::DOUBLE, 6) END AS loo_mean
-        |FROM orders JOIN stats USING (o_orderpriority)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q104_adamic_adar" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
-        |  WHERE a.doc < b.doc GROUP BY 1, 2),
-        |sym AS (
-        |  SELECT src AS w, dst AS n FROM ce
-        |  UNION SELECT dst AS w, src AS n FROM ce),
-        |deg AS (SELECT w, count(*) AS deg FROM sym GROUP BY w),
-        |weighted AS (
-        |  SELECT sym.w, sym.n,
-        |    CASE WHEN deg >= 2 THEN CAST(1.0::DOUBLE / ln(deg::DOUBLE) AS DECIMAL(28,12)) END AS contrib
-        |  FROM sym JOIN deg USING (w))
-        |SELECT a.n AS u, b.n AS v, count(*) AS common_neighbors,
-        |  round(CAST(sum(a.contrib) AS DOUBLE), 6) AS aa_score
-        |FROM weighted a JOIN weighted b ON a.w = b.w AND a.n < b.n
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // item counts come from ALL sessions, edge counts from hub-filtered
-    // ones — mirroring the engine's exact frame lineage
-    "q105_pmi_pairs" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst, count(*) AS weight
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
-        |  WHERE a.doc < b.doc GROUP BY 1, 2
-        |  HAVING count(*) >= 2),
-        |nk AS (SELECT count(DISTINCT sid)::DOUBLE AS n FROM clicks),
-        |ci AS (SELECT doc, count(*) AS c FROM clicks GROUP BY doc)
-        |SELECT src AS u, dst AS v, weight AS c_uv,
-        |  round(ln(n * weight::DOUBLE / (cu.c::DOUBLE * cv.c::DOUBLE)), 6) AS pmi
-        |FROM ce JOIN ci cu ON ce.src = cu.doc JOIN ci cv ON ce.dst = cv.doc
-        |CROSS JOIN nk ORDER BY 1, 2""".stripMargin,
-    // floor(epoch) on both sides: Spark's unix_timestamp truncates seconds,
-    // DuckDB's epoch() keeps fractions
-    "q102_decayed_popularity" ->
-      """WITH c AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS document_id, CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |w AS (
-        |  SELECT document_id,
-        |    CAST(pow(0.5::DOUBLE,
-        |      ((epoch(TIMESTAMP '2024-02-01 00:00:00')::BIGINT
-        |        - floor(epoch(ts))::BIGINT)::DOUBLE / 86400.0) / 7.0::DOUBLE)
-        |      AS DECIMAL(28,12)) AS wt
-        |  FROM c)
-        |SELECT document_id, round(CAST(sum(wt) AS DOUBLE), 4) AS score,
-        |  count(*) AS n_events
-        |FROM w GROUP BY document_id ORDER BY document_id""".stripMargin,
-    // x and y are integral, so the DECIMAL(28,6) products are exact - no
-    // rounding ambiguity between engines in the accumulators
-    "q103_trend_slopes" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |xy AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('day', DATE '2024-01-01', day) AS DECIMAL(28,6)) AS x,
-        |    CAST(n AS DECIMAL(28,6)) AS y
-        |  FROM daily),
-        |agg AS (
-        |  SELECT event_type, count(*) AS n,
-        |    sum(x) AS sx, sum(y) AS sy,
-        |    sum(CAST(x * y AS DECIMAL(28,6))) AS sxy,
-        |    sum(CAST(x * x AS DECIMAL(28,6))) AS sxx
-        |  FROM xy GROUP BY event_type)
-        |SELECT event_type, n,
-        |  CASE WHEN n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE <> 0.0 THEN
-        |    round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |      / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE), 6) END AS slope,
-        |  CASE WHEN n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE <> 0.0 THEN
-        |    round((sy::DOUBLE - ((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |      / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)) * sx::DOUBLE)
-        |      / n::DOUBLE, 6) END AS intercept
-        |FROM agg ORDER BY event_type""".stripMargin,
-    // exact all-pairs jaccard — deliberately NO prefix filter here: the
-    // engine's pruned join must reproduce the unpruned truth bit-for-bit
-    "q101_prefix_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |pairs AS (
-        |  SELECT a.id AS doc_a, b.id AS doc_b,
-        |    round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |  FROM sets a JOIN sets b ON a.id < b.id)
-        |SELECT doc_a, doc_b, jaccard FROM pairs
-        |WHERE jaccard >= 0.6 ORDER BY doc_a, doc_b""".stripMargin,
-    "q100_peak_concurrency" ->
-      """WITH iv AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    min(CAST(ts AS TIMESTAMP)) AS s, max(CAST(ts AS TIMESTAMP)) AS e
-        |  FROM events GROUP BY 1, 2),
-        |ev AS (
-        |  SELECT day, s AS ts, 1 AS delta FROM iv
-        |  UNION ALL SELECT day, e AS ts, -1 AS delta FROM iv),
-        |run AS (
-        |  SELECT day, sum(delta) OVER (PARTITION BY day ORDER BY ts, delta
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS live
-        |  FROM ev)
-        |SELECT day, CAST(max(live) AS BIGINT) AS max_concurrent
-        |FROM run GROUP BY day ORDER BY day""".stripMargin,
-    // rebuilds the identical depth×width grid (same salted md5 hash) and
-    // takes the same min-of-cells estimate
-    "q99_countmin" ->
-      """WITH grid AS (
-        |  SELECT r AS row,
-        |    ('0x' || substr(md5(r::VARCHAR || '|' || user_id::VARCHAR), 1, 15))::BIGINT % 256 AS bucket
-        |  FROM events CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(r)),
-        |sketch AS (SELECT row, bucket, count(*) AS c FROM grid GROUP BY 1, 2),
-        |probes AS (SELECT DISTINCT user_id AS key FROM events WHERE user_id % 10 = 0),
-        |cells AS (
-        |  SELECT key, r AS row,
-        |    ('0x' || substr(md5(r::VARCHAR || '|' || key::VARCHAR), 1, 15))::BIGINT % 256 AS bucket
-        |  FROM probes CROSS JOIN (VALUES (0), (1), (2), (3)) AS t(r))
-        |SELECT key, CAST(min(coalesce(c, 0)) AS BIGINT) AS est_count
-        |FROM cells LEFT JOIN sketch USING (row, bucket)
-        |GROUP BY key ORDER BY key""".stripMargin,
-    // q34's bit-exact simhash rebuild over the decoded fake media (decode ∘
-    // encode = identity, so the pHash equals the text simhash); null media
-    // rows drop, matching the engine's flatMap
-    "q98_phash_neardups" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |hs AS (SELECT doc_id, list_transform(t, s -> substring(md5(s), 1, 16)) AS h FROM toks),
-        |bits AS (
-        |  SELECT doc_id,
-        |    list_transform(range(64), b ->
-        |      CASE WHEN list_sum(list_transform(h, x ->
-        |        CASE WHEN (((instr('0123456789abcdef', substring(x, CAST(16 - b // 4 AS INT), 1)) - 1) >> (b % 4)) & 1) = 1
-        |             THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) AS bv
-        |  FROM hs),
-        |bands AS (
-        |  SELECT doc_id, bb AS band_id,
-        |    CAST(list_sum(list_transform(range(16), j -> bv[CAST(bb*16 + j + 1 AS INT)] << j)) AS BIGINT) AS band_key
-        |  FROM bits CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(bb)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |ham AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(list_sum(list_transform(range(64), i ->
-        |      CASE WHEN xa.bv[CAST(i + 1 AS INT)] <> yb.bv[CAST(i + 1 AS INT)] THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-        |  FROM cand JOIN bits xa ON doc_a = xa.doc_id JOIN bits yb ON doc_b = yb.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= 6
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q96_ab_test" ->
-      """WITH per_unit AS (
-        |  SELECT user_id,
-        |    max(CASE WHEN event_type = 'purchase' AND value > 180 THEN 1 ELSE 0 END) AS converted
-        |  FROM events GROUP BY user_id),
-        |armed AS (
-        |  SELECT converted,
-        |    CASE WHEN ('0x' || substr(md5(user_id::VARCHAR), 1, 1))::BIGINT % 2 = 0
-        |         THEN 'A' ELSE 'B' END AS arm
-        |  FROM per_unit),
-        |arms AS (SELECT arm, count(*) AS n, sum(converted) AS conv
-        |         FROM armed GROUP BY arm),
-        |wide AS (SELECT
-        |  CAST(max(CASE WHEN arm = 'A' THEN n END) AS BIGINT) AS n_a,
-        |  CAST(max(CASE WHEN arm = 'A' THEN conv END) AS BIGINT) AS conv_a,
-        |  CAST(max(CASE WHEN arm = 'B' THEN n END) AS BIGINT) AS n_b,
-        |  CAST(max(CASE WHEN arm = 'B' THEN conv END) AS BIGINT) AS conv_b
-        |  FROM arms)
-        |SELECT n_a, conv_a, n_b, conv_b,
-        |  round(conv_a::DOUBLE / n_a::DOUBLE, 4) AS rate_a,
-        |  round(conv_b::DOUBLE / n_b::DOUBLE, 4) AS rate_b,
-        |  round((conv_a::DOUBLE / n_a::DOUBLE - conv_b::DOUBLE / n_b::DOUBLE)
-        |    / sqrt(((conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |      * (1.0::DOUBLE - (conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |      * (1.0::DOUBLE / n_a::DOUBLE + 1.0::DOUBLE / n_b::DOUBLE)), 4) AS z_score,
-        |  abs((conv_a::DOUBLE / n_a::DOUBLE - conv_b::DOUBLE / n_b::DOUBLE)
-        |    / sqrt(((conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |      * (1.0::DOUBLE - (conv_a + conv_b)::DOUBLE / (n_a + n_b)::DOUBLE)
-        |      * (1.0::DOUBLE / n_a::DOUBLE + 1.0::DOUBLE / n_b::DOUBLE))) > 1.96
-        |    AS significant
-        |FROM wide""".stripMargin,
-    "q97_chi_square" ->
-      """WITH obs AS (
-        |  SELECT lang AS a, source AS b, count(*) AS o
-        |  FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(o) AS ra FROM obs GROUP BY a),
-        |cb AS (SELECT b, sum(o) AS cb FROM obs GROUP BY b),
-        |nn AS (SELECT sum(o)::DOUBLE AS n FROM obs),
-        |cells AS (
-        |  SELECT coalesce(o, 0) AS o, ra::DOUBLE * cb::DOUBLE / n AS e
-        |  FROM ra CROSS JOIN cb LEFT JOIN obs USING (a, b) CROSS JOIN nn),
-        |terms AS (
-        |  SELECT CAST((o::DOUBLE - e) * (o::DOUBLE - e) / e AS DECIMAL(28,12)) AS t
-        |  FROM cells)
-        |SELECT round(CAST(sum(t) AS DOUBLE), 4) AS chi2,
-        |  CAST(((SELECT count(*) FROM ra) - 1) * ((SELECT count(*) FROM cb) - 1) AS INT) AS dof,
-        |  count(*) AS n_cells
-        |FROM terms""".stripMargin,
-    // H = log2(n) − (Σ c·log2 c)/n with the sum in DECIMAL(28,12) exactly
-    // like the engine; n_tokens cast to BIGINT (DuckDB sum() is HUGEINT)
-    "q94_token_entropy" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS tok
-        |  FROM documents),
-        |counts AS (
-        |  SELECT doc_id, tok, count(*) AS c FROM toks WHERE tok <> ''
-        |  GROUP BY doc_id, tok),
-        |agg AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    count(*) AS n_distinct,
-        |    sum(CAST(c::DOUBLE * log2(c::DOUBLE) AS DECIMAL(28,12))) AS clogc
-        |  FROM counts GROUP BY doc_id)
-        |SELECT doc_id, n_tokens, n_distinct,
-        |  round(log2(n_tokens::DOUBLE) - clogc::DOUBLE / n_tokens::DOUBLE, 4)
-        |    AS token_entropy
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    // rank by (n_tok desc, doc_id) = the engine's distributed order; the
-    // oracle can afford the single-node window the engine avoids
-    "q95_batch_packing" ->
-      """WITH sized AS (
-        |  SELECT doc_id,
-        |    coalesce(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')), 0) AS n_tok
-        |  FROM documents),
-        |ranked AS (
-        |  SELECT n_tok,
-        |    row_number() OVER (ORDER BY n_tok DESC, doc_id) AS rnk
-        |  FROM sized),
-        |batches AS (
-        |  SELECT CAST(floor((rnk - 1) / 16.0) AS INT) AS batch_id, n_tok FROM ranked)
-        |SELECT batch_id, count(*) AS n_docs, max(n_tok) AS max_tokens,
-        |  CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-        |  CASE WHEN max(n_tok) > 0
-        |    THEN round(1.0::DOUBLE - CAST(sum(n_tok) AS DOUBLE) /
-        |      (count(*) * max(n_tok))::DOUBLE, 4)
-        |    ELSE 0.0::DOUBLE END AS padding_frac
-        |FROM batches GROUP BY batch_id ORDER BY batch_id""".stripMargin,
-    // same interleave spelled out in SQL bit arithmetic (10 bits per axis)
-    "q93_zorder_key" -> {
-      val terms = (0 until 10).map(i =>
-        s"((((x >> $i) & 1) << ${2 * i}) | (((y >> $i) & 1) << ${2 * i + 1}))")
-        .mkString(" | ")
-      s"""SELECT o_orderkey, CAST($terms AS BIGINT) AS zkey
-         |FROM (SELECT o_orderkey, o_custkey & 1023 AS x, o_orderkey & 1023 AS y
-         |      FROM orders)
-         |ORDER BY o_orderkey""".stripMargin
-    },
-    "q92_record_linkage" ->
-      """WITH side AS (
-        |  SELECT p_partkey, p_name, p_size, p_type, p_brand,
-        |    string_split(p_name, ' ')[1] AS tok1
-        |  FROM part),
-        |pairs AS (
-        |  SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |    (a.p_size = b.p_size)::INT AS agree_p_size,
-        |    (a.p_type = b.p_type)::INT AS agree_p_type,
-        |    levenshtein(a.p_name, b.p_name) AS lev
-        |  FROM side a JOIN side b
-        |    ON a.p_brand = b.p_brand AND a.tok1 = b.tok1
-        |   AND a.p_partkey < b.p_partkey),
-        |sc AS (
-        |  SELECT id_a, id_b, agree_p_size, agree_p_type,
-        |    CASE WHEN lev <= 3 THEN lev END AS name_distance,
-        |    round((CASE WHEN agree_p_size = 1 THEN 2.0 ELSE -1.0 END
-        |        + CASE WHEN agree_p_type = 1 THEN 3.0 ELSE -1.0 END
-        |        + CASE WHEN lev <= 3 THEN 4.0 ELSE -2.0 END)::DOUBLE, 4) AS score
-        |  FROM pairs)
-        |SELECT id_a, id_b, agree_p_size, agree_p_type,
-        |  CAST(name_distance AS INT) AS name_distance, score
-        |FROM sc WHERE score >= 5.0 ORDER BY id_a, id_b""".stripMargin,
-    "q90_bloom_semijoin" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem l
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_orderkey = l.l_orderkey AND o.o_totalprice > 400000)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    // dominance semantics spelled out: >= / <= both axes, strict on one;
-    // the engine's sweep formulation must agree with this definition exactly
-    "q91_pareto_frontier" ->
-      """SELECT p_partkey, p_size, p_retailprice
-        |FROM part p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM part q
-        |  WHERE q.p_size >= p.p_size AND q.p_retailprice <= p.p_retailprice
-        |    AND (q.p_size > p.p_size OR q.p_retailprice < p.p_retailprice))
-        |ORDER BY p_partkey""".stripMargin,
-    "q87_activity_streaks" ->
-      """WITH active AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |x AS (SELECT user_id, day,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
-        |      FROM active)
-        |SELECT user_id, min(day) AS streak_start, max(day) AS streak_end,
-        |  count(*) AS len_days
-        |FROM (SELECT user_id, day, day - rn::INTEGER AS grp FROM x)
-        |GROUP BY user_id, grp ORDER BY user_id, streak_start""".stripMargin,
-    // ::DOUBLE casts force IEEE arithmetic (DuckDB decimal literals would
-    // otherwise compute 1-0.3 exactly and diverge from the engine's doubles)
-    "q88_ewma_traffic" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |x AS (SELECT event_type, day, n,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |      FROM daily)
-        |SELECT event_type, day, n,
-        |  round(sum(n * pow(1.0::DOUBLE / (1.0::DOUBLE - 0.3::DOUBLE), rn)) OVER w
-        |        / sum(pow(1.0::DOUBLE / (1.0::DOUBLE - 0.3::DOUBLE), rn)) OVER w, 4) AS ewma
-        |FROM x
-        |WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |             ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, day""".stripMargin,
-    "q89_level_shifts" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |x AS (SELECT event_type, day, n,
-        |  count(*) OVER a AS na, count(*) OVER b AS nb,
-        |  round(avg(n) OVER b, 4) AS before_mean, round(avg(n) OVER a, 4) AS after_mean
-        |  FROM daily
-        |  WINDOW a AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING),
-        |         b AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, day, n, before_mean, after_mean,
-        |  round(after_mean - before_mean, 4) AS shift
-        |FROM x
-        |WHERE na = 7 AND nb = 7 AND abs(round(after_mean - before_mean, 4)) > 5
-        |ORDER BY event_type, day""".stripMargin,
-    // q86's recursive BFS, then sum 1/d per node in DECIMAL
-    "q113_harmonic_centrality" ->
-      """WITH RECURSIVE clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
-        |  WHERE a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (
-        |  SELECT src AS u, dst AS v FROM ce
-        |  UNION SELECT dst AS u, src AS v FROM ce),
-        |walk(id, landmark, d) AS (
-        |  SELECT DISTINCT u, u, 0 FROM sym WHERE u IN (1, 2, 3, 4, 5)
-        |  UNION
-        |  SELECT e.v, w.landmark, w.d + 1
-        |  FROM walk w JOIN sym e ON e.u = w.id WHERE w.d < 4),
-        |dist AS (SELECT id, landmark, min(d) AS d FROM walk GROUP BY 1, 2)
-        |SELECT id AS document_id, count(*) AS n_landmarks_reached,
-        |  round(CAST(sum(CAST(1.0::DOUBLE / d::DOUBLE AS DECIMAL(28,12))) AS DOUBLE), 6)
-        |    AS harmonic
-        |FROM dist WHERE d > 0
-        |GROUP BY id ORDER BY id""".stripMargin,
-    // BFS as a bounded recursive CTE: distinct-union recursion terminates at
-    // the hop bound, min(d) collapses multiple paths exactly like the
-    // engine's per-round min-aggregate
-    "q86_shortest_paths" ->
-      """WITH RECURSIVE clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b USING (sid)
-        |  WHERE a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (
-        |  SELECT src AS u, dst AS v FROM ce
-        |  UNION SELECT dst AS u, src AS v FROM ce),
-        |walk(id, landmark, d) AS (
-        |  SELECT DISTINCT u, u, 0 FROM sym WHERE u IN (1, 2, 3)
-        |  UNION
-        |  SELECT e.v, w.landmark, w.d + 1
-        |  FROM walk w JOIN sym e ON e.u = w.id WHERE w.d < 4)
-        |SELECT id AS document_id, landmark, CAST(min(d) AS BIGINT) AS dist
-        |FROM walk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // replicates the bottom-64 KMV sketch bit-for-bit: same 60-bit md5 hash,
-    // same (k-1)/U(k) estimator, exact below k distinct values
-    // HLL registers rebuilt from the same md5 hex: bucket = first 2 chars
-    // mod 64, rho = leading-zero chars + nibble CASE (never log2-of-double)
-    "q130_hll_distinct" ->
-      """WITH h AS (
-        |  SELECT event_type, md5(user_id::VARCHAR) AS hex FROM events),
-        |t AS (
-        |  SELECT event_type,
-        |    CAST(('0x' || substring(hex, 1, 2))::BIGINT % 64 AS INT) AS bucket,
-        |    substring(hex, 3, 13) AS tail,
-        |    length(regexp_extract(substring(hex, 3, 13), '^(0*)', 1)) AS z
-        |  FROM h),
-        |rr AS (
-        |  SELECT event_type, bucket,
-        |    CASE WHEN z = 13 THEN 53
-        |         ELSE 4 * z + CASE WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 8 THEN 1
-        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 4 THEN 2
-        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 2 THEN 3
-        |                           ELSE 4 END
-        |    END AS rho
-        |  FROM t),
-        |regs AS (SELECT event_type, bucket, max(rho) AS reg FROM rr GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT event_type, count(*) AS used,
-        |    sum(CAST(pow(2.0, -reg) AS DECIMAL(38,30))) AS s_present
-        |  FROM regs GROUP BY 1),
-        |fin AS (
-        |  SELECT event_type,
-        |    CAST(s_present AS DOUBLE) + (64 - used) AS s,
-        |    64 - used AS v
-        |  FROM agg)
-        |SELECT event_type,
-        |  round(CASE WHEN (0.709::DOUBLE * 64 * 64) / s <= 160 AND v > 0
-        |             THEN 64.0::DOUBLE * ln(64.0::DOUBLE / v)
-        |             ELSE (0.709::DOUBLE * 64 * 64) / s END, 4) AS est_distinct
-        |FROM fin ORDER BY event_type""".stripMargin,
-    "q84_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, hv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-        |  FROM h),
-        |s AS (
-        |  SELECT event_type, count(*) AS n, max(hv) AS kth
-        |  FROM r WHERE rn <= 64 GROUP BY event_type)
-        |SELECT event_type,
-        |  CASE WHEN n < 64 THEN round(n::DOUBLE, 4)
-        |       ELSE round(63 * 1152921504606846976.0 / kth, 4) END AS est_distinct
-        |FROM s ORDER BY event_type""".stripMargin,
-    // union-of-days sketch == sketch of the union, so the oracle can skip
-    // the per-day stage and take bottom-64 over all distinct user hashes
-    "q85_kmv_union" ->
-      """WITH h AS (
-        |  SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM events),
-        |r AS (SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM h),
-        |s AS (SELECT count(*) AS n, max(hv) AS kth FROM r WHERE rn <= 64)
-        |SELECT CASE WHEN n < 64 THEN round(n::DOUBLE, 4)
-        |            ELSE round(63 * 1152921504606846976.0 / kth, 4) END AS est_distinct
-        |FROM s""".stripMargin,
-    "q69_sliding_traffic" ->
-      """WITH e AS (
-        |  SELECT CAST(ts AS TIMESTAMP) AS ts, CAST(user_id AS VARCHAR) AS session_id FROM events),
-        |x AS (SELECT ts, session_id, unnest(range(2)) AS k FROM e),
-        |w AS (
-        |  SELECT time_bucket(INTERVAL 5 minutes, ts) - k * INTERVAL 5 minutes AS window_start,
-        |    session_id
-        |  FROM x)
-        |SELECT window_start, window_start + INTERVAL 10 minutes AS window_end,
-        |  count(*) AS total_clicks, count(DISTINCT session_id) AS unique_sessions
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q65_rank_analytics" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |  CAST(dense_rank() OVER w AS INT) AS price_dense_rank,
-        |  round(percent_rank() OVER w, 6) AS price_percent_rank,
-        |  round(cume_dist() OVER w, 6) AS price_cume_dist
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q44_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000) <
-        |  CASE WHEN lang = 'en' THEN 5000 WHEN lang = 'de' THEN 2500 ELSE 1000 END
-        |ORDER BY doc_id""".stripMargin,
-    // same tokenization/shingling as q32; counts keep repeats (total_count)
-    // while doc_freq is per-document distinct
-    "q45_top_ngrams" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT id, unnest(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS ngram
-        |  FROM toks WHERE len(t) >= 3)
-        |SELECT ngram, count(DISTINCT id) AS doc_freq, count(*) AS total_count
-        |FROM sh GROUP BY 1
-        |ORDER BY doc_freq DESC, total_count DESC, ngram
-        |LIMIT 20""".stripMargin,
-    "q50_contamination" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(t) >= 3
-        |      THEN list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))
-        |      ELSE [] END AS grams
-        |  FROM toks),
-        |ev AS (SELECT DISTINCT unnest(grams) AS ngram FROM sh WHERE doc_id % 10 = 0),
-        |corpus AS (SELECT doc_id, grams FROM sh WHERE doc_id % 10 <> 0),
-        |dn AS (SELECT doc_id, unnest(grams) AS ngram FROM corpus),
-        |hits AS (SELECT dn.doc_id, count(*) AS n_contaminated
-        |         FROM dn JOIN ev USING (ngram) GROUP BY 1)
-        |SELECT c.doc_id, len(c.grams) AS n_ngrams,
-        |  COALESCE(h.n_contaminated, 0) AS n_contaminated,
-        |  round(CASE WHEN len(c.grams) > 0
-        |    THEN CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / len(c.grams)
-        |    ELSE 0.0 END, 4) AS contamination_ratio,
-        |  round(CASE WHEN len(c.grams) > 0
-        |    THEN CAST(COALESCE(h.n_contaminated, 0) AS DOUBLE) / len(c.grams)
-        |    ELSE 0.0 END, 4) >= 0.2 AS is_contaminated
-        |FROM corpus c LEFT JOIN hits h ON c.doc_id = h.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-    "q51_pii_scrub" ->
-      """WITH d AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 3 = 0 THEN ' reach me at user' || doc_id || '@example.com' ELSE '' END
-        |    || CASE WHEN doc_id % 5 = 0 THEN ' call 010-1234-5678' ELSE '' END
-        |    || CASE WHEN doc_id % 7 = 0 THEN ' from host 10.0.0.' || (doc_id % 256) ELSE '' END AS text
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |    len(regexp_extract_all(text, '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b')) AS n_phones,
-        |    len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
-        |    regexp_replace(regexp_replace(regexp_replace(text,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |        '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g'),
-        |        '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS scrubbed_text
-        |  FROM d)
-        |SELECT doc_id, n_emails, n_phones, n_ips, scrubbed_text,
-        |  (n_emails + n_phones + n_ips) > 0 AS has_pii
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q52_sentence_dedup" ->
-      """WITH d AS (SELECT doc_id, string_split(text, '. ') AS l FROM documents),
-        |e AS (SELECT doc_id, l, unnest(range(len(l))) AS pos FROM d),
-        |s AS (SELECT doc_id, CAST(pos AS BIGINT) AS pos, l[CAST(pos + 1 AS INT)] AS sentence FROM e),
-        |s2 AS (
-        |  SELECT doc_id, pos, sentence,
-        |    trim(regexp_replace(regexp_replace(lower(sentence), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS k
-        |  FROM s),
-        |s3 AS (SELECT * FROM s2 WHERE k <> ''),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY k ORDER BY doc_id, pos) AS rn FROM s3),
-        |kept AS (SELECT doc_id, pos, sentence FROM r WHERE rn = 1),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_kept,
-        |    string_agg(sentence, '. ' ORDER BY pos) AS deduped_text
-        |  FROM kept GROUP BY doc_id),
-        |tot AS (SELECT doc_id, count(*) AS n_sentences FROM s3 GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(t.n_sentences, 0) AS n_sentences,
-        |  COALESCE(a.n_kept, 0) AS n_kept, COALESCE(a.deduped_text, '') AS deduped_text
-        |FROM d
-        |LEFT JOIN tot t ON d.doc_id = t.doc_id
-        |LEFT JOIN agg a ON d.doc_id = a.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "q21_lang_id" ->
-      """WITH t AS (
-        |  SELECT lang AS lang_label,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT lang_label,
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to','is'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','y','es','que'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','et','est','une','pas'))) AS s_fr
-        |  FROM t),
-        |g AS (
-        |  SELECT lang_label,
-        |    CASE WHEN s_en = 0 AND s_de = 0 AND s_es = 0 AND s_fr = 0 THEN 'unknown'
-        |         WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr THEN 'en'
-        |         WHEN s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |         WHEN s_es >= s_fr THEN 'es'
-        |         ELSE 'fr' END AS guessed_lang
-        |  FROM s)
-        |SELECT lang_label, guessed_lang, count(*) AS n_docs
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q22_fingerprints" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS norm
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM t)
-        |SELECT doc_id, md5(norm) AS fingerprint,
-        |  md5(array_to_string(list_sort(list_transform(
-        |        CASE WHEN len(toks) >= 3
-        |             THEN list_transform(range(len(toks) - 2), i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])
-        |             ELSE [] END,
-        |        s -> md5(s)))[1:8], ',')) AS robust_fingerprint
-        |FROM sh ORDER BY doc_id""".stripMargin,
-    "q29_converting_user_days" ->
-      """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date
-        |FROM events WHERE event_type = 'purchase'
-        |UNION
-        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'signup'
-        |ORDER BY session_id, event_date""".stripMargin,
-    "q28_user_event_analytics" ->
-      """SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
-        | CAST(ts AS TIMESTAMP) AS event_ts, event_type,
-        | lead(event_type) OVER w AS next_event_type,
-        | first_value(event_type) OVER w AS first_event_type,
-        | date_diff('second', CAST(ts AS TIMESTAMP), lead(CAST(ts AS TIMESTAMP)) OVER w) AS gap_to_next_sec,
-        | ntile(4) OVER w AS session_quartile
-        |FROM events
-        |WINDOW w AS (PARTITION BY CAST(user_id AS VARCHAR) ORDER BY CAST(ts AS TIMESTAMP), event_id)
-        |ORDER BY event_id""".stripMargin,
-    "q26_cohort_set_ops" ->
-      """SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS DATE) AS event_date
-        |FROM events WHERE event_type = 'purchase'
-        |INTERSECT
-        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'click'
-        |EXCEPT
-        |SELECT CAST(user_id AS VARCHAR), CAST(ts AS DATE) FROM events WHERE event_type = 'error'
-        |ORDER BY session_id, event_date""".stripMargin,
-    "q23_value_percentiles" ->
-      """SELECT event_type,
-        | round(quantile_cont(value, 0.25), 6) AS p25,
-        | round(quantile_cont(value, 0.50), 6) AS p50,
-        | round(quantile_cont(value, 0.95), 6) AS p95,
-        | count(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q24_revenue_rollup" ->
-      """SELECT r_name AS region_name, n_name AS nation_name,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))), 2) AS DOUBLE) AS revenue,
-        | count(*) AS line_count
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY region_name ASC NULLS FIRST, nation_name ASC NULLS FIRST""".stripMargin,
-    "q25_daily_type_pivot" ->
-      """SELECT CAST(ts AS DATE) AS event_date,
-        | count(*) FILTER (WHERE event_type = 'click') AS click,
-        | count(*) FILTER (WHERE event_type = 'error') AS error,
-        | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        | count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        | count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q63_profile" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(12,2)) AS o_totalprice,
-        |    CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-        |  FROM orders)
-        |SELECT * FROM (
-        |  SELECT 'o_orderkey' AS column_name, count(*) - count(o_orderkey) AS n_nulls,
-        |    count(DISTINCT o_orderkey) AS n_distinct,
-        |    CAST(min(o_orderkey) AS VARCHAR) AS min_value, CAST(max(o_orderkey) AS VARCHAR) AS max_value FROM o
-        |  UNION ALL
-        |  SELECT 'o_custkey', count(*) - count(o_custkey), count(DISTINCT o_custkey),
-        |    CAST(min(o_custkey) AS VARCHAR), CAST(max(o_custkey) AS VARCHAR) FROM o
-        |  UNION ALL
-        |  SELECT 'o_orderstatus', count(*) - count(o_orderstatus), count(DISTINCT o_orderstatus),
-        |    CAST(min(o_orderstatus) AS VARCHAR), CAST(max(o_orderstatus) AS VARCHAR) FROM o
-        |  UNION ALL
-        |  SELECT 'o_totalprice', count(*) - count(o_totalprice), count(DISTINCT o_totalprice),
-        |    CAST(min(o_totalprice) AS VARCHAR), CAST(max(o_totalprice) AS VARCHAR) FROM o
-        |  UNION ALL
-        |  SELECT 'o_orderdate', count(*) - count(o_orderdate), count(DISTINCT o_orderdate),
-        |    CAST(min(o_orderdate) AS VARCHAR), CAST(max(o_orderdate) AS VARCHAR) FROM o
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', count(*) - count(o_orderpriority), count(DISTINCT o_orderpriority),
-        |    CAST(min(o_orderpriority) AS VARCHAR), CAST(max(o_orderpriority) AS VARCHAR) FROM o)
-        |ORDER BY column_name""".stripMargin,
-    "q62_mad_outliers" ->
-      """WITH e AS (SELECT event_id, event_type, value FROM events),
-        |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med FROM e GROUP BY 1),
-        |d AS (
-        |  SELECT e.event_type, e.event_id, e.value, m.med, abs(e.value - m.med) AS absdev
-        |  FROM e JOIN m ON e.event_type = m.event_type),
-        |md AS (SELECT event_type, quantile_cont(absdev, 0.5) AS mad FROM d GROUP BY 1)
-        |SELECT d.event_type, d.event_id, d.value,
-        |  round(d.med, 6) AS median, round(md.mad, 6) AS mad,
-        |  round(d.absdev / md.mad, 4) AS robust_z
-        |FROM d JOIN md ON d.event_type = md.event_type
-        |WHERE d.absdev > 6 * md.mad
-        |ORDER BY d.event_id""".stripMargin,
-    "q60_gap_fill" ->
-      """WITH daily AS (
-        |  SELECT n_name AS nation_name, CAST(o_orderdate AS DATE) AS day, count(*) AS n_orders
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE o_totalprice > 450000 GROUP BY 1, 2),
-        |b AS (SELECT nation_name, min(day) AS mn, max(day) AS mx FROM daily GROUP BY 1),
-        |spine AS (
-        |  SELECT nation_name,
-        |    CAST(unnest(generate_series(CAST(mn AS TIMESTAMP), CAST(mx AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM b),
-        |j AS (
-        |  SELECT s.nation_name, s.day, d.n_orders
-        |  FROM spine s LEFT JOIN daily d ON s.nation_name = d.nation_name AND s.day = d.day)
-        |SELECT nation_name, day, n_orders,
-        |  last_value(n_orders IGNORE NULLS) OVER (PARTITION BY nation_name ORDER BY day
-        |    ROWS UNBOUNDED PRECEDING) AS filled,
-        |  n_orders IS NULL AS is_filled
-        |FROM j ORDER BY nation_name, day""".stripMargin,
-    "q61_funnel" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS sid, event_type, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |s1 AS (SELECT sid, min(ts) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.sid, min(ts) AS t2 FROM e JOIN s1 ON e.sid = s1.sid
-        |  WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.sid, min(ts) AS t3 FROM e JOIN s2 ON e.sid = s2.sid
-        |  WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1)
-        |SELECT s1.sid AS session_id, t1, t2, t3
-        |FROM s1 LEFT JOIN s2 ON s1.sid = s2.sid LEFT JOIN s3 ON s1.sid = s3.sid
-        |ORDER BY session_id""".stripMargin,
-    "q58_fuzzy_match" ->
-      """SELECT a.p_brand, a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |  a.p_name AS str_a, b.p_name AS str_b,
-        |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS distance
-        |FROM part a JOIN part b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q70_fuzzy_match_blocked" ->
-      """SELECT a.p_brand, a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |  a.p_name AS str_a, b.p_name AS str_b,
-        |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS distance
-        |FROM part a JOIN part b
-        |  ON a.p_brand = b.p_brand
-        | AND split_part(a.p_name, ' ', 1) = split_part(b.p_name, ' ', 1)
-        | AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q59_melt_pivot" ->
-      """WITH c AS (
-        |  SELECT CAST(ts AS DATE) AS event_date, event_type, count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |d AS (SELECT DISTINCT CAST(ts AS DATE) AS event_date FROM events),
-        |t AS (SELECT unnest(['click', 'error', 'purchase', 'signup', 'view']) AS event_type)
-        |SELECT d.event_date, t.event_type, COALESCE(c.cnt, 0) AS cnt
-        |FROM d CROSS JOIN t
-        |LEFT JOIN c ON c.event_date = d.event_date AND c.event_type = t.event_type
-        |ORDER BY d.event_date, t.event_type""".stripMargin,
-    "q27_search_rank" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |stats AS (SELECT
-        |  (SELECT count(*) FROM documents) AS n,
-        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'spark')) AS df_spark,
-        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'query')) AS df_query,
-        |  (SELECT count(*) FROM toks WHERE list_contains(list_distinct(t), 'hash')) AS df_hash),
-        |scored AS (
-        |  SELECT doc_id,
-        |    round(
-        |      CAST(len(list_filter(t, x -> x = 'spark')) AS DOUBLE) * ((n - df_spark + 0.5) / (df_spark + 0.5))
-        |      + CAST(len(list_filter(t, x -> x = 'query')) AS DOUBLE) * ((n - df_query + 0.5) / (df_query + 0.5))
-        |      + CAST(len(list_filter(t, x -> x = 'hash')) AS DOUBLE) * ((n - df_hash + 0.5) / (df_hash + 0.5)), 4) AS score
-        |  FROM toks CROSS JOIN stats)
-        |SELECT doc_id, score FROM scored WHERE score > 0
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "q30_exact_dedup" ->
-      """SELECT md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS fingerprint,
-        | min(doc_id) AS keeper, count(*) AS n_dupes
-        |FROM documents GROUP BY 1 ORDER BY keeper""".stripMargin,
-    "q31_minhash_neardups" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |verified AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |  FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
-        |SELECT doc_a, doc_b, round(j, 4) AS jaccard
-        |FROM verified WHERE j >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-    // q31's md5 minhash/band pipeline with the candidate join restricted to
-    // the new/existing boundary (x new, y existing, no ordering constraint)
-    "q78_incremental_neardups" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS new_id, y.id AS existing_id
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-        |  WHERE x.id % 10 = 0 AND y.id % 10 <> 0),
-        |verified AS (
-        |  SELECT new_id, existing_id,
-        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |  FROM cand JOIN sets sa ON new_id = sa.id JOIN sets sb ON existing_id = sb.id)
-        |SELECT new_id, existing_id, round(j, 4) AS jaccard
-        |FROM verified WHERE j >= 0.8 ORDER BY new_id, existing_id""".stripMargin,
-    "q32_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
-        |common AS (
-        |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
-        |  FROM inv x JOIN inv y ON x.shingle = y.shingle AND x.id < y.id
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS jaccard
-        |FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // identical to q32 except high-df shingles are dropped from the inverted
-    // index BEFORE the pair join (df <= 4) while n_sh keeps the full set
-    // size — the biased-low cutoff semantics, replicated bit-for-bit
-    "q71_ngram_jaccard_cutoff" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
-        |df AS (SELECT shingle, count(*) AS df FROM inv GROUP BY 1),
-        |inv2 AS (SELECT inv.id, inv.n_sh, inv.shingle FROM inv JOIN df USING (shingle) WHERE df <= 4),
-        |common AS (
-        |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
-        |  FROM inv2 x JOIN inv2 y ON x.shingle = y.shingle AND x.id < y.id
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT doc_a, doc_b, round(CAST(c AS DOUBLE) / (na + nb - c), 4) AS jaccard
-        |FROM common WHERE CAST(c AS DOUBLE) / (na + nb - c) >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q33_knn_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-        |p AS (
-        |  SELECT query_id, neighbor_id,
-        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
-        |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS "rank"
-        |  FROM p)
-        |SELECT query_id, neighbor_id, "rank", round(cosine, 4) AS cosine
-        |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-    // rebuilds the md5-portable SimHash bit-for-bit: per-token 64-bit hash =
-    // first 8 md5 bytes (big-endian; bit b lives in hex digit 16 - b//4 at
-    // nibble bit b%4), per-bit ±1 vote across tokens, sign → signature bit;
-    // band keys and hamming are recomputed from the same bit vector
-    "q34_simhash_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |hs AS (SELECT doc_id, list_transform(t, s -> substring(md5(s), 1, 16)) AS h FROM toks),
-        |bits AS (
-        |  SELECT doc_id,
-        |    list_transform(range(64), b ->
-        |      CASE WHEN list_sum(list_transform(h, x ->
-        |        CASE WHEN (((instr('0123456789abcdef', substring(x, CAST(16 - b // 4 AS INT), 1)) - 1) >> (b % 4)) & 1) = 1
-        |             THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) AS bv
-        |  FROM hs),
-        |bands AS (
-        |  SELECT doc_id, bb AS band_id,
-        |    CAST(list_sum(list_transform(range(16), j -> bv[CAST(bb*16 + j + 1 AS INT)] << j)) AS BIGINT) AS band_key
-        |  FROM bits CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(bb)),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-        |ham AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(list_sum(list_transform(range(64), i ->
-        |      CASE WHEN xa.bv[CAST(i + 1 AS INT)] <> yb.bv[CAST(i + 1 AS INT)] THEN 1 ELSE 0 END)) AS BIGINT) AS hamming
-        |  FROM cand JOIN bits xa ON doc_a = xa.doc_id JOIN bits yb ON doc_b = yb.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= 6
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // axis-sign LSH buckets (bit j = sign of component j) — engine-portable,
-    // so buckets, candidates, and per-query ranks replicate exactly
-    "q35_knn_lsh" ->
-      """WITH bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, embedding AS qe, bucket FROM e WHERE vec_id < 64),
-        |c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bucket FROM e),
-        |p AS (
-        |  SELECT query_id, neighbor_id,
-        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
-        |  FROM c JOIN q USING (bucket) WHERE query_id <> neighbor_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS "rank"
-        |  FROM p)
-        |SELECT query_id, neighbor_id, "rank", round(cosine, 4) AS cosine
-        |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-    // nProbe = nCells ⇒ every query probes every cell ⇒ IVF ≡ brute force,
-    // so the q33 brute-force SQL gates the full IVF plumbing
-    "q37_knn_ivf" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-        |p AS (
-        |  SELECT query_id, neighbor_id,
-        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
-        |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS "rank"
-        |  FROM p)
-        |SELECT query_id, neighbor_id, "rank", round(cosine, 4) AS cosine
-        |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-    // the deterministic-Lloyd quantizer unrolled on NORMALIZED vectors
-    // (q108's machinery), then each query's top-2 cells by (d2, cell),
-    // the probe join, and the exact cosine ranking within the candidates
-    "q117_knn_ivf_probed" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS u
-        |  FROM embeddings),
-        |c0 AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, u AS c
-        |  FROM e ORDER BY vec_id LIMIT 8),
-        |dd1 AS (
-        |  SELECT e.vec_id, c0.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c0.c[i+1]) * (e.u[i+1] - c0.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c0),
-        |aa1 AS (
-        |  SELECT vec_id, cluster FROM (
-        |    SELECT vec_id, cluster,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |    FROM dd1) WHERE rn = 1),
-        |u1 AS (
-        |  SELECT aa1.cluster, i AS dim,
-        |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-        |  FROM aa1 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u1 GROUP BY cluster
-        |  UNION ALL
-        |  SELECT cluster, c FROM c0 WHERE cluster NOT IN (SELECT cluster FROM u1)),
-        |dd2 AS (
-        |  SELECT e.vec_id, c1.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c1.c[i+1]) * (e.u[i+1] - c1.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c1),
-        |aa2 AS (
-        |  SELECT vec_id, cluster FROM (
-        |    SELECT vec_id, cluster,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |    FROM dd2) WHERE rn = 1),
-        |u2 AS (
-        |  SELECT aa2.cluster, i AS dim,
-        |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-        |  FROM aa2 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u2 GROUP BY cluster
-        |  UNION ALL
-        |  SELECT cluster, c FROM c1 WHERE cluster NOT IN (SELECT cluster FROM u2)),
-        |ddf AS (
-        |  SELECT e.vec_id, c2.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c2.c[i+1]) * (e.u[i+1] - c2.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c2),
-        |cellr AS (
-        |  SELECT vec_id, cluster,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |  FROM ddf),
-        |corpus AS (SELECT vec_id AS neighbor_id, cluster AS cell FROM cellr WHERE rn = 1),
-        |probes AS (SELECT vec_id AS query_id, cluster AS cell FROM cellr WHERE rn <= 2 AND vec_id < 8),
-        |cand AS (
-        |  SELECT query_id, neighbor_id FROM probes JOIN corpus USING (cell)
-        |  WHERE query_id <> neighbor_id),
-        |p AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |    list_sum(list_transform(range(1, len(cq.embedding) + 1), i -> CAST(cn.embedding[i] AS DOUBLE) * CAST(cq.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(cn.embedding) + 1), i -> CAST(cn.embedding[i] AS DOUBLE) * CAST(cn.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(cq.embedding) + 1), i -> CAST(cq.embedding[i] AS DOUBLE) * CAST(cq.embedding[i] AS DOUBLE))))) AS cosine
-        |  FROM cand
-        |  JOIN e cq ON cand.query_id = cq.vec_id
-        |  JOIN e cn ON cand.neighbor_id = cn.vec_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS "rank"
-        |  FROM p)
-        |SELECT query_id, neighbor_id, "rank", round(cosine, 4) AS cosine
-        |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-    "q39_embedding_neardups_lsh" ->
-      """WITH bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
-        |    list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))) AS cosine
-        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
-        |SELECT doc_a, doc_b, round(cosine, 4) AS cosine
-        |FROM p WHERE cosine >= 0.4 ORDER BY doc_a, doc_b""".stripMargin,
-    "q38_embedding_neardups" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
-        |    list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))) AS cosine
-        |  FROM e x JOIN e y ON x.vec_id < y.vec_id)
-        |SELECT doc_a, doc_b, round(cosine, 4) AS cosine
-        |FROM p WHERE cosine >= 0.4 ORDER BY doc_a, doc_b""".stripMargin,
-    "q67_batched_embed" ->
-      """WITH e AS (SELECT doc_id, text, unnest(range(8)) AS j FROM documents)
-        |SELECT doc_id, CAST(j AS INT) AS dim,
-        |  round(CAST(('0x' || substring(md5(COALESCE(text, '')), CAST(2 * j + 1 AS INT), 2))::BIGINT AS DOUBLE) / 256.0, 6) AS value
-        |FROM e ORDER BY doc_id, dim""".stripMargin,
-    "q57_tfidf_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id AS id, unnest(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS term
-        |  FROM toks WHERE len(t) >= 3),
-        |tf AS (SELECT id, term, count(*) AS tf FROM sh WHERE term <> '' GROUP BY 1, 2),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-        |dfs AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY 1
-        |  HAVING count(*) <= greatest(2, (SELECT n FROM nn) // 50)),
-        |w AS (
-        |  SELECT tf.id, tf.term,
-        |    CAST(tf.tf AS DOUBLE) *
-        |      ((CAST((SELECT n FROM nn) AS DOUBLE) - CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |        / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))) AS w
-        |  FROM tf JOIN dfs USING (term)),
-        |norms AS (SELECT id, sum(CAST(w * w AS DECIMAL(28,12))) AS norm2 FROM w GROUP BY id),
-        |pairs AS (
-        |  SELECT a.id AS doc_a, b.id AS doc_b, sum(CAST(a.w * b.w AS DECIMAL(28,12))) AS dot
-        |  FROM w a JOIN w b ON a.term = b.term AND a.id < b.id
-        |  GROUP BY 1, 2),
-        |sc AS (
-        |  SELECT doc_a, doc_b,
-        |    round(CAST(p.dot AS DOUBLE) /
-        |      (sqrt(CAST(na.norm2 AS DOUBLE)) * sqrt(CAST(nb.norm2 AS DOUBLE))), 4) AS cosine
-        |  FROM pairs p JOIN norms na ON p.doc_a = na.id JOIN norms nb ON p.doc_b = nb.id)
-        |SELECT doc_a, doc_b, cosine FROM sc WHERE cosine >= 0.3
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // same co-click edge CTE as q56; triangles via the same degree-ordered
-    // orientation the Spark side uses (each triangle closes once at its
-    // smallest (deg, id) corner)
-    "q73_triangle_count" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst AS u, src AS v FROM ce),
-        |deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
-        |o AS (
-        |  SELECT s.u, s.v
-        |  FROM sym s JOIN deg da ON s.u = da.u JOIN deg db ON s.v = db.u
-        |  WHERE da.d < db.d OR (da.d = db.d AND s.u < s.v)),
-        |tri AS (
-        |  SELECT x.u AS a, x.v AS b, y.v AS c
-        |  FROM o x JOIN o y ON x.u = y.u AND x.v <> y.v
-        |  JOIN o z ON z.u = x.v AND z.v = y.v),
-        |pern AS (
-        |  SELECT id, count(*) AS n_triangles FROM (
-        |    SELECT a AS id FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
-        |  GROUP BY 1),
-        |nodes AS (SELECT DISTINCT u AS id FROM sym)
-        |SELECT nodes.id AS document_id, COALESCE(n_triangles, 0) AS n_triangles
-        |FROM nodes LEFT JOIN pern USING (id) ORDER BY document_id""".stripMargin,
-    // DuckDB cannot substring a BLOB, so the oracle slices the VARCHAR text
-    // instead — byte-identical to the engine's binary slicing because the
-    // corpus is pure ASCII (verified: 0 docs where octet_length <> length);
-    // md5 of the substring hashes the same UTF-8 bytes either way
-    "q76_frame_sample" ->
-      """WITH c AS (SELECT doc_id, text,
-        |  CAST(ceil(octet_length(encode(text)) / 64.0) AS INT) AS n_chunks FROM documents),
-        |f AS (
-        |  SELECT doc_id, CAST(unnest(list_filter(range(0, n_chunks), i -> i % 4 = 0)) AS INT) AS frame_idx, text
-        |  FROM c WHERE n_chunks > 0)
-        |SELECT doc_id, frame_idx,
-        |  length(substring(text, frame_idx * 64 + 1, 64)) AS frame_bytes,
-        |  md5(substring(text, frame_idx * 64 + 1, 64)) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-    "q80_top_paths" ->
-      """WITH c AS (
-        |  SELECT event_id, CAST(user_id AS VARCHAR) AS sid, event_type,
-        |    CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events),
-        |r AS (
-        |  SELECT sid, event_type,
-        |    row_number() OVER (PARTITION BY sid ORDER BY ts, event_id) AS rn
-        |  FROM c),
-        |p AS (
-        |  SELECT sid, string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 5 GROUP BY sid)
-        |SELECT path, count(*) AS n_sessions
-        |FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q77_transition_matrix" ->
-      """WITH c AS (
-        |  SELECT event_id, CAST(user_id AS VARCHAR) AS sid, event_type,
-        |    CAST(ts AS TIMESTAMP) AS ts
-        |  FROM events),
-        |l AS (
-        |  SELECT sid, event_type,
-        |    lag(event_type) OVER (PARTITION BY sid ORDER BY ts, event_id) AS prev_type
-        |  FROM c)
-        |SELECT prev_type, event_type, count(*) AS n
-        |FROM l WHERE prev_type IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q79_covisit_recs" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst, count(*) AS weight
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (
-        |  SELECT src AS document_id, dst AS rec, weight FROM ce
-        |  UNION ALL SELECT dst AS document_id, src AS rec, weight FROM ce),
-        |r AS (
-        |  SELECT document_id, rec, weight,
-        |    row_number() OVER (PARTITION BY document_id ORDER BY weight DESC, rec) AS "rank"
-        |  FROM sym)
-        |SELECT document_id, rec, weight, CAST("rank" AS INT) AS "rank"
-        |FROM r WHERE "rank" <= 3 ORDER BY document_id, "rank"""".stripMargin,
-    "q74_retention" ->
-      """WITH active AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS k, CAST(ts AS DATE) AS day FROM events),
-        |cohort AS (SELECT k, min(day) AS cohort_day FROM active GROUP BY 1)
-        |SELECT cohort_day, CAST(date_diff('day', cohort_day, day) AS INT) AS day_offset,
-        |  count(DISTINCT k) AS n_active
-        |FROM active JOIN cohort USING (k)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q75_attribution" ->
-      """WITH c AS (
-        |  SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
-        |    CAST(props->>'$.k' AS INTEGER) AS document_id,
-        |    CAST(ts AS TIMESTAMP) AS ts, event_type, value
-        |  FROM events),
-        |f AS (
-        |  SELECT *,
-        |    first_value(CASE WHEN event_type = 'view' THEN document_id END IGNORE NULLS)
-        |      OVER (PARTITION BY session_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS first_touch
-        |  FROM c)
-        |SELECT first_touch AS document_id, count(*) AS n_conversions,
-        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS attributed_value
-        |FROM f WHERE event_type = 'purchase' AND first_touch IS NOT NULL
-        |GROUP BY 1 ORDER BY document_id""".stripMargin,
-    "q82_attribution_last" ->
-      """WITH c AS (
-        |  SELECT event_id, CAST(user_id AS VARCHAR) AS session_id,
-        |    CAST(props->>'$.k' AS INTEGER) AS document_id,
-        |    CAST(ts AS TIMESTAMP) AS ts, event_type, value
-        |  FROM events),
-        |f AS (
-        |  SELECT *,
-        |    last_value(CASE WHEN event_type = 'view' THEN document_id END IGNORE NULLS)
-        |      OVER (PARTITION BY session_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_touch
-        |  FROM c)
-        |SELECT last_touch AS document_id, count(*) AS n_conversions,
-        |  CAST(round(sum(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS attributed_value
-        |FROM f WHERE event_type = 'purchase' AND last_touch IS NOT NULL
-        |GROUP BY 1 ORDER BY document_id""".stripMargin,
-    // q56's unrolled power iteration with edge weights: deg becomes the
-    // weight-strength sum and each hop carries r*w/strength
-    "q81_pagerank_weighted" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst, CAST(count(*) AS DOUBLE) AS w
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v, w FROM ce UNION ALL SELECT dst AS u, src AS v, w FROM ce),
-        |deg AS (SELECT u, sum(w) AS d FROM sym GROUP BY u),
-        |nodes AS (SELECT DISTINCT u AS id FROM sym),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |p0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS r FROM nodes),
-        |p1 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p0 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p2 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p1 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p3 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p2 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p4 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p3 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p5 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r * s.w / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p4 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id)
-        |SELECT id AS document_id,
-        |  CAST(floor(r * (SELECT n FROM nn) * 1000000 + 0.5) AS BIGINT) AS pagerank_micro
-        |FROM p5 ORDER BY document_id""".stripMargin,
-    // q55's change-point SQL restricted to clicks + DuckDB's native ASOF
-    // LEFT JOIN picking the version valid at each purchase
-    "q135_pit_lookup" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS session_id,
-        |         CAST(props->>'$.k' AS INTEGER) AS document_id,
-        |         CAST(ts AS TIMESTAMP) AS event_ts
-        |  FROM events WHERE event_type = 'click'),
-        |m AS (
-        |  SELECT session_id, document_id, event_ts,
-        |    lag(document_id) OVER (PARTITION BY session_id ORDER BY event_ts) AS prev_doc,
-        |    row_number() OVER (PARTITION BY session_id ORDER BY event_ts) AS rn
-        |  FROM c),
-        |dim AS (
-        |  SELECT session_id, document_id, event_ts AS valid_from FROM m
-        |  WHERE rn = 1 OR prev_doc IS DISTINCT FROM document_id),
-        |f AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS session_id, event_id,
-        |         CAST(ts AS TIMESTAMP) AS event_ts
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT f.session_id, f.event_id, f.event_ts,
-        |  d.document_id AS dim_document_id, d.valid_from AS dim_valid_from
-        |FROM f ASOF LEFT JOIN dim d
-        |  ON f.session_id = d.session_id AND f.event_ts >= d.valid_from
-        |ORDER BY f.event_id""".stripMargin,
-    "q142_pq_adc" -> pqAdcOracle,
-    "q148_ann_recall" -> annRecallOracle,
-    "q161_pq_recall_curve" -> pqRecallCurveOracle,
-    "q162_ivfadc" -> ivfAdcOracle,
-    "q191_ivf_nprobe_curve" -> ivfNprobeCurveOracle,
-    // q173's chain + copy expansion + md5-keyed global order
-    "q182_training_order" ->
-      """WITH d AS (
-        |  SELECT source,
-        |    COALESCE(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')), 0) AS n_tok
-        |  FROM documents),
-        |ps AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS b, count(*) AS s FROM ps),
-        |rk AS (
-        |  SELECT source, n_tokens, (n_tokens * 10500) // 10000 AS cap,
-        |    row_number() OVER (ORDER BY (n_tokens * 10500) // 10000, source) AS rn,
-        |    COALESCE(sum((n_tokens * 10500) // 10000) OVER (
-        |      ORDER BY (n_tokens * 10500) // 10000, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-        |  FROM ps),
-        |lv AS (
-        |  SELECT rk.*, (b - prefix)::DOUBLE / (s - rn + 1)::DOUBLE AS lvl
-        |  FROM rk CROSS JOIN t),
-        |sel AS (SELECT min(rn) AS istar FROM lv WHERE lvl <= cap::DOUBLE),
-        |al AS (
-        |  SELECT source, n_tokens,
-        |    CASE WHEN (SELECT istar FROM sel) IS NULL
-        |           OR rn < (SELECT istar FROM sel) THEN cap::DOUBLE
-        |         ELSE (SELECT lvl FROM lv WHERE rn = (SELECT istar FROM sel)) END AS alloc_raw
-        |  FROM lv),
-        |g AS (
-        |  SELECT source,
-        |    CAST(floor(epochs) AS INT) AS full_copies,
-        |    CAST(floor(epochs * 10000) - floor(epochs) * 10000 AS INT) AS frac_bp
-        |  FROM (SELECT source,
-        |          CASE WHEN n_tokens > 0
-        |            THEN round(alloc_raw / n_tokens::DOUBLE, 6) END AS epochs
-        |        FROM al)),
-        |mf AS (
-        |  SELECT doc.doc_id, doc.source,
-        |    full_copies + CASE WHEN ('0x' || substr(md5(doc.doc_id::VARCHAR || '|epoch'), 1, 8))::BIGINT % 10000 < frac_bp
-        |      THEN 1 ELSE 0 END AS n_copies
-        |  FROM documents doc JOIN g USING (source)),
-        |ex AS (
-        |  SELECT doc_id, source, CAST(unnest(range(1, n_copies + 1)) AS INT) AS copy
-        |  FROM mf WHERE n_copies > 0),
-        |kk AS (
-        |  SELECT doc_id, source, copy,
-        |    md5(doc_id::VARCHAR || '|' || copy::VARCHAR || '|ep1') AS skey
-        |  FROM ex)
-        |SELECT row_number() OVER (ORDER BY skey, doc_id, copy) AS global_rank,
-        |  doc_id, source, copy
-        |FROM kk ORDER BY global_rank""".stripMargin,
-    // q31's sig/band CTEs on the sample + inverted-index exact jaccard;
-    // zero-overlap mass lands in decile 0 arithmetically. Round 12: the
-    // whole CTE chain is the SHARED [[lshChainCtes]] constant (q231's
-    // canary chain is the same constant — zero textual drift possible),
-    // the FULL OUTER JOIN USING is gone (LEFT JOIN + NOT EXISTS), and
-    // every tail integer is BIGINT-cast at the HUGEINT widening points —
-    // the root cause of six rounds of hash misses (int64 vs float64 after
-    // DuckDB sum() widened n_pairs/emp_rate_ppm to int128).
-    "q180_lsh_tuning" ->
-      (lshChainCtes +
-      """
-        |SELECT decile, n_pairs, n_candidates,
-        |  CAST((n_candidates * 2000000 + n_pairs) // (2 * n_pairs) AS BIGINT) AS emp_rate_ppm,
-        |""".stripMargin +
-      // theoretical S-curve as driver-computed BIGINT literals (the same
-      // lshTheoPpm values the plan embeds): no engine evaluates pow/round
-      Dedup.lshTheoPpm(4, 4).zipWithIndex
-        .map { case (p, d) => s"WHEN $d THEN ${p}::BIGINT" }
-        .mkString("  CASE decile ", " ", " END AS theo_rate_ppm\n") +
-      """FROM adj WHERE n_pairs > 0 ORDER BY decile"""),
-    // q180's stage checksums: the SAME CTE chain — literally the shared
-    // [[lshChainCtes]] constant q180's gate is built from (round-12
-    // single-sourcing) — reduced per stage to (count, bit_xor of 60-bit
-    // md5), all string/integer derived. The sig join is written as
-    // explicit elements (no list slice, no array_to_string) to stay
-    // dialect-drift-proof. h_po hashes every post-join (a, b, decile, c)
-    // row and h_adj the final pre-projection (decile, n_pairs,
-    // n_candidates) frame, so any future q180 miss is localized to a
-    // named stage, not "somewhere after scored".
-    "q231_lsh_canary" ->
-      (lshChainCtes +
-      """,
-        |h_sets AS (
-        |  SELECT 'sets' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || sz::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM sz),
-        |h_shingles AS (
-        |  SELECT 'shingles' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || g), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM inv),
-        |h_sigs AS (
-        |  SELECT 'sigs' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || """.stripMargin +
-      (1 to 16).map(i => s"sig[$i]").mkString(" || ',' || ") +
-      """), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM sigs),
-        |h_bands AS (
-        |  SELECT 'bands' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(id::VARCHAR || '|' || band_id::VARCHAR || '|' || band_hash), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM bands),
-        |h_cand AS (
-        |  SELECT 'cand' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM cand),
-        |h_scored AS (
-        |  SELECT 'scored' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR || '|' || common::VARCHAR || '|' || sdec::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM sc),
-        |h_po AS (
-        |  SELECT 'tail_po' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(a::VARCHAR || '|' || b::VARCHAR || '|' || decile::VARCHAR || '|' || c::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM po),
-        |h_adj AS (
-        |  SELECT 'tail_zadj' AS stage, count(*) AS n_rows,
-        |    COALESCE(bit_xor(('0x' || substr(md5(decile::VARCHAR || '|' || n_pairs::VARCHAR || '|' || n_candidates::VARCHAR), 1, 15))::BIGINT), 0) AS xor60
-        |  FROM adj WHERE n_pairs > 0)
-        |SELECT * FROM h_sets UNION ALL SELECT * FROM h_shingles
-        |UNION ALL SELECT * FROM h_sigs UNION ALL SELECT * FROM h_bands
-        |UNION ALL SELECT * FROM h_cand UNION ALL SELECT * FROM h_scored
-        |UNION ALL SELECT * FROM h_po UNION ALL SELECT * FROM h_adj
-        |ORDER BY stage""".stripMargin),
-    // THE LAW: the increment must equal the whole-corpus rebuild — q168's
-    // SQL verbatim
-    "q179_source_overlap_increment" ->
-      """WITH t AS (
-        |  SELECT source, string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS tk
-        |  FROM documents),
-        |f AS (
-        |  SELECT DISTINCT source AS src, md5(g) AS fp FROM (
-        |    SELECT source, unnest(list_transform(range(len(tk) - 4),
-        |      i -> tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4]||' '||tk[i+5])) AS g
-        |    FROM t WHERE len(tk) >= 5)),
-        |per AS (SELECT src, count(*) AS n FROM f GROUP BY 1),
-        |sh AS (
-        |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
-        |  FROM f a JOIN f b ON a.fp = b.fp AND a.src < b.src
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared, pa.n AS n_a, pb.n AS n_b,
-        |  round(n_shared::DOUBLE / least(pa.n, pb.n)::DOUBLE, 6) AS overlap
-        |FROM sh JOIN per pa ON pa.src = source_a JOIN per pb ON pb.src = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-    // q178's recursive closure + the 1/|cluster| weight tail
-    "q181_dedup_weights" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |tp AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT doc_a, doc_b,
-        |      CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |    FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
-        |  WHERE j >= 0.8),
-        |ep AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |pairs AS (SELECT doc_a, doc_b FROM tp UNION SELECT doc_a, doc_b FROM ep),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r),
-        |cl AS (
-        |  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-        |sz AS (SELECT cluster_id, count(*) AS n_members FROM cl GROUP BY 1)
-        |SELECT doc_id, cluster_id, n_members,
-        |  round(1.0::DOUBLE / n_members::DOUBLE, 6) AS weight
-        |FROM cl JOIN sz USING (cluster_id) ORDER BY doc_id""".stripMargin,
-    // q31's minhash pairs UNION q38's cosine pairs -> q49's recursive
-    // transitive closure over document ids
-    "q178_ensemble_clusters" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |tp AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT doc_a, doc_b,
-        |      CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |    FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
-        |  WHERE j >= 0.8),
-        |ep AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |pairs AS (SELECT doc_a, doc_b FROM tp UNION SELECT doc_a, doc_b FROM ep),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
-        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    // q178's closure with ep routed through the ADAPTIVE-width sign
-    // buckets (q243's occupancy-constant formula, same integer bit-length
-    // derivation) — the production (sub-quadratic) ensemble at any scale,
-    // bucket restriction and width formula both replicated in SQL
-    "q232_ensemble_clusters_lsh" ->
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id,
-        |    md5(sig[b*4+1] || ',' || sig[b*4+2] || ',' || sig[b*4+3] || ',' || sig[b*4+4]) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |tp AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT doc_a, doc_b,
-        |      CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |    FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id)
-        |  WHERE j >= 0.8),
-        |bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |ep AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |pairs AS (SELECT doc_a, doc_b FROM tp UNION SELECT doc_a, doc_b FROM ep),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
-        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    // the 10 half-steps unrolled; every CTE MATERIALIZED (each normalizer
-    // references its raw CTE twice — default inlining would re-expand the
-    // whole iteration tree ~2^k-fold, the q224 lesson); same L1
-    // normalization and mean-1 scaling, micro-quantized
-    "q233_hits" -> {
-      val steps = (1 to 5).map { k =>
-        s"""a${k}r AS MATERIALIZED (
-           |  SELECT au.id, COALESCE(sum(h${k - 1}.s), CAST(0 AS DOUBLE)) AS r
-           |  FROM auths au LEFT JOIN e ON e.v = au.id
-           |  LEFT JOIN h${k - 1} ON e.u = h${k - 1}.id
-           |  GROUP BY au.id),
-           |a$k AS MATERIALIZED (
-           |  SELECT id, r / (SELECT sum(r) FROM a${k}r) AS s FROM a${k}r),
-           |h${k}r AS MATERIALIZED (
-           |  SELECT hu.id, COALESCE(sum(a$k.s), CAST(0 AS DOUBLE)) AS r
-           |  FROM hubs hu LEFT JOIN e ON e.u = hu.id
-           |  LEFT JOIN a$k ON e.v = a$k.id
-           |  GROUP BY hu.id),
-           |h$k AS MATERIALIZED (
-           |  SELECT id, r / (SELECT sum(r) FROM h${k}r) AS s FROM h${k}r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS u,
-        |    CAST(CAST(props->>'$$.k' AS INTEGER) AS VARCHAR) AS v
-        |  FROM events WHERE CAST(props->>'$$.k' AS INTEGER) IS NOT NULL),
-        |hubs AS MATERIALIZED (SELECT DISTINCT u AS id FROM e),
-        |auths AS MATERIALIZED (SELECT DISTINCT v AS id FROM e),
-        |h0 AS MATERIALIZED (
-        |  SELECT id, CAST(1 AS DOUBLE) / (SELECT count(*) FROM hubs) AS s
-        |  FROM hubs),
-        |$steps
-        |SELECT side, id, score_micro FROM (
-        |  SELECT 'hub' AS side, id,
-        |    CAST(floor(s * (SELECT count(*) FROM hubs) * 1000000 + 0.5) AS BIGINT)
-        |      AS score_micro
-        |  FROM h5
-        |  UNION ALL
-        |  SELECT 'authority' AS side, id,
-        |    CAST(floor(s * (SELECT count(*) FROM auths) * 1000000 + 0.5) AS BIGINT)
-        |      AS score_micro
-        |  FROM a5)
-        |ORDER BY side, id""".stripMargin
-    },
-    // same micro-quantized values, HUGEINT moments (the q218 mirror),
-    // identical IEEE expression shapes on the exact sums
-    "q234_cuped" -> cupedOracle,
-    // LAW gate: the merged per-unit artifact must reproduce the
-    // whole-corpus readout, so its oracle IS q234's rebuild
-    "q241_cuped_increment" -> cupedOracle,
-    // same integer rarity score and tertile arithmetic; the per-language
-    // rank is a plain window here (gate-sized), the Spark side uses the
-    // distributed-rank recipe and both land on the same integer ranks
-    "q242_ccnet_buckets" ->
-      """WITH tok AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS tok
-        |  FROM documents),
-        |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n, count(*) AS v FROM freq),
-        |perdoc AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    CAST(sum((SELECT n + v FROM tot) // (c + 1)) AS BIGINT) AS sr
-        |  FROM tok JOIN freq USING (tok) GROUP BY doc_id),
-        |scored AS (
-        |  SELECT d.doc_id, d.lang,
-        |    CAST(sr * 1000000 // n_tokens AS BIGINT) AS rarity_micro
-        |  FROM documents d JOIN perdoc USING (doc_id)),
-        |ranked AS (
-        |  SELECT doc_id, lang, rarity_micro,
-        |    row_number() OVER (PARTITION BY lang ORDER BY rarity_micro, doc_id)
-        |      AS lang_rank,
-        |    count(*) OVER (PARTITION BY lang) AS n_lang
-        |  FROM scored)
-        |SELECT doc_id, lang, rarity_micro,
-        |  CAST(lang_rank AS BIGINT) AS lang_rank,
-        |  CAST(n_lang AS BIGINT) AS n_lang,
-        |  CASE WHEN lang_rank * 3 <= n_lang THEN 'head'
-        |       WHEN lang_rank * 3 <= n_lang * 2 THEN 'middle'
-        |       ELSE 'tail' END AS bucket,
-        |  lang_rank * 3 <= n_lang * 2 AS kept
-        |FROM ranked ORDER BY doc_id""".stripMargin,
-    "q235_readability" ->
-      """WITH toks AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |    len(t) AS n_words,
-        |    greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS n_sents,
-        |    CAST(list_sum(list_transform(t, w ->
-        |      greatest(1, len(regexp_extract_all(w, '[aeiouy]+'))))) AS BIGINT)
-        |      AS n_syllables
-        |  FROM toks)
-        |SELECT doc_id, n_words, CAST(n_sents AS BIGINT) AS n_sents, n_syllables,
-        |  CAST(floor((206.835::DOUBLE
-        |      - 1.015::DOUBLE * (CAST(n_words AS DOUBLE) / n_sents)
-        |      - 84.6::DOUBLE * (CAST(n_syllables AS DOUBLE) / n_words))
-        |    * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS flesch_micro
-        |FROM c WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
-    // per-d knn replicated with the q33 cosine fold, the d-prefix expressed
-    // as a bounded element range (NOT a list slice — the q180 lesson);
-    // integer overlap counts, ppm via // integer division
-    "q236_matryoshka_recall" -> {
-      def knn(tag: String, d: Int) =
-        s"""p$tag AS (
-           |  SELECT query_id, neighbor_id,
-           |    list_sum(list_transform(range(1, ${d + 1}), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
-           |      / (sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
-           |         * sqrt(list_sum(list_transform(range(1, ${d + 1}), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cosine
-           |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
-           |r$tag AS MATERIALIZED (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
-           |    FROM p$tag) WHERE rk <= 10)""".stripMargin
-      val dims = Seq(8, 16, 32)
-      val arms = dims.map { d =>
-        s"""SELECT $d AS dim, 10 AS k,
-           |  (SELECT count(*) FROM q) AS n_queries,
-           |  (SELECT count(*) FROM rd$d JOIN rf USING (query_id, neighbor_id))
-           |    AS n_common""".stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH q AS MATERIALIZED (
-         |  SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 20),
-         |c AS MATERIALIZED (
-         |  SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
-         |${knn("f", 64)},
-         |${dims.map(d => knn(s"d$d", d)).mkString(",\n")}
-         |SELECT dim, k, n_queries, n_common,
-         |  n_common * 1000000 // (k * n_queries) AS recall_ppm
-         |FROM ($arms)
-         |ORDER BY dim""".stripMargin
-    },
-    // the md5-stub embeddings re-derived from the same hex pairs; cosine
-    // spelled as the identical left-assoc chain, integer threshold compare
-    "q237_clip_filter" -> {
-      def hexd(src: String, j: Int) =
-        s"CAST(('0x' || substr(md5($src), ${2 * j + 1}, 2))::BIGINT AS DOUBLE) / 256.0::DOUBLE"
-      val img = (0 until 8).map(j => s"${hexd("text", j)} AS i$j").mkString(",\n    ")
-      val cap = (0 until 8).map(j => s"${hexd("substr(text, 1, 64)", j)} AS c$j")
-        .mkString(",\n    ")
-      val dot = (0 until 8).map(j => s"i$j * c$j").mkString(" + ")
-      val na = (0 until 8).map(j => s"i$j * i$j").mkString(" + ")
-      val nb = (0 until 8).map(j => s"c$j * c$j").mkString(" + ")
-      s"""WITH e AS (
-         |  SELECT doc_id, source,
-         |    $img,
-         |    $cap
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id, source,
-         |    CAST(floor(($dot) / (sqrt($na) * sqrt($nb)) * 1000000.0::DOUBLE
-         |      + 0.5::DOUBLE) AS BIGINT) AS clip_ppm
-         |  FROM e)
-         |SELECT doc_id, source, clip_ppm, clip_ppm >= 750000 AS kept
-         |FROM s ORDER BY doc_id""".stripMargin
-    },
-    // the same fixed-point LOF lattice: one sqrt+quantize, then pure
-    // integer ranks/max/sums/divisions — HUGEINT sums cast back to BIGINT
-    "q238_lof_outliers" ->
-      """WITH ef AS MATERIALIZED (
-        |  SELECT vec_id, embedding AS u,
-        |    list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
-        |      AS n2
-        |  FROM embeddings),
-        |d AS (
-        |  SELECT a.vec_id AS p, b.vec_id AS o,
-        |    CAST(floor(sqrt(greatest(
-        |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-        |          range(1, len(a.u) + 1),
-        |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-        |        0.0::DOUBLE))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm
-        |  FROM ef a JOIN ef b ON a.vec_id <> b.vec_id),
-        |knn AS MATERIALIZED (
-        |  SELECT p, o, dm FROM (
-        |    SELECT p, o, dm,
-        |      row_number() OVER (PARTITION BY p ORDER BY dm, o) AS rk
-        |    FROM d)
-        |  WHERE rk <= 5),
-        |kd AS MATERIALIZED (SELECT p, max(dm) AS kdist FROM knn GROUP BY p),
-        |lrd AS MATERIALIZED (
-        |  SELECT p, CASE WHEN sp = 0 THEN NULL
-        |    ELSE CAST(5000000000000 // sp AS BIGINT) END AS l
-        |  FROM (
-        |    SELECT knn.p AS p,
-        |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-        |    FROM knn JOIN kd ON knn.o = kd.p GROUP BY knn.p)),
-        |lofn AS (
-        |  SELECT knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-        |  FROM knn JOIN lrd lo ON knn.o = lo.p GROUP BY knn.p)
-        |SELECT lofn.p AS vec_id,
-        |  CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-        |    ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // (5 * lp.l) AS BIGINT) END AS lof_ppm
-        |FROM lofn JOIN lrd lp ON lofn.p = lp.p ORDER BY vec_id""".stripMargin,
-    // q117's deterministic-Lloyd quantizer (2 unrolled rounds on normalized
-    // vectors, 8 cells) assigns each point its one nearest cell; the q238
-    // lattice then runs with the pair join RESTRICTED to same-cell pairs
-    "q244_lof_outliers_ivf" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE) /
-        |      sqrt(list_sum(list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))) AS u
-        |  FROM embeddings),
-        |c0 AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cluster, u AS c
-        |  FROM e ORDER BY vec_id LIMIT 8),
-        |dd1 AS (
-        |  SELECT e.vec_id, c0.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c0.c[i+1]) * (e.u[i+1] - c0.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c0),
-        |aa1 AS (
-        |  SELECT vec_id, cluster FROM (
-        |    SELECT vec_id, cluster,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |    FROM dd1) WHERE rn = 1),
-        |u1 AS (
-        |  SELECT aa1.cluster, i AS dim,
-        |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-        |  FROM aa1 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-        |  GROUP BY 1, 2),
-        |c1 AS (
-        |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u1 GROUP BY cluster
-        |  UNION ALL
-        |  SELECT cluster, c FROM c0 WHERE cluster NOT IN (SELECT cluster FROM u1)),
-        |dd2 AS (
-        |  SELECT e.vec_id, c1.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c1.c[i+1]) * (e.u[i+1] - c1.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c1),
-        |aa2 AS (
-        |  SELECT vec_id, cluster FROM (
-        |    SELECT vec_id, cluster,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |    FROM dd2) WHERE rn = 1),
-        |u2 AS (
-        |  SELECT aa2.cluster, i AS dim,
-        |    sum(CAST(e.u[i+1] AS DECIMAL(38,12))) AS s, count(*) AS n
-        |  FROM aa2 JOIN e USING (vec_id) CROSS JOIN range(64) t(i)
-        |  GROUP BY 1, 2),
-        |c2 AS (
-        |  SELECT cluster, list(s::DOUBLE / n ORDER BY dim) AS c FROM u2 GROUP BY cluster
-        |  UNION ALL
-        |  SELECT cluster, c FROM c1 WHERE cluster NOT IN (SELECT cluster FROM u2)),
-        |ddf AS (
-        |  SELECT e.vec_id, c2.cluster,
-        |    list_sum(list_transform(range(64), i -> (e.u[i+1] - c2.c[i+1]) * (e.u[i+1] - c2.c[i+1]))) AS d2
-        |  FROM e CROSS JOIN c2),
-        |cellr AS (
-        |  SELECT vec_id, cluster,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-        |  FROM ddf),
-        |cells AS MATERIALIZED (SELECT vec_id, cluster AS cell FROM cellr WHERE rn = 1),
-        |ef AS MATERIALIZED (
-        |  SELECT em.vec_id, em.embedding AS u,
-        |    list_sum(list_transform(range(1, len(em.embedding) + 1),
-        |      i -> CAST(em.embedding[i] AS DOUBLE) * CAST(em.embedding[i] AS DOUBLE)))
-        |      AS n2,
-        |    cells.cell
-        |  FROM embeddings em JOIN cells ON em.vec_id = cells.vec_id),
-        |d AS (
-        |  SELECT a.vec_id AS p, b.vec_id AS o,
-        |    CAST(floor(sqrt(greatest(
-        |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-        |          range(1, len(a.u) + 1),
-        |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-        |        0.0::DOUBLE))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm
-        |  FROM ef a JOIN ef b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
-        |knn AS MATERIALIZED (
-        |  SELECT p, o, dm FROM (
-        |    SELECT p, o, dm,
-        |      row_number() OVER (PARTITION BY p ORDER BY dm, o) AS rk
-        |    FROM d)
-        |  WHERE rk <= 5),
-        |kd AS MATERIALIZED (SELECT p, max(dm) AS kdist FROM knn GROUP BY p),
-        |lrd AS MATERIALIZED (
-        |  SELECT p, CASE WHEN sp = 0 THEN NULL
-        |    ELSE CAST(5000000000000 // sp AS BIGINT) END AS l
-        |  FROM (
-        |    SELECT knn.p AS p,
-        |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-        |    FROM knn JOIN kd ON knn.o = kd.p GROUP BY knn.p)),
-        |lofn AS (
-        |  SELECT knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-        |  FROM knn JOIN lrd lo ON knn.o = lo.p GROUP BY knn.p)
-        |SELECT lofn.p AS vec_id,
-        |  CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-        |    ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // (5 * lp.l) AS BIGINT) END AS lof_ppm
-        |FROM lofn JOIN lrd lp ON lofn.p = lp.p ORDER BY vec_id""".stripMargin,
-    // q39's adaptive-width bucket SQL + q238's lattice, pair join
-    // restricted to same-bucket pairs
-    "q247_lof_outliers_lsh" ->
-      """WITH bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |ef AS MATERIALIZED (
-        |  SELECT vec_id, embedding AS u,
-        |    list_sum(list_transform(range(1, len(embedding) + 1),
-        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
-        |      AS n2,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |d AS (
-        |  SELECT a.vec_id AS p, b.vec_id AS o,
-        |    CAST(floor(sqrt(greatest(
-        |        a.n2 + b.n2 - 2.0::DOUBLE * list_sum(list_transform(
-        |          range(1, len(a.u) + 1),
-        |          i -> CAST(a.u[i] AS DOUBLE) * CAST(b.u[i] AS DOUBLE))),
-        |        0.0::DOUBLE))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS dm
-        |  FROM ef a JOIN ef b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |knn AS MATERIALIZED (
-        |  SELECT p, o, dm FROM (
-        |    SELECT p, o, dm,
-        |      row_number() OVER (PARTITION BY p ORDER BY dm, o) AS rk
-        |    FROM d)
-        |  WHERE rk <= 5),
-        |kd AS MATERIALIZED (SELECT p, max(dm) AS kdist FROM knn GROUP BY p),
-        |lrd AS MATERIALIZED (
-        |  SELECT p, CASE WHEN sp = 0 THEN NULL
-        |    ELSE CAST(5000000000000 // sp AS BIGINT) END AS l
-        |  FROM (
-        |    SELECT knn.p AS p,
-        |      CAST(sum(greatest(kd.kdist, knn.dm)) AS BIGINT) AS sp
-        |    FROM knn JOIN kd ON knn.o = kd.p GROUP BY knn.p)),
-        |lofn AS (
-        |  SELECT knn.p AS p, CAST(sum(lo.l) AS BIGINT) AS sl
-        |  FROM knn JOIN lrd lo ON knn.o = lo.p GROUP BY knn.p)
-        |SELECT lofn.p AS vec_id,
-        |  CASE WHEN lp.l IS NULL OR lp.l = 0 THEN NULL
-        |    ELSE CAST(CAST(sl AS HUGEINT) * 1000000 // (5 * lp.l) AS BIGINT) END AS lof_ppm
-        |FROM lofn JOIN lrd lp ON lofn.p = lp.p ORDER BY vec_id""".stripMargin,
-    // the LOF truncation quality curve: the armed lattice + per-
-    // (occupancy, K) top-K intersections, built by lofQualitySql so the
-    // grids live in one place (occupancy sweep = the q191 nProbe recipe)
-    "q251_lof_quality" ->
-      lofQualitySql(k = 5, topKs = Seq(10, 50), occupancies = Seq(32, 128, 512)),
-    // the Sennrich trainer unrolled (3 merge rounds): per round the pair
-    // count, the MATERIALIZED argmax, and the list-expression greedy
-    // re-segmentation — structurally identical to the Spark side
-    "q252_bpe_train" -> bpeTrainSql(merges = 3),
-    // exact arm + one arm per table count; per-(n_tables, K) top-K
-    // intersections
-    "q253_lof_multi_quality" ->
-      lofMultiQualitySql(k = 5, topKs = Seq(10, 50),
-        tableCounts = Seq(1, 2, 4), occupancy = 32, dim = 64),
-    // the q251 sweep on the planted-cluster fixture: same chain, the ef
-    // source swapped to the pe transform CTE (exact float parity — x0.125
-    // exponent shift, one IEEE add, correctly-rounded FLOAT narrowing)
-    "q273_lof_quality_planted" ->
-      lofQualitySql(k = 5, topKs = Seq(10, 50), occupancies = Seq(32, 128, 512),
-        src = "pe", pre = plantedEmbeddingsCte(blockDims = 8)),
-    // the q253 sweep on the same planted fixture
-    "q274_lof_multi_quality_planted" ->
-      lofMultiQualitySql(k = 5, topKs = Seq(10, 50),
-        tableCounts = Seq(1, 2, 4), occupancy = 32, dim = 64,
-        src = "pe", pre = plantedEmbeddingsCte(blockDims = 8)),
-    // per dup pair: gaps-and-islands run collapse along (pair, diagonal)
-    "q275_shared_runs" -> sharedRunsSql(spanTokens = 8),
-    // the same chain with the df bound ACTIVE (HAVING distinct-doc count
-    // <= cap before pairing) — biased-low semantics replicated verbatim
-    "q284_shared_runs_bounded" -> sharedRunsSql(spanTokens = 8, maxDocsPerSpan = 2),
-    // the increment must equal the whole-corpus rebuild — q271's SQL
-    "q276_unigram_model_increment" ->
-      unigramTrainSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24),
-    // exact all-pairs hard negatives: micro-distance + (dm, id) rank
-    "q277_hard_negatives" -> hardNegativesSql(k = 3),
-    // multi-table sign-bucket candidates + label filter, same tail
-    "q278_hard_negatives_lsh" ->
-      hardNegativesLshSql(k = 3, occupancy = 32, nTables = 4, dim = 64),
-    // the BPE chain with the WordPiece likelihood-ratio argmax
-    "q279_wordpiece_train" -> wordpieceTrainSql(merges = 3),
-    // exact arm 0 + per-table arms, (anchor, negative) pair recall
-    "q280_hard_negative_recall" ->
-      hardNegRecallSql(k = 3, occupancy = 32, tableCounts = Seq(1, 2, 4), dim = 64),
-    // shared core to c2, per-budget prune + one more unrolled DP round
-    "q281_unigram_budget_curve" ->
-      unigramBudgetCurveSql(m = 10, k = 4, seedMulti = 48, budgets = Seq(4, 12, 24)),
-    // three scoped family arms sharing the stage-gate trainer chains
-    // (train-slice filtered) + holdout encodes off the shared constants
-    "q286_tokenizer_families" ->
-      tokenizerFamiliesSql(budget = 3, evalMod = 17, m = 10, k = 4, seedMulti = 48),
-    // the same three arms on the UNRESTRICTED holdout: hw = hw0, merge
-    // arms unchanged past that, unigram DP-eligibility excludes hwbad
-    // words which byte-fallback through COALESCE(length)
-    "q289_tokenizer_families_fallback" ->
-      tokenizerFamiliesSql(budget = 3, evalMod = 17, m = 10, k = 4, seedMulti = 48,
-        byteFallback = true),
-    // q31's pair chain + q20's quality (centi-quantized) + q72's
-    // recursive components, keeper by (quality desc, id asc)
-    "q282_dedup_keep_best" -> dedupKeepBestSql,
-    // LAW gate: keeper verdicts over corpus ∪ batch from STORED pair
-    // artifacts (old pairs + batch pairs + the cross band join) must
-    // equal q282's whole-corpus rebuild — the oracle IS q282's SQL
-    "q285_keep_best_increment" -> dedupKeepBestSql,
-    // q247's lattice over the 4-table distinct-union pair feed
-    "q254_lof_outliers_lsh_multi" ->
-      lofMultiSql(k = 5, occupancy = 32, nTables = 4, dim = 64),
-    // q252's training chain + the per-doc encode readout off the final
-    // vocab state (in-vocab encode ≡ trained segmentation)
-    "q255_bpe_encode" -> bpeEncodeSql(merges = 3),
-    // concat-and-chunk packing: doc-order token prefix sums, window spans
-    // by integer division, the occupancy histogram
-    "q256_sequence_pack" -> sequencePackSql(ctx = 256),
-    // LAW gate: the split + per-window-addition merge must reproduce the
-    // whole-corpus rebuild — the oracle IS q256's SQL
-    "q257_sequence_pack_increment" -> sequencePackSql(ctx = 256),
-    // interpolated KN with D = 3/4: continuation counts off the train
-    // slice, the exact-rational score ppb-quantized in HUGEINT
-    "q258_kneser_ney" -> kneserNeySql,
-    // LAW gates: the KN bigram-count model from doc-id-split train shards
-    // merged by addition, and the BM25 corpus-stats row from the same
-    // split merged columnwise, must reproduce the whole-corpus readouts —
-    // the oracles ARE q258's and q177's SQL verbatim
-    "q261_kn_model_increment" -> kneserNeySql,
-    "q262_bm25_increment" -> bm25Sql,
-    // per-source concat-and-chunk packing: the q256 chain with the prefix
-    // sum partitioned by source (domain shards never share a window)
-    "q263_sequence_pack_by_source" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |cum AS (
-        |  SELECT source, n_tok,
-        |    CAST(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c
-        |  FROM toks WHERE n_tok > 0),
-        |spans AS (
-        |  SELECT source, (c - n_tok) // 256 AS fw, (c - 1) // 256 AS lw FROM cum),
-        |slots AS (
-        |  SELECT source, unnest(range(fw, lw + 1)) AS window_id, fw, lw > fw AS sp
-        |  FROM spans),
-        |win AS (
-        |  SELECT source, window_id, count(*) AS n_docs,
-        |    CAST(sum(CASE WHEN window_id = fw THEN 1 ELSE 0 END) AS BIGINT) AS n_starts,
-        |    CAST(sum(CASE WHEN sp THEN 1 ELSE 0 END) AS BIGINT) AS n_split
-        |  FROM slots GROUP BY 1, 2)
-        |SELECT source, n_docs AS docs_in_window, count(*) AS n_windows,
-        |  CAST(sum(n_starts) AS BIGINT) AS n_starts,
-        |  CAST(sum(n_split) AS BIGINT) AS n_split_slots
-        |FROM win GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // per-pair clipped bigram counts: side totals + inner-join overlap,
-    // everything anchored on the pair spine (no FULL OUTER — the q180
-    // lesson)
-    "q259_rouge2" ->
-      s"""WITH $rouge2ChainCtes
-         |SELECT pair_id, n_cand_grams, n_ref_grams, n_overlap,
-         |  p_ppm, r_ppm, f1_ppm
-         |FROM rg2
-         |ORDER BY pair_id""".stripMargin,
-    // q252's training chain, one fertility readout per vocab state s_m
-    "q260_bpe_compression" -> bpeCompressionSql(merges = 3),
-    // per-gram top-2 (count, doc) via a rank-1 window + runner-up max;
-    // argmax doc clips at the runner-up, everyone else at the max
-    "q264_self_bleu" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |gd AS MATERIALIZED (
-        |  SELECT doc_id, g, count(*) AS c FROM (
-        |    SELECT doc_id, t[CAST(i + 1 AS INT)] || ' ' || t[CAST(i + 2 AS INT)] AS g
-        |    FROM (SELECT doc_id, t, unnest(range(len(t) - 1)) AS i
-        |          FROM toks WHERE len(t) >= 2))
-        |  GROUP BY 1, 2),
-        |m1 AS MATERIALIZED (
-        |  SELECT g, c AS c1, doc_id AS d1 FROM (
-        |    SELECT g, c, doc_id,
-        |      row_number() OVER (PARTITION BY g ORDER BY c DESC, doc_id DESC) AS rn
-        |    FROM gd) WHERE rn = 1),
-        |m2 AS (
-        |  SELECT gd.g, max(gd.c) AS c2
-        |  FROM gd JOIN m1 USING (g)
-        |  WHERE NOT (gd.c = m1.c1 AND gd.doc_id = m1.d1)
-        |  GROUP BY 1),
-        |cl AS (
-        |  SELECT gd.doc_id, CAST(sum(gd.c) AS BIGINT) AS ng,
-        |    CAST(sum(least(gd.c,
-        |      CASE WHEN gd.doc_id = m1.d1 THEN COALESCE(m2.c2, 0)
-        |           ELSE m1.c1 END)) AS BIGINT) AS no
-        |  FROM gd JOIN m1 USING (g) LEFT JOIN m2 USING (g)
-        |  GROUP BY 1)
-        |SELECT d.doc_id,
-        |  COALESCE(cl.ng, 0) AS n_grams,
-        |  COALESCE(cl.no, 0) AS n_clipped,
-        |  CASE WHEN COALESCE(cl.ng, 0) > 0
-        |    THEN (cl.no * 2000000 + cl.ng) // (2 * cl.ng) END AS self_bleu_ppm
-        |FROM documents d LEFT JOIN cl USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // one MATERIALIZED prefix-sum chain, each ctx re-buckets the same
-    // spans
-    "q265_sequence_pack_curve" -> packCurveSql(Seq(64, 256, 1024)),
-    // deterministic Poisson(1) multiplicities off the md5 hash60 of
-    // (event_id, b); b = 0 identity; rank-2 / rank-(cnt-1) band
-    "q266_poisson_bootstrap" -> poissonBootstrapSql,
-    // LAW gate: the per-(group, b) sums merge by addition — oracle IS
-    // q266's SQL
-    "q267_bootstrap_increment" -> poissonBootstrapSql,
-    // exact-rank trim: the same (vm, event_id) window rank both engines,
-    // k = (n * trim_ppm) // 1e6 dropped from each side
-    "q268_trimmed_mean" ->
-      """WITH base AS (
-        |  SELECT event_type, event_id,
-        |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS vm
-        |  FROM events),
-        |rk AS (
-        |  SELECT event_type, vm,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY vm, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM base),
-        |g AS (
-        |  SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN rn > (n * 100000) // 1000000
-        |                   AND rn <= n - (n * 100000) // 1000000
-        |             THEN 1 ELSE 0 END) AS BIGINT) AS n_trimmed,
-        |    CAST(sum(vm) AS HUGEINT) AS sv,
-        |    CAST(sum(CASE WHEN rn > (n * 100000) // 1000000
-        |                   AND rn <= n - (n * 100000) // 1000000
-        |             THEN vm ELSE 0 END) AS HUGEINT) AS st
-        |  FROM rk GROUP BY 1)
-        |SELECT event_type, n, n_trimmed,
-        |  CAST((2 * sv + n) // (2 * n) AS BIGINT) AS mean_micro,
-        |  CASE WHEN n_trimmed > 0
-        |    THEN CAST((2 * st + n_trimmed) // (2 * n_trimmed) AS BIGINT)
-        |  END AS trimmed_mean_micro
-        |FROM g ORDER BY event_type""".stripMargin,
-    // positional 5-gram md5 hashes, ANSI ROWS-frame window min over full
-    // 4-windows only, distinct fingerprints, df-bounded pair join — the
-    // winnowing chain replayed stage-for-stage
-    "q245_winnowing_neardups" -> winnowingPairsSql,
-    // q239's integer token counts feed a born-integer ppm confidence; bins,
-    // accuracies and the weighted ECE gap are pure BIGINT arithmetic
-    "q246_calibration_ece" -> calibrationEceSql,
-    // LAW gates: the per-bin / per-doc artifacts from disjoint slices,
-    // merged, must reproduce the whole-corpus rebuild — the oracles ARE
-    // q246's and q245's SQL verbatim
-    "q248_calibration_increment" -> calibrationEceSql,
-    "q249_winnowing_increment" -> winnowingPairsSql,
-    // q245's fingerprint CTEs split on the q158 eval slice; per-pair
-    // shared counts, then the per-corpus-doc rollup with the (shared
-    // desc, eid asc) argmax as a row_number — all integer
-    "q250_winnowing_decontam" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |${winnowFpCtes("toks", "fps")},
-        |cf AS MATERIALIZED (SELECT id AS cid, fp FROM fps WHERE id % 17 <> 0),
-        |ef AS MATERIALIZED (SELECT id AS eid, fp FROM fps WHERE id % 17 = 0),
-        |bounded AS (SELECT fp FROM cf GROUP BY fp HAVING count(*) <= 1000),
-        |pp AS MATERIALIZED (
-        |  SELECT cid, eid, count(*) AS shared
-        |  FROM cf JOIN bounded USING (fp) JOIN ef USING (fp)
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT cid, eid, shared,
-        |    row_number() OVER (PARTITION BY cid ORDER BY shared DESC, eid) AS rk
-        |  FROM pp),
-        |ag AS (
-        |  SELECT cid, count(*) AS n_eval_matches,
-        |    CAST(sum(shared) AS BIGINT) AS n_shared_fps
-        |  FROM pp GROUP BY 1)
-        |SELECT ag.cid AS doc_id, n_eval_matches, n_shared_fps,
-        |  r.eid AS matched_eval_doc, r.shared AS best_shared
-        |FROM ag JOIN r ON ag.cid = r.cid AND r.rk = 1
-        |ORDER BY doc_id""".stripMargin,
-    // the same three integer raters and integer-sum kappa; ratios are the
-    // only float steps (cohensKappa exactness argument)
-    "q239_fleiss_kappa" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, len(t) AS nt, len(list_distinct(t)) AS nu,
-        |    len(list_filter(t, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS ns
-        |  FROM toks WHERE len(t) > 0),
-        |rated AS (
-        |  SELECT doc_id,
-        |    CASE WHEN nt < 50 THEN 'low' WHEN nt <= 200 THEN 'medium'
-        |         ELSE 'high' END AS r_len,
-        |    CASE WHEN nu * 10 >= nt * 7 THEN 'high'
-        |         WHEN nu * 10 >= nt * 4 THEN 'medium' ELSE 'low' END AS r_div,
-        |    CASE WHEN ns * 4 >= nt THEN 'high'
-        |         WHEN ns * 20 >= nt THEN 'medium' ELSE 'low' END AS r_stop
-        |  FROM f),
-        |lng AS (
-        |  SELECT doc_id AS u, r_len AS lab FROM rated
-        |  UNION ALL SELECT doc_id, r_div FROM rated
-        |  UNION ALL SELECT doc_id, r_stop FROM rated),
-        |cells AS (SELECT u, lab, count(*) AS nuc FROM lng GROUP BY 1, 2),
-        |s2 AS (
-        |  SELECT CAST(sum(CAST(nuc AS HUGEINT) * CAST(nuc AS HUGEINT)) AS BIGINT) AS s2,
-        |    count(DISTINCT u) AS n_units
-        |  FROM cells),
-        |marg AS (
-        |  SELECT CAST(sum(CAST(tc AS HUGEINT) * CAST(tc AS HUGEINT)) AS BIGINT) AS te2
-        |  FROM (SELECT lab, sum(nuc) AS tc FROM cells GROUP BY lab)),
-        |raw AS (
-        |  SELECT n_units, 3 AS n_raters,
-        |    (CAST(s2 AS DOUBLE) - n_units * 3.0::DOUBLE)
-        |      / (CAST(n_units AS DOUBLE) * 6.0::DOUBLE) AS p_bar_raw,
-        |    CAST(te2 AS DOUBLE)
-        |      / (CAST(n_units AS DOUBLE) * 3.0::DOUBLE
-        |         * (CAST(n_units AS DOUBLE) * 3.0::DOUBLE)) AS p_e_raw
-        |  FROM s2 CROSS JOIN marg)
-        |SELECT n_units, n_raters, round(p_bar_raw, 6) AS p_bar,
-        |  round(p_e_raw, 6) AS p_e,
-        |  CASE WHEN 1.0::DOUBLE - p_e_raw > 0
-        |    THEN round((p_bar_raw - p_e_raw) / (1.0::DOUBLE - p_e_raw), 6)
-        |  END AS fleiss_kappa
-        |FROM raw""".stripMargin,
-    // same bottom-64 rebuild as q84, union threshold = 64th smallest of
-    // the merged sample; both estimator branches mirrored
-    "q240_kmv_intersection" ->
-      """WITH h AS (
-        |  SELECT DISTINCT event_type AS g,
-        |    ('0x' || substr(md5(user_id::VARCHAR), 1, 15))::BIGINT AS hv
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |r AS (
-        |  SELECT g, hv, row_number() OVER (PARTITION BY g ORDER BY hv) AS rn
-        |  FROM h),
-        |sk AS (SELECT g, hv FROM r WHERE rn <= 64),
-        |u AS (SELECT DISTINCT hv FROM sk),
-        |un AS (SELECT count(*) AS nu FROM u),
-        |t AS (
-        |  SELECT hv AS kth FROM (
-        |    SELECT hv, row_number() OVER (ORDER BY hv) AS rn FROM u)
-        |  WHERE rn = 64),
-        |com AS (
-        |  SELECT a.hv FROM (SELECT hv FROM sk WHERE g = 'click') a
-        |  JOIN (SELECT hv FROM sk WHERE g = 'purchase') b USING (hv)),
-        |calc AS (
-        |  SELECT (SELECT nu FROM un) AS nu,
-        |    CASE WHEN (SELECT nu FROM un) < 64
-        |      THEN (SELECT count(*) FROM com)
-        |      ELSE (SELECT count(*) FROM com WHERE hv < (SELECT kth FROM t))
-        |    END AS n_common),
-        |ex AS (
-        |  SELECT count(*) AS exact_intersection FROM
-        |    (SELECT DISTINCT user_id FROM events WHERE event_type = 'click') x
-        |    JOIN (SELECT DISTINCT user_id FROM events
-        |          WHERE event_type = 'purchase') y USING (user_id))
-        |SELECT 'click' AS group_a, 'purchase' AS group_b,
-        |  CAST(n_common AS BIGINT) AS n_common_sample,
-        |  CASE WHEN nu < 64 THEN round(n_common::DOUBLE, 4)
-        |    ELSE round(n_common * 1152921504606846976.0 / (SELECT kth FROM t), 4)
-        |  END AS est_intersection,
-        |  CASE WHEN nu < 64 THEN
-        |      round(CASE WHEN nu = 0 THEN 0.0::DOUBLE
-        |            ELSE n_common::DOUBLE / nu END, 4)
-        |    ELSE round(n_common::DOUBLE / 63.0::DOUBLE, 4)
-        |  END AS est_jaccard,
-        |  (SELECT exact_intersection FROM ex) AS exact_intersection
-        |FROM calc""".stripMargin,
-    // q27's stats subqueries + avgdl; per-term Lucene-idf BM25 terms
-    // summed in fixed order
-    "q177_bm25" -> bm25Sql,
-    // integer prefix counts -> two constant log increments; min-struct
-    // first crossing, end-of-data fallback
-    "q176_sprt" ->
-      """WITH ev AS (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS x,
-        |    CAST(ts AS TIMESTAMP) AS ts, event_id
-        |  FROM events),
-        |c AS (
-        |  SELECT row_number() OVER (ORDER BY ts, event_id) AS t,
-        |    sum(x) OVER (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS k
-        |  FROM ev),
-        |l AS (
-        |  SELECT t, CAST(k AS BIGINT) AS k,
-        |    k * ln(1500.0::DOUBLE / 1000.0::DOUBLE)
-        |      + (t - k) * ln(8500.0::DOUBLE / 9000.0::DOUBLE) AS llr
-        |  FROM c),
-        |cr AS (
-        |  SELECT t, k, llr FROM l
-        |  WHERE llr >= ln(9500.0::DOUBLE / 500.0::DOUBLE)
-        |     OR llr <= ln(500.0::DOUBLE / 9500.0::DOUBLE)
-        |  ORDER BY t LIMIT 1),
-        |e AS (SELECT t, k, llr FROM l ORDER BY t DESC LIMIT 1)
-        |SELECT COALESCE(cr.t, e.t) AS n_obs, COALESCE(cr.k, e.k) AS n_success,
-        |  round(COALESCE(cr.llr, e.llr), 6) AS llr,
-        |  CASE WHEN cr.t IS NULL THEN 'continue'
-        |       WHEN cr.llr >= ln(9500.0::DOUBLE / 500.0::DOUBLE) THEN 'accept_h1'
-        |       ELSE 'accept_h0' END AS decision,
-        |  round(ln(9500.0::DOUBLE / 500.0::DOUBLE), 6) AS upper,
-        |  round(ln(500.0::DOUBLE / 9500.0::DOUBLE), 6) AS lower
-        |FROM e LEFT JOIN cr ON TRUE""".stripMargin,
-    // distinct-value spine, cumulative counts, one double division per row
-    "q174_ks_drift" ->
-      """WITH ev AS (
-        |  SELECT CAST(ts AS TIMESTAMP) AS ts, value FROM events WHERE value IS NOT NULL),
-        |per AS (
-        |  SELECT value AS v,
-        |    sum(CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END) AS nb
-        |  FROM ev GROUP BY 1),
-        |t AS (SELECT CAST(sum(na) AS BIGINT) AS n_ref, CAST(sum(nb) AS BIGINT) AS n_cur FROM per),
-        |c AS (
-        |  SELECT v,
-        |    abs(sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE / n_ref::DOUBLE
-        |      - sum(nb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::DOUBLE / n_cur::DOUBLE) AS d,
-        |    n_ref, n_cur
-        |  FROM per CROSS JOIN t)
-        |SELECT n_ref, n_cur, round(d, 6) AS ks_stat, v AS at_value,
-        |  round(1.358::DOUBLE * sqrt((n_ref + n_cur)::DOUBLE / (n_ref * n_cur)::DOUBLE), 6) AS crit_05,
-        |  d > 1.358::DOUBLE * sqrt((n_ref + n_cur)::DOUBLE / (n_ref * n_cur)::DOUBLE) AS reject
-        |FROM c ORDER BY d DESC, v LIMIT 1""".stripMargin,
-    // q31's minhash chain ⋈ q38's cosine chain, full outer on the pair key
-    "q172_ensemble_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |verified AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |  FROM cand JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id),
-        |tp AS (SELECT doc_a, doc_b, round(j, 4) AS jaccard FROM verified WHERE j >= 0.8),
-        |ev AS (SELECT vec_id, embedding FROM embeddings),
-        |ep AS (
-        |  SELECT doc_a, doc_b, round(cosine, 4) AS cosine FROM (
-        |    SELECT x.vec_id AS doc_a, y.vec_id AS doc_b,
-        |      list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |          i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |              i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |              i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE))))) AS cosine
-        |    FROM ev x JOIN ev y ON x.vec_id < y.vec_id)
-        |  WHERE cosine >= 0.4)
-        |SELECT COALESCE(tp.doc_a, ep.doc_a) AS doc_a,
-        |  COALESCE(tp.doc_b, ep.doc_b) AS doc_b, tp.jaccard, ep.cosine,
-        |  CASE WHEN tp.doc_a IS NOT NULL AND ep.doc_a IS NOT NULL THEN 'both'
-        |       WHEN tp.doc_a IS NOT NULL THEN 'text_only'
-        |       ELSE 'embedding_only' END AS signal
-        |FROM tp FULL OUTER JOIN ep
-        |  ON tp.doc_a = ep.doc_a AND tp.doc_b = ep.doc_b
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    // the q164 pair/survivor tail over the FROZEN cells — the law gate:
-    // the increment must equal this whole-union rebuild
-    "q171_semdedup_increment" ->
-      s"""WITH $kmeansFrozenAsgCtes,
-        |pr AS (
-        |  SELECT x.vec_id AS a, y.vec_id AS b
-        |  FROM (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) x
-        |  JOIN (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) y
-        |    ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(64), i -> x.v[i+1] * y.v[i+1]))
-        |      / (sqrt(list_sum(list_transform(range(64), i -> x.v[i+1] * x.v[i+1])))
-        |       * sqrt(list_sum(list_transform(range(64), i -> y.v[i+1] * y.v[i+1])))) >= 0.4),
-        |dup AS (SELECT b AS vec_id, min(a) AS dup_of FROM pr GROUP BY b)
-        |SELECT asg.vec_id, asg.cluster, dup.dup_of, dup.dup_of IS NULL AS keep
-        |FROM asg LEFT JOIN dup USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-    // q170's water-fill chain + the '|epoch' md5 basis-point gate
-    "q173_epoch_manifest" ->
-      """WITH d AS (
-        |  SELECT source,
-        |    COALESCE(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')), 0) AS n_tok
-        |  FROM documents),
-        |ps AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS b, count(*) AS s FROM ps),
-        |rk AS (
-        |  SELECT source, n_tokens, (n_tokens * 10500) // 10000 AS cap,
-        |    row_number() OVER (ORDER BY (n_tokens * 10500) // 10000, source) AS rn,
-        |    COALESCE(sum((n_tokens * 10500) // 10000) OVER (
-        |      ORDER BY (n_tokens * 10500) // 10000, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-        |  FROM ps),
-        |lv AS (
-        |  SELECT rk.*, (b - prefix)::DOUBLE / (s - rn + 1)::DOUBLE AS lvl
-        |  FROM rk CROSS JOIN t),
-        |sel AS (SELECT min(rn) AS istar FROM lv WHERE lvl <= cap::DOUBLE),
-        |al AS (
-        |  SELECT source, n_tokens,
-        |    CASE WHEN (SELECT istar FROM sel) IS NULL
-        |           OR rn < (SELECT istar FROM sel) THEN cap::DOUBLE
-        |         ELSE (SELECT lvl FROM lv WHERE rn = (SELECT istar FROM sel)) END AS alloc_raw
-        |  FROM lv),
-        |g AS (
-        |  SELECT source,
-        |    CAST(floor(epochs) AS INT) AS full_copies,
-        |    CAST(floor(epochs * 10000) - floor(epochs) * 10000 AS INT) AS frac_bp
-        |  FROM (SELECT source,
-        |          CASE WHEN n_tokens > 0
-        |            THEN round(alloc_raw / n_tokens::DOUBLE, 6) END AS epochs
-        |        FROM al))
-        |SELECT doc.doc_id, doc.source,
-        |  full_copies + CASE WHEN ('0x' || substr(md5(doc.doc_id::VARCHAR || '|epoch'), 1, 8))::BIGINT % 10000 < frac_bp
-        |    THEN 1 ELSE 0 END AS n_copies
-        |FROM documents doc JOIN g USING (source)
-        |ORDER BY doc.doc_id""".stripMargin,
-    // integer caps via //, exact-integer level division, scalar-subquery
-    // water level; q121's token counting
-    "q170_unimax_budget" ->
-      """WITH d AS (
-        |  SELECT source,
-        |    COALESCE(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')), 0) AS n_tok
-        |  FROM documents),
-        |ps AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS b, count(*) AS s FROM ps),
-        |rk AS (
-        |  SELECT source, n_tokens, (n_tokens * 10500) // 10000 AS cap,
-        |    row_number() OVER (ORDER BY (n_tokens * 10500) // 10000, source) AS rn,
-        |    COALESCE(sum((n_tokens * 10500) // 10000) OVER (
-        |      ORDER BY (n_tokens * 10500) // 10000, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prefix
-        |  FROM ps),
-        |lv AS (
-        |  SELECT rk.*, (b - prefix)::DOUBLE / (s - rn + 1)::DOUBLE AS lvl
-        |  FROM rk CROSS JOIN t),
-        |sel AS (SELECT min(rn) AS istar FROM lv WHERE lvl <= cap::DOUBLE),
-        |al AS (
-        |  SELECT source, n_tokens, cap,
-        |    CASE WHEN (SELECT istar FROM sel) IS NULL
-        |           OR rn < (SELECT istar FROM sel) THEN cap::DOUBLE
-        |         ELSE (SELECT lvl FROM lv WHERE rn = (SELECT istar FROM sel)) END AS alloc_raw
-        |  FROM lv)
-        |SELECT source, n_tokens, cap, round(alloc_raw, 4) AS alloc,
-        |  CASE WHEN n_tokens > 0 THEN round(alloc_raw / n_tokens::DOUBLE, 6) END AS epochs
-        |FROM al ORDER BY source""".stripMargin,
-    // q108's cells; rank on the ROUNDED dist2 (what both engines emit),
-    // integer keep rule
-    "q169_prototype_prune" ->
-      s"""WITH $kmeansAsgCtes,
-        |rk AS (
-        |  SELECT vec_id, cluster, round(d2, 6) AS dist2,
-        |    row_number() OVER (PARTITION BY cluster ORDER BY round(d2, 6) DESC, vec_id) AS rn,
-        |    count(*) OVER (PARTITION BY cluster) AS c
-        |  FROM asg)
-        |SELECT vec_id, cluster, dist2, (rn - 1) * 100 < c * 70 AS keep
-        |FROM rk ORDER BY vec_id""".stripMargin,
-    // distinct (shingle-md5, source) tuples -> pair join on the hash ->
-    // overlap coefficient vs the smaller side
-    "q168_source_overlap" ->
-      """WITH t AS (
-        |  SELECT source, string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS tk
-        |  FROM documents),
-        |f AS (
-        |  SELECT DISTINCT source AS src, md5(g) AS fp FROM (
-        |    SELECT source, unnest(list_transform(range(len(tk) - 4),
-        |      i -> tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4]||' '||tk[i+5])) AS g
-        |    FROM t WHERE len(tk) >= 5)),
-        |per AS (SELECT src, count(*) AS n FROM f GROUP BY 1),
-        |sh AS (
-        |  SELECT a.src AS source_a, b.src AS source_b, count(*) AS n_shared
-        |  FROM f a JOIN f b ON a.fp = b.fp AND a.src < b.src
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, n_shared, pa.n AS n_a, pb.n AS n_b,
-        |  round(n_shared::DOUBLE / least(pa.n, pb.n)::DOUBLE, 6) AS overlap
-        |FROM sh JOIN per pa ON pa.src = source_a JOIN per pb ON pb.src = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-    // q38's cosine over cross-label pairs, per-anchor top-3 window
-    "q167_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS anchor_id, c.vec_id AS neg_id, c.label AS neg_label,
-        |    list_sum(list_transform(range(64), i -> a.v[i+1] * c.v[i+1]))
-        |      / (sqrt(list_sum(list_transform(range(64), i -> a.v[i+1] * a.v[i+1])))
-        |       * sqrt(list_sum(list_transform(range(64), i -> c.v[i+1] * c.v[i+1])))) AS cosine
-        |  FROM e a JOIN e c ON a.label <> c.label
-        |  WHERE a.vec_id % 50 = 0),
-        |r AS (
-        |  SELECT anchor_id, neg_id, neg_label, cosine,
-        |    row_number() OVER (PARTITION BY anchor_id ORDER BY cosine DESC, neg_id) AS "rank"
-        |  FROM p)
-        |SELECT anchor_id, neg_id, neg_label, "rank", round(cosine, 4) AS cosine
-        |FROM r WHERE "rank" <= 3 ORDER BY anchor_id, "rank"""".stripMargin,
-    // the bigram twin of q119: pair/history counts from the same token
-    // stream, add-0.5 conditional smoothing over the unigram vocab
-    "q166_bigram_lm" ->
-      """WITH ta AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |bgf AS (
-        |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(range(len(t) - 1), i -> {'w1': t[i+1], 'w2': t[i+2]})) AS b
-        |    FROM ta WHERE len(t) >= 2)),
-        |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bgf GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c12 GROUP BY 1),
-        |vv AS (SELECT count(DISTINCT tok) AS v FROM (SELECT unnest(t) AS tok FROM ta)),
-        |sc AS (
-        |  SELECT doc_id, count(*) AS n_bigrams,
-        |    sum(CAST(ln((c12 + 0.5::DOUBLE) / (c1 + 0.5::DOUBLE * v)) AS DECIMAL(28,12))) AS s
-        |  FROM bgf JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN vv
-        |  GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(sc.n_bigrams, 0) AS n_bigrams,
-        |  CASE WHEN sc.n_bigrams > 0
-        |    THEN round(-(sc.s::DOUBLE) / sc.n_bigrams::DOUBLE, 6) END AS avg_nll
-        |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // DSIR: q106's token/bucket recipe, add-0.5 smoothed bucket
-    // distributions, DECIMAL-summed per-doc log ratios, q163's md5
-    // uniform driving the Gumbel keys
-    "q165_dsir_select" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang = 'en' AS is_target,
-        |    unnest(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS tok
-        |  FROM documents),
-        |tb AS (
-        |  SELECT doc_id, is_target,
-        |    ('0x' || substr(md5('i|' || tok), 1, 15))::BIGINT % 256 AS bucket,
-        |    count(*) AS n_b
-        |  FROM toks WHERE tok <> '' GROUP BY 1, 2, 3),
-        |tot AS (SELECT sum(CASE WHEN is_target THEN n_b ELSE 0 END) AS nt, sum(n_b) AS nr FROM tb),
-        |tc AS (SELECT bucket, sum(n_b) AS ct FROM tb WHERE is_target GROUP BY 1),
-        |rc AS (SELECT bucket, sum(n_b) AS cr FROM tb GROUP BY 1),
-        |ratio AS (
-        |  SELECT r.i AS bucket,
-        |    CAST(floor((ln((COALESCE(ct, 0) + 0.5::DOUBLE) / (nt + 128.0::DOUBLE))
-        |      - ln((COALESCE(cr, 0) + 0.5::DOUBLE) / (nr + 128.0::DOUBLE)))
-        |      * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS lr_micro
-        |  FROM range(256) r(i)
-        |  LEFT JOIN tc ON tc.bucket = r.i
-        |  LEFT JOIN rc ON rc.bucket = r.i
-        |  CROSS JOIN tot),
-        |w AS (
-        |  SELECT tb.doc_id, CAST(sum(tb.n_b) AS BIGINT) AS n_tokens,
-        |    CAST(sum(tb.n_b * ratio.lr_micro) AS BIGINT) AS log_w_micro
-        |  FROM tb JOIN ratio USING (bucket) GROUP BY 1),
-        |k AS (
-        |  SELECT d.doc_id, COALESCE(n_tokens, 0) AS n_tokens,
-        |    COALESCE(log_w_micro, 0) AS log_w_micro,
-        |    COALESCE(log_w_micro, 0)
-        |      + CAST(floor(-ln(-ln((('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT::DOUBLE + 1.0::DOUBLE) / 1152921504606846976.0::DOUBLE)) * 1000000.0::DOUBLE + 0.5::DOUBLE) AS BIGINT) AS gumbel_key_micro
-        |  FROM documents d LEFT JOIN w USING (doc_id)),
-        |sel AS (SELECT doc_id FROM k ORDER BY gumbel_key_micro DESC, doc_id LIMIT 100)
-        |SELECT k.doc_id, k.n_tokens, k.log_w_micro, k.gumbel_key_micro,
-        |  sel.doc_id IS NOT NULL AS selected
-        |FROM k LEFT JOIN sel USING (doc_id)
-        |ORDER BY k.doc_id""".stripMargin,
-    // SemDeDup: q108's deterministic-Lloyd cells + the q38 cosine formula
-    // restricted to in-cell pairs + the min-id survivor rule
-    "q164_semdedup" ->
-      s"""WITH $kmeansAsgCtes,
-        |pr AS (
-        |  SELECT x.vec_id AS a, y.vec_id AS b
-        |  FROM (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) x
-        |  JOIN (SELECT asg.vec_id, asg.cluster, e.v FROM asg JOIN e USING (vec_id)) y
-        |    ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(64), i -> x.v[i+1] * y.v[i+1]))
-        |      / (sqrt(list_sum(list_transform(range(64), i -> x.v[i+1] * x.v[i+1])))
-        |       * sqrt(list_sum(list_transform(range(64), i -> y.v[i+1] * y.v[i+1])))) >= 0.4),
-        |dup AS (SELECT b AS vec_id, min(a) AS dup_of FROM pr GROUP BY b)
-        |SELECT asg.vec_id, asg.cluster, dup.dup_of, dup.dup_of IS NULL AS keep
-        |FROM asg LEFT JOIN dup USING (vec_id)
-        |ORDER BY vec_id""".stripMargin,
-    // the ES key ln(u)/w with u from the shared 60-bit hash; ordering on
-    // the raw double, display rounded at 9
-    "q163_weighted_reservoir" ->
-      """WITH s AS (
-        |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
-        |    ln((('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT::DOUBLE + 1.0::DOUBLE) / 1152921504606846976.0::DOUBLE)
-        |      / CAST(n_chars AS DOUBLE) AS es_key
-        |  FROM documents WHERE CAST(n_chars AS DOUBLE) > 0),
-        |r AS (
-        |  SELECT row_number() OVER (ORDER BY es_key DESC, doc_id) AS sample_rank,
-        |    doc_id, w, es_key
-        |  FROM s)
-        |SELECT sample_rank, doc_id, w, round(es_key, 9) AS es_key
-        |FROM r WHERE sample_rank <= 100 ORDER BY sample_rank""".stripMargin,
-    "q151_logreg" -> logregOracle(3),
-    "q152_calibration" -> calibrationOracle(3),
-    "q153_auc" -> aucOracle(3),
-    // the q151 chain trained on md5 buckets <8000 (trainWhere), scored
-    // over everyone; q-hat by integer-rank order statistic, coverage on
-    // the disjoint test slice
-    "q175_conformal" -> conformalOracle(3),
-    "q154_f1_threshold" -> f1ThresholdOracle(3),
-    // the anti-join law: survivors on disk == original MINUS the keyed
-    // rows; the deleted count rides along as a scalar subquery
-    "q160_takedown" ->
-      """SELECT d.doc_id, d.lang, d.source, d.n_chars,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents
-        |   WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 19 = 0) AS rows_deleted
-        |FROM documents d
-        |WHERE ('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT % 19 <> 0
-        |ORDER BY d.doc_id""".stripMargin,
-    // q128's fusion SQL (popularity x recency lists) -> fused rank -> the
-    // q150 metric tail
-    "q159_hybrid_eval" ->
-      """WITH c AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc, CAST(ts AS TIMESTAMP) AS ts, event_type
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |a AS (
-        |  SELECT doc, rank_a FROM (
-        |    SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank_a
-        |    FROM c WHERE event_type = 'click' GROUP BY doc)
-        |  WHERE rank_a <= 100),
-        |b AS (
-        |  SELECT doc, rank_b FROM (
-        |    SELECT doc, row_number() OVER (ORDER BY max(ts) DESC, doc) AS rank_b
-        |    FROM c GROUP BY doc)
-        |  WHERE rank_b <= 100),
-        |f AS (
-        |  SELECT COALESCE(a.doc, b.doc) AS doc,
-        |    round(COALESCE(1.0::DOUBLE / (60 + rank_a), 0) + COALESCE(1.0::DOUBLE / (60 + rank_b), 0), 6) AS rrf
-        |  FROM a FULL OUTER JOIN b ON a.doc = b.doc),
-        |rk AS (SELECT doc, row_number() OVER (ORDER BY rrf DESC, doc) AS rank FROM f),
-        |pc AS (SELECT doc, CAST(count(*) AS BIGINT) AS np FROM c WHERE event_type = 'purchase' GROUP BY 1),
-        |av AS (SELECT CAST(sum(np) AS DOUBLE) / count(*) AS avg_np FROM pc),
-        |rel AS (SELECT doc FROM pc CROSS JOIN av WHERE np::DOUBLE >= 1.2::DOUBLE * avg_np),
-        |j AS (SELECT rk.rank FROM rk JOIN rel USING (doc)),
-        |s1 AS (SELECT CAST(count(*) AS BIGINT) AS n_relevant FROM rel),
-        |s2 AS (
-        |  SELECT min(rank) AS first_rank,
-        |    CAST(COALESCE(sum(CASE WHEN rank <= 10
-        |      THEN CAST(ln(2.0::DOUBLE) / ln((rank + 1)::DOUBLE) AS DECIMAL(28,12)) END), 0) AS DOUBLE) AS dcg
-        |  FROM j),
-        |ideal AS (
-        |  SELECT n_relevant, CAST(unnest(range(1, least(10, n_relevant) + 1)) AS INT) AS i FROM s1),
-        |ff AS (
-        |  SELECT n_relevant,
-        |    CAST(sum(CAST(ln(2.0::DOUBLE) / ln((i + 1)::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS idcg
-        |  FROM ideal GROUP BY 1)
-        |SELECT ff.n_relevant, s2.first_rank,
-        |  round(CASE WHEN s2.first_rank IS NULL THEN 0.0::DOUBLE ELSE 1.0::DOUBLE / s2.first_rank END, 6) AS mrr,
-        |  round(s2.dcg / ff.idcg, 6) AS ndcg
-        |FROM ff CROSS JOIN s2""".stripMargin,
-    // q78's band/verify SQL with corpus-vs-eval roles and a per-corpus-doc
-    // argmax report (max jaccard, ties to the lower eval id)
-    "q158_fuzzy_decontam" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS new_id, y.id AS existing_id
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash
-        |  WHERE x.id % 17 <> 0 AND y.id % 17 = 0),
-        |verified AS (
-        |  SELECT new_id, existing_id,
-        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j
-        |  FROM cand JOIN sets sa ON new_id = sa.id JOIN sets sb ON existing_id = sb.id),
-        |flagged AS (
-        |  SELECT new_id, existing_id, round(j, 4) AS jaccard FROM verified WHERE j >= 0.5),
-        |best AS (
-        |  SELECT new_id AS doc_id, jaccard, existing_id,
-        |    row_number() OVER (PARTITION BY new_id ORDER BY jaccard DESC, existing_id) AS rn,
-        |    count(*) OVER (PARTITION BY new_id) AS n_eval_matches
-        |  FROM flagged)
-        |SELECT doc_id, CAST(n_eval_matches AS BIGINT) AS n_eval_matches,
-        |  jaccard AS best_jaccard, existing_id AS matched_eval_doc
-        |FROM best WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // q73's edge CTE with dist = 1/weight, then 4 unrolled relaxations
-    // (each: carry UNION relax, min per node) from the lowest node id
-    "q157_weighted_paths" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst, 1.0::DOUBLE / count(*) AS dd
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v, dd FROM ce UNION ALL SELECT dst, src, dd FROM ce),
-        |lm AS (SELECT min(u) AS id FROM sym),
-        |d0 AS (SELECT id, 0.0::DOUBLE AS d FROM lm),
-        |d1 AS (SELECT id, min(d) AS d FROM (
-        |  SELECT id, d FROM d0 UNION ALL
-        |  SELECT s.v AS id, d0.d + s.dd AS d FROM d0 JOIN sym s ON s.u = d0.id) GROUP BY id),
-        |d2 AS (SELECT id, min(d) AS d FROM (
-        |  SELECT id, d FROM d1 UNION ALL
-        |  SELECT s.v AS id, d1.d + s.dd AS d FROM d1 JOIN sym s ON s.u = d1.id) GROUP BY id),
-        |d3 AS (SELECT id, min(d) AS d FROM (
-        |  SELECT id, d FROM d2 UNION ALL
-        |  SELECT s.v AS id, d2.d + s.dd AS d FROM d2 JOIN sym s ON s.u = d2.id) GROUP BY id),
-        |d4 AS (SELECT id, min(d) AS d FROM (
-        |  SELECT id, d FROM d3 UNION ALL
-        |  SELECT s.v AS id, d3.d + s.dd AS d FROM d3 JOIN sym s ON s.u = d3.id) GROUP BY id)
-        |SELECT id AS document_id, round(d, 6) AS dist FROM d4 ORDER BY document_id""".stripMargin,
-    // q130's register build at (day, bucket) grain, dense day x 64 spine,
-    // RANGE window rolling max on epoch-day, the shared estimator tail,
-    // and the exact trailing-7d distinct beside it
-    "q156_rolling_distinct" ->
-      """WITH ev AS (
-        |  SELECT CAST(ts AS DATE) AS event_date, CAST(user_id AS VARCHAR) AS sid FROM events),
-        |h AS (SELECT event_date, md5(sid) AS hex FROM ev),
-        |t AS (
-        |  SELECT event_date,
-        |    CAST(('0x' || substring(hex, 1, 2))::BIGINT % 64 AS INT) AS bucket,
-        |    substring(hex, 3, 13) AS tail,
-        |    length(regexp_extract(substring(hex, 3, 13), '^(0*)', 1)) AS z
-        |  FROM h),
-        |rr AS (
-        |  SELECT event_date, bucket,
-        |    CASE WHEN z = 13 THEN 53
-        |         ELSE 4 * z + CASE WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 8 THEN 1
-        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 4 THEN 2
-        |                           WHEN ('0x' || substring(tail, CAST(z + 1 AS INT), 1))::BIGINT >= 2 THEN 3
-        |                           ELSE 4 END
-        |    END AS rho
-        |  FROM t),
-        |daily AS (SELECT event_date, bucket, max(rho) AS reg FROM rr GROUP BY 1, 2),
-        |spine AS (
-        |  SELECT d.event_date, CAST(unnest(range(64)) AS INT) AS bucket
-        |  FROM (SELECT DISTINCT event_date FROM ev) d),
-        |dense AS (
-        |  SELECT s.event_date, s.bucket, daily.reg,
-        |    (s.event_date - DATE '1970-01-01') AS di
-        |  FROM spine s LEFT JOIN daily ON s.event_date = daily.event_date AND s.bucket = daily.bucket),
-        |rolled AS (
-        |  SELECT event_date, bucket,
-        |    max(reg) OVER (PARTITION BY bucket ORDER BY di RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS reg
-        |  FROM dense),
-        |regs AS (SELECT event_date, bucket, reg FROM rolled WHERE reg IS NOT NULL),
-        |agg AS (
-        |  SELECT event_date, count(*) AS used,
-        |    sum(CAST(pow(2.0, -reg) AS DECIMAL(38,30))) AS s_present
-        |  FROM regs GROUP BY 1),
-        |fin AS (
-        |  SELECT event_date,
-        |    CAST(s_present AS DOUBLE) + (64 - used) AS s,
-        |    64 - used AS v
-        |  FROM agg),
-        |est AS (
-        |  SELECT event_date,
-        |    round(CASE WHEN (0.709::DOUBLE * 64 * 64) / s <= 160 AND v > 0
-        |               THEN 64.0::DOUBLE * ln(64.0::DOUBLE / v)
-        |               ELSE (0.709::DOUBLE * 64 * 64) / s END, 4) AS est_distinct
-        |  FROM fin),
-        |exact AS (
-        |  SELECT d.event_date, count(DISTINCT e.sid) AS exact_distinct
-        |  FROM (SELECT DISTINCT event_date FROM ev) d
-        |  JOIN ev e ON e.event_date BETWEEN d.event_date - 6 AND d.event_date
-        |  GROUP BY 1)
-        |SELECT est.event_date, est.est_distinct, exact.exact_distinct
-        |FROM est JOIN exact USING (event_date) ORDER BY est.event_date""".stripMargin,
-    "q155_split_report" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_unique,
-        |    round(CAST(len(list_filter(toks, x -> x IN ('the','a','an','of','and','to','in','is','it','for'))) AS DOUBLE) / len(toks), 4) AS stopword_ratio
-        |  FROM t),
-        |sq AS (
-        |  SELECT doc_id, round(least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 40.0
-        |      + (CAST(n_unique AS DOUBLE) / n_tokens) * 40.0
-        |      + CASE WHEN stopword_ratio BETWEEN 0.01 AND 0.6 THEN 20.0 ELSE 0.0 END, 2) AS quality_score
-        |  FROM s),
-        |lab AS (
-        |  SELECT doc_id, CASE WHEN quality_score >= 60 THEN 1 ELSE 0 END AS y,
-        |    ('0x' || substr(md5(doc_id::VARCHAR || '|split'), 1, 8))::BIGINT % 10 AS b
-        |  FROM sq),
-        |sp AS (
-        |  SELECT CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split, y
-        |  FROM lab)
-        |SELECT split, CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS n_pos,
-        |  round(sum(y)::DOUBLE / count(*), 6) AS pos_rate
-        |FROM sp GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q150_ranking_metrics" ->
-      """WITH clicks AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc FROM events WHERE event_type = 'click'),
-        |rk AS (
-        |  SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank
-        |  FROM clicks GROUP BY doc),
-        |rel AS (
-        |  SELECT DISTINCT CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT rk.rank FROM rk JOIN rel USING (doc)),
-        |s1 AS (SELECT CAST(count(*) AS BIGINT) AS n_relevant FROM rel),
-        |s2 AS (
-        |  SELECT min(rank) AS first_rank,
-        |    CAST(COALESCE(sum(CASE WHEN rank <= 10
-        |      THEN CAST(ln(2.0::DOUBLE) / ln((rank + 1)::DOUBLE) AS DECIMAL(28,12)) END), 0) AS DOUBLE) AS dcg
-        |  FROM j),
-        |ideal AS (
-        |  SELECT n_relevant, CAST(unnest(range(1, least(10, n_relevant) + 1)) AS INT) AS i FROM s1),
-        |f AS (
-        |  SELECT n_relevant,
-        |    CAST(sum(CAST(ln(2.0::DOUBLE) / ln((i + 1)::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS idcg
-        |  FROM ideal GROUP BY 1)
-        |SELECT f.n_relevant, s2.first_rank,
-        |  round(CASE WHEN s2.first_rank IS NULL THEN 0.0::DOUBLE ELSE 1.0::DOUBLE / s2.first_rank END, 6) AS mrr,
-        |  round(s2.dcg / f.idcg, 6) AS ndcg
-        |FROM f CROSS JOIN s2""".stripMargin,
-    "q146_gini" ->
-      """WITH c AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc FROM events
-        |  WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |x AS (SELECT doc, count(*) AS x FROM c GROUP BY 1),
-        |r AS (SELECT doc, x, row_number() OVER (ORDER BY x, doc) AS i FROM x),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_keys, CAST(sum(x) AS BIGINT) AS total,
-        |    CAST(sum(i * x) AS BIGINT) AS sixi
-        |  FROM r)
-        |SELECT n_keys, total,
-        |  round((2 * sixi - (n_keys + 1) * total)::DOUBLE / (n_keys::DOUBLE * total::DOUBLE), 6) AS gini
-        |FROM a""".stripMargin,
-    "q147_burstiness" ->
-      """WITH hourly AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d, hour(CAST(ts AS TIMESTAMP)) AS h, count(*) AS x
-        |  FROM events GROUP BY 1, 2, 3),
-        |a AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_buckets,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM hourly GROUP BY 1)
-        |SELECT event_type, n_buckets,
-        |  round(sx::DOUBLE / n_buckets, 6) AS mean,
-        |  round((sxx::DOUBLE / n_buckets - (sx::DOUBLE / n_buckets) * (sx::DOUBLE / n_buckets))
-        |        / (sx::DOUBLE / n_buckets), 6) AS vmr
-        |FROM a ORDER BY event_type""".stripMargin,
-    // dense source x top-500-vocab grid, JSD terms guarded per side and
-    // DECIMAL-cast before the sum (q134 recipe)
-    "q145_source_divergence" ->
-      """WITH tk AS (
-        |  SELECT source, unnest(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')) AS token
-        |  FROM documents),
-        |cnt AS (SELECT source, token, count(*) AS c FROM tk GROUP BY 1, 2),
-        |voc AS (
-        |  SELECT token FROM (
-        |    SELECT token, row_number() OVER (ORDER BY sum(c) DESC, token) AS rk
-        |    FROM cnt GROUP BY token) WHERE rk <= 500),
-        |src AS (SELECT DISTINCT source FROM documents),
-        |dense AS (
-        |  SELECT s.source, v.token, COALESCE(c.c, 0) AS c
-        |  FROM src s CROSS JOIN voc v
-        |  LEFT JOIN cnt c ON c.source = s.source AND c.token = v.token),
-        |tot AS (SELECT source, CAST(sum(c) AS BIGINT) AS tot FROM dense GROUP BY 1),
-        |p AS (
-        |  SELECT d.source, d.token, d.c::DOUBLE / t.tot AS p
-        |  FROM dense d JOIN tot t USING (source) WHERE t.tot > 0),
-        |pair AS (
-        |  SELECT x.source AS source_a, y.source AS source_b, x.p AS p, y.p AS q
-        |  FROM p x JOIN p y ON x.token = y.token AND x.source < y.source),
-        |terms AS (
-        |  SELECT source_a, source_b,
-        |    CAST(0.5::DOUBLE * (CASE WHEN p > 0 THEN p * ln(2.0::DOUBLE * p / (p + q)) ELSE 0.0::DOUBLE END)
-        |       + 0.5::DOUBLE * (CASE WHEN q > 0 THEN q * ln(2.0::DOUBLE * q / (p + q)) ELSE 0.0::DOUBLE END) AS DECIMAL(28,12)) AS term
-        |  FROM pair)
-        |SELECT source_a, source_b, round(CAST(sum(term) AS DOUBLE), 6) AS jsd
-        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // q131's tokenization + len>=4 filter, adjacency bigrams via index
-    // ranges, least/greatest undirected pairs, then the generated q81
-    // iteration tail; top-20 by (rank desc, token)
-    "q144_textrank" ->
-      s"""WITH toks AS (
-        |  SELECT list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')), ' '), x -> x <> '') AS t0
-        |  FROM documents),
-        |seq AS (SELECT list_filter(t0, x -> len(x) >= 4) AS t FROM toks),
-        |bg0 AS (
-        |  SELECT t, CAST(unnest(range(0, len(t) - 1)) AS INT) AS i
-        |  FROM seq WHERE len(t) >= 2),
-        |bgp AS (SELECT t[i+1] AS a, t[i+2] AS b FROM bg0),
-        |ce AS (
-        |  SELECT least(a, b) AS src, greatest(a, b) AS dst, CAST(count(*) AS DOUBLE) AS w
-        |  FROM bgp WHERE a <> b GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v, w FROM ce UNION ALL SELECT dst AS u, src AS v, w FROM ce),
-        |${pageRankIterCtes(5)},
-        |sel AS (SELECT id AS token, r * (SELECT n FROM nn) AS pr FROM p5),
-        |top AS (SELECT token, pr, row_number() OVER (ORDER BY pr DESC, token) AS rk FROM sel)
-        |SELECT token, round(pr, 6) AS textrank FROM top WHERE rk <= 20
-        |ORDER BY pr DESC, token""".stripMargin,
-    // q108's assignment chain + grid metrics: integer C(n,2) sums via >>1,
-    // the q134 DECIMAL MI recipe, entropy terms DECIMAL-cast the same way
-    "q143_cluster_quality" ->
-      s"""WITH $kmeansAsgCtes,
-        |lab AS (SELECT vec_id, label FROM embeddings),
-        |g AS (
-        |  SELECT a.cluster AS cl, l.label AS lb, count(*) AS c
-        |  FROM asg a JOIN lab l USING (vec_id) GROUP BY 1, 2),
-        |ma AS (SELECT cl, CAST(sum(c) AS BIGINT) AS a FROM g GROUP BY 1),
-        |mb AS (SELECT lb, CAST(sum(c) AS BIGINT) AS b FROM g GROUP BY 1),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM g),
-        |sidx AS (SELECT CAST(sum((c * (c - 1)) >> 1) AS BIGINT) AS sidx FROM g),
-        |saa AS (SELECT CAST(sum((a * (a - 1)) >> 1) AS BIGINT) AS sa FROM ma),
-        |sbb AS (SELECT CAST(sum((b * (b - 1)) >> 1) AS BIGINT) AS sb FROM mb),
-        |pur AS (SELECT CAST(sum(mx) AS BIGINT) AS pmax FROM (SELECT cl, max(c) AS mx FROM g GROUP BY 1)),
-        |mi AS (
-        |  SELECT CAST(sum(CAST((g.c::DOUBLE / n) * ln(n::DOUBLE * g.c::DOUBLE / (a::DOUBLE * b::DOUBLE)) AS DECIMAL(28,12))) AS DOUBLE) AS mi
-        |  FROM g JOIN ma USING (cl) JOIN mb USING (lb) CROSS JOIN t),
-        |hcc AS (SELECT -CAST(sum(CAST((a::DOUBLE / n) * ln(a::DOUBLE / n) AS DECIMAL(28,12))) AS DOUBLE) AS hc FROM ma CROSS JOIN t),
-        |hll AS (SELECT -CAST(sum(CAST((b::DOUBLE / n) * ln(b::DOUBLE / n) AS DECIMAL(28,12))) AS DOUBLE) AS hl FROM mb CROSS JOIN t),
-        |cn AS (SELECT ((n * (n - 1)) >> 1)::DOUBLE AS cn FROM t)
-        |SELECT n,
-        |  round(pmax::DOUBLE / n, 6) AS purity,
-        |  round(CASE WHEN (sa + sb)::DOUBLE / 2.0::DOUBLE = sa::DOUBLE * sb::DOUBLE / cn THEN 1.0::DOUBLE
-        |    ELSE (sidx::DOUBLE - sa::DOUBLE * sb::DOUBLE / cn)
-        |         / ((sa + sb)::DOUBLE / 2.0::DOUBLE - sa::DOUBLE * sb::DOUBLE / cn) END, 6) AS ari,
-        |  round(CASE WHEN hc * hl > 0 THEN mi / sqrt(hc * hl) ELSE 0.0::DOUBLE END, 6) AS nmi
-        |FROM t CROSS JOIN sidx CROSS JOIN saa CROSS JOIN sbb CROSS JOIN pur
-        |CROSS JOIN mi CROSS JOIN hcc CROSS JOIN hll CROSS JOIN cn""".stripMargin,
-    "q141_k_anonymity" ->
-      """SELECT event_type, CAST(floor(value / 100) AS INT) AS value_band,
-        |  CAST(count(*) AS BIGINT) AS class_size,
-        |  count(DISTINCT user_id) AS n_sensitive_distinct,
-        |  count(*) < 5 AS k_risky,
-        |  count(DISTINCT user_id) < 3 AS l_risky
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // DECIMAL-cast pow terms before the normalizer sum; rate arithmetic
-    // all ::DOUBLE; the q44 md5-bucket gate with a '|tsamp' salt
-    "q140_temperature_resample" ->
-      """WITH per AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(sum(n_docs) AS BIGINT) AS n_total,
-        |    CAST(sum(CAST(pow(n_docs, 0.5::DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS wsum
-        |  FROM per),
-        |r AS (
-        |  SELECT source, n_docs,
-        |    pow(n_docs, 0.5::DOUBLE) / wsum AS share,
-        |    least(1.0::DOUBLE, pow(n_docs, 0.5::DOUBLE) / wsum * n_total / n_docs) AS rate
-        |  FROM per CROSS JOIN tot),
-        |rb AS (SELECT source, n_docs, share, CAST(floor(rate * 10000) AS INT) AS rate_bp FROM r),
-        |k AS (
-        |  SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept
-        |  FROM documents d JOIN rb ON d.source IS NOT DISTINCT FROM rb.source
-        |  WHERE ('0x' || substr(md5(d.doc_id::VARCHAR || '|tsamp'), 1, 8))::BIGINT % 10000 < rate_bp
-        |  GROUP BY 1)
-        |SELECT rb.source, rb.n_docs, round(rb.share, 6) AS share, rb.rate_bp,
-        |  COALESCE(k.n_kept, 0) AS n_kept
-        |FROM rb LEFT JOIN k ON rb.source IS NOT DISTINCT FROM k.source
-        |ORDER BY rb.source""".stripMargin,
-    // q32's inverted-index CTEs; both directions projected from the one
-    // unordered pair aggregate, containment = c / n_src
-    "q139_containment" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |inv AS (SELECT id, len(sh) AS n_sh, unnest(sh) AS shingle FROM sets),
-        |common AS (
-        |  SELECT x.id AS doc_a, y.id AS doc_b, x.n_sh AS na, y.n_sh AS nb, count(*) AS c
-        |  FROM inv x JOIN inv y ON x.shingle = y.shingle AND x.id < y.id
-        |  GROUP BY 1, 2, 3, 4),
-        |directed AS (
-        |  SELECT doc_a AS doc_src, doc_b AS doc_dst, na AS n_src, c FROM common
-        |  UNION ALL
-        |  SELECT doc_b AS doc_src, doc_a AS doc_dst, nb AS n_src, c FROM common)
-        |SELECT doc_src, doc_dst, round(CAST(c AS DOUBLE) / CAST(n_src AS DOUBLE), 4) AS containment
-        |FROM directed WHERE CAST(c AS DOUBLE) / CAST(n_src AS DOUBLE) >= 0.7
-        |ORDER BY doc_src, doc_dst""".stripMargin,
-    // q33's cosine + 4dp rounding, then the greedy unrolled as five
-    // LIMIT-1 steps; (1 - 0.7::DOUBLE) keeps the penalty coefficient the
-    // same IEEE double Scala's (1 - lambda) produces
-    "q138_mmr_rerank" ->
-      """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-        |c AS (SELECT vec_id AS id, embedding AS ce FROM embeddings WHERE vec_id <> 0),
-        |rel0 AS (
-        |  SELECT id,
-        |    list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(ce) + 1), i -> CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(qe) + 1), i -> CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
-        |  FROM c CROSS JOIN q),
-        |cand AS (
-        |  SELECT id, round(cos, 4) AS rel
-        |  FROM (SELECT id, cos, row_number() OVER (ORDER BY cos DESC, id) AS rk FROM rel0)
-        |  WHERE rk <= 20),
-        |v AS (SELECT c.id, c.ce FROM c JOIN cand USING (id)),
-        |sp AS (
-        |  SELECT a.id AS ia, b.id AS ib,
-        |    round(list_sum(list_transform(range(1, len(a.ce) + 1), i -> CAST(a.ce[i] AS DOUBLE) * CAST(b.ce[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(a.ce) + 1), i -> CAST(a.ce[i] AS DOUBLE) * CAST(a.ce[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(b.ce) + 1), i -> CAST(b.ce[i] AS DOUBLE) * CAST(b.ce[i] AS DOUBLE))))), 4) AS sim
-        |  FROM v a JOIN v b ON a.id < b.id),
-        |ss AS (SELECT ia, ib, sim FROM sp UNION ALL SELECT ib AS ia, ia AS ib, sim FROM sp),
-        |s1 AS (SELECT id, rel, 0.7::DOUBLE * rel AS score FROM cand ORDER BY score DESC, id LIMIT 1),
-        |r2 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM s1)),
-        |p2 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r2 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM s1) GROUP BY 1, 2),
-        |s2 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p2 ORDER BY score DESC, id LIMIT 1),
-        |sel2 AS (SELECT id FROM s1 UNION ALL SELECT id FROM s2),
-        |r3 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel2)),
-        |p3 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r3 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel2) GROUP BY 1, 2),
-        |s3 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p3 ORDER BY score DESC, id LIMIT 1),
-        |sel3 AS (SELECT id FROM sel2 UNION ALL SELECT id FROM s3),
-        |r4 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel3)),
-        |p4 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r4 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel3) GROUP BY 1, 2),
-        |s4 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p4 ORDER BY score DESC, id LIMIT 1),
-        |sel4 AS (SELECT id FROM sel3 UNION ALL SELECT id FROM s4),
-        |r5 AS (SELECT id, rel FROM cand WHERE id NOT IN (SELECT id FROM sel4)),
-        |p5 AS (SELECT r.id, r.rel, max(ss.sim) AS pen FROM r5 r JOIN ss ON ss.ia = r.id AND ss.ib IN (SELECT id FROM sel4) GROUP BY 1, 2),
-        |s5 AS (SELECT id, rel, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * pen AS score FROM p5 ORDER BY score DESC, id LIMIT 1),
-        |fin AS (
-        |  SELECT 1 AS mmr_rank, id, rel, score FROM s1
-        |  UNION ALL SELECT 2, id, rel, score FROM s2
-        |  UNION ALL SELECT 3, id, rel, score FROM s3
-        |  UNION ALL SELECT 4, id, rel, score FROM s4
-        |  UNION ALL SELECT 5, id, rel, score FROM s5)
-        |SELECT mmr_rank, id AS vec_id, rel AS relevance, round(score, 6) AS mmr_score
-        |FROM fin ORDER BY mmr_rank""".stripMargin,
-    // q73's co-click edge CTE + four unrolled simultaneous peels (each
-    // round: degree >= 3 survivors, edges kept iff both endpoints live)
-    "q137_kcore" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |l0 AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst, src FROM ce),
-        |k1 AS (SELECT u FROM l0 GROUP BY u HAVING count(*) >= 3),
-        |l1 AS (SELECT l.u, l.v FROM l0 l JOIN k1 a ON l.u = a.u JOIN k1 b ON l.v = b.u),
-        |k2 AS (SELECT u FROM l1 GROUP BY u HAVING count(*) >= 3),
-        |l2 AS (SELECT l.u, l.v FROM l1 l JOIN k2 a ON l.u = a.u JOIN k2 b ON l.v = b.u),
-        |k3 AS (SELECT u FROM l2 GROUP BY u HAVING count(*) >= 3),
-        |l3 AS (SELECT l.u, l.v FROM l2 l JOIN k3 a ON l.u = a.u JOIN k3 b ON l.v = b.u),
-        |k4 AS (SELECT u FROM l3 GROUP BY u HAVING count(*) >= 3),
-        |l4 AS (SELECT l.u, l.v FROM l3 l JOIN k4 a ON l.u = a.u JOIN k4 b ON l.v = b.u)
-        |SELECT u AS document_id, CAST(count(*) AS BIGINT) AS core_degree
-        |FROM l4 GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q131's tokenization, stride-1 windows, the portable 60-bit md5
-    // fingerprint, and the struct-min first location as a two-level group
-    "q136_span_dedup" -> spanDedupOracle,
-    // the law gate: the oracle is the WHOLE-CORPUS rebuild verbatim; only
-    // the Spark side goes through the merged incremental index
-    "q149_span_dedup_increment" -> spanDedupOracle,
-    "q133_seasonal_anomalies" ->
-      """WITH hourly AS (
-        |  SELECT CAST(ts AS DATE) AS event_date, hour(CAST(ts AS TIMESTAMP)) AS "hour", count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |base AS (SELECT "hour", quantile_cont(n, 0.5) AS baseline_median FROM hourly GROUP BY 1)
-        |SELECT event_date, hourly."hour" AS "hour", n, baseline_median,
-        |  round(n / baseline_median, 4) AS ratio,
-        |  n > 2.0::DOUBLE * baseline_median AS anomalous
-        |FROM hourly JOIN base ON hourly."hour" = base."hour"
-        |ORDER BY event_date, hourly."hour"""".stripMargin,
-    "q134_mutual_information" ->
-      """WITH c AS (
-        |  SELECT event_type AS a, hour(CAST(ts AS TIMESTAMP)) AS b FROM events),
-        |g AS (SELECT a, b, count(*) AS c FROM c GROUP BY 1, 2),
-        |ma AS (SELECT a, CAST(sum(c) AS BIGINT) AS ca FROM g GROUP BY 1),
-        |mb AS (SELECT b, CAST(sum(c) AS BIGINT) AS cb FROM g GROUP BY 1),
-        |t AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM g)
-        |SELECT n,
-        |  round(CAST(sum(CAST((g.c::DOUBLE / n) * ln(n::DOUBLE * g.c::DOUBLE / (ca::DOUBLE * cb::DOUBLE)) AS DECIMAL(28,12))) AS DOUBLE), 6) AS mi
-        |FROM g JOIN ma USING (a) JOIN mb USING (b) CROSS JOIN t
-        |GROUP BY n""".stripMargin,
-    "q131_passage_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '') AS toks
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, toks, CAST(unnest(range(0, len(toks), 48)) AS INT) AS start
-        |  FROM t WHERE len(toks) > 0)
-        |SELECT doc_id, CAST(start / 48 AS INT) AS passage_idx,
-        |  len(toks[start+1:start+64]) AS n_tokens,
-        |  array_to_string(toks[start+1:start+64], ' ') AS passage
-        |FROM s ORDER BY doc_id, passage_idx""".stripMargin,
-    "q132_subsample_ci" ->
-      """WITH v AS (
-        |  SELECT o_orderkey AS id, o_totalprice::DOUBLE AS v FROM orders
-        |  WHERE o_totalprice IS NOT NULL),
-        |r AS (SELECT id, v, unnest(range(20)) AS rep FROM v),
-        |sel AS (
-        |  SELECT rep, v FROM r
-        |  WHERE ('0x' || substring(md5(rep::VARCHAR || '|' || id::VARCHAR), 1, 8))::BIGINT % 10000 < 5000),
-        |m AS (SELECT rep, CAST(sum(CAST(v AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS m FROM sel GROUP BY rep),
-        |band AS (SELECT quantile_cont(m, [0.025, 0.975]) AS q FROM m),
-        |tot AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CAST(v AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS mean_raw
-        |  FROM v)
-        |SELECT n, round(mean_raw, 6) AS mean, round(q[1], 6) AS ci_lo, round(q[2], 6) AS ci_hi
-        |FROM tot CROSS JOIN band""".stripMargin,
-    // q39's bucketed pair SQL at 0.2 + degree roles + recursive closure
-    // over the core-core subgraph + min-cluster border attachment
-    "q129_density_clusters" ->
-      """WITH RECURSIVE bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.2),
-        |sym AS (SELECT doc_a AS id, doc_b AS nb FROM p UNION ALL SELECT doc_b, doc_a FROM p),
-        |core AS (SELECT id FROM sym GROUP BY id HAVING count(*) >= 2),
-        |csym AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM p
-        |  WHERE doc_a IN (SELECT id FROM core) AND doc_b IN (SELECT id FROM core)
-        |  UNION
-        |  SELECT doc_b AS a, doc_a AS b FROM p
-        |  WHERE doc_a IN (SELECT id FROM core) AND doc_b IN (SELECT id FROM core)),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM core
-        |  UNION
-        |  SELECT reach.id, csym.b FROM reach JOIN csym ON csym.a = reach.r),
-        |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-        |border AS (
-        |  SELECT s.id, min(cl.cluster_id) AS cluster_id
-        |  FROM sym s JOIN cl ON s.nb = cl.id
-        |  WHERE s.id NOT IN (SELECT id FROM core)
-        |  GROUP BY s.id)
-        |SELECT v.vec_id,
-        |  CASE WHEN cl.id IS NOT NULL THEN 'core'
-        |       WHEN border.id IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
-        |  COALESCE(cl.cluster_id, border.cluster_id) AS cluster_id
-        |FROM embeddings v
-        |LEFT JOIN cl ON v.vec_id = cl.id
-        |LEFT JOIN border ON v.vec_id = border.id
-        |ORDER BY vec_id""".stripMargin,
-    "q128_rrf_fusion" ->
-      """WITH c AS (
-        |  SELECT CAST(props->>'$.k' AS INTEGER) AS doc, CAST(user_id AS VARCHAR) AS sid
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |a AS (
-        |  SELECT doc, rank_a FROM (
-        |    SELECT doc, row_number() OVER (ORDER BY count(*) DESC, doc) AS rank_a
-        |    FROM c GROUP BY doc)
-        |  WHERE rank_a <= 100),
-        |b AS (
-        |  SELECT doc, rank_b FROM (
-        |    SELECT doc, row_number() OVER (ORDER BY count(DISTINCT sid) DESC, doc) AS rank_b
-        |    FROM c GROUP BY doc)
-        |  WHERE rank_b <= 100)
-        |SELECT COALESCE(a.doc, b.doc) AS document_id, rank_a, rank_b,
-        |  round(COALESCE(1.0::DOUBLE / (60 + rank_a), 0) + COALESCE(1.0::DOUBLE / (60 + rank_b), 0), 6) AS rrf
-        |FROM a FULL OUTER JOIN b ON a.doc = b.doc
-        |ORDER BY rrf DESC, document_id""".stripMargin,
-    // q56's graph CTEs + 3 unrolled LPA sweeps; the row_number tie-break
-    // (count desc, label asc) mirrors the engine's struct-min argmax
-    "q127_label_propagation" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst AS u, src AS v FROM ce),
-        |l0 AS (SELECT DISTINCT u AS id, u AS label FROM sym),
-        |r1 AS (
-        |  SELECT id, label FROM (
-        |    SELECT s.u AS id, l.label, count(*) AS c,
-        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
-        |    FROM sym s JOIN l0 l ON s.v = l.id GROUP BY s.u, l.label)
-        |  WHERE rn = 1),
-        |r2 AS (
-        |  SELECT id, label FROM (
-        |    SELECT s.u AS id, l.label, count(*) AS c,
-        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
-        |    FROM sym s JOIN r1 l ON s.v = l.id GROUP BY s.u, l.label)
-        |  WHERE rn = 1),
-        |r3 AS (
-        |  SELECT id, label FROM (
-        |    SELECT s.u AS id, l.label, count(*) AS c,
-        |      row_number() OVER (PARTITION BY s.u ORDER BY count(*) DESC, l.label) AS rn
-        |    FROM sym s JOIN r2 l ON s.v = l.id GROUP BY s.u, l.label)
-        |  WHERE rn = 1)
-        |SELECT id AS document_id, label AS community FROM r3
-        |ORDER BY document_id""".stripMargin,
-    "q56_doc_pagerank" ->
-      """WITH clicks AS (
-        |  SELECT DISTINCT CAST(user_id AS VARCHAR) AS sid, CAST(props->>'$.k' AS INTEGER) AS doc
-        |  FROM events WHERE CAST(props->>'$.k' AS INTEGER) IS NOT NULL),
-        |ok AS (SELECT sid FROM clicks GROUP BY sid HAVING count(*) <= 100),
-        |ce AS (
-        |  SELECT a.doc AS src, b.doc AS dst
-        |  FROM clicks a JOIN ok USING (sid) JOIN clicks b ON a.sid = b.sid AND a.doc < b.doc
-        |  GROUP BY 1, 2),
-        |sym AS (SELECT src AS u, dst AS v FROM ce UNION ALL SELECT dst AS u, src AS v FROM ce),
-        |deg AS (SELECT u, count(*) AS d FROM sym GROUP BY u),
-        |nodes AS (SELECT DISTINCT u AS id FROM sym),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |p0 AS (SELECT id, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS r FROM nodes),
-        |p1 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p0 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p2 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p1 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p3 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p2 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p4 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p3 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id),
-        |p5 AS (
-        |  SELECT nd.id, (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-        |    + CAST(0.85 AS DOUBLE) * COALESCE(sum(p.r / dg.d), 0) AS r
-        |  FROM nodes nd LEFT JOIN sym s ON s.v = nd.id
-        |  LEFT JOIN p4 p ON s.u = p.id LEFT JOIN deg dg ON s.u = dg.u
-        |  GROUP BY nd.id)
-        |SELECT id AS document_id,
-        |  CAST(floor(r * (SELECT n FROM nn) * 1000000 + 0.5) AS BIGINT) AS pagerank_micro
-        |FROM p5 ORDER BY document_id""".stripMargin,
-    "q49_dedup_clusters" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM p
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM p),
-        |reach(id, r) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
-        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    // q49's transitive closure, but over the LSH-bucketed pair set (q39's
-    // generator): candidates exist only where the 6-axis sign buckets agree
-    "q72_dedup_clusters_lsh" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range(6), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0 THEN (1 << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM p
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM p),
-        |reach(id, r) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
-        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    // q72's closure with the signature width derived from the corpus size
-    // by integer bit-length arithmetic (no log anywhere): b =
-    // min(len(bin(ceil(n/32)-1)), 62), ≡ ceil(log2(n/32)) clamped
-    "q243_dedup_clusters_lsh_adaptive" ->
-      """WITH RECURSIVE bits AS (
-        |  SELECT least(length(bin(((count(*) + 31) // 32) - 1)), 62) AS b
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_sum(list_transform(range((SELECT b FROM bits)), j ->
-        |      CASE WHEN embedding[CAST(j + 1 AS INT)] >= 0
-        |           THEN (1::BIGINT << j) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT x.vec_id AS doc_a, y.vec_id AS doc_b
-        |  FROM e x JOIN e y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-        |  WHERE list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |        i -> CAST(x.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(range(1, len(x.embedding) + 1),
-        |            i -> CAST(x.embedding[i] AS DOUBLE) * CAST(x.embedding[i] AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(range(1, len(y.embedding) + 1),
-        |            i -> CAST(y.embedding[i] AS DOUBLE) * CAST(y.embedding[i] AS DOUBLE)))))
-        |        >= 0.4),
-        |sym AS (SELECT doc_a AS a, doc_b AS b FROM p
-        |        UNION SELECT doc_b AS a, doc_a AS b FROM p),
-        |reach(id, r) AS (
-        |  SELECT vec_id, vec_id FROM embeddings
-        |  UNION
-        |  SELECT reach.id, sym.b FROM reach JOIN sym ON sym.a = reach.r)
-        |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_keeper
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    "q36_sessionize" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS session_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |f AS (
-        |  SELECT session_id, ts,
-        |    CASE WHEN date_diff('second', lag(ts) OVER w, ts) > 1800 THEN 1 ELSE 0 END AS flag
-        |  FROM c WINDOW w AS (PARTITION BY session_id ORDER BY ts)),
-        |s AS (
-        |  SELECT session_id, ts,
-        |    CAST(sum(flag) OVER (PARTITION BY session_id ORDER BY ts ROWS UNBOUNDED PRECEDING) + 1 AS BIGINT) AS session_idx
-        |  FROM f)
-        |SELECT session_id, session_idx, min(ts) AS session_start, max(ts) AS session_end,
-        |  count(*) AS n_events
-        |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q41_corpus_prep" -> corpusPrepBatchSql,
-    // q41's chain re-terminated at survivor token counts + q256's packing
-    // readout — the composed prepare→pack pipeline in one statement
-    "q269_prep_pack" -> corpusPrepPackSql(ctx = 256),
-    // the full pipeline: prep chain + keeper components + winnowing
-    // decontam + temperature mixture + packing tail, every stage a
-    // shared named constant
-    "q283_pretrain_pipeline" -> pretrainPipelineSql(ctx = 256),
-    // LAW gate: the artifact-fed increment must reproduce the whole-
-    // corpus capstone rebuild — the oracle IS q283's SQL
-    "q287_pretrain_pipeline_increment" -> pretrainPipelineSql(ctx = 256),
-    // the artifact set round-trips the parquet layer; increment from the
-    // read-back state must STILL equal the whole rebuild — q283's SQL
-    "q290_pretrain_artifact_roundtrip" -> pretrainPipelineSql(ctx = 256),
-    // LAW gate: the layer COMPACTED (versions 0-1 folded into one base)
-    // must serve the same increment — q283's SQL again; the Spark side
-    // proves fold + promote + read-union change nothing in retention
-    "q292_pretrain_layer_compaction" -> pretrainPipelineSql(ctx = 256),
-    // one scoped chain+funnel arm per ingest over the as-of corpus,
-    // keyed by batch_id — the shared constants, twice
-    "q291_pretrain_funnel_series" -> pretrainFunnelSeriesSql,
-    // the capstone chain terminated at the per-stage funnel instead of
-    // the packing tail — same shared WITH-prefix constant
-    "q288_pretrain_funnel" -> pretrainFunnelSql,
-    // q259's chain feeding q266's bootstrap chain — metric + uncertainty
-    "q270_rouge_bootstrap" -> rougeBootstrapSql,
-    // the unigram trainer unrolled: seed substring counts, 2 Viterbi-EM
-    // rounds (M chained DP CTEs + M walk CTEs per round, the exact op
-    // order of UnigramLM.viterbiPieces), count prune, final E-step
-    "q271_unigram_train" -> unigramTrainSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24),
-    // a 4th Viterbi pass under the final probabilities, per-word piece
-    // counts joined to per-doc word counts; over-length char-fallback
-    "q272_unigram_encode" -> unigramEncodeSql(m = 10, k = 4, seedMulti = 48, budgetMulti = 24),
-    // SAME SQL as q41: the incremental path must reproduce the batch
-    // rebuild over the union exactly (monotonic-id law)
-    "q118_corpus_prep_increment" -> corpusPrepBatchSql,
-    "q119_unigram_logprob" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ')) AS tok
-        |  FROM documents),
-        |tk AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
-        |freq AS (SELECT tok, count(*) AS c FROM tk GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(count(DISTINCT tok) AS BIGINT) AS v FROM tk),
-        |sc AS (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    sum(CAST(ln(CAST(c + 1 AS DOUBLE) / CAST(n + v AS DOUBLE)) AS DECIMAL(28,12))) AS s
-        |  FROM tk CROSS JOIN t JOIN freq USING (tok)
-        |  GROUP BY 1)
-        |SELECT d.doc_id, COALESCE(sc.n_tokens, 0) AS n_tokens,
-        |  CASE WHEN sc.n_tokens > 0 THEN round(sc.s::DOUBLE / sc.n_tokens::DOUBLE, 6) END AS avg_logprob
-        |FROM documents d LEFT JOIN sc USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q120_negative_sample" ->
-      """WITH a AS (SELECT doc_id AS anchor_id FROM documents WHERE doc_id % 50 = 0),
-        |c AS (SELECT doc_id AS neg_id FROM documents),
-        |r AS (
-        |  SELECT anchor_id, neg_id,
-        |    row_number() OVER (PARTITION BY anchor_id
-        |      ORDER BY md5(anchor_id::VARCHAR || '|' || neg_id::VARCHAR), neg_id) AS "rank"
-        |  FROM a CROSS JOIN c WHERE anchor_id <> neg_id)
-        |SELECT anchor_id, neg_id, "rank" FROM r WHERE "rank" <= 5
-        |ORDER BY anchor_id, "rank"""".stripMargin,
-    "q121_mixture_weights" ->
-      """WITH d AS (
-        |  SELECT source,
-        |    COALESCE(len(list_filter(string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' '), x -> x <> '')), 0) AS n_tok
-        |  FROM documents),
-        |ps AS (SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total, count(*) AS n_sources FROM ps)
-        |SELECT source, n_docs, n_tokens,
-        |  round(n_tokens::DOUBLE / total::DOUBLE, 6) AS share,
-        |  CASE WHEN n_tokens > 0
-        |    THEN round(total::DOUBLE / (n_sources::DOUBLE * n_tokens::DOUBLE), 6) END AS weight
-        |FROM ps CROSS JOIN t ORDER BY source""".stripMargin,
-    // q31's md5 minhash pipeline + the b-bit collision estimate: low 2 bits
-    // of each component = last hex char mod 4; est = (f - 1/4)/(1 - 1/4)
-    "q122_bbit_minhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |    string_split(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')), ' ') AS t
-        |  FROM documents),
-        |sets AS (
-        |  SELECT id, list_distinct(list_transform(range(len(t) - 2), i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS sh
-        |  FROM toks WHERE len(t) >= 3),
-        |sigs AS (
-        |  SELECT id, sh,
-        |    list_transform(range(16), i -> list_min(list_transform(sh, s -> md5(i::VARCHAR || '|' || s)))) AS sig
-        |  FROM sets),
-        |bands AS (
-        |  SELECT id, b AS band_id, md5(array_to_string(sig[b*4+1:b*4+4], ',')) AS band_hash
-        |  FROM sigs CROSS JOIN (VALUES (0), (1), (2), (3)) AS bl(b)),
-        |cand AS (
-        |  SELECT DISTINCT x.id AS doc_a, y.id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.band_hash = y.band_hash AND x.id < y.id),
-        |verified AS (
-        |  SELECT doc_a, doc_b,
-        |    CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(list_distinct(list_concat(sa.sh, sb.sh))) AS j,
-        |    CAST(list_sum(list_transform(range(16), i ->
-        |      CASE WHEN ('0x' || substring(ga.sig[i+1], 32, 1))::BIGINT % 4
-        |             = ('0x' || substring(gb.sig[i+1], 32, 1))::BIGINT % 4
-        |           THEN 1 ELSE 0 END)) AS DOUBLE) / 16 AS f
-        |  FROM cand
-        |  JOIN sets sa ON doc_a = sa.id JOIN sets sb ON doc_b = sb.id
-        |  JOIN sigs ga ON doc_a = ga.id JOIN sigs gb ON doc_b = gb.id)
-        |SELECT doc_a, doc_b, round(j, 4) AS jaccard,
-        |  round((f - 0.25::DOUBLE) / 0.75::DOUBLE, 4) AS jaccard_bbit
-        |FROM verified WHERE j >= 0.8 ORDER BY doc_a, doc_b""".stripMargin,
-    "q40_media_metadata" ->
-      """SELECT doc_id,
-        | octet_length(encode(text)) AS n_bytes,
-        | 64 + (octet_length(encode(text)) % 448) AS width,
-        | 64 + ((ascii(text) * 7) % 448) AS height,
-        | CASE octet_length(encode(text)) % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format
-        |FROM documents ORDER BY doc_id""".stripMargin
-  )
 }

@@ -225,7 +225,7 @@ object TextAnalysis {
     * Scale shape: one token-count aggregate builds the model (vocab-sized),
     * the scoring join BROADCASTS the model to the token stream, and the
     * per-doc mean reduces 〈doc, decimal〉 pairs. The broadcast is the
-    * round-11 adjudication result (ProfileRarity, BENCHSCALE11): at the
+    * round-11 adjudication result (PLANS.md round 11, BENCHSCALE11): at the
     * 100× decade the token-side shuffle+sort of the default SMJ spills and
     * goes superlinear (slope 1.16-1.25 measured on BOTH linear-vocab and
     * Heaps-vocab corpora — the round-10 vocabulary-growth hypothesis is

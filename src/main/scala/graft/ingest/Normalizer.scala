@@ -18,82 +18,82 @@ import graft.schema.TripClick
 object Normalizer {
 
   /** Parse a Kafka-shaped frame (binary `value` + metadata columns) into the
-    * curated projection. Works identically on batch and streaming frames. */
+    * curated projection: the good side of the one dead-letter parse, so a
+    * line lands in curated exactly when it does not land in quarantine.
+    * Works identically on batch and streaming frames. */
   def fromKafkaFrame(frame: DataFrame): DataFrame =
-    curatedProjection(
-      frame.select(from_json(col("value").cast(StringType), TripClick.rawSchema).as("data"))
-    )
+    withDeadLetter(frame, col("value").cast(StringType))._1
 
-  /** Parse JSON-lines text already read as a single string column `json`. */
+  /** Parse JSON-lines text already read as a single string column `json`:
+    * the good side of [[fromJsonLinesWithDeadLetter]]. */
   def fromJsonLines(lines: DataFrame, jsonCol: String = "json"): DataFrame =
-    curatedProjection(
-      lines.select(from_json(col(jsonCol), TripClick.rawSchema).as("data"))
-    )
+    fromJsonLinesWithDeadLetter(lines, jsonCol)._1
 
-  /** The snake_case projection of the parsed struct
-    * (reference: streaming_to_curated_stream.py:127-139). */
-  def curatedProjection(parsed: DataFrame): DataFrame =
-    parsed.select(
-      col("data.SessionId").as("session_id"),
-      col("data.DocumentId").as("document_id"),
-      col("data.Url").as("url"),
-      col("data.Title").as("title"),
-      col("data.DOI").as("doi"),
-      col("data.Keywords").as("keywords"),
-      col("data.ClinicalAreas").as("clinical_areas"),
-      to_timestamp(col("data.event_ts")).as("event_ts"),
-      col("data.event_date").as("event_date"),
-      col("data.dedup_key").as("dedup_key")
-    ).filter(col("dedup_key").isNotNull)
-
-  /** Archive-raw projection: curated fields + Kafka + load metadata
-    * (reference: batch_to_archive_raw.py:139-162). */
-  def archiveRawProjection(kafkaFrame: DataFrame, ingestionType: String = "batch"): DataFrame = {
-    val parsed = kafkaFrame.select(
-      from_json(col("value").cast(StringType), TripClick.rawSchema).as("data"),
-      col("key").cast(StringType).as("kafka_key"),
-      col("topic"), col("partition"), col("offset"),
-      col("timestamp").as("kafka_timestamp"))
-    parsed.select(
-      (curatedColumns.map(c => col(s"data.${c._1}").as(c._2)) ++ Seq(
-        col("kafka_key"), col("topic"), col("partition"), col("offset"),
-        col("kafka_timestamp"),
-        current_timestamp().as("ingested_at"),
-        lit(ingestionType).as("ingestion_type"))): _*
-    ).withColumn("event_ts", to_timestamp(col("event_ts")))
-  }
-
-  private val curatedColumns: Seq[(String, String)] = Seq(
+  /** Raw field → curated column (reference: streaming_to_curated_stream.py:127-139);
+    * `event_ts` is converted to a timestamp, every other field passes as is. */
+  private val curatedColumns: Seq[Column] = Seq(
     "SessionId" -> "session_id", "DocumentId" -> "document_id",
     "Url" -> "url", "Title" -> "title", "DOI" -> "doi",
     "Keywords" -> "keywords", "ClinicalAreas" -> "clinical_areas",
     "event_ts" -> "event_ts", "event_date" -> "event_date",
-    "dedup_key" -> "dedup_key")
+    "dedup_key" -> "dedup_key"
+  ).map {
+    case ("event_ts", c) => to_timestamp(col("data.event_ts")).as(c)
+    case (f, c) => col(s"data.$f").as(c)
+  }
+
+  /** The snake_case projection of the parsed struct, keyless rows dropped. */
+  def curatedProjection(parsed: DataFrame): DataFrame =
+    parsed.select(curatedColumns: _*).filter(col("dedup_key").isNotNull)
+
+  /** Archive-raw projection: curated fields + Kafka + load metadata
+    * (reference: batch_to_archive_raw.py:139-162). Keeps every row. */
+  def archiveRawProjection(kafkaFrame: DataFrame, ingestionType: String = "batch"): DataFrame =
+    parse(kafkaFrame, col("value").cast(StringType),
+        col("key").cast(StringType).as("kafka_key"),
+        col("topic"), col("partition"), col("offset"),
+        col("timestamp").as("kafka_timestamp"))
+      .select((curatedColumns ++ Seq(
+        col("kafka_key"), col("topic"), col("partition"), col("offset"),
+        col("kafka_timestamp"),
+        current_timestamp().as("ingested_at"),
+        lit(ingestionType).as("ingestion_type"))): _*)
+
+  /** The one JSON parse: `raw` payload + `data` struct (+ `keep` columns).
+    * from_json in PERMISSIVE mode yields a null-FIELDED struct on malformed
+    * input, not a null struct, and keeps the fields that did convert when
+    * one field fails — the corrupt-record column is the reliable
+    * malformed-row signal. */
+  private def parse(frame: DataFrame, payload: Column, keep: Column*): DataFrame = {
+    val data = from_json(payload, parseSchema,
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
+    frame.select(Seq(payload.as("raw"), data.as("data")) ++ keep: _*)
+  }
+
+  /** `rawSchema` plus the corrupt-record column the permissive parse fills. */
+  private val parseSchema: StructType =
+    TripClick.rawSchema.add(StructField("_corrupt_record", StringType))
 
   /** Parse with a dead-letter side channel: rows whose JSON fails to parse
-    * (from_json → null struct) or that lack the dedup key are captured with
-    * the raw payload instead of silently vanishing — at pipeline scale,
-    * silent drop rates are how corpora rot. Returns (curated, deadLetter).
-    * Both frames share the parse plan lazily; a caller materializing both
-    * sides should cache the input (or write good first, bad second) to avoid
-    * parsing the source twice. */
+    * or convert, or that lack the dedup key, are captured with the raw
+    * payload instead of silently vanishing — at pipeline scale, silent
+    * drop rates are how corpora rot. Returns (curated, deadLetter), which
+    * partition the input. Both frames share the parse plan lazily; a
+    * caller materializing both sides should cache the input (or write good
+    * first, bad second) to avoid parsing the source twice. */
   def fromJsonLinesWithDeadLetter(
-      lines: DataFrame, jsonCol: String = "json"): (DataFrame, DataFrame) = {
-    // from_json in PERMISSIVE mode yields a null-FIELDED struct on malformed
-    // input, not a null struct — the corrupt-record column is the reliable
-    // malformed-row signal
-    val parseSchema = graft.schema.TripClick.rawSchema
-      .add(StructField("_corrupt_record", StringType))
-    val parsed = lines.select(
-      col(jsonCol).as("raw"),
-      from_json(col(jsonCol), parseSchema,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("data"))
+      lines: DataFrame, jsonCol: String = "json"): (DataFrame, DataFrame) =
+    withDeadLetter(lines, col(jsonCol))
+
+  /** (good, bad) of one parse of `payload`: a row is bad when its payload is
+    * null, unparseable or unconvertible, or it has no dedup key. */
+  private def withDeadLetter(frame: DataFrame, payload: Column): (DataFrame, DataFrame) = {
+    val parsed = parse(frame, payload)
     val corrupt = col("data._corrupt_record").isNotNull
-    val good = curatedProjection(parsed.filter(
-      !corrupt && col("data.dedup_key").isNotNull))
+    val keyless = col("data.dedup_key").isNull
+    val good = curatedProjection(parsed.filter(!corrupt && !keyless))
     val bad = parsed
-      .filter(corrupt || col("data.dedup_key").isNull)
+      .filter(corrupt || keyless)
       .select(col("raw"),
         when(col("raw").isNull, "null_payload")
           .when(corrupt, "unparseable_json")

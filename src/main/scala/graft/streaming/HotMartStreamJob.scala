@@ -90,8 +90,7 @@ object HotMartStreamJob {
       source: DataFrame,
       sink: HotMartBatch => Unit,
       checkpointPath: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes"),
-      exact: Boolean = true): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
     source.writeStream
       .outputMode("append")
       .trigger(trigger)

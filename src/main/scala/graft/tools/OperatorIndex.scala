@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   */
 object OperatorIndex {
 
-  private val entryRe = """^\s*"(q\w+)" -> \{ \(s, d\) =>.*$""".r
+  private val entryRe = """^(\s*)Gated\("(q\w+)", \{ \(s, d\) =>.*$""".r
   private val symbolRe = """\b([A-Z][A-Za-z0-9]*)\.([a-z]\w+)\s*\(""".r
   // data loaders + stdlib-looking receivers: plumbing, not operators
   private val excludedObjs = Set("TestData", "Tables", "Seq", "Array", "Map",
@@ -25,31 +25,28 @@ object OperatorIndex {
 
   private def repoFile(p: String) = Paths.get(p)
 
-  /** query id → (description comment, body text), in source order. */
+  /** query id → (description comment, build body text), in source order.
+    * The body ends where the record's build closure closes (a `}` at the
+    * record's indent), so the oracle SQL after it adds no anchors. */
   private[tools] def parseRegistry(source: String): Seq[(String, String, String)] = {
-    val lines = source.split("\n", -1)
     val out = Seq.newBuilder[(String, String, String)]
     var comment = List.empty[String]
-    var cur: Option[(String, StringBuilder, List[String])] = None
-    for (line <- lines) {
+    var cur: Option[(String, String, StringBuilder, List[String])] = None
+    for (line <- source.split("\n", -1)) {
       line match {
-        case entryRe(name) =>
-          cur.foreach { case (n, b, c) => out += ((n, c.mkString(" "), b.toString)) }
-          cur = Some((name, new StringBuilder, comment.reverse))
+        case entryRe(indent, name) =>
+          cur = Some((name, indent + "}", new StringBuilder, comment.reverse))
           comment = Nil
-        case l if l.trim.startsWith("//") =>
-          comment ::= l.trim.stripPrefix("//").trim
-          cur.foreach(_._2.append(l).append('\n'))
-        case l if l.trim == ")" || l.contains("def oracleSql") =>
-          cur.foreach { case (n, b, c) => out += ((n, c.mkString(" "), b.toString)) }
+        case l if cur.exists { case (_, close, _, _) => l.startsWith(close) } =>
+          cur.foreach { case (n, _, b, c) => out += ((n, c.mkString(" "), b.toString)) }
           cur = None
           comment = Nil
         case l =>
-          if (l.trim.nonEmpty) comment = Nil
-          cur.foreach(_._2.append(l).append('\n'))
+          if (l.trim.startsWith("//")) comment ::= l.trim.stripPrefix("//").trim
+          else if (l.trim.nonEmpty) comment = Nil
+          cur.foreach(_._3.append(l).append('\n'))
       }
     }
-    cur.foreach { case (n, b, c) => out += ((n, c.mkString(" "), b.toString)) }
     out.result()
   }
 

@@ -1,7 +1,8 @@
 package graft
 
-/** Driver-contract smoke: every declared query runs on sf0.001 and the
-  * oracle map stays consistent with the query map. */
+/** Driver-contract smoke: every declared query runs on sf0.001 and no two
+  * registry records share a name (a duplicate would shadow a query and its
+  * oracle in the derived maps). */
 class EntrySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -10,9 +11,9 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle entries without queries: $missing")
+  test("registry names are unique") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate registry names: $dups")
   }
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

@@ -57,6 +57,26 @@ class NormalizerSpec extends SparkSpec {
       .select("raw").collect().head.getString(0) === garbage)
   }
 
+  test("each line lands in exactly one of curated / quarantine, type-mismatched ones included") {
+    val good = Fixtures.rawEventJson("s1", 1, "2026-01-01T15:00:00+00:00", "2026-01-01")
+    val keyless = good.replace(""","dedup_key":"s1-1-2026-01-01T15:00:00+00:00"}""", "}")
+    // dedup_key parses, DocumentId does not convert to an int
+    val mismatched = """{"DocumentId":"abc","dedup_key":"k1"}"""
+    val lines = Seq(good, keyless, mismatched, "this is { not json")
+    // the stream curates with fromJsonLines and quarantines with the bad
+    // side of the dead-letter parse: the two must partition the input
+    val curated = Normalizer.fromJsonLines(rawDf(lines))
+      .select("dedup_key").as[String].collect().toSeq
+    val rejected = Normalizer.fromJsonLinesWithDeadLetter(rawDf(lines))._2
+      .select("raw", "reject_reason").as[(String, String)].collect().toMap
+    assert(curated === Seq("s1-1-2026-01-01T15:00:00+00:00"))
+    assert(rejected.keySet === Set(keyless, mismatched, "this is { not json"))
+    assert(rejected(mismatched) === "unparseable_json")
+    val kafka = lines.map(_.getBytes("UTF-8")).toDF("value")
+    assert(Normalizer.fromKafkaFrame(kafka).select("dedup_key").as[String].collect().toSeq
+      === curated)
+  }
+
   test("archiveRawProjection keeps curated fields + kafka + load metadata (B2A)") {
     val json = Fixtures.rawEventJson("s1", 7, "2026-01-01T15:00:00+00:00", "2026-01-01")
     val kafkaFrame = Seq(
