@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StringType}
 
+import graft.core.Fanout
+
 /** End-to-end training-corpus preparation: the composed pipeline the
   * individual operators exist for —
   *
@@ -324,38 +326,17 @@ object CorpusPrep {
       s"ingest batch ids must be strictly increasing, got ${batches.map(_._1)}")
     // arms are independent as-of runs (they union, never join): build them
     // CONCURRENTLY so each arm's stage checkpoints back-fill the idle tail
-    // of the others' jobs (guide §2.6 — 2-3 in flight is plenty); results
-    // are per-arm deterministic, so ordering cannot matter. On failure the
-    // shared job group is cancelled and the pool shut down hard, so no
-    // orphan arm keeps submitting jobs after the caller unwound (r14
-    // ADVICE).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    // of the others' jobs (guide §2.6); results are per-arm deterministic,
+    // so ordering cannot matter. A failing arm cancels the others
+    // ([[graft.core.Fanout]]), so no orphan arm keeps submitting jobs after
+    // the caller unwound (r14 ADVICE).
     val spark = batches.head._2.sparkSession
-    val group = "graft-funnel-arms-" + java.util.UUID.randomUUID().toString
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(3, batches.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val arms =
-      try Await.result(Future.sequence(
-        batches.zipWithIndex.map { case ((id, _), i) =>
-          Future {
-            spark.sparkContext.setJobGroup(group, s"funnel arm: batch $id",
-              interruptOnCancel = true)
-            try {
-              val asOf = batches.take(i + 1).map(_._2).reduce(_ unionByName _)
-              pretrainFunnel(asOf, t, evalMod, alpha, textCol, idCol, sourceCol)
-                .select(lit(id).as("batch_id"), col("stage_idx"), col("stage"),
-                  col("n_docs"), col("n_tokens"))
-            } finally spark.sparkContext.clearJobGroup()
-          }
-        }), Duration.Inf)
-      catch {
-        case e: Throwable =>
-          spark.sparkContext.cancelJobGroup(group)
-          pool.shutdownNow()
-          throw e
-      } finally pool.shutdown()
+    val arms = Fanout.all(spark, batches.zipWithIndex.map { case ((id, _), i) => () =>
+      val asOf = batches.take(i + 1).map(_._2).reduce(_ unionByName _)
+      pretrainFunnel(asOf, t, evalMod, alpha, textCol, idCol, sourceCol)
+        .select(lit(id).as("batch_id"), col("stage_idx"), col("stage"),
+          col("n_docs"), col("n_tokens"))
+    })
     arms.reduce(_ unionByName _).orderBy("batch_id", "stage_idx")
   }
 
@@ -479,9 +460,8 @@ object CorpusPrep {
     // scans, nothing text-sized. The guard job and the batch quality scan
     // are independent, so they run CONCURRENTLY (guide §2.6) instead of as
     // two sequential job latencies.
-    val statsRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    forEachKindParallel(spark, Seq("guard", "stats")) {
-      case "guard" =>
+    val stats = Fanout.all(spark, Seq[() => DataFrame](
+      () => {
         val bound = a.scored.agg(max(col(idCol)).as("mx"))
           .crossJoin(newDocs.agg(min(col(idCol)).as("mn")))
           .filter(col("mx").isNotNull && col("mn").isNotNull &&
@@ -489,10 +469,9 @@ object CorpusPrep {
         require(bound.isEmpty,
           "pretrainPipelineIncrement requires monotonic ingest ids: " +
             s"max stored $idCol must be < min batch $idCol")
-      case _ =>
-        statsRef.set(pretrainScored(newDocs, textCol, idCol))
-    }
-    val stats = statsRef.get()
+        null
+      },
+      () => pretrainScored(newDocs, textCol, idCol))).last
     val newScored = stats.select(col(idCol), col("quality_centi"))
     val newQuality = newDocs.join(
       stats.filter(col("quality_score") >= t.minQuality).select(idCol), Seq(idCol))
@@ -510,50 +489,30 @@ object CorpusPrep {
     // threads while the pair generation + keeper chain runs its own jobs
     // (guide §2.6): the decontam stage later probes already-built artifacts
     // instead of paying both fingerprint scans inside its own sequential
-    // job. Same cancel discipline as [[forEachKindParallel]].
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val fpGroup = "graft-inc-fps-" + java.util.UUID.randomUUID().toString
-    val fpPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val fpEc: ExecutionContext = ExecutionContext.fromExecutor(fpPool)
-    def fpTask(df: => DataFrame): Future[DataFrame] = Future {
-      spark.sparkContext.setJobGroup(fpGroup, "increment winnowing fps",
-        interruptOnCancel = true)
-      try df.localCheckpoint(true)
-      finally spark.sparkContext.clearJobGroup()
-    }
-    val (newWinnowFps, newEvalFps, trainCand, newPairs, newScoredExact) =
-      try {
-        val winnowF = fpTask(Dedup.winnowingFingerprints(newExact,
-          textCol = textCol, idCol = idCol))
-        val evalF = fpTask(Dedup.winnowingFingerprints(
-          newDocs.filter(col(idCol) % evalMod === 0), textCol = textCol,
-          idCol = idCol))
+    // job.
+    var newPairs, newScoredExact: DataFrame = null
+    val Seq(newWinnowFps, newEvalFps, trainCand) = Fanout.all(spark, Seq(
+      () => Dedup.winnowingFingerprints(newExact, textCol = textCol, idCol = idCol)
+        .localCheckpoint(true),
+      () => Dedup.winnowingFingerprints(newDocs.filter(col(idCol) % evalMod === 0),
+        textCol = textCol, idCol = idCol).localCheckpoint(true),
+      () => {
         val crossPairs = Dedup
           .crossNearDupPairsFromSketches(newSketch, a.sketch,
             minJaccard = t.minJaccard)
           .select(col("existing_id").as("doc_a"), col("new_id").as("doc_b"))
-        val np = Dedup
+        newPairs = Dedup
           .nearDupPairsFromSketch(newSketch, minJaccard = t.minJaccard)
           .select("doc_a", "doc_b")
           .unionByName(crossPairs)
-        val pairs = a.pairs.unionByName(np)
-        val exactAll = a.exactDocs.unionByName(newExact)
-        val newScoredExact0 = newScored.join(newExact.select(idCol), Seq(idCol))
-        val keepers = Dedup.dedupClustersKeepBest(pairs,
-            a.scored.unionByName(newScoredExact0), idCol = idCol,
+        newScoredExact = newScored.join(newExact.select(idCol), Seq(idCol))
+        val keepers = Dedup.dedupClustersKeepBest(a.pairs.unionByName(newPairs),
+            a.scored.unionByName(newScoredExact), idCol = idCol,
             pairsWithinScored = true)
           .filter(col("is_keeper")).select(idCol)
-        val tc = exactAll.join(keepers, Seq(idCol))
+        a.exactDocs.unionByName(newExact).join(keepers, Seq(idCol))
           .filter(col(idCol) % evalMod =!= 0).localCheckpoint(true)
-        (Await.result(winnowF, Duration.Inf),
-          Await.result(evalF, Duration.Inf), tc, np, newScoredExact0)
-      } catch {
-        case e: Throwable =>
-          spark.sparkContext.cancelJobGroup(fpGroup)
-          fpPool.shutdownNow()
-          throw e
-      } finally fpPool.shutdown()
+      }))
     val trainFps = a.winnowFps
       .unionByName(newWinnowFps)
       .join(trainCand.select(idCol), Seq(idCol))
@@ -594,55 +553,13 @@ object CorpusPrep {
     artifactKinds.zip(Seq(a.exactDocs, a.fingerprints, a.sketch, a.pairs,
       a.scored, a.winnowFps, a.evalFps))
 
-  /** Run one task per artifact kind CONCURRENTLY: the seven kinds are
-    * independent jobs against disjoint paths, and Spark's scheduler
-    * happily overlaps them — each kind's straggler tail back-fills with
-    * the next kind's tasks instead of leaving the cluster idle (guide
-    * §2.6). Sequential kind-by-kind execution was measured as 7 fixed job
-    * latencies end-to-end on the r14 gate; round 15 widened the pool from
-    * 4 to |kinds| (7) — the kinds are trigger-sized writes, so all-in-
-    * flight collapses two scheduling waves into one (A/B in
-    * OPTIMIZATION_r15.md).
-    *
-    * Failure discipline (round-14 ADVICE): every kind task runs under one
-    * shared job group; the first failure cancels the group (in-flight
-    * kinds stop submitting work / writing paths) and shuts the pool down
-    * before rethrowing — the caller never unwinds while orphan kind jobs
-    * keep mutating the layer. */
-  private def forEachKindParallel[A](
-      spark: org.apache.spark.sql.SparkSession,
-      kinds: Seq[A])(f: A => Unit): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    if (kinds.isEmpty) return
-    // A/B-adjudicated r15 (site "kinds-pool1", branch removed): all-kinds-
-    // in-flight vs serialized kinds — q290 0.75, q292 0.80 same-JVM
-    // (OPTIMIZATION_r15.md)
-    if (kinds.size == 1) { f(kinds.head); return }
-    val group = "graft-kinds-" + java.util.UUID.randomUUID().toString
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(kinds.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(kinds.map { k =>
-        Future {
-          // job groups are thread-local: tag this kind's jobs so a failure
-          // elsewhere can cancel them mid-flight
-          spark.sparkContext.setJobGroup(group, s"artifact kind: $k",
-            interruptOnCancel = true)
-          try f(k) finally spark.sparkContext.clearJobGroup()
-        }
-      }), Duration.Inf)
-    catch {
-      case e: Throwable =>
-        spark.sparkContext.cancelJobGroup(group)
-        pool.shutdownNow()
-        throw e
-    } finally pool.shutdown()
-    ()
-  }
-
   /** Write an artifact (delta) set as version `version` of the layer.
-    * Kinds write concurrently ([[forEachKindParallel]]).
+    * The seven kinds are independent jobs against disjoint paths, so they
+    * write CONCURRENTLY ([[graft.core.Fanout]]): each kind's straggler tail
+    * back-fills with the other kinds' tasks instead of leaving the cluster
+    * idle (guide §2.6). Kind-by-kind writes cost seven fixed job latencies
+    * on the r14 gate; all seven in flight collapse them into one
+    * scheduling wave (A/B in OPTIMIZATION_r15.md).
     *
     * File sizing (guide §6 — the small-file spiral the compactor exists
     * to fight): by default each frame takes a REBALANCE hint so AQE sizes
@@ -660,32 +577,26 @@ object CorpusPrep {
       root: String,
       version: Long,
       targetFiles: Option[Int] = None): Unit =
-    forEachKindParallel(a.exactDocs.sparkSession, kindFrames(a)) {
-      case (kind, df) =>
-        val sized = targetFiles.fold(df.hint("rebalance"))(df.repartition)
-        graft.sinks.ParquetLayerSink.overwriteMart(sized, s"$root/$kind/v=$version")
-    }
+    Fanout.all(a.exactDocs.sparkSession, kindFrames(a).map { case (kind, df) => () =>
+      val sized = targetFiles.fold(df.hint("rebalance"))(df.repartition)
+      graft.sinks.ParquetLayerSink.overwriteMart(sized, s"$root/$kind/v=$version")
+    })
 
   /** Read the layer state as of (exclusive) `maxVersionExclusive` — ONE
     * partition-pruned scan per kind over the `v` directory column (never
     * per-version unions). The seven reader constructions (driver-side
-    * file listing + footer schema reads) are independent and run through
-    * the kind pool — sequential construction was ~0.4 s of pure driver
+    * file listing + footer schema reads) are independent and run
+    * concurrently — sequential construction was ~0.4 s of pure driver
     * latency per read-back on the r15 gate. */
   def readArtifacts(
       spark: org.apache.spark.sql.SparkSession,
       root: String,
       maxVersionExclusive: Long): PretrainArtifacts = {
-    val frames = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    forEachKindParallel(spark, artifactKinds) { kind =>
-      frames.put(kind,
+    val Seq(exact, fingerprints, sketch, pairs, scored, winnowFps, evalFps) =
+      Fanout.all(spark, artifactKinds.map(kind => () =>
         spark.read.parquet(s"$root/$kind")
-          .filter(col("v") < maxVersionExclusive).drop("v"))
-      ()
-    }
-    def rd(kind: String): DataFrame = frames.get(kind)
-    PretrainArtifacts(rd("exact"), rd("fingerprints"), rd("sketch"),
-      rd("pairs"), rd("scored"), rd("winnow_fps"), rd("eval_fps"))
+          .filter(col("v") < maxVersionExclusive).drop("v")))
+    PretrainArtifacts(exact, fingerprints, sketch, pairs, scored, winnowFps, evalFps)
   }
 
   /** Fold every layer version `<= upToInclusive` of EVERY artifact kind
@@ -711,20 +622,16 @@ object CorpusPrep {
     // crash-safe) — run them concurrently, same rationale as
     // [[writeArtifacts]]; the cross-kind non-atomicity documented above
     // is unchanged by ordering
-    forEachKindParallel(spark, artifactKinds) { kind =>
+    Fanout.all(spark, artifactKinds.map(kind => () =>
       graft.sinks.DeltaLayerCompactor.compactKind(
-        spark, s"$root/$kind", upToInclusive, targetFiles)
-      ()
-    }
+        spark, s"$root/$kind", upToInclusive, targetFiles)))
 
   /** Run [[graft.sinks.DeltaLayerCompactor.recoverKind]] over every kind —
     * the job-start repair call after a crash mid-[[compactArtifacts]]. */
   def recoverArtifactLayer(
       spark: org.apache.spark.sql.SparkSession, root: String): Unit =
-    forEachKindParallel(spark, artifactKinds) { kind =>
-      graft.sinks.DeltaLayerCompactor.recoverKind(spark, s"$root/$kind")
-      ()
-    }
+    Fanout.all(spark, artifactKinds.map(kind => () =>
+      graft.sinks.DeltaLayerCompactor.recoverKind(spark, s"$root/$kind")))
 
   /** Length-bucketed batch packing: assign documents to fixed-size training
     * batches in token-length order, so sequences in a batch have similar

@@ -65,6 +65,26 @@ class OrchestratorSpec extends SparkSpec {
     assert(r.durationMs < 30000, s"cancel must not wait for the job: ${r.durationMs}ms")
   }
 
+  test("SLA breach cancels the jobs a stage fans out: none of its group is left RUNNING") {
+    import spark.implicits._
+    val group = new java.util.concurrent.atomic.AtomicReference[String]()
+    def slow(): Long = spark.range(1000000).as[Long].map { i => Thread.sleep(1); i }.count()
+    val reports = Orchestrator.run(spark, Seq(
+      Stage("fanout", Policy(retries = 0, slaTimeout = 2.seconds))(() => {
+        group.set(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        graft.core.Fanout.all(spark, Seq(() => slow(), () => slow()))
+        ()
+      })), sleep = noSleep)
+    val r = reports.head
+    assert(!r.succeeded && r.error.exists(_.contains("sla_timeout")), r.error.toString)
+    assert(r.durationMs < 30000, s"cancel must not wait for the jobs: ${r.durationMs}ms")
+    val st = spark.sparkContext.statusTracker
+    val jobs = st.getJobIdsForGroup(group.get)
+    assert(jobs.length >= 2, "the fanned-out jobs carry the stage's job group")
+    assert(!jobs.exists(id =>
+      st.getJobInfo(id).exists(_.status() == org.apache.spark.JobExecutionStatus.RUNNING)))
+  }
+
   test("a timed-out stage whose thread survives the drain is NOT retried") {
     val calls = new AtomicInteger(0)
     val release = new java.util.concurrent.CountDownLatch(1)

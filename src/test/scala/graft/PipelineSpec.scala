@@ -115,6 +115,10 @@ class PipelineSpec extends SparkSpec {
       rows.map { case (s, d, ts, day) =>
         (s, d, java.sql.Timestamp.valueOf(ts), java.sql.Date.valueOf(day))
       }.toDF("session_id", "document_id", "event_ts", "event_date")
+    // spark names every data file by its write's UUID: a rewritten
+    // partition holds new names, an untouched one its old ones
+    def dataFiles(day: String) = new java.io.File(s"$martPath/event_date=$day")
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
 
     // day1 + day2 curated; full mart build
     mkCurated(Seq(
@@ -123,18 +127,15 @@ class PipelineSpec extends SparkSpec {
       .write.partitionBy("event_date").parquet(curatedPath)
     IncrementalMart.overwriteTouchedPartitions(
       ColdMarts.dailyTraffic(spark.read.parquet(curatedPath)), martPath)
-    val day1FileBefore = new java.io.File(martPath + "/event_date=2026-01-01")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
+    val (day1Before, day2Before) = (dataFiles("2026-01-01"), dataFiles("2026-01-02"))
 
-    // new events arrive for day2 only → append to curated, refresh
-    val newEvents = mkCurated(Seq(
+    // new events arrive for day2 only → append to curated, refresh day2
+    mkCurated(Seq(
       ("c", 3, "2026-01-02 12:00:00", "2026-01-02"),
       ("b", 2, "2026-01-02 13:00:00", "2026-01-02")))
-    newEvents.write.mode("append").partitionBy("event_date").parquet(curatedPath)
-    Thread.sleep(1100) // ensure mtime resolution can distinguish rewrites
-    val touched = IncrementalMart.refresh(spark, curatedPath, martPath,
-      newEvents, df => ColdMarts.dailyTraffic(df))
-    assert(touched === Seq("2026-01-02"))
+      .write.mode("append").partitionBy("event_date").parquet(curatedPath)
+    IncrementalMart.refresh(spark, curatedPath, mkCurated(Nil).schema, martPath,
+      Seq("2026-01-02"), df => ColdMarts.dailyTraffic(df))
 
     val mart = spark.read.parquet(martPath)
     val day2 = mart.filter(col("event_date") === "2026-01-02").collect().head
@@ -142,9 +143,152 @@ class PipelineSpec extends SparkSpec {
     assert(day2.getAs[Long]("unique_sessions") === 2)
     // day1 partition rows intact and its files untouched by the refresh
     assert(mart.filter(col("event_date") === "2026-01-01").count() === 1)
-    val day1FileAfter = new java.io.File(martPath + "/event_date=2026-01-01")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.lastModified).max
-    assert(day1FileAfter === day1FileBefore, "untouched partition must not be rewritten")
+    assert(dataFiles("2026-01-01") === day1Before, "untouched partition must not be rewritten")
+    assert((dataFiles("2026-01-02") & day2Before).isEmpty, "the touched partition is rewritten")
+  }
+
+  /** Five daily drops: each holds its day's events, two late events dated
+    * the day before, in-day duplicates, replays of four lines of the
+    * previous drop (its late events, dated two days back, among them) and a
+    * corrupt line. */
+  private def lawDrops: Seq[Seq[String]] = {
+    val areas = Seq(",Oncology,Surgery", "Cardiology", "")
+    val start = java.time.LocalDate.of(2026, 2, 1)
+    def event(s: Int, doc: Int, day: java.time.LocalDate, h: Int, m: Int, area: Int) =
+      Fixtures.rawEventJson(s"s$s", doc, f"${day}T$h%02d:$m%02d:00+00:00", day.toString,
+        clinicalAreas = areas(area % areas.size), title = s"title $doc")
+    (0 until 5).foldLeft(Vector.empty[Seq[String]]) { (drops, d) =>
+      val day = start.plusDays(d.toLong)
+      val late = if (d == 0) Nil else (0 until 2).map(i => event(d + i, d + 7 * i, day.minusDays(1), 23, 10 * d + i, i))
+      val fresh = (0 until 10).map(i => event((d * 3 + i) % 5, (d + i) % 6, day, 8 + i % 9, (7 * i + d) % 60, i + d))
+      val replays = drops.lastOption.toSeq.flatMap(_.take(4))
+      drops :+ (late ++ fresh ++ fresh.take(3) ++ replays :+ s"""{"SessionId":"bad$d", broken""")
+    }
+  }
+
+  /** Curated, the four marts and the four served tables, each as a sorted
+    * multiset of rendered rows. */
+  private def lakeState(root: String, url: String): Map[String, Seq[String]] = {
+    val layout = DailyPipeline.Layout(root)
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      def served(table: String) = {
+        val rs = conn.createStatement().executeQuery(s"SELECT * FROM $table")
+        val n = rs.getMetaData.getColumnCount
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (1 to n).map(i => r.getString(i)).mkString("|")).toSeq.sorted
+      }
+      Map("curated" -> rows(layout.curated)) ++
+        DailyPipeline.coldMartNames.map(m => m -> rows(layout.mart(m))) ++
+        DailyPipeline.coldMartNames.map(m => s"served.$m" -> served(m))
+    } finally conn.close()
+  }
+
+  test("law: daily drops taken one day at a time ≡ all drops taken in one cycle on a fresh lake") {
+    val drops = lawDrops
+    val incRoot = tmpDir("law_inc")
+    val incUrl = "jdbc:derby:memory:law_inc;create=true"
+    val counts = drops.zipWithIndex.map { case (lines, d) =>
+      val in = Fixtures.writeJsonl(tmpDir(s"law_in_$d"), "events.json", lines)
+      val c = DailyPipeline.run(spark, in, incRoot)
+      c ++ DailyPipeline.loadToServing(spark, DailyPipeline.Layout(incRoot), incUrl)
+        .map { case (k, v) => s"served.$k" -> v }
+    }
+    val allIn = tmpDir("law_all_in")
+    drops.zipWithIndex.foreach { case (lines, d) => Fixtures.writeJsonl(allIn, s"drop-$d.json", lines) }
+    val fullRoot = tmpDir("law_full")
+    val fullUrl = "jdbc:derby:memory:law_full;create=true"
+    val full = DailyPipeline.run(spark, allIn, fullRoot)
+    DailyPipeline.loadToServing(spark, DailyPipeline.Layout(fullRoot), fullUrl)
+
+    val inc = lakeState(incRoot, incUrl)
+    val rebuilt = lakeState(fullRoot, fullUrl)
+    assert(inc.keySet === rebuilt.keySet)
+    inc.keys.foreach(k => assert(inc(k) === rebuilt(k), k))
+    // the fixture exercises every seam: late and replayed rows, duplicates
+    assert(full("archive_raw") === drops.map(_.size - 1).sum)
+    assert(full("curated") === inc("curated").size)
+    assert(full("curated") < full("archive_raw") - drops.size)
+    assert(inc("mart_daily_traffic").size === drops.size)
+    // whole-layer totals after the last day equal the rebuild's
+    Seq("archive_raw", "curated") ++ DailyPipeline.coldMartNames foreach { k =>
+      assert(counts.last(k) === full(k), k)
+    }
+    // a later day loads the changed dates only: its own and the late events' date
+    val lastTraffic = counts.last("served.mart_daily_traffic")
+    assert(lastTraffic === 2, "day 5 changes two dates of mart_daily_traffic")
+    assert(!new java.io.File(s"$incRoot/_pending/curate").list().exists(!_.startsWith(".")))
+  }
+
+  test("crash replay: a stage rerun on its restored pending markers leaves every output unchanged") {
+    val drops = lawDrops
+    val root = tmpDir("replay")
+    val url = "jdbc:derby:memory:law_replay;create=true"
+    val layout = DailyPipeline.Layout(root)
+    val pending = java.nio.file.Paths.get(root, "_pending")
+    def markers(): Set[java.nio.file.Path] =
+      if (!java.nio.file.Files.exists(pending)) Set.empty
+      else {
+        val s = java.nio.file.Files.walk(pending)
+        try s.filter(p => java.nio.file.Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+          .toArray.map(_.asInstanceOf[java.nio.file.Path]).toSet
+        finally s.close()
+      }
+    val stages: Seq[(String, () => Unit)] = Seq(
+      "curate" -> (() => DailyPipeline.curate(spark, layout)),
+      "cold_marts" -> (() => DailyPipeline.coldMarts(spark, layout)),
+      "serving" -> (() => DailyPipeline.loadToServing(spark, layout, url)))
+    drops.zipWithIndex.foreach { case (lines, d) =>
+      DailyPipeline.archiveRaw(spark, Fixtures.writeJsonl(tmpDir(s"replay_in_$d"), "events.json", lines), layout)
+      stages.foreach { case (name, stage) =>
+        val before = markers()
+        stage()
+        val consumed = before -- markers()
+        if (d == drops.size - 1) {
+          assert(consumed.nonEmpty, s"$name consumed no markers on the last day")
+          // the stage died before deleting its markers: restore, rerun
+          val done = lakeState(root, url)
+          consumed.foreach(p => java.nio.file.Files.createFile(p))
+          stage()
+          assert(lakeState(root, url) === done, s"$name rerun changed an output")
+          assert((consumed & markers()).isEmpty, s"$name rerun left its markers")
+        }
+      }
+    }
+  }
+
+  test("serving load replaces changed dates in place: the table, its index and untouched dates survive") {
+    val root = tmpDir("serve_keep")
+    val layout = DailyPipeline.Layout(root)
+    val url = "jdbc:derby:memory:serve_keep;create=true"
+    def day(d: Int, lines: String*) = {
+      DailyPipeline.run(spark, Fixtures.writeJsonl(tmpDir(s"serve_keep_$d"), "events.json", lines), root)
+      DailyPipeline.loadToServing(spark, layout, url)
+    }
+    day(1,
+      Fixtures.rawEventJson("s1", 1, "2026-03-01T10:00:00+00:00", "2026-03-01"),
+      Fixtures.rawEventJson("s2", 2, "2026-03-01T11:00:00+00:00", "2026-03-01"))
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.createStatement().executeUpdate(
+        "CREATE INDEX traffic_by_date ON mart_daily_traffic (\"event_date\")")
+      def traffic() = {
+        val rs = conn.createStatement().executeQuery(
+          "SELECT \"event_date\", \"total_events\" FROM mart_daily_traffic ORDER BY 1")
+        Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getString(1), r.getLong(2))).toList
+      }
+      val day1 = traffic()
+      // no clinical area: the changed date has no mart_clinical_areas partition
+      val loaded = day(2,
+        Fixtures.rawEventJson("s3", 3, "2026-03-02T09:00:00+00:00", "2026-03-02", clinicalAreas = ""))
+      assert(loaded("mart_daily_traffic") === 1, "only the new date is loaded")
+      assert(loaded("mart_clinical_areas") === 0)
+      assert(traffic() === day1 :+ (("2026-03-02", 1L)))
+      val idx = conn.getMetaData.getIndexInfo(null, null, "MART_DAILY_TRAFFIC", false, false)
+      val names = Iterator.continually(idx).takeWhile(_.next()).map(_.getString("INDEX_NAME")).toSet
+      assert(names.contains("TRAFFIC_BY_DATE"), names)
+    } finally conn.close()
   }
 
   test("compactor rewrites a layer in place (K4)") {
