@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SizeGate
+
 /** The four hot (streaming micro-batch) mart queries
   * (reference: processing/spark/jobs/streaming_to_analytics_mart_realtime.py —
   * SURVEY.md §2.6 #5-8), written batch-shaped so the same transform runs
@@ -17,14 +19,25 @@ object HotMarts {
   /** #5 mart_realtime_traffic_minute (reference: RT:186-206): per-minute
     * clicks / unique sessions / unique docs. `updated_at` is added by the
     * sink wrapper, not here — keeping wall-clock out of the transform makes
-    * micro-batch replay deterministic (SURVEY.md §7.4). */
-  def trafficPerMinute(clicks: DataFrame, exact: Boolean = true): DataFrame =
+    * micro-batch replay deterministic (SURVEY.md §7.4).
+    *
+    * Two exact distincts plan as Expand + two aggregates, and Expand's
+    * output partitioning is unknown, so even a one-partition micro-batch
+    * pays two shuffles. Input that fits one file split
+    * ([[graft.core.SizeGate]]) counts set sizes instead: one aggregate, no
+    * Expand, whose sets are bounded by the split. Larger input keeps the
+    * distinct aggregates, which spill. */
+  def trafficPerMinute(clicks: DataFrame, exact: Boolean = true): DataFrame = {
+    val distinct: Column => Column =
+      if (exact && SizeGate.fitsOneSplit(clicks)) c => size(collect_set(c)).cast("long")
+      else ColdMarts.distinctCount(_, exact)
     clicks
       .groupBy(date_trunc("minute", col("event_ts")).as("event_minute"))
       .agg(
         count(lit(1)).as("total_clicks"),
-        ColdMarts.distinctCount(col("session_id"), exact).as("unique_sessions"),
-        ColdMarts.distinctCount(col("document_id"), exact).as("unique_docs"))
+        distinct(col("session_id")).as("unique_sessions"),
+        distinct(col("document_id")).as("unique_docs"))
+  }
 
   /** #6 mart_realtime_top_docs (reference: RT:209-240): global top-K documents
     * by click count with a dense 1..K `rank`.

@@ -28,8 +28,16 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   * layer or a table format — the interface isolates callers from that
   * choice. `targetFiles` replaces the reference's hardcoded coalesce(1) —
   * size it to layer-bytes / 128 MB on a real cluster.
+  *
+  * A layer written by a streaming file sink
+  * ([[graft.streaming.CuratedStreamJob.start]]) is refused: its readers list
+  * the files of the sink log `_spark_metadata`, not the directory, so files
+  * rewritten outside the log would hide every row from them.
   */
 object Compactor {
+
+  /** The log directory of Spark's streaming file sink. */
+  private val SinkLog = "_spark_metadata"
 
   /** Thrown by the test-only failpoints in [[compactImpl]]. */
   private[graft] final class SimulatedCrash(at: Int)
@@ -83,10 +91,14 @@ object Compactor {
     * unconditionally at job start (and [[compact]] does). Returns what it
     * did: "clean" (layer present, stray work dirs removed), "rolled-forward"
     * (promoted a complete `_compacted`), or "rolled-back" (restored `_old`).
-    * Throws if the layer is missing and nothing recoverable exists. */
+    * Throws if the layer is missing and nothing recoverable exists, and
+    * refuses (before touching anything) a layer holding a sink log. */
   def recover(spark: SparkSession, layerPath: String): String = {
     val fs = fileSystem(spark, layerPath)
     val dst = new Path(layerPath)
+    if (fs.exists(new Path(dst, SinkLog)))
+      throw new IllegalArgumentException(
+        s"compaction: $dst is a streaming sink layer ($SinkLog); rewriting it outside the log hides its rows")
     val tmp = new Path(layerPath.stripSuffix("/") + "_compacted")
     val old = new Path(layerPath.stripSuffix("/") + "_old")
     if (fs.exists(dst)) {

@@ -20,12 +20,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object ParquetLayerSink {
 
+  /** The per-file row bound of the append-only layers. */
+  val MaxRecordsPerFile: Long = 5000000L
+
   /** Append-only layer write (archive raw / curated). */
   def appendPartitioned(
       df: DataFrame,
       path: String,
       partitionCol: String = "event_date",
-      maxRecordsPerFile: Long = 5000000L): Unit =
+      maxRecordsPerFile: Long = MaxRecordsPerFile): Unit =
     df.write
       .mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxRecordsPerFile)

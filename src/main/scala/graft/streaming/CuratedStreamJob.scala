@@ -9,8 +9,9 @@ import graft.sinks.ParquetLayerSink
 
 /** Streaming Kafka→Curated job
   * (reference: streaming_to_curated_stream.py — SURVEY.md §3.2):
-  * raw frames → normalize → watermarked streaming dedup → per-micro-batch
-  * partitioned parquet append, with checkpointing.
+  * raw frames → normalize → watermarked streaming dedup → Spark's parquet
+  * file sink, partitioned by date, with checkpointing: each micro-batch runs
+  * its plan once and is published atomically through the sink's log.
   *
   * Dedup semantics (D1): `dropDuplicates("dedup_key")` after
   * `withWatermark(event_ts, …)` keeps per-key state in the state store and
@@ -80,54 +81,48 @@ object CuratedStreamJob {
   def rejects(raw: DataFrame): DataFrame =
     Normalizer.fromJsonLinesWithDeadLetter(raw)._2
 
-  /** Start the quarantine stream: per-batch parquet append partitioned by
-    * reject date, same empty-batch guard as [[start]]. */
+  /** Start the quarantine stream: Spark's parquet file sink, partitioned
+    * by reject date, exactly once like [[start]]. */
   def startRejects(
       rejected: DataFrame,
       quarantinePath: String,
       checkpointPath: String,
       trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
-    rejected.writeStream
+    rejected.withColumn("reject_date", to_date(col("rejected_at")))
+      .writeStream
+      .format("parquet")
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          batch.withColumn("reject_date", to_date(col("rejected_at")))
-            .write.mode("append").partitionBy("reject_date")
-            .parquet(quarantinePath)
-        }
-      }
-      .start()
+      .partitionBy("reject_date")
+      .start(quarantinePath)
 
-  /** Start the stream: foreachBatch partitioned append with an empty-batch
-    * guard (reference: S2C:157-176). The reference's per-batch `coalesce(1)`
-    * is dropped — ParquetLayerSink bounds file sizes instead and the
-    * [[graft.sinks.Compactor]] owns small-file cleanup off the hot path.
+  /** Start the stream: Spark's parquet file sink, partitioned by
+    * `event_date`, one write job per micro-batch (the reference's
+    * foreachBatch append, S2C:157-176, guards each write with `isEmpty`,
+    * which runs the stateful read → parse → dedup plan a second time). The
+    * reference's per-batch `coalesce(1)` is dropped — `maxRecordsPerFile`
+    * bounds file sizes instead and the [[graft.sinks.Compactor]] owns
+    * small-file cleanup, on layers without a sink log.
     *
-    * `crashAfterSinkOnBatch` is the crash-injection surface for the
-    * recovery gate (StreamingSpec; same pattern as Compactor's injected
-    * crashes): throwing AFTER the sink write but BEFORE foreachBatch
-    * returns models a worker dying between the parquet append and the
-    * checkpoint commit — the worst-case window, which on restart replays
-    * that micro-batch (at-least-once into the curated layer; the keyed
-    * JDBC upsert downstream absorbs the replay into exactly-once). */
+    * The sink records each batch's files in `<outputPath>/_spark_metadata`
+    * and commits that entry before the checkpoint's; a batch re-run after a
+    * crash between the two finds its entry and writes nothing, so the
+    * curated layer is exactly once. Readers of the layer — batch
+    * `spark.read.parquet(outputPath)` and
+    * [[HotMartStreamJob.parquetSource]] — list the files of that log, so
+    * they never see a batch that is only partly written. */
   def start(
       curated: DataFrame,
       outputPath: String,
       checkpointPath: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-      crashAfterSinkOnBatch: Option[Long] = None): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime("1 minute")): StreamingQuery =
     curated.writeStream
+      .format("parquet")
       .outputMode("append")
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          ParquetLayerSink.appendPartitioned(batch, outputPath)
-        }
-        if (crashAfterSinkOnBatch.contains(batchId))
-          throw new RuntimeException(s"injected crash after sink, batch $batchId")
-      }
-      .start()
+      .option("maxRecordsPerFile", ParquetLayerSink.MaxRecordsPerFile)
+      .partitionBy("event_date")
+      .start(outputPath)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.SizeGate
 import graft.marts.HotMarts
 
 /** Hot-mart streaming job
@@ -12,6 +13,12 @@ import graft.marts.HotMarts
   * stream the curated parquet layer, and per micro-batch cache the batch
   * once, fan out to the four hot-mart transforms, and hand each result to a
   * sink callback.
+  *
+  * [[parquetSource]] over a layer written by [[CuratedStreamJob.start]]
+  * lists the files of the layer's sink log (`_spark_metadata`), not the
+  * directory: a curated batch becomes visible only once it has committed,
+  * so a minute is never served from half a batch and then again from the
+  * rest.
   *
   * Differences from the reference, deliberate:
   *  - explicit curated schema instead of `streaming.schemaInference=true`
@@ -84,8 +91,12 @@ object HotMartStreamJob {
       curatedStream.withWatermark("event_ts", watermark),
       windowDuration, warnAt, criticalAt)
 
-  /** Start the stream; `sink` is called once per non-empty micro-batch with
-    * the four mart frames (production: JDBC upsert/append; tests: collect). */
+  /** Start the stream; `sink` is called once per micro-batch with the four
+    * mart frames (production: JDBC upsert/append; tests: collect). The file
+    * and Kafka sources schedule a batch only when input arrived, so there is
+    * no empty-batch pre-pass. The batch is persisted once for the four marts;
+    * when it fits one file split ([[graft.core.SizeGate]]) it is persisted
+    * as one partition, and the marts over it then plan with no shuffle. */
   def start(
       source: DataFrame,
       sink: HotMartBatch => Unit,
@@ -96,11 +107,9 @@ object HotMartStreamJob {
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try sink(computeBatch(batch, batchId))
-          finally { batch.unpersist(); () }
-        }
+        val cached = SizeGate.onePartitionIfSmall(batch).persist()
+        try sink(computeBatch(cached, batchId))
+        finally { cached.unpersist(); () }
       }
       .start()
 }

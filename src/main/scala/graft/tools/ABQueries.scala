@@ -16,10 +16,10 @@ import org.apache.spark.sql.SparkSession
   * Usage: ABQueries <site> <q1,q2,...> [sfDir] [reps-per-arm]
   */
 object ABQueries {
-  /** Every site name consulted so far this JVM — lets [[main]] FAIL FAST
-    * when asked to A/B a site with no registered consumer in the working
-    * tree (round-14 ADVICE: both arms would silently execute identical
-    * code and report a meaningless ~1.0 ratio). */
+  /** Every site name consulted so far this JVM — lets [[main]] fail, once
+    * after all queries ran, when asked to A/B a site with no registered
+    * consumer in the working tree (both arms would silently execute
+    * identical code and report a meaningless ~1.0 ratio). */
   private val consulted =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -63,14 +63,14 @@ object ABQueries {
         val s = ts.sorted
         f"${s.head}%7.3f (2nd ${if (s.length > 1) s(1) else Double.NaN}%7.3f)"
       }
-      // fail fast on a dead site: if no production code consulted the
-      // toggle while both arms ran, the two arms executed identical code
-      // and the ratio below would be ambience noise presented as evidence
-      require(consulted.contains(site),
-        s"A/B site '$site' was never consulted by any code path these " +
-          "queries executed — add (or restore) the site branch before measuring")
       println(f"[ab] $name%-42s legacy ${fmt(tA)}  new ${fmt(tB)}  ratio ${tB.min / tA.min}%5.2f")
     }
     spark.stop()
+    // a dead site: if no production code consulted the toggle while both
+    // arms ran, the two arms executed identical code and every ratio above
+    // is ambience noise presented as evidence
+    require(consulted.contains(site),
+      s"A/B site '$site' was never consulted by any code path these " +
+        "queries executed — add (or restore) the site branch before measuring")
   }
 }

@@ -68,4 +68,28 @@ class CompactorSpec extends SparkSpec {
     assert(!new File(layer + "_old").exists())
     assert(!new File(layer + "_compacted").exists())
   }
+
+  test("a layer written by a streaming file sink is refused, untouched") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val layer = tmpDir("compact_sink") + "/layer"
+    val input = MemoryStream[Long](spark)
+    val q = input.toDF().writeStream.format("parquet")
+      .option("checkpointLocation", tmpDir("compact_sink_ck")).start(layer)
+    try {
+      input.addData(1L to 10L); q.processAllAvailable()
+      input.addData(11L to 20L); q.processAllAvailable()
+    } finally q.stop()
+    def files = new File(layer).listFiles().map(_.getName).sorted.toSeq
+    val before = files
+    assert(before.contains("_spark_metadata"))
+    Seq[() => Any](() => Compactor.compact(spark, layer), () => Compactor.recover(spark, layer))
+      .foreach { call =>
+        val e = scala.util.Try(call()).failed.get
+        assert(e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains("_spark_metadata"))
+      }
+    assert(files === before)
+    assert(!new File(layer + "_compacted").exists() && !new File(layer + "_old").exists())
+    assert(spark.read.parquet(layer).count() === 20)
+  }
 }

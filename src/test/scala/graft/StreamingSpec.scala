@@ -216,6 +216,95 @@ class StreamingSpec extends SparkSpec {
     assert(b.anomalies.count() === 0)
   }
 
+  test("hot-mart stream serves committed curated batches only: a file outside the sink log is not read") {
+    import spark.implicits._
+    val inDir = tmpDir("commit_in")
+    val outDir = tmpDir("commit_out") + "/curated"
+    Fixtures.writeJsonl(inDir, "part-000.json", Seq(
+      Fixtures.rawEventJson("s1", 1, "2026-01-01T15:00:00+00:00", "2026-01-01", dedupKey = "c1"),
+      Fixtures.rawEventJson("s2", 2, "2026-01-01T15:00:30+00:00", "2026-01-01", dedupKey = "c2")))
+    CuratedStreamJob.start(
+      CuratedStreamJob.curate(CuratedStreamJob.jsonlSource(spark, inDir), rawIsKafka = false),
+      outDir, tmpDir("commit_ck"), Trigger.AvailableNow()).awaitTermination(120000)
+    // a batch caught mid-commit: its data file is in the layer's partition
+    // directory, its entry is not in the sink log yet
+    val stray = tmpDir("commit_stray")
+    graft.ingest.Normalizer.fromJsonLines(Seq(
+        Fixtures.rawEventJson("s3", 3, "2026-01-01T15:00:40+00:00", "2026-01-01", dedupKey = "c3"),
+        Fixtures.rawEventJson("s3", 3, "2026-01-01T15:07:00+00:00", "2026-01-01", dedupKey = "c4"))
+      .toDF("json"))
+      .coalesce(1).write.mode("overwrite").partitionBy("event_date").parquet(stray)
+    val part = new java.io.File(outDir, "event_date=2026-01-01")
+    new java.io.File(stray, "event_date=2026-01-01").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => assert(f.renameTo(new java.io.File(part, "stray-" + f.getName))))
+
+    var served = Seq.empty[(String, Long, Long)]
+    HotMartStreamJob.start(
+      HotMartStreamJob.parquetSource(spark, outDir, graft.schema.TripClick.curatedSchema),
+      b => served ++= b.trafficMinute.collect()
+        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2))),
+      tmpDir("commit_hot_ck"), Trigger.AvailableNow()).awaitTermination(120000)
+    // the 15:00 minute is served once, from the committed rows only
+    assert(served === Seq(("2026-01-01 15:00:00.0", 2L, 2L)))
+    assert(spark.read.parquet(outDir).count() === 2)
+  }
+
+  test("hot marts are equal on the one-partition and the multi-partition path; " +
+      "one partition plans no Exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    val inDir = tmpDir("gate_in")
+    // 3 minutes, 5 sessions, 7 documents, and a 60-click burst of one
+    // session inside one 5-minute window (a WARNING anomaly)
+    val lines = (0 until 120).map { i =>
+      Fixtures.rawEventJson(s"s${i % 5}", i % 7, f"2026-01-01T15:0${i % 3}:${i % 60}%02d+00:00",
+        "2026-01-01", clinicalAreas = if (i % 2 == 0) ",Oncology,Surgery" else "Cardiology",
+        dedupKey = s"g$i")
+    } ++ (0 until 60).map { i =>
+      Fixtures.rawEventJson("burst", 9, f"2026-01-01T15:0${i % 4}:${i}%02d+00:00", "2026-01-01",
+        dedupKey = s"b$i")
+    }
+    graft.ingest.Normalizer.fromJsonLines(lines.toDF("json"))
+      .repartition(3).write.parquet(inDir + "/data")
+
+    def exchanges(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case s: QueryStageExec => exchanges(s.plan)
+      case e: Exchange => 1 + exchanges(e.child)
+      case _ => p.children.map(exchanges).sum
+    }
+    /** The four marts of one micro-batch over the layer (wall-clock column
+      * dropped), and the shuffles in each one's plan. */
+    def marts(maxPartitionBytes: Option[String]): (Seq[Seq[String]], Seq[Int]) = {
+      val key = "spark.sql.files.maxPartitionBytes"
+      val before = spark.conf.getOption(key)
+      maxPartitionBytes.foreach(spark.conf.set(key, _))
+      var got: (Seq[Seq[String]], Seq[Int]) = null
+      try {
+        HotMartStreamJob.start(
+          HotMartStreamJob.parquetSource(spark, inDir + "/data", graft.schema.TripClick.curatedSchema),
+          b => {
+            val frames = Seq(b.trafficMinute.drop("updated_at"), b.topDocs, b.categoryTrend, b.anomalies)
+            val rows = frames.map(_.collect().map(_.toString).toSeq.sorted)
+            val shuffles = frames.map(f => exchanges(f.queryExecution.executedPlan))
+            got = (rows, shuffles)
+          },
+          tmpDir("gate_ck"), Trigger.AvailableNow()).awaitTermination(120000)
+      } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      got
+    }
+    val (one, oneShuffles) = marts(None)
+    val (many, manyShuffles) = marts(Some("1024"))
+    assert(oneShuffles === Seq(0, 0, 0, 0), "one-partition marts plan no Exchange")
+    assert(manyShuffles.head > 0, "the multi-partition path ran")
+    assert(one === many)
+    assert(one.head.size === 4)  // 15:00..15:03
+    assert(one(3).size === 1)    // the burst
+  }
+
   test("crash recovery: worker dies between sink write and checkpoint commit; " +
       "restart replays the batch, keyed JDBC layer stays exactly-once") {
     import org.apache.spark.sql.functions.col
@@ -234,35 +323,40 @@ class StreamingSpec extends SparkSpec {
     val f1 = new java.io.File(inDir, "part-001.json")
     assert(f0.setLastModified(f1.lastModified() - 60000))
 
-    def run(crash: Option[Long]) = {
-      val source = CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1)
-      val curated = CuratedStreamJob.curate(source, rawIsKafka = false)
-      CuratedStreamJob.start(curated, outDir, ckDir, Trigger.AvailableNow(),
-        crashAfterSinkOnBatch = crash)
-    }
-    // run 1: batch 0 (k1,k2) commits; batch 1 (k3) writes parquet, then the
-    // injected crash fires BEFORE the checkpoint commit — the worst window
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      run(Some(1L)).awaitTermination()
-    }
-    assert(ex.getMessage.contains("injected crash"))
-    // run 2: restart from the same checkpoint — Spark re-executes the
-    // uncommitted batch 1 from its offset WAL, then drains the rest
-    run(None).awaitTermination(120000)
+    def run() = CuratedStreamJob.start(
+      CuratedStreamJob.curate(
+        CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1), rawIsKafka = false),
+      outDir, ckDir, Trigger.AvailableNow())
+    // run 1: batch 0 (k1,k2) and batch 1 (k3) commit to the sink log and
+    // then to the checkpoint; with no watermark-only batch after them, k3's
+    // batch is the last one
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    try run().awaitTermination(120000) finally spark.conf.unset(noData)
+    val commits = new java.io.File(ckDir, "commits")
+    def committed = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong)
+    val last = committed.max
+    assert(last === 1L)
+    // the crash: the sink committed batch 1 to its log, the worker died
+    // before the checkpoint's commits/1 was written
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    // run 2: restart from the same checkpoint — Spark re-runs batch 1 from
+    // its offset log; the file sink finds batch 1 in its log and writes nothing
+    val q2 = run()
+    q2.awaitTermination(120000)
+    assert(q2.recentProgress.map(_.batchId).contains(last), s"batch $last re-ran")
+    assert(committed.contains(last))
 
     val out = spark.read.parquet(outDir)
-    // nothing lost: every key made it through the crash
+    // nothing lost, nothing doubled: the re-run batch is in the layer once
     assert(out.select("dedup_key").distinct().count() === 3)
-    // the replay REALLY happened: batch 1's rows land twice in the curated
-    // parquet layer (at-least-once is the layer's documented contract);
-    // the committed batch 0 is never re-run
-    assert(out.filter($"dedup_key" === "k3").count() === 2)
+    assert(out.filter($"dedup_key" === "k3").count() === 1)
     assert(out.filter($"dedup_key" === "k1").count() === 1)
     assert(out.filter($"dedup_key" === "k2").count() === 1)
 
-    // downstream serving layer: keyed upsert absorbs the replay — feeding
-    // the whole (duplicated) curated layer through twice still yields
-    // exactly one row per key
+    // downstream serving layer: keyed upsert absorbs a replay — feeding
+    // the curated layer through twice still yields exactly one row per key
     val url = "jdbc:derby:memory:graft_crash;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     conn.createStatement().executeUpdate(
