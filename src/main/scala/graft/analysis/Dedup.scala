@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.SizeGate
+
 /** Deduplication operators for training-data pipelines, in increasing
   * fuzziness: exact (hash groupBy), MinHash+LSH (near-dup candidate
   * generation at scale), exact n-gram Jaccard via inverted index, and
@@ -552,7 +554,7 @@ object Dedup {
     *
     * Scale shape: the edge-incident subgraph is labeled by
     * [[componentLabels]] — a single-task union-find when the measured
-    * symmetrized edge count is under [[ccBroadcastMaxSymRows]] (the
+    * symmetrized edge set fits one task ([[graft.core.SizeGate]]; the
     * common case: near-dup populations are tiny next to the corpus), the
     * min-label propagation loop with one pointer jump per round above it
     * ([[componentLabelsLoop]]; diameter/2 rounds of equi-join + min
@@ -590,21 +592,6 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("component"))
   }
 
-  /** How many symmetrized edge rows still count as "small" for the
-    * single-task components pass and the broadcast-gated tail joins.
-    * Bound restated in BYTES of the frames the gate actually admits
-    * (round-14 ADVICE: the old "4M rows ≈ 64 MB" note understated the
-    * worst case several-fold): at 2M sym rows, the label frame is ≤ 2M
-    * (id, label) rows ≈ 96 MB as broadcast unsafe rows (~48 B/row with
-    * overhead), the keepBest labelKeeper frame ≤ 2M 3-column rows
-    * ≈ 128 MB, and the union-find pass holds one ≤ 2M-entry LongMap
-    * (~64 MB) in a single task — each comfortably inside executor/driver
-    * headroom, and several orders above any measured near-dup population
-    * (sf0.1 graphs run 10²–10⁴ sym rows; the 100× ScaleUp decade stays
-    * under 10⁶). Above the gate the iterative loop + shuffle joins take
-    * over. */
-  private[analysis] val ccBroadcastMaxSymRows: Long = 2L * 1000 * 1000
-
   /** Component labels over the EDGE-INCIDENT subgraph only: returns
     * (labels = (id, label = component min) for every edge-incident node,
     * small = measured size gate for broadcasting the label frame).
@@ -614,24 +601,21 @@ object Dedup {
     * singletons back with a left join.
     *
     * Two physical strategies behind one contract, picked by the MEASURED
-    * symmetrized edge count (checkpointed inputs carry no stats, so a
-    * planner estimate would be garbage here):
+    * bytes of the persisted symmetrized edge set ([[graft.core.SizeGate]];
+    * checkpointed inputs carry no stats, so a planner estimate would be
+    * garbage here):
     *
-    *  - `symCount <= ccBroadcastMaxSymRows` and long-typed ids (every
-    *    in-repo graph): ONE streaming union-find task over the edge set
-    *    ([[unionFindLabels]]). The round-15 measurement that motivates it
-    *    (guide §1.2 step 1 — fix the algorithm before the per-task work):
-    *    the iterative loop pays 2 jobs × O(diameter/2) rounds of pure
-    *    fixed job latency on a gate-scale graph — the sf0.1 ensemble
-    *    graph (2,348 sym rows) ran 16 rounds ≈ 6.4 s of barriers to label
-    *    ~2.3k edges, where a single task does the same exact closure in
-    *    milliseconds. Below the gate the whole graph fits one task by
-    *    construction (the SAME bound that lets the tails broadcast the
-    *    label frame), so this is the "decide with small rows" shape of
-    *    guide §8, executor-side, no driver data work.
-    *  - above the gate (or exotic id types): the min-label propagation
-    *    loop with one pointer jump per round ([[componentLabelsLoop]]) —
-    *    the shuffle-join shape that scales out, unchanged. */
+    *  - fits one task and long-typed ids (every in-repo graph): ONE
+    *    streaming union-find task over the edge set ([[unionFindLabels]]).
+    *    The round-15 measurement that motivates it: the iterative loop
+    *    pays 2 jobs × O(diameter/2) rounds of pure fixed job latency on a
+    *    gate-scale graph — the sf0.1 ensemble graph (2,348 sym rows) ran
+    *    16 rounds ≈ 6.4 s of barriers to label ~2.3k edges, where a single
+    *    task does the same exact closure in milliseconds. The same gate
+    *    answer (`small`) lets the callers broadcast the label frame.
+    *  - otherwise: the min-label propagation loop with one pointer jump
+    *    per round ([[componentLabelsLoop]]) — the shuffle-join shape that
+    *    scales out. */
   private[graft] def componentLabels(
       edges: DataFrame,
       srcCol: String,
@@ -645,14 +629,14 @@ object Dedup {
     // both-endpoints-in-nodes filter: two semi-joins of the (small) edge
     // set against the node ids — only when the caller could not prove the
     // endpoints are in-set (see connectedComponents scaladoc)
-    val sym = nodeFilter.fold(sym0) { nodes =>
+    // materialized once: the gate measures it, every consumer reuses it
+    val sym = SizeGate.materialized(nodeFilter.fold(sym0) { nodes =>
       val nodeIds = nodes.toDF("__nid")
       sym0
         .join(nodeIds.withColumnRenamed("__nid", "a"), Seq("a"), "left_semi")
         .join(nodeIds.withColumnRenamed("__nid", "b"), Seq("b"), "left_semi")
-    }.persist()
-    val symCount = sym.count() // materialize once; reused by every consumer
-    val small = symCount <= ccBroadcastMaxSymRows
+    })
+    val small = SizeGate.fits(sym)
     val longIds = sym.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
     // A/B-adjudicated r15 (site "cc-unionfind", branch removed): same-JVM
@@ -663,7 +647,7 @@ object Dedup {
       sym.unpersist()
       return (labels, true)
     }
-    componentLabelsLoop(sym, maxIter, small)
+    (componentLabelsLoop(sym, maxIter), small)
   }
 
   /** Exact connected components of a measured-small symmetrized edge frame
@@ -671,12 +655,12 @@ object Dedup {
     * single partition and stream them through a union-find with
     * min-root union and path compression — the root of every component is
     * its minimum node id, exactly the fixed point the propagation loop
-    * converges to. Memory is one LongMap over the incident nodes
-    * (≤ 2·gate entries, see [[ccBroadcastMaxSymRows]]); edges are NOT
-    * retained. Executor-side (a mapPartitions task, not a driver
-    * collect); output is the (id, label) frame for every edge-incident
-    * node, set-identical to [[componentLabelsLoop]] (DedupSpec pins the
-    * equivalence on chain/star/cycle/disjoint fixtures). */
+    * converges to. Memory is one LongMap over the incident nodes (bounded
+    * by the gate, see [[graft.core.SizeGate]]); edges are NOT retained.
+    * Executor-side (a mapPartitions task, not a driver collect); output
+    * is the (id, label) frame for every edge-incident node, set-identical
+    * to [[componentLabelsLoop]] (DedupSpec pins the equivalence on
+    * chain/star/cycle/disjoint fixtures). */
   private[graft] def unionFindLabels(sym: DataFrame): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
@@ -718,10 +702,7 @@ object Dedup {
     * (the old label rides along in `__old`). The per-round joins stay
     * SHUFFLE joins on purpose: this path only runs on graphs the gate
     * measured too big to broadcast or single-task. */
-  private[graft] def componentLabelsLoop(
-      sym: DataFrame,
-      maxIter: Int,
-      small: Boolean): (DataFrame, Boolean) = {
+  private[graft] def componentLabelsLoop(sym: DataFrame, maxIter: Int): DataFrame = {
     var labels = sym.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
@@ -754,12 +735,10 @@ object Dedup {
       changed = next.filter(col("label") =!= col("__old")).count()
       labels = next.drop("__old")
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$round changed=$changed")
     }
     sym.unpersist()
     require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
-    (labels, small)
+    labels
   }
 
   /** C4-style corpus-wide sentence dedup: only the FIRST occurrence — in

@@ -3,6 +3,8 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.SizeGate
+
 /** Graph analytics over co-occurrence structure (documents co-clicked in a
   * session, products co-bought in an order). Complements
   * [[Dedup.connectedComponents]]: components answer "which nodes belong
@@ -148,27 +150,24 @@ object Graphs {
     * O(n²) anywhere. Hub sessions should be capped upstream (maxPerKey) —
     * same contract as [[cooccurrenceEdges]].
     *
+    * That is the shape of [[hitsLoop]]. A persisted edge list that fits
+    * one task ([[graft.core.SizeGate]]) runs the whole power iteration as
+    * ONE task instead ([[hitsSingleTask]]), not 2·iterations checkpoint
+    * jobs of fixed latency. Its per-node sums accumulate in a different
+    * order than the distributed aggregate: ulp-level drift, which the
+    * micro-unit gate's pinned margins absorb (PagerankMarginSpec).
+    *
     * Outputs are scaled so each side's MEAN is 1.0 (the [[pageRank]]
     * convention): side ('hub'|'authority'), id, score. */
-  /** Edge-count gate for [[hits]]' single-task strategy: ≤ 2M buffered
-    * (u, v) string pairs ≈ low hundreds of MB in one task — far above any
-    * gate-SF click graph, far below a production graph, which keeps the
-    * distributed per-iteration shape. Within the gate the whole power
-    * iteration is ONE task instead of 2·iterations checkpoint jobs of
-    * pure fixed latency (the r15 CC lesson applied to HITS; per-node sums
-    * accumulate in a different order than the distributed aggregate, which
-    * is exactly the ulp-level drift the micro-unit gate's pinned margins
-    * absorb — PagerankMarginSpec re-validates on the gate corpus). */
-  private[graft] val hitsSingleTaskMaxEdges: Long = 2L * 1000 * 1000
-
   def hits(
       edges: DataFrame,
       iterations: Int = 5,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("u"),
-      col(dstCol).cast("string").as("v")).distinct().persist()
-    if (e.count() <= hitsSingleTaskMaxEdges) {
+    // materialized once: the gate measures it, either strategy reuses it
+    val e = SizeGate.materialized(edges.select(col(srcCol).cast("string").as("u"),
+      col(dstCol).cast("string").as("v")).distinct())
+    if (SizeGate.fits(e)) {
       val out = hitsSingleTask(e, iterations).localCheckpoint(true)
       e.unpersist()
       return out

@@ -23,13 +23,13 @@ object HotMarts {
     *
     * Two exact distincts plan as Expand + two aggregates, and Expand's
     * output partitioning is unknown, so even a one-partition micro-batch
-    * pays two shuffles. Input that fits one file split
-    * ([[graft.core.SizeGate]]) counts set sizes instead: one aggregate, no
-    * Expand, whose sets are bounded by the split. Larger input keeps the
-    * distinct aggregates, which spill. */
+    * pays two shuffles. Input that fits one task ([[graft.core.SizeGate]])
+    * counts set sizes instead: one aggregate, no Expand, whose sets are
+    * bounded by the gate's budget. Larger input keeps the distinct
+    * aggregates, which spill. */
   def trafficPerMinute(clicks: DataFrame, exact: Boolean = true): DataFrame = {
     val distinct: Column => Column =
-      if (exact && SizeGate.fitsOneSplit(clicks)) c => size(collect_set(c)).cast("long")
+      if (exact && SizeGate.fits(clicks)) c => size(collect_set(c)).cast("long")
       else ColdMarts.distinctCount(_, exact)
     clicks
       .groupBy(date_trunc("minute", col("event_ts")).as("event_minute"))

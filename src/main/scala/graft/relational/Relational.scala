@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
+import graft.core.SizeGate
+
 /** Relational operator suite over the TPC-H-style star schema.
   *
   * The reference pipeline only ever uses one join shape (a tiny left
@@ -34,11 +36,6 @@ object Relational {
     * nondeterministic one. Inputs are 2-decimal values stored as doubles, so
     * the casts below are lossless; results are rounded to cents and returned
     * as DOUBLE to keep the public schema unchanged. */
-  /** Row gate for [[distributedCumSum]]'s single-partition fast path: one
-    * running-window task buffering ≤ 8M narrow rows (~128 MB spillable) —
-    * see the fast-path comment in [[distributedCumSum]]. */
-  private[graft] val cumSumSinglePartitionMaxRows: Long = 8L * 1000 * 1000
-
   private val moneyT = DecimalType(12, 2)   // covers TPC-H price domains
   private val rateT = DecimalType(4, 2)     // discount/tax ∈ [0, 1), 2 decimals
   private def money(c: Column): Column = c.cast(moneyT)
@@ -419,31 +416,35 @@ object Relational {
     // Callers whose input is an expensive projection (sequencePack's
     // tokenize-and-count over the corpus) pass true to compute it once;
     // callers with pre-aggregated or already-materialized inputs keep the
-    // default and skip the extra checkpoint job.
+    // default and skip the extra materialization job.
     // A/B-adjudicated r15 (site "cumsum-mat", branch removed): q256 0.72,
     // q269 0.94, q283 0.93 same-JVM even at gate SF (OPTIMIZATION_r15.md)
-    val mat = if (materializeInput) df.localCheckpoint(true) else df
-    // measured-small fast path (materialized inputs only — the count is a
-    // cached-partition scan, not a recompute): below the gate the whole
-    // prefix sum is ONE running window over one partition — the same
-    // values row for row, minus the range-boundary sampling job, the
-    // ranged re-checkpoint, and the offsets collect. The gate bounds the
-    // single window task's buffered rows (~16 B/row of longs; 8M ≈ 128 MB
-    // spillable), far above any gate-SF frame and far below a 100 TB
-    // corpus, which keeps the scale-out shape below.
-    if (materializeInput && mat.count() <= cumSumSinglePartitionMaxRows) {
+    val mat = if (materializeInput) SizeGate.materialized(df) else df
+    // measured-small fast path (materialized inputs only, so the gate reads
+    // the filled cache): a frame that fits one task (SizeGate) is ONE
+    // running window over one partition — the same values row for row,
+    // minus the range-boundary sampling job, the ranged re-checkpoint and
+    // the offsets collect. The coalesced child satisfies the window's
+    // all-rows distribution, so it plans no exchange; the checkpoint lets
+    // the cached input go, and the coalesce over it keeps its one
+    // partition known, so plans above it add no exchange either.
+    if (materializeInput && SizeGate.fits(mat)) {
       val wAll = Window.orderBy(orderCols.map(col): _*)
       val wCum = wAll.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val withCums = sumCols.foldLeft(mat) { (d, c) =>
+      val withCums = sumCols.foldLeft(mat.coalesce(1)) { (d, c) =>
         d.withColumn("cum_" + c, sum(col(c)).over(wCum))
       }
-      return rankCol.fold(withCums)(rc =>
+      val out = rankCol.fold(withCums)(rc =>
         withCums.withColumn(rc, row_number().over(wAll).cast(LongType)))
+        .localCheckpoint(true).coalesce(1)
+      mat.unpersist()
+      return out
     }
     val ranged = mat
       .repartitionByRange(parts, orderCols.map(col): _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint(true)
+    if (materializeInput) mat.unpersist()
     val aggCols = count(lit(1)).as("__n") +:
       sumCols.map(c => sum(col(c)).as("__s_" + c))
     val perPart = ranged.groupBy("__pid").agg(aggCols.head, aggCols.tail: _*)

@@ -95,7 +95,7 @@ object HotMartStreamJob {
     * mart frames (production: JDBC upsert/append; tests: collect). The file
     * and Kafka sources schedule a batch only when input arrived, so there is
     * no empty-batch pre-pass. The batch is persisted once for the four marts;
-    * when it fits one file split ([[graft.core.SizeGate]]) it is persisted
+    * when it fits one task ([[graft.core.SizeGate]]) it is persisted
     * as one partition, and the marts over it then plan with no shuffle. */
   def start(
       source: DataFrame,

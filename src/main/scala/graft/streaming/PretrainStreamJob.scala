@@ -106,7 +106,8 @@ object PretrainStreamJob {
   /** Start the stream; `sink` is called once per non-empty micro-batch
     * with (batchId, packed occupancy histogram). Empty batches are
     * skipped whole — no layer version is written, so they cannot shadow
-    * a later replay. */
+    * a later replay. The batch is persisted before the emptiness test, so
+    * the source plan runs once per batch. */
   def start(
       source: DataFrame,
       artifactRoot: String,
@@ -124,12 +125,12 @@ object PretrainStreamJob {
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try processBatch(batch.sparkSession, batch, batchId, artifactRoot,
-            sink, t, evalMod, alpha, ctxTokens, compactEvery, retainVersions)
-          finally { batch.unpersist(); () }
-        }
+        batch.persist()
+        try {
+          if (!batch.isEmpty)
+            processBatch(batch.sparkSession, batch, batchId, artifactRoot,
+              sink, t, evalMod, alpha, ctxTokens, compactEvery, retainVersions)
+        } finally { batch.unpersist(); () }
       }
       .start()
 }

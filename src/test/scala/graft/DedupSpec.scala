@@ -339,21 +339,32 @@ class DedupSpec extends SparkSpec {
         .distinct().persist()
       val fast = Dedup.unionFindLabels(sym).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val loop = Dedup.componentLabelsLoop(sym, maxIter = 50, small = true)
-        ._1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val loop = Dedup.componentLabelsLoop(sym, maxIter = 50)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(fast === loop, s"strategies diverged on edges=$edges")
     }
   }
 
   test("componentLabels gate: long ids under the row gate take the single-task path") {
-    // the fast path must label every edge-incident node with the component
-    // min and return small=true so the tails broadcast
-    val pairs = Seq((4L, 2L), (2L, 9L)).toDF("doc_a", "doc_b")
-    val (labels, small) = Dedup.componentLabels(
-      pairs, "doc_a", "doc_b", maxIter = 20, nodeFilter = None)
-    assert(small)
-    assert(labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((2L, 2L), (4L, 2L), (9L, 2L)))
+    // under the SizeGate budget the fast path labels every edge-incident
+    // node with the component min and returns small=true so the tails
+    // broadcast; at a 1-byte budget the loop runs and returns small=false
+    val pairs = Seq((4L, 2L), (2L, 9L), (20L, 31L), (31L, 25L)).toDF("doc_a", "doc_b")
+    def run() = {
+      val (labels, small) = Dedup.componentLabels(
+        pairs, "doc_a", "doc_b", maxIter = 20, nodeFilter = None)
+      (labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, small)
+    }
+    val (fast, fastSmall) = run()
+    val (loop, loopSmall) = withGateBudget("1")(run())
+    assert(fastSmall && !loopSmall)
+    assert(fast === Set((2L, 2L), (4L, 2L), (9L, 2L), (20L, 20L), (25L, 20L), (31L, 20L)))
+    assert(loop === fast)
+    // the tails take the same answer: dedup decisions agree on both paths
+    val nodes = Seq(2L, 4L, 9L, 20L, 25L, 31L, 40L).toDF("doc_id")
+      .withColumn("quality_centi", (col("doc_id") * 7 % 10).cast("long"))
+    def decisions() = Dedup.dedupClustersKeepBest(pairs, nodes).collect().map(_.toSeq).toSeq
+    assert(withGateBudget("1")(decisions()) === decisions())
   }
 
   test("prefix-filtered jaccard equals exact all-pairs jaccard (lossless)") {

@@ -45,6 +45,22 @@ class DistributedRankSpec extends SparkSpec {
         plan.take(2000))
   }
 
+  test("distributedCumSum: a materialized input under the SizeGate budget is one window, the same values") {
+    val df = frame(3000)
+    def run() = Relational.distributedCumSum(df, Seq("v"), Seq("t"),
+      rankCol = Some("i"), materializeInput = true)
+    // the fast path returns its one-partition checkpoint; the scale-out
+    // path still plans its per-partition window over the ranged checkpoint
+    val fast = run()
+    val ranged = withGateBudget("1")(run())
+    assert(fast.rdd.getNumPartitions === 1)
+    assert(!fast.queryExecution.executedPlan.toString.contains("Window"))
+    assert(ranged.queryExecution.executedPlan.toString.contains("Window"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("v", "t", "cum_t", "i").orderBy("v").collect().map(_.toSeq).toSeq
+    assert(rows(fast) === rows(ranged))
+  }
+
   test("distributedCumSum: empty and single-row frames") {
     val empty = Relational.distributedCumSum(frame(0), Seq("v"), Seq("t"),
       rankCol = Some("i"))

@@ -67,11 +67,15 @@ class GraphsSpec extends SparkSpec {
       ("s3", "d3"), ("s3", "d4"), ("s9", "d9")).toDF("src", "dst")
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val fast = asMap(Graphs.hits(edges, iterations = 5)) // under the gate
-    val e = edges.select($"src".cast("string").as("u"),
-      $"dst".cast("string").as("v")).distinct().persist()
-    val loop = asMap(Graphs.hitsLoop(e, iterations = 5))
-    e.unpersist()
+    // the single task returns its checkpoint; the loop unions its two sides
+    def loopRan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.exists(_.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.Union])
+    val fastDf = Graphs.hits(edges, iterations = 5) // under the SizeGate budget
+    val loopDf = withGateBudget("1")(Graphs.hits(edges, iterations = 5))
+    assert(!loopRan(fastDf) && loopRan(loopDf))
+    val fast = asMap(fastDf)
+    val loop = asMap(loopDf)
     assert(fast.keySet === loop.keySet)
     fast.foreach { case (k, v) =>
       assert(math.abs(v - loop(k)) < 1e-9, s"$k: fast $v vs loop ${loop(k)}")

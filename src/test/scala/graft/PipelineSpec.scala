@@ -569,6 +569,39 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("pretrain stream job: the source plan runs once per micro-batch; an empty batch writes no version") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.PretrainStreamJob
+    def mk(prefix: String, n: Int): String =
+      (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, String)](spark)
+    // every row the source projection produces passes this counter once
+    val sourceRows = spark.sparkContext.longAccumulator("pretrain_source_rows")
+    val counted = udf { (id: Long) => sourceRows.add(1); id }.asNondeterministic()
+    val source = input.toDF().toDF("doc_id", "text", "source")
+      .filter(col("source") =!= "drop")
+      .select(counted(col("doc_id")).as("doc_id"), col("text"), col("source"))
+    val root = tmpDir("pretrain_stream_once")
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = PretrainStreamJob.start(source, root,
+      (id, df) => { df.collect(); emitted += id },
+      tmpDir("pretrain_stream_once_ck"), Trigger.ProcessingTime(0L), ctxTokens = 8)
+    try {
+      input.addData((1L, mk("aa", 38), "web"), (4L, mk("na", 38), "web"),
+        (7L, mk("da", 38), "books"))
+      q.processAllAvailable()
+      input.addData((9L, mk("ea", 38), "drop")) // a batch that filters to nothing
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(sourceRows.value === 3L, "the source plan ran more than once for a batch")
+    assert(emitted.toSeq === Seq(0L))
+    assert(new java.io.File(root, "exact/v=0").isDirectory)
+    assert(!new java.io.File(root, "exact/v=1").exists(), "the empty batch wrote a version")
+  }
+
   test("increment law precondition fails loudly: non-monotonic batch ids throw") {
     import spark.implicits._
     import graft.analysis.CorpusPrep

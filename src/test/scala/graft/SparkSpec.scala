@@ -15,6 +15,17 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body` with the [[graft.core.SizeGate]] budget
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) at `bytes`, the
+    * session's setting restored after. At `1` every gate consumer takes its
+    * scale-out branch. */
+  def withGateBudget[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** The oracle GATE dataset the margin specs (DsirMarginSpec,

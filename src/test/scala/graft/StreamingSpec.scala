@@ -278,26 +278,21 @@ class StreamingSpec extends SparkSpec {
     }
     /** The four marts of one micro-batch over the layer (wall-clock column
       * dropped), and the shuffles in each one's plan. */
-    def marts(maxPartitionBytes: Option[String]): (Seq[Seq[String]], Seq[Int]) = {
-      val key = "spark.sql.files.maxPartitionBytes"
-      val before = spark.conf.getOption(key)
-      maxPartitionBytes.foreach(spark.conf.set(key, _))
+    def marts(): (Seq[Seq[String]], Seq[Int]) = {
       var got: (Seq[Seq[String]], Seq[Int]) = null
-      try {
-        HotMartStreamJob.start(
-          HotMartStreamJob.parquetSource(spark, inDir + "/data", graft.schema.TripClick.curatedSchema),
-          b => {
-            val frames = Seq(b.trafficMinute.drop("updated_at"), b.topDocs, b.categoryTrend, b.anomalies)
-            val rows = frames.map(_.collect().map(_.toString).toSeq.sorted)
-            val shuffles = frames.map(f => exchanges(f.queryExecution.executedPlan))
-            got = (rows, shuffles)
-          },
-          tmpDir("gate_ck"), Trigger.AvailableNow()).awaitTermination(120000)
-      } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      HotMartStreamJob.start(
+        HotMartStreamJob.parquetSource(spark, inDir + "/data", graft.schema.TripClick.curatedSchema),
+        b => {
+          val frames = Seq(b.trafficMinute.drop("updated_at"), b.topDocs, b.categoryTrend, b.anomalies)
+          val rows = frames.map(_.collect().map(_.toString).toSeq.sorted)
+          val shuffles = frames.map(f => exchanges(f.queryExecution.executedPlan))
+          got = (rows, shuffles)
+        },
+        tmpDir("gate_ck"), Trigger.AvailableNow()).awaitTermination(120000)
       got
     }
-    val (one, oneShuffles) = marts(None)
-    val (many, manyShuffles) = marts(Some("1024"))
+    val (one, oneShuffles) = marts()
+    val (many, manyShuffles) = withGateBudget("1")(marts())
     assert(oneShuffles === Seq(0, 0, 0, 0), "one-partition marts plan no Exchange")
     assert(manyShuffles.head > 0, "the multi-partition path ran")
     assert(one === many)
