@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query probe: `runMain graft.Audit <mode> <name>...` runs every
@@ -16,7 +17,11 @@ import org.apache.spark.sql.SparkSession
   *    need every output column materialized to time the operator itself.
   *  - `explain`: the formatted physical plan (the PLANS.md audits).
   * Build is timed apart from the action: iterative queries (CC, pagerank,
-  * sketch pipelines) run embedded actions while building the frame. */
+  * sketch pipelines) run embedded actions while building the frame. Each
+  * timed rep also prints `compiles=`, the whole-stage and expression classes
+  * Janino compiled during it (Spark's JVM-wide `CodegenMetrics`): rep 1 pays
+  * the query's compiles, and reps 2–3 print 0 when its classes stay in the
+  * generated-code cache, so a rep-1-only excess is compile time. */
 object Audit {
   def main(args: Array[String]): Unit = {
     val modes = Set("time", "forced", "explain")
@@ -31,6 +36,7 @@ object Audit {
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
       .foreach { case (name, fn) =>
@@ -39,13 +45,14 @@ object Audit {
           fn(spark, sfDir).explain("formatted")
         } else {
           val best = (0 until 3).map { _ =>
+            val c0 = compiles
             val tB = System.nanoTime()
             val df = fn(spark, sfDir)
             val build = secs(tB)
             val t0 = System.nanoTime()
             val n = if (mode == "forced") df.queryExecution.toRdd.count() else df.count()
             val run = secs(t0)
-            println(f"[audit] $name rows=$n build=$build%.3f $mode=$run%.3f")
+            println(f"[audit] $name rows=$n build=$build%.3f $mode=$run%.3f compiles=${compiles - c0}")
             spark.catalog.clearCache() // same per-query hygiene as Bench/Verify
             build + run
           }.min

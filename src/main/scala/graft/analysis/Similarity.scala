@@ -899,8 +899,14 @@ object Similarity {
     * dimension) coordinates (md5 parity), so the projection is
     * reproducible in any engine with no weight artifact to version.
     *
-    * Scale shape: a single codegen'd projection — outDim fused
-    * sum-of-±terms per row, no shuffle, pipelines into the parquet scan.
+    * Scale shape: a single codegen'd projection, no shuffle, pipelined
+    * into the parquet scan. Each output is one
+    * [[graft.functions.VectorOps.dotProduct]] fold against its plane's ±1
+    * row as an array literal, which generated code references instead of
+    * inlining (outDim × dim inlined terms overflow Janino's per-method
+    * limit, and Spark then runs the plan interpreted). The fold sums in
+    * ascending dimension order, so values are the left-to-right sum of the
+    * ±terms bit for bit; a vector whose length is not `dim` projects to null.
     * Output (exploded for oracle comparability): idCol, p, value (6dp). */
   def randomProjection(
       corpus: DataFrame,
@@ -911,9 +917,9 @@ object Similarity {
     require(outDim >= 1 && dim >= 1, s"bad dims $outDim/$dim")
     val inv = 1.0 / math.sqrt(outDim.toDouble)
     val comps = (0 until outDim).map { p =>
-      val terms = (0 until dim).map(j =>
-        element_at(col(vecCol), j + 1).cast("double") * lit(rpSign(p, j)))
-      struct(lit(p).as("p"), (terms.reduceLeft(_ + _) * inv).as("value"))
+      val signs = typedLit(Array.tabulate(dim)(j => rpSign(p, j).toFloat))
+      struct(lit(p).as("p"),
+        (graft.functions.VectorOps.dotProduct(col(vecCol), signs) * inv).as("value"))
     }
     corpus
       .select(col(idCol), explode(array(comps: _*)).as("c"))

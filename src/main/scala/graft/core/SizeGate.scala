@@ -24,8 +24,8 @@ import org.apache.spark.sql.internal.SQLConf
   * Worst-case in-task footprint at the 64 MB default, per consumer:
   *  - hot stream batch (`HotMartStreamJob.start`): the batch as one
   *    partition, ≤ 64 MB of rows under the four marts' aggregates.
-  *  - `HotMarts.trafficPerMinute`: per-minute sets of session and document
-  *    ids, bounded by the batch.
+  *  - `ColdMarts.distinctCounter` (`trafficPerMinute`, `dailyTraffic`):
+  *    per-group sets of session and document ids, bounded by the input.
   *  - `Dedup.componentLabels`: a long (a, b) edge decodes to 24 B, so
   *    ≤ 2.8M symmetrized edges; the union-find holds ≤ 2.8M nodes
   *    (~130 MB of `LongMap`) and the broadcast label frame ≤ 2.8M rows.

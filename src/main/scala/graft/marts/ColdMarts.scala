@@ -1,9 +1,11 @@
 package graft.marts
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.core.SizeGate
 
 /** The four cold (batch, full-recompute) mart queries
   * (reference: processing/spark/jobs/etl_to_analytics_mart.py — semantics in
@@ -50,10 +52,11 @@ object ColdMarts {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select("event_date", "peak_hour")
+    val distinct = distinctCounter(clicks, exact)
     val daily = clicks.groupBy("event_date").agg(
       count(lit(1)).as("total_events"),
-      distinctCount(col("session_id"), exact).as("unique_sessions"),
-      distinctCount(col("document_id"), exact).as("unique_documents"))
+      distinct(col("session_id")).as("unique_sessions"),
+      distinct(col("document_id")).as("unique_documents"))
     daily.join(peak, Seq("event_date"), "left")
   }
 
@@ -108,6 +111,19 @@ object ColdMarts {
 
   /** Exact parity ↔ sketch mode switch (SURVEY.md §7.4: exact distinct is the
     * dominant shuffle cost at 100 TB). */
-  private[graft] def distinctCount(c: org.apache.spark.sql.Column, exact: Boolean) =
+  private[graft] def distinctCount(c: Column, exact: Boolean) =
     if (exact) countDistinct(c) else approx_count_distinct(c)
+
+  /** The distinct counter of a query that counts two distincts. Two exact
+    * distincts plan as Expand + two aggregates. Expand's output
+    * partitioning is unknown, so even one partition pays two shuffles, and
+    * its projection order follows the hash of expression ids, so the same
+    * query generates different classes from one build to the next and
+    * recompiles them. Input that fits one task ([[graft.core.SizeGate]])
+    * counts set sizes instead: one aggregate, no Expand, the same classes
+    * on every build, with sets bounded by the gate's budget. Larger input
+    * keeps the distinct aggregates, which spill. */
+  private[graft] def distinctCounter(clicks: DataFrame, exact: Boolean): Column => Column =
+    if (exact && SizeGate.fits(clicks)) c => size(collect_set(c)).cast("long")
+    else distinctCount(_, exact)
 }

@@ -1,10 +1,8 @@
 package graft.marts
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.core.SizeGate
 
 /** The four hot (streaming micro-batch) mart queries
   * (reference: processing/spark/jobs/streaming_to_analytics_mart_realtime.py —
@@ -19,18 +17,10 @@ object HotMarts {
   /** #5 mart_realtime_traffic_minute (reference: RT:186-206): per-minute
     * clicks / unique sessions / unique docs. `updated_at` is added by the
     * sink wrapper, not here — keeping wall-clock out of the transform makes
-    * micro-batch replay deterministic (SURVEY.md §7.4).
-    *
-    * Two exact distincts plan as Expand + two aggregates, and Expand's
-    * output partitioning is unknown, so even a one-partition micro-batch
-    * pays two shuffles. Input that fits one task ([[graft.core.SizeGate]])
-    * counts set sizes instead: one aggregate, no Expand, whose sets are
-    * bounded by the gate's budget. Larger input keeps the distinct
-    * aggregates, which spill. */
+    * micro-batch replay deterministic (SURVEY.md §7.4). Its two distincts
+    * count through [[ColdMarts.distinctCounter]]. */
   def trafficPerMinute(clicks: DataFrame, exact: Boolean = true): DataFrame = {
-    val distinct: Column => Column =
-      if (exact && SizeGate.fits(clicks)) c => size(collect_set(c)).cast("long")
-      else ColdMarts.distinctCount(_, exact)
+    val distinct = ColdMarts.distinctCounter(clicks, exact)
     clicks
       .groupBy(date_trunc("minute", col("event_ts")).as("event_minute"))
       .agg(

@@ -16,6 +16,14 @@ class EntrySpec extends SparkSpec {
     assert(dups.isEmpty, s"duplicate registry names: $dups")
   }
 
+  // with the fallback off, a whole-stage class Janino cannot compile fails
+  // the query instead of running it interpreted
+  test("q195_random_projection runs as compiled whole-stage code") {
+    withConf("spark.sql.codegen.fallback", "false") {
+      assert(SparkEntry.queries("q195_random_projection")(spark, sf).collect().nonEmpty)
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001 and returns a well-formed frame") {
       val df = fn(spark, sf)

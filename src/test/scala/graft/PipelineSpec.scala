@@ -258,6 +258,36 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("compile once: a warm day reuses the generated classes of the days before it") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val root = tmpDir("compile_once")
+    val layout = DailyPipeline.Layout(root)
+    val url = "jdbc:derby:memory:compile_once;create=true"
+    val stages: Seq[(String, String => Unit)] = Seq(
+      "archive_raw" -> (in => DailyPipeline.archiveRaw(spark, in, layout)),
+      "curate" -> (_ => DailyPipeline.curate(spark, layout)),
+      "cold_marts" -> (_ => DailyPipeline.coldMarts(spark, layout)),
+      "serving" -> (_ => DailyPipeline.loadToServing(spark, layout, url)))
+    val perDay = lawDrops.zipWithIndex.map { case (lines, d) =>
+      val in = Fixtures.writeJsonl(tmpDir(s"compile_once_in_$d"), "events.json", lines)
+      stages.map { case (name, stage) =>
+        val before = compiles
+        stage(in)
+        name -> (compiles - before)
+      }.toMap
+    }
+    // day 1 has no late events or replays and creates the served tables;
+    // from day 3 on a day's plans are all seen before. Archive still
+    // compiles: codegen inlines its ingest stamp, a folded current_timestamp()
+    perDay.zipWithIndex.drop(2).foreach { case (c, d) =>
+      Seq("curate", "cold_marts", "serving").foreach { s =>
+        assert(c(s) === 0, s"day ${d + 1}: $s compiled ${c(s)} classes")
+      }
+      assert(c.values.sum <= 3, s"day ${d + 1} compiled ${c.values.sum} classes: $c")
+    }
+  }
+
   test("serving load replaces changed dates in place: the table, its index and untouched dates survive") {
     val root = tmpDir("serve_keep")
     val layout = DailyPipeline.Layout(root)

@@ -16,16 +16,19 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** `body` with the [[graft.core.SizeGate]] budget
-    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) at `bytes`, the
-    * session's setting restored after. At `1` every gate consumer takes its
-    * scale-out branch. */
-  def withGateBudget[T](bytes: String)(body: => T): T = {
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  /** `body` with the session's runtime setting `key` at `value`, the
+    * previous setting restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, bytes)
+    spark.conf.set(key, value)
     try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** `body` with the [[graft.core.SizeGate]] budget
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) at `bytes`. At `1`
+    * every gate consumer takes its scale-out branch. */
+  def withGateBudget[T](bytes: String)(body: => T): T =
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", bytes)(body)
 }
 
 /** The oracle GATE dataset the margin specs (DsirMarginSpec,
