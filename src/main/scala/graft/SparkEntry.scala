@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.adapters.TestData
 import graft.analysis.{CorpusPrep, Dedup, Graphs, Multimodal, Similarity, TextAnalysis, TimeSeries, UnigramLM}
-import graft.core.{GraftSession, Tables}
+import graft.core.Tables
 import graft.functions.SimHash
 import graft.ingest.Normalizer
 import graft.marts.{ColdMarts, HotMarts}
@@ -43,6 +43,21 @@ object SparkEntry {
   /** DuckDB oracle for each query key, against the same parquet tables. */
   def oracleSql: Map[String, String] =
     registry.map(g => g.name -> g.oracleSql).toMap
+
+  /** Parent of the artifact layers q290/q292 round-trip through parquet:
+    * one directory per JVM, made on first use and deleted at exit, so two
+    * engines on one host never share a layer. */
+  private lazy val layerScratch: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_layers")
+    sys.addShutdownHook(
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(root.toFile))
+    root
+  }
+
+  /** A new, empty layer directory per build: a frame built earlier keeps
+    * reading the files it listed when its query is built again. */
+  private def freshLayerRoot(query: String): String =
+    java.nio.file.Files.createTempDirectory(layerScratch, query).toString
 
   private def analysisQueries: Seq[Gated] = Seq(
     // THE LAW for the CDC chunk artifact: per-hash (sum n, min l) merge
@@ -2673,7 +2688,7 @@ object SparkEntry {
     Gated("q290_pretrain_artifact_roundtrip", { (s, d) =>
       val docs = TestData.documents(s, d)
       val half = docs.agg(max("doc_id")).head.getLong(0) / 2
-      val root = sys.props("java.io.tmpdir") + "/graft_q290_layer"
+      val root = freshLayerRoot("q290_")
       CorpusPrep.writeArtifacts(
         CorpusPrep.pretrainArtifacts(docs.filter(col("doc_id") <= half)),
         root, version = 0L)
@@ -2696,10 +2711,7 @@ object SparkEntry {
       val docs = TestData.documents(s, d)
       val maxId = docs.agg(max("doc_id")).head.getLong(0)
       val (aCut, bCut) = (maxId / 3, 2 * maxId / 3)
-      val root = sys.props("java.io.tmpdir") + "/graft_q292_layer"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = freshLayerRoot("q292_")
       CorpusPrep.writeArtifacts(
         CorpusPrep.pretrainArtifacts(docs.filter(col("doc_id") <= aCut)),
         root, version = 0L)
@@ -4712,8 +4724,7 @@ object SparkEntry {
         |  WHERE $embeddingCosineXY
         |        >= 0.4),
         |$cosineClosureTail""".stripMargin),
-    // gap-based sessionization (window-function batch variant; the
-    // streaming flatMapGroupsWithState twin is spec-verified)
+    // gap-based sessionization (window-function batch variant)
     Gated("q36_sessionize", { (s, d) =>
       graft.streaming.Sessionize.sessionizeBatch(
           TestData.clicks(s, d), gapSeconds = 1800, userCol = "session_id")
@@ -8200,7 +8211,7 @@ object SparkEntry {
     * the BPE (raw-count argmax) and WordPiece (likelihood-ratio argmax)
     * oracle generators — the two trainers differ ONLY in b$r. */
   private def mergeTrainerCtes(
-      merges: Int, argmax: Int => String, where: String = ""): String = {
+      merges: Int, argmax: Int => String, where: String): String = {
     val rounds = (1 to merges).map { r =>
       s"""p$r AS (
          |  SELECT pair, count(*) AS n_words, CAST(sum(freq) AS BIGINT) AS total_count
@@ -8263,7 +8274,7 @@ object SparkEntry {
 
   /** The shared training-chain CTEs for q252/q255: doc-keyed tokens, the
     * initial char vocab, and the unrolled merge rounds. */
-  private def bpeChainSql(rounds: String, where: String = ""): String =
+  private def bpeChainSql(rounds: String, where: String): String =
     s"""toks AS (
        |  SELECT doc_id,
        |    list_filter(string_split($normText, ' '), x -> x <> '') AS t

@@ -1375,8 +1375,7 @@ object CorpusPrep {
   }
 
   /** Slot aggregation off an already-positioned span frame 〈idCol, n_tok,
-    * start〉 — the stateless half [[packSlots]] and the streaming twin
-    * ([[graft.streaming.StreamingPacking]]) share: start/end positions →
+    * start〉 — the stateless half of [[packSlots]]: start/end positions →
     * window-span explode → per-window counts. */
   def packSlotsFromSpans(spans: DataFrame, ctxTokens: Int): DataFrame =
     spans

@@ -28,8 +28,7 @@ object CountMin {
     pmod(Sketches.hash60(concat(lit(s"$row|"), value.cast("string"))), lit(width))
 
   /** All `depth` cells of a value as one generator — the single-pass form
-    * shared by the batch build and the streaming twin (a union of depth
-    * projections would scan the source depth times). */
+    * (a union of depth projections would scan the source depth times). */
   def cellsOf(value: Column, depth: Int, width: Int): Column =
     explode(array((0 until depth).map(r =>
       struct(lit(r).as("row"), bucketOf(value, r, width).as("bucket"))): _*))

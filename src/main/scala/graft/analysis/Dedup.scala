@@ -1711,10 +1711,8 @@ object Dedup {
       .agg(count(lit(1)).as("n"), min(col("l")).as("l"))
 
   /** The per-chunk rows 〈id, h, l〉 behind [[cdcChunkCounts]] — the
-    * stateless per-document half of the CDC pipeline, shared verbatim by
-    * the batch build and [[graft.streaming.StreamingCdc]] (chunking is
-    * per-doc, so the streaming twin applies THIS projection per
-    * micro-batch and keeps only the 〈Σn, min l〉 state per hash). */
+    * stateless per-document half of the CDC pipeline (chunking is per-doc,
+    * so batches merge by summing n and keeping min l per hash). */
   def cdcChunkRows(
       docs: DataFrame,
       window: Int = 16,
@@ -1836,46 +1834,6 @@ object Dedup {
       .select(col(idCol), col("fp")).distinct()
   }
 
-  /** [[winnowingFingerprints]] as ONE per-row array expression — a
-    * document's fingerprints depend only on its own text, so the whole
-    * chain (tokens → k-gram hashes → full-window minima → distinct) folds
-    * into higher-order array functions. Its reason to exist is that it is
-    * STREAMING-LEGAL: the [[graft.streaming.StreamingWinnowing]] twin
-    * selects it directly off an append-mode document stream, which the
-    * batch path's window function cannot do, with ZERO streaming state.
-    * DedupSpec + StreamingSketchSpec pin bit-equality against the batch
-    * artifact.
-    *
-    * A/B-measured and NOT adopted for the batch path (the HITS protocol):
-    * higher-order array functions evaluate INTERPRETED, so on the sf0.1
-    * gate corpus this expression costs 8.7 s in q245 where the codegen'd
-    * explode→window pipeline costs 1.9 s (a naive per-position
-    * slice+array_min form costs 30.4 s; the shipped form folds `window`
-    * shifted slices with zip_with(least) — constant array passes per
-    * document). Keep the window form for batch rebuilds; use this on
-    * streams, where the per-micro-batch row volume is the trigger
-    * interval's, not the corpus's. Returns a sorted distinct
-    * ARRAY<BIGINT>; empty when the document has fewer than
-    * k + window − 1 tokens (no full window). */
-  def winnowingFpArray(text: Column, k: Int = 5, window: Int = 4): Column = {
-    require(k >= 1 && window >= 1, s"need k/window >= 1, got $k/$window")
-    val hs = transform(shingles(TextAnalysis.tokens(text), k),
-      g => Sketches.hash60(g))
-    val ng = size(hs)
-    // positions 0..ng-window: FULL windows only (the theorem's premise —
-    // a shrinking tail frame must never fabricate a fingerprint). The
-    // minima are `window` shifted views zipped with least — a CONSTANT
-    // number of array passes per document; the naive per-position
-    // slice+array_min is O(n_grams · window) interpreted allocations and
-    // measured 15× slower on the sf0.1 gate corpus
-    val nOut = ng - lit(window - 1)
-    val mins = (0 until window)
-      .map(i => slice(hs, lit(i + 1), nOut))
-      .reduce((a, b) => zip_with(a, b, (x, y) => least(x, y)))
-    when(ng >= window, array_sort(array_distinct(mins)))
-      .otherwise(array().cast("array<long>"))
-  }
-
   /** Near-duplicate report over [[winnowingFingerprints]]: document pairs
     * sharing ≥ `minShared` fingerprints, with the Szymkiewicz–Simpson
     * overlap coefficient in integer ppm. The guarantee inherited from
@@ -1933,12 +1891,11 @@ object Dedup {
       winnowingFingerprints(eval, k, window, textCol, idCol),
       maxDf, idCol)
 
-  /** [[winnowingDecontam]]'s readout from prebuilt (possibly merged or
-    * STREAMED — [[graft.streaming.StreamingWinnowing]]) fingerprint
-    * artifacts: the certificate never needs the raw text again, so a live
-    * monitor maintains the corpus artifact incrementally (per-doc
-    * independence = union merge, the q249 law) and re-runs only this
-    * broadcast probe. */
+  /** [[winnowingDecontam]]'s readout from prebuilt (possibly merged)
+    * fingerprint artifacts: the certificate never needs the raw text
+    * again, so a live monitor maintains the corpus artifact incrementally
+    * (per-doc independence = union merge, the q249 law) and re-runs only
+    * this broadcast probe. */
   def winnowingDecontamFromFingerprints(
       corpusFps: DataFrame,
       evalFps: DataFrame,

@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ML feature preparation: the operators that turn cleaned corpus/event
@@ -296,8 +296,6 @@ object Features {
       correctCol: String,
       ks: Seq[Int] = Seq(1, 5, 10)): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1), "ks must be >= 1")
-    val spark = attempts.sparkSession
-    import spark.implicits._
     val perTask = attempts
       .filter(col(taskCol).isNotNull)
       .groupBy(col(taskCol).as("task"))

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
   *    set against the corpus; per-row cost is one fused dot-product
   *    expression, no shuffle until the final per-query top-k. This is the
   *    correctness baseline and is actually optimal when |queries| is small.
-  *  - [[knnLsh]]: random-hyperplane sign-LSH (Charikar) — corpus is bucketed
-  *    by a bit signature, queries probe only their own bucket. Sub-linear
-  *    candidate sets at the cost of recall; the scale path for corpus×corpus.
+  *  - [[knnLshWith]]: sign-LSH (Charikar) — corpus is bucketed by a bit
+  *    signature, queries probe only their own bucket. Sub-linear candidate
+  *    sets at the cost of recall; the scale path for corpus×corpus.
   *  - [[knnIvf]]: k-means coarse quantizer + probed cells — data-adaptive
   *    buckets; better recall/cost than LSH on clustered corpora.
   *
@@ -65,36 +65,11 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cosine"), 4).as("cosine"))
   }
 
-  /** Deterministic pseudo-random hyperplanes: component j of plane p is a
-    * fixed function of (p, j) via a splitmix64-style mix — engine-portable,
-    * no RNG state, reproducible across runs and cluster sizes. */
-  private[analysis] def planeComponent(p: Int, j: Int): Double = {
-    var z = (p.toLong << 32 | j.toLong) + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
-    (z.toDouble / Long.MaxValue.toDouble) // in [-1, 1]
-  }
-
-  /** Sign-LSH bit signature of a vector against `nPlanes` hyperplanes,
-    * packed as an int (bit p = sign of ⟨v, plane_p⟩). Planes are materialized
-    * as literal arrays so the whole signature is one codegen'd expression. */
-  def lshSignature(vec: Column, dim: Int, nPlanes: Int = 12): Column = {
-    val bits = (0 until nPlanes).map { p =>
-      val plane = array((0 until dim).map(j => lit(planeComponent(p, j))): _*)
-      when(dot(vec, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Axis-aligned sign signature: bit j = sign of component j. The same
-    * bucketing contract as [[lshSignature]] (axis planes are a fixed rotation
-    * away from random ones), with one extra property: it is trivially
-    * replicable in plain SQL, so an LSH-bucketed query can be gated against a
-    * DuckDB oracle exactly — buckets, candidates, and ranks all match.
-    * Prefer [[lshSignature]] when the embedding axes are correlated (random
-    * planes decorrelate); prefer this when cross-engine reproducibility of
-    * the buckets themselves matters. */
+  /** Axis-aligned sign signature: bit j = sign of component j, packed into
+    * a long. Sign-LSH against the coordinate hyperplanes, so it is
+    * trivially replicable in plain SQL: an LSH-bucketed query can be gated
+    * against a DuckDB oracle exactly — buckets, candidates, and ranks all
+    * match. */
   def axisSignSignature(vec: Column, nBits: Int): Column =
     (0 until nBits)
       .map(j => when(element_at(vec, j + 1) >= 0, lit(1L << j)).otherwise(lit(0L)))
@@ -125,23 +100,12 @@ object Similarity {
     math.min(math.min(dim, 62), math.max(1, needed))
   }
 
-  /** ANN top-k: bucket corpus and queries by LSH signature, search only
-    * within the bucket. Recall < 1 by construction; raise nPlanes for purer
-    * buckets (less work, lower recall) or lower it for the opposite. The
-    * shuffle is on the bucket key — at 10⁹ vectors each bucket holds
-    * ~n/2^planes candidates, so per-query work drops accordingly. */
-  def knnLsh(
-      corpus: DataFrame,
-      queries: DataFrame,
-      dim: Int,
-      k: Int = 5,
-      nPlanes: Int = 8,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    knnLshWith(corpus, queries, lshSignature(_, dim, nPlanes), k, idCol, vecCol)
-
-  /** [[knnLsh]] with an injectable signature (e.g. [[axisSignSignature]]
-    * for engine-portable buckets). */
+  /** ANN top-k: bucket corpus and queries by `signatureOf` (e.g.
+    * [[axisSignSignature]] for engine-portable buckets), search only within
+    * the bucket. Recall < 1 by construction; more signature bits give purer
+    * buckets (less work, lower recall). The shuffle is on the bucket key —
+    * at 10⁹ vectors each bucket holds ~n/2^bits candidates, so per-query
+    * work drops accordingly. */
   def knnLshWith(
       corpus: DataFrame,
       queries: DataFrame,
@@ -173,8 +137,8 @@ object Similarity {
     *
     * Scale shape: k-means fits on a bounded sample with bounded iterations;
     * the nCells centroids ship as expression literals, so cell assignment is
-    * a map-side codegen'd argmin (no shuffle, same pattern as
-    * [[lshSignature]]'s planes); the probe join shuffles on cell id only.
+    * a map-side codegen'd argmin (no shuffle); the probe join shuffles on
+    * cell id only.
     * Reproducible for a fixed input layout (seeded); k-means|| sampling
     * still varies with partitioning, so treat cell membership as
     * approximate, not a stable artifact across engines.
@@ -928,7 +892,7 @@ object Similarity {
   }
 
   /** Exact embedding-cosine near-duplicate pairs by full self-comparison —
-    * the correctness baseline for [[embeddingNearDupPairs]]. O(n²/2) scored
+    * the correctness baseline for [[embeddingNearDupPairsWith]]. O(n²/2) scored
     * pairs through one fused cosine per pair; fine to ~10⁵ vectors, after
     * which the LSH/IVF bucketed variants are the only viable shape. */
   def embeddingNearDupPairsExact(
@@ -949,21 +913,12 @@ object Similarity {
       .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
         round(col("cosine"), 4).as("cosine"))
 
-  /** Embedding-cosine near-duplicate pairs: corpus×corpus through LSH
-    * buckets (no broadcast side — both sides shuffle on the bucket key).
-    * Exactly the MinHash-LSH shape with cosine instead of Jaccard. */
-  def embeddingNearDupPairs(
-      corpus: DataFrame,
-      dim: Int,
-      minCosine: Double = 0.95,
-      nPlanes: Int = 8,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    embeddingNearDupPairsWith(corpus, lshSignature(_, dim, nPlanes), minCosine, idCol, vecCol)
-
-  /** [[embeddingNearDupPairs]] with an injectable signature (e.g.
-    * [[axisSignSignature]] for engine-portable buckets — the configuration
-    * the driver gate runs, so the 100 TB bucketed path has a full oracle). */
+  /** Embedding-cosine near-duplicate pairs: corpus×corpus through
+    * signature buckets (no broadcast side — both sides shuffle on the
+    * bucket key). Exactly the MinHash-LSH shape with cosine instead of
+    * Jaccard. With [[axisSignSignature]] for engine-portable buckets — the
+    * configuration the oracle gate runs — the 100 TB bucketed path has a
+    * full oracle. */
   def embeddingNearDupPairsWith(
       corpus: DataFrame,
       signatureOf: Column => Column,
@@ -983,8 +938,8 @@ object Similarity {
     * that bounds the quadratic cosine search by clustering first — pairs are
     * scored ONLY inside a k-means cell, never across the whole corpus. This
     * is the third member of the near-dup family: [[embeddingNearDupPairsExact]]
-    * is the all-pairs oracle baseline, [[embeddingNearDupPairs]] buckets by a
-    * data-oblivious LSH signature, and this one buckets by a data-ADAPTIVE
+    * is the all-pairs oracle baseline, [[embeddingNearDupPairsWith]] buckets
+    * by a data-oblivious LSH signature, and this one buckets by a data-ADAPTIVE
     * quantizer (the same deterministic-Lloyd rebuild the IVF/PQ paths use, so
     * the cells are engine-reproducible and the whole operator oracle-gated).
     *
@@ -1321,7 +1276,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val books = pqCodebooks(corpus, m, codes, iterations, idCol, vecCol)
-    val sub = books(0)(0).length
     val qRow = query
       .select(transform(col(vecCol), x => x.cast(DoubleType)).as("qv"),
         col(idCol).cast("long").as("qid"))

@@ -122,8 +122,7 @@ object Sketches {
     * between engines), so registers, Σ, and the estimate replay exactly.
     * Register sums accumulate in DECIMAL(38,30) — 2^(−53) is far below
     * double-sum reordering noise. Output: groupCol, est_distinct (round 4).
-    * Composed from [[hllRegisters]] + [[hllEstimateFromRegisters]] so the
-    * streaming twin ([[graft.streaming.StreamingHll]]) shares both halves. */
+    * Composed from [[hllRegisters]] + [[hllEstimateFromRegisters]]. */
   def hllEstimate(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
     hllEstimateFromRegisters(hllRegisters(df, groupCol, valueCol), groupCol)
 
@@ -154,8 +153,7 @@ object Sketches {
       .groupBy(groupCol, "bucket")
       .agg(max("rho").as("reg"))
 
-  /** Estimator tail over a register file (from [[hllRegisters]] or the
-    * streaming twin): Σ 2^−reg in DECIMAL, empty registers added in DOUBLE,
+  /** Estimator tail over a register file (from [[hllRegisters]]): Σ 2^−reg in DECIMAL, empty registers added in DOUBLE,
     * linear counting below 2.5m. */
   private[graft] def hllEstimateFromRegisters(
       regs: DataFrame, groupCol: String): DataFrame = {

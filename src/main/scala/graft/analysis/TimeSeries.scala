@@ -93,8 +93,7 @@ object TimeSeries {
     * 0.5^(age/halfLife), so an item's score halves every `halfLifeDays`
     * without any state or windowing — just a projection and one grouped
     * sum. This is the standard recency-weighted ranking trick: computable
-    * in one pass at any scale, and incrementally maintainable (yesterday's
-    * scores × decay + today's events). Terms are DECIMAL-cast before the
+    * in one pass at any scale. Terms are DECIMAL-cast before the
     * sum so the total is shuffle-order-independent.
     * Output: itemCol, score (round 4), n_events. */
   def decayedPopularity(
@@ -108,74 +107,6 @@ object TimeSeries {
       .groupBy(itemCol)
       .agg(round(sum("__w").cast("double"), 4).as("score"),
         count(lit(1)).as("n_events"))
-  }
-
-  /** Reference-anchored decay weights — the formulation that makes decayed
-    * popularity a STREAMING aggregate: anchoring every event's weight at a
-    * FIXED reference epoch (w = 0.5^((ref − t)/halfLife)) turns the score
-    * into a plain grouped sum of per-event constants — commutative, and
-    * order-independent once each term is DECIMAL-cast — which is exactly
-    * what update-mode streaming state maintains with no custom operator
-    * ([[graft.streaming.StreamingDecay]]). Read-time recency is one
-    * rescale: score(asOf) = s_ref · 0.5^((asOf − ref)/halfLife)
-    * ([[popularityFromRef]]). Versus [[decayedPopularityIncrement]], which
-    * re-anchors by multiplying the whole artifact each batch, the anchored
-    * sum never mutates existing state — late events just add.
-    * Output: itemCol, s_ref (DECIMAL — the mergeable artifact), n_events. */
-  def decayedWeights(
-      df: DataFrame, itemCol: String, tsCol: String,
-      ref: Column, halfLifeDays: Double = 7.0): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
-    val ageDays = (unix_timestamp(ref) - unix_timestamp(col(tsCol)))
-      .cast("double") / lit(86400.0)
-    df
-      .withColumn("__w", pow(lit(0.5), ageDays / lit(halfLifeDays)).cast(dec))
-      .groupBy(itemCol)
-      .agg(sum("__w").as("s_ref"), count(lit(1)).as("n_events"))
-  }
-
-  /** Rescale a [[decayedWeights]] artifact (or a streaming snapshot of it)
-    * to an as-of time. Agrees with the direct [[decayedPopularity]] at its
-    * displayed 4 dp (exact in real arithmetic; the anchored product and
-    * the direct exponent differ only in floating ulps — the same tolerance
-    * the increment law pins). Output: itemCol, score (round 4), n_events. */
-  def popularityFromRef(
-      refFrame: DataFrame, itemCol: String,
-      ref: Column, asOf: Column, halfLifeDays: Double = 7.0): DataFrame = {
-    val deltaDays = (unix_timestamp(asOf) - unix_timestamp(ref))
-      .cast("double") / lit(86400.0)
-    refFrame.select(col(itemCol),
-      round(col("s_ref").cast("double") * pow(lit(0.5), deltaDays / lit(halfLifeDays)), 4)
-        .as("score"),
-      col("n_events"))
-  }
-
-  /** Incremental maintenance of [[decayedPopularity]]: yesterday's scores
-    * decay by 0.5^(Δt/halfLife) and the new batch's (already-decayed)
-    * contributions add on — a full outer join of two aggregate-sized
-    * frames, never a rescan of history. TimeSeriesSpec pins the law:
-    * increment(prev@t1, batch, t2) == direct(union, t2) (up to the same
-    * 4 dp the batch operator rounds to). This is what makes the operator a
-    * daily-maintainable artifact at 100 TB instead of a 100 TB rescan.
-    * Output: itemCol, score, n_events (cumulative). */
-  def decayedPopularityIncrement(
-      prev: DataFrame, prevAsOf: Column,
-      newEvents: DataFrame, itemCol: String, tsCol: String,
-      asOf: Column, halfLifeDays: Double = 7.0): DataFrame = {
-    val deltaDays = (unix_timestamp(asOf) - unix_timestamp(prevAsOf))
-      .cast("double") / lit(86400.0)
-    val decay = pow(lit(0.5), deltaDays / lit(halfLifeDays))
-    val fresh = decayedPopularity(newEvents, itemCol, tsCol, asOf, halfLifeDays)
-      .withColumnRenamed("score", "s_new")
-      .withColumnRenamed("n_events", "n_new")
-    prev.select(col(itemCol), (col("score") * decay).as("s_old"),
-        col("n_events").as("n_old"))
-      .join(fresh, Seq(itemCol), "full_outer")
-      .select(col(itemCol),
-        round(coalesce(col("s_old"), lit(0.0)) + coalesce(col("s_new"), lit(0.0)), 4)
-          .as("score"),
-        (coalesce(col("n_old"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_events"))
   }
 
   /** Per-group ordinary-least-squares trend: slope and intercept of value

@@ -86,9 +86,6 @@ object VectorOps {
     }
     java.lang.Double.valueOf(acc)
   }
-
-  def sqDist(a: Column, b: Column): Column =
-    ColumnBridge.column(SqDistExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
 /** Fused double-array squared-L2 distance — the kernel [[FuseVectorKernels]]

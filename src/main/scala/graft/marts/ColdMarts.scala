@@ -15,21 +15,20 @@ import graft.core.SizeGate
   *
   * Scale posture: every mart is a single hash-aggregate over the click-frame —
   * Catalyst plans partial (map-side) + final aggregation, so the shuffle
-  * carries only group keys + partial states, never raw rows. The only
-  * exact-distinct counts are per-group `countDistinct`, which Spark executes
-  * via expand + two-phase aggregate; at 100 TB switch `exact = false` to use
-  * HLL `approx_count_distinct` and avoid the expand blow-up.
+  * carries only group keys + partial states, never raw rows. Distinct
+  * counts are exact: per-group `countDistinct`, which Spark executes as a
+  * two-phase aggregate (through an Expand when one query counts two).
   */
 object ColdMarts {
 
   /** #1 mart_session_analysis (reference: etl_to_analytics_mart.py:91-111):
     * per (session, day): click count, distinct docs, first/last click,
     * duration in whole seconds. */
-  def sessionAnalysis(clicks: DataFrame, exact: Boolean = true): DataFrame =
+  def sessionAnalysis(clicks: DataFrame): DataFrame =
     clicks.groupBy("session_id", "event_date")
       .agg(
         count(lit(1)).as("click_count"),
-        distinctCount(col("document_id"), exact).as("unique_docs"),
+        countDistinct(col("document_id")).as("unique_docs"),
         min(col("event_ts")).as("first_click_ts"),
         max(col("event_ts")).as("last_click_ts"))
       .withColumn("session_duration_sec",
@@ -43,7 +42,7 @@ object ColdMarts {
     * nondeterministic on ties (SURVEY.md §7.4); we add `hour` ascending as the
     * tie-break. The peak-hour side collapses to ≤ (days × 24) rows, so
     * Catalyst auto-broadcasts the join — no shuffle on the join itself. */
-  def dailyTraffic(clicks: DataFrame, exact: Boolean = true): DataFrame = {
+  def dailyTraffic(clicks: DataFrame): DataFrame = {
     val hourly = clicks
       .groupBy(col("event_date"), hour(col("event_ts")).as("peak_hour"))
       .agg(count(lit(1)).as("hourly_count"))
@@ -52,7 +51,7 @@ object ColdMarts {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select("event_date", "peak_hour")
-    val distinct = distinctCounter(clicks, exact)
+    val distinct = distinctCounter(clicks)
     val daily = clicks.groupBy("event_date").agg(
       count(lit(1)).as("total_events"),
       distinct(col("session_id")).as("unique_sessions"),
@@ -72,7 +71,6 @@ object ColdMarts {
       sep: String,
       sessionCol: String,
       extraKeys: Seq[String] = Nil,
-      exact: Boolean = true,
       valueName: String = "clinical_area"): DataFrame = {
     val exploded = df
       .filter(col(multiCol).isNotNull && col(multiCol) =!= "")
@@ -86,33 +84,25 @@ object ColdMarts {
       .groupBy((extraKeys :+ valueName).map(col): _*)
       .agg(
         count(lit(1)).as("search_count"),
-        distinctCount(col(sessionCol), exact).as("unique_sessions"))
+        countDistinct(col(sessionCol)).as("unique_sessions"))
   }
 
   /** #3 with the reference's exact shape: per (event_date, clinical_area). */
-  def clinicalAreas(clicks: DataFrame, exact: Boolean = true): DataFrame =
+  def clinicalAreas(clicks: DataFrame): DataFrame =
     multiValueCounts(clicks, "clinical_areas", ",", "session_id",
-      extraKeys = Seq("event_date"), exact = exact)
+      extraKeys = Seq("event_date"))
 
   /** #4 mart_popular_documents (reference: etl_to_analytics_mart.py:185-197):
     * per (day, document [, title]) view counts, ordered by day then views. */
-  def popularDocuments(
-      clicks: DataFrame,
-      withTitle: Boolean = false,
-      exact: Boolean = true): DataFrame = {
+  def popularDocuments(clicks: DataFrame, withTitle: Boolean = false): DataFrame = {
     val keys = if (withTitle) Seq("event_date", "document_id", "title")
                else Seq("event_date", "document_id")
     clicks.groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("view_count"),
-        distinctCount(col("session_id"), exact).as("unique_sessions"))
+        countDistinct(col("session_id")).as("unique_sessions"))
       .orderBy(col("event_date"), desc("view_count"), col("document_id"))
   }
-
-  /** Exact parity ↔ sketch mode switch (SURVEY.md §7.4: exact distinct is the
-    * dominant shuffle cost at 100 TB). */
-  private[graft] def distinctCount(c: Column, exact: Boolean) =
-    if (exact) countDistinct(c) else approx_count_distinct(c)
 
   /** The distinct counter of a query that counts two distincts. Two exact
     * distincts plan as Expand + two aggregates. Expand's output
@@ -123,7 +113,7 @@ object ColdMarts {
     * counts set sizes instead: one aggregate, no Expand, the same classes
     * on every build, with sets bounded by the gate's budget. Larger input
     * keeps the distinct aggregates, which spill. */
-  private[graft] def distinctCounter(clicks: DataFrame, exact: Boolean): Column => Column =
-    if (exact && SizeGate.fits(clicks)) c => size(collect_set(c)).cast("long")
-    else distinctCount(_, exact)
+  private[graft] def distinctCounter(clicks: DataFrame): Column => Column =
+    if (SizeGate.fits(clicks)) c => size(collect_set(c)).cast("long")
+    else countDistinct(_)
 }

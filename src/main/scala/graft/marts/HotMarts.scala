@@ -19,8 +19,8 @@ object HotMarts {
     * sink wrapper, not here — keeping wall-clock out of the transform makes
     * micro-batch replay deterministic (SURVEY.md §7.4). Its two distincts
     * count through [[ColdMarts.distinctCounter]]. */
-  def trafficPerMinute(clicks: DataFrame, exact: Boolean = true): DataFrame = {
-    val distinct = ColdMarts.distinctCounter(clicks, exact)
+  def trafficPerMinute(clicks: DataFrame): DataFrame = {
+    val distinct = ColdMarts.distinctCounter(clicks)
     clicks
       .groupBy(date_trunc("minute", col("event_ts")).as("event_minute"))
       .agg(
@@ -38,11 +38,11 @@ object HotMarts {
     * (per-partition top-K heaps + driver merge, no global sort shuffle); the
     * window then runs over ≤ K rows. Ties break on document_id ascending for
     * determinism. */
-  def topDocs(clicks: DataFrame, k: Int = 20, exact: Boolean = true): DataFrame = {
+  def topDocs(clicks: DataFrame, k: Int = 20): DataFrame = {
     val counts = clicks.groupBy("document_id")
       .agg(
         count(lit(1)).as("click_count"),
-        ColdMarts.distinctCount(col("session_id"), exact).as("unique_sessions"))
+        countDistinct(col("session_id")).as("unique_sessions"))
       .orderBy(desc("click_count"), col("document_id"))
       .limit(k)
     counts.withColumn("rank",

@@ -317,9 +317,10 @@ object Relational {
     clicks
       .groupBy(window(col(tsCol), width, slide).as("w"))
       .agg(count(lit(1)).as("total_clicks"),
-        // exact distinct is not a streaming-capable aggregate; the streaming
-        // twin flips to the sketch, same switch as the hot marts
-        graft.marts.ColdMarts.distinctCount(col("session_id"), exact).as("unique_sessions"))
+        // exact distinct is not a streaming-capable aggregate; a stream
+        // counts through the HLL sketch instead
+        (if (exact) countDistinct(col("session_id"))
+         else approx_count_distinct(col("session_id"))).as("unique_sessions"))
       // no orderBy here: sorting is illegal on a streaming aggregate in
       // append mode — batch callers order at the edge
       .select(col("w.start").as("window_start"), col("w.end").as("window_end"),

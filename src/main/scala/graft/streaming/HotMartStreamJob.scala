@@ -53,13 +53,13 @@ object HotMartStreamJob {
 
   /** Compute all four hot marts from one cached micro-batch
     * (reference caches + sequentially fans out, RT:345-381). */
-  def computeBatch(batch: DataFrame, batchId: Long, exact: Boolean = true): HotMartBatch = {
-    val areaCounts = graft.marts.ColdMarts.clinicalAreas(batch, exact)
+  def computeBatch(batch: DataFrame, batchId: Long): HotMartBatch = {
+    val areaCounts = graft.marts.ColdMarts.clinicalAreas(batch)
     HotMartBatch(
       batchId = batchId,
-      trafficMinute = HotMarts.trafficPerMinute(batch, exact)
+      trafficMinute = HotMarts.trafficPerMinute(batch)
         .withColumn("updated_at", current_timestamp()),
-      topDocs = HotMarts.topDocs(batch, 20, exact)
+      topDocs = HotMarts.topDocs(batch, 20)
         .withColumn("batch_id", lit(batchId)),
       // NOTE: within one micro-batch the lag window usually sees a single
       // event_date per area, so trend_pct is null here — the real
@@ -73,23 +73,6 @@ object HotMartStreamJob {
       anomalies = HotMarts.anomalySessions(batch)
         .withColumn("batch_id", lit(batchId)))
   }
-
-  /** TRUE stateful anomaly detection — unlike the reference's per-batch
-    * tumbling windows (RT:284-290 recomputes within each micro-batch, so a
-    * burst split across two batches is invisible), this is a global
-    * watermarked streaming aggregation: window state accumulates across
-    * batches in the state store and each window emits once, when the
-    * watermark closes it. The engine improvement the reference's comment
-    * wished for. */
-  def statefulAnomalySessions(
-      curatedStream: DataFrame,
-      windowDuration: String = "5 minutes",
-      watermark: String = "10 minutes",
-      warnAt: Long = 50,
-      criticalAt: Long = 100): DataFrame =
-    HotMarts.anomalySessions(
-      curatedStream.withWatermark("event_ts", watermark),
-      windowDuration, warnAt, criticalAt)
 
   /** Start the stream; `sink` is called once per micro-batch with the four
     * mart frames (production: JDBC upsert/append; tests: collect). The file

@@ -1,23 +1,17 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
-/** Gap-based sessionization — the custom-state operator family the reference
-  * never needed (its SessionIds are upstream-assigned) but a complete engine
+/** Gap-based sessionization — the operator family the reference never
+  * needed (its SessionIds are upstream-assigned) but a complete engine
   * must offer.
   *
-  *  - [[sessionize]]: streaming, `flatMapGroupsWithState` with O(1) state
-  *    per key (the open session's bounds) and event-time timeout tied to the
-  *    watermark — bounded state on an unbounded stream. Agrees with the
-  *    batch variant on in-order data; cross-batch stragglers older than the
-  *    open session minus the gap are emitted as singleton sessions instead
-  *    of rewriting already-emitted history (append-mode constraint).
+  *  - [[sessionWindowAgg]]: Spark's native merging `session_window`; runs
+  *    batch or streaming (with a watermark, bounded state on an unbounded
+  *    stream).
   *  - [[sessionizeBatch]]: batch, pure window functions (lag → gap flag →
   *    running session index → aggregate) — one shuffle on the user key,
   *    fully declarative so Catalyst/AQE own the physical plan; exact for any
@@ -25,86 +19,9 @@ import org.apache.spark.sql.types.LongType
   */
 object Sessionize {
 
-  final case class Click(user_id: String, event_ts: Timestamp)
-  final case class OpenSession(start: Long, end: Long, n: Int)
-  final case class Session(
-      user_id: String, session_start: Timestamp, session_end: Timestamp, n_events: Int)
-
-  /** Streaming sessionization. Closed sessions are emitted as the stream
-    * progresses; in batch execution timeouts never fire, so only sessions
-    * closed by a later event in the same batch are emitted. */
-  def sessionize(
-      clicks: Dataset[Click],
-      gapSeconds: Long = 1800,
-      watermark: String = "30 minutes"): Dataset[Session] = {
-    import clicks.sparkSession.implicits._
-    clicks
-      .withWatermark("event_ts", watermark) // required for event-time timeouts
-      .as[Click]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (user, events, state) => flush(user, events, state, gapSeconds * 1000))
-  }
-
-  private def flush(
-      user: String,
-      events: Iterator[Click],
-      state: GroupState[OpenSession],
-      gapMs: Long): Iterator[Session] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      return Iterator(Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n))
-    }
-    val sorted = events.map(_.event_ts.getTime).toArray.sorted
-    var open = state.getOption
-    val closed = Array.newBuilder[Session]
-    sorted.foreach { t =>
-      open match {
-        // within gap of the open session on either side → merge, extending
-        // both bounds (a late-but-within-watermark event may precede start)
-        case Some(s) if t >= s.start - gapMs && t <= s.end + gapMs =>
-          open = Some(OpenSession(math.min(s.start, t), math.max(s.end, t), s.n + 1))
-        case Some(s) if t > s.end + gapMs =>
-          closed += Session(user, new Timestamp(s.start), new Timestamp(s.end), s.n)
-          open = Some(OpenSession(t, t, 1))
-        case Some(_) =>
-          // older than the open session by more than the gap: it belongs to
-          // an earlier, already-closed session window. Emit it as its own
-          // session rather than rewriting emitted history — a documented
-          // approximation of the batch variant, which sees all data and
-          // would have merged it there.
-          closed += Session(user, new Timestamp(t), new Timestamp(t), 1)
-        case None =>
-          open = Some(OpenSession(t, t, 1))
-      }
-    }
-    open.foreach { s =>
-      state.update(s)
-      // Clamp the timeout strictly above the current watermark. Spark's
-      // late-row filter drops most below-watermark stragglers before they
-      // reach this function, but an open session whose end+gap has been
-      // overtaken by the watermark between triggers (equality at the fire
-      // boundary, or late-filter vs eviction watermark divergence) would
-      // request a timeout at/below the watermark — setTimeoutTimestamp
-      // throws IllegalArgumentException and kills the whole streaming
-      // query. Clamped, the session times out on the next trigger instead.
-      // Batch execution has no watermark → timeouts unsupported there (the
-      // UnsupportedOperationException arm).
-      try {
-        val wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(math.max(wm + 1, s.end + gapMs))
-      } catch { case _: UnsupportedOperationException => () }
-    }
-    closed.result().iterator
-  }
-
-  /** Sessionization via Spark's NATIVE `session_window` operator — the
-    * third member of the family: [[sessionize]] (custom state, append-mode
-    * streaming), [[sessionizeBatch]] (window functions, exact batch), and
-    * this (built-in merging session windows; works in both batch and
-    * streaming with a watermark, complete/update/append per Spark's rules).
+  /** Sessionization via Spark's NATIVE `session_window` operator: built-in
+    * merging session windows; works in both batch and streaming with a
+    * watermark, complete/update/append per Spark's rules.
     *
     * Semantics (verified empirically, StreamJoinSpec): `session_window`
     * merges an event landing EXACTLY at the current window end (gap

@@ -24,6 +24,19 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  // two builds at once, as two engines on one host run them: each writes
+  // and reads back its own artifact layer, so both equal a lone build
+  for (name <- Seq("q290_pretrain_artifact_roundtrip", "q292_pretrain_layer_compaction")) {
+    test(s"$name: concurrent builds each read their own layer") {
+      def rows() = SparkEntry.queries(name)(spark, sf).collect().map(_.toString).sorted.toSeq
+      val lone = rows()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val runs = Seq.fill(2)(pool.submit(() => scala.util.Try(rows())))
+      val got = try runs.map(_.get()) finally pool.shutdown()
+      got.foreach(r => assert(r.get === lone))
+    }
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001 and returns a well-formed frame") {
       val df = fn(spark, sf)

@@ -3,27 +3,12 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-import graft.ingest.KafkaFrames
 import graft.relational.SkewJoin
 import graft.streaming.Sessionize
 
 class OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("kafka producer frame: session-keyed json value round-trips (K8)") {
-    val raw = Seq(
-      Fixtures.rawEventJson("s1", 1, "2026-01-01T15:00:00+00:00", "2026-01-01", dedupKey = "k1"))
-    val curated = graft.ingest.Normalizer.fromJsonLines(
-      spark.createDataset(raw).toDF("json"))
-    // curated → producer frame shape
-    val frame = KafkaFrames.toProducerFrame(curated)
-    assert(frame.columns.toSeq === Seq("key", "value"))
-    val row = frame.collect().head
-    assert(row.getAs[String]("key") === "s1")
-    assert(row.getAs[String]("value").contains("\"dedup_key\":\"k1\""))
-  }
 
   test("melt inverts pivot: every (id, type) cell becomes a row, zero-fills included") {
     import spark.implicits._
@@ -360,69 +345,6 @@ class OpsSpec extends SparkSpec {
     assert(out(0).getAs[Timestamp]("session_end") === t("2026-01-01 10:10:00"))
     assert(out(1).getAs[Long]("n_events") === 1)
     assert(out(2).getAs[String]("user_id") === "u2")
-  }
-
-  test("streaming sessionization: closed sessions emit, open state holds (flatMapGroupsWithState)") {
-    import spark.implicits._
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Sessionize.Click](spark)
-    val sessions = Sessionize.sessionize(input.toDS(), gapSeconds = 1800)
-    val q = sessions.writeStream
-      .format("memory").queryName("sessions_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      input.addData(
-        Sessionize.Click("u1", t("2026-01-01 10:00:00")),
-        Sessionize.Click("u1", t("2026-01-01 10:10:00")))
-      q.processAllAvailable()
-      // session still open → nothing emitted
-      assert(spark.table("sessions_out").count() === 0)
-      input.addData(Sessionize.Click("u1", t("2026-01-01 12:00:00"))) // gap closes it
-      q.processAllAvailable()
-      val out = spark.table("sessions_out").as[Sessionize.Session].collect()
-      assert(out.length === 1)
-      assert(out.head.n_events === 2)
-      assert(out.head.session_end === t("2026-01-01 10:10:00"))
-    } finally q.stop()
-  }
-
-  test("streaming sessionization survives a below-watermark straggler for a stateless key") {
-    // Contract under a below-watermark straggler: the query must NOT die.
-    // Spark's stateful-operator late-row filter drops the straggler before
-    // it reaches the state function (so it produces no session — it is LATE
-    // by the declared watermark, the documented discard semantics), and the
-    // clamp in Sessionize.flush guards the residual timeout-at/below-
-    // watermark edge so no configuration of straggler + watermark advance
-    // can throw. Live keys keep sessionizing throughout.
-    import spark.implicits._
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Sessionize.Click](spark)
-    val sessions = Sessionize.sessionize(input.toDS(), gapSeconds = 1800,
-      watermark = "30 minutes")
-    val q = sessions.writeStream
-      .format("memory").queryName("straggler_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // batch 1: advance the watermark to 11:30 (12:00 − 30 min delay)
-      input.addData(Sessionize.Click("u1", t("2026-01-01 12:00:00")))
-      q.processAllAvailable()
-      // batch 2: u2's only event is at 10:00 — 90 min below the watermark,
-      // so its natural timeout (10:30) would also sit below the watermark
-      input.addData(Sessionize.Click("u2", t("2026-01-01 10:00:00")))
-      q.processAllAvailable()
-      assert(q.isActive, "query must survive the below-watermark straggler")
-      // watermark advances; u1's 12:00 session times out and emits
-      input.addData(Sessionize.Click("u1", t("2026-01-01 14:00:00")))
-      q.processAllAvailable()
-      input.addData(Sessionize.Click("u1", t("2026-01-01 16:00:00")))
-      q.processAllAvailable()
-      assert(q.isActive)
-      val byUser = spark.table("straggler_out").as[Sessionize.Session]
-        .collect().groupBy(_.user_id)
-      // the straggler was dropped by the late filter: no u2 session, ever
-      assert(!byUser.contains("u2"), "below-watermark straggler is discarded, not sessionized")
-      // live keys were unaffected: u1's 12:00 singleton closed and emitted
-      val u1 = byUser("u1")
-      assert(u1.exists(s => s.session_start === t("2026-01-01 12:00:00") && s.n_events === 1))
-    } finally q.stop()
   }
 
   test("transition matrix: per-key lag pairs, session boundaries never bridge") {

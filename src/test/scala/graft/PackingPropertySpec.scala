@@ -126,28 +126,4 @@ class PackingPropertySpec extends SparkSpec {
     }
     assert(e.getMessage.contains("non-null"))
   }
-
-  test("tandem primitive pair sort matches the boxed reference sort, including near-sorted input") {
-    val rnd = new scala.util.Random(13)
-    Seq(0, 1, 2, 31, 32, 33, 100, 1000).foreach { n =>
-      val ids = Array.fill(n)(rnd.nextLong())
-      val ns = Array.fill(n)(rnd.nextLong())
-      val expected = (ids zip ns).sortBy(_._1).toSeq
-      graft.streaming.StreamingPacking.sortPairsById(ids, ns, n)
-      assert((ids zip ns).toSeq === expected, s"random n=$n")
-    }
-    // the ingest-order case (ascending ids, one straggler) — the shape a
-    // first-element-pivot quicksort degrades on
-    val ids2 = (0L until 500L).toArray :+ -1L
-    val ns2 = ids2.map(_ * 10)
-    val expected2 = (ids2 zip ns2).sortBy(_._1).toSeq
-    graft.streaming.StreamingPacking.sortPairsById(ids2, ns2, ids2.length)
-    assert((ids2 zip ns2).toSeq === expected2)
-    // duplicate ids keep their (id, n) pairing
-    val ids3 = Array(5L, 5L, 1L, 5L, 1L)
-    val ns3 = Array(50L, 51L, 10L, 52L, 11L)
-    graft.streaming.StreamingPacking.sortPairsById(ids3, ns3, 5)
-    assert(ids3.toSeq === Seq(1L, 1L, 5L, 5L, 5L))
-    assert(ns3.sorted.toSeq === Seq(10L, 11L, 50L, 51L, 52L))
-  }
 }

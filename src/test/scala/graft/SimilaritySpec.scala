@@ -33,16 +33,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out.head.getAs[Double]("cosine") > 0.99)
   }
 
-  test("lsh signature is deterministic and buckets identical vectors together") {
-    val sig = vecs.select(Similarity.lshSignature(col("embedding"), 3, 8).as("b"))
-      .collect().map(_.getLong(0))
-    val sig2 = vecs.select(Similarity.lshSignature(col("embedding"), 3, 8).as("b"))
-      .collect().map(_.getLong(0))
-    assert(sig.toSeq === sig2.toSeq)        // reproducible across plans
-    assert(sig(0) === sig(1))               // near-identical vectors co-bucket
-    assert(sig(0) !== sig(3))               // opposite vector lands elsewhere
-  }
-
   test("ivf knn with full probing equals brute force (exactness at nProbe=nCells)") {
     val out = Similarity.knnIvf(vecs, vecs.filter(col("vec_id") === 0),
         k = 3, nCells = 2, nProbe = 2)
@@ -98,13 +88,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out(2L) === (("border", 1L)) && out(3L) === (("border", 1L)))
     assert(out(5L) === (("noise", -1L)))
     assert(out(6L) === (("noise", -1L)) && out(7L) === (("noise", -1L)))
-  }
-
-  test("embedding near-dup pairs finds the close pair at high threshold") {
-    val pairs = Similarity.embeddingNearDupPairs(vecs, dim = 3, minCosine = 0.95, nPlanes = 4)
-      .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
-    assert(pairs.contains((0L, 1L)))
-    assert(!pairs.exists { case (a, b) => a == 3L || b == 3L })
   }
 
   test("axis-sign signature: bit j mirrors sign of component j") {

@@ -3,62 +3,19 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{Sessionize, StreamJoin}
+import graft.streaming.Sessionize
 
 object StreamJoinSpec {
-  case class Imp(user: String, imp_ts: Timestamp, ad: String)
-  case class Clk(user: String, clk_ts: Timestamp, target: String)
+  final case class Click(user_id: String, event_ts: Timestamp)
 }
 
 class StreamJoinSpec extends SparkSpec {
   import spark.implicits._
-  import StreamJoinSpec.{Clk, Imp}
+  import StreamJoinSpec.Click
 
   private def t(s: String) = Timestamp.valueOf(s)
-
-  test("interval join on batch frames equals the naive time-bounded join") {
-    val imps = Seq(
-      Imp("u1", t("2026-01-01 10:00:00"), "adA"),
-      Imp("u1", t("2026-01-01 11:00:00"), "adB"),
-      Imp("u2", t("2026-01-01 10:00:00"), "adC")).toDF()
-    val clks = Seq(
-      Clk("u1", t("2026-01-01 10:20:00"), "x"), // within 30m of adA only
-      Clk("u1", t("2026-01-01 11:00:00"), "y"), // exactly at adB (included)
-      Clk("u2", t("2026-01-01 10:31:00"), "z")  // 31m after adC: outside
-    ).toDF()
-    val got = StreamJoin.intervalJoin(imps, clks, "user", "imp_ts", "clk_ts", "30 minutes")
-      .select("l_ad", "r_target").as[(String, String)].collect().toSet
-    assert(got === Set(("adA", "x"), ("adB", "y")))
-  }
-
-  test("stream-stream interval join emits matches across micro-batches") {
-    val impIn = MemoryStream[Imp](spark)
-    val clkIn = MemoryStream[Clk](spark)
-    val joined = StreamJoin.intervalJoin(
-      impIn.toDF(), clkIn.toDF(), "user", "imp_ts", "clk_ts", "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("ssj_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // batch 1: impression arrives first, no click yet → no output
-      impIn.addData(Imp("u1", t("2026-01-01 10:00:00"), "adA"))
-      q.processAllAvailable()
-      assert(spark.table("ssj_out").count() === 0)
-      // batch 2: the matching click arrives LATER — the buffered impression
-      // state must still produce the pair
-      clkIn.addData(Clk("u1", t("2026-01-01 10:10:00"), "x"))
-      q.processAllAvailable()
-      val got = spark.table("ssj_out").select("l_ad", "r_target")
-        .as[(String, String)].collect().toSet
-      assert(got === Set(("adA", "x")))
-      // batch 3: a click outside the window joins nothing
-      clkIn.addData(Clk("u1", t("2026-01-01 11:30:00"), "late"))
-      q.processAllAvailable()
-      assert(spark.table("ssj_out").count() === 1)
-    } finally q.stop()
-  }
 
   test("session_window agg: gap-inclusive merge, end = last + gap; streaming twin agrees") {
     val batch = Seq(
@@ -78,20 +35,20 @@ class StreamJoinSpec extends SparkSpec {
 
     // streaming: same operator under a watermark; append emits sessions the
     // watermark has sealed
-    val in = MemoryStream[Sessionize.Click](spark)
+    val in = MemoryStream[Click](spark)
     val stream = Sessionize.sessionWindowAgg(
       in.toDF(), "30 minutes", tsCol = "event_ts", watermark = Some("10 minutes"))
     val q = stream.writeStream.format("memory").queryName("swin_out")
       .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(
-        Sessionize.Click("u1", t("2026-01-01 10:00:00")),
-        Sessionize.Click("u1", t("2026-01-01 10:05:00")))
+        Click("u1", t("2026-01-01 10:00:00")),
+        Click("u1", t("2026-01-01 10:05:00")))
       q.processAllAvailable()
       // advance the watermark far past the session's end to seal it
-      in.addData(Sessionize.Click("u1", t("2026-01-01 12:00:00")))
+      in.addData(Click("u1", t("2026-01-01 12:00:00")))
       q.processAllAvailable()
-      in.addData(Sessionize.Click("u1", t("2026-01-01 14:00:00")))
+      in.addData(Click("u1", t("2026-01-01 14:00:00")))
       q.processAllAvailable()
       val sealedSessions = spark.table("swin_out")
         .select("session_start", "n_events")

@@ -1,566 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import graft.analysis.Sketches
 
-import graft.analysis.{Dedup, Sketches, TimeSeries}
-import graft.streaming.{StreamingDecay, StreamingHll, StreamingSketch}
-import graft.streaming.StreamingSketch.{Estimate, KeyedValue}
-
+/** Batch sketch builds applied per micro-batch and merged across a stream
+  * equal the batch build of the union. */
 class StreamingSketchSpec extends SparkSpec {
   import spark.implicits._
-
-  test("transformWithState funnel equals batch stepTimes across micro-batches") {
-    import graft.streaming.StreamingFunnel
-    import graft.streaming.StreamingFunnel.{Evt, StepSnapshot}
-    val base = 1700000000000L
-    def ts(off: Long) = new java.sql.Timestamp(base + off * 1000)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Evt](spark)
-    val snaps = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-    val q = StreamingFunnel.stepTimes(input.toDS(), Seq("view", "click", "purchase"))
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[StepSnapshot], _: Long) =>
-        ds.collect().foreach(s => snaps(s.session_id) = s.times)
-      }
-      .outputMode("update").start()
-    try {
-      // s2's purchase arrives BEFORE its click — the strictly-after rule
-      // must hold it back even across the batch boundary
-      input.addData(Evt("s1", ts(0), 1L, "view"), Evt("s2", ts(0), 2L, "view"),
-        Evt("s2", ts(1), 3L, "purchase"))
-      q.processAllAvailable()
-      input.addData(Evt("s1", ts(1), 4L, "click"), Evt("s2", ts(2), 5L, "click"),
-        Evt("s1", ts(2), 6L, "purchase"), Evt("s4", ts(0), 7L, "click"))
-      q.processAllAvailable()
-      val streamed = snaps.toMap.view
-        .mapValues(_.map(t => if (t < 0) None else Some(t))).toMap
-      // batch twin over the union, same epoch-ms timeline
-      val union = Seq(
-        ("s1", "view", base), ("s2", "view", base), ("s2", "purchase", base + 1000),
-        ("s1", "click", base + 1000), ("s2", "click", base + 2000),
-        ("s1", "purchase", base + 2000), ("s4", "click", base)
-      ).toDF("sid", "etype", "tsms")
-      val batch = graft.analysis.Funnel
-        .stepTimes(union, Seq("view", "click", "purchase"), "sid", "etype", "tsms")
-        .collect()
-        .map(r => r.getString(0) ->
-          Seq(Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))
-            .map(_.map(_.asInstanceOf[Long])))
-        .toMap
-      assert(streamed === batch)
-      assert(!streamed.contains("s4"))  // never entered the funnel
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState funnel: crash between sink write and checkpoint " +
-      "commit; restart rolls RocksDB state back and replays the batch " +
-      "identically (exactly-once on a keyed sink)") {
-    // the StreamingSpec:219 idiom applied to the Spark-4 state API: the
-    // worst failure window is AFTER foreachBatch delivered batch N's output
-    // but BEFORE the checkpoint commit. Correctness then requires the state
-    // store to reload batch N-1's version on restart — a state commit that
-    // outlived the crash would make this processor (idempotent by its
-    // cur(i) < 0 guard) emit NOTHING on replay, silently dropping the
-    // batch from any fresh downstream consumer.
-    import graft.streaming.StreamingFunnel
-    import graft.streaming.StreamingFunnel.{Evt, StepSnapshot}
-    import org.apache.spark.sql.streaming.Trigger
-    val base = 1700000000000L
-    def iso(off: Long) = java.time.Instant.ofEpochMilli(base + off * 1000).toString
-    val inDir = tmpDir("funnel_crash_in")
-    val ckDir = tmpDir("funnel_crash_ck")
-    def evtJson(sid: String, off: Long, id: Long, tpe: String) =
-      s"""{"session_id":"$sid","event_ts":"${iso(off)}","event_id":$id,"event_type":"$tpe"}"""
-    // batch 0: s1 enters and clicks, s2 enters
-    Fixtures.writeJsonl(inDir, "part-000.json", Seq(
-      evtJson("s1", 0, 1L, "view"), evtJson("s1", 1, 2L, "click"),
-      evtJson("s2", 0, 3L, "view")))
-    // batch 1 (the crashed-and-replayed one): an UPDATE to existing state
-    // (s1 completes, s2 advances) AND a state CREATION (s3) — both paths
-    // must survive the rollback
-    Fixtures.writeJsonl(inDir, "part-001.json", Seq(
-      evtJson("s1", 2, 4L, "purchase"), evtJson("s2", 3, 5L, "click"),
-      evtJson("s3", 0, 6L, "view")))
-    val f0 = new java.io.File(inDir, "part-000.json")
-    val f1 = new java.io.File(inDir, "part-001.json")
-    assert(f0.setLastModified(f1.lastModified() - 60000))
-
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val snaps = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-    val batch1Attempts =
-      scala.collection.concurrent.TrieMap.empty[Int, Set[(String, Seq[Long])]]
-    @volatile var crashArmed = true
-    def run() = {
-      val src = spark.readStream
-        .schema(org.apache.spark.sql.Encoders.product[Evt].schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(inDir).as[Evt](org.apache.spark.sql.Encoders.product[Evt])
-      StreamingFunnel.stepTimes(src, Seq("view", "click", "purchase"))
-        .writeStream
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[StepSnapshot], id: Long) =>
-          val rows = ds.collect()
-          rows.foreach(s => snaps(s.session_id) = s.times) // keyed: replay-safe
-          if (id == 1L) {
-            batch1Attempts(batch1Attempts.size) =
-              rows.map(s => s.session_id -> s.times).toSet
-            if (crashArmed) { crashArmed = false; sys.error("injected crash") }
-          }
-        }
-        .option("checkpointLocation", ckDir)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    }
-    try {
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        run().awaitTermination()
-      }
-      assert(ex.getMessage.contains("injected crash"))
-      run().awaitTermination(120000)
-
-      // the replay REALLY happened, and both attempts delivered the SAME
-      // rows — the state store served batch 0's version the second time
-      assert(batch1Attempts.size === 2)
-      assert(batch1Attempts(0) === batch1Attempts(1))
-      assert(batch1Attempts(0).nonEmpty)
-      // end state equals the batch twin over the union of both files —
-      // nothing lost, nothing double-applied
-      val all = Seq(
-        ("s1", "view", base), ("s1", "click", base + 1000),
-        ("s2", "view", base), ("s1", "purchase", base + 2000),
-        ("s2", "click", base + 3000), ("s3", "view", base)
-      ).toDF("sid", "etype", "tsms")
-      val want = graft.analysis.Funnel
-        .stepTimes(all, Seq("view", "click", "purchase"), "sid", "etype", "tsms")
-        .collect()
-        .map(r => r.getString(0) -> Seq(1, 2, 3).map(i =>
-          if (r.isNullAt(i)) -1L else r.getLong(i)))
-        .toMap
-      assert(snaps.toMap === want)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("streaming markov transitions equal the batch chain once sessions time out") {
-    import graft.streaming.StreamingMarkov
-    import graft.streaming.StreamingMarkov.{Evt, Transition}
-    def ts(off: Long) = new java.sql.Timestamp(1700000000000L + off * 1000)
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Evt](spark)
-    val emitted = scala.collection.concurrent.TrieMap.empty[(Long, Int), Transition]
-    val q = StreamingMarkov.transitions(input.toDS(),
-        watermark = "2 seconds", gapSeconds = 10)
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Transition], id: Long) =>
-        ds.collect().zipWithIndex.foreach { case (t, i) => emitted((id, i)) = t }
-      }
-      .outputMode("append").start()
-    try {
-      // batch 1: s1 starts a->b, s2 starts (single event)
-      input.addData(Evt("s1", ts(0), 1L, "a"), Evt("s1", ts(1), 2L, "b"),
-        Evt("s2", ts(0), 3L, "a"))
-      q.processAllAvailable()
-      // batch 2: s1 continues across the batch boundary — state must carry
-      input.addData(Evt("s1", ts(3), 4L, "c"))
-      q.processAllAvailable()
-      // two watermark-advancing dummy events: the first moves the watermark
-      // past every session's gap, the second triggers the batch where the
-      // event-time timeouts actually fire the <END> transitions
-      input.addData(Evt("s3", ts(1000), 5L, "zz"))
-      q.processAllAvailable()
-      input.addData(Evt("s3", ts(1001), 6L, "zz"))
-      q.processAllAvailable()
-      val streamed = emitted.values
-        .filter(t => t.from_state != "zz" && t.to_state != "zz")
-        .groupBy(t => (t.from_state, t.to_state)).view.mapValues(_.size.toLong).toMap
-      val batch = graft.analysis.Funnel.markovTransitions(
-          Seq((1L, "s1", ts(0), "a"), (2L, "s1", ts(1), "b"),
-            (4L, "s1", ts(3), "c"), (3L, "s2", ts(0), "a"))
-            .toDF("event_id", "session_id", "event_ts", "event_type"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("scala-side hash60 equals the Column-side hash60") {
-    val values = Seq("a", "42", "hello world", "")
-    val colSide = spark.createDataset(values).toDF("v")
-      .select(Sketches.hash60(col("v")).as("h"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(colSide === values.map(StreamingSketch.hash60))
-  }
-
-  test("streaming sketch across micro-batches equals the batch sketch of the union") {
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[KeyedValue](spark)
-    // (batchId, group) -> estimate, collected via foreachBatch so "latest
-    // per group" is well-defined (memory-sink row order is not)
-    val seen = scala.collection.concurrent.TrieMap.empty[(Long, String), Double]
-    val q = StreamingSketch.distinctEstimates(input.toDS(), k = 16)
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[Estimate], id: Long) =>
-        ds.collect().foreach(e => seen((id, e.group)) = e.est_distinct)
-      }
-      .outputMode("update").start()
-    try {
-      // batch 1: 10 distinct under g1 (below k -> exact), 30 under g2 (over k)
-      input.addData((1 to 10).map(i => KeyedValue("g1", s"a$i")) ++
-        (1 to 30).map(i => KeyedValue("g2", s"b$i")): _*)
-      q.processAllAvailable()
-      // batch 2: overlap + new values; state must merge, not reset
-      input.addData((6 to 20).map(i => KeyedValue("g1", s"a$i")) ++
-        (21 to 50).map(i => KeyedValue("g2", s"b$i")): _*)
-      q.processAllAvailable()
-      val lastBatch = seen.keys.map(_._1).max
-      val streamed = seen.collect { case ((b, g), e) if b == lastBatch => g -> e }.toMap
-      val union = ((1 to 20).map(i => ("g1", s"a$i")) ++
-        (1 to 50).map(i => ("g2", s"b$i"))).toDF("g", "v")
-      val batch = Sketches.distinctEstimate(union, "g", "v", k = 16)
-        .collect().map(r => r.getString(0) -> r.getAs[Double]("est_distinct")).toMap
-      assert(streamed === batch) // bit-identical, not just close
-      // batch-1 emission for g1 was exact (10 distinct < k)
-      assert(seen((0L, "g1")) === 10.0)
-    } finally q.stop()
-  }
-
-  test("streaming cdc chunk counts across micro-batches equal the batch artifact of the union") {
-    import graft.streaming.StreamingCdc
-    import graft.streaming.StreamingCdc.ChunkCount
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    // latest (n, l) per chunk hash: update-mode emissions overwrite in
-    // batch order, so after the last batch this IS the streaming state
-    val state = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
-    val q = StreamingCdc.chunkCounts(
-        input.toDS().toDF("doc_id", "text"), window = 4, maskBits = 2)
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[ChunkCount], _: Long) =>
-        ds.collect().foreach(c => state(c.h) = (c.n, c.l))
-      }
-      .outputMode("update").start()
-    val b1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again"), // exact dup: every chunk repeats
-      (3L, "entirely different content with other words to chunk apart"))
-    val b2 = Seq(
-      (4L, "the quick brown fox jumps over the lazy dog again and again"), // dup arriving LATER: state must merge
-      (5L, "fresh batch text that shares nothing with the first one here"))
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val union = (b1 ++ b2).toDF("doc_id", "text")
-    val batch = graft.analysis.Dedup.cdcChunkCounts(union, window = 4, maskBits = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(state.toMap === batch) // bit-identical artifact, not just close
-    // and the report over the streamed state reproduces the batch report
-    val streamedCounts = state.toSeq.map { case (h, (n, l)) => (h, n, l) }
-      .toDF("h", "n", "l")
-    val nDocs = union
-      .filter(length(graft.analysis.TextAnalysis.normalized(col("text"))) > 0)
-      .agg(count(lit(1)).as("n_docs"))
-    val streamedReport = graft.analysis.Dedup
-      .cdcReportFromCounts(streamedCounts, nDocs).collect().map(_.toSeq)
-    val batchReport = graft.analysis.Dedup
-      .cdcChunkDedup(union, window = 4, maskBits = 2).collect().map(_.toSeq)
-    assert(streamedReport === batchReport)
-  }
-
-  test("streaming cuped unit sums across micro-batches equal the batch artifact; readout reconciles") {
-    import graft.streaming.StreamingCuped
-    import graft.streaming.StreamingCuped.UnitSums
-    import graft.analysis.Stats
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Double, String)](spark)
-    val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
-    // latest (x, y) per unit: update-mode emissions overwrite in batch order
-    val state = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-    val q = StreamingCuped.unitSums(
-        input.toDS().toDF("user_id", "value", "ts_s")
-          .withColumn("ts", to_timestamp(col("ts_s"))),
-        cutoff)
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[UnitSums], _: Long) =>
-        ds.collect().foreach(u => state(u.unit) = (u.x, u.y))
-      }
-      .outputMode("update").start()
-    val b1 = Seq(
-      (1L, 2.5, "2024-01-10 00:00:00"), (1L, 4.0, "2024-01-20 00:00:00"),
-      (2L, 1.0, "2024-01-12 00:00:00"))
-    val b2 = Seq(
-      (1L, 3.0, "2024-01-11 00:00:00"), // same unit, LATER batch: state must add
-      (2L, 6.0, "2024-01-25 00:00:00"),
-      (3L, 9.0, "2024-01-26 00:00:00"))
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val union = (b1 ++ b2).toDF("user_id", "value", "ts_s")
-      .withColumn("ts", to_timestamp(col("ts_s")))
-    // the streaming state key is the stringified unit (one state-key type);
-    // the batch frame keeps the source type — compare on the string form
-    val batch = Stats.cupedUnits(union, "user_id", "value", "ts", cutoff)
-      .collect().map(r => r.get(r.fieldIndex("unit")).toString ->
-        ((r.getAs[Long]("x"), r.getAs[Long]("y")))).toMap
-    assert(state.toMap === batch) // bit-identical artifact
-    // the readout over streamed state reproduces the batch readout
-    val streamed = state.toSeq.map { case (u, (x, y)) => (u, x, y) }
-      .toDF("unit", "x", "y")
-      .select(col("unit"), Stats.armOf(col("unit")).as("arm"), col("x"), col("y"))
-    assert(Stats.cupedFromUnits(streamed).collect().toSeq ===
-      Stats.cuped(union, "user_id", "value", "ts", cutoff).collect().toSeq)
-  }
-
-  test("streaming calibration bins across micro-batches equal the batch artifact; ECE readout reconciles") {
-    import graft.streaming.StreamingCalibration
-    import graft.streaming.StreamingCalibration.BinSums
-    import graft.analysis.Stats
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long)](spark)
-    val state = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long, Long)]
-    val q = StreamingCalibration.binSums(input.toDS().toDF("score_ppm", "y"))
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[BinSums], _: Long) =>
-        ds.collect().foreach(b => state(b.bin) = (b.n, b.nPos, b.ssum))
-      }
-      .outputMode("update").start()
-    val b1 = Seq((50000L, 0L), (50000L, 1L), (950000L, 1L), (1000000L, 1L))
-    val b2 = Seq((450000L, 1L), (50000L, 0L), (950000L, 0L)) // bins 0/9 must ADD
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val union = (b1 ++ b2).toDF("score_ppm", "y")
-    val batch = Stats.calibrationBins(union, "score_ppm", "y")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(state.toMap === batch) // bit-identical artifact
-    // the readout over streamed state reproduces the whole-corpus report
-    val streamed = state.toSeq.map { case (b, (n, np, ss)) => (b, n, np, ss) }
-      .toDF("bin", "n", "n_pos", "ssum")
-    assert(Stats.calibrationFromBins(streamed).collect().map(_.toSeq).toSeq ===
-      Stats.calibrationReport(union, "score_ppm", "y").collect().map(_.toSeq).toSeq)
-  }
-
-  test("streaming winnowing fingerprints across micro-batches equal the batch artifact; decontam readout reconciles") {
-    import graft.streaming.StreamingWinnowing
-    import graft.analysis.Dedup
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = StreamingWinnowing.fingerprintStream(
-        input.toDS().toDF("doc_id", "text"), k = 2, window = 2)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        rows.synchronized {
-          rows ++= df.collect().map(r => (r.getLong(0), r.getLong(1))); ()
-        }
-      }
-      .outputMode("append").start()
-    val b1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "entirely different words compose this second document here"))
-    val b2 = Seq(
-      (3L, "the quick brown fox jumps somewhere else entirely today"),
-      (4L, "too short")) // < k+window-1 tokens -> zero fingerprints
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val union = (b1 ++ b2).toDF("doc_id", "text")
-    val batch = Dedup.winnowingFingerprints(union, k = 2, window = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(rows.toSet === batch) // bit-identical artifact
-    assert(rows.size === rows.toSet.size,
-      "append-mode stream must emit each (doc, fp) exactly once")
-    // the decontamination certificate over the STREAMED artifact equals
-    // the batch rebuild: eval = doc 3 (shares 'the quick brown fox jumps'
-    // with doc 1), corpus = docs 1/2/4
-    val corpusIds = Set(1L, 2L, 4L)
-    val streamedCorpus = rows.toSeq.filter(r => corpusIds(r._1))
-      .toDF("doc_id", "fp")
-    val evalFps = rows.toSeq.filter(_._1 == 3L).toDF("doc_id", "fp")
-    val live = Dedup.winnowingDecontamFromFingerprints(streamedCorpus, evalFps)
-      .collect().map(_.toSeq).toSeq
-    val rebuilt = Dedup.winnowingDecontam(
-        union.filter(col("doc_id") =!= 3L), union.filter(col("doc_id") === 3L),
-        k = 2, window = 2)
-      .collect().map(_.toSeq).toSeq
-    assert(live === rebuilt)
-    assert(live.nonEmpty, "doc 1 shares a 5-token run with eval doc 3 " +
-      "(>= k+window-1 = 3) so the certificate must flag it")
-  }
-
-  test("streaming hll registers across micro-batches equal the batch registers of the union") {
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[KeyedValue](spark)
-    // latest register per (group, bucket) via update-mode foreachBatch
-    val regs = scala.collection.concurrent.TrieMap.empty[(String, Int), Int]
-    val q = StreamingHll.buildStream(input.toDS().toDF(), "group", "value")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r => regs((r.getString(0), r.getInt(1))) = r.getInt(2))
-      }
-      .outputMode("update").start()
-    try {
-      input.addData((1 to 40).map(i => KeyedValue("g1", s"a$i")) ++
-        (1 to 15).map(i => KeyedValue("g2", s"b$i")): _*)
-      q.processAllAvailable()
-      // overlap + new values: registers must take max with prior state
-      input.addData((21 to 80).map(i => KeyedValue("g1", s"a$i")) ++
-        (10 to 25).map(i => KeyedValue("g2", s"b$i")): _*)
-      q.processAllAvailable()
-      val union = ((1 to 80).map(i => ("g1", s"a$i")) ++
-        (1 to 25).map(i => ("g2", s"b$i"))).toDF("group", "value")
-      val batchRegs = Sketches.hllRegisters(union, "group", "value")
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-      assert(regs.toMap === batchRegs) // register-for-register, not just close
-      // and the estimate through the streamed registers is the batch estimate
-      val snapshot = regs.toSeq.map { case ((g, b), v) => (g, b, v) }
-        .toDF("group", "bucket", "reg")
-      val streamedEst = Sketches.hllEstimateFromRegisters(snapshot, "group")
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val batchEst = Sketches.hllEstimate(union, "group", "value")
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(streamedEst === batchEst)
-    } finally q.stop()
-  }
-
-  test("streaming word table trains the SAME unigram tokenizer as the batch rebuild") {
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val state = scala.collection.concurrent.TrieMap.empty[String, Long]
-    val q = graft.streaming.StreamingWordTable
-      .buildStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r => state(r.getString(0)) = r.getLong(1))
-      }
-      .outputMode("update").start()
-    val batches = Seq(
-      Seq((1L, "the cat sat on the mat"), (2L, "the cats sat")),
-      Seq((3L, "a cat and a dog"), (4L, "")),
-      Seq((5L, "dogs and cats and mats")))
-    try {
-      batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val union = batches.flatten.toDF("doc_id", "text")
-      // snapshot == batch artifact of everything ingested
-      val batchArt = graft.analysis.UnigramLM.wordTableArtifact(union)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(state.toMap === batchArt)
-      // and training from the snapshot == the whole-corpus rebuild
-      val p = graft.analysis.UnigramLM.Params(
-        maxWordLen = 10, maxPieceLen = 4, seedMulti = 8, budgetMulti = 4,
-        emRounds = 2)
-      val snap = state.toSeq.map { case (w, f) => (w, f, w.length) }
-        .toDF("w", "freq", "len")
-      val streamed = graft.analysis.UnigramLM
-        .unigramTrainFromWords(snap, p).collect().map(_.toSeq)
-      val rebuilt = graft.analysis.UnigramLM
-        .unigramTrain(union, p).collect().map(_.toSeq)
-      assert(streamed.toSeq === rebuilt.toSeq)
-    } finally q.stop()
-  }
-
-  test("streaming span index across micro-batches equals the batch index of the union") {
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val idx = scala.collection.concurrent.TrieMap.empty[(Long, Long), (Long, Int)]
-    val q = graft.streaming.StreamingSpanIndex
-      .buildStream(input.toDS().toDF("doc_id", "text"), spanTokens = 3)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r =>
-          idx((r.getLong(0), r.getLong(1))) = (r.getLong(2), r.getInt(3)))
-      }
-      .outputMode("update").start()
-    try {
-      val boiler = "subscribe to our newsletter"
-      input.addData((10L, s"alpha beta $boiler"), (30L, "unrelated words only here"))
-      q.processAllAvailable()
-      input.addData((20L, s"$boiler gamma delta"),
-        (10L, "")) // doc 10 re-emitted empty adds no windows; prior state persists
-      q.processAllAvailable()
-      val union = Seq((10L, s"alpha beta $boiler"), (30L, "unrelated words only here"),
-        (20L, s"$boiler gamma delta"), (10L, "")).toDF("doc_id", "text")
-      val batch = Dedup.spanIndex(union, spanTokens = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getInt(3)))).toMap
-      assert(idx.toMap === batch)
-      // and the report over the streamed snapshot = the batch report
-      val snap = idx.toSeq.map { case ((fp, d), (n, st)) => (fp, d, n, st) }
-        .toDF("span_fp", "doc_id", "n_occ", "min_start")
-      val streamedReport = Dedup.duplicatedSpansFromIndex(snap, minDocs = 2)
-        .orderBy("span_fp").collect().map(_.toSeq)
-      val batchReport = Dedup.duplicatedSpans(union, spanTokens = 3, minDocs = 2)
-        .orderBy("span_fp").collect().map(_.toSeq)
-      assert(streamedReport.toSeq === batchReport.toSeq)
-      assert(streamedReport.nonEmpty) // the shared boilerplate spans are found
-    } finally q.stop()
-  }
-
-  test("streaming decayed popularity: anchored DECIMAL state equals the batch build; rescale matches direct") {
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val events = input.toDS().toDF("document_id", "ts_s")
-      .withColumn("event_ts", to_timestamp(col("ts_s")))
-    val ref = to_timestamp(lit("2024-02-01 00:00:00"))
-    val state = scala.collection.concurrent.TrieMap
-      .empty[Long, (java.math.BigDecimal, Long)]
-    val q = StreamingDecay.buildStream(events, "document_id", "event_ts", ref)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        df.collect().foreach(r => state(r.getLong(0)) = ((r.getDecimal(1), r.getLong(2))))
-      }
-      .outputMode("update").start()
-    try {
-      input.addData((1L, "2024-01-01 00:00:00"), (1L, "2024-01-15 00:00:00"),
-        (2L, "2024-01-20 12:00:00"))
-      q.processAllAvailable()
-      // batch 2: item 1 accumulates (state adds, never resets); item 3 is new
-      input.addData((1L, "2024-01-28 00:00:00"), (3L, "2024-01-02 06:30:00"))
-      q.processAllAvailable()
-      val union = Seq((1L, "2024-01-01 00:00:00"), (1L, "2024-01-15 00:00:00"),
-        (2L, "2024-01-20 12:00:00"), (1L, "2024-01-28 00:00:00"),
-        (3L, "2024-01-02 06:30:00")).toDF("document_id", "ts_s")
-        .withColumn("event_ts", to_timestamp(col("ts_s")))
-      val batch = TimeSeries.decayedWeights(union, "document_id", "event_ts", ref)
-        .collect().map(r => r.getLong(0) -> ((r.getDecimal(1), r.getLong(2)))).toMap
-      assert(state.toMap === batch) // bit-identical DECIMAL state, not just close
-      assert(state(1L)._2 === 3L)
-      // read-time rescale over the streamed snapshot matches the direct
-      // operator at its displayed precision (the increment-law tolerance)
-      val asOf = to_timestamp(lit("2024-02-15 00:00:00"))
-      val snap = state.toSeq.map { case (id, (s, n)) => (id, s, n) }
-        .toDF("document_id", "s_ref", "n_events")
-      val rescaled = TimeSeries.popularityFromRef(snap, "document_id", ref, asOf)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val direct = TimeSeries.decayedPopularity(union, "document_id", "event_ts", asOf)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(rescaled.keySet === direct.keySet)
-      rescaled.foreach { case (id, s) => assert(math.abs(s - direct(id)) <= 1e-4) }
-    } finally q.stop()
-  }
 
   test("bloom bits accumulated across micro-batches equal the batch bits of the union") {
     val input = org.apache.spark.sql.execution.streaming.runtime
@@ -617,111 +62,6 @@ class StreamingSketchSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getInt(2), r.getInt(3)) -> r.getLong(4)).toMap
       assert(acc.toMap === batch) // additive merge is exact, not approximate
     } finally q.stop()
-  }
-
-  test("streaming packing spans across micro-batches equal the batch offsets; report reconciles") {
-    import graft.streaming.StreamingPacking
-    import graft.streaming.StreamingPacking.DocSpan
-    import graft.analysis.CorpusPrep
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val q = StreamingPacking.spanStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream
-      .foreachBatch { (ds: org.apache.spark.sql.Dataset[DocSpan], _: Long) =>
-        spans.synchronized {
-          spans ++= ds.collect().map(s => (s.doc_id, s.n_tok, s.start)); ()
-        }
-      }
-      .outputMode("append").start()
-    val b1 = Seq((1L, "a b c"), (2L, "d e"))
-    val b2 = Seq((3L, "f g h i j"), (4L, "")) // empty doc emits no span
-    try {
-      input.addData(b1: _*)
-      q.processAllAvailable()
-      input.addData(b2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // one long of state carried the offset across batches: doc 3 starts
-    // at 5, exactly where the batch cumsum over the union puts it
-    assert(spans.toSet === Set((1L, 3L, 0L), (2L, 2L, 3L), (3L, 5L, 5L)))
-    // the report off the streamed spans equals the batch rebuild
-    val streamed = CorpusPrep.packReportFromSlots(
-        CorpusPrep.packSlotsFromSpans(
-          spans.toSeq.toDF("doc_id", "n_tok", "start"), ctxTokens = 4))
-      .collect().map(_.toSeq)
-    val rebuilt = CorpusPrep.sequencePack(
-        (b1 ++ b2).toDF("doc_id", "text"), ctxTokens = 4)
-      .collect().map(_.toSeq)
-    assert(streamed.toSeq === rebuilt.toSeq)
-  }
-
-  test("streaming packing: crash after sink write, before checkpoint commit — " +
-      "restart rolls the offset back and replays the batch at the SAME positions") {
-    // the q257 seam property under failure: the running token offset is the
-    // ONLY cross-batch state, so the worst crash window (output delivered,
-    // checkpoint uncommitted) must roll it back — a state commit that
-    // outlived the crash would re-pack the replayed batch at a DOUBLED
-    // offset, silently shifting every later window id.
-    import graft.streaming.StreamingPacking
-    import graft.streaming.StreamingPacking.DocSpan
-    import org.apache.spark.sql.streaming.Trigger
-    val inDir = tmpDir("pack_crash_in")
-    val ckDir = tmpDir("pack_crash_ck")
-    def docJson(id: Long, text: String) = s"""{"doc_id":$id,"text":"$text"}"""
-    Fixtures.writeJsonl(inDir, "part-000.json", Seq(
-      docJson(1L, "a b c"), docJson(2L, "d e")))
-    Fixtures.writeJsonl(inDir, "part-001.json", Seq(docJson(3L, "f g h i j")))
-    val f0 = new java.io.File(inDir, "part-000.json")
-    val f1 = new java.io.File(inDir, "part-001.json")
-    assert(f0.setLastModified(f1.lastModified() - 60000))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spans = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
-    val batch1Attempts =
-      scala.collection.concurrent.TrieMap.empty[Int, Set[(Long, Long, Long)]]
-    @volatile var crashArmed = true
-    def run() = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(inDir)
-      StreamingPacking.spanStream(src)
-        .writeStream
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[DocSpan], id: Long) =>
-          val rows = ds.collect()
-          rows.foreach(s => spans(s.doc_id) = (s.n_tok, s.start)) // keyed sink
-          if (id == 1L) {
-            batch1Attempts(batch1Attempts.size) =
-              rows.map(s => (s.doc_id, s.n_tok, s.start)).toSet
-            if (crashArmed) { crashArmed = false; sys.error("injected crash") }
-          }
-        }
-        .option("checkpointLocation", ckDir)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    try {
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        run().awaitTermination()
-      }
-      assert(ex.getMessage.contains("injected crash"))
-      run().awaitTermination(120000)
-      // both attempts assigned doc 3 the SAME start (5) — the offset state
-      // rolled back with the checkpoint instead of double-advancing to 10
-      assert(batch1Attempts.size === 2)
-      assert(batch1Attempts(0) === batch1Attempts(1))
-      assert(batch1Attempts(0) === Set((3L, 5L, 5L)))
-      assert(spans.toMap === Map(1L -> ((3L, 0L)), 2L -> ((2L, 3L)), 3L -> ((5L, 5L))))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("kn bigram model accumulated across micro-batches equals the batch model of the union") {

@@ -165,8 +165,11 @@ class StreamingSpec extends SparkSpec {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, java.sql.Timestamp)](spark)
     val stream = input.toDF().toDF("session_id", "event_ts")
-    val out = HotMartStreamJob.statefulAnomalySessions(
-      stream, windowDuration = "5 minutes", watermark = "1 minute", warnAt = 2, criticalAt = 3)
+    // the hot mart's transform over a watermarked stream: window state
+    // accumulates across batches and each window emits once, when the
+    // watermark closes it
+    val out = graft.marts.HotMarts.anomalySessions(
+      stream.withWatermark("event_ts", "1 minute"), "5 minutes", warnAt = 2, criticalAt = 3)
     val q = out.writeStream.format("memory").queryName("anomalies_out")
       .outputMode("append").start()
     try {

@@ -62,28 +62,6 @@ class TimeSeriesSpec extends SparkSpec {
     assert(out(2L) === ((0.25, 1L)))
   }
 
-  test("incremental decayed popularity equals the direct computation") {
-    def ev(rows: Seq[(Long, String)]) = rows.toDF("item", "ts")
-      .select(col("item"), to_timestamp(col("ts")).as("ts"))
-    val day1 = ev(Seq((1L, "2024-01-01 06:00:00"), (1L, "2024-01-01 18:00:00"),
-      (2L, "2024-01-01 12:00:00")))
-    val day2 = ev(Seq((1L, "2024-01-02 09:00:00"), (3L, "2024-01-02 15:00:00")))
-    val t1 = to_timestamp(lit("2024-01-02 00:00:00"))
-    val t2 = to_timestamp(lit("2024-01-03 00:00:00"))
-    val snapshot = TimeSeries.decayedPopularity(day1, "item", "ts", t1, 7.0)
-    val incremental = TimeSeries.decayedPopularityIncrement(
-        snapshot, t1, day2, "item", "ts", t2, 7.0)
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    val direct = TimeSeries.decayedPopularity(day1.union(day2), "item", "ts", t2, 7.0)
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    assert(incremental.keySet === direct.keySet)
-    incremental.foreach { case (k, (s, n)) =>
-      assert(n === direct(k)._2)
-      // snapshot scores were rounded to 4dp before decaying, so allow 1e-4
-      assert(math.abs(s - direct(k)._1) < 2e-4, s"item $k: $s vs ${direct(k)._1}")
-    }
-  }
-
   test("trend slopes: exact line recovered, degenerate x gives null") {
     val line = (0 to 9).map(x => ("up", x, 2 * x + 1)).toDF("g", "x", "y")
     val flat = (0 to 9).map(_ => ("flat", 3, 7)).toDF("g", "x", "y")
