@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Ad-hoc per-query probe: `runMain graft.Audit <mode> <name>...` runs every
   * registry query whose name contains one of the given substrings at
   * SPARK_GRAFT_SF_DIR — the local feedback loop for plan work without a full
-  * Bench pass. Session sizing reads the SAME env vars as [[Bench]]
-  * (SPARK_GRAFT_CPUS, default 32 as in the sf0.1 bench runs) so Audit
-  * numbers diagnose Bench numbers. Modes:
+  * Bench pass. Session sizing reads the SAME env vars, with the same
+  * defaults, as [[Bench]] (SPARK_GRAFT_CPUS, default 4) so Audit numbers
+  * diagnose Bench numbers. Modes:
   *  - `time`: build, then `count()`; min of 3 runs.
   *  - `forced`: build, then `queryExecution.toRdd.count()`; min of 3 runs. A
   *    plain count lets the optimizer rewrite the plan under a count
@@ -29,7 +29,7 @@ object Audit {
       s"usage: graft.Audit ${modes.mkString("|")} <name-substring>...")
     val (mode, names) = (args(0), args.drop(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.GraftSession.tune(
         SparkSession.builder().master(s"local[$cpus]"), cpus.toInt)
       .getOrCreate()

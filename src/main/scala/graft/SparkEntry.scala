@@ -44,7 +44,7 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.map(g => g.name -> g.oracleSql).toMap
 
-  /** Parent of the artifact layers q290/q292 round-trip through parquet:
+  /** Parent of the layers q160/q290/q292 round-trip through parquet:
     * one directory per JVM, made on first use and deleted at exit, so two
     * engines on one host never share a layer. */
   private lazy val layerScratch: java.nio.file.Path = {
@@ -1523,7 +1523,7 @@ object SparkEntry {
     // anti-join over the original parquet, so green proves the destructive
     // rewrite dropped exactly the keyed rows and nothing else
     Gated("q160_takedown", { (s, d) =>
-      graft.sinks.Takedown.takedownGate(s, TestData.documents(s, d))
+      graft.sinks.Takedown.takedownGate(s, TestData.documents(s, d), freshLayerRoot("q160_"))
     },
       // the anti-join law: survivors on disk == original MINUS the keyed
       // rows; the deleted count rides along as a scalar subquery

@@ -22,8 +22,10 @@ import org.apache.spark.sql.internal.SQLConf
   * columnar compression cannot admit more rows than one task holds decoded.
   *
   * Worst-case in-task footprint at the 64 MB default, per consumer:
-  *  - hot stream batch (`HotMartStreamJob.start`): the batch as one
-  *    partition, ≤ 64 MB of rows under the four marts' aggregates.
+  *  - the mart slice ([[withSlice]]): a hot micro-batch
+  *    (`HotMartStreamJob.start`) or the cold stage's pending curated days
+  *    (`DailyPipeline.coldMarts`) as one partition, ≤ 64 MB of rows under
+  *    the four marts' aggregates.
   *  - `ColdMarts.distinctCounter` (`trafficPerMinute`, `dailyTraffic`):
   *    per-group sets of session and document ids, bounded by the input.
   *  - `Dedup.componentLabels`: a long (a, b) edge decodes to 24 B, so
@@ -63,10 +65,15 @@ object SizeGate {
   /** True when `df` fits the budget of one task. */
   def fits(df: DataFrame): Boolean = sizeInBytes(df) <= budget(df.sparkSession)
 
-  /** `df` as one partition (`coalesce(1)`, no shuffle) when it fits one
-    * task, else `df` unchanged. A one-partition child satisfies every
-    * required distribution, so aggregates, windows and joins over it plan
-    * with no `Exchange`. */
-  def onePartitionIfSmall(df: DataFrame): DataFrame =
-    if (fits(df)) df.coalesce(1) else df
+  /** `body` over `slice` persisted once: the one way a set of marts shares
+    * its input, on both layers. A slice that fits one task is persisted as
+    * one partition (`coalesce(1)`, no shuffle); a one-partition child
+    * satisfies every required distribution, so aggregates, windows and
+    * joins over it plan with no `Exchange`. A larger slice keeps its
+    * partitions. The cache is dropped when `body` returns. */
+  def withSlice[A](slice: DataFrame)(body: DataFrame => A): A = {
+    val cached = (if (fits(slice)) slice.coalesce(1) else slice).persist()
+    try body(cached)
+    finally { cached.unpersist(); () }
+  }
 }

@@ -15,9 +15,14 @@ import graft.core.SizeGate
   *
   * Scale posture: every mart is a single hash-aggregate over the click-frame —
   * Catalyst plans partial (map-side) + final aggregation, so the shuffle
-  * carries only group keys + partial states, never raw rows. Distinct
-  * counts are exact: per-group `countDistinct`, which Spark executes as a
-  * two-phase aggregate (through an Expand when one query counts two).
+  * carries only group keys + partial states, never raw rows. The daily
+  * cold stage runs the four over its pending days through
+  * [[graft.core.SizeGate.withSlice]], as the hot job runs its marts over a
+  * micro-batch: a slice that fits one task is one partition, and the marts
+  * over it plan no shuffle. Distinct counts are exact: per-group
+  * `countDistinct`, which Spark executes as a two-phase aggregate (through
+  * an Expand when one query counts two), or set sizes on one task
+  * ([[distinctCounter]]).
   */
 object ColdMarts {
 

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §2.6 #5-8), written batch-shaped so the same transform runs
   * inside `foreachBatch` (hot path) and over the full curated layer (backfill
   * / verification path). The reference computes each of these per-micro-batch
-  * on a cached batch frame (RT:345-370); we keep that contract — callers cache
-  * the batch once and fan out.
+  * on a cached batch frame (RT:345-370); we keep that contract — the hot job
+  * shares each batch through [[graft.core.SizeGate.withSlice]], the slice
+  * policy the daily cold stage uses for its pending days.
   */
 object HotMarts {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathNam
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Fanout
+import graft.core.{Fanout, SizeGate}
 import graft.ingest.Normalizer
 import graft.marts.ColdMarts
 import graft.schema.TripClick
@@ -25,9 +25,10 @@ import graft.sinks.{JdbcUpsertSink, ParquetLayerSink}
   * partitions the new drop changed, through a pending-partition handoff.
   * After its commit, a stage records each date it changed as an empty
   * marker file `<root>/_pending/<next stage>/<date>`. The next stage
-  * snapshots its markers, recomputes only those partitions from the same
-  * partitions of its source ([[IncrementalMart.refresh]]), writes them,
-  * marks its own successor, and only then deletes the markers it consumed.
+  * snapshots its markers, reads the same partitions of its source once
+  * ([[IncrementalMart.readPartitions]]), recomputes and overwrites only
+  * those partitions, marks its own successor, and only then deletes the
+  * markers it consumed.
   * A crash anywhere leaves the markers in place, and the rerun redoes
   * idempotent work. A missing output counts as "every source partition
   * pending", which covers both the first run and the repair of a deleted
@@ -125,21 +126,28 @@ object DailyPipeline {
 
   val coldMartNames: Seq[String] = coldMartQueries.map(_._1)
 
-  /** Stage 3 (reference: etl_to_analytics_mart.py): curated → 4 cold marts,
-    * each recomputed over the pending curated partitions and written with
-    * dynamic partition overwrite; the four writes run concurrently. Marts
-    * are partitioned by event_date — every mart's keys include the date, so
-    * a mart partition is a function of the same curated partition. Marks
-    * the rewritten dates pending for every serving target; returns each
-    * mart's row total. */
+  /** Stage 3 (reference: etl_to_analytics_mart.py): curated → 4 cold marts.
+    * The pending curated partitions are read once and shared by the four
+    * marts through [[SizeGate.withSlice]], as the hot marts share a
+    * micro-batch; each mart is written with dynamic partition overwrite,
+    * the four writes concurrently. All four are planned before any runs,
+    * so none is planned over a half-filled cache. Marts are partitioned by
+    * event_date — every mart's keys include the date, so a mart partition
+    * is a function of the same curated partition. Marks the rewritten dates
+    * pending for every serving target; returns each mart's row total. */
   def coldMarts(spark: SparkSession, layout: Layout): Map[String, Long] = {
     val h = new Handoff(spark, layout)
     val dates = h.pending(Marts, coldMartNames.exists(n => !h.exists(layout.mart(n))), layout.curated)
-    val totals = Fanout.all(spark, coldMartQueries.map { case (name, query) => () =>
-      if (dates.nonEmpty)
-        IncrementalMart.refresh(spark, layout.curated, curatedSchema, layout.mart(name), dates, query)
-      name -> ParquetLayerSink.partitionRows(spark, layout.mart(name), dates).values.sum
-    })
+    val slice = IncrementalMart.readPartitions(spark, layout.curated, curatedSchema, dates)
+    val totals = SizeGate.withSlice(slice) { curated =>
+      Fanout.all(spark, coldMartQueries.map { case (name, query) =>
+        val mart = query(curated)
+        () => {
+          if (dates.nonEmpty) IncrementalMart.overwriteTouchedPartitions(mart, layout.mart(name))
+          name -> ParquetLayerSink.partitionRows(spark, layout.mart(name), dates).values.sum
+        }
+      })
+    }
     h.servingTargets.foreach(h.mark(_, dates))
     h.consume(Marts, dates)
     totals.toMap

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
   *
   * Why: a year of daily ingests leaves ~365 delta directories per kind,
   * and every read unions all of them — the small-file spiral the
-  * reference hits on its curated layer (and solves with [[Compactor]],
-  * streaming_to_curated_stream.py:186-216). Folding keeps reads
+  * reference hits on its curated layer (and solves with a whole-layer
+  * rewrite, streaming_to_curated_stream.py:186-216). Folding keeps reads
   * O(one base + recent deltas) without changing ANY in-retention read:
   * for every bound B > maxFolded, `union(v < B)` is row-identical before
   * and after, because the folded base carries version maxFolded and
@@ -23,9 +23,10 @@ import org.apache.spark.sql.functions.col
   * serve (for [[graft.streaming.PretrainStreamJob]]: only versions the
   * stream's checkpoint has committed past).
   *
-  * Crash safety follows [[Compactor]]'s rename-chain discipline — every
-  * destructive step is one atomic FS rename, and both copies of the data
-  * exist at every intermediate point:
+  * Crash safety is a rename chain, where the reference deletes the live
+  * layer before renaming the new one into place (a crash between the two
+  * loses it): every destructive step is one atomic FS rename, and both
+  * copies of the data exist at every intermediate point:
   *
   *   1. write `<layer>_compacted_u<target>` (the folded rows; `_SUCCESS`
   *      marks completion; `target` = max folded version, recorded in the

@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions.{count, lit}
 
 /** JDBC serving-layer sinks
   * (reference: load_to_postgres.py:46-64 full overwrite, here a
-  * partition replace; streaming_to_analytics_mart_realtime.py:158-180
-  * append; RT:78-155 the psycopg2 staging upsert — the one sink Spark has
-  * no built-in for, SURVEY.md §2.2 K7).
+  * partition replace; RT:78-155 the psycopg2 staging upsert — the one sink
+  * Spark has no built-in for, SURVEY.md §2.2 K7).
   *
   * Upsert strategy, kept from the reference because it is the right shape at
   * scale: executors bulk-load a staging table over plain JDBC (parallel,
@@ -166,9 +165,4 @@ object JdbcUpsertSink {
       finally st.close()
     } finally conn.close()
   }
-
-  /** Insert-only append (hot snapshot/anomaly marts, RT:158-180). */
-  def append(df: DataFrame, url: String, table: String,
-      props: java.util.Properties = new java.util.Properties()): Unit =
-    df.write.mode(SaveMode.Append).jdbc(url, table, props)
 }

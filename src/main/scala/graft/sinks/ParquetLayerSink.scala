@@ -15,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    reference, kept here;
   *  - `maxRecordsPerFile` bounds file size instead of the reference's
   *    `coalesce(1)` (which serializes the whole write through one task —
-  *    correct for a demo, catastrophic at scale). Small-file pressure is
-  *    handled by [[Compactor]] off the hot path instead.
+  *    correct for a demo, catastrophic at scale). Dynamic partition
+  *    overwrite rewrites the curated layer and the marts per date, so their
+  *    file counts stay per day; the append-only archive gains one file per
+  *    touched date per drop.
   */
 object ParquetLayerSink {
 

@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * serving the deleted rows, the exact failure a compliance delete cannot
   * have.
   *
-  * Same non-atomicity caveat as [[Compactor]]: per-partition directory
-  * replacement is not transactional; a table format with snapshot commits
-  * can slot in behind this interface.
+  * Not atomic: per-partition directory replacement is not transactional;
+  * a table format with snapshot commits can slot in behind this interface.
   */
 object Takedown {
 
@@ -108,7 +107,8 @@ object Takedown {
   }
 
   /** Oracle-gated end-to-end takedown (q160): copy `documents` into a
-    * source-partitioned parquet layer, delete a deterministic ~5% of
+    * source-partitioned parquet layer at `layer` (replaced if present; the
+    * caller owns the directory), delete a deterministic ~5% of
     * doc_ids (portable md5 gate), and return the survivors READ BACK FROM
     * THE LAYER with the audit count folded in. The DuckDB oracle is the
     * anti-join over the original parquet plus a scalar-subquery deleted
@@ -117,9 +117,7 @@ object Takedown {
     * partition-pruned dynamic overwrite, and reported an honest
     * `rowsDeleted` — the law gate a compliance delete needs, not just a
     * unit test on a toy frame. */
-  def takedownGate(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val layer = java.nio.file.Files
-      .createTempDirectory("graft_takedown_gate_").toString
+  def takedownGate(spark: SparkSession, docs: DataFrame, layer: String): DataFrame = {
     docs.write.mode(SaveMode.Overwrite).partitionBy("source").parquet(layer)
     val keys = docs
       .filter(graft.analysis.Sketches.hash60(col("doc_id")) % 19 === 0)

@@ -102,8 +102,8 @@ object CuratedStreamJob {
     * foreachBatch append, S2C:157-176, guards each write with `isEmpty`,
     * which runs the stateful read → parse → dedup plan a second time). The
     * reference's per-batch `coalesce(1)` is dropped — `maxRecordsPerFile`
-    * bounds file sizes instead and the [[graft.sinks.Compactor]] owns
-    * small-file cleanup, on layers without a sink log.
+    * bounds file sizes instead. The layer is not compacted: files rewritten
+    * outside the sink log would hide their rows from its readers.
     *
     * The sink records each batch's files in `<outputPath>/_spark_metadata`
     * and commits that entry before the checkpoint's; a batch re-run after a

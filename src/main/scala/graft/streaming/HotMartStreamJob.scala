@@ -77,9 +77,9 @@ object HotMartStreamJob {
   /** Start the stream; `sink` is called once per micro-batch with the four
     * mart frames (production: JDBC upsert/append; tests: collect). The file
     * and Kafka sources schedule a batch only when input arrived, so there is
-    * no empty-batch pre-pass. The batch is persisted once for the four marts;
-    * when it fits one task ([[graft.core.SizeGate]]) it is persisted
-    * as one partition, and the marts over it then plan with no shuffle. */
+    * no empty-batch pre-pass. The four marts share the batch through
+    * [[graft.core.SizeGate.withSlice]], as the cold marts share a day: one
+    * partition when it fits one task, so the marts plan with no shuffle. */
   def start(
       source: DataFrame,
       sink: HotMartBatch => Unit,
@@ -90,9 +90,7 @@ object HotMartStreamJob {
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = SizeGate.onePartitionIfSmall(batch).persist()
-        try sink(computeBatch(cached, batchId))
-        finally { cached.unpersist(); () }
+        SizeGate.withSlice(batch)(slice => sink(computeBatch(slice, batchId)))
       }
       .start()
 }

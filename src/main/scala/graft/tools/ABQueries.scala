@@ -37,7 +37,7 @@ object ABQueries {
     val names = args(1).split(",").toSeq
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val reps = if (args.length > 3) args(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.GraftSession.tune(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

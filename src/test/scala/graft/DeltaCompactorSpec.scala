@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
 
 import graft.analysis.CorpusPrep
 import graft.sinks.DeltaLayerCompactor

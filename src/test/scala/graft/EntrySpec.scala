@@ -37,6 +37,16 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  // q160 writes its layer under the per-JVM root deleted at exit, so a
+  // build adds no directory of its own to the shared temp dir
+  test("q160_takedown: a build leaves no layer directory in the temp dir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def layers() = tmp.list().filter(_.startsWith("graft_takedown_gate_")).toSet
+    val before = layers()
+    assert(SparkEntry.queries("q160_takedown")(spark, sf).collect().nonEmpty)
+    assert((layers() -- before).isEmpty)
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001 and returns a well-formed frame") {
       val df = fn(spark, sf)

@@ -3,7 +3,6 @@ package graft
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.marts.{ColdMarts, HotMarts}
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.DailyPipeline
-import graft.sinks.Compactor
 
 class PipelineSpec extends SparkSpec {
 
@@ -185,10 +184,25 @@ class PipelineSpec extends SparkSpec {
     } finally conn.close()
   }
 
-  test("law: daily drops taken one day at a time ≡ all drops taken in one cycle on a fresh lake") {
+  // the law and crash-replay tests at the default gate budget, where the
+  // cold marts' pending slice is one partition, and at 1 byte, where it
+  // keeps its partitions; the tag keeps their Derby databases apart
+  for (budget <- Seq(None, Some("1"))) {
+    val suffix = budget.fold("")(b => s" ($b-byte gate budget)")
+    val tag = budget.fold("")("_b" + _)
+    def atBudget(body: => Unit): Unit = budget.fold(body)(withGateBudget(_)(body))
+    test("law: daily drops taken one day at a time ≡ all drops taken in one cycle on a fresh lake" + suffix)(
+      atBudget(law(tag)))
+    test("crash replay: a stage rerun on its restored pending markers leaves every output unchanged" + suffix)(
+      atBudget(crashReplay(tag)))
+  }
+
+  /** The law: the drops one day at a time leave the lake and serving as one
+    * cycle over all of them on a fresh lake does. */
+  private def law(tag: String): Unit = {
     val drops = lawDrops
     val incRoot = tmpDir("law_inc")
-    val incUrl = "jdbc:derby:memory:law_inc;create=true"
+    val incUrl = s"jdbc:derby:memory:law_inc$tag;create=true"
     val counts = drops.zipWithIndex.map { case (lines, d) =>
       val in = Fixtures.writeJsonl(tmpDir(s"law_in_$d"), "events.json", lines)
       val c = DailyPipeline.run(spark, in, incRoot)
@@ -198,7 +212,7 @@ class PipelineSpec extends SparkSpec {
     val allIn = tmpDir("law_all_in")
     drops.zipWithIndex.foreach { case (lines, d) => Fixtures.writeJsonl(allIn, s"drop-$d.json", lines) }
     val fullRoot = tmpDir("law_full")
-    val fullUrl = "jdbc:derby:memory:law_full;create=true"
+    val fullUrl = s"jdbc:derby:memory:law_full$tag;create=true"
     val full = DailyPipeline.run(spark, allIn, fullRoot)
     DailyPipeline.loadToServing(spark, DailyPipeline.Layout(fullRoot), fullUrl)
 
@@ -221,10 +235,12 @@ class PipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$incRoot/_pending/curate").list().exists(!_.startsWith(".")))
   }
 
-  test("crash replay: a stage rerun on its restored pending markers leaves every output unchanged") {
+  /** On the last day, each stage is rerun on the markers it consumed, as
+    * after a crash before their deletion; no output may change. */
+  private def crashReplay(tag: String): Unit = {
     val drops = lawDrops
     val root = tmpDir("replay")
-    val url = "jdbc:derby:memory:law_replay;create=true"
+    val url = s"jdbc:derby:memory:law_replay$tag;create=true"
     val layout = DailyPipeline.Layout(root)
     val pending = java.nio.file.Paths.get(root, "_pending")
     def markers(): Set[java.nio.file.Path] =
@@ -288,6 +304,46 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("cold marts: one call scans the pending curated partitions once for all four marts") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tmpDir("one_read")
+    val layout = DailyPipeline.Layout(root)
+    lawDrops.take(2).zipWithIndex.foreach { case (lines, d) =>
+      DailyPipeline.archiveRaw(spark, Fixtures.writeJsonl(tmpDir(s"one_read_in_$d"), "events.json", lines), layout)
+    }
+    DailyPipeline.curate(spark, layout)
+    // every curated file scan in the executed plans, a cached plan's once
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    def collect(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => collect(a.executedPlan)
+      case q: QueryStageExec => collect(q.plan)
+      case m: InMemoryTableScanExec => collect(m.relation.cachedPlan)
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(layout.curated + "/"))) scans.add(f)
+      case _ => p.children.foreach(collect)
+    }
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = collect(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    // listeners hear of an execution on Spark's listener thread: drain it
+    def drain(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    drain()
+    spark.listenerManager.register(listener)
+    val totals =
+      try DailyPipeline.coldMarts(spark, layout)
+      finally { drain(); spark.listenerManager.unregister(listener) }
+    assert(totals("mart_daily_traffic") === 2, "both days are pending")
+    assert(scans.size === 1)
+  }
+
   test("serving load replaces changed dates in place: the table, its index and untouched dates survive") {
     val root = tmpDir("serve_keep")
     val layout = DailyPipeline.Layout(root)
@@ -319,34 +375,6 @@ class PipelineSpec extends SparkSpec {
       val names = Iterator.continually(idx).takeWhile(_.next()).map(_.getString("INDEX_NAME")).toSet
       assert(names.contains("TRAFFIC_BY_DATE"), names)
     } finally conn.close()
-  }
-
-  test("compactor rewrites a layer in place (K4)") {
-    val root = tmpDir("compact")
-    val layer = root + "/layer"
-    spark.range(1000).toDF("id").repartition(8).write.parquet(layer)
-    val before = new java.io.File(layer).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before > 1)
-    Compactor.compact(spark, layer, targetFiles = 1)
-    val after = new java.io.File(layer).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(after === 1)
-    assert(spark.read.parquet(layer).count() === 1000)
-  }
-
-  test("compactor preserves a partitioned layout (K4 on curated-style layers)") {
-    import spark.implicits._
-    val root = tmpDir("compact_part")
-    val layer = root + "/layer"
-    Seq((1, "2026-01-01"), (2, "2026-01-01"), (3, "2026-01-02"))
-      .toDF("id", "event_date")
-      .repartition(4)
-      .write.partitionBy("event_date").parquet(layer)
-    Compactor.compact(spark, layer, targetFiles = 1, partitionCols = Seq("event_date"))
-    val dirs = new java.io.File(layer).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq === Seq("event_date=2026-01-01", "event_date=2026-01-02"))
-    val back = spark.read.parquet(layer)
-    assert(back.count() === 3)
-    assert(back.columns.contains("event_date"))
   }
 
   test("pretrain pipeline capstone: every stage acts on its planted doc, composition ≡ stage-by-stage") {
@@ -436,7 +464,6 @@ class PipelineSpec extends SparkSpec {
 
   test("incremental capstone: artifact-fed increment ≡ whole rebuild, with every seam across the boundary") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     import graft.analysis.CorpusPrep
     def mk(prefix: String, n: Int): String =
       (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"
@@ -506,7 +533,6 @@ class PipelineSpec extends SparkSpec {
 
   test("artifact layer round-trip: increment from read-back parquet state ≡ rebuild; empty deltas keep their schema") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     import graft.analysis.CorpusPrep
     def mk(prefix: String, n: Int): String =
       (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"

@@ -25,7 +25,6 @@ class ReachabilitySpec extends AnyFunSuite {
   /** Unreached files kept on purpose, each with the open ROADMAP item
     * that settles it. */
   private val allowed = Map(
-    "Compactor" -> "ROADMAP direction 4: wire into the daily cycle or delete",
     "MartKeys" -> "ROADMAP direction 3: the serving reconcile's key set")
 
   /** `src` with line and (nested) block comments removed; string and

@@ -18,7 +18,7 @@ class SizeGateSpec extends SparkSpec {
       assert(cached.count() === 10L)
       assert(SizeGate.sizeInBytes(cached) < 10000)
       assert(SizeGate.fits(cached))
-      assert(SizeGate.onePartitionIfSmall(cached).rdd.getNumPartitions === 1)
+      assert(SizeGate.withSlice(cached)(_.rdd.getNumPartitions) === 1)
       // the budget is the advisory partition size, read when the gate asks
       assert(!withGateBudget("1")(SizeGate.fits(cached)))
     } finally { cached.unpersist(); () }
