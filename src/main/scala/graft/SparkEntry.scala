@@ -4533,10 +4533,10 @@ object SparkEntry {
       Similarity.knnBruteForce(emb, emb.filter(col("vec_id") < 8), k = 5)
         .orderBy("query_id", "rank")
     }, annExactTop5Sql),
-    // SimHash near-dup buckets via custom Catalyst expression. Gated with the
+    // SimHash near-dup buckets via custom Catalyst expression, with the
     // PORTABLE md5 token hash so the DuckDB oracle can rebuild the identical
     // 64-bit signature (bit votes, band keys, hamming — all replicated in
-    // SQL); the FNV-1a fast path stays spec-verified (OpsSpec).
+    // SQL).
     Gated("q34_simhash_buckets", { (s, d) =>
       val docs = TestData.documents(s, d)
       val sigs = docs.select(col("doc_id"),

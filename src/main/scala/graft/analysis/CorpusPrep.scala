@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, StringType}
 
@@ -578,8 +578,8 @@ object CorpusPrep {
       version: Long,
       targetFiles: Option[Int] = None): Unit =
     Fanout.all(a.exactDocs.sparkSession, kindFrames(a).map { case (kind, df) => () =>
-      val sized = targetFiles.fold(df.hint("rebalance"))(df.repartition)
-      graft.sinks.ParquetLayerSink.overwriteMart(sized, s"$root/$kind/v=$version")
+      targetFiles.fold(df.hint("rebalance"))(df.repartition)
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/$kind/v=$version")
     })
 
   /** Read the layer state as of (exclusive) `maxVersionExclusive` — ONE
@@ -1099,20 +1099,6 @@ object CorpusPrep {
           col("log_w_micro") + floor(col("gumbel_raw") * lit(1e6) + lit(0.5)))
       (ratio, keyed)
     } finally { toks.unpersist(); () }
-  }
-
-  /** Per-stage survivor counts — the pipeline's observability surface. */
-  def stageCounts(docs: DataFrame, t: Thresholds = Thresholds()): Map[String, Long] = {
-    val qualityPass = docs.join(
-      TextAnalysis.textStats(docs).filter(col("quality_score") >= t.minQuality)
-        .select("doc_id"), Seq("doc_id"))
-    val exact = Dedup.dedupExact(qualityPass)
-    val prepared = prepareCorpus(docs, t)
-    Map(
-      "input" -> docs.count(),
-      "quality_pass" -> qualityPass.count(),
-      "exact_deduped" -> exact.count(),
-      "near_dedup_survivors" -> prepared.count())
   }
 
   /** Leakage-safe train/val/test split: assignment happens at the

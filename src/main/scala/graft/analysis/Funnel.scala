@@ -223,28 +223,4 @@ object Funnel {
         sum("n").as("n_transitions"),
         round(-sum(col("term")).cast(DoubleType), 6).as("entropy_rate"))
   }
-
-  /** Funnel summary: one row per step with how many keys reached it and
-    * the conversion rate vs step 1. */
-  def summary(
-      events: DataFrame,
-      steps: Seq[String],
-      keyCol: String,
-      typeCol: String,
-      tsCol: String): DataFrame = {
-    val times = stepTimes(events, steps, keyCol, typeCol, tsCol)
-    val aggs = steps.indices.map(i => count(col(s"t${i + 1}")).as(s"c${i + 1}"))
-    val counts = times.agg(aggs.head, aggs.tail: _*).collect().head
-    val rows = steps.zipWithIndex.map { case (s, i) =>
-      (i + 1, s, counts.getAs[Long](s"c${i + 1}"))
-    }
-    val spark = events.sparkSession
-    import spark.implicits._
-    // an empty funnel (nobody reached step 1) reports 0.0 conversion rather
-    // than a null-producing divide by zero
-    val base = math.max(rows.head._3, 1L).toDouble
-    rows.toDF("step_index", "step", "sessions")
-      .withColumn("conversion",
-        round(col("sessions").cast("double") / lit(base), 4))
-  }
 }

@@ -122,33 +122,6 @@ object Multimodal {
     decodeMeta(attachBinary(docs).as[MediaRecord]).toDF()
   }
 
-  /** STUB resize — deterministic fake in place of a real scaler: produces a
-    * fixed-size output buffer by striding over the source bytes (the real
-    * thing swaps the sampling loop for bilinear/libvips). The contract the
-    * pipeline cares about is real: fixed output size per row, constant
-    * memory, per-partition batch shape. */
-  def resizeStub(r: MediaRecord, targetBytes: Int): MediaRecord = {
-    val src = if (r.media == null) Array.emptyByteArray else r.media
-    val out = new Array[Byte](targetBytes)
-    if (src.nonEmpty) {
-      var i = 0
-      while (i < targetBytes) {
-        out(i) = src((i.toLong * src.length / targetBytes).toInt)
-        i += 1
-      }
-    }
-    MediaRecord(r.doc_id, out)
-  }
-
-  /** Resize over partitions — same amortized-init boundary as [[decodeMeta]]. */
-  def resize(media: Dataset[MediaRecord], targetBytes: Int = 256): Dataset[MediaRecord] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      // real pipeline: scaler context acquired once per partition here
-      it.map(resizeStub(_, targetBytes))
-    }
-  }
-
   /** Batched model inference — the GPU-feeding boundary for embedding
     * generation at corpus scale: rows group into fixed-size batches INSIDE
     * each partition (a real model wants one matmul per batch, pinned

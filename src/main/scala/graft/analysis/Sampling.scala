@@ -28,13 +28,6 @@ object Sampling {
   def hashBucket(key: Column, buckets: Int = DefaultBuckets): Column =
     conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long") % buckets
 
-  /** Deterministic Bernoulli(fraction) sample gated on `keyCol`. */
-  def hashSample(df: DataFrame, keyCol: String, fraction: Double,
-      buckets: Int = DefaultBuckets): DataFrame = {
-    require(fraction >= 0 && fraction <= 1, s"fraction out of [0,1]: $fraction")
-    df.filter(hashBucket(col(keyCol), buckets) < math.round(fraction * buckets))
-  }
-
   /** Stratified deterministic sample: per-stratum fractions, `default` for
     * strata not listed. One scan, no shuffle — the threshold is a when-chain
     * folded into the same codegen'd filter as the hash. */
@@ -107,7 +100,7 @@ object Sampling {
   /** Weighted deterministic sample: inclusion probability proportional to a
     * weight column — p_i = fraction · wᵢ / mean(w), capped at 1 by the
     * bucket range itself — gated on the same md5 bucket, so every
-    * hashSample property survives (exactly-once under retries,
+    * [[stratifiedHashSample]] property survives (exactly-once under retries,
     * partitioning-independent, reproducible in any engine) while heavy rows
     * (long documents, high-value sessions) oversample. The mean weight is
     * ONE 1-row aggregate folded in as a literal; the per-row threshold is
@@ -239,7 +232,7 @@ object Sampling {
   /** EXACTLY-k-per-group deterministic sample: the k rows with the
     * smallest md5 hash per group (all rows for groups smaller than k) —
     * the "take 1000 docs per source for the eval set" staple, with the
-    * same engine-portable determinism as [[hashSample]] (retry-stable,
+    * same engine-portable determinism as [[stratifiedHashSample]] (retry-stable,
     * partitioning-independent, reproducible in any engine).
     *
     * Scale shape: NOT a bare window over raw rows (a hot group would pin

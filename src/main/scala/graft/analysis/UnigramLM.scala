@@ -100,12 +100,6 @@ object UnigramLM {
     * (a substring appearing twice in a word counts twice). ALL single
     * chars survive selection (they guarantee segmentability); multi-char
     * candidates keep the top `seedMulti` by (cnt desc, piece asc). */
-  def unigramSeed(
-      docs: DataFrame,
-      params: Params = Params(),
-      textCol: String = "text"): DataFrame =
-    seedFromWords(wordTable(docs, params.maxWordLen, textCol), params)
-
   private def seedFromWords(wt: DataFrame, params: Params): DataFrame = {
     val sub = substringCounts(wt, params)
     val chars = sub.filter(length(col("piece")) === 1)

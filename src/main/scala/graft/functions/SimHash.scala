@@ -21,23 +21,9 @@ import org.apache.spark.sql.types._
   */
 object SimHash {
 
-  /** FNV-1a 64-bit over UTF-8 bytes — stable, allocation-free, portable. */
-  def fnv1a64(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
   /** Portable per-token hash: big-endian long of the first 8 bytes of
-    * md5(token). Any engine with an md5 function reproduces it bit-for-bit
-    * (the correctness-gate variant — the driver's DuckDB oracle rebuilds the
-    * identical signature); FNV-1a stays the fast default (no digest object,
-    * no allocation). */
+    * md5(token). Any engine with an md5 function reproduces it bit-for-bit,
+    * so the oracle rebuilds the identical signature in SQL. */
   private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -53,21 +39,17 @@ object SimHash {
     out
   }
 
-  /** SimHash of a token array: per-bit vote of each token's 64-bit hash,
-    * sign of the vote becomes the output bit. Called from generated code. */
-  def compute(tokens: ArrayData): Long = computeVotes(tokens, portable = false)
-
-  /** [[compute]] with the engine-portable md5 token hash. */
-  def computeMd5(tokens: ArrayData): Long = computeVotes(tokens, portable = true)
-
-  private def computeVotes(tokens: ArrayData, portable: Boolean): Long = {
+  /** SimHash of a token array: per-bit vote of each token's 64-bit md5
+    * hash, sign of the vote becomes the output bit. Called from generated
+    * code. */
+  def computeMd5(tokens: ArrayData): Long = {
     val acc = new Array[Int](64)
     var t = 0
     val n = tokens.numElements()
     while (t < n) {
       if (!tokens.isNullAt(t)) {
         val bytes = tokens.getUTF8String(t).getBytes
-        val h = if (portable) md5hash64(bytes) else fnv1a64(bytes)
+        val h = md5hash64(bytes)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
@@ -85,31 +67,22 @@ object SimHash {
     out
   }
 
-  def simhash64(tokens: Column): Column = {
+  /** The 64-bit SimHash of a token array column, md5 token hash. */
+  def simhash64Md5(tokens: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens)))
   }
-
-  /** [[simhash64]] with the portable md5 token hash. */
-  def simhash64Md5(tokens: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(SimHash64Expr(ColumnBridge.expression(tokens), portable = true))
-  }
 }
 
-case class SimHash64Expr(child: Expression, portable: Boolean = false)
-    extends UnaryExpression {
+case class SimHash64Expr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
-  override def prettyName: String = if (portable) "simhash64_md5" else "simhash64"
-
-  private def method: String = if (portable) "computeMd5" else "compute"
+  override def prettyName: String = "simhash64_md5"
 
   override def nullSafeEval(input: Any): Any =
-    if (portable) SimHash.computeMd5(input.asInstanceOf[ArrayData])
-    else SimHash.compute(input.asInstanceOf[ArrayData])
+    SimHash.computeMd5(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash.$method($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimHash.computeMd5($c)")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)

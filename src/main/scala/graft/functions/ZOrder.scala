@@ -1,18 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) clustering keys for multi-dimensional data layout.
+/** Z-order (Morton) clustering key for multi-dimensional data layout.
   *
   * A table range-partitioned and sorted on ONE column skips beautifully on
   * that column and not at all on any other; interleaving the bits of two
   * columns into one Morton key makes ranges of the key correspond to
   * RECTANGLES in (x, y) space, so parquet row-group zone maps (min/max per
-  * file) prune selective predicates on EITHER column — the same layout idea
-  * behind Delta/Iceberg's OPTIMIZE ZORDER, expressed here as plain Spark:
-  * a codegen'd key expression + repartitionByRange + sortWithinPartitions.
-  * No shuffle beyond the one range exchange the rewrite needs anyway.
+  * file) prune selective predicates on EITHER column — the layout key
+  * behind Delta/Iceberg's OPTIMIZE ZORDER, as a codegen'd expression.
   *
   * The key is built from fixed bit-budget, bounded inputs (callers map raw
   * values into [0, 2^bits) first — modulo for ids, scaled quantiles for
@@ -33,19 +31,5 @@ object ZOrder {
       val ybit = shiftleft(shiftright(ym, i).bitwiseAND(lit(1L)), 2 * i + 1)
       xbit.bitwiseOR(ybit)
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** Rewrite `df` into `numPartitions` files clustered by the Morton key of
-    * (xCol, yCol): range-partition on the key (sampled range boundaries →
-    * balanced files), sort within each partition so row-group zone maps are
-    * tight on BOTH columns. The `zkey` column is kept so writers can
-    * partition-prune on it directly. */
-  def layoutByZ(
-      df: DataFrame, xCol: String, yCol: String,
-      bits: Int = 16, numPartitions: Int = 32): DataFrame = {
-    val keyed = df.withColumn("zkey", zValue(col(xCol), col(yCol), bits))
-    keyed
-      .repartitionByRange(numPartitions, col("zkey"))
-      .sortWithinPartitions("zkey")
   }
 }

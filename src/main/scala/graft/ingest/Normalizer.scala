@@ -26,8 +26,8 @@ object Normalizer {
 
   /** Parse JSON-lines text already read as a single string column `json`:
     * the good side of [[fromJsonLinesWithDeadLetter]]. */
-  def fromJsonLines(lines: DataFrame, jsonCol: String = "json"): DataFrame =
-    fromJsonLinesWithDeadLetter(lines, jsonCol)._1
+  def fromJsonLines(lines: DataFrame): DataFrame =
+    fromJsonLinesWithDeadLetter(lines)._1
 
   /** Raw field → curated column (reference: streaming_to_curated_stream.py:127-139);
     * `event_ts` is converted to a timestamp, every other field passes as is. */
@@ -46,28 +46,15 @@ object Normalizer {
   def curatedProjection(parsed: DataFrame): DataFrame =
     parsed.select(curatedColumns: _*).filter(col("dedup_key").isNotNull)
 
-  /** Archive-raw projection: curated fields + Kafka + load metadata
-    * (reference: batch_to_archive_raw.py:139-162). Keeps every row. */
-  def archiveRawProjection(kafkaFrame: DataFrame, ingestionType: String = "batch"): DataFrame =
-    parse(kafkaFrame, col("value").cast(StringType),
-        col("key").cast(StringType).as("kafka_key"),
-        col("topic"), col("partition"), col("offset"),
-        col("timestamp").as("kafka_timestamp"))
-      .select((curatedColumns ++ Seq(
-        col("kafka_key"), col("topic"), col("partition"), col("offset"),
-        col("kafka_timestamp"),
-        current_timestamp().as("ingested_at"),
-        lit(ingestionType).as("ingestion_type"))): _*)
-
-  /** The one JSON parse: `raw` payload + `data` struct (+ `keep` columns).
+  /** The one JSON parse: `raw` payload + `data` struct.
     * from_json in PERMISSIVE mode yields a null-FIELDED struct on malformed
     * input, not a null struct, and keeps the fields that did convert when
     * one field fails — the corrupt-record column is the reliable
     * malformed-row signal. */
-  private def parse(frame: DataFrame, payload: Column, keep: Column*): DataFrame = {
+  private def parse(frame: DataFrame, payload: Column): DataFrame = {
     val data = from_json(payload, parseSchema,
       Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
-    frame.select(Seq(payload.as("raw"), data.as("data")) ++ keep: _*)
+    frame.select(payload.as("raw"), data.as("data"))
   }
 
   /** `rawSchema` plus the corrupt-record column the permissive parse fills. */
@@ -81,9 +68,8 @@ object Normalizer {
     * partition the input. Both frames share the parse plan lazily; a
     * caller materializing both sides should cache the input (or write good
     * first, bad second) to avoid parsing the source twice. */
-  def fromJsonLinesWithDeadLetter(
-      lines: DataFrame, jsonCol: String = "json"): (DataFrame, DataFrame) =
-    withDeadLetter(lines, col(jsonCol))
+  def fromJsonLinesWithDeadLetter(lines: DataFrame): (DataFrame, DataFrame) =
+    withDeadLetter(lines, col("json"))
 
   /** (good, bad) of one parse of `payload`: a row is bad when its payload is
     * null, unparseable or unconvertible, or it has no dedup key. */
@@ -101,19 +87,6 @@ object Normalizer {
         current_timestamp().as("rejected_at"))
     (good, bad)
   }
-
-  /** Producer-side dedup key, engine edition
-    * (reference: ingestion/producer/producer_base.py:42-53 computes
-    * xxhash64(session|document|ts).hexdigest() with md5 fallback).
-    * We standardize on Spark's codegen'd xxhash64 rendered as hex — same
-    * collision properties, no custom Expression needed. */
-  def dedupKey(sessionId: Column, documentId: Column, eventTs: Column): Column =
-    lower(hex(xxhash64(concat_ws("|", sessionId, documentId.cast(StringType), eventTs.cast(StringType)))))
-
-  /** Legacy "/Date(1452038902000)/" → proper timestamp
-    * (reference: ingestion/sample_data/session_based_splitter.py:24-34). */
-  def parseLegacyDate(dateCreated: Column): Column =
-    timestamp_millis(regexp_extract(dateCreated, "/Date\\((-?\\d+)\\)/", 1).cast(LongType))
 
   /** Deterministic batch dedup: keep the first row per key by (orderCol, tieBreak).
     * `dropDuplicates` keeps an arbitrary row — fine for streaming

@@ -13,6 +13,7 @@ import graft.ingest.Normalizer
 import graft.marts.ColdMarts
 import graft.schema.TripClick
 import graft.sinks.{JdbcUpsertSink, ParquetLayerSink}
+import graft.sinks.ParquetLayerSink.PartitionCol
 
 /** Local batch pipeline runner — replaces the reference's Airflow DAG chain
   * (producer → streaming → batch → mart → load,
@@ -72,7 +73,7 @@ object DailyPipeline {
       .withColumn("ingested_at", current_timestamp())
       .withColumn("ingestion_type", lit("batch"))
       .observe(kept, count(lit(1)).as("n"), collect_set(
-        coalesce(nullif(col("event_date"), lit("")), lit(DEFAULT_PARTITION_NAME))).as("dates"))
+        coalesce(nullif(col(PartitionCol), lit("")), lit(DEFAULT_PARTITION_NAME))).as("dates"))
     // good first, bad second: both sides share the parse plan lazily and
     // the source re-read is cheaper than caching it for the rare rejects
     ParquetLayerSink.appendPartitioned(parsed, layout.archiveRaw)
@@ -165,18 +166,17 @@ object DailyPipeline {
       spark: SparkSession,
       layout: Layout,
       jdbcUrl: String,
-      martNames: Seq[String] = coldMartNames,
       props: java.util.Properties = new java.util.Properties()): Map[String, Long] = {
     val h = new Handoff(spark, layout)
     val target = servingTarget(jdbcUrl)
-    Fanout.all(spark, martNames.map { name => () =>
+    Fanout.all(spark, coldMartNames.map { name => () =>
       val stage = s"$target/$name"
       val dates = h.pending(stage,
         !h.exists(layout.pending(stage)) || !JdbcUpsertSink.tableExists(jdbcUrl, name, props),
         layout.mart(name))
       val rows = if (dates.isEmpty) 0L else JdbcUpsertSink.replacePartitions(
         IncrementalMart.readPartitions(spark, layout.mart(name), martSchema(spark, name), dates),
-        jdbcUrl, name, "event_date", dates.map(partitionDate), props)
+        jdbcUrl, name, PartitionCol, dates.map(partitionDate), props)
       h.consume(stage, dates)
       name -> rows
     }).toMap
@@ -218,7 +218,7 @@ object DailyPipeline {
 
   /** The curated layer as read back: the partition column last, a date. */
   private val curatedSchema: StructType = StructType(
-    TripClick.curatedSchema.filterNot(_.name == "event_date") :+ StructField("event_date", DateType))
+    TripClick.curatedSchema.filterNot(_.name == PartitionCol) :+ StructField(PartitionCol, DateType))
 
   /** The archive-raw layer as read back: curated fields + load metadata. */
   private val archiveSchema: StructType = StructType(curatedSchema.init ++ Seq(
@@ -231,7 +231,7 @@ object DailyPipeline {
       throw new IllegalArgumentException(s"unknown cold mart $name"))._2
     val s = query(spark.createDataFrame(java.util.List.of[Row](), curatedSchema)).schema
       .map(_.copy(nullable = true))
-    StructType(s.filterNot(_.name == "event_date") ++ s.filter(_.name == "event_date"))
+    StructType(s.filterNot(_.name == PartitionCol) ++ s.filter(_.name == PartitionCol))
   }
 
   /** A partition's directory-name value as a JDBC date (null partition → null). */
@@ -277,9 +277,10 @@ object DailyPipeline {
     /** Every `event_date` partition of the layer at `path`. */
     def partitions(path: String): Seq[String] = {
       val dir = new Path(path)
+      val prefix = s"$PartitionCol="
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-        .collect { case n if n.startsWith("event_date=") => n.stripPrefix("event_date=") }.sorted.toSeq
+        .collect { case n if n.startsWith(prefix) => n.stripPrefix(prefix) }.sorted.toSeq
     }
   }
 }

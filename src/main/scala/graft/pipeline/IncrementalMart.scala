@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.sinks.ParquetLayerSink.PartitionCol
+
 /** Partition-scoped layer maintenance: recompute ONLY the date partitions a
   * change touched and swap them in place, instead of the reference's full
   * T+1 recompute (etl_to_analytics_mart.py recomputes every mart over the
@@ -23,20 +25,17 @@ import org.apache.spark.sql.types.StructType
 object IncrementalMart {
 
   /** Overwrite only the partitions present in `martSlice`. The target must
-    * be laid out partitioned by `partitionCol` (as [[DailyPipeline]] writes
+    * be laid out partitioned by `event_date` (as [[DailyPipeline]] writes
     * its layers) — mixing this into a flat directory would leave the old
     * root-level files alongside the new partition dirs. The overwrite mode
     * is a per-write option, not a session conf toggle, so concurrent
     * refreshes of different marts can't race each other into a static
     * (delete-everything) overwrite. */
-  def overwriteTouchedPartitions(
-      martSlice: DataFrame,
-      martPath: String,
-      partitionCol: String = "event_date"): Unit =
+  def overwriteTouchedPartitions(martSlice: DataFrame, martPath: String): Unit =
     martSlice.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
+      .partitionBy(PartitionCol)
       .parquet(martPath)
 
   /** The partitions `values` (directory-name values) of the layer at
@@ -49,10 +48,9 @@ object IncrementalMart {
       spark: SparkSession,
       path: String,
       schema: StructType,
-      values: Seq[String],
-      partitionCol: String = "event_date"): DataFrame = {
+      values: Seq[String]): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = values.map(v => s"$path/$partitionCol=$v").filter(d => fs.exists(new Path(d)))
+    val dirs = values.map(v => s"$path/$PartitionCol=$v").filter(d => fs.exists(new Path(d)))
     if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
     else spark.read.schema(schema).option("basePath", path).parquet(dirs: _*)
   }
@@ -66,9 +64,7 @@ object IncrementalMart {
       sourceSchema: StructType,
       targetPath: String,
       values: Seq[String],
-      transform: DataFrame => DataFrame,
-      partitionCol: String = "event_date"): Unit =
+      transform: DataFrame => DataFrame): Unit =
     overwriteTouchedPartitions(
-      transform(readPartitions(spark, sourcePath, sourceSchema, values, partitionCol)),
-      targetPath, partitionCol)
+      transform(readPartitions(spark, sourcePath, sourceSchema, values)), targetPath)
 }

@@ -5,9 +5,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Parquet data-lake layer writers
-  * (reference: batch_to_archive_raw.py:170-176 append-partitioned,
-  * etl_to_analytics_mart.py:109-197 per-mart overwrite).
+/** Parquet data-lake layer writer and row counts
+  * (reference: batch_to_archive_raw.py:170-176 append-partitioned).
   *
   * Scale notes:
   *  - `partitionBy(event_date)` gives partition pruning to every downstream
@@ -22,26 +21,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object ParquetLayerSink {
 
+  /** The partition column of every lake layer. */
+  val PartitionCol = "event_date"
+
   /** The per-file row bound of the append-only layers. */
   val MaxRecordsPerFile: Long = 5000000L
 
-  /** Append-only layer write (archive raw / curated). */
-  def appendPartitioned(
-      df: DataFrame,
-      path: String,
-      partitionCol: String = "event_date",
-      maxRecordsPerFile: Long = MaxRecordsPerFile): Unit =
+  /** Append-only layer write (archive raw). */
+  def appendPartitioned(df: DataFrame, path: String): Unit =
     df.write
       .mode(SaveMode.Append)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCol)
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
+      .partitionBy(PartitionCol)
       .parquet(path)
-
-  /** Full-refresh layer write. */
-  def overwriteMart(df: DataFrame, path: String, partitionCol: Option[String] = None): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
-  }
 
   /** Rows in the committed parquet files under `path`, summed from their
     * footers on the driver: no Spark job and no data read. Files under a
@@ -67,7 +59,7 @@ object ParquetLayerSink {
   }
 
   /** Rows per partition (directory-name value) of the layer at `path`,
-    * partitioned by `partitionCol`, from the layer's row-count manifest
+    * from the layer's row-count manifest
     * `<path>/_row_counts` (a `_` name, which Spark's readers skip). The
     * partitions `recount` — every partition when there is no manifest —
     * are first recounted from their footers ([[footerRows]]) and the
@@ -78,13 +70,12 @@ object ParquetLayerSink {
   def partitionRows(
       spark: SparkSession,
       path: String,
-      recount: Seq[String] = Nil,
-      partitionCol: String = "event_date"): Map[String, Long] = {
+      recount: Seq[String] = Nil): Map[String, Long] = {
     val layer = new Path(path)
     val fs = layer.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(layer)) return Map.empty
     val manifest = new Path(layer, "_row_counts")
-    val prefix = s"$partitionCol="
+    val prefix = s"$PartitionCol="
     val (known, stale) =
       if (fs.exists(manifest)) {
         val in = fs.open(manifest)

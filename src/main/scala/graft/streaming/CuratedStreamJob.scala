@@ -45,8 +45,9 @@ object CuratedStreamJob {
       .load(dir)
       .withColumnRenamed("value", "json")
 
-  /** The transform: normalize + watermarked dedup. `rawIsKafka` selects the
-    * frame parser; everything downstream is shared.
+  /** The transform: normalize + dedup within a 10-minute event-time
+    * watermark. `rawIsKafka` selects the frame parser; everything
+    * downstream is shared.
     *
     * Deliberate deviation from the reference: the reference's
     * `withWatermark(...).dropDuplicates(["dedup_key"])` (S2C:147-151) does
@@ -57,32 +58,29 @@ object CuratedStreamJob {
     * passes it, duplicates within the watermark collapse, and a duplicate
     * arriving later than the watermark may re-emit (the documented
     * at-least-once edge the downstream idempotent upsert sink absorbs). */
-  def curate(raw: DataFrame, rawIsKafka: Boolean, watermark: String = "10 minutes"): DataFrame = {
+  def curate(raw: DataFrame, rawIsKafka: Boolean): DataFrame = {
     val normalized =
       if (rawIsKafka) Normalizer.fromKafkaFrame(raw)
       else Normalizer.fromJsonLines(raw)
     normalized
-      .withWatermark("event_ts", watermark)
+      .withWatermark("event_ts", "10 minutes")
       .dropDuplicatesWithinWatermark(Seq("dedup_key"))
   }
 
-  /** Dead-letter twin of [[curate]]: the REJECT side of the same permissive
-    * parse — corrupt JSON, null payloads, rows missing their dedup key —
-    * quarantined with a reason and arrival timestamp instead of being
-    * silently dropped by the clean path's null filters
-    * ([[Normalizer.fromJsonLinesWithDeadLetter]] proves the two sides
-    * partition the input exhaustively, NormalizerSpec). Runs as its OWN
-    * query and checkpoint over the same source — the standard split-sink
-    * layout: the clean path keeps its stateful watermarked dedup untouched,
-    * the quarantine is a stateless append, and each side recovers
-    * independently. At-least-once ingress makes corrupt events an
-    * operational certainty; the reference's parse drops them on the floor
-    * (S2C:126-139). */
-  def rejects(raw: DataFrame): DataFrame =
-    Normalizer.fromJsonLinesWithDeadLetter(raw)._2
-
-  /** Start the quarantine stream: Spark's parquet file sink, partitioned
-    * by reject date, exactly once like [[start]]. */
+  /** Start the quarantine stream, the dead-letter twin of [[curate]]:
+    * `rejected` is the REJECT side of the same permissive parse
+    * (`Normalizer.fromJsonLinesWithDeadLetter(raw)._2`) — corrupt JSON,
+    * null payloads, rows missing their dedup key — quarantined with a
+    * reason and arrival timestamp instead of being silently dropped by the
+    * clean path's null filters (the two sides partition the input
+    * exhaustively, NormalizerSpec). Runs as its OWN query and checkpoint
+    * over the same source — the standard split-sink layout: the clean path
+    * keeps its stateful watermarked dedup untouched, the quarantine is a
+    * stateless append, and each side recovers independently. At-least-once
+    * ingress makes corrupt events an operational certainty; the
+    * reference's parse drops them on the floor (S2C:126-139). Written
+    * through Spark's parquet file sink, partitioned by reject date,
+    * exactly once like [[start]]. */
   def startRejects(
       rejected: DataFrame,
       quarantinePath: String,
@@ -123,6 +121,6 @@ object CuratedStreamJob {
       .trigger(trigger)
       .option("checkpointLocation", checkpointPath)
       .option("maxRecordsPerFile", ParquetLayerSink.MaxRecordsPerFile)
-      .partitionBy("event_date")
+      .partitionBy(ParquetLayerSink.PartitionCol)
       .start(outputPath)
 }

@@ -43,23 +43,27 @@ object PretrainStreamJob {
     }
   }
 
-  /** One micro-batch: read the pre-batch layer state, increment (or
-    * bootstrap), write this batch's deltas as `v=<batchId>`, emit the
-    * packed readout — then, every `compactEvery` batches, fold the layer's
-    * old versions (see below). Exposed for direct spec-level replay
-    * injection.
+  /** One micro-batch: repair the layer after any crash mid-fold, read the
+    * pre-batch layer state, increment (or bootstrap), write this batch's
+    * deltas as `v=<batchId>`, emit the packed readout — then, every
+    * `compactEvery` batches, fold the layer's old versions (see below).
+    * Exposed for direct spec-level replay injection.
+    *
+    * The repair ([[graft.analysis.CorpusPrep.recoverArtifactLayer]]) runs
+    * before anything reads the layer: a fold that crashed after archiving
+    * old versions and before promoting its base leaves the layer without
+    * them, so an unrepaired replay would find no prior version and
+    * bootstrap from its own batch alone.
     *
     * Compaction cadence (`compactEvery` > 0): after the sink call, batch B
-    * folds every layer version `<= B - retainVersions` into one base per
-    * kind ([[graft.analysis.CorpusPrep.compactArtifacts]]) — without it a
-    * year of daily batches leaves ~365 delta dirs per kind under every
-    * read. Replay-safe for any `retainVersions >= 1`: the fold target
-    * stays STRICTLY below B, so a crash-replayed batch B (which reads
-    * `v < B` and overwrites only `v=B`) sees a row-identical pre-batch
-    * state whether or not the fold ran; batches the checkpoint already
-    * committed past are never replayed, so folding them loses nothing.
-    * `retainVersions` > 1 merely keeps more recent deltas unfolded (for
-    * layer inspection/debugging); correctness needs only >= 1. */
+    * folds every layer version `<= B - 1` into one base per kind
+    * ([[graft.analysis.CorpusPrep.compactArtifacts]]) — without it a year
+    * of daily batches leaves ~365 delta dirs per kind under every read.
+    * Replay-safe: the fold target stays STRICTLY below B, so a
+    * crash-replayed batch B (which reads `v < B` and overwrites only
+    * `v=B`) sees a row-identical pre-batch state whether or not the fold
+    * ran; batches the checkpoint already committed past are never
+    * replayed, so folding them loses nothing. */
   def processBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -70,12 +74,8 @@ object PretrainStreamJob {
       evalMod: Int = 17,
       alpha: Double = 0.5,
       ctxTokens: Int = 256,
-      compactEvery: Int = 0,
-      retainVersions: Int = 2): Unit = {
-    require(compactEvery == 0 || retainVersions >= 1,
-      s"retainVersions must be >= 1 when compaction is on (the replay " +
-        s"contract needs the fold to stay strictly below the current " +
-        s"batch), got $retainVersions")
+      compactEvery: Int = 0): Unit = {
+    CorpusPrep.recoverArtifactLayer(spark, artifactRoot)
     // explicit delta file sizing: inside foreachBatch the micro-batch plan
     // runs WITHOUT AQE, so writeArtifacts' default rebalance hint is inert
     // here and every delta would land one-file-per-partition — the exact
@@ -97,10 +97,8 @@ object PretrainStreamJob {
         deltaFiles)
       sink(batchId, CorpusPrep.pretrainPipeline(batch, t, evalMod, alpha, ctxTokens))
     }
-    if (compactEvery > 0 && batchId % compactEvery == 0 &&
-        batchId - retainVersions >= 0)
-      CorpusPrep.compactArtifacts(spark, artifactRoot,
-        upToInclusive = batchId - retainVersions)
+    if (compactEvery > 0 && batchId % compactEvery == 0 && batchId >= 1)
+      CorpusPrep.compactArtifacts(spark, artifactRoot, upToInclusive = batchId - 1)
   }
 
   /** Start the stream; `sink` is called once per non-empty micro-batch
@@ -118,8 +116,7 @@ object PretrainStreamJob {
       evalMod: Int = 17,
       alpha: Double = 0.5,
       ctxTokens: Int = 256,
-      compactEvery: Int = 0,
-      retainVersions: Int = 2): StreamingQuery =
+      compactEvery: Int = 0): StreamingQuery =
     source.writeStream
       .outputMode("append")
       .trigger(trigger)
@@ -129,7 +126,7 @@ object PretrainStreamJob {
         try {
           if (!batch.isEmpty)
             processBatch(batch.sparkSession, batch, batchId, artifactRoot,
-              sink, t, evalMod, alpha, ctxTokens, compactEvery, retainVersions)
+              sink, t, evalMod, alpha, ctxTokens, compactEvery)
         } finally { batch.unpersist(); () }
       }
       .start()

@@ -9,8 +9,7 @@ import graft.sinks.DeltaLayerCompactor
   * unchanged by a fold, newer versions are untouched, and every injected
   * crash point recovers to a state where the reads are STILL unchanged
   * (rolled forward when the folded write had committed, rolled back
-  * otherwise). Mirrors CompactorSpec's crash-injection discipline on the
-  * layer shape CorpusPrep.writeArtifacts produces. */
+  * otherwise), on the layer shape CorpusPrep.writeArtifacts produces. */
 class DeltaCompactorSpec extends SparkSpec {
 
   import spark.implicits._
@@ -22,8 +21,7 @@ class DeltaCompactorSpec extends SparkSpec {
   private def mkLayer(): String = {
     val root = tmpDir("delta_layer")
     def write(rows: Seq[(Long, String)], v: Long): Unit =
-      graft.sinks.ParquetLayerSink.overwriteMart(
-        rows.toDF("id", "payload"), s"$root/kind/v=$v")
+      rows.toDF("id", "payload").write.mode("overwrite").parquet(s"$root/kind/v=$v")
     write(Seq(1L -> "a", 2L -> "b"), 0L)
     write(Seq(3L -> "c"), 3L)
     write(Seq(4L -> "d", 5L -> "e"), 7L)
@@ -37,6 +35,38 @@ class DeltaCompactorSpec extends SparkSpec {
 
   private def versions(root: String): Seq[Long] =
     DeltaLayerCompactor.versionsOf(fs, new Path(s"$root/kind")).sorted
+
+  /** Three pretraining batches whose later docs reach back into earlier
+    * ones: an exact dup, a keeper flip and a contamination phrase. */
+  private lazy val (docs, batches) = {
+    def mk(prefix: String, n: Int): String =
+      (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"
+    val contamPhrase = (1 to 10).map(i => s"p$i").mkString(" ")
+    val docs = Seq(
+      (1L, mk("aa", 38), "web"),
+      (4L, mk("na", 38), "web"),
+      (6L, mk("ca", 28) + " " + contamPhrase, "web"),
+      (10L, mk("ha", 38), "books"),
+      (13L, mk("aa", 38), "web"),             // exact dup of batch-0 doc 1
+      (14L, mk("na", 38) + " zz1", "web"),    // flips batch-0 doc 4's keeper
+      (17L, contamPhrase + " " + mk("ea", 20), "web"), // contaminates doc 6
+      (21L, mk("qa", 38), "web"),
+      (24L, mk("ra", 30), "web")
+    ).toDF("doc_id", "text", "source")
+    (docs, Seq(
+      docs.filter($"doc_id" <= 12),
+      docs.filter($"doc_id" > 12 && $"doc_id" <= 18),
+      docs.filter($"doc_id" > 18)))
+  }
+
+  /** Batch `b` through the stream job's per-batch body: its readout. */
+  private def streamBatch(root: String, b: Int, compactEvery: Int = 0): Seq[Seq[Any]] = {
+    var out = Seq.empty[Seq[Any]]
+    graft.streaming.PretrainStreamJob.processBatch(spark, batches(b), b.toLong, root,
+      (_, df) => { out = df.collect().map(_.toSeq).toSeq; () },
+      ctxTokens = 8, compactEvery = compactEvery)
+    out
+  }
 
   test("fold preserves every in-retention read and leaves newer versions untouched") {
     val root = mkLayer()
@@ -97,22 +127,7 @@ class DeltaCompactorSpec extends SparkSpec {
   }
 
   test("artifact-layer compaction: the increment from the folded layer ≡ the increment from the delta layer") {
-    def mk(prefix: String, n: Int): String =
-      (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"
-    val contamPhrase = (1 to 10).map(i => s"p$i").mkString(" ")
-    val docs = Seq(
-      (1L, mk("aa", 38), "web"),
-      (4L, mk("na", 38), "web"),
-      (6L, mk("ca", 28) + " " + contamPhrase, "web"),
-      (10L, mk("ha", 38), "books"),
-      (13L, mk("aa", 38), "web"),             // exact dup across the fold boundary
-      (14L, mk("na", 38) + " zz1", "web"),    // flips the v=0 keeper
-      (17L, contamPhrase + " " + mk("ea", 20), "web"), // contaminates v=0 doc 6
-      (21L, mk("qa", 38), "web")
-    ).toDF("doc_id", "text", "source")
-    val b0 = docs.filter($"doc_id" <= 12)
-    val b1 = docs.filter($"doc_id" > 12 && $"doc_id" <= 18)
-    val b2 = docs.filter($"doc_id" > 18)
+    val Seq(b0, b1, b2) = batches
     val root = tmpDir("artifact_compact")
     CorpusPrep.writeArtifacts(CorpusPrep.pretrainArtifacts(b0), root, version = 0L)
     val (_, deltas) = CorpusPrep.pretrainIncrementWithArtifacts(
@@ -139,38 +154,10 @@ class DeltaCompactorSpec extends SparkSpec {
   }
 
   test("stream job with compaction on: folds stay behind the replay bound and a replay after a fold is idempotent") {
-    import graft.streaming.PretrainStreamJob
-    def mk(prefix: String, n: Int): String =
-      (1 to n).map(i => s"$prefix$i").mkString(" ") + " the of"
-    val contamPhrase = (1 to 10).map(i => s"p$i").mkString(" ")
-    val docs = Seq(
-      (1L, mk("aa", 38), "web"),
-      (4L, mk("na", 38), "web"),
-      (6L, mk("ca", 28) + " " + contamPhrase, "web"),
-      (10L, mk("ha", 38), "books"),
-      (13L, mk("aa", 38), "web"),             // exact dup of batch-0 doc 1
-      (14L, mk("na", 38) + " zz1", "web"),    // flips batch-0 doc 4's keeper
-      (17L, contamPhrase + " " + mk("ea", 20), "web"),
-      (21L, mk("qa", 38), "web"),
-      (24L, mk("ra", 30), "web")
-    ).toDF("doc_id", "text", "source")
-    val batches = Seq(
-      docs.filter($"doc_id" <= 12),
-      docs.filter($"doc_id" > 12 && $"doc_id" <= 18),
-      docs.filter($"doc_id" > 18))
-    def run(root: String, compactEvery: Int): Seq[(Long, Seq[Seq[Any]])] = {
-      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Seq[Any]])]
-      batches.zipWithIndex.foreach { case (b, id) =>
-        PretrainStreamJob.processBatch(spark, b, id.toLong, root,
-          (i, df) => { emitted += ((i, df.collect().map(_.toSeq).toSeq)); () },
-          ctxTokens = 8, compactEvery = compactEvery, retainVersions = 1)
-      }
-      emitted.toSeq
-    }
     val plainRoot = tmpDir("stream_plain")
+    val plain = batches.indices.map(streamBatch(plainRoot, _))
     val compactRoot = tmpDir("stream_compact")
-    val plain = run(plainRoot, compactEvery = 0)
-    val compacted = run(compactRoot, compactEvery = 1)
+    val compacted = batches.indices.map(streamBatch(compactRoot, _, compactEvery = 1))
     // identical emissions batch-for-batch: compaction is invisible in-stream
     assert(compacted === plain)
     // batch 2's fold collapsed versions {0, 1} into one base at v=1; the
@@ -180,17 +167,24 @@ class DeltaCompactorSpec extends SparkSpec {
         fs, new Path(s"$compactRoot/$kind")).sorted === Seq(1L, 2L), kind)
     // crash-replay of batch 2 AFTER its fold: reads only the folded base
     // (v < 2), overwrites its own v=2, emits the identical readout
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Seq[Any]])]
-    PretrainStreamJob.processBatch(spark, batches(2), 2L, compactRoot,
-      (i, df) => { emitted += ((i, df.collect().map(_.toSeq).toSeq)); () },
-      ctxTokens = 8, compactEvery = 1, retainVersions = 1)
-    assert(emitted.head._2 === plain.last._2)
-    assert(emitted.head._2 === CorpusPrep.pretrainPipeline(docs, ctxTokens = 8)
+    val replayed = streamBatch(compactRoot, 2, compactEvery = 1)
+    assert(replayed === plain.last)
+    assert(replayed === CorpusPrep.pretrainPipeline(docs, ctxTokens = 8)
       .collect().map(_.toSeq).toSeq)
-    // retainVersions < 1 with compaction on is a caller bug, loudly
-    intercept[IllegalArgumentException] {
-      PretrainStreamJob.processBatch(spark, batches(0), 3L, compactRoot,
-        (_, _) => (), compactEvery = 1, retainVersions = 0)
+  }
+
+  test("stream job: a batch replayed after a fold crashed before its promote reads the repaired layer") {
+    val root = tmpDir("stream_fold_crash")
+    val plain = batches.indices.map(streamBatch(root, _))
+    // batch 2's fold of versions {0, 1} crashes after archiving both and
+    // before promoting the folded base: the exact kind holds only v=2
+    intercept[DeltaLayerCompactor.SimulatedCrash] {
+      DeltaLayerCompactor.compactKindImpl(spark, s"$root/exact", 1L, 1, failAt = 3)
     }
+    def exact = DeltaLayerCompactor.versionsOf(fs, new Path(s"$root/exact")).sorted
+    assert(exact === Seq(2L))
+    // the replay repairs the layer before it reads it
+    assert(streamBatch(root, 2) === plain.last)
+    assert(exact === Seq(1L, 2L))
   }
 }

@@ -28,14 +28,6 @@ class FunnelSpec extends SparkSpec {
     assert(out("s3") === ((Some(5L), None, None)))
   }
 
-  test("summary: counts per step and conversion vs step 1") {
-    val out = Funnel.summary(events, Seq("view", "click", "purchase"), "sid", "etype", "ts")
-      .collect().map(r => r.getInt(0) -> ((r.getLong(2), r.getDouble(3)))).toMap
-    assert(out(1) === ((3L, 1.0)))
-    assert(out(2) === ((2L, 0.6667)))
-    assert(out(3) === ((1L, 0.3333)))
-  }
-
   test("first-touch attribution: earliest view wins, conversions without a prior touch drop") {
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     val clicks = Seq(

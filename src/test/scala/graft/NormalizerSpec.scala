@@ -28,21 +28,6 @@ class NormalizerSpec extends SparkSpec {
     assert(Normalizer.fromJsonLines(rawDf(Seq(good, bad))).count() === 1)
   }
 
-  test("legacy /Date(ms)/ parses to the right instant (P17)") {
-    val out = spark.range(1)
-      .select(Normalizer.parseLegacyDate(lit("/Date(1452038902000)/")).as("ts"))
-      .collect().head.getTimestamp(0)
-    assert(out.toInstant.toEpochMilli === 1452038902000L)
-  }
-
-  test("dedupKey is a stable 16-hex-char digest (P16)") {
-    val keys = spark.range(2)
-      .select(Normalizer.dedupKey(lit("s1"), lit(7), lit("2026-01-01T15:00:00")).as("k"))
-      .collect().map(_.getString(0))
-    assert(keys(0) === keys(1))
-    assert(keys(0).matches("[0-9a-f]{16}"))
-  }
-
   test("dead-letter channel captures unparseable and keyless rows with reasons") {
     val good = Fixtures.rawEventJson("s1", 1, "2026-01-01T15:00:00+00:00", "2026-01-01")
     val keyless = good.replace(""","dedup_key":"s1-1-2026-01-01T15:00:00+00:00"}""", "}")
@@ -75,23 +60,6 @@ class NormalizerSpec extends SparkSpec {
     val kafka = lines.map(_.getBytes("UTF-8")).toDF("value")
     assert(Normalizer.fromKafkaFrame(kafka).select("dedup_key").as[String].collect().toSeq
       === curated)
-  }
-
-  test("archiveRawProjection keeps curated fields + kafka + load metadata (B2A)") {
-    val json = Fixtures.rawEventJson("s1", 7, "2026-01-01T15:00:00+00:00", "2026-01-01")
-    val kafkaFrame = Seq(
-      ("s1".getBytes("UTF-8"), json.getBytes("UTF-8"), "tripclick_raw_logs", 0, 42L,
-        new java.sql.Timestamp(1767279600000L))
-    ).toDF("key", "value", "topic", "partition", "offset", "timestamp")
-    val out = Normalizer.archiveRawProjection(kafkaFrame, ingestionType = "batch")
-    val row = out.collect().head
-    assert(row.getAs[String]("session_id") === "s1")
-    assert(row.getAs[String]("kafka_key") === "s1")
-    assert(row.getAs[String]("topic") === "tripclick_raw_logs")
-    assert(row.getAs[Long]("offset") === 42L)
-    assert(row.getAs[String]("ingestion_type") === "batch")
-    assert(out.columns.contains("ingested_at"))
-    assert(row.getAs[java.sql.Timestamp]("event_ts") !== null)
   }
 
   test("dedupFirst keeps exactly the first row per key, deterministically") {

@@ -143,19 +143,6 @@ class OpsSpec extends SparkSpec {
     assert(strict(0).getAs[Boolean]("kept") && !strict(1).getAs[Boolean]("kept"))
   }
 
-  test("multimodal resize: fixed output size, deterministic sampling, null-safe") {
-    import graft.analysis.Multimodal
-    val docs = Seq((1L, "abcdefghij" * 20), (2L, "xy")).toDF("doc_id", "text")
-    val media = Multimodal.attachBinary(docs).as[Multimodal.MediaRecord]
-    val out = Multimodal.resize(media, targetBytes = 64).collect().sortBy(_.doc_id)
-    assert(out.forall(_.media.length === 64))
-    // strided sampling is deterministic: first byte of output = first of source
-    assert(out(0).media(0) === 'a'.toByte)
-    assert(out(1).media(0) === 'x'.toByte)
-    // upsampling a 2-byte source still fills the target deterministically
-    assert(out(1).media.distinct.sorted.toSeq === Seq('x'.toByte, 'y'.toByte).sorted.toSeq)
-  }
-
   test("multimodal frame sampling: strided chunks with correct bytes") {
     val docs = Seq((1L, "abcdefghij" * 10)).toDF("doc_id", "text") // 100 bytes
     val media = graft.analysis.Multimodal.attachBinary(docs)

@@ -11,18 +11,21 @@ class SamplingSpec extends SparkSpec {
     (i, if (i % 4 == 0) "en" else if (i % 4 == 1) "de" else "zh"))
     .toDF("id", "lang")
 
+  /** One fraction for every stratum: a plain Bernoulli sample gated on `id`. */
+  private def uniform(df: org.apache.spark.sql.DataFrame, fraction: Double) =
+    Sampling.stratifiedHashSample(df, "lang", "id", Map.empty, default = fraction)
+
   test("hash sample hits the target fraction within tolerance and is deterministic") {
-    val s1 = Sampling.hashSample(rows, "id", 0.3).select("id").as[Long].collect().toSet
-    val s2 = Sampling.hashSample(rows.repartition(13), "id", 0.3)
-      .select("id").as[Long].collect().toSet
+    val s1 = uniform(rows, 0.3).select("id").as[Long].collect().toSet
+    val s2 = uniform(rows.repartition(13), 0.3).select("id").as[Long].collect().toSet
     assert(s1 === s2, "selection must not depend on partitioning")
     val rate = s1.size.toDouble / 2000
     assert(rate > 0.25 && rate < 0.35, s"rate $rate out of tolerance")
   }
 
   test("smaller fraction is a subset of larger (nested carve-outs)") {
-    val p = Sampling.hashSample(rows, "id", 0.1).select("id").as[Long].collect().toSet
-    val q = Sampling.hashSample(rows, "id", 0.4).select("id").as[Long].collect().toSet
+    val p = uniform(rows, 0.1).select("id").as[Long].collect().toSet
+    val q = uniform(rows, 0.4).select("id").as[Long].collect().toSet
     assert(p.subsetOf(q))
   }
 
@@ -44,7 +47,7 @@ class SamplingSpec extends SparkSpec {
     // select the identical ids
     val a = Sampling.stratifiedHashSample(rows, "lang", "id",
       Map("en" -> 0.3), default = 0.3).select("id").as[Long].collect().toSet
-    val b = Sampling.hashSample(rows, "id", 0.3).select("id").as[Long].collect().toSet
+    val b = uniform(rows, 0.3).select("id").as[Long].collect().toSet
     assert(a === b)
   }
 
@@ -95,7 +98,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("sample plan is a pure filter: no exchange") {
-    val plan = Sampling.hashSample(rows, "id", 0.5)
+    val plan = uniform(rows, 0.5)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"sampling must not shuffle:\n$plan")
   }

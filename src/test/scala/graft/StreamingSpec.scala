@@ -46,8 +46,8 @@ class StreamingSpec extends SparkSpec {
     val clean = CuratedStreamJob.curate(
       CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1),
       rawIsKafka = false)
-    val rejected = CuratedStreamJob.rejects(
-      CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1))
+    val rejected = graft.ingest.Normalizer.fromJsonLinesWithDeadLetter(
+      CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1))._2
     val q1 = CuratedStreamJob.start(clean, outDir, ck1, Trigger.AvailableNow())
     val q2 = CuratedStreamJob.startRejects(rejected, qDir, ck2, Trigger.AvailableNow())
     q1.awaitTermination(120000)
@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
       Fixtures.rawEventJson("s1", 1, "2026-01-01T16:00:00+00:00", "2026-01-01", dedupKey = "w1")))
 
     val source = CuratedStreamJob.jsonlSource(spark, inDir, maxFilesPerTrigger = 1)
-    val curated = CuratedStreamJob.curate(source, rawIsKafka = false, watermark = "10 minutes")
+    val curated = CuratedStreamJob.curate(source, rawIsKafka = false)
     val q = CuratedStreamJob.start(curated, outDir, ckDir, Trigger.AvailableNow())
     q.awaitTermination(120000)
 

@@ -49,8 +49,9 @@ class ThroughputSpec extends SparkSpec {
         col("document_id").as("DocumentId"),
         date_format(col("event_ts"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("event_ts"),
         col("event_date").cast("string").as("event_date"),
-        graft.ingest.Normalizer.dedupKey(
-          col("session_id"), col("document_id"), col("event_ts")).as("dedup_key"),
+        // the producer's key: hex xxhash64 of session|document|ts
+        lower(hex(xxhash64(concat_ws("|", col("session_id"),
+          col("document_id").cast("string"), col("event_ts").cast("string"))))).as("dedup_key"),
         lit(",Oncology,Surgery").as("ClinicalAreas"),
         concat(lit("doc "), col("document_id")).as("Title")
       )).as("value"))

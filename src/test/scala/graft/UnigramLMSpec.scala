@@ -123,13 +123,4 @@ class UnigramLMSpec extends SparkSpec {
       assert(f === (t * 2000000L + w) / (2L * w))
     }
   }
-
-  test("seed: all singles kept, multi capped, counts freq-weighted") {
-    val docs = Seq((1L, "ab ab b")).toDF("doc_id", "text")
-    val seed = UnigramLM.unigramSeed(docs,
-        Params(maxWordLen = 4, maxPieceLen = 2, seedMulti = 1, budgetMulti = 1))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    // words: ab(2), b(1) → a:2, b:3 (2 in "ab" + 1 alone), ab:2
-    assert(seed.toSeq === Seq(("a", 2L), ("ab", 2L), ("b", 3L)))
-  }
 }

@@ -7,6 +7,11 @@ import graft.functions.ZOrder
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The layout the key is for: range-partitioned and sorted on it. */
+  private def zLayout(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("zkey", ZOrder.zValue(col("x"), col("y"), bits = 6))
+      .repartitionByRange(16, col("zkey")).sortWithinPartitions("zkey")
+
   test("zValue interleaves bits: x even positions, y odd") {
     val out = spark.range(1).select(
       ZOrder.zValue(lit(1), lit(0), 4).as("a"), // x bit0 -> pos0
@@ -31,7 +36,7 @@ class ZOrderSpec extends SparkSpec {
   test("written z-ordered parquet files prune a 2-D box query by zone map") {
     val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
     val grid = (0 until 64).flatMap(x => (0 until 64).map(y => (x, y))).toDF("x", "y")
-    ZOrder.layoutByZ(grid, "x", "y", bits = 6, numPartitions = 16)
+    zLayout(grid)
       .write.mode("overwrite").parquet(dir)
     // file-level zone maps: min/max of each column per physical file — what
     // a reader's row-group/file pruning consults
@@ -58,7 +63,7 @@ class ZOrderSpec extends SparkSpec {
         .agg(avg("ext")).collect().head.getDouble(0)
       parts
     }
-    val zed = yExtent(ZOrder.layoutByZ(grid, "x", "y", bits = 6, numPartitions = 16))
+    val zed = yExtent(zLayout(grid))
     val xSorted = yExtent(grid.repartitionByRange(16, col("x")).sortWithinPartitions("x"))
     // x-sorted partitions span the full y range (~63); z-layout partitions
     // cover aligned rectangles (y-extent ~15 for 16 partitions of a 64x64 grid)
