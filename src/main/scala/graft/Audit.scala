@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query probe: `runMain graft.Audit <mode> <name>...` runs every
@@ -21,7 +24,11 @@ import org.apache.spark.sql.SparkSession
   * timed rep also prints `compiles=`, the whole-stage and expression classes
   * Janino compiled during it (Spark's JVM-wide `CodegenMetrics`): rep 1 pays
   * the query's compiles, and reps 2–3 print 0 when its classes stay in the
-  * generated-code cache, so a rep-1-only excess is compile time. */
+  * generated-code cache, so a rep-1-only excess is compile time. It also
+  * prints `peak_exec_mb=`, the largest `peakExecutionMemory` of any task in
+  * the rep (build and action), from a task listener installed once: what
+  * one task of the query holds in Tungsten pages, sort buffers and hash
+  * maps. */
 object Audit {
   def main(args: Array[String]): Unit = {
     val modes = Set("time", "forced", "explain")
@@ -37,6 +44,17 @@ object Audit {
     spark.range(1000000).selectExpr("sum(id)").collect()
     def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val peakExec = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => peakExec.accumulateAndGet(m.peakExecutionMemory, math.max))
+    })
+    // task ends reach the listener on Spark's listener thread: wait for it
+    def drained(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.exists(n.contains) }
       .foreach { case (name, fn) =>
@@ -45,6 +63,8 @@ object Audit {
           fn(spark, sfDir).explain("formatted")
         } else {
           val best = (0 until 3).map { _ =>
+            drained()
+            peakExec.set(0)
             val c0 = compiles
             val tB = System.nanoTime()
             val df = fn(spark, sfDir)
@@ -52,7 +72,9 @@ object Audit {
             val t0 = System.nanoTime()
             val n = if (mode == "forced") df.queryExecution.toRdd.count() else df.count()
             val run = secs(t0)
-            println(f"[audit] $name rows=$n build=$build%.3f $mode=$run%.3f compiles=${compiles - c0}")
+            drained()
+            val peakMb = peakExec.get / 1048576.0
+            println(f"[audit] $name rows=$n build=$build%.3f $mode=$run%.3f compiles=${compiles - c0} peak_exec_mb=$peakMb%.1f")
             spark.catalog.clearCache() // same per-query hygiene as Bench/Verify
             build + run
           }.min

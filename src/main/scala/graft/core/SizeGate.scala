@@ -21,7 +21,11 @@ import org.apache.spark.sql.internal.SQLConf
   * row count, the size is at least rows × the decoded row width, so
   * columnar compression cannot admit more rows than one task holds decoded.
   *
-  * Worst-case in-task footprint at the 64 MB default, per consumer:
+  * Worst-case in-task footprint at the 64 MB default, per consumer. Each
+  * Tungsten hash map, sort buffer and broadcast hash relation among them
+  * takes its execution memory in `spark.buffer.pageSize` pages (1 MB, set
+  * in [[GraftSession.tune]]), so a small input holds about one page per
+  * operator, not the 16–64 MB page of Spark's default:
   *  - the mart slice ([[withSlice]]): a hot micro-batch
   *    (`HotMartStreamJob.start`) or the cold stage's pending curated days
   *    (`DailyPipeline.coldMarts`) as one partition, ≤ 64 MB of rows under

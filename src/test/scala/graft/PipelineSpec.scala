@@ -304,6 +304,12 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  /** Listeners hear of an execution on Spark's listener thread: drain it. */
+  private def drain(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   test("cold marts: one call scans the pending curated partitions once for all four marts") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -330,11 +336,6 @@ class PipelineSpec extends SparkSpec {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = collect(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    // listeners hear of an execution on Spark's listener thread: drain it
-    def drain(): Unit = {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
     drain()
     spark.listenerManager.register(listener)
     val totals =
@@ -342,6 +343,40 @@ class PipelineSpec extends SparkSpec {
       finally { drain(); spark.listenerManager.unregister(listener) }
     assert(totals("mart_daily_traffic") === 2, "both days are pending")
     assert(scans.size === 1)
+  }
+
+  test("memory gate: no task of the cold marts or of a hot micro-batch peaks above 8 MB of execution memory") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import graft.core.SizeGate
+    import graft.streaming.HotMartStreamJob
+    val root = tmpDir("memory_gate")
+    val layout = DailyPipeline.Layout(root)
+    DailyPipeline.archiveRaw(spark, Fixtures.writeJsonl(tmpDir("memory_gate_in"), "events.json", lawDrops.head), layout)
+    DailyPipeline.curate(spark, layout)
+    // a task's first Tungsten page is allocated whole, so the page is the
+    // floor of every hash aggregate, sort and broadcast hash relation.
+    // Measured at the engine's 1 MB page: 3,211,264 B in the busiest task;
+    // at Spark's default (64 MB at a 7-8g heap on local[4]) 135,331,808 B
+    val bound = 8388608L // 8 MB, under the 16 MB default page of a 3g heap
+    val peaks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => peaks.add(e.stageId -> m.peakExecutionMemory))
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      DailyPipeline.coldMarts(spark, layout)
+      SizeGate.withSlice(spark.read.parquet(layout.curated)) { slice =>
+        val b = HotMartStreamJob.computeBatch(slice, 0L)
+        Seq(b.trafficMinute, b.topDocs, b.categoryTrend, b.anomalies).foreach(_.collect())
+      }
+    } finally { drain(); spark.sparkContext.removeSparkListener(listener) }
+    val all = peaks.asScala.toSeq
+    assert(all.exists(_._2 > 0), "no task used execution memory: the gate measured nothing")
+    val over = all.filter(_._2 > bound)
+    assert(over.isEmpty, s"(stage, bytes) of the tasks over $bound bytes of execution memory: $over")
   }
 
   test("serving load replaces changed dates in place: the table, its index and untouched dates survive") {

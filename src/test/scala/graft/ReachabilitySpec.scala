@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The scan is by name over the code, with comments removed (a scaladoc
   * link is not a use) and plain string literals emptied (a label is not a
   * call). Roots are every file with a `def main`, the query registry, the
-  * daily pipeline, the three stream jobs and the benchmark program's
-  * sources, which are read and never checked. A file is reached when a
+  * daily pipeline and the benchmark program's sources, which are read and
+  * never checked. A stream job is no root: it is reached, and its `start`
+  * used, only where one of those names it. A file is reached when a
   * reached file names one of its top-level classes, traits or objects; a
   * def when a reached file uses its name outside the def itself (where
   * several objects declare the name: in its own file, as `Object.name` or
@@ -20,14 +21,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * production caller or is deleted with its tests. */
 class ReachabilitySpec extends AnyFunSuite {
 
-  private val rootNames = Seq(
-    "SparkEntry", "DailyPipeline",
-    "CuratedStreamJob", "HotMartStreamJob", "PretrainStreamJob")
+  private val rootNames = Seq("SparkEntry", "DailyPipeline")
 
   /** Unreached files (by object name) and defs (as `Object.def`) kept on
     * purpose, each with the open ROADMAP item or contract that settles it. */
   private val allowed = Map(
     "MartKeys" -> "ROADMAP direction 3: the serving reconcile's key set",
+    "PretrainStreamJob" -> "ROADMAP north star: the pretrain capstone has no runner yet",
+    "CorpusPrep.recoverArtifactLayer" -> "PretrainStreamJob's restart recovery: the pretrain capstone has no runner yet",
     "DailyPipeline.runManaged" -> "ROADMAP direction 3: the Lambda runner's supervised batch cycle",
     "Reconcile.summary" -> "ROADMAP direction 3: the Lambda runner's daily hot/cold reconcile rows",
     "CuratedStreamJob.startRejects" -> "ROADMAP direction 3: the Lambda runner's quarantine stream",
@@ -138,9 +139,9 @@ class ReachabilitySpec extends AnyFunSuite {
         if (!line.startsWith(" ") && line.nonEmpty)
           obj = objectOpen.findPrefixMatchOf(line).map(_.group(1))
         (obj, memberDef.findPrefixMatchOf(line)) match {
-          // a program's `main` and a stream job's `start` are roots themselves
+          // a program's `main` is a root itself
           case (Some(o), Some(m)) if !Seq("private", "protected", "override").exists(m.group(1).contains) &&
-              m.group(2) != "main" && !(m.group(2) == "start" && rootNames.contains(o)) =>
+              m.group(2) != "main" =>
             val end = (i + 1 until lines.length)
               .find(k => memberStart.findPrefixMatchOf(lines(k)).isDefined).getOrElse(lines.length)
             Some(Member(o, m.group(2), file, (lines.take(i) ++ lines.drop(end)).mkString("\n")))
